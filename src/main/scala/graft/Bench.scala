@@ -135,6 +135,22 @@ object Bench {
     "shared_text_pipeline" -> ((s, d) => graft.operators.TextAnalysis.warmPipelineCache(s, d)),
     "shared_unigram_model" -> ((s, d) => graft.operators.Unigram.warmModelCache(s, d)))
 
+  /** Releases the session-persisted frames [[SharedBuilds]] warm, once a
+    * run's query loop is done (cache hygiene for any embedding process
+    * that keeps the session alive). Consumers go first: the BPE encode
+    * cache reads the learned vocabulary.
+    */
+  private[graft] def releaseShared(s: SparkSession, dir: String): Unit = {
+    graft.operators.Dedup.releaseShingleCache(s, dir)
+    graft.operators.ReportDoc.releaseReportCache(s, dir)
+    graft.operators.TextAnalysis.releasePipelineCache(s, dir)
+    graft.operators.Bpe.releaseEncodeCache(s, dir)
+    graft.operators.Bpe.releaseLearnedCache(s, dir)
+    graft.operators.CorpusCuration.releaseCurationCache(s, dir)
+    graft.operators.Classifier.releaseModelCache(s, dir)
+    graft.operators.Unigram.releaseModelCache(s, dir)
+  }
+
   private[graft] def shortKey(name: String): String =
     ShortKey.getOrElse(name, name.stripPrefix("q_"))
 
@@ -197,23 +213,8 @@ object Bench {
     }
     val waitedSec = (System.nanoTime() - waitT0) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.ShuffleDefaults(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      // default openCost (4 MB) + 4 MB partitions = one file per task:
-      // the attachment tree's ~2000 tiny files became ~2000 tasks of
-      // pure scheduling overhead. 64 KB packs small files ~60/task.
-      .config("spark.sql.files.openCostInBytes", "65536")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.Cpus
+    val spark = Session(cpus)
     // Warm the JVM/codegen paths once so the first measured query doesn't
     // absorb JIT + session initialization. The flagship alone leaves the
     // window/HOF/aggregate codegen paths cold, and the first measured
@@ -334,14 +335,7 @@ object Bench {
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(r => math.abs(r._2)).sum else 0.0
     val cpuTotal = results.map(_._3).sum
-    graft.operators.Dedup.releaseShingleCache(spark, sfDir)
-    graft.operators.ReportDoc.releaseReportCache(spark, sfDir)
-    graft.operators.TextAnalysis.releasePipelineCache(spark, sfDir)
-    graft.operators.Bpe.releaseEncodeCache(spark, sfDir) // consumer first
-    graft.operators.Bpe.releaseLearnedCache(spark, sfDir)
-    graft.operators.CorpusCuration.releaseCurationCache(spark, sfDir)
-    graft.operators.Classifier.releaseModelCache(spark, sfDir)
-    graft.operators.Unigram.releaseModelCache(spark, sfDir)
+    releaseShared(spark, sfDir)
     val load1 = osBean.getSystemLoadAverage
     // Idle-capture gate (r16): absolute bench numbers captured under
     // ambient machine load are not comparable round-over-round

@@ -1,8 +1,8 @@
 package graft
 
-/** Session-level performance defaults shared by every graft entry
-  * point (Bench, Verify, tools, tests). Both knobs are sys-prop
-  * overridable for A/B work; neither changes any query's rows.
+/** Session-level performance defaults shared by every graft session
+  * ([[Session]], and the benchmark harness, which builds its own). No
+  * value here changes any query's rows.
   *
   * == Shuffle writer (`spark.shuffle.sort.bypassMergeThreshold`) ==
   * Two regimes were measured on this sandbox's syscall-expensive
@@ -23,10 +23,10 @@ package graft
   *
   * Full-bench A/B at the final tree (sf0.1, 32 cores): threshold 0 →
   * 230.5 s / 384 cpu-s; Spark's default 200 → 210.7 s / 505 cpu-s,
-  * and sf1 strictly better. The default stays at Spark's 200 — set
-  * explicitly so the measured decision is visible and overridable
-  * (`-Dgraft.shuffle.bypassThreshold=`). On a real cluster corpus
-  * shuffles have R ≫ 200, so the sort writer engages there either way.
+  * and sf1 strictly better. The threshold stays at Spark's 200 — set
+  * explicitly so the measured decision is visible. On a real cluster
+  * corpus shuffles have R ≫ 200, so the sort writer engages there
+  * either way.
   *
   * == Codegen cache (`spark.sql.codegen.cache.maxEntries`) ==
   * Defaults to 100 compiled classes; a 186-query catalog plus AQE's
@@ -35,41 +35,23 @@ package graft
   * `CodeGenerator.compile` on the round-start bench). 8192 entries
   * hold the whole catalog's generated classes for the session
   * (measured: q_recall_report sf1 cpu 380 → 102 s).
+  *
+  * == Off-heap execution memory (`spark.memory.offHeap.*`) ==
+  * The big dedup/pair aggregations build multi-million-entry
+  * BytesToBytesMap hash maps whose page arrays live on the JVM heap
+  * by default — at sf1 shared_dedup_pairs measured 28-75 s of GC per
+  * run from exactly that churn (r17 A/B, pin and tree otherwise
+  * identical: off-heap ON → wall 56-65 s / gc 18-21; OFF → wall
+  * 70-71 s / gc 28-75). Off-heap execution memory is the standard
+  * at-scale remedy (map pages and spill buffers leave the GC's
+  * world); the 6g size is a CAP allocated on demand, not a
+  * reservation, so small sessions are unaffected.
   */
 object ShuffleDefaults {
-  def BypassMergeThreshold: String =
-    sys.props.getOrElse("graft.shuffle.bypassThreshold", "200")
-  def CodegenCacheMaxEntries: String =
-    sys.props.getOrElse("graft.codegen.cacheEntries", "8192")
-
-  /** == Off-heap execution memory (`spark.memory.offHeap.*`) ==
-    * The big dedup/pair aggregations build multi-million-entry
-    * BytesToBytesMap hash maps whose page arrays live on the JVM heap
-    * by default — at sf1 shared_dedup_pairs measured 28-75 s of GC per
-    * run from exactly that churn (r17 A/B, pin and tree otherwise
-    * identical: off-heap ON → wall 56-65 s / gc 18-21; OFF → wall
-    * 70-71 s / gc 28-75). Off-heap execution memory is the standard
-    * at-scale remedy (map pages and spill buffers leave the GC's
-    * world); the size is a CAP allocated on demand, not a reservation,
-    * so small sessions are unaffected. Sys-prop overridable; disable
-    * with `-Dgraft.memory.offHeapSize=0` (Spark requires a positive
-    * size when enabled, so 0 turns the feature off).
-    */
-  def OffHeapSize: String =
-    sys.props.getOrElse("graft.memory.offHeapSize", "6g")
-
-  /** Every graft session builder routes through here so the session
-    * perf defaults cannot drift per-tool (the r16 round shipped one
-    * builder missing them).
-    */
   def apply(b: org.apache.spark.sql.SparkSession.Builder)
-      : org.apache.spark.sql.SparkSession.Builder = {
-    val withBase = b
-      .config("spark.shuffle.sort.bypassMergeThreshold", BypassMergeThreshold)
-      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheMaxEntries)
-    if (OffHeapSize == "0") withBase
-    else withBase
+      : org.apache.spark.sql.SparkSession.Builder =
+    b.config("spark.shuffle.sort.bypassMergeThreshold", "200")
+      .config("spark.sql.codegen.cache.maxEntries", "8192")
       .config("spark.memory.offHeap.enabled", "true")
-      .config("spark.memory.offHeap.size", OffHeapSize)
-  }
+      .config("spark.memory.offHeap.size", "6g")
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -12,25 +11,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet
-    // correctness runs default to a small pool on purpose (results are
-    // parallelism-invariant; 4 threads keeps the driver's concurrent
-    // verify cheap) — Bench is where SPARK_GRAFT_CPUS=32 matters
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.ShuffleDefaults(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      // load-bearing: WindowTopKRewrite + custom strategies fire in the
-      // measured/verified sessions, not just SampleApp demos
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // pack many-small-file scans (attachment tree) instead of one
-      // file per task — see the note in Bench.scala
-      .config("spark.sql.files.openCostInBytes", "65536")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session(Session.Cpus)
     new java.io.File(outDir).mkdirs()
     // a typo'd subset name must not silently verify nothing — fail the
     // run, don't just warn (a fully typo'd subset would otherwise dump
@@ -50,17 +31,7 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // the dedup family persists its shingle frame for the session —
-    // release it once the query loop is done (cache hygiene for any
-    // embedding process that keeps the session alive)
-    graft.operators.Dedup.releaseShingleCache(spark, sfDir)
-    graft.operators.ReportDoc.releaseReportCache(spark, sfDir)
-    graft.operators.TextAnalysis.releasePipelineCache(spark, sfDir)
-    graft.operators.Bpe.releaseEncodeCache(spark, sfDir) // consumer first
-    graft.operators.Bpe.releaseLearnedCache(spark, sfDir)
-    graft.operators.CorpusCuration.releaseCurationCache(spark, sfDir)
-    graft.operators.Classifier.releaseModelCache(spark, sfDir)
-    graft.operators.Unigram.releaseModelCache(spark, sfDir)
+    Bench.releaseShared(spark, sfDir)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

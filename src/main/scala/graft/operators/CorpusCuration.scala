@@ -1083,9 +1083,17 @@ object CorpusCuration {
     * step is the same double expression with the decimal converted
     * back via BigDecimal.doubleValue (= Spark Decimal.toDouble).
     */
-  private def localSourceRank(s: SparkSession, nodes: Array[String],
+  private[graft] def localSourceRank(s: SparkSession, nodes: Array[String],
       pairs: Array[(String, String, Long)]): Array[(String, Double)] = {
     import java.math.{BigDecimal => JBD, RoundingMode}
+    // pairs and nodes come from the same documents, so every endpoint
+    // is a node; the distributed rounds would drop a stray edge in the
+    // rank-vector join, so fail loudly instead of diverging from them
+    val known = nodes.toSet
+    val stray = pairs.iterator.flatMap { case (a, b, _) => Iterator(a, b) }
+      .filterNot(known).take(3).toSeq
+    require(stray.isEmpty,
+      s"source rank: edge endpoints not in the node set: ${stray.mkString(", ")}")
     val edges = pairs.flatMap { case (a, b, w) => Seq((a, b, w), (b, a, w)) }
     val wout = new java.util.HashMap[String, Long]()
     edges.foreach { case (src, _, w) =>

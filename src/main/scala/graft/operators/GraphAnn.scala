@@ -50,9 +50,9 @@ object GraphAnn {
   val ProbeNodes = 32
   /** Closure replication: each corpus vector posts to its [[Rep]]
     * nearest nodes (SPANN's multi-cluster closure). Single assignment
-    * caps sf1 recall at 68 REGARDLESS of graph quality — the sweep
-    * (tools.GraphSweep) shows the loss is bucket-boundary geometry,
-    * not routing: a true neighbor's single home bucket need not be
+    * caps sf1 recall at 68 REGARDLESS of graph quality — the r11 sweep
+    * (SURVEY.md §6) showed the loss is bucket-boundary geometry, not
+    * routing: a true neighbor's single home bucket need not be
     * among the query's routed nodes. rep=8 measures 90 at sf1 where
     * rep=1 measures 46 at identical probes; the price is an 8×
     * posting-row table (SPANN's documented trade), still map-side.
@@ -132,13 +132,7 @@ object GraphAnn {
     * at full recall, see GATES_r16.json).
     */
   private[graft] def buildGraph(ids: Array[Long], vecs: Array[Array[Float]],
-                                norms: Array[Double]): Graph =
-    buildGraphParams(ids, vecs, norms, M, EfBuild)
-
-  /** Parameterized form for the sweep harness (tools.GraphSweep). */
-  private[graft] def buildGraphParams(ids: Array[Long], vecs: Array[Array[Float]],
-                                      norms: Array[Double], m: Int,
-                                      efBuild: Int): Graph = {
+                                norms: Array[Double]): Graph = {
     val n = ids.length
     val adj = Array.fill(n)(scala.collection.mutable.ArrayBuffer.empty[Int])
     def pairCos(a: Int, b: Int): Double = {
@@ -165,11 +159,11 @@ object GraphAnn {
     val view = Graph(ids, vecs, norms, Array.empty)
     var i = 1
     while (i < n) {
-      val found = beamSearchAdj(view, adj(_), vecs(i), norms(i), efBuild, i).take(m)
+      val found = beamSearchAdj(view, adj(_), vecs(i), norms(i), EfBuild, i).take(M)
       found.foreach { j =>
         adj(i) += j
         adj(j) += i
-        pruneTo(j, 2 * m)
+        pruneTo(j, MaxDegree)
       }
       i += 1
     }

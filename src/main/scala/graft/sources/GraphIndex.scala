@@ -2,6 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.types.BooleanType
 import graft.operators.{GraphAnn, Similarity}
 
 /** Persisted graph-routed ANN index — the SPANN disk layout for the
@@ -49,7 +51,7 @@ object GraphIndex {
     * capped at [[NodeShards]]. Append-stable and recomputable at read
     * time from the sidecar graph — no extra artifact metadata. Why
     * adaptive (r17, guide §6 small-files): each shard dir costs
-    * ~10 ms to create+commit on this FS (measured via AhxTime: 256
+    * ~10 ms to create+commit on this FS (OPTIMIZATION_r17.md §3: 256
     * dirs = 3.2-3.7 s vs 64 dirs = 1.3 s for the same sf0.1 posting
     * set, whose 256-way files are ~20 KB each), while the read-side
     * pruning benefit scales with the posting BYTES — a small graph's
@@ -82,11 +84,11 @@ object GraphIndex {
     // build's dominant compute and a narrow layout serializes it.
     // A scoped build (real predicate) sizes the spread from the
     // FILTERED cardinality — one bounded count() on a one-time build
-    // (the isComplete guard above); the full build (pred = lit(true),
-    // Column.toString "true") keeps the zero-job footer path.
+    // (the isComplete guard above); the full build (pred = lit(true))
+    // keeps the zero-job footer path.
     val filtered = Similarity.normed(s, dir).filter(pred)
     val rowsOverride =
-      if (pred.toString == "true") None else Some(filtered.count())
+      if (isFullCorpus(pred)) None else Some(filtered.count())
     writePostings(
       GraphAnn.assignedFrame(
         graft.Tables.embeddingsAssignSpread(s, filtered, dir, g.ids.length,
@@ -100,6 +102,16 @@ object GraphIndex {
     ScopedFixture.markComplete(root)
     root
   }
+
+  /** True only for the literal `lit(true)` predicate of a full build. A
+    * real predicate's text can read "true" too (a boolean column named
+    * `true`), so this matches the expression, not its string.
+    */
+  private[graft] def isFullCorpus(pred: org.apache.spark.sql.Column): Boolean =
+    org.apache.spark.sql.GraftColumnBridge.converted(pred) match {
+      case Literal(true, BooleanType) => true
+      case _ => false
+    }
 
   private def writePostings(assigned: DataFrame, root: String,
                             mode: String, shards: Int): Unit = {

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Records the measured value behind every RecallReport gate at each
   * shipped SF into a committed JSON (`GATES_r16.json`) — the
   * provenance artifact behind [[graft.operators.RecallReport
@@ -21,17 +19,7 @@ object GateRecord {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse(DefaultOut)
     val dirs = if (args.length > 1) args.drop(1).toSeq else DefaultSfDirs
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = graft.ShuffleDefaults(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session(graft.Session.Cpus)
     val th = graft.operators.RecallReport.GateThresholds
     val bySf = dirs.map { d =>
       val name = new java.io.File(d).getName

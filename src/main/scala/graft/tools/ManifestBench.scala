@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.sources.Snapshots
 
@@ -21,16 +20,7 @@ object ManifestBench {
     val nFiles = if (args.length > 1) args(1).toInt else 10000
     val nAppends = if (args.length > 2) args(2).toInt else 24
     val withBloom = args.length > 3 && args(3) == "bloom"
-    val s = graft.ShuffleDefaults(SparkSession.builder())
-      .appName("graft-manifest-bench").master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_mb_wh").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = graft.Session(graft.Session.Cpus)
     def manifestBytes(v: Int): Long =
       new java.io.File(s"$root/manifests/v$v.txt").length()
     def dirBytes(d: java.io.File): Long =

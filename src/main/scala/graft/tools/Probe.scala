@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc per-query timing probe for optimization work: runs the named
   * catalog queries (or `shared_*` builds) N times each against a dir,
   * printing wall / executor-cpu / gc per run — the Bench measurement
@@ -14,20 +12,7 @@ object Probe {
     val dir = args(0)
     val reps = args(1).toInt
     val names = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.ShuffleDefaults(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "65536")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session(graft.Session.Cpus)
     val cpuNs = new java.util.concurrent.atomic.AtomicLong
     val gcMs = new java.util.concurrent.atomic.AtomicLong
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {

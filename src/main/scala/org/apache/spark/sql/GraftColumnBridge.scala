@@ -10,6 +10,12 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+  /** The Catalyst form of `c` converted now ([[expression]] defers the
+    * conversion to analysis behind a wrapper) — for matching a
+    * Column's shape, e.g. a literal.
+    */
+  def converted(c: Column): Expression =
+    classic.ColumnNodeToExpressionConverter(c.node)
   def analyzedPlan(df: Dataset[Row]): LogicalPlan = df.queryExecution.analyzed
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)

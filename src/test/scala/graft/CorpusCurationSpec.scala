@@ -264,6 +264,11 @@ class CorpusCurationSpec extends AnyFunSuite {
       finally CorpusCuration.LocalPrEdgeCap = cap
     val localRows = CorpusCuration.sourceRank(spark, sf).collect().map(_.toSeq).toSeq
     assert(distRows === localRows, "local pagerank == distributed rounds")
+    // an edge endpoint outside the node set fails with a message, not
+    // a bare NoSuchElementException from the rank lookup
+    val e = intercept[IllegalArgumentException](CorpusCuration.localSourceRank(
+      spark, Array("a", "b"), Array(("a", "b", 1L), ("b", "zz", 2L))))
+    assert(e.getMessage.contains("not in the node set: zz"), e.getMessage)
   }
 
   test("source pagerank ranks a planted syndication hub first") {

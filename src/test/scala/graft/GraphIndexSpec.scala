@@ -27,6 +27,14 @@ class GraphIndexSpec extends AnyFunSuite {
       "the query path reads only the posting artifact (vectors ride the postings)")
   }
 
+  test("only the literal lit(true) build takes the zero-job sizing path") {
+    assert(GraphIndex.isFullCorpus(lit(true)), "full build: footer-sized spread")
+    // a real predicate sizes from its filtered count — including one
+    // whose text reads "true" (a boolean column named `true`)
+    for (pred <- Seq(col("true"), lit(false), pmod(col("vec_id"), lit(7)) =!= 0))
+      assert(!GraphIndex.isFullCorpus(pred), s"$pred must count the filtered rows")
+  }
+
   test("append == full rebuild under the frozen sidecar graph; delete + compact reclaim") {
     import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("graft_gibase").toString

@@ -1353,7 +1353,7 @@ class SnapshotsMaintenanceSpec extends AnyFunSuite {
     val rows = Snapshots.read(spark, root2, w2)
       .select("k1", "k2", "src").collect()
       .map(r => (r.getLong(0), Option(r.get(1)), r.getString(2)))
-      .sortBy(_._1).toSeq
+      .sortBy(r => (r._1, r._3)).toSeq
     assert(rows === Seq((1L, None, "x"), (1L, Some("t1"), "x2"),
       (2L, None, "y")),
       "standing rows keep null for the new key column and stay distinct " +

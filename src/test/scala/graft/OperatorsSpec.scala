@@ -641,29 +641,12 @@ class TopKPerKeySpec extends org.scalatest.funsuite.AnyFunSuite {
   }
 }
 
-class WindowTopKRewriteSpec extends org.scalatest.funsuite.AnyFunSuite
-    with org.scalatest.BeforeAndAfterAll {
+class WindowTopKRewriteSpec extends org.scalatest.funsuite.AnyFunSuite {
   import org.apache.spark.sql.functions._
 
-  // runtime installation on the shared session (getOrCreate would reuse
-  // the existing non-extended session, silently dropping withExtensions;
-  // the withExtensions path itself is exercised by SampleApp in a fresh
-  // JVM). The rewrite is semantics-preserving so leaking it to other
-  // suites would be harmless, but restore state anyway.
+  // the shared session installs GraftExtensions (graft.Session); the
+  // un-rewritten reference plans switch the rule off for one scope
   lazy val spark = SparkTestSession.spark
-  private var savedOpts: Seq[org.apache.spark.sql.catalyst.rules.Rule[
-    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]] = Nil
-
-  override def beforeAll(): Unit = {
-    savedOpts = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = savedOpts :+ graft.plans.WindowTopKRewrite
-    if (!spark.experimental.extraStrategies.contains(graft.plans.TopKPerKeyStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.TopKPerKeyStrategy
-  }
-  override def afterAll(): Unit = {
-    spark.experimental.extraOptimizations = savedOpts
-  }
 
   test("window row_number top-k plans rewrite to TopKPerKey and agree with the window result") {
     val sf = SparkTestSession.Sf
@@ -676,7 +659,7 @@ class WindowTopKRewriteSpec extends org.scalatest.funsuite.AnyFunSuite
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("TopKPerKey"), s"rewrite did not fire:\n$plan")
     assert(!plan.contains("Window"), s"window should be gone:\n$plan")
-    // cross-check against an un-extended session running the same query
+    // cross-check against the same query with the rewrite switched off
     val ref = TaskSparkRef.run(sf)
     assert(df.count() === ref)
   }
@@ -706,15 +689,13 @@ class WindowTopKRewriteSpec extends org.scalatest.funsuite.AnyFunSuite
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("TopKPerKey"), s"rank-projecting top-k did not rewrite:\n$plan")
     assert(!plan.contains("Window"), s"window should be gone:\n$plan")
-    // reference: same query in a no-rewrite session state
-    val saved = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = saved.filterNot(_ eq graft.plans.WindowTopKRewrite)
-    try {
+    // reference: same query with the rewrite switched off
+    TaskSparkRef.withoutRewrite {
       val ref = q(spark.read.parquet(s"$sf/orders.parquet"))
       assert(!ref.queryExecution.executedPlan.toString.contains("TopKPerKey"))
       assert(df.exceptAll(ref).isEmpty && ref.exceptAll(df).isEmpty,
         "operator-emitted row_number drifts from the window's")
-    } finally spark.experimental.extraOptimizations = saved
+    }
   }
 
   test("catalog queries execute TopKPerKeyExec under the extensions (verdict r3 #3)") {
@@ -725,30 +706,43 @@ class WindowTopKRewriteSpec extends org.scalatest.funsuite.AnyFunSuite
     }
   }
 
-  test("entry-point sessions install GraftExtensions (source guard)") {
-    // the rewrite only matters if the measured sessions load it; the
-    // extensions path itself is proven by SampleApp in a fresh JVM
-    // (getOrCreate would drop withExtensions under an existing session,
-    // so this cannot be asserted in-JVM from the shared test session)
-    for (f <- Seq("src/main/scala/graft/Verify.scala", "src/main/scala/graft/Bench.scala")) {
-      val src = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(f)),
-        java.nio.charset.StandardCharsets.UTF_8)
-      assert(src.contains("\"spark.sql.extensions\", \"graft.plans.GraftExtensions\""),
-        s"$f lost the spark.sql.extensions config")
-    }
+  test("shared test session carries the row-affecting confs") {
+    // the confs graft.Session sets for Bench and Verify: specs plan and
+    // read rows exactly as the measured and verified sessions do
+    for ((k, v) <- Seq(
+        "spark.sql.session.timeZone" -> "UTC",
+        "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+        "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS",
+        "spark.sql.extensions" -> "graft.plans.GraftExtensions"))
+      assert(spark.conf.get(k) === v, s"$k")
   }
 }
 
-/** Reference count from the ordinary (un-extended) session. */
+/** Reference results with the window top-k rewrite switched off. */
 object TaskSparkRef {
-  def run(sf: String): Long = {
+  private val Excluded = "spark.sql.optimizer.excludedRules"
+
+  /** Runs `body` with [[graft.plans.WindowTopKRewrite]] excluded from
+    * the optimizer, restoring the previous exclusion list after.
+    */
+  def withoutRewrite[A](body: => A): A = {
+    val conf = SparkTestSession.spark.conf
+    val saved = conf.getOption(Excluded)
+    conf.set(Excluded, graft.plans.WindowTopKRewrite.ruleName)
+    try body
+    finally saved.fold(conf.unset(Excluded))(conf.set(Excluded, _))
+  }
+
+  def run(sf: String): Long = withoutRewrite {
     import org.apache.spark.sql.functions._
     val spark = SparkTestSession.spark
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("o_custkey").orderBy(col("o_totalprice").desc, col("o_orderkey"))
-    spark.read.parquet(s"$sf/orders.parquet")
+    val df = spark.read.parquet(s"$sf/orders.parquet")
       .withColumn("rn", row_number().over(w)).filter(col("rn") <= 2)
-      .select("o_custkey", "o_orderkey").count()
+      .select("o_custkey", "o_orderkey")
+    assert(!df.queryExecution.executedPlan.toString.contains("TopKPerKey"))
+    df.count()
   }
 }
 

@@ -2,22 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites (forked test JVM). */
+/** One shared local session for all suites (forked test JVM): the
+  * session Bench and Verify run, at 4 cores.
+  */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = graft.ShuffleDefaults(SparkSession.builder())
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session(4)
   val Sf = "/root/testdata/sf0.001"
 }
