@@ -137,17 +137,12 @@ object Bench {
 
   /** Releases the session-persisted frames [[SharedBuilds]] warm, once a
     * run's query loop is done (cache hygiene for any embedding process
-    * that keeps the session alive). Consumers go first: the BPE encode
-    * cache reads the learned vocabulary.
+    * that keeps the session alive): the held shared frames, then the
+    * two driver-side model memos.
     */
   private[graft] def releaseShared(s: SparkSession, dir: String): Unit = {
-    graft.operators.Dedup.releaseShingleCache(s, dir)
-    graft.operators.ReportDoc.releaseReportCache(s, dir)
-    graft.operators.TextAnalysis.releasePipelineCache(s, dir)
-    graft.operators.Bpe.releaseEncodeCache(s, dir)
+    graft.plans.Memo.release(s, dir)
     graft.operators.Bpe.releaseLearnedCache(s, dir)
-    graft.operators.CorpusCuration.releaseCurationCache(s, dir)
-    graft.operators.Classifier.releaseModelCache(s, dir)
     graft.operators.Unigram.releaseModelCache(s, dir)
   }
 

@@ -169,23 +169,6 @@ object Bpe {
   private[graft] def warmEncodeCache(s: SparkSession, dir: String): Unit =
     encodeFrame(s, dir).count()
 
-  /** Unpersist every shared encode frame for `dir` (the consumer —
-    * drop it before [[releaseLearnedCache]], its dependency). Releases
-    * the HELD frames only: a cold cache releases nothing and never
-    * runs the learner (a targeted Verify subset that skipped BPE must
-    * not pay a full training run in its cleanup path).
-    */
-  def releaseEncodeCache(s: SparkSession, dir: String): Unit = {
-    val it = encodeCache.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 == s && e.getKey._2 == dir) {
-        e.getValue.unpersist()
-        it.remove()
-      }
-    }
-  }
-
   /** Run the memoized learner now, for Bench's `shared_` attribution
     * (the four BPE queries then ride the memo).
     */
@@ -292,18 +275,8 @@ object Bpe {
   private def encodeFrame(s: SparkSession, dir: String): DataFrame =
     encodeFrameCached(s, dir, learned(s, dir)._1)
 
-  /** Session-cached encode frames keyed (session, dir, merge-list
-    * hash) — the cached DataFrame itself is held, so release
-    * unpersists WITHOUT rebuilding any plan (a cold release must never
-    * run the learner). Keying by the MERGE LIST keeps the artifact
-    * contract honest: `q_bpe_persisted` shares the frame exactly when
-    * its LOADED merges equal the learner's; a corrupted reload keys a
-    * separate frame, computes separately, and hash-fails its oracle.
-    */
-  private val encodeCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]()
-
-  /** Strong digest of a merge list — the encode-cache key component.
+  /** Strong digest of a merge list — the shared encode frame's name
+    * component.
     * `Seq.hashCode` (32-bit) could collide a corrupted artifact reload
     * with the learner's merges and silently share one frame, defeating
     * the keys-separately-and-hash-fails detection; MD5 over the full
@@ -331,17 +304,23 @@ object Bpe {
     * cores row groups and must NEVER pay a corpus-wide shuffle for a
     * map-only pass (spec-pinned). Values are per-row, so results are
     * layout-independent and the terminal sorts pin the order.
+    *
+    * Named by the MERGE LIST's digest, which keeps the artifact
+    * contract honest: `q_bpe_persisted` shares the frame exactly when
+    * its LOADED merges equal the learner's; a corrupted reload names a
+    * separate frame, computes separately, and hash-fails its oracle.
+    * Release goes through [[graft.plans.Memo.release]], which unpersists
+    * the held frame without running the learner.
     */
   private[graft] def encodeFrameCached(s: SparkSession, dir: String,
       merges: Seq[(Int, String, String, String, Long)]): DataFrame =
-    encodeCache.computeIfAbsent((s, dir, mergeDigest(merges)), _ => {
+    graft.plans.Memo.shared(s, dir, s"bpe.encode.${mergeDigest(merges)}") {
       // r16: the spread decision moved to Tables.documentsSpread and
       // counts parquet ROW GROUPS from footers — the prior
       // getNumPartitions probe saw Spark's empty byte-range splits
       // over a single-row-group file and never fired at sf1.
       encodeFrameWith(Tables.documentsSpread(s, dir), merges)
-        .transform(graft.plans.Memo.cached)
-    })
+    }
 
   /** The encode pass against an EXPLICIT merge list and documents frame
     * — the seam the persisted-tokenizer artifact

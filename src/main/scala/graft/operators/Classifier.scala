@@ -38,7 +38,7 @@ import graft.functions.TextFunctions._
   *   - NB training is ONE corpus pass into a vocabulary-sized
   *     (token, c_cur, c_web) aggregate, map-side combined; the frame is
   *     session-persisted (four queries derive from it — the kl_drift
-  *     ReuseExchange lesson) and released by [[releaseModelCache]].
+  *     ReuseExchange lesson).
   *     Totals are a 3-number aggregate collect (metadata class).
   *   - NB scoring joins the token stream to the vocab table (AQE picks
   *     broadcast when it fits — the tf⋈df precedent) and reduces per
@@ -97,12 +97,13 @@ object Classifier {
 
   /** Vocabulary-sized (t, c_cur, c_web) training counts, session-
     * persisted: nbTrain/nbScore/nbEval (and the totals collect) all
-    * derive from this one corpus aggregate. Plan-equality memoized via
-    * the CacheManager (the sourceTokenCounts pattern); released by
-    * [[releaseModelCache]].
+    * derive from this one corpus aggregate, a
+    * [[graft.plans.Memo.shared]] frame (the sourceTokenCounts pattern).
     */
-  private def nbCountsPlan(s: SparkSession, dir: String): DataFrame =
-    trainCountsFromDocs(Tables.documentsSpread(s, dir))
+  private def nbCounts(s: SparkSession, dir: String): DataFrame =
+    graft.plans.Memo.shared(s, dir, "classifier.nbCounts") {
+      trainCountsFromDocs(Tables.documentsSpread(s, dir))
+    }
 
   /** Counting stage from any (doc_id, source, text) frame — shared
     * verbatim with [[graft.streaming.StreamingNbModel]], whose merged
@@ -156,24 +157,6 @@ object Classifier {
         coalesce(col("n_hit"), lit(0L)).as("n_hit"), col("is_cur"),
         when(totalU > 0L, 1).otherwise(0).as("pred_cur"),
         score4(totalU).as("nb_score"))
-  }
-
-  private def nbCounts(s: SparkSession, dir: String): DataFrame =
-    nbCountsPlan(s, dir)
-      .transform(graft.plans.Memo.cached)
-
-  /** Drop the session-scoped classifier caches for `dir` (the guard
-    * keeps release from triggering the very computation it frees).
-    */
-  def releaseModelCache(s: SparkSession, dir: String): Unit = {
-    // scored first: rebuilding its plan needs the totals collect, which
-    // rides the still-cached counts (the guard comment below)
-    if (scoredCache.remove(dir)) scoredFramePlan(s, dir).unpersist()
-    nbCountsPlan(s, dir).unpersist()
-    if (dsirCntCache.contains(dir)) {
-      dsirFramePlan(s, dir).unpersist()
-      dsirCntCache.remove(dir)
-    }
   }
 
   /** Materialize the session-persisted classifier frames (NB counts,
@@ -249,23 +232,15 @@ object Classifier {
     * q_nb_auc all reduce over it (the AUC alone takes two actions:
     * min/max then bins), and the scoring pass carries the corpus-wide
     * token⋈model join + doc reduce that must not re-run per consumer
-    * (the lmScoreFrame precedent: narrow O(docs) frame, post-shuffle);
-    * released by [[releaseModelCache]].
+    * (the lmScoreFrame precedent: narrow O(docs) frame, post-shuffle).
+    * Its build runs the totals collect and the prior tally once.
     */
-  private val scoredCache =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private def scoredFrame(s: SparkSession, dir: String): DataFrame = {
-    scoredCache.add(dir)
-    scoredFramePlan(s, dir)
-      .transform(graft.plans.Memo.cached)
-  }
-
-  private def scoredFramePlan(s: SparkSession, dir: String): DataFrame = {
-    val (tc, tw, v) = nbTotals(s, dir)
-    scoreStage(Tables.documentsSpread(s, dir),
-      modelFromCounts(nbCounts(s, dir), tc, tw, v), nbPriorU(s, dir))
-  }
+  private def scoredFrame(s: SparkSession, dir: String): DataFrame =
+    graft.plans.Memo.shared(s, dir, "classifier.scored") {
+      val (tc, tw, v) = nbTotals(s, dir)
+      scoreStage(Tables.documentsSpread(s, dir),
+        modelFromCounts(nbCounts(s, dir), tc, tw, v), nbPriorU(s, dir))
+    }
 
   // ---------------------------------------------------------------------
   // q_nb_eval — held-out confusion summary
@@ -474,20 +449,9 @@ object Classifier {
       .groupBy("f")
       .agg(sum(isCurated.cast("long")).as("c_t"), count(lit(1)).as("c_r"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      // sorted: the downstream local frame must canonicalize to the
-      // SAME plan on every call or the CacheManager persist-by-plan
-      // memoization below would never hit (collect order is free)
+      // sorted: the local frame built from it is deterministic
+      // (collect order is free)
       .sortBy(_._1)
-
-  /** Memoized training counts per data dir: the bucket table is tiny
-    * (≤ DsirBuckets rows) but its aggregate scans the corpus — weights
-    * and select must not re-run it. Cleared by [[releaseModelCache]].
-    */
-  private val dsirCntCache =
-    scala.collection.concurrent.TrieMap.empty[String, Array[(Long, Long, Long)]]
-
-  private def dsirCounts(s: SparkSession, dir: String): Array[(Long, Long, Long)] =
-    dsirCntCache.getOrElseUpdate(dir, dsirTrainCounts(Tables.documentsSpread(s, dir)))
 
   /** Value + scoring stage from a counts table — shared verbatim with
     * the streaming twin so scoring under merged counts == batch.
@@ -521,15 +485,14 @@ object Classifier {
 
   /** Session-persisted per-doc weights frame (narrow, O(docs) — the
     * lmScoreFrame class): q_dsir_weights reads it once, q_dsir_select
-    * reads it twice (threshold aggregate + filter). Plan-equality
-    * memoized via the CacheManager; released by [[releaseModelCache]].
+    * reads it twice (threshold aggregate + filter). Its build runs the
+    * corpus-scanning training-count collect once.
     */
-  private def dsirFramePlan(s: SparkSession, dir: String): DataFrame =
-    dsirScoreFrame(s, Tables.documentsSpread(s, dir), dsirCounts(s, dir).toSeq)
-
   private def dsirFrame(s: SparkSession, dir: String): DataFrame =
-    dsirFramePlan(s, dir)
-      .transform(graft.plans.Memo.cached)
+    graft.plans.Memo.shared(s, dir, "classifier.dsir") {
+      val docs = Tables.documentsSpread(s, dir)
+      dsirScoreFrame(s, docs, dsirTrainCounts(docs).toSeq)
+    }
 
   def dsirWeights(s: SparkSession, dir: String, ordered: Boolean = true): DataFrame = {
     val out = dsirFrame(s, dir)

@@ -172,9 +172,8 @@ object CorpusCuration {
 
   def sourceSim(s: SparkSession, dir: String): DataFrame = {
     import Dedup.MinhashA
-    // the corpus-sized sketch pass runs ONCE into the session-persisted
-    // signature frame — |sources|×16 longs, released by
-    // [[releaseCurationCache]] — because BOTH the cardinality probe and
+    // the corpus-sized sketch pass runs ONCE into the shared signature
+    // frame — |sources|×16 longs — because BOTH the cardinality probe and
     // the pairwise stage read it, and exchange reuse across
     // differently-aliased self-join subtrees is not guaranteed
     // (measured: it did not fire)
@@ -246,22 +245,18 @@ object CorpusCuration {
   /** Session-persisted per-source MinHash signature frame (m0..m15):
     * min over all the source's shingle hashes of (aᵢ·h+bᵢ) mod p — the
     * distributed sketch union as one map-side-combined aggregate.
-    * Bounded at |sources|×16 longs. Released by
-    * [[releaseCurationCache]].
+    * Bounded at |sources|×16 longs.
     */
   private def sourceSig(s: SparkSession, dir: String): DataFrame =
-    sourceSigPlan(s, dir)
-      .transform(graft.plans.Memo.cached)
-
-  private def sourceSigPlan(s: SparkSession, dir: String): DataFrame = {
-    import Dedup.{MinhashA, MinhashB, ShingleN}
-    val ex = Tables.documentsSpread(s, dir)
-      .select(col("source"), explode(shingleHashes(col("text"), ShingleN)).as("h"))
-    val mins = MinhashA.zip(MinhashB).zipWithIndex.map { case ((a, b), i) =>
-      min(pmod(lit(a) * col("h") + lit(b), lit(HashP))).as(s"m$i")
+    graft.plans.Memo.shared(s, dir, "curation.sourceSig") {
+      import Dedup.{MinhashA, MinhashB, ShingleN}
+      val ex = Tables.documentsSpread(s, dir)
+        .select(col("source"), explode(shingleHashes(col("text"), ShingleN)).as("h"))
+      val mins = MinhashA.zip(MinhashB).zipWithIndex.map { case ((a, b), i) =>
+        min(pmod(lit(a) * col("h") + lit(b), lit(HashP))).as(s"m$i")
+      }
+      ex.groupBy("source").agg(mins.head, mins.tail: _*)
     }
-    ex.groupBy("source").agg(mins.head, mins.tail: _*)
-  }
 
   /** DuckDB twin of [[sourceSim]] — same shingle fold, same MinHash
     * constants (generated from Dedup's, one source of truth).
@@ -853,50 +848,38 @@ object CorpusCuration {
     * pair fan-out + grouped count is the expensive part (≈30 cpu-s at
     * sf0.1) — one materialization serves both (the shingle-cache
     * economics). C(sources, 2)-bounded rows, the sanctioned persist
-    * class. Released by [[releaseCurationCache]] BEFORE postings.
+    * class. The build's nSources probe (a driver count picking the
+    * df-cap branch) runs once per (session, dir).
     */
   def sourceOverlap(s: SparkSession, dir: String): DataFrame =
-    sourceOverlapPlan(s, dir).transform(graft.plans.Memo.cached)
-
-  /** Source-cardinality memo: the overlap plan CONSTRUCTION needs
-    * nSources to pick the df-cap branch, and plan construction happens
-    * on every Memo.cached lookup — without the memo each lookup paid a
-    * distinct-count over the postings frame (measured 6 cpu-s per
-    * CALL at sf0.1). Pure function of the table dir — the sanctioned
-    * driver-local memo class.
-    */
-  private val nSourcesMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  private def sourceOverlapPlan(s: SparkSession, dir: String): DataFrame = {
-    val postAll = postings(s, dir)
-    val nSources: Long = nSourcesMemo.computeIfAbsent(dir,
-      _ => postAll.select("source").distinct().count())
-    val post =
-      if (nSources <= SourcePairLocalMax) postAll
-      else {
-        // df-capped postings, exchange pinned on h: the pair join fans
-        // out per-shingle and AQE's byte-sized coalesce must not
-        // serialize it (the coocPairs lesson)
-        val hot = postAll.groupBy("h").agg(count(lit(1)).as("df"))
-          .filter(col("df") > SourceOverlapMaxDf).select("h")
-        postAll.join(hot, Seq("h"), "left_anti")
-          .repartition(s.sessionState.conf.numShufflePartitions, col("h"))
-      }
-    val sz = post.groupBy("source").agg(count(lit(1)).as("n"))
-    val inter = post.select(col("source").as("source_a"), col("h"))
-      .join(post.select(col("source").as("source_b"), col("h")), "h")
-      .filter(col("source_a") < col("source_b"))
-      .groupBy("source_a", "source_b").agg(count(lit(1)).as("inter"))
-    inter
-      .join(broadcast(sz.select(col("source").as("source_a"), col("n").as("na"))), "source_a")
-      .join(broadcast(sz.select(col("source").as("source_b"), col("n").as("nb"))), "source_b")
-      .select(col("source_a"), col("source_b"), col("inter"),
-        r4c(col("inter").cast("double") / (col("na") + col("nb") - col("inter"))).as("jaccard"),
-        r4c(col("inter").cast("double") / col("na")).as("cont_a"),
-        r4c(col("inter").cast("double") / col("nb")).as("cont_b"))
-      .orderBy("source_a", "source_b")
-  }
+    graft.plans.Memo.shared(s, dir, "curation.sourceOverlap") {
+      val postAll = postings(s, dir)
+      val nSources = postAll.select("source").distinct().count()
+      val post =
+        if (nSources <= SourcePairLocalMax) postAll
+        else {
+          // df-capped postings, exchange pinned on h: the pair join fans
+          // out per-shingle and AQE's byte-sized coalesce must not
+          // serialize it (the coocPairs lesson)
+          val hot = postAll.groupBy("h").agg(count(lit(1)).as("df"))
+            .filter(col("df") > SourceOverlapMaxDf).select("h")
+          postAll.join(hot, Seq("h"), "left_anti")
+            .repartition(s.sessionState.conf.numShufflePartitions, col("h"))
+        }
+      val sz = post.groupBy("source").agg(count(lit(1)).as("n"))
+      val inter = post.select(col("source").as("source_a"), col("h"))
+        .join(post.select(col("source").as("source_b"), col("h")), "h")
+        .filter(col("source_a") < col("source_b"))
+        .groupBy("source_a", "source_b").agg(count(lit(1)).as("inter"))
+      inter
+        .join(broadcast(sz.select(col("source").as("source_a"), col("n").as("na"))), "source_a")
+        .join(broadcast(sz.select(col("source").as("source_b"), col("n").as("nb"))), "source_b")
+        .select(col("source_a"), col("source_b"), col("inter"),
+          r4c(col("inter").cast("double") / (col("na") + col("nb") - col("inter"))).as("jaccard"),
+          r4c(col("inter").cast("double") / col("na")).as("cont_a"),
+          r4c(col("inter").cast("double") / col("nb")).as("cont_b"))
+        .orderBy("source_a", "source_b")
+    }
 
   /** Distinct (source, shingle-hash) postings, session-persisted: the
     * overlap operator reads this frame THREE times (both self-join
@@ -906,18 +889,15 @@ object CorpusCuration {
     * (measured as duplicate scans in the final adaptive plan). The
     * frame is the distinct postings set — bounded by corpus vocabulary
     * × source count, the same class Dedup persists its shingle frame
-    * in. Released by [[releaseCurationCache]] (Verify/Bench call it).
+    * in.
     */
   private def postings(s: SparkSession, dir: String): DataFrame =
-    postingsPlan(s, dir)
-      .transform(graft.plans.Memo.cached)
-
-  private def postingsPlan(s: SparkSession, dir: String): DataFrame = {
-    import Dedup.ShingleN
-    Tables.documentsSpread(s, dir)
-      .select(col("source"), explode(shingleHashes(col("text"), ShingleN)).as("h"))
-      .distinct()
-  }
+    graft.plans.Memo.shared(s, dir, "curation.postings") {
+      import Dedup.ShingleN
+      Tables.documentsSpread(s, dir)
+        .select(col("source"), explode(shingleHashes(col("text"), ShingleN)).as("h"))
+        .distinct()
+    }
 
   def sourceOverlapOracleSql: String = {
     import Dedup.ShingleN
@@ -1223,26 +1203,14 @@ object CorpusCuration {
     * (measured: 8 scans in the final adaptive plan, ReuseExchange did
     * not fire across the differing partial-agg outputs). The persisted
     * frame is vocabulary × sources sized — post-aggregation, orders
-    * smaller than the corpus. Released by [[releaseCurationCache]].
+    * smaller than the corpus.
     */
   private def sourceTokenCounts(s: SparkSession, dir: String): DataFrame =
-    sourceTokenCountsPlan(s, dir)
-      .transform(graft.plans.Memo.cached)
-
-  private def sourceTokenCountsPlan(s: SparkSession, dir: String): DataFrame =
-    Tables.documentsSpread(s, dir)
-      .select(col("source"), explode(tokens(col("text"))).as("t"))
-      .groupBy("source", "t").agg(count(lit(1)).as("c_st"))
-
-  /** Drop the session-scoped curation caches for `dir`. */
-  def releaseCurationCache(s: SparkSession, dir: String): Unit = {
-    // the overlap result CONSUMES postings — release before it
-    sourceOverlapPlan(s, dir).unpersist()
-    postingsPlan(s, dir).unpersist()
-    sourceSigPlan(s, dir).unpersist()
-    sourceTokenCountsPlan(s, dir).unpersist()
-    bigramCountsPlan(s, dir).unpersist()
-  }
+    graft.plans.Memo.shared(s, dir, "curation.sourceTokenCounts") {
+      Tables.documentsSpread(s, dir)
+        .select(col("source"), explode(tokens(col("text"))).as("t"))
+        .groupBy("source", "t").agg(count(lit(1)).as("c_st"))
+    }
 
   /** Materialize the session-persisted curation frames (postings,
     * source signatures, (source, token) counts, bigram counts) for
@@ -1640,15 +1608,12 @@ object CorpusCuration {
     * totals, contribution join) and ReuseExchange does not dedupe
     * re-referenced aggregate subtrees (the kl_drift lesson: measured
     * 3 corpus explode+count scans without the persist, 1 with). The
-    * frame is post-shuffle and source×bigram-vocabulary-sized;
-    * released by [[releaseCurationCache]].
+    * frame is post-shuffle and source×bigram-vocabulary-sized.
     */
   private def bigramCounts(s: SparkSession, dir: String): DataFrame =
-    bigramCountsPlan(s, dir)
-      .transform(graft.plans.Memo.cached)
-
-  private def bigramCountsPlan(s: SparkSession, dir: String): DataFrame =
-    bigramPairCounts(Tables.documentsSpread(s, dir))
+    graft.plans.Memo.shared(s, dir, "curation.bigramCounts") {
+      bigramPairCounts(Tables.documentsSpread(s, dir))
+    }
 
   /** Per-batch (source, w1, w2) bigram counts from a (source, text)
     * frame — the additive sufficient statistic (documents arrive whole,

@@ -74,37 +74,16 @@ object Dedup {
     * as the input, hash arrays instead of text) trades bounded storage
     * for recomputing it per branch.
     *
-    * Lifecycle: `persist` registers the plan in the session
-    * CacheManager, which holds a strong reference until an explicit
-    * unpersist — the cache intentionally lives across the dedup query
-    * family within a session (repeat calls resolve to the one cached
-    * plan, not new copies). Long-lived sessions release it with
-    * [[releaseShingleCache]]; Verify/Bench do so after their query loop.
+    * Lifecycle: a [[graft.plans.Memo.shared]] frame — held across the
+    * dedup query family within a session, released with
+    * [[graft.plans.Memo.release]] (Verify/Bench do so after their loop).
     */
   private def shingled(s: SparkSession, dir: String): DataFrame =
-    shingledPlan(s, dir)
-      .transform(graft.plans.Memo.cached)
-
-  private def shingledPlan(s: SparkSession, dir: String): DataFrame =
-    Tables.documentsSpread(s, dir)
-      .select(col("doc_id"), shingleHashes(col("text"), ShingleN).as("sh"))
-      .filter(size(col("sh")) > 0)
-
-  /** Drop the session-scoped shingle cache for `dir` (CacheManager
-    * lookup is by analyzed plan, so an identically-built frame releases
-    * the entry registered by any prior dedup call).
-    *
-    * Reverse dependency order: CONSTRUCTING the pair plans calls
-    * shingled()/coocCached(), whose persist would re-register a
-    * just-released upstream entry — consumers first, the shingle frame
-    * last, so nothing re-registers after its release.
-    */
-  def releaseShingleCache(s: SparkSession, dir: String): Unit = {
-    minhashPairsPlan(s, dir).unpersist()
-    ngramPairsPlan(s, dir).unpersist()
-    coocCachedPlan(s, dir).unpersist()
-    shingledPlan(s, dir).unpersist()
-  }
+    graft.plans.Memo.shared(s, dir, "dedup.shingled") {
+      Tables.documentsSpread(s, dir)
+        .select(col("doc_id"), shingleHashes(col("text"), ShingleN).as("sh"))
+        .filter(size(col("sh")) > 0)
+    }
 
   /** Materialize the session-persisted dedup pair pipeline (shingle
     * frame, co-occurrence verify, MinHash + n-gram verified pairs) so
@@ -131,16 +110,13 @@ object Dedup {
     * (`q_dedup_clusters` reads the edge list repeatedly across rounds);
     * the co-occurrence verify is the most expensive dedup stage and
     * must not re-run per consumer (the minhashPairs rationale). Sparse
-    * output, the post-shuffle-small persist class; released by
-    * [[releaseShingleCache]].
+    * output, the post-shuffle-small persist class.
     */
   private[graft] def ngramPairs(s: SparkSession, dir: String): DataFrame =
-    ngramPairsPlan(s, dir)
-      .transform(graft.plans.Memo.cached)
-
-  private def ngramPairsPlan(s: SparkSession, dir: String): DataFrame =
-    verifyByCooccurrence(shingled(s, dir), candidatesFromCooc = true, JaccardT,
-      ordered = false, coocPre = coocCached(s, dir))
+    graft.plans.Memo.shared(s, dir, "dedup.ngramPairs") {
+      verifyByCooccurrence(shingled(s, dir), candidatesFromCooc = true, JaccardT,
+        ordered = false, coocPre = coocCached(s, dir))
+    }
 
   /** Stop-shingle cap: a shingle present in more than this many
     * documents ("of the data", boilerplate headers) contributes
@@ -201,15 +177,12 @@ object Dedup {
     * consumers (ngram verify, minhash verify, containment); one
     * materialization serves them all. Candidate-pair-sized (bounded by
     * Σ df² over capped shingles — the stop-shingle cap is what makes
-    * this a persistable size at all); released by
-    * [[releaseShingleCache]].
+    * this a persistable size at all).
     */
   private def coocCached(s: SparkSession, dir: String): DataFrame =
-    coocCachedPlan(s, dir)
-      .transform(graft.plans.Memo.cached)
-
-  private def coocCachedPlan(s: SparkSession, dir: String): DataFrame =
-    coocPairs(shingled(s, dir), MaxShingleDf)
+    graft.plans.Memo.shared(s, dir, "dedup.cooc") {
+      coocPairs(shingled(s, dir), MaxShingleDf)
+    }
 
   private[graft] def verifyByCooccurrence(docs: DataFrame, candidatesFromCooc: Boolean,
                                    threshold: Double,
@@ -384,22 +357,18 @@ object Dedup {
     * re-run across the queries that consume the pair list
     * (`q_dedup_minhash`, `q_dup_matrix` — measured 18 CPU-s of
     * re-verification without the persist). The frame is SPARSE (near-
-    * dup pairs only) — post-shuffle small, the kl_drift persist class;
-    * released by [[releaseShingleCache]].
+    * dup pairs only) — post-shuffle small, the kl_drift persist class.
     */
   private def minhashPairs(s: SparkSession, dir: String): DataFrame =
-    minhashPairsPlan(s, dir)
-      .transform(graft.plans.Memo.cached)
-
-  private def minhashPairsPlan(s: SparkSession, dir: String): DataFrame = {
-    val docs = shingled(s, dir)
-    // skew-bounded band-bucket self-join (r16): the pinned exchange +
-    // salt triangle for hot keys live in [[saltedBandSelfJoin]]
-    val cand = saltedBandSelfJoin(s, bandedSigs(docs), "key", None)
-      .distinct()
-    verifyByCooccurrence(docs, candidatesFromCooc = false, MinhashJaccardT, cand,
-      ordered = false, coocPre = coocCached(s, dir))
-  }
+    graft.plans.Memo.shared(s, dir, "dedup.minhashPairs") {
+      val docs = shingled(s, dir)
+      // skew-bounded band-bucket self-join (r16): the pinned exchange +
+      // salt triangle for hot keys live in [[saltedBandSelfJoin]]
+      val cand = saltedBandSelfJoin(s, bandedSigs(docs), "key", None)
+        .distinct()
+      verifyByCooccurrence(docs, candidatesFromCooc = false, MinhashJaccardT, cand,
+        ordered = false, coocPre = coocCached(s, dir))
+    }
 
   /** Cross-source duplication matrix (`q_dup_matrix`): the verified
     * MinHash near-dup pairs rolled up to (source, source) counts —

@@ -124,7 +124,7 @@ object RecallReport {
     // otherwise serializes ~11 sub-second searches into the catalog's
     // most expensive entry (measured 11 s at sf0.1). Spark actions are
     // thread-safe; every per-dir memo the variants touch is a
-    // ConcurrentHashMap or the synchronized Memo.cached.
+    // ConcurrentHashMap or a Memo.shared frame.
     val gates = annGates(s, dir)
     gates.map(_._3).distinct.foreach(baseline)
     import scala.concurrent.{Await, Future, ExecutionContext}

@@ -163,41 +163,36 @@ object ReportDoc {
     * as two case-mapped columns (completed = newest first ⇒ negated day
     * number; goals add the due date as the tiebreak after priority).
     */
-  private def reportFramePlan(s: SparkSession, dir: String): DataFrame = {
-    val dayNo = datediff(col("due"), lit("1990-01-01").cast("timestamp"))
-    sectionedTasks(s, dir)
-      .withColumn("sa", when(col("section_no") === 1, -dayNo).otherwise(col("prio")))
-      .withColumn("sb", when(col("section_no") === 3, dayNo).otherwise(lit(0)))
-  }
+  private def reportFrame(s: SparkSession, dir: String): DataFrame =
+    graft.plans.Memo.shared(s, dir, "report.frame") {
+      val dayNo = datediff(col("due"), lit("1990-01-01").cast("timestamp"))
+      sectionedTasks(s, dir)
+        .withColumn("sa", when(col("section_no") === 1, -dayNo).otherwise(col("prio")))
+        .withColumn("sb", when(col("section_no") === 3, dayNo).otherwise(lit(0)))
+    }
 
   /** The §4 catch-all source: the dirty-status subset as a narrow
-    * (item_name, okey) projection. Persisted in [[reportDoc]]: five
+    * (item_name, okey) projection, a shared frame: five
     * branches read it (count gate ×2, okey bounds, bucket rank, bucket
     * counts) and an uncached plan re-scans the FACT table for each —
     * one materialized narrow projection beats five orders scans at any
     * scale, and the subset is small by the same argument that makes §4
     * a catch-all (dirty statuses are the exception, not the corpus).
     */
-  private def uncPlan(s: SparkSession, dir: String): DataFrame =
-    Tables.orders(s, dir)
-      .filter(!col("o_orderstatus").isin("O", "F", "P"))
-      .select(itemName(col("o_orderkey"), col("o_orderpriority")).as("item_name"),
-        col("o_orderkey").as("okey"))
-
-  /** Drop the session-scoped report-frame caches for `dir` (CacheManager
-    * lookup is by analyzed plan, same as the dedup shingle cache).
-    */
-  def releaseReportCache(s: SparkSession, dir: String): Unit = {
-    reportFramePlan(s, dir).unpersist()
-    uncPlan(s, dir).unpersist()
-  }
+  private def uncFrame(s: SparkSession, dir: String): DataFrame =
+    graft.plans.Memo.shared(s, dir, "report.unc") {
+      Tables.orders(s, dir)
+        .filter(!col("o_orderstatus").isin("O", "F", "P"))
+        .select(itemName(col("o_orderkey"), col("o_orderpriority")).as("item_name"),
+          col("o_orderkey").as("okey"))
+    }
 
   /** Materialize the session-persisted report frames for Bench's
     * `shared_` attribution.
     */
   private[graft] def warmReportCache(s: SparkSession, dir: String): Unit = {
-    reportFramePlan(s, dir).transform(graft.plans.Memo.cached).count()
-    uncPlan(s, dir).transform(graft.plans.Memo.cached).count()
+    reportFrame(s, dir).count()
+    uncFrame(s, dir).count()
   }
 
   /** Continuous okey-ordered numbering for the §4 catch-all WITHOUT an
@@ -257,13 +252,11 @@ object ReportDoc {
     // post-aggregate frame — broadcast-scale, not fact-scale. Global
     // row number r = off + lr; dense group rank g comes free as the
     // groups frame's row_number.
-    // Persist the report frame: it feeds the rank window, the section
-    // counts, the placeholders, and the legend — without the cache each
-    // union branch re-scans its sources (38 parquet scans in the
-    // uncached plan). CacheManager resolves the identical plan on
-    // repeat calls to the one entry; long-lived sessions release it
-    // with [[releaseReportCache]] (Verify/Bench do, after their loop).
-    val t = reportFramePlan(s, dir).transform(graft.plans.Memo.cached)
+    // The report frame is a shared (persisted) frame: it feeds the rank
+    // window, the section counts, the placeholders, and the legend —
+    // without the cache each union branch re-scans its sources (38
+    // parquet scans in the uncached plan).
+    val t = reportFrame(s, dir)
     val wLocal = Window.partitionBy("section_no", "parent_name")
       .orderBy(col("sa"), col("sb"), col("okey"))
     val local = t.select(col("section_no"), col("parent_name"), col("item_name"),
@@ -305,7 +298,7 @@ object ReportDoc {
     // §4 catch-all: emitted only when a task has a status outside the
     // normalized set (generate_reports.py:570-576) — structurally
     // present, empty on this corpus.
-    val unc = uncPlan(s, dir).transform(graft.plans.Memo.cached)
+    val unc = uncFrame(s, dir)
     val uncCnt = unc.agg(count(lit(1)).as("_n")).filter(col("_n") > 0)
     val s4 = uncCnt.select(lit(4).as("section_no"), lit(0).as("pos"),
         lit("4. Uncategorized / Other Tasks").as("line"))

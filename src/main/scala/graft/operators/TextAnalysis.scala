@@ -137,34 +137,22 @@ object TextAnalysis {
     * md5-dedup window are the expensive half of the pipeline — the
     * cached frame is (doc_id, ntok), 16 B/row, three orders smaller
     * than the text it derives from (the shingled()-cache argument).
-    * Session-scoped via CacheManager plan identity; released by
-    * [[releasePipelineCache]] (Verify/Bench call it after their loops).
+    * A [[graft.plans.Memo.shared]] frame.
     */
   private def survivorCounts(s: SparkSession, dir: String): DataFrame =
-    survivorCountsPlan(s, dir)
-      .transform(graft.plans.Memo.cached)
-
-  private def survivorCountsPlan(s: SparkSession, dir: String): DataFrame = {
-    val gated = Tables.documentsSpread(s, dir)
-      .select(col("doc_id"), col("text"),
-        qualityScore(col("text")).as("quality"),
-        langId(col("text")).as("pred_lang"))
-      .filter(col("quality") >= PipelineQualityMin && col("pred_lang") =!= "unknown")
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(md5(col("text").cast("binary"))).orderBy("doc_id")
-    gated
-      .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
-      .select(col("doc_id"),
-        size(tokens(scrubPii(col("text")))).cast("long").as("ntok"))
-  }
-
-  /** Drop the session-scoped survivor-counts and LM-score caches for
-    * `dir`.
-    */
-  def releasePipelineCache(s: SparkSession, dir: String): Unit = {
-    survivorCountsPlan(s, dir).unpersist()
-    lmScoreFramePlan(s, dir).unpersist()
-  }
+    graft.plans.Memo.shared(s, dir, "text.survivorCounts") {
+      val gated = Tables.documentsSpread(s, dir)
+        .select(col("doc_id"), col("text"),
+          qualityScore(col("text")).as("quality"),
+          langId(col("text")).as("pred_lang"))
+        .filter(col("quality") >= PipelineQualityMin && col("pred_lang") =!= "unknown")
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(md5(col("text").cast("binary"))).orderBy("doc_id")
+      gated
+        .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
+        .select(col("doc_id"),
+          size(tokens(scrubPii(col("text")))).cast("long").as("ntok"))
+    }
 
   /** Materialize the session-persisted pipeline frames (survivor
     * counts, bigram-LM scores) for Bench's `shared_` attribution.
@@ -390,43 +378,40 @@ object TextAnalysis {
     * for per-lang tercile thresholds, once for the per-doc bucket
     * assignment). Persisted for the session — the frame is 4 columns
     * ≈ 30 B/row, three orders smaller than the bigram stream it
-    * derives from; released by [[releasePipelineCache]]. Carrying
-    * `lang` through the existing groupBy is free (functionally
-    * dependent on doc_id) and saves pplBuckets a corpus-sized join.
+    * derives from. Carrying `lang` through the existing groupBy is
+    * free (functionally dependent on doc_id) and saves pplBuckets a
+    * corpus-sized join.
     */
   private[operators] def lmScoreFrame(s: SparkSession, dir: String): DataFrame =
-    lmScoreFramePlan(s, dir)
-      .transform(graft.plans.Memo.cached)
-
-  private def lmScoreFramePlan(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documentsSpread(s, dir)
-      .select(col("doc_id"), col("lang"), tokens(col("text")).as("ts"))
-      .filter(size(col("ts")) >= 2)
-    val pairs = docs.select(col("doc_id"), col("lang"), posexplode(
-        transform(sequence(lit(0), size(col("ts")) - 2),
-          i => struct(element_at(col("ts"), i + 1).as("w1"),
-            element_at(col("ts"), i + 2).as("w2")))).as(Seq("pos", "pr")))
-      .select(col("doc_id"), col("lang"), col("pos"),
-        col("pr.w1").as("w1"), col("pr.w2").as("w2"))
-    val big = pairs.groupBy("w1", "w2").agg(count(lit(1)).as("cb"))
-    // history counts = Σ_w2 c(w1,w2), derived from the bigram model
-    // itself — never a second pass over the corpus
-    val uni = big.groupBy("w1").agg(sum("cb").as("cu"))
-    val vocab = docs.select(explode(col("ts")).as("t"))
-      .agg(countDistinct("t").as("v"))
-    val scored = pairs
-      .join(big, Seq("w1", "w2"))
-      .join(uni, Seq("w1"))
-      .crossJoin(broadcast(vocab))
-      .withColumn("logp", log((col("cb") + lit(LmAlpha)).cast("double") /
-        (col("cu") + lit(LmAlpha) * col("v")).cast("double")))
-    scored.groupBy("doc_id", "lang")
-      .agg(count(lit(1)).as("n_pairs"),
-        aggregate(transform(array_sort(collect_list(struct(col("pos"), col("logp")))),
-          x => x.getField("logp")), lit(0.0), (a, x) => a + x).as("ll"))
-      .select(col("doc_id"), col("lang"), col("n_pairs"),
-        round(-col("ll") / col("n_pairs"), LmScoreDp).as("lm_score"))
-  }
+    graft.plans.Memo.shared(s, dir, "text.lmScore") {
+      val docs = Tables.documentsSpread(s, dir)
+        .select(col("doc_id"), col("lang"), tokens(col("text")).as("ts"))
+        .filter(size(col("ts")) >= 2)
+      val pairs = docs.select(col("doc_id"), col("lang"), posexplode(
+          transform(sequence(lit(0), size(col("ts")) - 2),
+            i => struct(element_at(col("ts"), i + 1).as("w1"),
+              element_at(col("ts"), i + 2).as("w2")))).as(Seq("pos", "pr")))
+        .select(col("doc_id"), col("lang"), col("pos"),
+          col("pr.w1").as("w1"), col("pr.w2").as("w2"))
+      val big = pairs.groupBy("w1", "w2").agg(count(lit(1)).as("cb"))
+      // history counts = Σ_w2 c(w1,w2), derived from the bigram model
+      // itself — never a second pass over the corpus
+      val uni = big.groupBy("w1").agg(sum("cb").as("cu"))
+      val vocab = docs.select(explode(col("ts")).as("t"))
+        .agg(countDistinct("t").as("v"))
+      val scored = pairs
+        .join(big, Seq("w1", "w2"))
+        .join(uni, Seq("w1"))
+        .crossJoin(broadcast(vocab))
+        .withColumn("logp", log((col("cb") + lit(LmAlpha)).cast("double") /
+          (col("cu") + lit(LmAlpha) * col("v")).cast("double")))
+      scored.groupBy("doc_id", "lang")
+        .agg(count(lit(1)).as("n_pairs"),
+          aggregate(transform(array_sort(collect_list(struct(col("pos"), col("logp")))),
+            x => x.getField("logp")), lit(0.0), (a, x) => a + x).as("ll"))
+        .select(col("doc_id"), col("lang"), col("n_pairs"),
+          round(-col("ll") / col("n_pairs"), LmScoreDp).as("lm_score"))
+    }
 
   /** Gopher quality-rule thresholds (Rae et al. 2021, "Scaling Language
     * Models", table A1 document-filter heuristics — public paper). Word

@@ -124,7 +124,7 @@ object SampleApp {
       .filter(org.apache.spark.sql.functions.col("pred_cur") === 1).count()
     val dsirKept = graft.operators.Classifier.dsirSelect(spark, sf, ordered = false).count()
     println(s"[sample] nb-gate kept=$nbKept dsir-resample kept=$dsirKept")
-    graft.operators.Classifier.releaseModelCache(spark, sf)
+    graft.plans.Memo.release(spark, sf)
     println(s"[sample] report lines=${graft.operators.ReportDoc.reportDoc(spark, sf).count()}")
     println(s"[sample] paged ingest tasks=${graft.sources.PagedTasks.pagedIngest(spark, sf).count()}")
     spark.stop()

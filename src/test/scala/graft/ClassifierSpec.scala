@@ -93,7 +93,7 @@ class ClassifierSpec extends AnyFunSuite {
     // separability: curated-only vocabulary scores positive, web-only negative
     assert(llr("codex") > 0 && llr("scroll") > 0)
     assert(llr("spam") < 0 && llr("popup") < 0)
-    Classifier.releaseModelCache(spark, dir)
+    graft.plans.Memo.release(spark, dir)
   }
 
   test("nb score + eval equal the reference; holdout separable corpus classifies cleanly") {
@@ -126,7 +126,7 @@ class ClassifierSpec extends AnyFunSuite {
       val np = rows.count(_._5 == 1).toLong
       assert(eval(isCur) === ((n, np, math.floor(np.toDouble / n * 1e4 + 0.5) / 1e4)))
     }
-    Classifier.releaseModelCache(spark, dir)
+    graft.plans.Memo.release(spark, dir)
   }
 
   // ----- plain-Scala reference DSIR ----------------------------------
@@ -199,7 +199,7 @@ class ClassifierSpec extends AnyFunSuite {
     val wantScores = Classifier.nbScore(spark, dir).collect().map(skey).toSeq
     assert(gotScores === wantScores,
       "live scoring under the merged model == the batch scoring pass")
-    Classifier.releaseModelCache(spark, dir)
+    graft.plans.Memo.release(spark, dir)
   }
 
   test("dsir select keeps exactly the docs at or above the snapped median weight") {
@@ -218,7 +218,7 @@ class ClassifierSpec extends AnyFunSuite {
     val cur = Classifier.CuratedSources.toSet
     assert(docs.filter(d => cur(d._3)).map(_._1).forall(got),
       "curated docs must survive the resampling step")
-    Classifier.releaseModelCache(spark, dir)
+    graft.plans.Memo.release(spark, dir)
   }
 
   test("streaming DSIR: merged bucket counts weight batches exactly like the batch operator") {
@@ -257,7 +257,7 @@ class ClassifierSpec extends AnyFunSuite {
     val filtIdx = plan.indexOf("Filter", genIdx)
     assert(genIdx >= 0 && filtIdx > genIdx,
       s"quality gate must evaluate under the explode:\n$plan")
-    Classifier.releaseModelCache(spark, dir)
+    graft.plans.Memo.release(spark, dir)
   }
 
   test("dsir scoring joins a broadcast-bounded feature table") {

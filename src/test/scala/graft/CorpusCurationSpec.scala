@@ -293,7 +293,7 @@ class CorpusCurationSpec extends AnyFunSuite {
     // convention: it receives nothing and its own mass drains)
     val loner = ranked.find(_._1 == "loner").get._2
     assert(loner === math.floor(CorpusCuration.PrJump / 5 * 1e9 + 0.5).toLong)
-    CorpusCuration.releaseCurationCache(spark, dir)
+    graft.plans.Memo.release(spark, dir)
   }
 
   // -------------------------------------------------------------------
@@ -847,7 +847,7 @@ class CorpusCurationSpec extends AnyFunSuite {
     val fullMatches = got.filter(_._2._1 == Dedup.MinhashA.size.toLong)
     assert(fullMatches.size >= 2000 * 3,
       s"family triples surface as exact matches, got ${fullMatches.size}")
-    CorpusCuration.releaseCurationCache(spark, dir)
+    graft.plans.Memo.release(spark, dir)
   }
 
   test("source overlap above the gate: df-capped, exact over the discriminative universe") {
@@ -895,6 +895,6 @@ class CorpusCurationSpec extends AnyFunSuite {
       s"planted pair phrases survive the cap: ${expect.size}")
     assert(got === expect,
       "capped operator == exact overlap restricted to df≤cap shingles")
-    CorpusCuration.releaseCurationCache(spark, dir)
+    graft.plans.Memo.release(spark, dir)
   }
 }

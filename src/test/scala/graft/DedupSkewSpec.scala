@@ -130,7 +130,7 @@ class DedupSkewSpec extends AnyFunSuite {
       Dedup.HotDetectSampleMod = 1L
       val mhPlain = pairSet(Dedup.minhashLsh(spark, dir))
       val shPlain = pairSet(Dedup.simhash(spark, dir))
-      Dedup.releaseShingleCache(spark, dir)
+      graft.plans.Memo.release(spark, dir)
       Dedup.HotBandBucketCap = 8L
       val mhSalted = pairSet(Dedup.minhashLsh(spark, dir))
       val shSalted = pairSet(Dedup.simhash(spark, dir))
@@ -145,7 +145,7 @@ class DedupSkewSpec extends AnyFunSuite {
     } finally {
       Dedup.HotBandBucketCap = old._1
       Dedup.HotDetectSampleMod = old._2
-      Dedup.releaseShingleCache(spark, dir)
+      graft.plans.Memo.release(spark, dir)
     }
   }
 

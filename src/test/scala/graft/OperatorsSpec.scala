@@ -334,6 +334,57 @@ class SkewRecallSpec extends org.scalatest.funsuite.AnyFunSuite {
     c2.unpersist()
     assert(c1.storageLevel === StorageLevel.NONE,
       "a second Memo.cached call must not have registered a second entry")
+
+    // Memo.shared holds the built frame per (session, dir, name)
+    import graft.plans.Memo
+    val (dirA, dirB) = ("memo-spec-a", "memo-spec-b")
+    var builds = Map.empty[String, Int].withDefaultValue(0)
+    def base(dir: String) = Memo.shared(spark, dir, "base") {
+      builds += s"$dir/base" -> (builds(s"$dir/base") + 1)
+      // a dir-specific plan, as a real dir's scan is
+      spark.range(50).toDF("id").select(col("id") * 3 as "memo_b", lit(dir) as "memo_dir")
+    }
+    // a nested build: the consumer's build looks up its input
+    def pairs(dir: String) = Memo.shared(spark, dir, "pairs") {
+      builds += s"$dir/pairs" -> (builds(s"$dir/pairs") + 1)
+      base(dir).filter(col("memo_b") % 2 === 0).select(col("memo_b") + 1 as "memo_p")
+    }
+    val p1 = pairs(dirA)
+    assert(p1.count() === 25L)
+    assert(p1.storageLevel === StorageLevel.MEMORY_AND_DISK)
+    assert(base(dirA).storageLevel === StorageLevel.MEMORY_AND_DISK)
+    // a hit returns the same object and never re-evaluates build
+    assert(pairs(dirA) eq p1)
+    assert(base(dirA) eq base(dirA))
+    assert(builds === Map(s"$dirA/base" -> 1, s"$dirA/pairs" -> 1))
+    val pB = pairs(dirB)
+    pB.count()
+
+    // release: consumers first (newest first), other dirs untouched
+    assert(Memo.heldNames(spark, dirA) === Seq("pairs", "base"))
+    val heldA = Seq(p1, base(dirA))
+    Memo.release(spark, dirA)
+    assert(heldA.forall(_.storageLevel == StorageLevel.NONE),
+      "release must unpersist every frame held for the dir")
+    assert(Memo.heldNames(spark, dirA).isEmpty)
+    assert(pB.storageLevel === StorageLevel.MEMORY_AND_DISK,
+      "release must leave another dir's frames cached")
+    val p2 = pairs(dirA)
+    assert(!(p2 eq p1), "the next lookup after release rebuilds")
+    assert(builds(s"$dirA/pairs") === 2 && builds(s"$dirA/base") === 2)
+
+    // an entry dropped behind Memo's back is re-persisted on a hit
+    val rows = p2.collect().toSeq
+    spark.catalog.clearCache()
+    assert(p2.storageLevel === StorageLevel.NONE)
+    val p3 = pairs(dirA)
+    assert(p3 eq p2)
+    assert(p3.storageLevel === StorageLevel.MEMORY_AND_DISK)
+    assert(p3.collect().toSeq === rows)
+    assert(builds(s"$dirA/pairs") === 2)
+    Memo.release(spark, dirA)
+    Memo.release(spark, dirB)
+    assert(pB.storageLevel === StorageLevel.NONE)
   }
 
   test("Lloyd training sample is deterministic, bounded, and identity below the cap") {

@@ -1,0 +1,103 @@
+#!/usr/bin/env python3
+"""A/B pairs of benchmark runs between two graft checkouts.
+
+Usage:
+  python3 tools/ab_pairs.py --base <checkout> --change <checkout>
+      --workload <name> --seeds 11-20 --out ab.json
+
+For each seed it runs `graftbench/run.py --trace 0` once in each checkout,
+one run at a time, alternating which side goes first (base first on the
+first seed). Every run's summary line is written to the --out JSON file as
+the runs finish. It then prints, for each end-to-end metric in
+BENCHMARK.json: both medians and quartiles, how many pairs the change won,
+and whether the claim rule holds (the change wins at least 9 of every 10
+pairs, and its median beats the base median by more than the base's
+interquartile range). It refuses to report if any run was incorrect or had
+failed ops. It only reads run.py's output.
+"""
+import argparse
+import json
+import os
+import statistics
+import subprocess
+import sys
+import time
+
+
+def seeds(spec):
+    lo, _, hi = spec.partition("-")
+    return list(range(int(lo), int(hi or lo) + 1))
+
+
+def run(checkout, workload, seed, seconds):
+    p = subprocess.run([sys.executable, os.path.join(checkout, "graftbench", "run.py"),
+                        "--workload", workload, "--seed", str(seed),
+                        "--seconds", str(seconds), "--trace", "0"],
+                       cwd=checkout, capture_output=True, text=True)
+    if p.returncode != 0:
+        sys.stderr.write(p.stderr[-3000:])
+        sys.exit(f"{checkout} seed {seed}: exit {p.returncode}")
+    return json.loads(p.stdout.strip().splitlines()[-1])
+
+
+def quartiles(xs):
+    if len(xs) < 2:
+        return xs[0], xs[0]
+    q1, _, q3 = statistics.quantiles(xs, n=4)
+    return q1, q3
+
+
+def main():
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--base", required=True, help="checkout of the parent commit")
+    ap.add_argument("--change", required=True, help="checkout of the change")
+    ap.add_argument("--workload", required=True)
+    ap.add_argument("--seeds", required=True, help="e.g. 11-20")
+    ap.add_argument("--out", required=True, help="JSON file for every run's summary line")
+    a = ap.parse_args()
+    bench = json.load(open(os.path.join(a.base, "BENCHMARK.json")))
+    sides = {"base": os.path.abspath(a.base), "change": os.path.abspath(a.change)}
+    runs = []
+    for i, seed in enumerate(seeds(a.seeds)):
+        order = ["base", "change"] if i % 2 == 0 else ["change", "base"]
+        for side in order:
+            t = time.time()
+            summary = run(sides[side], a.workload, seed, bench["run_seconds"])
+            runs.append({"workload": a.workload, "seed": seed, "side": side,
+                         "first": side == order[0], "summary": summary})
+            with open(a.out, "w") as fh:
+                json.dump(runs, fh, indent=1)
+            print(f"seed {seed} {side}: correct={summary['correct']} "
+                  f"failed={summary['failed']} wall={time.time() - t:.1f}s", flush=True)
+
+    bad = [r for r in runs if not r["summary"]["correct"] or r["summary"]["failed"]]
+    if bad:
+        for r in bad:
+            print(f"seed {r['seed']} {r['side']}: correct={r['summary']['correct']} "
+                  f"failed={r['summary']['failed']}")
+        sys.exit("refusing to report: a run was incorrect or had failed ops")
+
+    pairs = len(runs) // 2
+    print(f"{a.workload}: {pairs} pairs, seeds {a.seeds}")
+    print(f"{'metric':12s} {'base med [q1, q3]':>34s} {'change med [q1, q3]':>34s} "
+          f"{'delta':>7s} {'wins':>6s}  rule")
+    for m in bench["end_to_end"]:
+        name, lower = m["name"], m["better"] == "lower"
+        val = {(r["seed"], r["side"]): r["summary"]["metrics"][name]["value"] for r in runs}
+        by_side = {side: [val[(s, side)] for s in seeds(a.seeds)] for side in sides}
+        wins = sum(1 for s in seeds(a.seeds)
+                   if (val[(s, "change")] < val[(s, "base")]) == lower
+                   and val[(s, "change")] != val[(s, "base")])
+        med = {side: statistics.median(xs) for side, xs in by_side.items()}
+        qs = {side: quartiles(xs) for side, xs in by_side.items()}
+        gain = (med["base"] - med["change"]) if lower else (med["change"] - med["base"])
+        iqr = qs["base"][1] - qs["base"][0]
+        holds = wins * 10 >= 9 * pairs and gain > iqr
+        cell = {side: f"{med[side]:.4f} [{qs[side][0]:.4f}, {qs[side][1]:.4f}]" for side in sides}
+        delta = (med["change"] - med["base"]) / med["base"] if med["base"] else 0.0
+        print(f"{name:12s} {cell['base']:>34s} {cell['change']:>34s} {delta:+7.1%} "
+              f"{wins:>2d}/{pairs:<3d}  {'holds' if holds else 'no'}")
+
+
+if __name__ == "__main__":
+    main()
