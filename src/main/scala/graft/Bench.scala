@@ -11,7 +11,7 @@ object Bench {
     * overflowed (1538 chars worst-case), so the line now carries only
     * the [[LineTopK]] slowest queries plus every failure (negative
     * value = the alarm) and an "nq" count; the COMPLETE per-query
-    * wall+cpu map with full names goes to `bench_detail.json`. The
+    * wall+cpu map with full names goes to the [[detailFile]]. The
     * budget is now catalog-size-INDEPENDENT — BenchLineSpec pins
     * uniqueness and the worst-case length.
     */
@@ -135,22 +135,17 @@ object Bench {
     "shared_text_pipeline" -> ((s, d) => graft.operators.TextAnalysis.warmPipelineCache(s, d)),
     "shared_unigram_model" -> ((s, d) => graft.operators.Unigram.warmModelCache(s, d)))
 
-  /** Releases the session-persisted frames [[SharedBuilds]] warm, once a
-    * run's query loop is done (cache hygiene for any embedding process
-    * that keeps the session alive): the held shared frames, then the
-    * two driver-side model memos.
+  /** Per-(sf, cpus) detail file, e.g. `bench_detail_sf0.1_c8.json`:
+    * a capture never overwrites another scale's or core count's.
     */
-  private[graft] def releaseShared(s: SparkSession, dir: String): Unit = {
-    graft.plans.Memo.release(s, dir)
-    graft.operators.Bpe.releaseLearnedCache(s, dir)
-    graft.operators.Unigram.releaseModelCache(s, dir)
-  }
+  private[graft] def detailFile(sfName: String, cpus: Int): java.nio.file.Path =
+    java.nio.file.Paths.get(s"bench_detail_${sfName}_c$cpus.json")
 
   private[graft] def shortKey(name: String): String =
     ShortKey.getOrElse(name, name.stripPrefix("q_"))
 
   /** Slowest-queries count carried on the stdout line (the heads anyone
-    * reads first; the full map is in bench_detail.json).
+    * reads first; the full map is in the detail file).
     */
   private[graft] val LineTopK = 12
 
@@ -165,7 +160,7 @@ object Bench {
 
   /** 1-min load-average ceiling for an honest capture. Above it the
     * bench marks its output contaminated ("ctm":1 on the line,
-    * "contaminated": true in bench_detail.json) rather than refusing:
+    * "contaminated": true in the detail file) rather than refusing:
     * the driver's per-round capture must always produce a line, but a
     * loaded-start capture must never be read as a comparable absolute
     * number (the r14/r15 cross-round comparisons were rescued only by
@@ -198,7 +193,7 @@ object Bench {
     // [[WaitIdleCapMs]] elapses — BEFORE the session/warmup work, so
     // the wait costs nothing but wall time. gateLoad is the load the
     // TIMED run actually started into; waitedSec records the pause
-    // (both land in bench_detail.json, "wt" on the line).
+    // (both land in the detail file, "wt" on the line).
     var gateLoad = entryLoad
     val waitT0 = System.nanoTime()
     while (gateLoad > LoadGate &&
@@ -238,33 +233,8 @@ object Bench {
         .select(graft.plans.ArrayOps.dotF(col("embedding"), col("embedding")).as("d"))
         .agg(sum("d")))
     }
-    // Executor CPU time per query via a listener: under machine
-    // contention wall time inflates while cpu stays plan-proportional,
-    // so cpu-vs-wall is the signal that separates a plan regression
-    // from a noisy environment (the r5 driver capture recorded 303 s
-    // of contention that read as a 3x regression). The bus is async —
-    // drain it at each query boundary so attribution doesn't bleed.
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong
-    // bytesRead + GC separate a RECOMPUTE from CONTENTION after the
-    // fact: a silently-evicted shared frame re-reads the corpus
-    // (bytesRead jumps to scan size) while ambient machine load only
-    // inflates cpu/wall at unchanged bytes (the r10 driver capture's
-    // d–f window read 3–7x cpu on UNCHANGED code and was unreproducible
-    // idle — these columns make that diagnosis one diff, not a round).
-    val gcMs = new java.util.concurrent.atomic.AtomicLong
-    val readB = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) {
-          cpuNs.addAndGet(m.executorCpuTime)
-          gcMs.addAndGet(m.jvmGCTime)
-          readB.addAndGet(m.inputMetrics.bytesRead)
-        }
-      }
-    })
-    def drain(): Unit =
-      org.apache.spark.GraftSparkBridge.drainListenerBus(spark.sparkContext)
+    // per-query executor cpu, gc and bytes read (see Meter)
+    val meter = new Meter(spark.sparkContext)
     val osBean = java.lang.management.ManagementFactory.getOperatingSystemMXBean
     // noop sink forces the FULL plan (count() would let Catalyst prune
     // the projections being measured).
@@ -274,26 +244,17 @@ object Bench {
     // magnitude caps at one digit to keep the worst-case line width
     // inside the driver's tail window as the catalog grows; a
     // sub-50-ms analysis failure survives the 1-dp trim as "-0.1",
-    // never "-0", and the true elapsed time is in bench_detail.json)
+    // never "-0", and the true elapsed time is in the detail file)
     def measure(name: String)(run: => Unit): (String, Double, Double, Double, Long) = {
-      drain()
-      val c0 = cpuNs.get
-      val g0 = gcMs.get
-      val r0 = readB.get
-      val t0 = System.nanoTime()
-      val ok =
-        try { run; true }
-        catch { case e: Throwable => System.err.println(s"[bench] $name: $e"); false }
-      val dt = (System.nanoTime() - t0) / 1e9
-      drain()
-      val cpu = (cpuNs.get - c0) / 1e9
-      val gc = (gcMs.get - g0) / 1e3
-      val rb = readB.get - r0
+      val m = meter.measure(run)
+      m.error.foreach(e => System.err.println(s"[bench] $name: $e"))
+      val dt = m.wallS
       // per-query value clamped to ±99.9: a >100 s query at sf0.1 is a
       // catastrophe either way, and the cap bounds the JSON line width
       // (the driver tail-captures ~2000 chars — BenchLineSpec)
       val clamped = math.min(dt, 99.9)
-      (name, if (ok) clamped else -math.min(math.max(dt, 0.1), 9.9), cpu, gc, rb)
+      (name, if (m.error.isEmpty) clamped else -math.min(math.max(dt, 0.1), 9.9),
+        m.cpuS, m.gcS, m.readBytes)
     }
     // shared builds first (attributed pseudo-entries), then the catalog
     // in SORTED name order — deterministic attribution round-over-round
@@ -310,7 +271,7 @@ object Bench {
     // per-query times at 1 dp with trailing zeros trimmed, total at
     // 2 dp. Aggregate cpu seconds + load averages ride the line as the
     // contention indicators; the per-query cpu detail (with FULL query
-    // names) goes to bench_detail.json beside the repo.
+    // names) goes to the detail file beside the repo.
     def fmt(dp: Int)(v: Double): String = {
       val s = if (dp == 1) f"$v%.1f" else f"$v%.2f"
       if (s.contains('.')) s.reverse.dropWhile(_ == '0').stripPrefix(".").reverse else s
@@ -322,7 +283,7 @@ object Bench {
     // failure still reads as one even when most names are elided —
     // an uncapped failure list at catalog scale was itself a window
     // overflow); the complete per-query map lives in
-    // bench_detail.json, and "nq" says how many catalog queries ran.
+    // the detail file, and "nq" says how many catalog queries ran.
     val fails = results.filter(_._2 < 0)
     val lineEntries = fails.take(LineFailCap) ++
       results.filter(_._2 >= 0).sortBy(-_._2).take(LineTopK)
@@ -330,7 +291,9 @@ object Bench {
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(r => math.abs(r._2)).sum else 0.0
     val cpuTotal = results.map(_._3).sum
-    releaseShared(spark, sfDir)
+    // cache hygiene for any embedding process that keeps the session
+    // alive: drop everything the run derived from the dir
+    graft.plans.Memo.release(spark, sfDir)
     val load1 = osBean.getSystemLoadAverage
     // Idle-capture gate (r16): absolute bench numbers captured under
     // ambient machine load are not comparable round-over-round
@@ -338,7 +301,7 @@ object Bench {
     // same-machine A/B had to rescue the comparison). The bench must
     // still produce a line — the driver's capture can't be refused —
     // so a loaded start MARKS the capture instead: "ctm":1 on the
-    // stdout line and "contaminated": true in bench_detail.json are
+    // stdout line and "contaminated": true in the detail file are
     // the explicit do-not-compare flag.
     val contaminated = gateLoad > LoadGate
     // sf as the basename only ("sf0.1"), not the full path: every char
@@ -356,8 +319,7 @@ object Bench {
       s"""{\n "sf": "$sfName", "cpus": $cpus, "load": [$gateLoad, $load1], "contaminated": $contaminated,""" +
       s""" "entry_load": $entryLoad, "wait_sec": ${f"$waitedSec%.1f"},\n "queries": {\n""",
       ",\n", "\n }\n}\n")
-    try java.nio.file.Files.write(java.nio.file.Paths.get("bench_detail.json"),
-      detail.getBytes("UTF-8"))
+    try java.nio.file.Files.write(detailFile(sfName, cpus), detail.getBytes("UTF-8"))
     catch { case e: Throwable => System.err.println(s"[bench] detail write: $e") }
     // Stop Spark BEFORE printing so shutdown-time log lines can't land
     // after the JSON and push it out of a last-line/tail parse.

@@ -1,5 +1,6 @@
 package graft
 
+import graft.plans.Memo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.jdk.CollectionConverters._
 
@@ -21,19 +22,11 @@ object Tables {
     * footers to resolve the schema EVERY call — across an 80-query
     * catalog that re-resolution is pure per-query overhead. The
     * testdata dirs are immutable for a session's lifetime, so the
-    * resolved (and analyzed) DataFrame is reused; keyed by session so
-    * concurrent sessions never share plans.
+    * resolved (and analyzed) DataFrame is reused; held per session in
+    * [[Memo]] so concurrent sessions never share plans.
     */
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-  private def load(s: SparkSession, dir: String, name: String): DataFrame = {
-    // lazily evict entries whose session was stopped — otherwise the
-    // static map would pin dead sessions (and their plan graphs) for
-    // the JVM lifetime in a process that cycles sessions
-    memo.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    memo.computeIfAbsent((s, p(dir, name)),
-      { case (ss, path) => ss.read.parquet(path) })
-  }
+  private def load(s: SparkSession, dir: String, name: String): DataFrame =
+    Memo.value(s, dir, s"table.$name")(s.read.parquet(p(dir, name)))
 
   def region(s: SparkSession, dir: String): DataFrame   = load(s, dir, "region")
   def nation(s: SparkSession, dir: String): DataFrame   = load(s, dir, "nation")
@@ -55,14 +48,14 @@ object Tables {
   def events(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{LongType, TimestampType}
-    memo.computeIfAbsent((s, p(dir, "events") + "#norm"),
-      { case (ss, _) =>
-          val raw = ss.read.parquet(p(dir, "events"))
-          raw.schema("ts").dataType match {
-            case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-            case TimestampType => raw
-            case _ => raw.withColumn("ts", col("ts").cast(TimestampType))
-          } })
+    Memo.value(s, dir, "table.events.norm") {
+      val raw = s.read.parquet(p(dir, "events"))
+      raw.schema("ts").dataType match {
+        case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+        case TimestampType => raw
+        case _ => raw.withColumn("ts", col("ts").cast(TimestampType))
+      }
+    }
   }
   def documents(s: SparkSession, dir: String): DataFrame  = load(s, dir, "documents")
   def embeddings(s: SparkSession, dir: String): DataFrame = load(s, dir, "embeddings")
@@ -82,18 +75,12 @@ object Tables {
     * 100 TB corpus has row groups ≫ cores and must NEVER pay a
     * corpus-wide shuffle for a map-only pass.
     */
-  def documentsSpread(s: SparkSession, dir: String): DataFrame = {
-    // resolve the base OUTSIDE the memo lambda: a nested computeIfAbsent
-    // on the same ConcurrentHashMap throws "Recursive update"
-    val base = documents(s, dir)
-    memo.computeIfAbsent((s, p(dir, "documents") + "#spread"),
-      { case (ss, _) => spreadIfNarrow(ss, base, p(dir, "documents")) })
-  }
-  def embeddingsSpread(s: SparkSession, dir: String): DataFrame = {
-    val base = embeddings(s, dir)
-    memo.computeIfAbsent((s, p(dir, "embeddings") + "#spread"),
-      { case (ss, _) => spreadIfNarrow(ss, base, p(dir, "embeddings")) })
-  }
+  def documentsSpread(s: SparkSession, dir: String): DataFrame =
+    Memo.value(s, dir, "table.documents.spread")(
+      spreadIfNarrow(s, documents(s, dir), p(dir, "documents")))
+  def embeddingsSpread(s: SparkSession, dir: String): DataFrame =
+    Memo.value(s, dir, "table.embeddings.spread")(
+      spreadIfNarrow(s, embeddings(s, dir), p(dir, "embeddings")))
 
   /** Rows per spread partition: the exchange width is derived from the
     * INPUT SIZE (⌈rows / SpreadRowsPerTask⌉, clamped to [2, cores]) —
@@ -172,16 +159,16 @@ object Tables {
     * made.
     */
   private[graft] val RowGroupFileCap = 64
-  private val rgMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (Int, Long)]
   private[graft] def rowGroups(s: SparkSession, path: String): Int =
     layout(s, path)._1
-  /** (row groups, total rows) under `path` — one footer pass, memoized.
+  /** (row groups, total rows) under `path` — one footer pass, memoized
+    * under the path's parent dir, so releasing the dir drops it.
     * The >cap short-circuit reports (MaxValue, MaxValue): many files ⇒
     * wide ⇒ the spread never fires, so neither number is consulted.
     */
-  private[graft] def layout(s: SparkSession, path: String): (Int, Long) =
-    rgMemo.computeIfAbsent(path, { _ =>
+  private[graft] def layout(s: SparkSession, path: String): (Int, Long) = {
+    val cut = path.lastIndexOf('/')
+    Memo.value(s, path.take(cut), "layout." + path.drop(cut + 1)) {
       val conf = s.sparkContext.hadoopConfiguration
       val hp = new org.apache.hadoop.fs.Path(path)
       val fs = hp.getFileSystem(conf)
@@ -200,5 +187,6 @@ object Tables {
           r.getFooter.getBlocks.asScala.map(_.getRowCount).sum)
         finally r.close()
       }.foldLeft((0, 0L)) { case ((g, n), (g2, n2)) => (g + g2, n + n2) }
-    })
+    }
+  }
 }

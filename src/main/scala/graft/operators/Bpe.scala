@@ -55,19 +55,6 @@ object Bpe {
 
   private val SymSep = "  " // between wrapped symbols
 
-  /** Session-scoped memo of the learner's result per (session, dir):
-    * both halves are BOUNDED driver state ([[BpeRounds]] merge tuples
-    * + [[VocabTopK]] vocab rows), so caching them is the Lloyd-
-    * training memoization class — without it, each of the three BPE
-    * queries re-pays the corpus word-count shuffle and the thirty
-    * vocab-frame rounds. Deterministic, so caching cannot change any
-    * result; released by [[releaseLearnedCache]] (Verify/Bench call
-    * it after their loops, mirroring the pipeline cache).
-    */
-  private val learnedCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String),
-           (Seq[(Int, String, String, String, Long)], Seq[(String, Long)])]
-
   /** Distinct-word bound for the driver-local learner fast path (r16
     * opt): the [[BpeRounds]] rounds operate on the VOCABULARY frame
     * (one (rep, n) row per distinct word), and each distributed round
@@ -90,10 +77,19 @@ object Bpe {
     * One learner run computes both: the vocab aggregation is one more
     * pass over the still-persisted vocabulary frame (or the collected
     * word array on the bounded local path).
+    *
+    * The memo is a [[graft.plans.Memo.value]] per (session, dir): both
+    * halves are BOUNDED driver state ([[BpeRounds]] merge tuples +
+    * [[VocabTopK]] vocab rows), so caching them is the Lloyd-training
+    * memoization class — without it, each of the three BPE queries
+    * re-pays the corpus word-count shuffle and the thirty vocab-frame
+    * rounds. Deterministic, so caching cannot change any result;
+    * released by [[graft.plans.Memo.release]] (Verify/Bench call it
+    * after their loops).
     */
   private def learned(s: SparkSession, dir: String)
       : (Seq[(Int, String, String, String, Long)], Seq[(String, Long)]) =
-    learnedCache.getOrElseUpdate((s, dir), {
+    graft.plans.Memo.value(s, dir, "bpe.learned") {
       val words = wordCounts(s, dir).persist()
       try {
         if (words.count() <= LocalVocabCap)
@@ -111,7 +107,7 @@ object Bpe {
           (merges, vocab)
         }
       } finally { words.unpersist(); () }
-    })
+    }
 
   /** The driver-local rounds over a collected (rep, n) vocabulary —
     * the same algorithm as [[learnDistributed]] statement for
@@ -157,10 +153,6 @@ object Bpe {
       .sortBy { case (sw, f) => (-f, sw) }.take(VocabTopK)
     (merges.result(), vocab)
   }
-
-  /** Drop the session-scoped learner memo for `dir`. */
-  def releaseLearnedCache(s: SparkSession, dir: String): Unit =
-    learnedCache.remove((s, dir))
 
   /** Materialize the shared encode frame now, for Bench's `shared_`
     * attribution (the encode/persisted/fertility entries then ride the

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.plans.{ArrayOps, CentroidOps}
+import graft.plans.{ArrayOps, CentroidOps, Memo}
 
 /** Graph-based ANN (`q_ann_hnsw_topk`) — the OTHER production index
   * family beside quantization (HNSW is the pgvector/Qdrant default),
@@ -170,12 +170,9 @@ object GraphAnn {
     Graph(ids, vecs, norms, adj.map(_.sorted.toArray))
   }
 
-  /** Memoized per table dir (the cbMemo/centsMemo contract). */
-  private val graphMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Graph]()
-
+  /** Memoized per table dir (the [[Similarity.pqCodebook]] contract). */
   private[graft] def graph(s: SparkSession, dir: String): Graph =
-    graphMemo.computeIfAbsent(dir, _ => buildFromSample(s, dir,
+    Memo.value(s, dir, "graphAnn.graph")(buildFromSample(s, dir,
       Similarity.TrainSampleCap))
 
   private def buildFromSample(s: SparkSession, dir: String,
@@ -205,11 +202,8 @@ object GraphAnn {
     */
   val BucketedProbeNodes = 8
 
-  private val bucketedGraphMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Graph]()
-
   private[graft] def bucketedGraph(s: SparkSession, dir: String): Graph =
-    bucketedGraphMemo.computeIfAbsent(dir, _ => buildFromSample(s, dir,
+    Memo.value(s, dir, "graphAnn.bucketedGraph")(buildFromSample(s, dir,
       BucketedNodeCap))
 
   /** The closure-regime search gated by `ann_hnsw_bucketed_recall5`:

@@ -123,8 +123,8 @@ object RecallReport {
     // CONCURRENTLY: each is an independent bounded job and the report
     // otherwise serializes ~11 sub-second searches into the catalog's
     // most expensive entry (measured 11 s at sf0.1). Spark actions are
-    // thread-safe; every per-dir memo the variants touch is a
-    // ConcurrentHashMap or a Memo.shared frame.
+    // thread-safe; every per-dir memo the variants touch goes through
+    // graft.plans.Memo.
     val gates = annGates(s, dir)
     gates.map(_._3).distinct.foreach(baseline)
     import scala.concurrent.{Await, Future, ExecutionContext}
@@ -185,16 +185,13 @@ object RecallReport {
 
   /** Measurement memo: the measurements are a pure function of the
     * table dir (every gated operator is deterministic per dir — the
-    * cbMemo/centsMemo contract), so one full pass per JVM serves every
-    * consumer (the catalog query, the spec's margin printout, repeat
-    * Verify/Bench invocations, the trip-mechanism test) instead of
-    * re-running the whole ANN family per call.
+    * Similarity.pqCodebook contract), so one full pass per session
+    * serves every consumer (the catalog query, the spec's margin
+    * printout, repeat Verify/Bench invocations, the trip-mechanism
+    * test) instead of re-running the whole ANN family per call.
     */
-  private val measuredMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Int)]]()
-
   private[graft] def measuredCached(s: SparkSession, dir: String): Seq[(String, Int)] =
-    measuredMemo.computeIfAbsent(dir, _ => measured(s, dir))
+    graft.plans.Memo.value(s, dir, "recall.measured")(measured(s, dir))
 
   /** Verdicts against an explicit threshold set — the injection seam
     * the spec uses to PROVE the gate trips (a threshold the corpus

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.plans.{ArrayOps, CentroidOps, PqOps}
+import graft.plans.{ArrayOps, CentroidOps, Memo, PqOps}
 
 /** Similarity search over the embeddings corpus (SURVEY §2.5) and
   * embedding-cosine near-dup (§2.4 #28).
@@ -472,17 +472,14 @@ object Similarity {
     * 64 dims × 4 B ≈ 8 MB of centroid matrix — bounded METADATA (the
     * same class of collect as the PQ codebook), not data movement.
     */
-  /** Memoized per table dir (the cbMemo/sampleMemo contract: a pure
+  /** Memoized per table dir (the [[pqCodebook]] contract: a pure
     * function of the dir, so one count + one collect per session per
     * corpus instead of two jobs per CONSUMER — the seeded set now has
     * seven consumers across the IVF/SemDeDup/cluster-curation family,
     * and at production scale each saved count() is a corpus scan).
     */
-  private val centsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Int, Array[Float], Double)]]()
-
   private[graft] def seededCentroids(s: SparkSession, dir: String): Seq[(Int, Array[Float], Double)] =
-    centsMemo.computeIfAbsent(dir, _ => {
+    Memo.value(s, dir, "similarity.seededCentroids") {
       val n = normed(s, dir)
       val total = n.count()
       val stride = math.max(IvfCentroidMod.toLong, math.round(math.sqrt(total.toDouble)))
@@ -492,7 +489,7 @@ object Similarity {
         .collect()
         .map(r => (r.getLong(0).toInt, r.getSeq[Float](1).toArray, r.getDouble(2)))
         .toSeq
-    })
+    }
 
   /** Corpus→cell assignment as a ZERO-SHUFFLE map: the codegen'd
     * argmin expression scores every centroid inside the scan projection
@@ -647,18 +644,16 @@ object Similarity {
     * same sequential double accumulation as FloatArrayDot — scores
     * match the former DataFrame-side sqrt(dotF(c,c)) bit-for-bit.
     */
-  private val learnedMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Int, Array[Float], Double)]]()
-
   private[graft] def learnedCentroidsWithNorms(s: SparkSession, dir: String)
       : Seq[(Int, Array[Float], Double)] =
-    learnedMemo.computeIfAbsent(dir, _ =>
+    Memo.value(s, dir, "similarity.learnedCentroids") {
       learnedCentroids(s, dir).map { case (id, v) =>
         var ss = 0.0
         var j = 0
         while (j < v.length) { ss += v(j).toDouble * v(j).toDouble; j += 1 }
         (id, v, math.sqrt(ss))
-      })
+      }
+    }
 
   /** §2.5 #31b — IVF with LEARNED centroids (k-means-lite): same probe
     * and rerank shape as the seeded variant, but cells reflect the data
@@ -690,26 +685,15 @@ object Similarity {
     */
   val PqRerank = 320
 
-  /** Codebook memo: the codebook is a pure function of the table dir
-    * (deterministic sample, seeds, and iteration order), so one
-    * training per JVM serves every query over that dir — the PQ and
-    * IVF-PQ entries (and repeat invocations) share it instead of each
-    * re-running the Lloyd rounds.
-    */
-  private val cbMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Float]]()
-
   /** Collected training sample, memoized per table dir (vec_id order,
     * deterministic): one collect serves the PQ codebook AND the learned
     * IVF centroids. Bounded by TrainSampleCap × Dim floats (≤ 2 MB).
     */
-  private val sampleMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Float]]]()
-
   private[graft] def trainSampleLocal(s: SparkSession, dir: String): Array[Array[Float]] =
-    sampleMemo.computeIfAbsent(dir, _ =>
+    Memo.value(s, dir, "similarity.trainSample") {
       trainingSample(normed(s, dir)).orderBy("vec_id")
-        .select("e").collect().map(_.getSeq[Float](0).toArray))
+        .select("e").collect().map(_.getSeq[Float](0).toArray)
+    }
 
   /** Product-quantization codebooks. The cluster's share of the work is
     * exactly the bounded-sample selection (`trainingSample`, ≤ 8192
@@ -721,9 +705,15 @@ object Similarity {
     * aggregate the same ≤ 8192 rows. Seeds are the first PqK sample
     * vectors (== vec_id < PqK at every shipped SF, where the sample is
     * the whole corpus); empty cells keep their previous centroid.
+    *
+    * Memoized: the codebook is a pure function of the table dir
+    * (deterministic sample, seeds, and iteration order), so one
+    * training per session serves every query over that dir — the PQ
+    * and IVF-PQ entries (and repeat invocations) share it instead of
+    * each re-running the Lloyd rounds.
     */
   private[graft] def pqCodebook(s: SparkSession, dir: String): Array[Float] =
-    cbMemo.computeIfAbsent(dir, _ => trainPqLocal(trainSampleLocal(s, dir)))
+    Memo.value(s, dir, "similarity.pqCodebook")(trainPqLocal(trainSampleLocal(s, dir)))
 
   /** OPQ-NP refinement rounds after the eigen-allocation init (each is
     * one Lloyd training + one Procrustes solve on the bounded sample —
@@ -734,12 +724,10 @@ object Similarity {
   /** (rotation, codebook) memo — same per-dir determinism contract as
     * [[pqCodebook]]; one training serves every OPQ query over the dir.
     */
-  private val opqMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (Array[Double], Array[Float])]()
-
   private[graft] def opqTrained(s: SparkSession, dir: String): (Array[Double], Array[Float]) =
-    opqMemo.computeIfAbsent(dir, _ =>
-      Opq.train(trainSampleLocal(s, dir), PqM, PqK, PqDsub, trainPqLocal, OpqNpIters))
+    Memo.value(s, dir, "similarity.opq") {
+      Opq.train(trainSampleLocal(s, dir), PqM, PqK, PqDsub, trainPqLocal, OpqNpIters)
+    }
 
   /** Driver-local Lloyd rounds; assignment semantics identical to
     * PqEncode (argmin-L2 per subspace, ties to the lower code).
@@ -937,11 +925,8 @@ object Similarity {
     * (symmetric signed SQ8), w[d] = floor(scale[d]²·1e12 + 0.5) — the
     * integer weight [[graft.plans.SqDotW]] scores with.
     */
-  private val sqMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (Array[Double], Array[Long])]()
-
   private[graft] def sqTrained(s: SparkSession, dir: String): (Array[Double], Array[Long]) =
-    sqMemo.computeIfAbsent(dir, _ => {
+    Memo.value(s, dir, "similarity.sq") {
       val sample = trainSampleLocal(s, dir)
       val scales = Array.tabulate(Dim) { d =>
         var m = 0.0
@@ -950,7 +935,7 @@ object Similarity {
       }
       val w = scales.map(sc => math.floor(sc * sc * 1e12 + 0.5).toLong)
       (scales, w)
-    })
+    }
 
   /** §2.5 — SQ8 ANN with exact rerank (`q_ann_sq_topk`), the catalog's
     * first FULL-ORACLE accelerated search path: the corpus is scanned

@@ -54,27 +54,22 @@ object Unigram {
       .select(explode(TextFunctions.tokens(col("text"))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("cnt"))
 
-  /** Session-scoped memo per (session, dir): the BOUNDED vocab rows
-    * (driver state, ≤ SeedSize + alphabet) and the DISTRIBUTED
-    * session-persisted word-segmentation frame (word, cnt, pieces) —
-    * vocabulary-scale, so it must NOT be collected (the shingle-cache
-    * pattern, released by [[releaseModelCache]]).
-    */
-  private val modelCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (Seq[(String, Long, Long)], DataFrame)]
-
-  def releaseModelCache(s: SparkSession, dir: String): Unit =
-    modelCache.remove((s, dir)).foreach(_._2.unpersist(blocking = false))
-
   /** Run the memoized unigram-LM build now (vocab + segmentation
     * frame, materialized inside) for Bench's `shared_` attribution.
     */
   private[graft] def warmModelCache(s: SparkSession, dir: String): Unit =
     model(s, dir)
 
+  /** Session-scoped memo per (session, dir): the BOUNDED vocab rows
+    * (driver state, ≤ SeedSize + alphabet) and the DISTRIBUTED
+    * word-segmentation frame (word, cnt, pieces) — vocabulary-scale,
+    * so it must NOT be collected: it is a [[graft.plans.Memo.shared]]
+    * frame (the shingle-cache pattern, released by
+    * [[graft.plans.Memo.release]]).
+    */
   private def model(s: SparkSession, dir: String)
       : (Seq[(String, Long, Long)], DataFrame) =
-    modelCache.getOrElseUpdate((s, dir), {
+    graft.plans.Memo.value(s, dir, "unigram.model") {
       val wc = wordCounts(s, dir)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // candidate substrings (length 1..MaxPieceLen, every occurrence,
@@ -106,14 +101,15 @@ object Unigram {
       // Viterbi per DISTINCT word: a typed map over the vocab-bounded
       // word frame with the ≤84-entry cost table in the closure
       import s.implicits._
-      val seg = wc.as[(String, Long)].map { case (w, cnt) =>
-        (w, cnt, segmentWord(w, costs))
-      }.toDF("w", "cnt", "pieces")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val seg = graft.plans.Memo.shared(s, dir, "unigram.segmentation") {
+        wc.as[(String, Long)].map { case (w, cnt) =>
+          (w, cnt, segmentWord(w, costs))
+        }.toDF("w", "cnt", "pieces")
+      }
       seg.count() // materialize before dropping the word-count cache
       wc.unpersist(blocking = false)
       (vocab, seg)
-    })
+    }
 
   /** The Viterbi DP (shared with the spec's local reference): returns
     * the piece sequence, or an EMPTY sequence for over-length words

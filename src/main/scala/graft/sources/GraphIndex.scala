@@ -170,11 +170,8 @@ object GraphIndex {
   }
 
   /** Sidecar graph, memoized per root (pure function of the artifact). */
-  private val sidecarMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, GraphAnn.Graph]()
-
   private[graft] def sidecarGraph(s: SparkSession, root: String): GraphAnn.Graph =
-    sidecarMemo.computeIfAbsent(root, _ => graphFrom(s.read.parquet(s"$root/meta")))
+    graft.plans.Memo.value(s, root, "graphIndex.sidecar")(graphFrom(s.read.parquet(s"$root/meta")))
 
   private def graphFrom(meta: DataFrame): GraphAnn.Graph = {
     val r = meta.head()

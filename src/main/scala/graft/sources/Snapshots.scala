@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.plans.Memo
 
 /** Manifest-versioned dataset with time-travel reads — the minimal
   * lakehouse snapshot contract a training pipeline needs: a run that
@@ -3404,8 +3405,10 @@ object Snapshots {
     * every catalog lookup, twice once the scan twin primes the
     * fixture through this entry).
     */
-  private val pruneCutMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private def pruneCut(s: SparkSession, dir: String): Long =
+    Memo.value(s, dir, "snapshots.pruneCut") {
+      Tables.documents(s, dir).agg(max(col("doc_id"))).head().getLong(0) * 3 / 4
+    }
 
   def snapshotReadPruned(s: SparkSession, dir: String): DataFrame = {
     val root = ScopedFixture.root(s, "graft_snapstats", dir)
@@ -3417,10 +3420,8 @@ object Snapshots {
       append(s, root, ranged(docs.filter(pmod(col("doc_id"), lit(2)) === 1)))
       ScopedFixture.markComplete(root)
     }
-    val cut: Long = pruneCutMemo.computeIfAbsent(root, _ =>
-      docs.agg(max(col("doc_id"))).head().getLong(0) * 3 / 4)
     perSourceTokenTotals(readWhere(s, root, latestVersion(s, root),
-      Seq(StatsPred.GtEq("doc_id", cut))))
+      Seq(StatsPred.GtEq("doc_id", pruneCut(s, dir)))))
   }
 
   val snapshotReadPrunedOracleSql: String =
@@ -3438,21 +3439,14 @@ object Snapshots {
   def snapshotScanPruned(s: SparkSession, dir: String): DataFrame = {
     snapshotReadPruned(s, dir) // fixture builds eagerly inside (marker-skipped)
     val root = ScopedFixture.root(s, "graft_snapstats", dir)
-    val cut: Long = pruneCutMemo.get(root) // primed by the call above
     perSourceTokenTotals(
       readIndexed(s, root, latestVersion(s, root))
-        .filter(col("doc_id") >= cut))
+        .filter(col("doc_id") >= pruneCut(s, dir)))
   }
 
   // def, not val: snapshotReadPrunedOracleSql initializes later in
   // this object — a val here would capture null at init time
   def snapshotScanPrunedOracleSql: String = snapshotReadPrunedOracleSql
-
-  /** Per-dir memo for the z-order fixture's token-count cut (the r10c
-    * probe-memoization convention).
-    */
-  private val zorderCutMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
   /** `q_snapshot_zorder`: the Morton layout through the driver's hash
     * gate. The artifact stores (doc_id, source, text, ntok) ingest-
@@ -3478,8 +3472,11 @@ object Snapshots {
       clusterZ(s, root, "doc_id", "ntok", partitions = 8)
       ScopedFixture.markComplete(root)
     }
-    val cut: Long = zorderCutMemo.computeIfAbsent(root, _ =>
-      docs.agg(max(col("ntok"))).head().getLong(0) * 3 / 4)
+    // per-dir memo of the token-count cut (the r10c
+    // probe-memoization convention)
+    val cut: Long = Memo.value(s, dir, "snapshots.zorderCut") {
+      docs.agg(max(col("ntok"))).head().getLong(0) * 3 / 4
+    }
     perSourceTokenTotals(
       readWhere(s, root, latestVersion(s, root),
         Seq(StatsPred.GtEq("ntok", cut))))
@@ -3489,14 +3486,6 @@ object Snapshots {
     """len(regexp_extract_all(lower(text), '[a-z0-9]+')) >=
       |  (SELECT (max(len(regexp_extract_all(lower(text), '[a-z0-9]+'))) * 3) // 4
       |   FROM documents)""".stripMargin)
-
-  /** Per-dir memo for the bloom-lookup target fingerprint (pure
-    * function of the table dir — the r10c probe-memoization
-    * convention: driver probes inside plan construction re-run on
-    * every catalog lookup otherwise).
-    */
-  private val bloomTargetMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
   /** `q_snapshot_bloom_lookup`: per-file BLOOM membership skipping
     * through the driver's hash gate. The artifact stores the corpus
@@ -3525,13 +3514,16 @@ object Snapshots {
       ScopedFixture.markComplete(root)
     }
     val v = latestVersion(s, root)
-    val target: Long = bloomTargetMemo.computeIfAbsent(root, _ => {
+    // per-dir memo of the target fingerprint (pure function of the
+    // table dir — the r10c probe-memoization convention: driver probes
+    // inside plan construction re-run on every catalog lookup otherwise)
+    val target: Long = Memo.value(s, dir, "snapshots.bloomTarget") {
       val mx = docs.agg(max(col("doc_id"))).head().getLong(0)
       val anchor = readWhere(s, root, v, Seq(StatsPred.LtEq("doc_id", mx / 2)))
         .agg(max(col("doc_id"))).head().getLong(0)
       readWhere(s, root, v, Seq(StatsPred.Eq("doc_id", anchor)))
         .select("fp").head().getLong(0)
-    })
+    }
     readWhere(s, root, v, Seq(StatsPred.Eq("fp", target)))
       .select("doc_id", "source", "fp").orderBy("doc_id")
   }

@@ -13,16 +13,7 @@ object Probe {
     val reps = args(1).toInt
     val names = args.drop(2).toSeq
     val spark = graft.Session(graft.Session.Cpus)
-    val cpuNs = new java.util.concurrent.atomic.AtomicLong
-    val gcMs = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = t.taskMetrics
-        if (m != null) { cpuNs.addAndGet(m.executorCpuTime); gcMs.addAndGet(m.jvmGCTime) }
-      }
-    })
-    def drain(): Unit =
-      org.apache.spark.GraftSparkBridge.drainListenerBus(spark.sparkContext)
+    val meter = new graft.Meter(spark.sparkContext)
     val shared = graft.Bench.SharedBuilds.toMap
     // PROBE_CODEGEN=<dir>: dump each query's whole-stage generated
     // code to <dir>/<name>.codegen.txt instead of timing it.
@@ -61,9 +52,7 @@ object Probe {
     val split = sys.env.get("PROBE_SPLIT").contains("1")
     names.foreach { name =>
       (1 to reps).foreach { i =>
-        drain()
-        val c0 = cpuNs.get; val g0 = gcMs.get; val t0 = System.nanoTime()
-        try {
+        val m = meter.measure {
           shared.get(name) match {
             case Some(fn) => fn(spark, dir)
             case None if split =>
@@ -80,10 +69,9 @@ object Probe {
               graft.SparkEntry.queries(name)(spark, dir)
                 .write.format("noop").mode("overwrite").save()
           }
-        } catch { case e: Throwable => println(s"[probe] $name FAILED: $e") }
-        val dt = (System.nanoTime() - t0) / 1e9
-        drain()
-        println(f"[probe] $name rep$i wall=$dt%.2f cpu=${(cpuNs.get - c0) / 1e9}%.2f gc=${(gcMs.get - g0) / 1e3}%.2f")
+        }
+        m.error.foreach(e => println(s"[probe] $name FAILED: $e"))
+        println(f"[probe] $name rep$i wall=${m.wallS}%.2f cpu=${m.cpuS}%.2f gc=${m.gcS}%.2f")
       }
     }
     spark.stop()

@@ -360,8 +360,36 @@ class SkewRecallSpec extends org.scalatest.funsuite.AnyFunSuite {
     val pB = pairs(dirB)
     pB.count()
 
-    // release: consumers first (newest first), other dirs untouched
-    assert(Memo.heldNames(spark, dirA) === Seq("pairs", "base"))
+    // Memo.value holds driver-side values under the same keys and rules
+    def sample(dir: String) = Memo.value(spark, dir, "sample") {
+      builds += s"$dir/sample" -> (builds(s"$dir/sample") + 1)
+      Array(1.0, 2.0, 3.0)
+    }
+    // a value build that looks up another value in the same dir (a
+    // nested computeIfAbsent on one map throws "Recursive update")
+    def model(dir: String) = Memo.value(spark, dir, "model") {
+      builds += s"$dir/model" -> (builds(s"$dir/model") + 1)
+      Array(sample(dir).sum)
+    }
+    val m1 = model(dirA)
+    assert(m1.toSeq === Seq(6.0))
+    assert(model(dirA) eq m1)
+    assert(sample(dirA) eq sample(dirA))
+    assert(builds(s"$dirA/model") === 1 && builds(s"$dirA/sample") === 1,
+      "a value hit must return the held object without re-running build")
+    val mB = model(dirB)
+    // a build that throws raises and registers nothing
+    val boom = intercept[IllegalStateException] {
+      Memo.value(spark, dirA, "boom") { throw new IllegalStateException("boom") }
+    }
+    assert(boom.getMessage === "boom")
+    assert(!Memo.heldNames(spark, dirA).contains("boom"))
+    assert(Memo.value(spark, dirA, "boom")("built") === "built",
+      "the next lookup after a failed build builds again")
+
+    // release: values and frames, consumers first (newest first),
+    // other dirs untouched
+    assert(Memo.heldNames(spark, dirA) === Seq("boom", "model", "sample", "pairs", "base"))
     val heldA = Seq(p1, base(dirA))
     Memo.release(spark, dirA)
     assert(heldA.forall(_.storageLevel == StorageLevel.NONE),
@@ -369,9 +397,13 @@ class SkewRecallSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(Memo.heldNames(spark, dirA).isEmpty)
     assert(pB.storageLevel === StorageLevel.MEMORY_AND_DISK,
       "release must leave another dir's frames cached")
+    assert(model(dirB) eq mB, "release must leave another dir's values held")
     val p2 = pairs(dirA)
     assert(!(p2 eq p1), "the next lookup after release rebuilds")
     assert(builds(s"$dirA/pairs") === 2 && builds(s"$dirA/base") === 2)
+    assert(!(model(dirA) eq m1), "a released value is rebuilt on the next lookup")
+    assert(builds(s"$dirA/model") === 2 && builds(s"$dirA/sample") === 2)
+    assert(builds(s"$dirB/model") === 1)
 
     // an entry dropped behind Memo's back is re-persisted on a hit
     val rows = p2.collect().toSeq
@@ -385,6 +417,7 @@ class SkewRecallSpec extends org.scalatest.funsuite.AnyFunSuite {
     Memo.release(spark, dirA)
     Memo.release(spark, dirB)
     assert(pB.storageLevel === StorageLevel.NONE)
+    assert(Memo.heldNames(spark, dirB).isEmpty)
   }
 
   test("Lloyd training sample is deterministic, bounded, and identity below the cap") {
@@ -2267,14 +2300,14 @@ class BpeSpec extends org.scalatest.funsuite.AnyFunSuite {
     // the local path covers the default cap; force the distributed
     // rounds on the same corpus and compare both learner outputs
     val cap = operators.Bpe.LocalVocabCap
-    operators.Bpe.releaseLearnedCache(spark, sf)
+    graft.plans.Memo.release(spark, sf)
     operators.Bpe.LocalVocabCap = 0L
     val (mDist, vDist) = try {
       (operators.Bpe.bpeMerges(spark, sf).collect().map(_.toSeq).toSeq,
         operators.Bpe.bpeVocab(spark, sf).collect().map(_.toSeq).toSeq)
     } finally {
       operators.Bpe.LocalVocabCap = cap
-      operators.Bpe.releaseLearnedCache(spark, sf)
+      graft.plans.Memo.release(spark, sf)
     }
     val mLocal = operators.Bpe.bpeMerges(spark, sf).collect().map(_.toSeq).toSeq
     val vLocal = operators.Bpe.bpeVocab(spark, sf).collect().map(_.toSeq).toSeq

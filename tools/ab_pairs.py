@@ -10,10 +10,14 @@ one run at a time, alternating which side goes first (base first on the
 first seed). Every run's summary line is written to the --out JSON file as
 the runs finish. It then prints, for each end-to-end metric in
 BENCHMARK.json: both medians and quartiles, how many pairs the change won,
-and whether the claim rule holds (the change wins at least 9 of every 10
+whether the claim rule holds (the change wins at least 9 of every 10
 pairs, and its median beats the base median by more than the base's
-interquartile range). It refuses to report if any run was incorrect or had
-failed ops. It only reads run.py's output.
+interquartile range), and the no-regression verdict against the metric's
+`bound`: `ok` when the change's median is no worse than the base median by
+more than the bound (relative), `WORSE` when it is, and `unresolved` when
+the base's IQR/median exceeds the bound (the runs spread too widely to
+tell) unless every change run beats every base run. It refuses to report
+if any run was incorrect or had failed ops. It only reads run.py's output.
 """
 import argparse
 import json
@@ -45,6 +49,17 @@ def quartiles(xs):
         return xs[0], xs[0]
     q1, _, q3 = statistics.quantiles(xs, n=4)
     return q1, q3
+
+
+def verdict(base, change, bound, lower):
+    """The no-regression rule for one metric: ok, WORSE or unresolved."""
+    mb, mc = statistics.median(base), statistics.median(change)
+    q1, q3 = quartiles(base)
+    better = (max(change) < min(base)) if lower else (min(change) > max(base))
+    if mb and (q3 - q1) / abs(mb) > bound and not better:
+        return "unresolved"
+    worse = (mc - mb) if lower else (mb - mc)
+    return "WORSE" if worse > bound * abs(mb) else "ok"
 
 
 def main():
@@ -80,7 +95,7 @@ def main():
     pairs = len(runs) // 2
     print(f"{a.workload}: {pairs} pairs, seeds {a.seeds}")
     print(f"{'metric':12s} {'base med [q1, q3]':>34s} {'change med [q1, q3]':>34s} "
-          f"{'delta':>7s} {'wins':>6s}  rule")
+          f"{'delta':>7s} {'wins':>6s}  {'claim':5s}  bound")
     for m in bench["end_to_end"]:
         name, lower = m["name"], m["better"] == "lower"
         val = {(r["seed"], r["side"]): r["summary"]["metrics"][name]["value"] for r in runs}
@@ -95,8 +110,10 @@ def main():
         holds = wins * 10 >= 9 * pairs and gain > iqr
         cell = {side: f"{med[side]:.4f} [{qs[side][0]:.4f}, {qs[side][1]:.4f}]" for side in sides}
         delta = (med["change"] - med["base"]) / med["base"] if med["base"] else 0.0
+        rule = verdict(by_side["base"], by_side["change"], m["bound"], lower)
         print(f"{name:12s} {cell['base']:>34s} {cell['change']:>34s} {delta:+7.1%} "
-              f"{wins:>2d}/{pairs:<3d}  {'holds' if holds else 'no'}")
+              f"{wins:>2d}/{pairs:<3d}  {'holds' if holds else 'no':5s}  {rule} "
+              f"(±{m['bound']:.0%})")
 
 
 if __name__ == "__main__":
