@@ -46,13 +46,6 @@ object Snapshots {
   private def manifestPath(root: String, v: Int) =
     new org.apache.hadoop.fs.Path(s"$root/manifests/v$v.txt")
 
-  /** Write one commit's rows into its own transaction subdirectory and
-    * return its live files WITH their stats. The file set is a
-    * property of the commit's OWN write, never of a shared-directory
-    * listing (which two racing appends would both scan, each claiming
-    * the other's files); ONE footer pass total ([[footerScan]]) drops
-    * zero-row parts and harvests min/max stats from the same open.
-    */
   /** One commit's write product: live part files, their `#stats:`
     * payloads, and their byte lengths (the `#len:` lines letting the
     * read path plan with ZERO filesystem calls).
@@ -60,6 +53,13 @@ object Snapshots {
   private[sources] final case class BatchFiles(files: Seq[String],
       stats: Map[String, String], lens: Map[String, Long])
 
+  /** Write one commit's rows into its own transaction subdirectory and
+    * return its live files WITH their stats. The file set is a
+    * property of the commit's OWN write, never of a shared-directory
+    * listing (which two racing appends would both scan, each claiming
+    * the other's files); ONE footer pass total ([[footerScan]]) drops
+    * zero-row parts and harvests min/max stats from the same open.
+    */
   private def writeBatchFiles(s: SparkSession, root: String,
                               df: DataFrame): BatchFiles = {
     val sub = s"$root/data/b${java.util.UUID.randomUUID().toString.take(12)}"
@@ -314,7 +314,6 @@ object Snapshots {
                             mirror: Option[Long] = None,
                             base: Option[(Int, Manifest)] = None,
                             lens: Map[String, Long] = Map.empty,
-                            bloomRefs: Seq[String] = Seq.empty,
                             cdfd: Seq[String] = Seq.empty): Unit = {
     val f = fs(s)
     val p = manifestPath(root, v)
@@ -391,46 +390,18 @@ object Snapshots {
     def lenLines(keep: ((String, Long)) => Boolean) =
       lens.toSeq.filter(keep).sortBy(_._1)
         .map { case (n, l) => s"#len:$n:$l" }
-    // COLUMNAR CHECKPOINTS (the Delta parquet-checkpoint economics):
-    // past [[CheckpointParquetAt]] files, a full manifest is written
-    // as a PARQUET body (`#cpq:` — path/stats/len columnar, compressed,
-    // distributed-readable) plus a tiny text header, and every bloom
-    // payload moves to a parquet SIDECAR (`#bloomq:` — (file, col,
-    // payload) rows partitioned by col, loaded lazily and ONLY by an
-    // Eq/In probe). At 10⁶ files the text checkpoint was hundreds of
-    // MB — GBs with row-count-sized blooms inline — re-serialized by
-    // the driver every 16th commit and re-parsed per read; the
-    // parquet body is written once as a small job and the blooms
-    // never ride the manifest line stream at all. Below the threshold
-    // the plain-text full shape remains (tiny datasets shouldn't pay
-    // a Spark job per checkpoint); both shapes stay readable forever.
     def full: Seq[String] =
-      if (files.length >= CheckpointParquetAt)
-        columnarCheckpoint(s, root, v, files, header,
-          stats.filter(kv => live.contains(kv._1)),
-          lens.filter(kv => live.contains(kv._1)),
-          blooms.filter(kv => liveBloom(kv._1)), bloomRefs, live)
-      else
-        header ++ bloomRefs.map(r => s"#bloomq:${relRef(root, r)}") ++
-          statLines(kv => live.contains(kv._1)) ++
-          bloomLines(kv => liveBloom(kv._1)) ++
-          lenLines(kv => live.contains(kv._1)) ++ files
+      header ++ statLines(kv => live.contains(kv._1)) ++
+        bloomLines(kv => liveBloom(kv._1)) ++
+        lenLines(kv => live.contains(kv._1)) ++ files
     val content = base match {
-      // a delta inherits its base's bloom sidecar refs through chain
-      // resolution and may APPEND new ones as its own #bloomq: lines
-      // (a corpus-scale analyze); intended refs that do not EXTEND the
-      // base's (a restore re-anchoring an older ref set under a moved
-      // chain) fall through to a full write, which consolidates
-      case Some((bv, bm)) if bv == v - 1 && v % CheckpointEvery != 0 &&
-          bloomRefs.startsWith(bm.bloomRefs) =>
+      case Some((bv, bm)) if bv == v - 1 && v % CheckpointEvery != 0 =>
         val baseSet = bm.files.toSet
         val fileSet = files.toSet
         val adds = files.filterNot(baseSet)
         val rms = bm.files.filterNot(fileSet)
         if (adds.length + rms.length >= files.length) full
         else Seq(s"#base:$bv") ++ header ++
-          bloomRefs.drop(bm.bloomRefs.length)
-            .map(r => s"#bloomq:${relRef(root, r)}") ++
           statLines(kv => live.contains(kv._1) &&
             !bm.stats.get(kv._1).contains(kv._2)) ++
           bloomLines(kv => liveBloom(kv._1) &&
@@ -459,124 +430,6 @@ object Snapshots {
     */
   val CheckpointEvery = 16
 
-  /** Full manifests at or past this many files write COLUMNAR (a
-    * `#cpq:` parquet body + `#bloomq:` bloom sidecars) instead of
-    * plain text. Spec seam: tests lower it to exercise the columnar
-    * path without writing hundreds of part files; correctness is
-    * identical either way (both shapes resolve through
-    * [[resolveFull]]).
-    */
-  private[graft] var CheckpointParquetAt: Int = 512
-
-  /** Past this many accumulated bloom sidecar dirs a checkpoint
-    * CONSOLIDATES them into one (a distributed keep-newest job) —
-    * bounds probe fan-out without rewriting the sidecar on every
-    * checkpoint (rewriting 10⁶ × 170 KB payloads per checkpoint would
-    * be the exact O(standing) cost this layer exists to avoid).
-    */
-  private val BloomRefCompactAt = 4
-
-  private def relRef(root: String, ref: String): String =
-    if (ref.startsWith(s"$root/manifests/"))
-      ref.stripPrefix(s"$root/manifests/")
-    else ref
-
-  /** Write version v's full state as a parquet checkpoint body (+
-    * bloom sidecar consolidation) and return the TEXT manifest lines
-    * referencing them. The parquet dirs carry a UUID suffix, so a
-    * lost version-claim race leaves only unreferenced orphan dirs
-    * ([[expire]] sweeps them past the grace window) — the text
-    * manifest's atomic claim remains the only commit point.
-    */
-  private def columnarCheckpoint(s: SparkSession, root: String, v: Int,
-      files: Seq[String], header: Seq[String],
-      liveStats: Map[String, String], liveLens: Map[String, Long],
-      liveBlooms: Map[String, String], bloomRefs: Seq[String],
-      liveNames: Set[String]): Seq[String] = {
-    val uuid = java.util.UUID.randomUUID().toString.take(8)
-    val cpRel = s"cp$v-$uuid"
-    val rows = files.map { p =>
-      val n = fileStatKey(p)
-      (p, liveStats.get(n).orNull,
-        liveLens.get(n).map(java.lang.Long.valueOf).orNull)
-    }
-    s.createDataFrame(
-      s.sparkContext.parallelize(rows.map { case (p, st, ln) =>
-        org.apache.spark.sql.Row(p, st, ln) },
-        // ~20k rows/task keeps serialized task size under Spark's 1 MB
-        // recommendation at 10⁵-file scale
-        math.max(1, math.min(32, rows.length / 20000 + 1))),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("path",
-          org.apache.spark.sql.types.StringType, nullable = false),
-        org.apache.spark.sql.types.StructField("stats",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("len",
-          org.apache.spark.sql.types.LongType))))
-      .write.mode("errorifexists").parquet(s"$root/manifests/$cpRel")
-    // bloom consolidation: only payloads the probe will parse enter a
-    // sidecar (an invalid payload counts as MISSING, preserving the
-    // analyzeBloom repair path); overlay entries shadow older refs
-    val overlay = liveBlooms.toSeq.collect {
-      case (k, pl) if bloomPayloadValid(pl) =>
-        (bloomKeyFile(k), k.substring(k.indexOf(':') + 1), pl)
-    }
-    val refsOut: Seq[String] =
-      if (bloomRefs.size + (if (overlay.nonEmpty) 1 else 0) > BloomRefCompactAt)
-        Seq(compactBloomSidecars(s, root, v, bloomRefs, overlay, liveNames))
-      else if (overlay.nonEmpty)
-        bloomRefs :+ writeBloomSidecar(s, root, v,
-          s.createDataFrame(overlay).toDF("file", "col", "payload"))
-      else bloomRefs
-    Seq(s"#cpq:$cpRel") ++
-      refsOut.map(r => s"#bloomq:${relRef(root, r)}") ++ header
-  }
-
-  /** Write one bloom sidecar dir ((file, col, payload) rows,
-    * partitioned by col so a probe on one column reads one partition)
-    * and return its ABSOLUTE path.
-    */
-  private def writeBloomSidecar(s: SparkSession, root: String, v: Int,
-      rows: DataFrame): String = {
-    val dir = s"$root/manifests/bl$v-${java.util.UUID.randomUUID().toString.take(8)}"
-    rows.write.partitionBy("col").mode("errorifexists").parquet(dir)
-    dir
-  }
-
-  /** Merge bloom sidecar refs (+ the text overlay) into ONE sidecar —
-    * keep-newest per (file, col), filtered to live files — as a
-    * distributed job (payloads never pass through the driver).
-    */
-  private def compactBloomSidecars(s: SparkSession, root: String, v: Int,
-      refs: Seq[String], overlay: Seq[(String, String, String)],
-      liveNames: Set[String]): String = {
-    import org.apache.spark.sql.expressions.Window
-    // a ref a source-side expire reclaimed (the shallow-clone contract)
-    // contributes no layer — same degradation bloomAbsentMap applies;
-    // without it every 16th commit past the reclaim would fail
-    // permanently inside writeManifest (r16, ADVICE)
-    val layers = refs.zipWithIndex.flatMap { case (r, i) =>
-      try Some(s.read.parquet(r).select(col("file"), col("col"),
-        col("payload"), lit(i).as("_pri")))
-      catch { case _: Exception => None }
-    } ++ (if (overlay.isEmpty) Seq.empty
-          else Seq(s.createDataFrame(overlay).toDF("file", "col", "payload")
-            .withColumn("_pri", lit(refs.size))))
-    val names = s.createDataFrame(liveNames.toSeq.map(Tuple1(_)))
-      .toDF("_live_file")
-    import s.implicits._
-    val merged =
-      if (layers.isEmpty) // every ref reclaimed, no overlay: empty sidecar
-        Seq.empty[(String, String, String)].toDF("file", "col", "payload")
-      else layers.reduce(_.unionByName(_))
-        .join(names, col("file") === col("_live_file"), "leftsemi")
-        .withColumn("_rn", row_number().over(
-          Window.partitionBy("file", "col").orderBy(col("_pri").desc)))
-        .filter(col("_rn") === 1)
-        .select("file", "col", "payload")
-    writeBloomSidecar(s, root, v, merged)
-  }
-
   private def manifestHeader(txns: Seq[(Long, Long)],
       schema: Option[org.apache.spark.sql.types.StructType],
       commitKind: Option[String], cdf: Seq[String],
@@ -602,7 +455,6 @@ object Snapshots {
     if (!f.exists(p) || parseManifest(s, root, v).base.isEmpty) return true
     val m = readManifestData(s, root, v)
     val mtime = f.getFileStatus(p).getModificationTime
-    val live = m.files.map(fileStatKey).toSet
     // unknown forward-compat `#` lines from v's own layer re-emit
     // verbatim — a checkpoint rewrite must not drop what parseManifest
     // explicitly tolerates
@@ -610,18 +462,14 @@ object Snapshots {
       manifestHeader(m.txns, m.schema, m.commit, m.cdf, m.mirror, m.cdfd) ++
         m.extra
     val content =
-      if (m.files.length >= CheckpointParquetAt)
-        columnarCheckpoint(s, root, v, m.files, header,
-          m.stats, m.lens, m.blooms, m.bloomRefs, live)
-      else
-        header ++ m.bloomRefs.map(r => s"#bloomq:${relRef(root, r)}") ++
-          m.stats.toSeq.sortBy(_._1)
-            .map { case (n, j) => s"#stats:$n:$j" } ++
-          m.blooms.toSeq.sortBy(_._1)
-            .map { case (k, pl) => s"#bloom:$k:$pl" } ++
-          m.lens.toSeq.sortBy(_._1)
-            .map { case (n, l) => s"#len:$n:$l" } ++
-          m.files
+      header ++
+        m.stats.toSeq.sortBy(_._1)
+          .map { case (n, j) => s"#stats:$n:$j" } ++
+        m.blooms.toSeq.sortBy(_._1)
+          .map { case (k, pl) => s"#bloom:$k:$pl" } ++
+        m.lens.toSeq.sortBy(_._1)
+          .map { case (n, l) => s"#len:$n:$l" } ++
+        m.files
     val tmp = new org.apache.hadoop.fs.Path(
       s"$root/manifests/.v$v.${java.util.UUID.randomUUID().toString.take(8)}.mat")
     val out = f.create(tmp, false)
@@ -706,17 +554,13 @@ object Snapshots {
   /** One parsed manifest: file list + carried metadata. `commit` is
     * this version's commit kind (append/rewrite/layout), None for
     * legacy manifests written before the tag; `stats` maps part-file
-    * NAME → raw per-column min/max json (parsed lazily at prune time).
-    * `blooms` is the TEXT-CARRIED overlay only — bloom payloads a
-    * checkpoint consolidated live in the parquet sidecar dirs listed
-    * in `bloomRefs` (absolute paths, oldest → newest; an overlay entry
-    * shadows the refs) and are loaded LAZILY, only by an Eq/In probe,
-    * never at manifest-resolution time. `cdfd` carries an update's
-    * change-data PRE-IMAGE files (`#cdfd:` — the retraction half; the
-    * post-images ride `cdf` like a merge's). `extra` preserves unknown
-    * forward-compat `#` metadata lines from THIS version's own layer
-    * so a checkpoint rewrite ([[materializeManifest]]) cannot drop
-    * them.
+    * NAME → raw per-column min/max json (parsed lazily at prune time);
+    * `blooms` maps "fileName:col" → its `#bloom:` payload. `cdfd`
+    * carries an update's change-data PRE-IMAGE files (`#cdfd:` — the
+    * retraction half; the post-images ride `cdf` like a merge's).
+    * `extra` preserves unknown forward-compat `#` metadata lines from
+    * THIS version's own layer so a checkpoint rewrite
+    * ([[materializeManifest]]) cannot drop them.
     */
   private[sources] final case class Manifest(files: Seq[String],
       txns: Seq[(Long, Long)],
@@ -727,15 +571,12 @@ object Snapshots {
       blooms: Map[String, String] = Map.empty,
       mirror: Option[Long] = None,
       lens: Map[String, Long] = Map.empty,
-      bloomRefs: Seq[String] = Seq.empty,
       cdfd: Seq[String] = Seq.empty,
       extra: Seq[String] = Seq.empty)
 
   /** One raw (unresolved) manifest layer: `adds` are its bare file
-    * lines — the FULL file set for a text checkpoint manifest, only
-    * the added files when `base` is set; `cpq`/`bloomq` name the
-    * parquet checkpoint body / bloom sidecar dirs of a columnar
-    * checkpoint.
+    * lines — the FULL file set for a checkpoint manifest, only the
+    * added files when `base` is set.
     */
   private final case class RawManifest(base: Option[Int],
       adds: Seq[String], rms: Seq[String],
@@ -745,8 +586,6 @@ object Snapshots {
       stats: Map[String, String], cdf: Seq[String],
       blooms: Map[String, String], mirror: Option[Long],
       lens: Map[String, Long],
-      cpq: Option[String] = None,
-      bloomq: Seq[String] = Seq.empty,
       cdfd: Seq[String] = Seq.empty,
       extra: Seq[String] = Seq.empty)
 
@@ -764,8 +603,6 @@ object Snapshots {
     val blooms = Map.newBuilder[String, String]
     var mirror: Option[Long] = None
     val lens = Map.newBuilder[String, Long]
-    var cpq: Option[String] = None
-    val bloomq = Seq.newBuilder[String]
     val cdfd = Seq.newBuilder[String]
     val extra = Seq.newBuilder[String]
     lines.foreach {
@@ -790,15 +627,12 @@ object Snapshots {
         cdf += l.stripPrefix("#cdf:")
       case l if l.startsWith("#cdfd:") =>
         cdfd += l.stripPrefix("#cdfd:")
-      case l if l.startsWith("#cpq:") =>
-        // FAIL FAST on a blank body: a columnar checkpoint silently
-        // read as an empty full manifest = the whole version lost
-        cpq = Some(l.stripPrefix("#cpq:")).filter(_.nonEmpty).orElse(
-          throw new IllegalStateException(
-            s"corrupt manifest v$v at $root: unparseable '$l'"))
-      case l if l.startsWith("#bloomq:") =>
-        val body = l.stripPrefix("#bloomq:")
-        if (body.nonEmpty) bloomq += body
+      case l if l.startsWith("#cpq:") || l.startsWith("#bloomq:") =>
+        // FAIL FAST on the retired columnar checkpoint format: its file
+        // list lives outside this text, so tolerating the line as an
+        // unknown tag would resolve the version with no files
+        throw new IllegalStateException(
+          s"unsupported manifest v$v at $root: columnar line '$l'")
       case l if l.startsWith("#bloom:") =>
         // <fileName>:<col>:<payload> — keyed "file:col" (part names and
         // column names carry no ':')
@@ -834,7 +668,7 @@ object Snapshots {
     }
     RawManifest(base, files.result(), rms.result(), txns.result().sorted,
       schema, commit, stats.result(), cdf.result(), blooms.result(), mirror,
-      lens.result(), cpq, bloomq.result(), cdfd.result(), extra.result())
+      lens.result(), cdfd.result(), extra.result())
   }
 
   /** (root, version)-keyed memo of RESOLVED manifests. Claimed
@@ -855,12 +689,6 @@ object Snapshots {
         size > ManifestMemoMax
     }
 
-  /** Bench/spec seam: drop every cached resolution (a COLD resolve is
-    * what ManifestBench times; production code never needs this).
-    */
-  private[graft] def memoClearForBench(): Unit =
-    manifestMemo.synchronized(manifestMemo.clear())
-
   private def memoGet(root: String, v: Int): Option[Manifest] =
     manifestMemo.synchronized(Option(manifestMemo.get((root, v))))
   private def memoPut(root: String, v: Int, m: Manifest): Unit =
@@ -873,19 +701,16 @@ object Snapshots {
     */
   private[graft] val manifestOpens = new java.util.concurrent.atomic.AtomicLong
 
-  /** Resolve version v's manifest: a full layer (text, or a `#cpq:`
-    * parquet checkpoint) resolves directly; a delta layer resolves its
-    * `#base:` predecessor (through the memo — a range walk like
-    * [[changesBetween]] resolves each version INCREMENTALLY from its
-    * cached predecessor instead of re-walking the chain) and folds its
-    * removes/adds and stats/bloom additions on top. Per-commit
-    * metadata (schema, commit kind, txns, cdf, mirror, unknown-tag
-    * extras) always comes from v's OWN layer (delta manifests carry
-    * those in full). Stats and blooms filter to the resolved live
-    * file set, so a removed file's lines die with it regardless of
-    * which layer recorded them; bloom SIDECAR refs carry as-is (a
-    * dead file's sidecar row is never probed — part names are
-    * globally unique, so it can't alias a live file).
+  /** Resolve version v's manifest: a full layer resolves directly; a
+    * delta layer resolves its `#base:` predecessor (through the memo —
+    * a range walk like [[changesBetween]] resolves each version
+    * INCREMENTALLY from its cached predecessor instead of re-walking
+    * the chain) and folds its removes/adds and stats/bloom additions
+    * on top. Per-commit metadata (schema, commit kind, txns, cdf,
+    * mirror, unknown-tag extras) always comes from v's OWN layer
+    * (delta manifests carry those in full). Stats and blooms filter to
+    * the resolved live file set, so a removed file's lines die with it
+    * regardless of which layer recorded them.
     */
   private[graft] def readManifestData(s: SparkSession, root: String,
                                       v: Int): Manifest =
@@ -902,8 +727,8 @@ object Snapshots {
           s"corrupt manifest chain at $root: v$v bases on v$b")
         val bm = memoGet(root, b)
           .getOrElse(resolveManifest(s, root, b, depth + 1))
-        applyDelta(root, bm, raw)
-      case None => resolveFull(s, root, raw)
+        applyDelta(bm, raw)
+      case None => resolveFull(raw)
     }
     memoPut(root, v, m)
     m
@@ -911,8 +736,7 @@ object Snapshots {
 
   private def bloomKeyFile(k: String): String = k.substring(0, k.indexOf(':'))
 
-  private def applyDelta(root: String, bm: Manifest,
-                         raw: RawManifest): Manifest = {
+  private def applyDelta(bm: Manifest, raw: RawManifest): Manifest = {
     val files = (bm.files.toSet -- raw.rms ++ raw.adds).toSeq.sorted
     val liveNames = files.map(fileStatKey).toSet
     Manifest(files, raw.txns, raw.schema, raw.commit,
@@ -922,48 +746,17 @@ object Snapshots {
         .filter(kv => liveNames.contains(bloomKeyFile(kv._1))),
       raw.mirror,
       (bm.lens ++ raw.lens).filter(kv => liveNames.contains(kv._1)),
-      // a delta may APPEND sidecar refs of its own (a corpus-scale
-      // analyzeBloom writes its payloads straight to a sidecar instead
-      // of 10⁵ text overlay lines — the 77 MB analyze-delta trap
-      // ManifestBench caught at 10⁵ files)
-      bloomRefs = bm.bloomRefs ++ raw.bloomq.map(refPath(root, _)),
       cdfd = raw.cdfd, extra = raw.extra)
   }
 
-  /** A `#bloomq:`/`#cpq:` ref is stored RELATIVE when it lives under
-    * this root's own manifests dir (the normal case) and absolute
-    * otherwise (a shallow clone referencing the source's sidecars —
-    * the same shallow contract as its data files).
-    */
-  private def refPath(root: String, ref: String): String =
-    if (ref.contains('/')) ref else s"$root/manifests/$ref"
-
-  private def resolveFull(s: SparkSession, root: String,
-                          raw: RawManifest): Manifest = raw.cpq match {
-    case Some(rel) =>
-      val rows = s.read
-        .schema("path STRING, stats STRING, len BIGINT")
-        .parquet(refPath(root, rel)).collect()
-      val files = rows.map(_.getString(0)).toSeq.sorted
-      val stats = rows.flatMap(r =>
-        if (r.isNullAt(1)) None
-        else Some(fileStatKey(r.getString(0)) -> r.getString(1))).toMap
-      val lens = rows.flatMap(r =>
-        if (r.isNullAt(2)) None
-        else Some(fileStatKey(r.getString(0)) -> r.getLong(2))).toMap
-      Manifest(files, raw.txns, raw.schema, raw.commit, stats, raw.cdf,
-        raw.blooms, raw.mirror, lens,
-        bloomRefs = raw.bloomq.map(refPath(root, _)),
-        cdfd = raw.cdfd, extra = raw.extra)
-    case None =>
-      val liveNames = raw.adds.map(fileStatKey).toSet
-      Manifest(raw.adds.sorted, raw.txns, raw.schema, raw.commit,
-        raw.stats.filter(kv => liveNames.contains(kv._1)), raw.cdf,
-        raw.blooms.filter(kv => liveNames.contains(bloomKeyFile(kv._1))),
-        raw.mirror,
-        raw.lens.filter(kv => liveNames.contains(kv._1)),
-        bloomRefs = raw.bloomq.map(refPath(root, _)),
-        cdfd = raw.cdfd, extra = raw.extra)
+  private def resolveFull(raw: RawManifest): Manifest = {
+    val liveNames = raw.adds.map(fileStatKey).toSet
+    Manifest(raw.adds.sorted, raw.txns, raw.schema, raw.commit,
+      raw.stats.filter(kv => liveNames.contains(kv._1)), raw.cdf,
+      raw.blooms.filter(kv => liveNames.contains(bloomKeyFile(kv._1))),
+      raw.mirror,
+      raw.lens.filter(kv => liveNames.contains(kv._1)),
+      cdfd = raw.cdfd, extra = raw.extra)
   }
 
   private[graft] def readManifest(s: SparkSession, root: String, v: Int): Seq[String] =
@@ -1073,8 +866,7 @@ object Snapshots {
       addStats: Map[String, String] = Map.empty,
       addBlooms: Map[String, String] = Map.empty,
       addLens: Map[String, Long] = Map.empty,
-      expectBase: Option[Int] = None,
-      refsFor: Seq[String] => Seq[String] = identity)
+      expectBase: Option[Int] = None)
                          (files: Seq[String] => Seq[String]): Int = {
     var attempts = 0
     while (true) {
@@ -1095,7 +887,7 @@ object Snapshots {
           schemaFor(m.schema), Some(commitKind), m.stats ++ addStats,
           blooms = m.blooms ++ addBlooms, mirror = m.mirror,
           base = if (v >= 1) Some((v, m)) else None,
-          lens = m.lens ++ addLens, bloomRefs = refsFor(m.bloomRefs))
+          lens = m.lens ++ addLens)
         return v + 1
       } catch {
         case e: ConcurrentCommitException =>
@@ -1374,7 +1166,7 @@ object Snapshots {
           txn.fold(m.txns)(mergeTxn(m.txns, _)),
           Some(sc), Some("merge"), m.stats ++ bf.stats, cdfFiles,
           blooms = m.blooms, mirror = m.mirror, base = Some((base, m)),
-          lens = m.lens ++ bf.lens, bloomRefs = m.bloomRefs)
+          lens = m.lens ++ bf.lens)
         return base + 1
       } catch {
         case e: ConcurrentCommitException =>
@@ -1447,7 +1239,7 @@ object Snapshots {
       if (anyNull) m.files
       else if (empty) Seq.empty
       else if (hull.isEmpty) m.files // only unorderable bounds: no prune
-      else filesWhereM(s, m, hull)
+      else filesWhereM(m, hull)
     if (candidates.isEmpty) return Seq.empty
     val scan = s.read.schema(standingSc).parquet(candidates: _*)
       .select(keyCols.map(col) :+ input_file_name().as("__file"): _*)
@@ -1545,7 +1337,7 @@ object Snapshots {
       val base = latestVersion(s, root)
       require(base >= 1, s"delete needs an existing dataset at $root")
       val m = readManifestData(s, root, base)
-      val candidates = filesWhereM(s, m, preds)
+      val candidates = filesWhereM(m, preds)
       // stats prove NO file can hold a matching row: the delete is a
       // no-op — return the standing version instead of committing a
       // consumer-visible retraction boundary for zero changed rows
@@ -1563,7 +1355,7 @@ object Snapshots {
           m.stats ++ bfd.stats, cdfFiles,
           blooms = m.blooms, // survivors keep theirs; rewritten files' drop
           mirror = m.mirror, base = Some((base, m)),
-          lens = m.lens ++ bfd.lens, bloomRefs = m.bloomRefs)
+          lens = m.lens ++ bfd.lens)
         return base + 1
       } catch {
         case e: ConcurrentCommitException =>
@@ -1617,7 +1409,7 @@ object Snapshots {
       val byName = sc.fields.map(f => f.name -> f.dataType).toMap
       set.keys.foreach(c => require(byName.contains(c),
         s"update cannot assign unknown column '$c'"))
-      val candidates = filesWhereM(s, m, preds)
+      val candidates = filesWhereM(m, preds)
       if (candidates.isEmpty) return base // provably zero matches
       val survivors = m.files.filterNot(candidates.toSet)
       val hit = coalesce(preds.map(predColumn).reduce(_ && _), lit(false))
@@ -1656,8 +1448,7 @@ object Snapshots {
           m.txns, Some(sc), Some("update"),
           m.stats ++ bfu.stats, cdfFiles,
           blooms = m.blooms, mirror = m.mirror, base = Some((base, m)),
-          lens = m.lens ++ bfu.lens, bloomRefs = m.bloomRefs,
-          cdfd = cdfdFiles)
+          lens = m.lens ++ bfu.lens, cdfd = cdfdFiles)
         return base + 1
       } catch {
         case e: ConcurrentCommitException =>
@@ -1755,13 +1546,7 @@ object Snapshots {
     val m = readManifestData(s, root, v)
     commitRetry(s, root, schemaFor = _ => m.schema,
       commitKind = "rewrite", addStats = m.stats,
-      addBlooms = m.blooms, addLens = m.lens,
-      // the restored version's consolidated blooms live in ITS sidecar
-      // refs — union them with the standing refs (both describe
-      // immutable per-file content, so either copy of a shared name is
-      // valid); a ref set differing from the base's forces a full
-      // write, which consolidates
-      refsFor = refs => (refs ++ m.bloomRefs).distinct)(_ => m.files)
+      addBlooms = m.blooms, addLens = m.lens)(_ => m.files)
   }
 
   /** SHALLOW CLONE (the Delta zero-copy clone): a NEW dataset root
@@ -1783,11 +1568,7 @@ object Snapshots {
     require(!fs(s).exists(manifestPath(dstRoot, 1)),
       s"clone target $dstRoot already exists")
     writeManifest(s, dstRoot, 1, m.files, Seq.empty, m.schema,
-      Some("append"), m.stats, Seq.empty, m.blooms, lens = m.lens,
-      // sidecar refs stay ABSOLUTE into the source's manifests dir —
-      // the same shallow contract as the data files (an expire on the
-      // source can reclaim them; the probe degrades to no-prune)
-      bloomRefs = m.bloomRefs)
+      Some("append"), m.stats, Seq.empty, m.blooms, lens = m.lens)
   }
 
   /** Orphans younger than this survive [[expire]]'s vacuum (the Delta
@@ -1862,57 +1643,10 @@ object Snapshots {
     }
     (1 until retainMin).foreach { v =>
       val p = manifestPath(root, v)
-      if (f.exists(p)) {
-        // a checkpoint body / bloom sidecar becomes UNREFERENCED the
-        // moment its manifest is deleted — refresh its mtime so the
-        // grace window counts from unreference time, not dir creation
-        // (an in-flight reader that parsed the old text must be able
-        // to finish resolving; the in-flight-append discipline applied
-        // to reads). Own-root relative refs only: absolute (clone)
-        // refs live under another root's sweep. BEST-EFFORT: a corrupt
-        // expired manifest must still DELETE (expire is the repair
-        // path — a parse throw here would wedge retention forever).
-        try {
-          val raw = parseManifest(s, root, v)
-          (raw.cpq.toSeq ++ raw.bloomq).filterNot(_.contains('/')).foreach { r =>
-            try f.setTimes(new org.apache.hadoop.fs.Path(refPath(root, r)),
-              System.currentTimeMillis(), -1)
-            catch { case _: java.io.IOException => () }
-          }
-        } catch { case _: Exception => () }
-        f.delete(p, false)
-      }
+      if (f.exists(p)) f.delete(p, false)
       memoDrop(root, v)
     }
     val cutoff = System.currentTimeMillis() - math.max(0L, orphanGraceMs)
-    // columnar-checkpoint bodies (`cp*`) and bloom sidecars (`bl*`)
-    // follow the data-file rule: reclaimed once no SURVIVING manifest
-    // references them (an expired checkpoint's body dies with it; a
-    // lost-race orphan dir dies past the grace window — young orphans
-    // may be a checkpoint commit in flight)
-    // compared by BASENAME (uuid-suffixed, globally unique): manifest
-    // lines store root-relative names while listStatus returns
-    // scheme-qualified paths — a full-string compare would wrongly
-    // reclaim every live dir
-    val liveRefNames: Set[String] = {
-      val fromManifests = (retainMin to latest).iterator
-        .filter(v => f.exists(manifestPath(root, v)))
-        .flatMap { v =>
-          val raw = parseManifest(s, root, v)
-          raw.cpq.toSeq ++ raw.bloomq
-        }.toSet
-      (fromManifests ++ retainedM.flatMap(_.bloomRefs))
-        .map(r => r.substring(r.lastIndexOf('/') + 1))
-    }
-    val mdir = new org.apache.hadoop.fs.Path(s"$root/manifests")
-    if (f.exists(mdir)) {
-      f.listStatus(mdir).foreach { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory && (n.startsWith("cp") || n.startsWith("bl")) &&
-            !liveRefNames.contains(n) && st.getModificationTime < cutoff)
-          f.delete(st.getPath, true)
-      }
-    }
     def reclaim(k: org.apache.hadoop.fs.FileStatus): Boolean = {
       val path = k.getPath.toString
       !live.contains(path) &&
@@ -2042,7 +1776,7 @@ object Snapshots {
     */
   private[sources] def filesWhere(s: SparkSession, root: String, v: Int,
                                   preds: Seq[StatsPred]): Seq[String] =
-    filesWhereM(s, readManifestData(s, root, v), preds)
+    filesWhereM(readManifestData(s, root, v), preds)
 
   // non-finite floating literals (NaN, ±Inf) are not orderable by
   // the BigDecimal compare — never prune on them (a NaN Eq keeps
@@ -2161,27 +1895,21 @@ object Snapshots {
     * and at 10⁶ files the manifest parse is the metadata bottleneck
     * (one parse per call, never two). Two passes: (1) range/null-count
     * pruning from the driver-resident stats; (2) for the survivors,
-    * bloom membership — text-overlay payloads probe on the driver,
-    * SIDECAR payloads probe in a distributed job that ships back one
-    * boolean per (file, col, probe), never the payloads (at 10⁶ files
-    * × 170 KB payloads, driver-side loading is the exact O(standing)
-    * cost the sidecar exists to avoid). Pass 2 re-evaluates the FULL
-    * predicate with both stat kinds, so an Or excluded half by range
-    * and half by bloom still prunes.
+    * bloom membership. Pass 2 re-evaluates the FULL predicate with
+    * both stat kinds, so an Or excluded half by range and half by
+    * bloom still prunes.
     */
-  private[sources] def filesWhereM(s: SparkSession, m: Manifest,
+  private[sources] def filesWhereM(m: Manifest,
                                    preds: Seq[StatsPred]): Seq[String] = {
-    if (preds.isEmpty ||
-        (m.stats.isEmpty && m.blooms.isEmpty && m.bloomRefs.isEmpty))
+    if (preds.isEmpty || (m.stats.isEmpty && m.blooms.isEmpty))
       return m.files
     val statsOf = statsReader(m)
     val noBloom = (_: String, _: Char, _: Long) => false
     val rangeOk = m.files.filter(f =>
       preds.forall(maySatisfy(statsOf(f), _, noBloom)))
     val probes = collectProbes(preds)
-    if (probes.isEmpty || rangeOk.isEmpty ||
-        (m.blooms.isEmpty && m.bloomRefs.isEmpty)) return rangeOk
-    val absentMap = bloomAbsentMap(s, m, rangeOk, probes)
+    if (probes.isEmpty || rangeOk.isEmpty || m.blooms.isEmpty) return rangeOk
+    val absentMap = bloomAbsentMap(m, rangeOk, probes)
     rangeOk.filter { f =>
       val n = fileStatKey(f)
       val forFile = (c: String, k: Char, b: Long) =>
@@ -2211,14 +1939,9 @@ object Snapshots {
   }
 
   /** For each (col, kind, base) probe, the set of file NAMES whose
-    * bloom PROVABLY excludes it — overlay payloads evaluated on the
-    * driver, sidecar payloads in one distributed job per call (the
-    * newest layer holding a (file, col) wins: overlay first, then refs
-    * newest → oldest via a keep-max-priority window). A sidecar ref a
-    * source-side expire reclaimed (the shallow-clone contract)
-    * degrades to no-prune for its keys.
+    * bloom PROVABLY excludes it.
     */
-  private def bloomAbsentMap(s: SparkSession, m: Manifest,
+  private def bloomAbsentMap(m: Manifest,
       files: Seq[String], probes: Map[String, Seq[(Char, Long)]])
       : Map[(String, Char, Long), Set[String]] = {
     val out = scala.collection.mutable.HashMap
@@ -2226,47 +1949,12 @@ object Snapshots {
     def mark(c: String, k: Char, b: Long, file: String): Unit =
       out.getOrElseUpdate((c, k, b),
         scala.collection.mutable.HashSet.empty) += file
-    val needSidecar = Seq.newBuilder[(String, String)]
     files.foreach { f =>
       val n = fileStatKey(f)
       probes.foreach { case (c, ps) =>
-        m.blooms.get(s"$n:$c") match {
-          case Some(pl) if bloomPayloadValid(pl) =>
-            ps.foreach { case (k, b) =>
-              if (payloadExcludes(pl, k, b)) mark(c, k, b, n) }
-          case _ => if (m.bloomRefs.nonEmpty) needSidecar += ((n, c))
-        }
-      }
-    }
-    val need = needSidecar.result()
-    if (need.nonEmpty && m.bloomRefs.nonEmpty) {
-      import org.apache.spark.sql.expressions.Window
-      val layers = m.bloomRefs.zipWithIndex.flatMap { case (r, i) =>
-        try Some(s.read.parquet(r)
-          .select(col("file"), col("col"), col("payload"), lit(i).as("_pri")))
-        catch { case _: Exception => None } // reclaimed ref: no-prune
-      }
-      if (layers.nonEmpty) {
-        val probeArr: Map[String, Array[(Char, Long)]] =
-          probes.map { case (c, ps) => c -> ps.toArray }
-        val probeUdf = udf((c: String, payload: String) =>
-          probeArr.getOrElse(c, Array.empty[(Char, Long)])
-            .map { case (k, b) => payloadExcludes(payload, k, b) })
-        val needDf = s.createDataFrame(need).toDF("_f", "_c")
-        val rows = layers.reduce(_.unionByName(_))
-          .filter(col("col").isin(probes.keys.toSeq: _*))
-          .join(needDf, col("file") === col("_f") && col("col") === col("_c"))
-          .withColumn("_rn", row_number().over(
-            Window.partitionBy("file", "col").orderBy(col("_pri").desc)))
-          .filter(col("_rn") === 1)
-          .select(col("file"), col("col"),
-            probeUdf(col("col"), col("payload")).as("_abs"))
-          .collect()
-        rows.foreach { r =>
-          val flags = r.getSeq[Boolean](2)
-          probes(r.getString(1)).zip(flags).foreach { case ((k, b), a) =>
-            if (a) mark(r.getString(1), k, b, r.getString(0))
-          }
+        m.blooms.get(s"$n:$c").filter(bloomPayloadValid).foreach { pl =>
+          ps.foreach { case (k, b) =>
+            if (payloadExcludes(pl, k, b)) mark(c, k, b, n) }
         }
       }
     }
@@ -2403,35 +2091,9 @@ object Snapshots {
       // carry, so standing ones never need rebuilding). A payload in
       // an outdated format counts as missing (the probe ignores it, so
       // treating it as coverage would lose pruning permanently with no
-      // repair path). Coverage = a valid TEXT-overlay payload OR a
-      // sidecar row (sidecars admit only probe-valid payloads at write
-      // time, so key presence is coverage). The sidecar check is a
-      // DISTRIBUTED anti-join collecting only the MISSING paths —
-      // collecting every sidecar (file, col) key to the driver would
-      // re-introduce the O(standing corpus) materialization this
-      // layer exists to avoid (an incremental analyze touches O(new
-      // files)).
-      val overlayMissing = m.files.flatMap(f => usable.collect {
-        case c if !m.blooms.get(s"${fileStatKey(f)}:$c")
-          .exists(bloomPayloadValid) => (fileStatKey(f), c, f)
-      })
-      val missing: Seq[String] =
-        if (m.bloomRefs.isEmpty || overlayMissing.isEmpty)
-          overlayMissing.map(_._3).distinct
-        else try {
-          // the WHOLE anti-join (planning AND collect) guards against
-          // a concurrently-reclaimed ref: the catch's fallback rescans
-          // everything the overlay misses — conservative, never wrong
-          val refDfs = m.bloomRefs.map(r =>
-            s.read.parquet(r).select(col("file"), col("col")))
-          s.createDataFrame(overlayMissing).toDF("file", "col", "path")
-            .join(refDfs.reduce(_.unionByName(_)), Seq("file", "col"),
-              "left_anti")
-            .select("path").distinct().collect()
-            .map(_.getString(0)).toSeq
-        } catch {
-          case _: Exception => overlayMissing.map(_._3).distinct
-        }
+      // repair path).
+      val missing: Seq[String] = m.files.filter(f => usable.exists(c =>
+        !m.blooms.get(s"${fileStatKey(f)}:$c").exists(bloomPayloadValid)))
       if (missing.isEmpty) return base
       val df = s.read.schema(sc).parquet(missing: _*)
       val fname = substring_index(input_file_name(), "/", -1)
@@ -2506,25 +2168,10 @@ object Snapshots {
         val kind = kindOf(key.substring(key.indexOf(':') + 1))
         key -> s"$hashes,${w.length * 64},$kind,${enc.encodeToString(bb.array)}"
       }.toMap
-      // a corpus-scale analyze writes its payloads STRAIGHT to a
-      // parquet sidecar appended to the ref chain — carrying 10⁵
-      // payloads as text overlay lines made the analyze DELTA itself
-      // a 77 MB manifest (ManifestBench caught it); small analyzes
-      // keep the cheap text overlay (no Spark job per commit)
-      val (newOverlay, newRefs) =
-        if (add.size >= CheckpointParquetAt) {
-          val rows = add.toSeq.map { case (k, pl) =>
-            (bloomKeyFile(k), k.substring(k.indexOf(':') + 1), pl)
-          }
-          (m.blooms,
-            m.bloomRefs :+ writeBloomSidecar(s, root, base + 1,
-              s.createDataFrame(rows).toDF("file", "col", "payload")))
-        } else (m.blooms ++ add, m.bloomRefs)
       try {
         writeManifest(s, root, base + 1, m.files, m.txns, Some(sc),
-          Some("analyze"), m.stats, Seq.empty, newOverlay,
-          mirror = m.mirror, base = Some((base, m)), lens = m.lens,
-          bloomRefs = newRefs)
+          Some("analyze"), m.stats, Seq.empty, m.blooms ++ add,
+          mirror = m.mirror, base = Some((base, m)), lens = m.lens)
         return base + 1
       } catch {
         case e: ConcurrentCommitException =>
@@ -2536,12 +2183,12 @@ object Snapshots {
   }
 
   /** Does `payload` PROVABLY exclude a value hashing to (kind, base)?
-    * EXECUTOR-SAFE (the sidecar probe ships this into tasks): any
-    * parse failure, truncated bitset, or hash-family mismatch returns
-    * false (keep) — the family check is load-bearing: a string literal
-    * against a long column would probe the char fold where the bloom
-    * holds integral folds, and unset bits would then wrongly prune a
-    * file whose rows SQL's cast-and-compare semantics WOULD match.
+    * Any parse failure, truncated bitset, or hash-family mismatch
+    * returns false (keep) — the family check is load-bearing: a string
+    * literal against a long column would probe the char fold where the
+    * bloom holds integral folds, and unset bits would then wrongly
+    * prune a file whose rows SQL's cast-and-compare semantics WOULD
+    * match.
     */
   private[sources] def payloadExcludes(payload: String, kind: Char,
                                        base: Long): Boolean = {
@@ -2597,7 +2244,7 @@ object Snapshots {
   def readWhere(s: SparkSession, root: String, v: Int,
                 preds: Seq[StatsPred]): DataFrame = {
     val m = readManifestData(s, root, v)
-    val files = filesWhereM(s, m, preds)
+    val files = filesWhereM(m, preds)
     val sc = m.schema.getOrElse(s.read.parquet(m.files: _*).schema)
     val base =
       if (files.isEmpty)
@@ -2747,7 +2394,7 @@ object Snapshots {
     }
     val idx = new org.apache.spark.sql.GraftSnapshotFileIndex(
       fromLens ++ listed,
-      exprs => filesWhereM(s, m, translateFilters(exprs)))
+      exprs => filesWhereM(m, translateFilters(exprs)))
     (org.apache.spark.sql.GraftSnapshotScan.dataFrame(s, idx, sc), idx)
   }
 
@@ -3178,8 +2825,7 @@ object Snapshots {
           writeManifest(s, dstRoot, dstV + 1, dstM.files,
             dstM.txns, dstM.schema, Some("layout"),
             dstM.stats, Seq.empty, dstM.blooms, mirror = Some(srcV.toLong),
-            base = Some((dstV, dstM)), lens = dstM.lens,
-            bloomRefs = dstM.bloomRefs)
+            base = Some((dstV, dstM)), lens = dstM.lens)
           return dstV + 1
         }
         val feed = changeFeed(s, srcRoot, cursor, srcV)
@@ -3234,7 +2880,7 @@ object Snapshots {
           Some(if (hasDeletes) "rewrite" else "merge"),
           dstM.stats ++ bf.stats, cdfFiles, blooms = dstM.blooms,
           mirror = Some(srcV.toLong), base = Some((dstV, dstM)),
-          lens = dstM.lens ++ bf.lens, bloomRefs = dstM.bloomRefs)
+          lens = dstM.lens ++ bf.lens)
         return dstV + 1
       } catch {
         // a lost race means ANOTHER sync advanced the mirror — our fold

@@ -8,14 +8,13 @@ import graft.sources.Snapshots
   *   - (root, version)-keyed MEMOIZATION of resolved manifests — one
   *     text parse per version, never one per call, with incremental
   *     delta resolution across range walks;
-  *   - COLUMNAR checkpoints: past [[Snapshots.CheckpointParquetAt]]
-  *     files a full manifest writes a parquet body (`#cpq:`) and moves
-  *     every bloom payload to a lazily-probed parquet SIDECAR
-  *     (`#bloomq:`) — the metadata READ side of "O(changed), never
-  *     O(standing)";
+  *   - text checkpoints: stats and bloom lines carry through delta
+  *     manifests into every [[Snapshots.CheckpointEvery]]-th full
+  *     manifest and keep pruning across expire;
   *   - new prune shapes: Or, IsNull/IsNotNull (footer null counts),
   *     and LIKE-prefix string ranges, planner-integrated;
-  *   - forward-compat `#` lines survive a checkpoint rewrite.
+  *   - forward-compat `#` lines survive a checkpoint rewrite, and the
+  *     retired columnar lines (`#cpq:`/`#bloomq:`) fail fast.
   */
 class SnapshotMetaSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -62,99 +61,64 @@ class SnapshotMetaSpec extends AnyFunSuite {
       "changesBetween must reuse incremental resolution across its range")
   }
 
-  test("columnar checkpoint: parquet body + bloom sidecar, probed lazily and GC'd with its version") {
+  test("text checkpoint: stats and blooms carry through deltas and the v16 full manifest, prune, and survive expire") {
     import spark.implicits._
-    val prev = Snapshots.CheckpointParquetAt
-    Snapshots.CheckpointParquetAt = 4
-    try {
-      val root = tmp("graft_snapcpq")
-      val base = spark.range(0L, 400L).select(col("id").as("doc_id"),
-        graft.functions.TextFunctions.docFingerprint(
-          concat(lit("cpq"), col("id").cast("string"))).as("fp"),
-        (col("id") % 7).cast("string").as("src"))
-      Snapshots.create(spark, root, base.repartitionByRange(8, col("doc_id")))
-      // v1 is a columnar checkpoint: a tiny text manifest referencing
-      // the parquet body, with NO bare file lines or inline stats
-      val t1 = manifestText(root, 1)
-      assert(t1.contains("#cpq:"), "past the threshold, fulls go columnar")
-      assert(!t1.contains("#stats:") &&
-        t1.linesIterator.forall(_.startsWith("#")),
-        s"checkpoint text must be header-only:\n$t1")
-      // resolution, stats pruning, and schema come from the parquet body
-      assert(Snapshots.read(spark, root, 1).count() === 400)
-      val pruned = Snapshots.readWhere(spark, root, 1,
-        Seq(Snapshots.StatsPred.GtEq("doc_id", 350L)))
-      assert(pruned.count() === 50)
-      assert(pruned.inputFiles.length < 8, "cpq-carried stats still prune")
-      // a corpus-scale analyzeBloom (≥ threshold payloads) writes its
-      // payloads STRAIGHT to a sidecar and appends the ref to its
-      // DELTA — never 10⁵ text overlay lines (the 77 MB analyze-delta
-      // trap ManifestBench caught)
-      Snapshots.analyzeBloom(spark, root, Seq("fp"))
-      val v2 = Snapshots.latestVersion(spark, root)
-      val t2 = manifestText(root, v2)
-      assert(t2.contains("#base:") && t2.contains("#bloomq:") &&
-        !t2.contains("#bloom:part"),
-        s"a corpus-scale analyze appends a sidecar ref to its delta:\n$t2")
-      // force the next commit FULL (checkpoint cadence would be v16;
-      // a rewrite shrinking the file set flips full too — use the
-      // threshold: appends keep it delta, so drive to the cadence)
-      (v2 + 1 to Snapshots.CheckpointEvery).foreach { i =>
-        Snapshots.append(spark, root,
-          Seq((10000L + i, 0L, s"x$i")).toDF("doc_id", "fp", "src").coalesce(1))
-      }
-      val v16 = Snapshots.latestVersion(spark, root)
-      assert(v16 === Snapshots.CheckpointEvery)
-      val t16 = manifestText(root, v16)
-      assert(t16.contains("#cpq:") && t16.contains("#bloomq:") &&
-        !t16.contains("#bloom:part"),
-        s"the checkpoint consolidates blooms into a sidecar:\n$t16")
-      // the sidecar probe still prunes an Eq on the uncorrelated
-      // fingerprint — and never wrongly (results match the unpruned).
-      // Assert on the BLOOM-COVERED original files: the threshold-era
-      // appends carry no blooms yet and rightly stay planned.
-      def names(xs: Iterable[String]) =
-        xs.map(p => p.substring(p.lastIndexOf('/') + 1)).toSet
-      val origNames = names(Snapshots.read(spark, root, 1).inputFiles.toSeq)
-      val target = base.filter(col("doc_id") === 200L)
-        .select("fp").head().getLong(0)
-      val hit = Snapshots.readWhere(spark, root, v16,
-        Seq(Snapshots.StatsPred.Eq("fp", target)))
-      assert(ids(hit) === Seq(200L))
-      assert(names(hit.inputFiles.toSeq).count(origNames) <= 2,
-        "the lazily-loaded sidecar bloom must exclude non-holding files")
-      // coverage probe sees sidecar keys: a re-analyze is a no-op on
-      // the standing files (returns without a new commit when nothing
-      // is missing — here the appends ARE missing, so it commits once
-      // and a second run is the no-op)
-      val va = Snapshots.analyzeBloom(spark, root, Seq("fp"))
-      assert(va === v16 + 1, "append files were missing blooms")
-      assert(Snapshots.analyzeBloom(spark, root, Seq("fp")) === va,
-        "fully-covered (overlay + sidecar) analyze must be a commit-free no-op")
-      // expire: the superseded v1 checkpoint body GC's, the live v16
-      // body + sidecar survive, reads keep working
-      val mdir = new java.io.File(s"$root/manifests")
-      def dirNames() = mdir.listFiles().filter(_.isDirectory).map(_.getName).toSet
-      val beforeDirs = dirNames()
-      assert(beforeDirs.exists(_.startsWith("cp1-")))
-      Snapshots.expire(spark, root, retainMin = v16, orphanGraceMs = 0L)
-      Thread.sleep(25)
-      Snapshots.expire(spark, root, retainMin = v16, orphanGraceMs = 0L)
-      val afterDirs = dirNames()
-      assert(!afterDirs.exists(_.startsWith("cp1-")),
-        "an expired checkpoint's parquet body is reclaimed")
-      assert(afterDirs.exists(_.startsWith(s"cp$v16-")),
-        "the live checkpoint body survives the sweep")
-      assert(Snapshots.read(spark, root,
-        Snapshots.latestVersion(spark, root)).count() === 400 + 14)
-      // post-expire, post-re-analyze: every file is bloom-covered
-      // (originals via the sidecar, appends via the analyze overlay),
-      // so the point lookup plans almost nothing
-      val hit2 = Snapshots.readWhere(spark, root,
-        Snapshots.latestVersion(spark, root),
-        Seq(Snapshots.StatsPred.Eq("fp", target)))
-      assert(ids(hit2) === Seq(200L) && hit2.inputFiles.length <= 2)
-    } finally Snapshots.CheckpointParquetAt = prev
+    val root = tmp("graft_snapckpt")
+    val base = spark.range(0L, 400L).select(col("id").as("doc_id"),
+      graft.functions.TextFunctions.docFingerprint(
+        concat(lit("cpq"), col("id").cast("string"))).as("fp"),
+      (col("id") % 7).cast("string").as("src"))
+    Snapshots.create(spark, root, base.repartitionByRange(8, col("doc_id")))
+    // v1 is a full manifest: resolution and stats pruning come from it
+    assert(Snapshots.read(spark, root, 1).count() === 400)
+    val pruned = Snapshots.readWhere(spark, root, 1,
+      Seq(Snapshots.StatsPred.GtEq("doc_id", 350L)))
+    assert(pruned.count() === 50)
+    assert(pruned.inputFiles.length < 8, "manifest stats prune")
+    // analyzeBloom is a metadata-only DELTA carrying its payloads
+    Snapshots.analyzeBloom(spark, root, Seq("fp"))
+    val v2 = Snapshots.latestVersion(spark, root)
+    val t2 = manifestText(root, v2)
+    assert(t2.contains("#base:") && t2.contains("#bloom:part"),
+      s"an analyze commits its blooms as a delta:\n$t2")
+    // appends keep the chain delta until the checkpoint cadence
+    (v2 + 1 to Snapshots.CheckpointEvery).foreach { i =>
+      Snapshots.append(spark, root,
+        Seq((10000L + i, 0L, s"x$i")).toDF("doc_id", "fp", "src").coalesce(1))
+    }
+    val v16 = Snapshots.latestVersion(spark, root)
+    assert(v16 === Snapshots.CheckpointEvery)
+    assert(!manifestText(root, v16).contains("#base:"),
+      "the cadence version is written full")
+    // the blooms carried into the full manifest still prune an Eq on
+    // the uncorrelated fingerprint — and never wrongly (results match
+    // the unpruned). Assert on the BLOOM-COVERED original files: the
+    // appends carry no blooms yet and rightly stay planned.
+    def names(xs: Iterable[String]) =
+      xs.map(p => p.substring(p.lastIndexOf('/') + 1)).toSet
+    val origNames = names(Snapshots.read(spark, root, 1).inputFiles.toSeq)
+    val target = base.filter(col("doc_id") === 200L)
+      .select("fp").head().getLong(0)
+    val hit = Snapshots.readWhere(spark, root, v16,
+      Seq(Snapshots.StatsPred.Eq("fp", target)))
+    assert(ids(hit) === Seq(200L))
+    assert(names(hit.inputFiles.toSeq).count(origNames) <= 2,
+      "the carried bloom must exclude non-holding files")
+    // the appends ARE missing blooms, so a re-analyze commits once and
+    // a second run is the no-op
+    val va = Snapshots.analyzeBloom(spark, root, Seq("fp"))
+    assert(va === v16 + 1, "append files were missing blooms")
+    assert(Snapshots.analyzeBloom(spark, root, Seq("fp")) === va,
+      "a fully-covered analyze must be a commit-free no-op")
+    Snapshots.expire(spark, root, retainMin = v16, orphanGraceMs = 0L)
+    assert(Snapshots.read(spark, root,
+      Snapshots.latestVersion(spark, root)).count() === 400 + 14)
+    // post-expire, post-re-analyze: every file is bloom-covered, so
+    // the point lookup plans almost nothing
+    val hit2 = Snapshots.readWhere(spark, root,
+      Snapshots.latestVersion(spark, root),
+      Seq(Snapshots.StatsPred.Eq("fp", target)))
+    assert(ids(hit2) === Seq(200L) && hit2.inputFiles.length <= 2)
   }
 
   test("prune shapes: Or, IsNull/IsNotNull null counts, and LIKE-prefix ranges — planner-integrated") {
@@ -576,5 +540,21 @@ class SnapshotMetaSpec extends AnyFunSuite {
     assert(t2.contains("#future:keep-me"),
       s"materializeManifest must carry unknown forward-compat lines:\n$t2")
     assert(Snapshots.read(spark, root, 2).count() === 3)
+    // the retired columnar checkpoint lines are NOT forward-compat: a
+    // version carrying one fails fast, naming root and version, instead
+    // of resolving with no files. Fresh roots: the manifest memo serves
+    // versions this JVM already resolved, so the line must land in a
+    // version never read
+    Seq("#cpq:cp1-0a1b2c3d", "#bloomq:bl1-0a1b2c3d").foreach { line =>
+      val r = tmp("graft_snapcol")
+      Snapshots.create(spark, r, Seq((1L, "a")).toDF("doc_id", "src"))
+      val p1 = java.nio.file.Paths.get(s"$r/manifests/v1.txt")
+      java.nio.file.Files.write(p1,
+        (new String(java.nio.file.Files.readAllBytes(p1), "UTF-8") +
+          s"\n$line").getBytes("UTF-8"))
+      val e = intercept[IllegalStateException](Snapshots.read(spark, r, 1))
+      assert(e.getMessage.contains(s"v1 at $r"),
+        s"$line must fail naming the version: ${e.getMessage}")
+    }
   }
 }

@@ -3,12 +3,13 @@
 
 Usage:
   python3 tools/ab_pairs.py --base <checkout> --change <checkout>
-      --workload <name> --seeds 11-20 --out ab.json
+      --workload <name>[,<name>...] --seeds 11-20 --out ab.json
 
-For each seed it runs `graftbench/run.py --trace 0` once in each checkout,
-one run at a time, alternating which side goes first (base first on the
-first seed). Every run's summary line is written to the --out JSON file as
-the runs finish. It then prints, for each end-to-end metric in
+For each workload in turn and each seed it runs `graftbench/run.py
+--trace 0` once in each checkout, one run at a time, alternating which side
+goes first (base first on the first seed). Every run's summary line, for
+every workload, is written to the --out JSON file as the runs finish. After
+each workload's pairs it prints, for each end-to-end metric in
 BENCHMARK.json: both medians and quartiles, how many pairs the change won,
 whether the claim rule holds (the change wins at least 9 of every 10
 pairs, and its median beats the base median by more than the base's
@@ -16,8 +17,9 @@ interquartile range), and the no-regression verdict against the metric's
 `bound`: `ok` when the change's median is no worse than the base median by
 more than the bound (relative), `WORSE` when it is, and `unresolved` when
 the base's IQR/median exceeds the bound (the runs spread too widely to
-tell) unless every change run beats every base run. It refuses to report
-if any run was incorrect or had failed ops. It only reads run.py's output.
+tell) unless every change run beats every base run. It refuses to report,
+and stops, if any run was incorrect or had failed ops. It only reads
+run.py's output.
 """
 import argparse
 import json
@@ -62,45 +64,24 @@ def verdict(base, change, bound, lower):
     return "WORSE" if worse > bound * abs(mb) else "ok"
 
 
-def main():
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--base", required=True, help="checkout of the parent commit")
-    ap.add_argument("--change", required=True, help="checkout of the change")
-    ap.add_argument("--workload", required=True)
-    ap.add_argument("--seeds", required=True, help="e.g. 11-20")
-    ap.add_argument("--out", required=True, help="JSON file for every run's summary line")
-    a = ap.parse_args()
-    bench = json.load(open(os.path.join(a.base, "BENCHMARK.json")))
-    sides = {"base": os.path.abspath(a.base), "change": os.path.abspath(a.change)}
-    runs = []
-    for i, seed in enumerate(seeds(a.seeds)):
-        order = ["base", "change"] if i % 2 == 0 else ["change", "base"]
-        for side in order:
-            t = time.time()
-            summary = run(sides[side], a.workload, seed, bench["run_seconds"])
-            runs.append({"workload": a.workload, "seed": seed, "side": side,
-                         "first": side == order[0], "summary": summary})
-            with open(a.out, "w") as fh:
-                json.dump(runs, fh, indent=1)
-            print(f"seed {seed} {side}: correct={summary['correct']} "
-                  f"failed={summary['failed']} wall={time.time() - t:.1f}s", flush=True)
-
+def report(workload, runs, bench, sides, seed_spec):
+    """Print one workload's table; exit if any of its runs was bad."""
     bad = [r for r in runs if not r["summary"]["correct"] or r["summary"]["failed"]]
     if bad:
         for r in bad:
-            print(f"seed {r['seed']} {r['side']}: correct={r['summary']['correct']} "
-                  f"failed={r['summary']['failed']}")
+            print(f"{workload} seed {r['seed']} {r['side']}: "
+                  f"correct={r['summary']['correct']} failed={r['summary']['failed']}")
         sys.exit("refusing to report: a run was incorrect or had failed ops")
 
     pairs = len(runs) // 2
-    print(f"{a.workload}: {pairs} pairs, seeds {a.seeds}")
+    print(f"{workload}: {pairs} pairs, seeds {seed_spec}")
     print(f"{'metric':12s} {'base med [q1, q3]':>34s} {'change med [q1, q3]':>34s} "
           f"{'delta':>7s} {'wins':>6s}  {'claim':5s}  bound")
     for m in bench["end_to_end"]:
         name, lower = m["name"], m["better"] == "lower"
         val = {(r["seed"], r["side"]): r["summary"]["metrics"][name]["value"] for r in runs}
-        by_side = {side: [val[(s, side)] for s in seeds(a.seeds)] for side in sides}
-        wins = sum(1 for s in seeds(a.seeds)
+        by_side = {side: [val[(s, side)] for s in seeds(seed_spec)] for side in sides}
+        wins = sum(1 for s in seeds(seed_spec)
                    if (val[(s, "change")] < val[(s, "base")]) == lower
                    and val[(s, "change")] != val[(s, "base")])
         med = {side: statistics.median(xs) for side, xs in by_side.items()}
@@ -113,7 +94,36 @@ def main():
         rule = verdict(by_side["base"], by_side["change"], m["bound"], lower)
         print(f"{name:12s} {cell['base']:>34s} {cell['change']:>34s} {delta:+7.1%} "
               f"{wins:>2d}/{pairs:<3d}  {'holds' if holds else 'no':5s}  {rule} "
-              f"(±{m['bound']:.0%})")
+              f"(±{m['bound']:.0%})", flush=True)
+
+
+def main():
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--base", required=True, help="checkout of the parent commit")
+    ap.add_argument("--change", required=True, help="checkout of the change")
+    ap.add_argument("--workload", required=True,
+                    help="one workload, or a comma-separated list run in turn")
+    ap.add_argument("--seeds", required=True, help="e.g. 11-20")
+    ap.add_argument("--out", required=True, help="JSON file for every run's summary line")
+    a = ap.parse_args()
+    bench = json.load(open(os.path.join(a.base, "BENCHMARK.json")))
+    sides = {"base": os.path.abspath(a.base), "change": os.path.abspath(a.change)}
+    runs = []
+    for workload in a.workload.split(","):
+        mine = []
+        for i, seed in enumerate(seeds(a.seeds)):
+            order = ["base", "change"] if i % 2 == 0 else ["change", "base"]
+            for side in order:
+                t = time.time()
+                summary = run(sides[side], workload, seed, bench["run_seconds"])
+                mine.append({"workload": workload, "seed": seed, "side": side,
+                             "first": side == order[0], "summary": summary})
+                with open(a.out, "w") as fh:
+                    json.dump(runs + mine, fh, indent=1)
+                print(f"{workload} seed {seed} {side}: correct={summary['correct']} "
+                      f"failed={summary['failed']} wall={time.time() - t:.1f}s", flush=True)
+        runs += mine
+        report(workload, mine, bench, sides, a.seeds)
 
 
 if __name__ == "__main__":
