@@ -48,10 +48,10 @@ object SparkEntry {
     // §2.4 deduplication
     "q_dedup_exact"         -> Dedup.exact _,
     "q_dedup_ngram_jaccard" -> Dedup.ngramJaccard _,
-    "q_dedup_minhash"       -> Dedup.minhashLsh _,
+    "q_dedup_minhash"       -> ((s, d) => Dedup.minhashLsh(s, d)),
     // near-dup pairs rolled up to the (source, source) matrix
     "q_dup_matrix"          -> Dedup.dupMatrix _,
-    "q_dedup_simhash"       -> Dedup.simhash _,
+    "q_dedup_simhash"       -> ((s, d) => Dedup.simhash(s, d)),
     "q_dedup_embedding"     -> Similarity.embeddingDup _,
     "q_dedup_containment"   -> Dedup.containment _,
     "q_dedup_incremental"   -> Dedup.incremental _,
@@ -152,7 +152,7 @@ object SparkEntry {
     "q_source_overlap" -> CorpusCuration.sourceOverlap _,
     // weighted PageRank over the content-sharing source graph (edges =
     // cross-source shared-shingle counts; 8 unrolled power iterations)
-    "q_source_rank"    -> CorpusCuration.sourceRank _,
+    "q_source_rank"    -> ((s, d) => CorpusCuration.sourceRank(s, d)),
     "q_kl_drift"       -> CorpusCuration.klDrift _,
     "q_epoch_shuffle"  -> ((s, d) => CorpusCuration.epochShuffle(s, d)),
     "q_quality_calibration" -> CorpusCuration.qualityCalibration _,

@@ -55,24 +55,6 @@ object Bpe {
 
   private val SymSep = "  " // between wrapped symbols
 
-  /** Distinct-word bound for the driver-local learner fast path (r16
-    * opt): the [[BpeRounds]] rounds operate on the VOCABULARY frame
-    * (one (rep, n) row per distinct word), and each distributed round
-    * costs an explode-agg shuffle plus a 1-row TakeOrdered collect —
-    * ~0.4 s of job latency per round at any small scale
-    * (shared_bpe_learner measured 5.5 s at sf0.1 for ~0.3 s of actual
-    * arithmetic). Below this many distinct words the vocab collects
-    * (≤ ~10 MB) and the rounds run driver-local with BIT-IDENTICAL
-    * semantics: integer pair counts, (c desc, lhs, rhs) argmax over
-    * ASCII-only symbols (Java and UTF8 string order agree on ASCII),
-    * and `String.replace` = Spark `StringReplace` = left-to-right
-    * non-overlapping literal scan (the documented cross-engine merge
-    * representation; BpeSpec asserts local == distributed). Above the
-    * cap — a real crawl's 10⁸-word vocabulary — the distributed rounds
-    * run unchanged. Var: spec seam.
-    */
-  private[graft] var LocalVocabCap = 131072L
-
   /** Learned merges + induced top-[[VocabTopK]] vocabulary, memoized.
     * One learner run computes both: the vocab aggregation is one more
     * pass over the still-persisted vocabulary frame (or the collected
@@ -89,29 +71,50 @@ object Bpe {
     */
   private def learned(s: SparkSession, dir: String)
       : (Seq[(Int, String, String, String, Long)], Seq[(String, Long)]) =
-    graft.plans.Memo.value(s, dir, "bpe.learned") {
-      val words = wordCounts(s, dir).persist()
-      try {
-        if (words.count() <= LocalVocabCap)
-          learnLocal(words.collect().map(r => (r.getString(0), r.getLong(1))))
-        else {
-          val (merges, fin) = learnDistributed(words)
-          val vocab = fin
-            .select(explode(split(trim(col("rep")), SymSep)).as("subword"), col("n"))
-            .groupBy("subword").agg(sum(col("n")).as("freq"))
-            .orderBy(col("freq").desc, col("subword"))
-            .limit(VocabTopK)
-            .collect()
-            .map(r => (r.getString(0), r.getLong(1)))
-            .toSeq
-          (merges, vocab)
-        }
-      } finally { words.unpersist(); () }
-    }
+    graft.plans.Memo.value(s, dir, "bpe.learned")(learn(wordCounts(s, dir)))
+
+  /** One learner run over a (rep, n) vocabulary frame.
+    *
+    * `localVocabCap` is the distinct-word bound for the driver-local
+    * fast path (r16 opt): the [[BpeRounds]] rounds operate on the VOCABULARY frame
+    * (one (rep, n) row per distinct word), and each distributed round
+    * costs an explode-agg shuffle plus a 1-row TakeOrdered collect —
+    * ~0.4 s of job latency per round at any small scale
+    * (shared_bpe_learner measured 5.5 s at sf0.1 for ~0.3 s of actual
+    * arithmetic). Below this many distinct words the vocab collects
+    * (≤ ~10 MB) and the rounds run driver-local with BIT-IDENTICAL
+    * semantics: integer pair counts, (c desc, lhs, rhs) argmax over
+    * ASCII-only symbols (Java and UTF8 string order agree on ASCII),
+    * and `String.replace` = Spark `StringReplace` = left-to-right
+    * non-overlapping literal scan (the documented cross-engine merge
+    * representation; BpeSpec asserts local == distributed). Above the
+    * cap — a real crawl's 10⁸-word vocabulary — the distributed rounds
+    * run unchanged. Specs pass 0 to force the distributed rounds.
+    */
+  private[graft] def learn(words0: DataFrame, localVocabCap: Long = 131072L)
+      : (Seq[(Int, String, String, String, Long)], Seq[(String, Long)]) = {
+    val words = words0.persist()
+    try {
+      if (words.count() <= localVocabCap)
+        learnLocal(words.collect().map(r => (r.getString(0), r.getLong(1))))
+      else {
+        val (merges, fin) = learnDistributed(words)
+        val vocab = fin
+          .select(explode(split(trim(col("rep")), SymSep)).as("subword"), col("n"))
+          .groupBy("subword").agg(sum(col("n")).as("freq"))
+          .orderBy(col("freq").desc, col("subword"))
+          .limit(VocabTopK)
+          .collect()
+          .map(r => (r.getString(0), r.getLong(1)))
+          .toSeq
+        (merges, vocab)
+      }
+    } finally { words.unpersist(); () }
+  }
 
   /** The driver-local rounds over a collected (rep, n) vocabulary —
     * the same algorithm as [[learnDistributed]] statement for
-    * statement; see [[LocalVocabCap]] for why equality holds.
+    * statement; see [[learn]] for why equality holds.
     */
   private[graft] def learnLocal(words0: Array[(String, Long)])
       : (Seq[(Int, String, String, String, Long)], Seq[(String, Long)]) = {
@@ -170,7 +173,7 @@ object Bpe {
   /** The corpus word-count vocabulary as wrapped-symbol reps — the one
     * corpus-sized pass of the learner (one map-side-combined shuffle).
     */
-  private def wordCounts(s: SparkSession, dir: String): DataFrame =
+  private[graft] def wordCounts(s: SparkSession, dir: String): DataFrame =
     Tables.documentsSpread(s, dir)
       .select(explode(TextFunctions.tokens(col("text"))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("n"))

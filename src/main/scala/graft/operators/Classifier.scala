@@ -105,11 +105,10 @@ object Classifier {
       trainCountsFromDocs(Tables.documentsSpread(s, dir))
     }
 
-  /** Counting stage from any (doc_id, source, text) frame — shared
-    * verbatim with [[graft.streaming.StreamingNbModel]], whose merged
-    * state is the component-wise sum of per-batch frames (counts are
-    * additive), so the incrementally trained model == the batch model
-    * EXACTLY after any prefix of batches.
+  /** Counting stage from any (doc_id, source, text) frame. Counts are
+    * additive, so per-batch frames summed in a
+    * [[graft.streaming.Additive]] and handed to [[modelTable]] give the
+    * batch model EXACTLY after any prefix of batches (ClassifierSpec).
     */
   private[graft] def trainCountsFromDocs(docs: DataFrame): DataFrame =
     docs
@@ -119,25 +118,25 @@ object Classifier {
       .agg(sum(col("cur").cast("long")).as("c_cur"),
         sum(lit(1L) - col("cur")).as("c_web"))
 
-  /** Per-batch train-fold doc tally (curated, total) — the prior's
-    * additive sufficient statistic, shared with the streaming twin.
+  /** Per-batch train-fold doc tally (n_cur, n_docs) — the prior's
+    * additive sufficient statistic (a keyless
+    * [[graft.streaming.Additive]] sums it across batches).
     */
-  private[graft] def trainDocTally(docs: DataFrame): (Long, Long) = {
-    val r = docs.filter(splitBucket < TrainPermille)
-      .agg(coalesce(sum(isCurated.cast("long")), lit(0L)), count(lit(1))).head()
-    (r.getLong(0), r.getLong(1))
-  }
+  private[graft] def trainDocTallyFrame(docs: DataFrame): DataFrame =
+    docs.filter(splitBucket < TrainPermille)
+      .agg(coalesce(sum(isCurated.cast("long")), lit(0L)).as("n_cur"),
+        count(lit(1)).as("n_docs"))
 
   /** Value stage: (t, c_cur, c_web) counts + totals → the model table
-    * with micro-nat log-ratios. Shared with the streaming twin.
+    * with micro-nat log-ratios.
     */
   private[graft] def modelFromCounts(counts: DataFrame,
       tc: Long, tw: Long, v: Long): DataFrame =
     counts.select(col("t"), col("c_cur"), col("c_web"), llrU(tc, tw, v).as("llr_u"))
 
   /** Scoring stage: docs × model table (+ prior) → the q_nb_score
-    * frame. Shared with the streaming twin so live scoring under the
-    * incrementally trained model == the batch operator exactly.
+    * frame; scoring under summed per-batch counts == the batch operator
+    * exactly.
     */
   private[graft] def scoreStage(docs: DataFrame, model: DataFrame,
       priorU: Long): DataFrame = {
@@ -168,14 +167,16 @@ object Classifier {
     dsirFrame(s, dir).count()
   }
 
-  /** (totCur, totWeb, vocab) from the persisted counts — a 3-number
-    * driver collect (metadata-bounded by definition).
+  /** (totCur, totWeb, vocab) from a counts frame — a 3-number driver
+    * collect (metadata-bounded by definition).
     */
-  private def nbTotals(s: SparkSession, dir: String): (Long, Long, Long) = {
-    val r = nbCounts(s, dir)
-      .agg(sum("c_cur"), sum("c_web"), count(lit(1))).head()
+  private[graft] def totalsOf(counts: DataFrame): (Long, Long, Long) = {
+    val r = counts.agg(sum("c_cur"), sum("c_web"), count(lit(1))).head()
     (r.getLong(0), r.getLong(1), r.getLong(2))
   }
+
+  private def nbTotals(s: SparkSession, dir: String): (Long, Long, Long) =
+    totalsOf(nbCounts(s, dir))
 
   /** Per-token Laplace-smoothed log-likelihood ratio in micro-nats. */
   private def llrU(totCur: Long, totWeb: Long, v: Long): Column =
@@ -192,11 +193,16 @@ object Classifier {
     * output (corpus-scale: take the unordered form).
     */
   def nbTrain(s: SparkSession, dir: String, ordered: Boolean = true): DataFrame = {
-    val (tc, tw, v) = nbTotals(s, dir)
-    val out = modelFromCounts(nbCounts(s, dir), tc, tw, v)
+    val out = modelTable(nbCounts(s, dir))
+    if (ordered) out.orderBy("t") else out
+  }
+
+  /** The `q_nb_train` columns from a (t, c_cur, c_web) counts frame. */
+  private[graft] def modelTable(counts: DataFrame): DataFrame = {
+    val (tc, tw, v) = totalsOf(counts)
+    modelFromCounts(counts, tc, tw, v)
       .select(col("t"), col("c_cur"), col("c_web"),
         (col("llr_u").cast("double") / lit(Dp6)).as("llr"))
-    if (ordered) out.orderBy("t") else out
   }
 
   // ---------------------------------------------------------------------
@@ -207,13 +213,11 @@ object Classifier {
     * two counts → one double → one long).
     */
   private def nbPriorU(s: SparkSession, dir: String): Long = {
-    val (nc, n) = trainDocTally(Tables.documentsSpread(s, dir))
-    priorUOf(nc, n)
+    val r = trainDocTallyFrame(Tables.documentsSpread(s, dir)).head()
+    priorUOf(r.getLong(0), r.getLong(1))
   }
 
-  /** Prior from the (curated, total) doc tally — shared arithmetic with
-    * the streaming twin's merged counters.
-    */
+  /** Prior from the (curated, total) doc tally. */
   private[graft] def priorUOf(nCur: Long, nDocs: Long): Long =
     u6d(math.log((nCur + 1).toDouble / (nDocs - nCur + 1).toDouble))
 
@@ -438,24 +442,26 @@ object Classifier {
     * and unseen buckets fall back to the pure-smoothing ratio `lw0`.
     */
   /** Per-batch bucket-bounded training counts (≤ [[DsirBuckets]] rows,
-    * driver-safe): (f, c_t, c_r). ADDITIVE across batches — shared with
-    * [[graft.streaming.StreamingDsir]], whose state is the
-    * component-wise sum (O(DsirBuckets) regardless of stream length).
+    * driver-safe): (f, c_t, c_r). ADDITIVE across batches: summed in a
+    * [[graft.streaming.Additive]] (O(DsirBuckets) regardless of stream
+    * length) and handed to [[dsirScoreFrame]], they weight documents
+    * exactly like the batch operator (ClassifierSpec).
     */
-  private[graft] def dsirTrainCounts(docs: DataFrame): Array[(Long, Long, Long)] =
+  private[graft] def dsirCountFrame(docs: DataFrame): DataFrame =
     docs.filter(splitBucket < TrainPermille)
       .select(col("source"), tokenHashes(col("text")).as("hs"))
       .select(col("source"), explode(featuresOf(col("hs"))).as("f"))
       .groupBy("f")
       .agg(sum(isCurated.cast("long")).as("c_t"), count(lit(1)).as("c_r"))
+
+  private def dsirTrainCounts(docs: DataFrame): Array[(Long, Long, Long)] =
+    dsirCountFrame(docs)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       // sorted: the local frame built from it is deterministic
       // (collect order is free)
       .sortBy(_._1)
 
-  /** Value + scoring stage from a counts table — shared verbatim with
-    * the streaming twin so scoring under merged counts == batch.
-    */
+  /** Value + scoring stage from a (f, c_t, c_r) counts table. */
   private[graft] def dsirScoreFrame(s: SparkSession, docs: DataFrame,
       cnt: Seq[(Long, Long, Long)]): DataFrame = {
     val tt = cnt.iterator.map(_._2).sum

@@ -40,7 +40,12 @@ object Components {
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String): DataFrame =
     run(pairs, aCol, bCol)._1
 
-  /** Edge-count bound for the driver-local union-find fast path (r16
+  /** Implementation with the round count exposed for specs (the
+    * planted-long-chain round bound). Local fast path reports
+    * rounds = -1 (the spec's distributed-round bound is about the
+    * contraction, which did not run).
+    *
+    * `localEdgeCap` bounds the driver-local union-find fast path (r16
     * opt): a verified near-dup / linkage pair graph is SPARSE (orders
     * of magnitude below corpus size), and below this many canonical
     * edges the O(log² n) star-contraction rounds are pure job-latency
@@ -51,18 +56,11 @@ object Components {
     * IDENTICAL by construction (cluster_id = component-min id, exactly
     * this function's contract — ComponentsSpec proves equality on the
     * same graphs). Above the cap the distributed contraction runs
-    * unchanged. Var: the spec forces 0 to exercise the distributed
-    * path on small fixtures.
+    * unchanged. Specs pass 0 to exercise the distributed path on
+    * small fixtures.
     */
-  private[graft] var LocalEdgeCap = 65536L
-
-  /** Implementation with the round count exposed for specs (the
-    * planted-long-chain round bound). Local fast path reports
-    * rounds = -1 (the spec's distributed-round bound is about the
-    * contraction, which did not run).
-    */
-  private[graft] def run(pairs: DataFrame, aCol: String, bCol: String)
-      : (DataFrame, Int) = {
+  private[graft] def run(pairs: DataFrame, aCol: String, bCol: String,
+                         localEdgeCap: Long = 65536L): (DataFrame, Int) = {
     val raw = pairs.select(col(aCol).as("a"), col(bCol).as("b"))
     val nodes = raw.select(col("a").as("doc_id"))
       .union(raw.select(col("b").as("doc_id"))).distinct().localCheckpoint()
@@ -83,8 +81,8 @@ object Components {
            org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => true
       case _ => false
     }
-    if (integralIds && e.count() <= LocalEdgeCap &&
-        nodes.count() <= 2 * LocalEdgeCap)
+    if (integralIds && e.count() <= localEdgeCap &&
+        nodes.count() <= 2 * localEdgeCap)
       return (localLabels(nodes, e), -1)
     var rounds = 0
     // Terminate on the star-forest PROPERTY itself (every head has

@@ -418,7 +418,8 @@ object CorpusCuration {
     * are (labels × dims)-sized.
     */
   /** Additive grouped stage — the sufficient statistic for the drift
-    * card (and the streaming twin's state): per (label, dim) the EXACT
+    * card (and, summed per batch in a [[graft.streaming.Additive]],
+    * the live monitor's state): per (label, dim) the EXACT
     * decimal coordinate sum + member count. Decimal adds are exact ⇒
     * associative ⇒ batching/partitioning-independent (the r7 float-sum
     * convention), which is what makes the stream == batch.
@@ -689,8 +690,9 @@ object CorpusCuration {
     langMismatchRates(langMismatchCounts(Tables.documentsSpread(s, dir)))
 
   /** Per-source additive counters from a (source, lang, text) frame —
-    * the per-batch aggregate of [[graft.streaming.StreamingLangMismatch]]
-    * (counters sum across batches).
+    * summed across batches in a [[graft.streaming.Additive]], they feed
+    * [[langMismatchRates]] exactly like the batch frame
+    * (CorpusCurationSpec).
     */
   private[graft] def langMismatchCounts(docs: DataFrame): DataFrame =
     docs
@@ -702,9 +704,7 @@ object CorpusCuration {
         sum(when(col("pred") =!= lit("unknown") && col("pred") =!= col("declared"), 1L)
           .otherwise(0L)).as("n_mismatch"))
 
-  /** Rate stage over the counters — shared verbatim with the streaming
-    * twin so stream == batch exactly.
-    */
+  /** Rate stage over the counters. */
   private[graft] def langMismatchRates(counts: DataFrame): DataFrame =
     counts
       .select(col("source"), col("n_docs"), col("n_confident"), col("n_mismatch"),
@@ -745,11 +745,11 @@ object CorpusCuration {
   def klDrift(s: SparkSession, dir: String): DataFrame =
     klFromCounts(sourceTokenCounts(s, dir))
 
-  /** Value stage from a (source, t, c_st) count frame — shared verbatim
-    * with [[graft.streaming.StreamingKlDrift]], whose merged state is
-    * the same frame: counts are additive, the decimal contribution sum
-    * is exact hence associative, so stream == batch EXACTLY after any
-    * prefix of batches.
+  /** Value stage from a (source, t, c_st) count frame
+    * ([[sourceTokenCountsOf]]): counts are additive and the decimal
+    * contribution sum is exact hence associative, so the frame summed
+    * per batch in a [[graft.streaming.Additive]] gives the batch rows
+    * EXACTLY after any prefix of batches (CorpusCurationSpec).
     */
   private[graft] def klFromCounts(st: DataFrame): DataFrame = {
     val tt = st.groupBy("t").agg(sum("c_st").as("c_t"))
@@ -977,7 +977,7 @@ object CorpusCuration {
     * all [[PrIters]] rounds in SQL with the generated overlap oracle
     * as its edge subquery (one source of truth).
     */
-  /** Edge-count bound for the driver-local PageRank fast path (r17,
+  /** `localPrEdgeCap` bounds the driver-local PageRank fast path (r17,
     * the Components/Bpe bounded-local pattern): the source graph is
     * dim²-bounded (sources, not documents), and below this many
     * symmetric edges the 8 checkpointed power-iteration rounds are
@@ -989,20 +989,18 @@ object CorpusCuration {
     * partial sums (associative, so fold order is free), and the same
     * double chain for the damping step — OperatorsSpec pins local ==
     * distributed. At web scale (10⁶⁺ hosts) the edge set exceeds the
-    * cap and the distributed rounds run unchanged. Var: specs force 0.
+    * cap and the distributed rounds run unchanged. Specs pass 0.
     */
-  private[graft] var LocalPrEdgeCap = 65536L
-
-  def sourceRank(s: SparkSession, dir: String): DataFrame = {
+  def sourceRank(s: SparkSession, dir: String, localPrEdgeCap: Long = 65536L): DataFrame = {
     val pairs = prPairs(s, dir)
     val nodesAll = Tables.documentsSpread(s, dir).select(col("source")).distinct()
     // the pair frame is session-persisted and dim²-bounded; one cheap
     // count gates the edge collect, and the node collect is bounded by
     // a limit probe (a corpus can have many sources but few overlaps —
     // the Components reflexive-pair lesson)
-    if (LocalPrEdgeCap > 0 && pairs.count() * 2 <= LocalPrEdgeCap) {
-      val nodeRows = nodesAll.limit(LocalPrEdgeCap.toInt + 1).collect()
-      if (nodeRows.length <= LocalPrEdgeCap) {
+    if (localPrEdgeCap > 0 && pairs.count() * 2 <= localPrEdgeCap) {
+      val nodeRows = nodesAll.limit(localPrEdgeCap.toInt + 1).collect()
+      if (nodeRows.length <= localPrEdgeCap) {
         val pr = localSourceRank(s, nodeRows.map(_.getString(0)),
           pairs.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))))
         import s.implicits._
@@ -1207,10 +1205,17 @@ object CorpusCuration {
     */
   private def sourceTokenCounts(s: SparkSession, dir: String): DataFrame =
     graft.plans.Memo.shared(s, dir, "curation.sourceTokenCounts") {
-      Tables.documentsSpread(s, dir)
-        .select(col("source"), explode(tokens(col("text"))).as("t"))
-        .groupBy("source", "t").agg(count(lit(1)).as("c_st"))
+      sourceTokenCountsOf(Tables.documentsSpread(s, dir))
     }
+
+  /** (source, t, c_st) counts from a (source, text) frame — additive
+    * across any doc-level split, so per-batch frames summed in a
+    * [[graft.streaming.Additive]] feed [[klFromCounts]] and
+    * [[zipfFromCounts]] exactly like the batch frame.
+    */
+  private[graft] def sourceTokenCountsOf(docs: DataFrame): DataFrame =
+    docs.select(col("source"), explode(tokens(col("text"))).as("t"))
+      .groupBy("source", "t").agg(count(lit(1)).as("c_st"))
 
   /** Materialize the session-persisted curation frames (postings,
     * source signatures, (source, token) counts, bigram counts) for
@@ -1279,11 +1284,11 @@ object CorpusCuration {
     cardFromGrouped(cardGrouped(Tables.documentsSpread(s, dir)))
 
   /** Per-(source, content-hash) reduced stats — the ADDITIVE sufficient
-    * statistic for [[corpusCard]], shared with the streaming twin
-    * (`streaming.StreamingCorpusCard`): every card column derives from
+    * statistic for [[corpusCard]]: every card column derives from
     * these rows, and merging two corpora's grouped frames is
-    * component-wise addition per key (the KL-twin contract — decimal
-    * quality sums are exact, so associative). `pred`/`ntok` ride the
+    * component-wise addition per key in a [[graft.streaming.Additive]]
+    * (decimal quality sums are exact, so associative;
+    * CorpusCurationSpec pins stream == batch). `pred`/`ntok` ride the
     * group because identical text (same md5) has identical per-doc
     * measures; the quality sum stays an aggregate so the merge is
     * uniform addition.
@@ -1356,7 +1361,7 @@ object CorpusCuration {
   }
 
   /** The card's value stage over a [[cardGrouped]] frame (batch-built
-    * or twin-merged): distinct-hash counting becomes a row count, every
+    * or summed per batch): distinct-hash counting becomes a row count, every
     * other column a sum — identical values to the pre-refactor direct
     * aggregation because decimal addition is associative and `pred` is
     * functionally dependent on the hash.
@@ -1515,10 +1520,11 @@ object CorpusCuration {
   def zipfFit(s: SparkSession, dir: String): DataFrame =
     zipfFromCounts(sourceTokenCounts(s, dir))
 
-  /** Value stage from a (source, t, c_st) count frame — shared verbatim
-    * with [[graft.streaming.StreamingKlDrift]], whose merged state IS
-    * this frame (one monitor state, two views: KL watches the
-    * marginals' divergence, this watches their shape).
+  /** Value stage from a (source, t, c_st) count frame — the same
+    * frame [[klFromCounts]] reads, so one summed
+    * [[graft.streaming.Additive]] state serves both views (KL watches
+    * the marginals' divergence, this watches their shape;
+    * DistributionSpec pins stream == batch).
     */
   private[graft] def zipfFromCounts(st: DataFrame): DataFrame = {
     val byRank = Window.partitionBy("source")
@@ -1618,8 +1624,9 @@ object CorpusCuration {
   /** Per-batch (source, w1, w2) bigram counts from a (source, text)
     * frame — the additive sufficient statistic (documents arrive whole,
     * so pair extraction is map-only per row and the counts sum across
-    * any doc-level split); shared with
-    * [[graft.streaming.StreamingBigramEntropy]].
+    * any doc-level split); summed per batch in a
+    * [[graft.streaming.Additive]] (DistributionSpec pins stream ==
+    * batch).
     */
   private[graft] def bigramPairCounts(docs: DataFrame): DataFrame = {
     val toks = docs

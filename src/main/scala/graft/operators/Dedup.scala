@@ -218,34 +218,9 @@ object Dedup {
     sigs.select(col("doc_id"), posexplode(array(bandKeys: _*)).as(Seq("band_id", "key")))
   }
 
-  /** Docs per (band, key) bucket above which the band self-join salts.
-    * Uniform-hash buckets hold a handful of docs at any corpus size
-    * (65,536+ key values per band), so the cap only engages on a
-    * genuinely hot key — a template flood or mirror set collapsing a
-    * visible corpus fraction into ONE band signature, where the plain
-    * self-join computes the bucket's Θ(m²) pair fan-out in the single
-    * task owning the key. 256² pairs per task cell is comfortably
-    * inside a task's budget. Var: the skew spec lowers it to engage
-    * the salted path on a small planted fixture.
-    */
-  private[graft] var HotBandBucketCap = 256L
-
-  /** Hot-bucket detection samples 1 doc in this many (deterministic
-    * `pmod(hash(doc_id), mod) === 0`), so the sizes pass costs ~1/mod
-    * of a signature evaluation — the first salted-join cut measured
-    * the EXACT sizes agg as a full extra upstream pass (simhash paid
-    * a whole tokenHashes+simhash64 corpus scan just to count
-    * buckets). Estimated size = mod × sampled count; a bucket is
-    * treated hot at estimate > cap/2 (the halved bar absorbs sample
-    * noise — a marginal bucket gets nslice 1-2, which the unified
-    * triangle handles as the plain join, so a false positive costs
-    * one duplicate row copy and a false negative is only possible for
-    * buckets near the cap, never for the runaway key the salt
-    * exists for). Correctness never depends on WHICH buckets are
-    * flagged: the triangle emits the identical pair set at any
-    * nslice. Var: specs set 1 for exact, deterministic engagement.
-    */
-  private[graft] var HotDetectSampleMod = 16L
+  /** Default `hotBucketCap` / `sampleMod` of [[saltedBandSelfJoin]]. */
+  private val HotBucketCap = 256L
+  private val HotSampleMod = 16L
 
   /** Skew-bounded band-bucket self-join: candidate pairs
     * (doc_a < doc_b) from `banded` (doc_id, band_id, <key>, [payload])
@@ -274,7 +249,7 @@ object Dedup {
     * landmine — measured here as simhash at 6× cpu / 4 scans), and at
     * small stats estimates Catalyst even broadcasts the corpus×bands
     * frame. With the single-lineage shape the signature pass runs
-    * once, plus the 1-in-[[HotDetectSampleMod]] detection pass.
+    * once, plus the 1-in-`sampleMod` detection pass.
     *
     * The DIAGONAL cell (salt, salt) needs both roles of the same
     * slice, but shipping an x-copy AND a y-copy per row doubled the
@@ -296,22 +271,49 @@ object Dedup {
     * role), so the collect_list state is bounded by construction —
     * the exchange is pinned (see coocPairs) because the enumeration
     * fans out quadratically from byte-tiny grouped input.
+    *
+    * `hotBucketCap` is the docs per (band, key) bucket above which the
+    * band self-join salts. Uniform-hash buckets hold a handful of docs
+    * at any corpus size (65,536+ key values per band), so the cap only
+    * engages on a genuinely hot key — a template flood or mirror set
+    * collapsing a visible corpus fraction into ONE band signature,
+    * where the plain self-join computes the bucket's Θ(m²) pair fan-out
+    * in the single task owning the key. 256² pairs per task cell is
+    * comfortably inside a task's budget. The skew spec lowers it to
+    * engage the salted path on a small planted fixture.
+    *
+    * Hot-bucket detection samples 1 doc in `sampleMod` (deterministic
+    * `pmod(hash(doc_id), mod) === 0`), so the sizes pass costs ~1/mod
+    * of a signature evaluation — the first salted-join cut measured
+    * the EXACT sizes agg as a full extra upstream pass (simhash paid
+    * a whole tokenHashes+simhash64 corpus scan just to count
+    * buckets). Estimated size = mod × sampled count; a bucket is
+    * treated hot at estimate > cap/2 (the halved bar absorbs sample
+    * noise — a marginal bucket gets nslice 1-2, which the unified
+    * triangle handles as the plain join, so a false positive costs
+    * one duplicate row copy and a false negative is only possible for
+    * buckets near the cap, never for the runaway key the salt
+    * exists for). Correctness never depends on WHICH buckets are
+    * flagged: the triangle emits the identical pair set at any
+    * nslice. Specs pass 1 for exact, deterministic engagement.
     */
   private[graft] def saltedBandSelfJoin(s: SparkSession, banded0: DataFrame,
                                         keyCol: String,
-                                        payload: Option[String]): DataFrame = {
+                                        payload: Option[String],
+                                        hotBucketCap: Long = HotBucketCap,
+                                        sampleMod: Long = HotSampleMod): DataFrame = {
     val nPart = s.sessionState.conf.numShufflePartitions
     val pay = payload.toSeq
     val sampled =
-      if (HotDetectSampleMod <= 1L) banded0
-      else banded0.filter(pmod(hash(col("doc_id")), lit(HotDetectSampleMod)) === 0)
+      if (sampleMod <= 1L) banded0
+      else banded0.filter(pmod(hash(col("doc_id")), lit(sampleMod)) === 0)
     val hotKeys = sampled.groupBy("band_id", keyCol)
-      .agg((count(lit(1)) * HotDetectSampleMod).as("est"))
-      .filter(col("est") > HotBandBucketCap / 2)
+      .agg((count(lit(1)) * sampleMod).as("est"))
+      .filter(col("est") > hotBucketCap / 2)
     val sized = banded0.join(broadcast(hotKeys), Seq("band_id", keyCol), "left")
       .withColumn("nslice", greatest(lit(1L),
         ceil(coalesce(col("est"), lit(0L)).cast("double") /
-          lit(HotBandBucketCap.toDouble))).cast("int"))
+          lit(hotBucketCap.toDouble))).cast("int"))
       .withColumn("salt", pmod(hash(col("doc_id")), col("nslice")))
     // one exploded index k ∈ [0, nslice−1] covers both roles:
     // k < nslice−salt ⇒ x-copy in cell (salt, salt+k) (k = 0 is the
@@ -349,8 +351,13 @@ object Dedup {
         }: _*)
   }
 
-  def minhashLsh(s: SparkSession, dir: String): DataFrame =
-    minhashPairs(s, dir).orderBy("doc_a", "doc_b")
+  /** `hotBucketCap`/`sampleMod` are [[saltedBandSelfJoin]]'s; the pair
+    * frame is memoized per (session, dir), so a non-default value takes
+    * effect only on a released dir.
+    */
+  def minhashLsh(s: SparkSession, dir: String, hotBucketCap: Long = HotBucketCap,
+                 sampleMod: Long = HotSampleMod): DataFrame =
+    minhashPairs(s, dir, hotBucketCap, sampleMod).orderBy("doc_a", "doc_b")
 
   /** Session-persisted verified minhash pair frame (unordered): the
     * band join + co-occurrence verify is shuffled work that must not
@@ -359,12 +366,13 @@ object Dedup {
     * re-verification without the persist). The frame is SPARSE (near-
     * dup pairs only) — post-shuffle small, the kl_drift persist class.
     */
-  private def minhashPairs(s: SparkSession, dir: String): DataFrame =
+  private def minhashPairs(s: SparkSession, dir: String, hotBucketCap: Long = HotBucketCap,
+                           sampleMod: Long = HotSampleMod): DataFrame =
     graft.plans.Memo.shared(s, dir, "dedup.minhashPairs") {
       val docs = shingled(s, dir)
       // skew-bounded band-bucket self-join (r16): the pinned exchange +
       // salt triangle for hot keys live in [[saltedBandSelfJoin]]
-      val cand = saltedBandSelfJoin(s, bandedSigs(docs), "key", None)
+      val cand = saltedBandSelfJoin(s, bandedSigs(docs), "key", None, hotBucketCap, sampleMod)
         .distinct()
       verifyByCooccurrence(docs, candidatesFromCooc = false, MinhashJaccardT, cand,
         ordered = false, coocPre = coocCached(s, dir))
@@ -483,9 +491,11 @@ object Dedup {
     * hamming ≤ 3), `bit_count(xor)` verification. 16-bit bands give
     * 65,536 buckets per band, so the band self-join is Θ(n²/65536)
     * candidate pairs — the 32-bit/8-bit-band version capped at 256
-    * buckets, a quadratic hot spot at corpus scale.
+    * buckets, a quadratic hot spot at corpus scale. `hotBucketCap` and
+    * `sampleMod` are [[saltedBandSelfJoin]]'s.
     */
-  def simhash(s: SparkSession, dir: String): DataFrame = {
+  def simhash(s: SparkSession, dir: String, hotBucketCap: Long = HotBucketCap,
+              sampleMod: Long = HotSampleMod): DataFrame = {
     val docs = Tables.documentsSpread(s, dir)
       .select(col("doc_id"), tokenHashes(col("text")).as("th"))
       .filter(size(col("th")) > 0)
@@ -499,7 +509,7 @@ object Dedup {
     // triangle (an identical-doc flood collapses into ONE byte bucket
     // exactly like a minhash band key) — see [[saltedBandSelfJoin]];
     // the sim payload rides the pair, swapped alongside least/greatest
-    saltedBandSelfJoin(s, banded, "byte", Some("sim"))
+    saltedBandSelfJoin(s, banded, "byte", Some("sim"), hotBucketCap, sampleMod)
       .distinct()
       .withColumn("hamming", expr("bit_count(sim_a ^ sim_b)").cast("int"))
       .filter(col("hamming") <= HammingMax)

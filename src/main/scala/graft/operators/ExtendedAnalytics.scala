@@ -1115,13 +1115,18 @@ object ExtendedAnalytics {
     * rows — bounded by construction, no unpartitioned window.
     */
   def skewReport(s: SparkSession, dir: String): DataFrame =
-    skewFromCounts(s,
-      Tables.events(s, dir).groupBy("user_id").agg(count(lit(1)).as("cnt")))
+    skewFromCounts(s, skewCounts(Tables.events(s, dir)))
 
-  /** The skew report's value stage over a (user_id, cnt) frame — the
-    * ADDITIVE sufficient statistic, shared with the streaming twin
-    * (`streaming.StreamingSkewReport`): totals, top-K and every share
-    * column derive from the per-key counts.
+  /** Per-key (user_id, cnt) counts — the ADDITIVE sufficient statistic:
+    * summed per batch in a [[graft.streaming.Additive]], they feed
+    * [[skewFromCounts]] exactly like the batch frame
+    * (CorpusCurationSpec pins stream == batch).
+    */
+  private[graft] def skewCounts(events: DataFrame): DataFrame =
+    events.groupBy("user_id").agg(count(lit(1)).as("cnt"))
+
+  /** The skew report's value stage over a (user_id, cnt) frame: totals,
+    * top-K and every share column derive from the per-key counts.
     */
   private[graft] def skewFromCounts(s: SparkSession, kc: DataFrame): DataFrame = {
     val t = kc.agg(sum("cnt"), count(lit(1))).head()

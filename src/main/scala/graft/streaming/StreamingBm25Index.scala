@@ -1,69 +1,40 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Retrieval
 import graft.sources.Bm25Index
 import graft.functions.TextFunctions.tokens
 
 /** Streaming BM25 indexer — the live twin of the persisted postings
-  * index (`sources.Bm25Index`, SURVEY #179): a crawl pipeline indexes
-  * documents AS THEY ARRIVE, it does not re-run a full build per day.
-  * Each micro-batch pays exactly the batch path's O(batch) `append`
-  * (tokenize the arriving docs, append their postings/doclens rows;
-  * the standing corpus is untouched), so stream-built == batch-built
-  * is structural: the artifact accumulates the same rows, and
-  * `searchRoot` derives df/N/avgdl from the artifact AT QUERY TIME —
-  * the very property the batch spec pins for append == full rebuild.
-  *
-  * Live state (the monitor-family contract): the index-health
-  * statistic a serving layer wants without scanning the artifact —
-  * (n_docs, Σdl, df per standing query term). All ADDITIVE integers
-  * (counts of docs — each doc_id arrives in exactly one batch), so
-  * the state is batching/partitioning-independent, O(1 + |terms|)
-  * bounded metadata. [[currentStats]] must equal what the query path
-  * re-derives from the artifact — spec-asserted, which also guards
-  * the one failure mode appends can't see: a batch indexed twice.
-  *
-  * Snapshot persists the counters only — the index artifact is its
-  * own durable state (the StreamingClusterMix sink convention).
+  * index (`sources.Bm25Index`): each micro-batch pays the batch path's
+  * O(batch) `append`, and `searchRoot` derives df/N/avgdl from the
+  * artifact at query time, so stream-built == batch-built is
+  * structural. A keyless [[Additive]] holds the index-health counters
+  * (n_docs, Σdl, df per standing query term); [[currentStats]] equals
+  * what the query path re-derives from the artifact (spec-asserted —
+  * the guard against a batch indexed twice). Snapshot persists the
+  * counters; the artifact is its own durable state.
   */
-class StreamingBm25Index(root: String) extends Serializable {
+class StreamingBm25Index private (root: String, counters: Additive)
+    extends Serializable {
 
-  private var nDocs = 0L
-  private var dlSum = 0L
-  private val dfByTerm =
-    scala.collection.mutable.HashMap.empty[String, Long]
+  def this(root: String) = this(root, new Additive())
 
   /** Index one micro-batch of documents (doc_id, text, ...). */
   def mergeBatch(s: SparkSession, batch: DataFrame): Unit = {
     Bm25Index.append(s, root, batch)
     // one extra map-only pass over the (small) batch for the counters:
     // per-doc length and standing-term membership
-    val terms = Retrieval.Bm25Terms
-    val agg = batch.select(tokens(col("text")).as("t"))
-      .select(
-        count(lit(1)).as("n") +: sum(size(col("t")).cast("long")).as("dl") +:
-          terms.map(t => sum(when(array_contains(col("t"), t), 1L)
-            .otherwise(0L)).as(s"df_$t")): _*)
-      .head()
-    // Empty trigger: count()=0 but every sum is NULL — getLong would NPE.
-    if (agg.getLong(0) == 0L) return
-    this.synchronized {
-      nDocs += agg.getLong(0)
-      if (!agg.isNullAt(1)) dlSum += agg.getLong(1)
-      terms.zipWithIndex.foreach { case (t, i) =>
-        dfByTerm.update(t, dfByTerm.getOrElse(t, 0L) + agg.getLong(i + 2))
-      }
-    }
+    counters.merge(StreamingBm25Index.tally(batch, Retrieval.Bm25Terms,
+      t => sum(when(array_contains(col("t"), t), 1L).otherwise(0L))))
   }
 
   /** Live (n_docs, avgdl, df per standing term) — bounded metadata,
     * no artifact scan; equals the stats the query path re-derives.
     */
-  def currentStats: (Long, Double, Map[String, Long]) = this.synchronized {
-    (nDocs, if (nDocs == 0) 0.0 else dlSum.toDouble / nDocs, dfByTerm.toMap)
-  }
+  def currentStats: (Long, Double, Map[String, Long]) =
+    StreamingBm25Index.stats(counters, Retrieval.Bm25Terms)
 
   /** The standing query served from the artifact — identical columns
     * and values to `q_bm25_indexed` over the same accumulated docs.
@@ -71,28 +42,31 @@ class StreamingBm25Index(root: String) extends Serializable {
   def current(s: SparkSession): DataFrame = Bm25Index.searchRoot(s, root)
 
   /** Persist the counters (the artifact is already durable). */
-  def snapshot(s: SparkSession, path: String): Unit = {
-    val rows = this.synchronized {
-      (("__n", nDocs) +: ("__dl", dlSum) +: dfByTerm.toSeq).toSeq
-    }
-    import s.implicits._
-    rows.toDF("k", "v").write.mode("overwrite").parquet(s"$path/counts")
-  }
+  def snapshot(s: SparkSession, path: String): Unit =
+    counters.snapshot(s, s"$path/counts")
 }
 
 object StreamingBm25Index {
   /** Rebuild from a [[StreamingBm25Index.snapshot]] (the index keeps
     * its own root).
     */
-  def restore(s: SparkSession, path: String, root: String): StreamingBm25Index = {
-    val m = new StreamingBm25Index(root)
-    s.read.parquet(s"$path/counts").collect().foreach { r =>
-      (r.getString(0), r.getLong(1)) match {
-        case ("__n", v)  => m.nDocs = v
-        case ("__dl", v) => m.dlSum = v
-        case (t, v)      => m.dfByTerm.update(t, v)
-      }
-    }
-    m
+  def restore(s: SparkSession, path: String, root: String): StreamingBm25Index =
+    new StreamingBm25Index(root, Additive.restore(s, s"$path/counts"))
+
+  /** Keyless per-batch counter row: (n, dl, one column per term). */
+  private[streaming] def tally(batch: DataFrame, terms: Seq[String],
+      perTerm: String => Column): DataFrame =
+    batch.select(tokens(col("text")).as("t"))
+      .select(count(lit(1)).as("n") +: sum(size(col("t")).cast("long")).as("dl") +:
+        terms.zipWithIndex.map { case (t, i) => perTerm(t).cast("long").as(s"term$i") }: _*)
+
+  /** (n_docs, avgdl, per-term total) from a [[tally]] state. */
+  private[streaming] def stats(counters: Additive,
+      terms: Seq[String]): (Long, Double, Map[String, Long]) = {
+    val r = counters.rows.headOption
+    def at(i: Int) = r.fold(0L)(_.getLong(i))
+    val n = at(0)
+    (n, if (n == 0) 0.0 else at(1).toDouble / n,
+      terms.zipWithIndex.map { case (t, i) => t -> at(i + 2) }.toMap)
   }
 }

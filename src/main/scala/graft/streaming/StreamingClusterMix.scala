@@ -5,57 +5,45 @@ import org.apache.spark.sql.functions._
 import graft.operators.Clustering
 
 /** Streaming cluster-mix rebalancer — the live twin of
-  * `operators.Clustering.clusterMix` (the curation ACTION after the
-  * topic-mix health card: cap every embedding-space cell at the
-  * uniform share). On ingest each micro-batch pays ONE map-side
-  * frozen-centroid assignment (the StreamingTopicMix contract:
-  * retraining mid-stream would change cell identities), its slim
-  * (vec_id, cell) rows append to a sink table, and the in-memory
-  * state is the per-cell COUNTER map — additive, O(cells), the live
-  * "which region is over-represented and what is today's cap" view
-  * that never touches the sink.
+  * `operators.Clustering.clusterMix` (cap every embedding-space cell
+  * at the uniform share). Each micro-batch pays ONE map-side
+  * frozen-centroid assignment (the [[StreamingTopicMix]] contract),
+  * its slim (vec_id, cell) rows append to a sink table, and the live
+  * state is the per-cell counter [[Additive]] — O(cells), the "which
+  * region is over-represented and what is today's cap" view that never
+  * touches the sink.
   *
-  * The keep-SET itself is a pure function of the assigned set: the
-  * deterministic portable-hash rank within each cell cut at the
-  * integer cap. [[current]] therefore computes it as a read-time view
-  * over the sink through the SAME `Clustering.mixVerdict` tail the
-  * batch operator uses — stream == batch over any split, by
-  * construction, and a vector's verdict may legitimately FLIP as later
-  * batches move the cap (which is why the verdict is a view, not
-  * per-batch emitted state).
-  *
-  * Snapshot persists the counters AND the frozen centroid set (the
-  * sink is already durable); restore + remaining batches == an
-  * uninterrupted run exactly.
+  * The keep-SET is a pure function of the assigned set, so
+  * [[current]] computes it as a read-time view over the sink through
+  * the SAME `Clustering.mixVerdict` tail the batch operator uses —
+  * stream == batch over any split, and a vector's verdict may flip as
+  * later batches move the cap. Snapshot persists the counters and the
+  * frozen centroids (the sink is already durable).
   */
-class StreamingClusterMix(cents: Seq[(Int, Array[Float], Double)],
-                          sinkPath: String) extends Serializable {
+class StreamingClusterMix private (cents: Seq[(Int, Array[Float], Double)],
+                                   sinkPath: String, counts: Additive)
+    extends Serializable {
 
-  // cell -> assigned-vector count (the O(cells) live state)
-  private val state = scala.collection.mutable.HashMap.empty[Int, Long]
+  def this(cents: Seq[(Int, Array[Float], Double)], sinkPath: String) =
+    this(cents, sinkPath, new Additive("cell"))
 
   /** Merge one micro-batch of embeddings (vec_id, embedding, label). */
   def mergeBatch(s: SparkSession, batch: DataFrame): Unit = {
     val asg = Clustering.assignedCellsOf(batch, cents)
       .select(col("vec_id"), col("cell"))
     asg.write.mode("append").parquet(s"$sinkPath/assigned")
-    val counts = asg.groupBy("cell").agg(count(lit(1)).as("cnt")).collect()
-    this.synchronized {
-      counts.foreach { r =>
-        val c = r.getInt(0)
-        state.update(c, state.getOrElse(c, 0L) + r.getLong(1))
-      }
-    }
+    counts.merge(asg.groupBy("cell").agg(count(lit(1)).as("cnt")))
   }
 
   /** Live per-cell counts (bounded metadata — no sink scan). */
-  def cellCounts: Map[Int, Long] = this.synchronized { state.toMap }
+  def cellCounts: Map[Int, Long] =
+    counts.rows.map(r => r.getInt(0) -> r.getLong(1)).toMap
 
   /** Today's uniform-share cap, from the counters alone. */
-  def capFromState: Long = this.synchronized {
-    val total = state.valuesIterator.sum
-    val cells = math.max(1, state.size).toLong
-    (total + cells - 1) / cells
+  def capFromState: Long = {
+    val c = cellCounts
+    val cells = math.max(1, c.size).toLong
+    (c.values.sum + cells - 1) / cells
   }
 
   /** The current keep-set — identical columns and values to the batch
@@ -66,11 +54,8 @@ class StreamingClusterMix(cents: Seq[(Int, Array[Float], Double)],
 
   /** Persist the counters and the frozen centroid set. */
   def snapshot(s: SparkSession, path: String): Unit = {
-    val rows = this.synchronized { state.toSeq }
-    import s.implicits._
-    rows.toDF("cell", "cnt").write.mode("overwrite").parquet(s"$path/counts")
-    cents.map(c => (c._1, c._2.toSeq, c._3)).toDF("cell", "ce", "cnrm")
-      .write.mode("overwrite").parquet(s"$path/cents")
+    counts.snapshot(s, s"$path/counts")
+    StreamingTopicMix.saveCents(s, cents, s"$path/cents")
   }
 }
 
@@ -78,14 +63,7 @@ object StreamingClusterMix {
   /** Rebuild a monitor from a [[StreamingClusterMix.snapshot]] (the
     * sink keeps its own path).
     */
-  def restore(s: SparkSession, path: String, sinkPath: String): StreamingClusterMix = {
-    val cents = s.read.parquet(s"$path/cents").collect()
-      .map(r => (r.getInt(0), r.getSeq[Float](1).toArray, r.getDouble(2)))
-      .toSeq.sortBy(_._1)
-    val m = new StreamingClusterMix(cents, sinkPath)
-    s.read.parquet(s"$path/counts").collect().foreach { r =>
-      m.state.update(r.getInt(0), r.getLong(1))
-    }
-    m
-  }
+  def restore(s: SparkSession, path: String, sinkPath: String): StreamingClusterMix =
+    new StreamingClusterMix(StreamingTopicMix.loadCents(s, s"$path/cents"), sinkPath,
+      Additive.restore(s, s"$path/counts", "cell"))
 }

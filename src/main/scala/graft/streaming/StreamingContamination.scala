@@ -7,31 +7,21 @@ import graft.operators.TextAnalysis
 
 /** Streaming benchmark-contamination monitor — the live twin of
   * `operators.TextAnalysis.contamination`/`contaminationScore`: an
-  * eval-set quote leaking into the TRAINING stream must be caught as
-  * the document arrives, not at the next full-corpus audit (the
-  * decontamination-on-ingest shape every production pipeline runs).
-  *
-  * The eval shingle set is FROZEN at construction (the frozen-artifact
-  * contract: the benchmark does not change mid-stream), so each
-  * document's verdict is INDEPENDENT of every other document — unlike
-  * the distribution monitors there is no cross-batch sufficient
-  * statistic to maintain: per-batch emissions are FINAL. Each
-  * micro-batch pays one MAP-SIDE pass (per-doc `array_intersect`
-  * against the frozen literal — the size-gated form the batch scorer
-  * uses below `ContaminationLiteralMax`; no shuffle, no join), flagged
-  * rows append to a sink, and the in-memory state is the additive
-  * (docs seen, docs flagged) counter pair — the live leak-rate view.
-  *
-  * `currentFlags`/`currentScores` are read-time views over the sink
-  * through the SAME column tail the batch operators emit — stream ==
-  * batch over any split, by per-doc independence. Snapshot persists
-  * the counters (the sink is durable).
+  * eval-set quote leaking into the training stream is caught as the
+  * document arrives. The eval shingle set is FROZEN at construction,
+  * so each document's verdict is independent of every other and
+  * per-batch emissions are final: each micro-batch pays one map-side
+  * `array_intersect` against the frozen literal (the batch scorer's
+  * form below `ContaminationLiteralMax`), flagged rows append to a
+  * sink, and a keyless [[Additive]] holds (docs seen, docs flagged).
+  * `currentFlags`/`currentScores` read the sink through the batch
+  * operators' column tail, so stream == batch over any split.
   */
-class StreamingContamination(evalHashes: Array[Long], sinkPath: String)
-    extends Serializable {
+class StreamingContamination private (evalHashes: Array[Long], sinkPath: String,
+                                      tally: Additive) extends Serializable {
 
-  private var docsSeen = 0L
-  private var docsFlagged = 0L
+  def this(evalHashes: Array[Long], sinkPath: String) =
+    this(evalHashes, sinkPath, new Additive())
 
   /** Score one micro-batch of corpus documents (doc_id, text, ...). */
   def mergeBatch(s: SparkSession, batch: DataFrame): Unit = {
@@ -40,18 +30,14 @@ class StreamingContamination(evalHashes: Array[Long], sinkPath: String)
         size(sh).cast("long").as("n_shingles"),
         size(array_intersect(sh, typedLit(evalHashes))).cast("long").as("n_hit"))
       .localCheckpoint()
-    val flagged = scored.filter(col("n_hit") > 0)
-    flagged.write.mode("append").parquet(s"$sinkPath/flagged")
-    val (n, f) = {
-      val r = scored.agg(count(lit(1)),
-        sum(when(col("n_hit") > 0, 1L).otherwise(0L))).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
-    this.synchronized { docsSeen += n; docsFlagged += f }
+    scored.filter(col("n_hit") > 0).write.mode("append").parquet(s"$sinkPath/flagged")
+    tally.merge(scored.agg(count(lit(1)).as("seen"),
+      sum(when(col("n_hit") > 0, 1L).otherwise(0L)).as("flagged")))
   }
 
   /** Live (docs seen, docs flagged) — the leak-rate counters. */
-  def counts: (Long, Long) = this.synchronized { (docsSeen, docsFlagged) }
+  def counts: (Long, Long) =
+    tally.rows.headOption.fold((0L, 0L))(r => (r.getLong(0), r.getLong(1)))
 
   /** Contaminated doc ids — identical to the batch `contamination`
     * output over the accumulated documents.
@@ -71,10 +57,8 @@ class StreamingContamination(evalHashes: Array[Long], sinkPath: String)
 
   /** Persist the counters and the frozen eval set. */
   def snapshot(s: SparkSession, path: String): Unit = {
-    val (n, f) = counts
+    tally.snapshot(s, s"$path/counts")
     import s.implicits._
-    Seq(("__seen", n), ("__flagged", f)).toDF("k", "v")
-      .write.mode("overwrite").parquet(s"$path/counts")
     evalHashes.toSeq.toDF("h")
       .write.mode("overwrite").parquet(s"$path/eval")
   }
@@ -94,17 +78,8 @@ object StreamingContamination {
   }
 
   /** Rebuild from a [[StreamingContamination.snapshot]]. */
-  def restore(s: SparkSession, path: String, sinkPath: String): StreamingContamination = {
-    val hashes = s.read.parquet(s"$path/eval")
-      .collect().map(_.getLong(0)).sorted
-    val m = new StreamingContamination(hashes, sinkPath)
-    s.read.parquet(s"$path/counts").collect().foreach { r =>
-      (r.getString(0), r.getLong(1)) match {
-        case ("__seen", v)    => m.docsSeen = v
-        case ("__flagged", v) => m.docsFlagged = v
-        case _                =>
-      }
-    }
-    m
-  }
+  def restore(s: SparkSession, path: String, sinkPath: String): StreamingContamination =
+    new StreamingContamination(
+      s.read.parquet(s"$path/eval").collect().map(_.getLong(0)).sorted,
+      sinkPath, Additive.restore(s, s"$path/counts"))
 }

@@ -4,31 +4,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.datasketches.hll.{HllSketch, Union}
 import graft.operators.CorpusCuration
 
-/** Bounded-state streaming corpus card — the HLL deployment the exact
-  * [[StreamingCorpusCard]]'s Scaladoc documents ("swaps the hash key
-  * for an HLL sketch per source and the rest of the card stays
-  * exact"), made real. The exact twin's state is O(distinct docs) —
-  * the irreducible bound for EXACT duplicate counting (~48 GB per
-  * billion docs). This twin trades ONLY the dup column for bounded
-  * state: per (source, language) additive counters (every non-dup
-  * card column stays EXACT) plus one DataSketches HLL sketch per
-  * group for the distinct-doc estimate — O(sources × languages ×
-  * sketch) regardless of corpus size.
-  *
-  * Merge is sketch UNION (associative, order-independent), so the
-  * statistic remains additive across any batching. Below ~2^lgK
-  * distinct docs per group the sketch sits in sparse/set mode and the
-  * estimate — hence the whole card — is exact; beyond it the dup
-  * column carries HLL's ~1.6% (lgK=12) relative error while the rest
-  * of the card is still exact. Per micro-batch one distributed
-  * grouped agg (Spark's codegen'd `hll_sketch_agg`) runs; only the
-  * post-aggregate rows cross to the driver.
+/** Bounded-state streaming corpus card — the live twin of
+  * `operators.CorpusCuration.corpusCard` that trades ONLY the dup
+  * column for bounded state. Exact dup counting needs the content-hash
+  * set, O(distinct docs); here an [[Additive]] holds exact per (source,
+  * language) counters and one DataSketches HLL sketch per group (merged
+  * by UNION, associative) estimates distinct docs — O(sources ×
+  * languages × sketch). Below ~2^lgK distinct docs per group the sketch
+  * is in sparse/set mode and the whole card is exact; beyond it the dup
+  * column carries HLL's ~1.6% (lgK=12) relative error. The per-batch
+  * grouped agg is checkpointed so the counters and sketches read it once.
   */
-class StreamingCorpusCardApprox extends Serializable {
+class StreamingCorpusCardApprox private (counts: Additive) extends Serializable {
 
-  // (source, pred) -> (n, ntok, qdec, ok, unk)
-  private val stats = scala.collection.mutable.HashMap
-    .empty[(String, String), (Long, Long, java.math.BigDecimal, Long, Long)]
+  def this() = this(new Additive("source", "pred"))
+
   // (source, pred) -> serialized HLL sketch of content hashes
   private val sketches =
     scala.collection.mutable.HashMap.empty[(String, String), Array[Byte]]
@@ -42,31 +32,18 @@ class StreamingCorpusCardApprox extends Serializable {
 
   /** Merge one micro-batch of documents ((source, text) columns). */
   def mergeBatch(docs: DataFrame): Unit = {
-    val batch = CorpusCuration.cardGroupedApprox(docs).collect()
+    val g = CorpusCuration.cardGroupedApprox(docs).localCheckpoint()
+    counts.merge(g.drop("hsk"))
+    val batch = g.select("source", "pred", "hsk").collect()
     this.synchronized {
       batch.foreach { r =>
         val k = (r.getString(0), r.getString(1))
-        val add = (r.getLong(2), r.getLong(3), r.getDecimal(4),
-          r.getLong(5), r.getLong(6))
-        stats.get(k) match {
-          case Some((n, nt, q, ok, unk)) =>
-            stats.update(k, (n + add._1, nt + add._2, q.add(add._3),
-              ok + add._4, unk + add._5))
-          case None => stats.update(k, add)
-        }
-        val sk = r.getAs[Array[Byte]](7)
+        val sk = r.getAs[Array[Byte]](2)
         sketches.update(k,
           sketches.get(k).map(unionBytes(_, sk)).getOrElse(sk))
       }
     }
   }
-
-  private def stateRows: Seq[(String, String, Long, Long, BigDecimal, Long, Long)] =
-    this.synchronized {
-      stats.toSeq.map { case ((src, pred), (n, nt, q, ok, unk)) =>
-        (src, pred, n, nt, BigDecimal(q), ok, unk)
-      }
-    }
 
   /** Per-source distinct-doc estimates: union the per-language
     * sketches (hash sets are disjoint across languages only by
@@ -87,8 +64,7 @@ class StreamingCorpusCardApprox extends Serializable {
     */
   def current(s: SparkSession): DataFrame = {
     import s.implicits._
-    CorpusCuration.cardFromApproxGrouped(
-      stateRows.toDF("source", "pred", "n", "ntok", "qdec", "ok", "unk"),
+    CorpusCuration.cardFromApproxGrouped(counts.state(s),
       estimates.toDF("source", "n_distinct"))
   }
 
@@ -97,9 +73,8 @@ class StreamingCorpusCardApprox extends Serializable {
     * run (sketch union is associative).
     */
   def snapshot(s: SparkSession, path: String): Unit = {
+    counts.snapshot(s, s"$path/counts")
     import s.implicits._
-    stateRows.toDF("source", "pred", "n", "ntok", "qdec", "ok", "unk")
-      .write.mode("overwrite").parquet(s"$path/counts")
     this.synchronized {
       sketches.toSeq.map { case ((src, pred), b) => (src, pred, b) }
     }.toDF("source", "pred", "hsk")
@@ -115,11 +90,8 @@ object StreamingCorpusCardApprox {
 
   /** Rebuild a monitor from a [[StreamingCorpusCardApprox.snapshot]]. */
   def restore(s: SparkSession, path: String): StreamingCorpusCardApprox = {
-    val m = new StreamingCorpusCardApprox
-    s.read.parquet(s"$path/counts").collect().foreach { r =>
-      m.stats.update((r.getString(0), r.getString(1)),
-        (r.getLong(2), r.getLong(3), r.getDecimal(4), r.getLong(5), r.getLong(6)))
-    }
+    val m = new StreamingCorpusCardApprox(
+      Additive.restore(s, s"$path/counts", "source", "pred"))
     s.read.parquet(s"$path/sketches").collect().foreach { r =>
       m.sketches.update((r.getString(0), r.getString(1)), r.getAs[Array[Byte]](2))
     }

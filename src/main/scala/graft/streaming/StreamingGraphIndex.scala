@@ -17,7 +17,7 @@ import graft.sources.GraphIndex
   * full-rebuild exact) — so stream-built == batch-built is STRUCTURAL,
   * and `current` answers the standing query from the artifact alone.
   *
-  * Live state: per-SHARD additive posting counters — O([[GraphIndex
+  * Live state: per-SHARD posting counters in an [[Additive]] — O([[GraphIndex
   * .NodeShards]]) bounded metadata, the layout-balance view a serving
   * layer watches for a flooding shard (a skewed crawl slice
   * concentrating near one routing region ⇒ that shard's files and
@@ -36,10 +36,10 @@ import graft.sources.GraphIndex
   * mixing deletes into the stream should re-derive balance from the
   * artifact's per-shard counts (one bounded grouped count).
   */
-class StreamingGraphIndex(dir: String, root: String) extends Serializable {
+class StreamingGraphIndex private (dir: String, root: String, counts: Additive)
+    extends Serializable {
 
-  // nshard -> posting-row count (the O(shards) live state)
-  private val state = scala.collection.mutable.HashMap.empty[Int, Long]
+  def this(dir: String, root: String) = this(dir, root, new Additive("nshard"))
 
   /** Index one micro-batch of normed vectors (vec_id, e, nrm). */
   def mergeBatch(s: SparkSession, batch: DataFrame): Unit = {
@@ -48,20 +48,15 @@ class StreamingGraphIndex(dir: String, root: String) extends Serializable {
     // for the shard counters — the same frozen sidecar graph append
     // posts against, so counter rows == appended posting rows exactly
     val g = GraphIndex.sidecarGraph(s, root)
-    val counts = GraphAnn.assignedFrame(batch, g)
+    counts.merge(GraphAnn.assignedFrame(batch, g)
       .select(pmod(col("node"),
         lit(GraphIndex.shardsFor(g.ids.length))).cast("int").as("nshard"))
-      .groupBy("nshard").agg(count(lit(1)).as("cnt")).collect()
-    this.synchronized {
-      counts.foreach { r =>
-        val sh = r.getInt(0)
-        state.update(sh, state.getOrElse(sh, 0L) + r.getLong(1))
-      }
-    }
+      .groupBy("nshard").agg(count(lit(1)).as("cnt")))
   }
 
   /** Live per-shard posting counts (bounded metadata — no artifact scan). */
-  def shardCounts: Map[Int, Long] = this.synchronized { state.toMap }
+  def shardCounts: Map[Int, Long] =
+    counts.rows.map(r => r.getInt(0) -> r.getLong(1)).toMap
 
   /** The standing ANN query served from the artifact — identical to
     * `q_ann_hnsw_indexed` over the same accumulated vectors.
@@ -69,11 +64,8 @@ class StreamingGraphIndex(dir: String, root: String) extends Serializable {
   def current(s: SparkSession): DataFrame = GraphIndex.searchRoot(s, dir, root)
 
   /** Persist the counters (the artifact carries its own sidecar). */
-  def snapshot(s: SparkSession, path: String): Unit = {
-    val rows = this.synchronized { state.toSeq }
-    import s.implicits._
-    rows.toDF("nshard", "cnt").write.mode("overwrite").parquet(s"$path/counts")
-  }
+  def snapshot(s: SparkSession, path: String): Unit =
+    counts.snapshot(s, s"$path/counts")
 }
 
 object StreamingGraphIndex {
@@ -81,11 +73,6 @@ object StreamingGraphIndex {
     * its own root).
     */
   def restore(s: SparkSession, path: String, dir: String,
-              root: String): StreamingGraphIndex = {
-    val m = new StreamingGraphIndex(dir, root)
-    s.read.parquet(s"$path/counts").collect().foreach { r =>
-      m.state.update(r.getInt(0), r.getLong(1))
-    }
-    m
-  }
+              root: String): StreamingGraphIndex =
+    new StreamingGraphIndex(dir, root, Additive.restore(s, s"$path/counts", "nshard"))
 }

@@ -4,56 +4,28 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Retrieval
 import graft.sources.PhraseIndex
-import graft.functions.TextFunctions.tokens
 
 /** Streaming positional indexer — the live twin of the positional
-  * postings index (`sources.PhraseIndex`, SURVEY #191), completing
-  * live ingest for the third standing index (vectors #193, term
-  * frequencies #189, positions here): exact-quote decontamination
-  * lookups must see documents as they arrive. Each micro-batch pays
-  * the batch path's O(batch) `append` (tokenize the arriving docs,
-  * append their occurrence rows), and `searchRoot` derives N/avgdl/df
-  * from the artifact at query time — stream-built == batch-built is
-  * structural, the same argument as #189.
-  *
-  * Live state: (n_docs, Σdl) plus per-PHRASE-TERM occurrence
-  * counters — additive integers, O(1 + |phrase|) bounded metadata
-  * (the posting-volume view: how much does the standing phrase's
-  * shard grow per day). Counter == artifact equality spec-asserted
-  * (the double-indexed-batch guard).
+  * postings index (`sources.PhraseIndex`), built like
+  * [[StreamingBm25Index]]: the batch path's O(batch) `append` per
+  * micro-batch, plus a keyless [[Additive]] of (n_docs, Σdl,
+  * occurrences per phrase term) that equals the artifact's own counts.
   */
-class StreamingPhraseIndex(root: String) extends Serializable {
+class StreamingPhraseIndex private (root: String, counters: Additive)
+    extends Serializable {
 
-  private var nDocs = 0L
-  private var dlSum = 0L
-  private val occByTerm =
-    scala.collection.mutable.HashMap.empty[String, Long]
+  def this(root: String) = this(root, new Additive())
 
   /** Index one micro-batch of documents (doc_id, text, ...). */
   def mergeBatch(s: SparkSession, batch: DataFrame): Unit = {
     PhraseIndex.append(s, root, batch)
-    val terms = Retrieval.PhraseTerms
-    val agg = batch.select(tokens(col("text")).as("t"))
-      .select(
-        count(lit(1)).as("n") +: sum(size(col("t")).cast("long")).as("dl") +:
-          terms.map(t => sum(size(filter(col("t"), x => x === lit(t)))
-            .cast("long")).as(s"occ_$t")): _*)
-      .head()
-    // Empty trigger: count()=0 but every sum is NULL — getLong would NPE.
-    if (agg.getLong(0) == 0L) return
-    this.synchronized {
-      nDocs += agg.getLong(0)
-      if (!agg.isNullAt(1)) dlSum += agg.getLong(1)
-      terms.zipWithIndex.foreach { case (t, i) =>
-        occByTerm.update(t, occByTerm.getOrElse(t, 0L) + agg.getLong(i + 2))
-      }
-    }
+    counters.merge(StreamingBm25Index.tally(batch, Retrieval.PhraseTerms,
+      t => sum(size(filter(col("t"), x => x === lit(t))))))
   }
 
   /** Live (n_docs, avgdl, per-phrase-term occurrence totals). */
-  def currentStats: (Long, Double, Map[String, Long]) = this.synchronized {
-    (nDocs, if (nDocs == 0) 0.0 else dlSum.toDouble / nDocs, occByTerm.toMap)
-  }
+  def currentStats: (Long, Double, Map[String, Long]) =
+    StreamingBm25Index.stats(counters, Retrieval.PhraseTerms)
 
   /** The standing phrase served from the artifact — identical to
     * `q_phrase_indexed` over the same accumulated docs.
@@ -61,25 +33,11 @@ class StreamingPhraseIndex(root: String) extends Serializable {
   def current(s: SparkSession): DataFrame = PhraseIndex.searchRoot(s, root)
 
   /** Persist the counters (the artifact is durable). */
-  def snapshot(s: SparkSession, path: String): Unit = {
-    val rows = this.synchronized {
-      (("__n", nDocs) +: ("__dl", dlSum) +: occByTerm.toSeq).toSeq
-    }
-    import s.implicits._
-    rows.toDF("k", "v").write.mode("overwrite").parquet(s"$path/counts")
-  }
+  def snapshot(s: SparkSession, path: String): Unit =
+    counters.snapshot(s, s"$path/counts")
 }
 
 object StreamingPhraseIndex {
-  def restore(s: SparkSession, path: String, root: String): StreamingPhraseIndex = {
-    val m = new StreamingPhraseIndex(root)
-    s.read.parquet(s"$path/counts").collect().foreach { r =>
-      (r.getString(0), r.getLong(1)) match {
-        case ("__n", v)  => m.nDocs = v
-        case ("__dl", v) => m.dlSum = v
-        case (t, v)      => m.occByTerm.update(t, v)
-      }
-    }
-    m
-  }
+  def restore(s: SparkSession, path: String, root: String): StreamingPhraseIndex =
+    new StreamingPhraseIndex(root, Additive.restore(s, s"$path/counts"))
 }

@@ -17,7 +17,7 @@ import graft.plans.CentroidOps
   * STRUCTURAL, and `current` answers the standing query from the
   * artifact alone.
   *
-  * Live state: per-CELL additive vector counters — O(cells) bounded
+  * Live state: per-CELL vector counters in an [[Additive]] — O(cells) bounded
   * metadata (the √n cell cap), the index-balance view a serving layer
   * watches for a hot cell (a skewed crawl slice concentrating in one
   * region ⇒ that cell's probe cost grows; the signal to re-shard or
@@ -34,10 +34,10 @@ import graft.plans.CentroidOps
   * view but no longer reconcile; re-derive balance from the artifact's
   * per-cell counts (one bounded grouped count) in that regime.
   */
-class StreamingPqIndex(dir: String, root: String) extends Serializable {
+class StreamingPqIndex private (dir: String, root: String, counts: Additive)
+    extends Serializable {
 
-  // cell -> indexed-vector count (the O(cells) live state)
-  private val state = scala.collection.mutable.HashMap.empty[Int, Long]
+  def this(dir: String, root: String) = this(dir, root, new Additive("cell"))
 
   /** Index one micro-batch of normed vectors (vec_id, e, nrm). */
   def mergeBatch(s: SparkSession, batch: DataFrame): Unit = {
@@ -46,19 +46,14 @@ class StreamingPqIndex(dir: String, root: String) extends Serializable {
     // the cell counters — the same frozen centroid set append encodes
     // against
     val cents = PqIndex.loadMeta(s, root)._2
-    val counts = batch
+    counts.merge(batch
       .select(CentroidOps.cell(col("e"), col("nrm"), cents).as("cell"))
-      .groupBy("cell").agg(count(lit(1)).as("cnt")).collect()
-    this.synchronized {
-      counts.foreach { r =>
-        val c = r.getInt(0)
-        state.update(c, state.getOrElse(c, 0L) + r.getLong(1))
-      }
-    }
+      .groupBy("cell").agg(count(lit(1)).as("cnt")))
   }
 
   /** Live per-cell counts (bounded metadata — no artifact scan). */
-  def cellCounts: Map[Int, Long] = this.synchronized { state.toMap }
+  def cellCounts: Map[Int, Long] =
+    counts.rows.map(r => r.getInt(0) -> r.getLong(1)).toMap
 
   /** The standing ANN query served from the artifact — identical to
     * `q_ann_pq_indexed` over the same accumulated vectors.
@@ -66,22 +61,14 @@ class StreamingPqIndex(dir: String, root: String) extends Serializable {
   def current(s: SparkSession): DataFrame = PqIndex.searchRoot(s, dir, root)
 
   /** Persist the counters (the artifact carries its own sidecar). */
-  def snapshot(s: SparkSession, path: String): Unit = {
-    val rows = this.synchronized { state.toSeq }
-    import s.implicits._
-    rows.toDF("cell", "cnt").write.mode("overwrite").parquet(s"$path/counts")
-  }
+  def snapshot(s: SparkSession, path: String): Unit =
+    counts.snapshot(s, s"$path/counts")
 }
 
 object StreamingPqIndex {
   /** Rebuild from a [[StreamingPqIndex.snapshot]] (the index keeps its
     * own root).
     */
-  def restore(s: SparkSession, path: String, dir: String, root: String): StreamingPqIndex = {
-    val m = new StreamingPqIndex(dir, root)
-    s.read.parquet(s"$path/counts").collect().foreach { r =>
-      m.state.update(r.getInt(0), r.getLong(1))
-    }
-    m
-  }
+  def restore(s: SparkSession, path: String, dir: String, root: String): StreamingPqIndex =
+    new StreamingPqIndex(dir, root, Additive.restore(s, s"$path/counts", "cell"))
 }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, DoubleType, LongType, StringType, StructField, StructType}
 import graft.operators.CorpusCuration
 
 /** Streaming event-rate anomaly monitor (the streaming twin of
@@ -11,12 +12,11 @@ import graft.operators.CorpusCuration
   * Hourly counts are ADDITIVE: per micro-batch one distributed
   * hour-keyed aggregate runs (the batch operator's first stage) and
   * only the hours-in-batch frame — calendar-bounded — crosses to the
-  * driver, merging by addition into an hour → count map inside
-  * `foreachBatch` (the StreamingHeavyHitters shape). The z-scores then
+  * driver, summing into an hour-keyed [[Additive]]. The z-scores then
   * compute from the merged counts with EXACTLY the batch arithmetic:
   * integer trailing sums, pinned-order float z, floor-shift rounding —
   * so after any prefix of batches the flagged set equals the batch
-  * operator run over the same events (StreamingCurationSpec, 3-way
+  * operator run over the same events (CorpusCurationSpec, 3-way
   * split).
   *
   * State is O(retained hours). A forever-running monitor calls
@@ -30,9 +30,10 @@ import graft.operators.CorpusCuration
   * stream==batch equality this class promises. A no-op prune
   * withholds nothing.
   */
-class StreamingRateAnomaly extends Serializable {
+class StreamingRateAnomaly private (counts: Additive) extends Serializable {
 
-  private val counts = scala.collection.mutable.HashMap.empty[Long, Long]
+  def this() = this(new Additive("hr_no"))
+
   // Largest hour a prune ACTUALLY removed (Long.MinValue until one
   // does). Gating on what was dropped — not on the requested boundary —
   // keeps a no-op prune (boundary at or below the oldest retained
@@ -41,32 +42,23 @@ class StreamingRateAnomaly extends Serializable {
   private var droppedMax: Long = Long.MinValue
 
   /** Merge one micro-batch of events (needs a `ts` timestamp column). */
-  def mergeBatch(events: DataFrame): Unit = {
-    val batch = events
+  def mergeBatch(events: DataFrame): Unit =
+    counts.merge(events
       // floor division (matches the batch operator and DuckDB `//`),
       // not `div` truncation — pre-1970 hours bucket identically.
       .groupBy(expr(
         "CAST(floor(unix_timestamp(date_trunc('hour', ts)) / 3600.0) AS BIGINT)")
         .as("hr_no"))
-      .agg(count(lit(1)).as("n"))
-      .collect()
-    this.synchronized {
-      batch.foreach { r =>
-        val h = r.getLong(0)
-        counts.update(h, counts.getOrElse(h, 0L) + r.getLong(1))
-      }
-    }
-  }
+      .agg(count(lit(1)).as("n")))
 
   /** Drop state for hours strictly before `hourNo` (they are outside
     * every future trailing window once the stream has moved on).
     */
   def pruneBefore(hourNo: Long): Unit =
     this.synchronized {
-      val dropped = counts.keysIterator.filter(_ < hourNo).toSeq
+      val dropped = counts.removeWhere(_.getLong(0) < hourNo).map(_.getLong(0))
       if (dropped.nonEmpty)
         droppedMax = math.max(droppedMax, dropped.max)
-      counts.filterInPlace((h, _) => h >= hourNo)
     }
 
   /** Current anomaly table — same columns and arithmetic as the batch
@@ -76,7 +68,9 @@ class StreamingRateAnomaly extends Serializable {
     */
   def current(s: SparkSession): DataFrame = {
     val (hours, dm) =
-      this.synchronized { (counts.toSeq.sortBy(_._1), droppedMax) }
+      this.synchronized {
+        (counts.rows.map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1), droppedMax)
+      }
     // an hour h recomputes a shortened trail iff its window [h−T, h)
     // reaches a dropped hour, i.e. h ≤ droppedMax + T
     val minEmit =
@@ -100,18 +94,10 @@ class StreamingRateAnomaly extends Serializable {
         .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss"))
       Row(hourStr, n, z, z != null && math.abs(z) >= 2.0)
     }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("hour",
-        org.apache.spark.sql.types.StringType, false),
-      org.apache.spark.sql.types.StructField("n",
-        org.apache.spark.sql.types.LongType, false),
-      org.apache.spark.sql.types.StructField("z",
-        org.apache.spark.sql.types.DoubleType, true),
-      org.apache.spark.sql.types.StructField("anomaly",
-        org.apache.spark.sql.types.BooleanType, false)))
-    s.createDataFrame(
-      new java.util.ArrayList[Row](scala.jdk.CollectionConverters
-        .SeqHasAsJava(rows).asJava), schema)
+    val schema = StructType(Seq(StructField("hour", StringType, false),
+      StructField("n", LongType, false), StructField("z", DoubleType),
+      StructField("anomaly", BooleanType, false)))
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 
   /** Persist the monitor state (hourly counts + the prune boundary) as
@@ -121,34 +107,29 @@ class StreamingRateAnomaly extends Serializable {
     * withholding, which depends on the persisted boundary.
     */
   def snapshot(s: SparkSession, path: String): Unit = {
-    val (hours, dm) =
-      this.synchronized { (counts.toSeq, droppedMax) }
+    val dm = this.synchronized {
+      counts.snapshot(s, s"$path/counts")
+      droppedMax
+    }
     import s.implicits._
-    hours.toDF("hr_no", "n").write.mode("overwrite").parquet(s"$path/counts")
     Seq(dm).toDF("dropped_max").write.mode("overwrite").parquet(s"$path/meta")
   }
 }
 
 object StreamingRateAnomaly {
-  /** Rebuild a monitor from a [[StreamingRateAnomaly.snapshot]].
-    *
-    * The meta column is read BY NAME: a pre-r8 snapshot carries
-    * `pruned_to` (the EXCLUSIVE requested prune boundary) where the
-    * current format carries `dropped_max` (the largest actually-dropped
-    * hour). Reading either positionally would shift the post-prune
-    * emit gate by one hour, so the legacy value is translated
-    * explicitly — hours < pruned_to were dropped, hence
-    * droppedMax = pruned_to − 1.
+  /** Rebuild a monitor from a [[StreamingRateAnomaly.snapshot]]. The
+    * meta column is read BY NAME; a meta without `dropped_max` (the
+    * pre-r9 `pruned_to` format) throws rather than shifting the
+    * post-prune emit gate.
     */
   def restore(s: SparkSession, path: String): StreamingRateAnomaly = {
-    val m = new StreamingRateAnomaly
-    s.read.parquet(s"$path/counts").collect()
-      .foreach(r => m.counts.update(r.getLong(0), r.getLong(1)))
     val meta = s.read.parquet(s"$path/meta")
-    val row = meta.head()
-    m.droppedMax =
-      if (meta.columns.contains("dropped_max")) row.getAs[Long]("dropped_max")
-      else row.getAs[Long]("pruned_to") - 1L
+    if (!meta.columns.contains("dropped_max"))
+      throw new IllegalStateException(
+        s"unsupported rate-monitor snapshot at $path: meta has no dropped_max " +
+          s"(columns ${meta.columns.mkString(", ")})")
+    val m = new StreamingRateAnomaly(Additive.restore(s, s"$path/counts", "hr_no"))
+    m.droppedMax = meta.head().getAs[Long]("dropped_max")
     m
   }
 }

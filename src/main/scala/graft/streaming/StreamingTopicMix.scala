@@ -5,84 +5,56 @@ import graft.operators.Clustering
 
 /** Streaming topic-mix monitor — the live twin of
   * `operators.Clustering.topicClusters` (the per-cluster health card:
-  * size, cohesion, label purity). The ops question it answers live:
-  * is the stream's EMBEDDING-SPACE mix drifting — a crawl slice
-  * suddenly concentrating in one region, a cell's cohesion or label
-  * purity collapsing — within a batch of it happening, not at the
-  * nightly card build.
+  * size, cohesion, label purity): is the stream's embedding-space mix
+  * drifting, within a batch of it happening.
   *
   * Centroids are FROZEN at construction (the PQ-index sidecar
   * contract: assignment against a frozen artifact is what makes
   * per-batch work O(batch) and the statistic additive — retraining
-  * mid-stream would change cell identities and break comparability
-  * across batches). The sufficient statistic is the per (cell, label)
-  * (count, micro-cosine-sum) frame — integer and ADDITIVE
-  * (micro units are exact, so sums are associative and
-  * partitioning/batching-independent). Per micro-batch one map-side
-  * assignment + one distributed grouped agg runs; only the
-  * post-aggregate rows (≤ cells × labels — bounded metadata at the
-  * √n cell cap) cross to the driver. [[current]] hands the merged
-  * frame to the batch operator's own value stage, so stream == batch
-  * CELL-EXACTLY over any split of the corpus.
+  * mid-stream would change cell identities). The per (cell, label)
+  * (count, micro-cosine-sum) frame is integer and held in an
+  * [[Additive]]; [[current]] hands it to the batch operator's value
+  * stage, so stream == batch cell-exactly over any split.
   */
-class StreamingTopicMix(cents: Seq[(Int, Array[Float], Double)])
-    extends Serializable {
+class StreamingTopicMix private (cents: Seq[(Int, Array[Float], Double)],
+                                 counts: Additive) extends Serializable {
 
-  // (cell, label) -> (count, micro-cosine sum)
-  private val state =
-    scala.collection.mutable.HashMap.empty[(Int, Int), (Long, Long)]
+  def this(cents: Seq[(Int, Array[Float], Double)]) =
+    this(cents, new Additive("cell", "label"))
 
   /** Merge one micro-batch of embeddings (vec_id, embedding, label). */
-  def mergeBatch(s: SparkSession, batch: DataFrame): Unit = {
-    val rows = Clustering.topicGrouped(
-      Clustering.assignedScoredOf(s, batch, cents)).collect()
-    this.synchronized {
-      rows.foreach { r =>
-        val k = (r.getInt(0), r.getInt(1))
-        val (c0, m0) = state.getOrElse(k, (0L, 0L))
-        state.update(k, (c0 + r.getLong(2), m0 + r.getLong(3)))
-      }
-    }
-  }
+  def mergeBatch(s: SparkSession, batch: DataFrame): Unit =
+    counts.merge(Clustering.topicGrouped(Clustering.assignedScoredOf(s, batch, cents)))
 
   /** Current topic profile — identical columns and values to the
     * batch operator over the same embeddings.
     */
-  def current(s: SparkSession): DataFrame = {
-    val rows = this.synchronized {
-      state.toSeq.map { case ((c, l), (n, m)) => (c, l, n, m) }
-    }
-    import s.implicits._
-    Clustering.topicFromGrouped(
-      rows.toDF("cell", "label", "cnt", "micro_sum"))
-  }
+  def current(s: SparkSession): DataFrame =
+    Clustering.topicFromGrouped(counts.state(s))
 
-  /** Persist the grouped statistic AND the frozen centroid set — the
-    * exact sufficient state, so [[StreamingTopicMix.restore]] +
-    * remaining batches equals an uninterrupted run exactly.
-    */
+  /** Persist the grouped statistic and the frozen centroid set. */
   def snapshot(s: SparkSession, path: String): Unit = {
-    val rows = this.synchronized {
-      state.toSeq.map { case ((c, l), (n, m)) => (c, l, n, m) }
-    }
-    import s.implicits._
-    rows.toDF("cell", "label", "cnt", "micro_sum")
-      .write.mode("overwrite").parquet(s"$path/counts")
-    cents.map(c => (c._1, c._2.toSeq, c._3)).toDF("cell", "ce", "cnrm")
-      .write.mode("overwrite").parquet(s"$path/cents")
+    counts.snapshot(s, s"$path/counts")
+    StreamingTopicMix.saveCents(s, cents, s"$path/cents")
   }
 }
 
 object StreamingTopicMix {
   /** Rebuild a monitor from a [[StreamingTopicMix.snapshot]]. */
-  def restore(s: SparkSession, path: String): StreamingTopicMix = {
-    val cents = s.read.parquet(s"$path/cents").collect()
+  def restore(s: SparkSession, path: String): StreamingTopicMix =
+    new StreamingTopicMix(loadCents(s, s"$path/cents"),
+      Additive.restore(s, s"$path/counts", "cell", "label"))
+
+  private[streaming] def saveCents(s: SparkSession,
+      cents: Seq[(Int, Array[Float], Double)], path: String): Unit = {
+    import s.implicits._
+    cents.map(c => (c._1, c._2.toSeq, c._3)).toDF("cell", "ce", "cnrm")
+      .write.mode("overwrite").parquet(path)
+  }
+
+  private[streaming] def loadCents(s: SparkSession,
+      path: String): Seq[(Int, Array[Float], Double)] =
+    s.read.parquet(path).collect()
       .map(r => (r.getInt(0), r.getSeq[Float](1).toArray, r.getDouble(2)))
       .toSeq.sortBy(_._1)
-    val m = new StreamingTopicMix(cents)
-    s.read.parquet(s"$path/counts").collect().foreach { r =>
-      m.state.update((r.getInt(0), r.getInt(1)), (r.getLong(2), r.getLong(3)))
-    }
-    m
-  }
 }

@@ -183,19 +183,29 @@ class ClassifierSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val (dir, _) = fixture
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val twin = new graft.streaming.StreamingNbModel
-    for (r <- 0 until 3) // arbitrary micro-batches by doc_id residue
-      twin.mergeBatch(docs.filter(pmod(col("doc_id"), lit(3)) === r))
+    // token counts keyed by t; the (n_cur, n_docs) prior tally is keyless
+    val counts = new graft.streaming.Additive("t")
+    val tally = new graft.streaming.Additive()
+    for (r <- 0 until 3) { // arbitrary micro-batches by doc_id residue
+      val batch = docs.filter(pmod(col("doc_id"), lit(3)) === r)
+      counts.merge(Classifier.trainCountsFromDocs(batch))
+      tally.merge(Classifier.trainDocTallyFrame(batch))
+    }
     def mkey(r: org.apache.spark.sql.Row) =
       (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3))
-    val gotModel = twin.currentModel(spark).collect().map(mkey).sortBy(_._1).toSeq
+    val state = counts.state(spark)
+    val gotModel = Classifier.modelTable(state).collect().map(mkey).sortBy(_._1).toSeq
     val wantModel = Classifier.nbTrain(spark, dir).collect().map(mkey).toSeq
     assert(gotModel === wantModel,
       "merged token counts reproduce the batch model exactly")
     def skey(r: org.apache.spark.sql.Row) =
       (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3),
         r.getInt(4), r.getInt(5), r.getDouble(6))
-    val gotScores = twin.scoreBatch(spark, docs).collect().map(skey).sortBy(_._1).toSeq
+    val (tc, tw, v) = Classifier.totalsOf(state)
+    val prior = tally.rows.head
+    val live = Classifier.scoreStage(docs, Classifier.modelFromCounts(state, tc, tw, v),
+      Classifier.priorUOf(prior.getAs[Long]("n_cur"), prior.getAs[Long]("n_docs")))
+    val gotScores = live.collect().map(skey).sortBy(_._1).toSeq
     val wantScores = Classifier.nbScore(spark, dir).collect().map(skey).toSeq
     assert(gotScores === wantScores,
       "live scoring under the merged model == the batch scoring pass")
@@ -225,12 +235,13 @@ class ClassifierSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val (dir, _) = fixture
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val twin = new graft.streaming.StreamingDsir
+    val counts = new graft.streaming.Additive("f")
     for (r <- 0 until 3)
-      twin.mergeBatch(docs.filter(pmod(col("doc_id"), lit(3)) === r))
+      counts.merge(Classifier.dsirCountFrame(docs.filter(pmod(col("doc_id"), lit(3)) === r)))
     def key(r: org.apache.spark.sql.Row) =
       (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3))
-    val got = twin.weightBatch(spark, docs).collect().map(key).sortBy(_._1).toSeq
+    val cnt = counts.rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
+    val got = Classifier.dsirScoreFrame(spark, docs, cnt).collect().map(key).sortBy(_._1).toSeq
     val want = Classifier.dsirWeights(spark, dir).collect().map(key).toSeq
     assert(got === want, "merged feature table reproduces batch weights exactly")
   }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.CorpusCuration
+import graft.streaming.Additive
 
 /** Round-7 corpus-curation operators: token-budget selection, CCNet
   * perplexity terciles, source-similarity sketch, KL drift monitor.
@@ -258,10 +259,8 @@ class CorpusCurationSpec extends AnyFunSuite {
     }
     // the r17 driver-local fast path (default cap, taken above) must
     // equal the distributed checkpointed rounds bit-for-bit
-    val cap = CorpusCuration.LocalPrEdgeCap
-    CorpusCuration.LocalPrEdgeCap = 0L
-    val distRows = try CorpusCuration.sourceRank(spark, sf).collect().map(_.toSeq).toSeq
-      finally CorpusCuration.LocalPrEdgeCap = cap
+    val distRows = CorpusCuration.sourceRank(spark, sf, localPrEdgeCap = 0L)
+      .collect().map(_.toSeq).toSeq
     val localRows = CorpusCuration.sourceRank(spark, sf).collect().map(_.toSeq).toSeq
     assert(distRows === localRows, "local pagerank == distributed rounds")
     // an edge endpoint outside the node set fails with a message, not
@@ -548,13 +547,13 @@ class CorpusCurationSpec extends AnyFunSuite {
 
   test("streaming KL drift equals the batch operator over any split") {
     val docs = Tables.documents(spark, sf)
-    val twin = new graft.streaming.StreamingKlDrift
+    val counts = new Additive("source", "t")
     for (r <- 0 until 3) // arbitrary micro-batches by doc_id residue
-      twin.mergeBatch(docs.filter(pmod(col("doc_id"), lit(3)) === r)
-        .select("source", "text"))
+      counts.merge(CorpusCuration.sourceTokenCountsOf(
+        docs.filter(pmod(col("doc_id"), lit(3)) === r).select("source", "text")))
     def key(r: org.apache.spark.sql.Row) =
       (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3))
-    val got = twin.current(spark).collect().map(key).toSeq
+    val got = CorpusCuration.klFromCounts(counts.state(spark)).collect().map(key).toSeq
     val want = CorpusCuration.klDrift(spark, sf).collect().map(key).toSeq
     assert(got === want, "merged (source, token) counts reproduce batch KL exactly")
   }
@@ -562,19 +561,21 @@ class CorpusCurationSpec extends AnyFunSuite {
   test("streaming embed drift equals the batch operator over any split, incl. restore") {
     val emb = Tables.embeddings(spark, sf)
     def slice(r: Int) = emb.filter(pmod(col("vec_id"), lit(3)) === r)
-    val twin = new graft.streaming.StreamingEmbedDrift
-    twin.mergeBatch(spark, slice(0)); twin.mergeBatch(spark, slice(1))
+    def merge(a: Additive, r: Int) = a.merge(CorpusCuration.embedGrouped(slice(r)))
+    val twin = new Additive("label", "dim")
+    merge(twin, 0); merge(twin, 1)
     val snap = java.nio.file.Files.createTempDirectory("graft_driftsnap").toString
     twin.snapshot(spark, snap)
-    val resumed = graft.streaming.StreamingEmbedDrift.restore(spark, snap)
-    resumed.mergeBatch(spark, slice(2))
-    twin.mergeBatch(spark, slice(2))
+    val resumed = Additive.restore(spark, snap, "label", "dim")
+    merge(resumed, 2); merge(twin, 2)
     def key(r: org.apache.spark.sql.Row) =
       (r.getInt(0), r.getLong(1), r.getDouble(2))
+    def current(a: Additive) =
+      CorpusCuration.embedDriftFromSums(a.state(spark)).collect().map(key).toSeq
     val want = CorpusCuration.embedDrift(spark, sf).collect().map(key).toSeq
-    assert(twin.current(spark).collect().map(key).toSeq === want,
+    assert(current(twin) === want,
       "merged decimal coordinate sums reproduce the batch drift card exactly")
-    assert(resumed.current(spark).collect().map(key).toSeq === want,
+    assert(current(resumed) === want,
       "restore + remaining batches == uninterrupted monitor == batch")
   }
 
@@ -582,21 +583,24 @@ class CorpusCurationSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, sf).select("source", "text", "doc_id")
     def slice(r: Int) =
       docs.filter(pmod(col("doc_id"), lit(3)) === r).select("source", "text")
-    val twin = new graft.streaming.StreamingCorpusCard
-    twin.mergeBatch(slice(0)); twin.mergeBatch(slice(1))
+    val keys = Seq("source", "h", "pred")
+    def merge(a: Additive, r: Int) = a.merge(CorpusCuration.cardGrouped(slice(r)))
+    val twin = new Additive(keys: _*)
+    merge(twin, 0); merge(twin, 1)
     // snapshot mid-stream; the restored monitor sees only the rest
     val snap = java.nio.file.Files.createTempDirectory("graft_cardsnap").toString
     twin.snapshot(spark, snap)
-    val resumed = graft.streaming.StreamingCorpusCard.restore(spark, snap)
-    resumed.mergeBatch(slice(2))
-    twin.mergeBatch(slice(2))
+    val resumed = Additive.restore(spark, snap, keys: _*)
+    merge(resumed, 2); merge(twin, 2)
     def key(r: org.apache.spark.sql.Row) =
       (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getDouble(4), r.getDouble(5), r.getString(6), r.getDouble(7))
+    def current(a: Additive) =
+      CorpusCuration.cardFromGrouped(a.state(spark)).collect().map(key).toSeq
     val want = operators.CorpusCuration.corpusCard(spark, sf).collect().map(key).toSeq
-    assert(twin.current(spark).collect().map(key).toSeq === want,
+    assert(current(twin) === want,
       "merged grouped stats reproduce the batch card exactly")
-    assert(resumed.current(spark).collect().map(key).toSeq === want,
+    assert(current(resumed) === want,
       "restore + remaining batches == uninterrupted monitor == batch")
   }
 
@@ -656,20 +660,23 @@ class CorpusCurationSpec extends AnyFunSuite {
   test("streaming skew report equals the batch operator over any split, incl. restore") {
     val events = Tables.events(spark, sf)
     def slice(r: Int) = events.filter(pmod(col("event_id"), lit(3)) === r)
-    val twin = new graft.streaming.StreamingSkewReport
-    twin.mergeBatch(slice(0)); twin.mergeBatch(slice(1))
+    import operators.ExtendedAnalytics
+    def merge(a: Additive, r: Int) = a.merge(ExtendedAnalytics.skewCounts(slice(r)))
+    val twin = new Additive("user_id")
+    merge(twin, 0); merge(twin, 1)
     val snap = java.nio.file.Files.createTempDirectory("graft_skewsnap").toString
     twin.snapshot(spark, snap)
-    val resumed = graft.streaming.StreamingSkewReport.restore(spark, snap)
-    resumed.mergeBatch(slice(2))
-    twin.mergeBatch(slice(2))
+    val resumed = Additive.restore(spark, snap, "user_id")
+    merge(resumed, 2); merge(twin, 2)
     def key(r: org.apache.spark.sql.Row) =
       (r.getInt(0), r.getLong(1), r.getLong(2), r.getDouble(3),
         r.getDouble(4), r.getDouble(5))
-    val want = operators.ExtendedAnalytics.skewReport(spark, sf).collect().map(key).toSeq
-    assert(twin.current(spark).collect().map(key).toSeq === want,
+    def current(a: Additive) =
+      ExtendedAnalytics.skewFromCounts(spark, a.state(spark)).collect().map(key).toSeq
+    val want = ExtendedAnalytics.skewReport(spark, sf).collect().map(key).toSeq
+    assert(current(twin) === want,
       "merged per-key counts reproduce the batch skew report exactly")
-    assert(resumed.current(spark).collect().map(key).toSeq === want,
+    assert(current(resumed) === want,
       "restore + remaining batches == uninterrupted monitor == batch")
   }
 
@@ -677,20 +684,21 @@ class CorpusCurationSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, sf)
     def slice(r: Int) =
       docs.filter(pmod(col("doc_id"), lit(3)) === r).select("source", "text")
-    val live = new graft.streaming.StreamingKlDrift
-    live.mergeBatch(slice(0)); live.mergeBatch(slice(1))
+    def merge(a: Additive, r: Int) = a.merge(CorpusCuration.sourceTokenCountsOf(slice(r)))
+    val live = new Additive("source", "t")
+    merge(live, 0); merge(live, 1)
     val snap = java.nio.file.Files.createTempDirectory("graft_klsnap").toString
     live.snapshot(spark, snap)
     // the restored monitor sees only the remaining batch
-    val resumed = graft.streaming.StreamingKlDrift.restore(spark, snap)
-    resumed.mergeBatch(slice(2))
-    live.mergeBatch(slice(2))
+    val resumed = Additive.restore(spark, snap, "source", "t")
+    merge(resumed, 2); merge(live, 2)
     def key(r: org.apache.spark.sql.Row) =
       (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3))
-    assert(resumed.current(spark).collect().map(key).toSeq ===
-      live.current(spark).collect().map(key).toSeq,
+    def current(a: Additive) =
+      CorpusCuration.klFromCounts(a.state(spark)).collect().map(key).toSeq
+    assert(current(resumed) === current(live),
       "restore + remaining batches == uninterrupted monitor")
-    assert(resumed.current(spark).collect().map(key).toSeq ===
+    assert(current(resumed) ===
       CorpusCuration.klDrift(spark, sf).collect().map(key).toSeq,
       "and both equal the batch operator")
   }
@@ -718,50 +726,55 @@ class CorpusCurationSpec extends AnyFunSuite {
       "restored boundary must withhold the same post-prune fringe")
   }
 
-  test("rate monitor restore reads meta by name and translates legacy pruned_to") {
+  test("rate monitor restore reads meta by name and rejects legacy pruned_to") {
     import spark.implicits._
     val ev = Tables.events(spark, sf)
     val live = new graft.streaming.StreamingRateAnomaly
     live.mergeBatch(ev.filter(pmod(col("event_id"), lit(2)) === 0))
     val snap = java.nio.file.Files.createTempDirectory("graft_ratev1").toString
     live.snapshot(spark, snap)
+    val firstNo = spark.read.parquet(s"$snap/counts")
+      .agg(org.apache.spark.sql.functions.min("hr_no")).head().getLong(0)
+    live.pruneBefore(firstNo + 2)
+    live.snapshot(spark, snap)
     val d = spark.read.parquet(s"$snap/meta").head().getAs[Long]("dropped_max")
-    // forge a pre-r9 snapshot: same counts, meta column `pruned_to`
-    // holding the EXCLUSIVE requested boundary (old semantics), and a
-    // new-format reference with the equivalent dropped_max = boundary-1
-    val boundary = d + 2L
-    def forge(metaCol: String, v: Long): String = {
+    assert(d >= firstNo, "the prune dropped an hour")
+    // forge snapshots over the same counts: a pre-r9 one whose meta
+    // column is `pruned_to` (the exclusive boundary), and a current one
+    // whose `dropped_max` sits behind another column
+    def forge(meta: org.apache.spark.sql.DataFrame): String = {
       val root = java.nio.file.Files.createTempDirectory("graft_ratev").toString
       spark.read.parquet(s"$snap/counts")
         .write.mode("overwrite").parquet(s"$root/counts")
-      Seq(v).toDF(metaCol).write.mode("overwrite").parquet(s"$root/meta")
+      meta.write.mode("overwrite").parquet(s"$root/meta")
       root
     }
-    val legacy = graft.streaming.StreamingRateAnomaly
-      .restore(spark, forge("pruned_to", boundary))
-    val ref = graft.streaming.StreamingRateAnomaly
-      .restore(spark, forge("dropped_max", boundary - 1L))
+    val legacy = forge(Seq(d + 1L).toDF("pruned_to"))
+    val err = intercept[IllegalStateException] {
+      graft.streaming.StreamingRateAnomaly.restore(spark, legacy)
+    }
+    assert(err.getMessage.contains(legacy) && err.getMessage.contains("dropped_max"),
+      err.getMessage)
+    val byName = graft.streaming.StreamingRateAnomaly
+      .restore(spark, forge(Seq((7L, d)).toDF("other", "dropped_max")))
     def key(r: org.apache.spark.sql.Row) = (r.getString(0), r.getLong(1),
       Option(r.get(2)).map(_.asInstanceOf[Double]), r.getBoolean(3))
-    assert(legacy.current(spark).collect().map(key).toSeq ===
-      ref.current(spark).collect().map(key).toSeq,
-      "legacy pruned_to must restore as droppedMax = boundary - 1")
-    // and the translated gate behaves identically as batches continue
-    legacy.mergeBatch(ev.filter(pmod(col("event_id"), lit(2)) === 1))
-    ref.mergeBatch(ev.filter(pmod(col("event_id"), lit(2)) === 1))
-    assert(legacy.current(spark).collect().map(key).toSeq ===
-      ref.current(spark).collect().map(key).toSeq)
+    val want = live.current(spark).collect().map(key).toSeq
+    assert(want.size < spark.read.parquet(s"$snap/counts").count(),
+      "the restored gate withholds the post-prune fringe")
+    assert(byName.current(spark).collect().map(key).toSeq === want,
+      "dropped_max is read by name, not by position")
   }
 
   test("streaming lang mismatch equals the batch operator over any split") {
     val docs = Tables.documents(spark, sf)
-    val twin = new graft.streaming.StreamingLangMismatch
+    val counts = new Additive("source")
     for (r <- 0 until 3)
-      twin.mergeBatch(docs.filter(pmod(col("doc_id"), lit(3)) === r)
-        .select("source", "lang", "text"))
+      counts.merge(CorpusCuration.langMismatchCounts(
+        docs.filter(pmod(col("doc_id"), lit(3)) === r).select("source", "lang", "text")))
     def key(r: org.apache.spark.sql.Row) =
       (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4))
-    val got = twin.current(spark).collect().map(key).toSeq
+    val got = CorpusCuration.langMismatchRates(counts.state(spark)).collect().map(key).toSeq
     val want = CorpusCuration.langMismatch(spark, sf).collect().map(key).toSeq
     assert(got === want, "summed per-source counters reproduce the batch audit exactly")
   }

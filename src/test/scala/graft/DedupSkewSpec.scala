@@ -39,16 +39,13 @@ class DedupSkewSpec extends AnyFunSuite {
       Seq((200L, 1, "c1"), (201L, 1, "c1"), (202L, 1, "c1"),
         (300L, 0, "c2"), (301L, 0, "c2"), (5L, 1, "c1"))
     val banded = rows.toDF("doc_id", "band_id", "key")
-    val old = (Dedup.HotBandBucketCap, Dedup.HotDetectSampleMod)
-    try {
-      Dedup.HotBandBucketCap = 8L
-      Dedup.HotDetectSampleMod = 1L // exact sizes: deterministic engagement
-      val got = Dedup.saltedBandSelfJoin(spark, banded, "key", None)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      assert(got.size === got.distinct.size,
-        "salt cells must not deliver duplicate pairs")
-      assert(got.toSet === refPairs(rows))
-    } finally { Dedup.HotBandBucketCap = old._1; Dedup.HotDetectSampleMod = old._2 }
+    // sampleMod 1 = exact sizes: deterministic engagement
+    val got = Dedup.saltedBandSelfJoin(spark, banded, "key", None,
+        hotBucketCap = 8L, sampleMod = 1L)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(got.size === got.distinct.size,
+      "salt cells must not deliver duplicate pairs")
+    assert(got.toSet === refPairs(rows))
   }
 
   test("payload columns swap alongside least/greatest ordering") {
@@ -58,16 +55,12 @@ class DedupSkewSpec extends AnyFunSuite {
     // where the x/y orientation is salt-dependent
     val rows = (0L until 30L).map(i => (i, 0, "H", i * 10))
     val banded = rows.toDF("doc_id", "band_id", "key", "pay")
-    val old = (Dedup.HotBandBucketCap, Dedup.HotDetectSampleMod)
-    try {
-      Dedup.HotBandBucketCap = 5L
-      Dedup.HotDetectSampleMod = 1L
-      val got = Dedup.saltedBandSelfJoin(spark, banded, "key", Some("pay"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-      assert(got.length === 30 * 29 / 2)
-      assert(got.forall { case (a, b, pa, pb) => pa === a * 10 && pb === b * 10 },
-        "payload must follow its doc through the least/greatest swap")
-    } finally { Dedup.HotBandBucketCap = old._1; Dedup.HotDetectSampleMod = old._2 }
+    val got = Dedup.saltedBandSelfJoin(spark, banded, "key", Some("pay"),
+        hotBucketCap = 5L, sampleMod = 1L)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    assert(got.length === 30 * 29 / 2)
+    assert(got.forall { case (a, b, pa, pb) => pa === a * 10 && pb === b * 10 },
+      "payload must follow its doc through the least/greatest swap")
   }
 
   test("planted hot key: salted max task output is a fraction of the plain join's") {
@@ -84,17 +77,11 @@ class DedupSkewSpec extends AnyFunSuite {
     // listener's max-task shuffle-write would also see the map-side
     // explode/repartition writes, which are data-linear and not the
     // quadratic stage under test)
-    def measure(cap: Long): Long = {
-      val old = (Dedup.HotBandBucketCap, Dedup.HotDetectSampleMod)
-      try {
-        Dedup.HotBandBucketCap = cap
-        Dedup.HotDetectSampleMod = 1L
-        Dedup.saltedBandSelfJoin(spark, banded, "key", None)
-          .withColumn("pid", spark_partition_id())
-          .groupBy("pid").count().agg(max("count"))
-          .collect()(0).getLong(0)
-      } finally { Dedup.HotBandBucketCap = old._1; Dedup.HotDetectSampleMod = old._2 }
-    }
+    def measure(cap: Long): Long =
+      Dedup.saltedBandSelfJoin(spark, banded, "key", None, hotBucketCap = cap, sampleMod = 1L)
+        .withColumn("pid", spark_partition_id())
+        .groupBy("pid").count().agg(max("count"))
+        .collect()(0).getLong(0)
     val plainMax = measure(1000000L) // cap never engages: plain join
     val saltedMax = measure(8L)      // S = 13 slices, 91 cells
     // ideal = every join partition carries an equal share of the 4950
@@ -124,16 +111,13 @@ class DedupSkewSpec extends AnyFunSuite {
     def pairSet(df: org.apache.spark.sql.DataFrame) =
       df.select("doc_a", "doc_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val old = (Dedup.HotBandBucketCap, Dedup.HotDetectSampleMod)
     try {
-      Dedup.HotBandBucketCap = 1000000L
-      Dedup.HotDetectSampleMod = 1L
-      val mhPlain = pairSet(Dedup.minhashLsh(spark, dir))
-      val shPlain = pairSet(Dedup.simhash(spark, dir))
+      val mhPlain = pairSet(Dedup.minhashLsh(spark, dir, hotBucketCap = 1000000L, sampleMod = 1L))
+      val shPlain = pairSet(Dedup.simhash(spark, dir, hotBucketCap = 1000000L, sampleMod = 1L))
+      // the minhash pair frame is memoized per dir: release before the rerun
       graft.plans.Memo.release(spark, dir)
-      Dedup.HotBandBucketCap = 8L
-      val mhSalted = pairSet(Dedup.minhashLsh(spark, dir))
-      val shSalted = pairSet(Dedup.simhash(spark, dir))
+      val mhSalted = pairSet(Dedup.minhashLsh(spark, dir, hotBucketCap = 8L, sampleMod = 1L))
+      val shSalted = pairSet(Dedup.simhash(spark, dir, hotBucketCap = 8L, sampleMod = 1L))
       // the 40 identical docs must all pair up (J = 1, hamming = 0) —
       // proves the hot path produced them, not just the cold one
       val expectHot = (for (a <- 0L until 40L; b <- (a + 1) until 40L)
@@ -142,11 +126,7 @@ class DedupSkewSpec extends AnyFunSuite {
       assert(expectHot.subsetOf(shSalted), "identical-doc pairs missing from salted simhash")
       assert(mhSalted === mhPlain, "minhash pair set changed under salting")
       assert(shSalted === shPlain, "simhash pair set changed under salting")
-    } finally {
-      Dedup.HotBandBucketCap = old._1
-      Dedup.HotDetectSampleMod = old._2
-      graft.plans.Memo.release(spark, dir)
-    }
+    } finally graft.plans.Memo.release(spark, dir)
   }
 
   test("sampled detection flags a runaway bucket and still bounds the spread") {
@@ -158,20 +138,16 @@ class DedupSkewSpec extends AnyFunSuite {
     val rows = (0L until 2000L).map(i => (i, 0, "H")) ++
       (2000L until 2400L).map(i => (i, 0, s"u$i"))
     val banded = rows.toDF("doc_id", "band_id", "key")
-    val old = (Dedup.HotBandBucketCap, Dedup.HotDetectSampleMod)
-    try {
-      Dedup.HotBandBucketCap = 64L
-      Dedup.HotDetectSampleMod = 16L
-      val dist = Dedup.saltedBandSelfJoin(spark, banded, "key", None)
-        .withColumn("pid", spark_partition_id())
-        .groupBy("pid").count().collect().map(_.getLong(1))
-      val total = 2000L * 1999L / 2
-      assert(dist.sum === total, "pair count must be exactly the bucket's choose-2")
-      val nPart = spark.sessionState.conf.numShufflePartitions
-      val ideal = total.toDouble / nPart
-      info(s"sampled-detection spread: max=${dist.max} ideal=$ideal over ${dist.length} partitions")
-      assert(dist.max <= (2.0 * ideal).toLong,
-        s"sampled detection must still spread the bucket: max=${dist.max} vs ideal=$ideal")
-    } finally { Dedup.HotBandBucketCap = old._1; Dedup.HotDetectSampleMod = old._2 }
+    val dist = Dedup.saltedBandSelfJoin(spark, banded, "key", None,
+        hotBucketCap = 64L, sampleMod = 16L)
+      .withColumn("pid", spark_partition_id())
+      .groupBy("pid").count().collect().map(_.getLong(1))
+    val total = 2000L * 1999L / 2
+    assert(dist.sum === total, "pair count must be exactly the bucket's choose-2")
+    val nPart = spark.sessionState.conf.numShufflePartitions
+    val ideal = total.toDouble / nPart
+    info(s"sampled-detection spread: max=${dist.max} ideal=$ideal over ${dist.length} partitions")
+    assert(dist.max <= (2.0 * ideal).toLong,
+      s"sampled detection must still spread the bucket: max=${dist.max} vs ideal=$ideal")
   }
 }

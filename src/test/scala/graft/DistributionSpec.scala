@@ -412,13 +412,13 @@ class DistributionSpec extends AnyFunSuite {
 
   test("streaming zipf view equals the batch operator over any split") {
     val docs = Tables.documents(spark, sf)
-    val twin = new graft.streaming.StreamingKlDrift
+    val counts = new graft.streaming.Additive("source", "t")
     for (r <- 0 until 3)
-      twin.mergeBatch(docs.filter(pmod(col("doc_id"), lit(3)) === r)
-        .select("source", "text"))
+      counts.merge(CorpusCuration.sourceTokenCountsOf(
+        docs.filter(pmod(col("doc_id"), lit(3)) === r).select("source", "text")))
     def key(r: org.apache.spark.sql.Row) =
       (r.getString(0), r.getLong(1), r.getDouble(2))
-    assert(twin.currentZipf(spark).collect().map(key).toSeq ===
+    assert(CorpusCuration.zipfFromCounts(counts.state(spark)).collect().map(key).toSeq ===
       CorpusCuration.zipfFit(spark, sf).collect().map(key).toSeq,
       "one merged (source, token) state serves both the KL and Zipf views")
   }
@@ -427,19 +427,24 @@ class DistributionSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, sf)
     def slice(r: Int) =
       docs.filter(pmod(col("doc_id"), lit(3)) === r).select("source", "text")
-    val live = new graft.streaming.StreamingBigramEntropy
-    live.mergeBatch(slice(0)); live.mergeBatch(slice(1))
+    import graft.streaming.Additive
+    val keys = Seq("source", "w1", "w2")
+    val live = new Additive(keys: _*)
+    live.merge(CorpusCuration.bigramPairCounts(slice(0)))
+    live.merge(CorpusCuration.bigramPairCounts(slice(1)))
     val snap = java.nio.file.Files.createTempDirectory("graft_besnap").toString
     live.snapshot(spark, snap)
-    val resumed = graft.streaming.StreamingBigramEntropy.restore(spark, snap)
-    resumed.mergeBatch(slice(2))
-    live.mergeBatch(slice(2))
+    val resumed = Additive.restore(spark, snap, keys: _*)
+    resumed.merge(CorpusCuration.bigramPairCounts(slice(2)))
+    live.merge(CorpusCuration.bigramPairCounts(slice(2)))
     def key(r: org.apache.spark.sql.Row) =
       (r.getString(0), r.getLong(1), r.getLong(2), r.getDouble(3))
+    def current(a: Additive) =
+      CorpusCuration.bigramEntropyFromCounts(a.state(spark)).collect().map(key).toSeq
     val want = CorpusCuration.bigramEntropy(spark, sf).collect().map(key).toSeq
-    assert(live.current(spark).collect().map(key).toSeq === want,
+    assert(current(live) === want,
       "merged (source, w1, w2) counts reproduce batch entropy exactly")
-    assert(resumed.current(spark).collect().map(key).toSeq === want,
+    assert(current(resumed) === want,
       "restore + remaining batches == uninterrupted monitor == batch")
   }
 }

@@ -1421,15 +1421,11 @@ class PlanRegressionSpec extends org.scalatest.funsuite.AnyFunSuite {
     val chain = (0L until 256L).map(i => (i, i + 1)).toDF("a", "b")
     // force the distributed contraction (the r16 local union-find fast
     // path would satisfy the labels without exercising the rounds bound)
-    val cap = operators.Components.LocalEdgeCap
-    operators.Components.LocalEdgeCap = 0L
-    try {
-      val (labels, rounds) = operators.Components.run(chain, "a", "b")
-      val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got.size === 257 && got.values.forall(_ == 0L),
-        "every chain node labels to the component minimum")
-      assert(rounds <= 10, s"diameter-256 chain took $rounds rounds (propagation: ~256)")
-    } finally operators.Components.LocalEdgeCap = cap
+    val (labels, rounds) = operators.Components.run(chain, "a", "b", localEdgeCap = 0L)
+    val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got.size === 257 && got.values.forall(_ == 0L),
+      "every chain node labels to the component minimum")
+    assert(rounds <= 10, s"diameter-256 chain took $rounds rounds (propagation: ~256)")
     // the local fast path (default cap) must label identically
     val (local, lr) = operators.Components.run(chain, "a", "b")
     assert(lr === -1, "256 edges must take the bounded local path")
@@ -1449,12 +1445,8 @@ class PlanRegressionSpec extends org.scalatest.funsuite.AnyFunSuite {
         val b = rnd.nextInt(400).toLong; (a, b) })).filter(p => p._1 != p._2)
     // distributed contraction AND the r16 local fast path must both
     // match the union-find ground truth below
-    val capMx = operators.Components.LocalEdgeCap
-    operators.Components.LocalEdgeCap = 0L
-    val got = try {
-      val (labels, _) = operators.Components.run(edges.toDF("a", "b"), "a", "b")
-      labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    } finally operators.Components.LocalEdgeCap = capMx
+    val got = operators.Components.run(edges.toDF("a", "b"), "a", "b", localEdgeCap = 0L)._1
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val (labelsLocal, _) = operators.Components.run(edges.toDF("a", "b"), "a", "b")
     val gotLocal = labelsLocal.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === gotLocal, "local fast path == distributed contraction")
@@ -2298,21 +2290,16 @@ class BpeSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   test("distributed learner rounds equal the local fast path (r16)") {
     // the local path covers the default cap; force the distributed
-    // rounds on the same corpus and compare both learner outputs
-    val cap = operators.Bpe.LocalVocabCap
-    graft.plans.Memo.release(spark, sf)
-    operators.Bpe.LocalVocabCap = 0L
-    val (mDist, vDist) = try {
-      (operators.Bpe.bpeMerges(spark, sf).collect().map(_.toSeq).toSeq,
-        operators.Bpe.bpeVocab(spark, sf).collect().map(_.toSeq).toSeq)
-    } finally {
-      operators.Bpe.LocalVocabCap = cap
-      graft.plans.Memo.release(spark, sf)
-    }
-    val mLocal = operators.Bpe.bpeMerges(spark, sf).collect().map(_.toSeq).toSeq
-    val vLocal = operators.Bpe.bpeVocab(spark, sf).collect().map(_.toSeq).toSeq
+    // rounds on the same vocabulary and compare both learner outputs
+    val words = operators.Bpe.wordCounts(spark, sf)
+    val (mDist, vDist) = operators.Bpe.learn(words, localVocabCap = 0L)
+    val (mLocal, vLocal) = operators.Bpe.learn(words)
     assert(mDist === mLocal, "merge list: distributed != local")
     assert(vDist === vLocal, "vocab: distributed != local")
+    // the query surface serves the same learner output
+    assert(operators.Bpe.bpeMerges(spark, sf).collect().map(r =>
+      (r.getInt(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4))).toSeq
+      === mLocal)
   }
 
   test("induced vocabulary equals the reference segmentation") {
