@@ -352,8 +352,7 @@ object Dedup {
   }
 
   /** `hotBucketCap`/`sampleMod` are [[saltedBandSelfJoin]]'s; the pair
-    * frame is memoized per (session, dir), so a non-default value takes
-    * effect only on a released dir.
+    * frame is memoized per (session, dir, caps).
     */
   def minhashLsh(s: SparkSession, dir: String, hotBucketCap: Long = HotBucketCap,
                  sampleMod: Long = HotSampleMod): DataFrame =
@@ -365,10 +364,13 @@ object Dedup {
     * (`q_dedup_minhash`, `q_dup_matrix` — measured 18 CPU-s of
     * re-verification without the persist). The frame is SPARSE (near-
     * dup pairs only) — post-shuffle small, the kl_drift persist class.
+    * Both caps are in the frame name: a frame built with other caps is
+    * never served in its place.
     */
   private def minhashPairs(s: SparkSession, dir: String, hotBucketCap: Long = HotBucketCap,
                            sampleMod: Long = HotSampleMod): DataFrame =
-    graft.plans.Memo.shared(s, dir, "dedup.minhashPairs") {
+    graft.plans.Memo.shared(s, dir,
+        s"dedup.minhashPairs.cap$hotBucketCap.mod$sampleMod") {
       val docs = shingled(s, dir)
       // skew-bounded band-bucket self-join (r16): the pinned exchange +
       // salt triangle for hot keys live in [[saltedBandSelfJoin]]

@@ -52,19 +52,8 @@ object IndexVersions {
       walkFiles(f, new org.apache.hadoop.fs.Path(s"$root/$role"))
         .sorted.map(path => s"$role\t$path")
     }
-    var attempts = 0
-    while (true) {
-      val v = Snapshots.latestVersion(s, root) + 1
-      try {
-        Snapshots.writeManifest(s, root, v, lines)
-        return v
-      } catch {
-        case e: Snapshots.ConcurrentCommitException =>
-          attempts += 1
-          if (attempts >= 16) throw e
-      }
-    }
-    -1 // unreachable
+    Snapshots.commit(s, root)((_, _) =>
+      Snapshots.Commit(lines, kind = None, schema = None, delta = false))
   }
 
   def latest(s: SparkSession, root: String): Int =

@@ -170,13 +170,13 @@ class SnapshotMicroBatchStream(root: String, tableSchema: StructType,
                                    end: Offset): Array[InputPartition] = {
     val from = start.asInstanceOf[SnapshotOffset].v
     val to = end.asInstanceOf[SnapshotOffset].v
-    Snapshots.changeFileGroups(spark, root, from, to).flatMap {
-      case (files, _, kind, v) =>
-        // per-version pinned schemas need no shipping: the reader
-        // resolves the STREAM schema's fields against each file's own
-        // footer by name (absent column = null), which is exactly the
-        // batch path's metadata-only evolution (primitives + nested, r16)
-        files.map(f => SnapshotChangePartition(f, kind, v))
+    Snapshots.typedFiles(root, from, to,
+        Snapshots.changeFileGroups(spark, root, from, to)).flatMap { g =>
+      // per-version pinned schemas need no shipping: the reader
+      // resolves the STREAM schema's fields against each file's own
+      // footer by name (absent column = null), which is exactly the
+      // batch path's metadata-only evolution (primitives + nested, r16)
+      g.files.map(f => SnapshotChangePartition(f, g.changeType, g.version))
     }.toArray
   }
 

@@ -98,15 +98,12 @@ object Snapshots {
     extends RuntimeException(
       s"version $v at $root was committed concurrently; re-read latest and retry")
 
-  /** The base version a REWRITE's output was computed from advanced
-    * before the commit claimed its slot: retrying with the
+  /** The base version a caller's [[rewrite]] frame was computed from
+    * advanced before the commit claimed its slot: retrying with the
     * already-written files would publish a file set computed from a
     * STALE read — silently dropping the racing commit's rows from the
-    * lineage (fatal for a `dataChange=false` layout commit, which
-    * claims row preservation). The layout verbs catch this and
-    * RECOMPUTE from the new latest (the merge() discipline); callers of
-    * the raw [[rewrite]] see it surfaced as an explicit conflict, never
-    * a silent lost update.
+    * lineage. The frame is the caller's, so it cannot be recomputed:
+    * the caller sees an explicit conflict, never a silent lost update.
     */
   final class ConcurrentRewriteConflict(root: String, base: Int, now: Int)
     extends RuntimeException(
@@ -372,28 +369,19 @@ object Snapshots {
     // commit regardless: schema, commit kind, txn ranges, cdf, mirror
     // cursor — all O(1)-ish. expire() materializes its oldest retained
     // version full before dropping the chain below it.
+    // `#bloom:<fileName>:<col>:<payload>` lines are per-file
+    // membership filters for Eq-predicate skipping ([[analyzeBloom]]),
+    // carried like stats and dropped with replaced files; `#len:`
+    // lines carry each file's byte length, harvested from the write's
+    // own footer open, so the read path plans FileStatus objects
+    // straight from the manifest with zero filesystem calls
     val live = files.map(fileStatKey).toSet
-    val liveBloom = (k: String) => live.contains(bloomKeyFile(k))
+    val liveStats = stats.filter(kv => live.contains(kv._1))
+    val liveBlooms = blooms.filter(kv => live.contains(bloomKeyFile(kv._1)))
+    val liveLens = lens.filter(kv => live.contains(kv._1))
     val header = manifestHeader(txns, schema, commitKind, cdf, mirror, cdfd)
-    def statLines(keep: ((String, String)) => Boolean) =
-      stats.toSeq.filter(keep).sortBy(_._1)
-        .map { case (n, j) => s"#stats:$n:$j" }
-    // `#bloom:<fileName>:<col>:<payload>` — per-file membership
-    // filters for Eq-predicate skipping ([[analyzeBloom]]), carried
-    // like stats and dropped with replaced files
-    def bloomLines(keep: ((String, String)) => Boolean) =
-      blooms.toSeq.filter(keep).sortBy(_._1)
-        .map { case (k, pl) => s"#bloom:$k:$pl" }
-    // `#len:<fileName>:<bytes>` — each file's byte length, harvested
-    // from the write's own footer open: the read path plans FileStatus
-    // objects straight from the manifest, zero filesystem calls
-    def lenLines(keep: ((String, Long)) => Boolean) =
-      lens.toSeq.filter(keep).sortBy(_._1)
-        .map { case (n, l) => s"#len:$n:$l" }
     def full: Seq[String] =
-      header ++ statLines(kv => live.contains(kv._1)) ++
-        bloomLines(kv => liveBloom(kv._1)) ++
-        lenLines(kv => live.contains(kv._1)) ++ files
+      header ++ metaLines(liveStats, liveBlooms, liveLens) ++ files
     val content = base match {
       case Some((bv, bm)) if bv == v - 1 && v % CheckpointEvery != 0 =>
         val baseSet = bm.files.toSet
@@ -402,12 +390,9 @@ object Snapshots {
         val rms = bm.files.filterNot(fileSet)
         if (adds.length + rms.length >= files.length) full
         else Seq(s"#base:$bv") ++ header ++
-          statLines(kv => live.contains(kv._1) &&
-            !bm.stats.get(kv._1).contains(kv._2)) ++
-          bloomLines(kv => liveBloom(kv._1) &&
-            !bm.blooms.get(kv._1).contains(kv._2)) ++
-          lenLines(kv => live.contains(kv._1) &&
-            !bm.lens.get(kv._1).contains(kv._2)) ++
+          metaLines(liveStats.filter(kv => !bm.stats.get(kv._1).contains(kv._2)),
+            liveBlooms.filter(kv => !bm.blooms.get(kv._1).contains(kv._2)),
+            liveLens.filter(kv => !bm.lens.get(kv._1).contains(kv._2))) ++
           rms.map(r => s"#rm:$r") ++ adds
       case _ => full
     }
@@ -429,6 +414,15 @@ object Snapshots {
     * manifest-read cost) for [[readManifestData]]'s resolution.
     */
   val CheckpointEvery = 16
+
+  /** A manifest's `#stats:`, `#bloom:` and `#len:` lines, each kind
+    * sorted by key.
+    */
+  private def metaLines(stats: Map[String, String],
+      blooms: Map[String, String], lens: Map[String, Long]): Seq[String] =
+    stats.toSeq.sortBy(_._1).map { case (n, j) => s"#stats:$n:$j" } ++
+      blooms.toSeq.sortBy(_._1).map { case (k, pl) => s"#bloom:$k:$pl" } ++
+      lens.toSeq.sortBy(_._1).map { case (n, l) => s"#len:$n:$l" }
 
   private def manifestHeader(txns: Seq[(Long, Long)],
       schema: Option[org.apache.spark.sql.types.StructType],
@@ -461,15 +455,7 @@ object Snapshots {
     val header =
       manifestHeader(m.txns, m.schema, m.commit, m.cdf, m.mirror, m.cdfd) ++
         m.extra
-    val content =
-      header ++
-        m.stats.toSeq.sortBy(_._1)
-          .map { case (n, j) => s"#stats:$n:$j" } ++
-        m.blooms.toSeq.sortBy(_._1)
-          .map { case (k, pl) => s"#bloom:$k:$pl" } ++
-        m.lens.toSeq.sortBy(_._1)
-          .map { case (n, l) => s"#len:$n:$l" } ++
-        m.files
+    val content = header ++ metaLines(m.stats, m.blooms, m.lens) ++ m.files
     val tmp = new org.apache.hadoop.fs.Path(
       s"$root/manifests/.v$v.${java.util.UUID.randomUUID().toString.take(8)}.mat")
     val out = f.create(tmp, false)
@@ -772,14 +758,6 @@ object Snapshots {
     memoDrop(root, v)
   }
 
-  /** Committed-transaction id ranges recorded in version v's manifest
-    * (carried forward from every prior version at commit time),
-    * sorted and disjoint.
-    */
-  private[sources] def readTxnRanges(s: SparkSession, root: String,
-                                     v: Int): Seq[(Long, Long)] =
-    readManifestData(s, root, v).txns
-
   /** Merge one id into a sorted disjoint range set — O(ranges), and
     * ranges stay O(1) for the contiguous batchIds a streaming sink
     * produces.
@@ -797,28 +775,20 @@ object Snapshots {
   private def txnCommitted(ranges: Seq[(Long, Long)], id: Long): Boolean =
     ranges.exists { case (a, b) => id >= a && id <= b }
 
-  /** The read schema pinned in version v's manifest (None for
-    * manifests written before the schema tag — readers fall back to
-    * footer inference).
+  /** The schema an append commits on `base`: its standing schema
+    * widened by the batch's new columns ([[mergeSchemas]]). The
+    * standing schema is the pinned tag when present; for a LEGACY
+    * (pre-tag) lineage, the footer-inferred schema of the base's files
+    * — adopting the batch's schema alone there would silently DROP
+    * every standing column from all later reads (and bypass the
+    * type-change guard).
     */
-  private[sources] def readSchemaTag(s: SparkSession, root: String,
-      v: Int): Option[org.apache.spark.sql.types.StructType] =
-    readManifestData(s, root, v).schema
-
-  /** The standing schema a widening commit merges INTO: the pinned tag
-    * when present; for a LEGACY (pre-tag) lineage, the footer-inferred
-    * schema of the latest version — adopting the batch's schema alone
-    * there would silently DROP every standing column from all later
-    * reads (and bypass the type-change guard).
-    */
-  private def standingSchema(s: SparkSession, root: String,
-      known: Option[org.apache.spark.sql.types.StructType])
+  private def appendSchema(s: SparkSession, base: Int, m: Manifest,
+      batch: org.apache.spark.sql.types.StructType)
       : Option[org.apache.spark.sql.types.StructType] =
-    known.orElse {
-      val v = latestVersion(s, root)
-      if (v == 0) None
-      else Some(s.read.parquet(readManifestData(s, root, v).files: _*).schema)
-    }
+    Some(m.schema.orElse(
+        if (base == 0) None else Some(s.read.parquet(m.files: _*).schema))
+      .fold(batch)(mergeSchemas(_, batch)))
 
   /** Widen `known` with any NEW fields the batch carries (appended,
     * nullable — old files read them as null). A same-name field must
@@ -852,47 +822,76 @@ object Snapshots {
       .foldLeft(0)(math.max)
   }
 
-  /** Bounded optimistic-concurrency retry loop: claim version
-    * latest+1 with a manifest whose file list is `files(latest's
-    * files)`; on a lost race, re-read the NEW latest and retry — the
-    * caller's data files are already durable and unshared, so the
-    * retry is metadata-only.
+  /** What one commit attempt returns to [[commit]]: either a [[Commit]]
+    * to claim, or [[NoOp]] — nothing to commit, the verb returns
+    * `version` (a replayed txn, a provably empty delete, a fully
+    * covered bloom analysis, an already-consumed mirror range).
     */
-  private def commitRetry(s: SparkSession, root: String,
-      addTxn: Option[Long] = None,
-      schemaFor: Option[org.apache.spark.sql.types.StructType]
-        => Option[org.apache.spark.sql.types.StructType] = identity,
-      commitKind: String = "append",
-      addStats: Map[String, String] = Map.empty,
-      addBlooms: Map[String, String] = Map.empty,
-      addLens: Map[String, Long] = Map.empty,
-      expectBase: Option[Int] = None)
-                         (files: Seq[String] => Seq[String]): Int = {
+  private[sources] sealed trait Attempt
+  private[sources] final case class NoOp(version: Int) extends Attempt
+
+  /** Only what a commit CHANGES on top of its base: the new file list,
+    * the stats/blooms/lens of its new files, its `#commit:` kind,
+    * pinned schema and change-data files, an external txn id and a
+    * mirror cursor. [[commit]] carries everything else forward from
+    * the base. `delta = false` writes the manifest full — index
+    * manifests, whose [[IndexVersions.expire]] drops old versions
+    * without materializing the one it keeps.
+    */
+  private[sources] final case class Commit(files: Seq[String],
+      kind: Option[String],
+      schema: Option[org.apache.spark.sql.types.StructType],
+      stats: Map[String, String] = Map.empty,
+      blooms: Map[String, String] = Map.empty,
+      lens: Map[String, Long] = Map.empty,
+      cdf: Seq[String] = Seq.empty,
+      cdfd: Seq[String] = Seq.empty,
+      txn: Option[Long] = None,
+      mirror: Option[Long] = None,
+      delta: Boolean = true) extends Attempt
+
+  /** Runs inside [[commit]] between a verb's attempt and its claim —
+    * the spec's seam for injecting a concurrent commit into the race
+    * window.
+    */
+  private[graft] var commitHook: () => Unit = () => ()
+
+  /** The one optimistic commit loop behind every write verb: read the
+    * latest version and its manifest, run the verb's `attempt` against
+    * exactly that base, then claim v+1 with the attempt's changes on
+    * top of the base — txn ranges (plus the attempt's txn id), stats,
+    * blooms, lens and mirror cursor carried forward, written as a
+    * `#base:` delta on v. On a lost race the attempt RECOMPUTES from
+    * the new latest: a file set computed from a stale base would
+    * silently drop the racer's rows (fatal for a merge, and for a
+    * `layout` commit that claims row preservation). The loser's
+    * already-written files stay as orphans for [[expire]]'s grace
+    * vacuum. Gives up after 16 lost races.
+    */
+  private[sources] def commit(s: SparkSession, root: String)
+                             (attempt: (Int, Manifest) => Attempt): Int = {
     var attempts = 0
     while (true) {
       val v = latestVersion(s, root)
-      // a REWRITE's file set was computed from `expectBase`'s content:
-      // if the base moved, retrying with the stale files would publish
-      // a lost update — fail out to the caller's recompute loop instead
-      // (an APPEND's files are valid on any base, so appends never set
-      // this)
-      expectBase.foreach { b =>
-        if (v != b) throw new ConcurrentRewriteConflict(root, b, v)
-      }
       val m = if (v == 0) Manifest(Seq.empty, Seq.empty, None)
               else readManifestData(s, root, v)
-      try {
-        writeManifest(s, root, v + 1, files(m.files).distinct.sorted,
-          addTxn.fold(m.txns)(mergeTxn(m.txns, _)),
-          schemaFor(m.schema), Some(commitKind), m.stats ++ addStats,
-          blooms = m.blooms ++ addBlooms, mirror = m.mirror,
-          base = if (v >= 1) Some((v, m)) else None,
-          lens = m.lens ++ addLens)
-        return v + 1
-      } catch {
-        case e: ConcurrentCommitException =>
-          attempts += 1
-          if (attempts >= 16) throw e
+      attempt(v, m) match {
+        case NoOp(done) => return done
+        case c: Commit =>
+          commitHook()
+          try {
+            writeManifest(s, root, v + 1, c.files.distinct.sorted,
+              c.txn.fold(m.txns)(mergeTxn(m.txns, _)), c.schema, c.kind,
+              m.stats ++ c.stats, c.cdf, m.blooms ++ c.blooms,
+              c.mirror.orElse(m.mirror),
+              if (v >= 1 && c.delta) Some((v, m)) else None,
+              m.lens ++ c.lens, c.cdfd)
+            return v + 1
+          } catch {
+            case e: ConcurrentCommitException =>
+              attempts += 1
+              if (attempts >= 16) throw e
+          }
       }
     }
     -1 // unreachable
@@ -915,86 +914,70 @@ object Snapshots {
     * columns as null); a type change on an existing column is
     * rejected (see [[mergeSchemas]]).
     */
-  def append(s: SparkSession, root: String, df: DataFrame): Int = {
-    val bf = writeBatchFiles(s, root, df)
-    commitRetry(s, root,
-      schemaFor = known => Some(standingSchema(s, root, known)
-        .fold(df.schema)(mergeSchemas(_, df.schema))),
-      addStats = bf.stats, addLens = bf.lens)(
-      known => known ++ bf.files)
-  }
+  def append(s: SparkSession, root: String, df: DataFrame): Int =
+    commitAppend(s, root, df, writeBatchFiles(s, root, df), None)
+
+  /** Commit an append's already-written files on whatever base is
+    * latest — its file set is valid on any base, so a lost race only
+    * re-reads the base (a metadata-only retry). A `txn` already in the
+    * base's ranges is a no-op: a lost race may have been our own
+    * concurrent replay.
+    */
+  private def commitAppend(s: SparkSession, root: String, df: DataFrame,
+                           bf: BatchFiles, txn: Option[Long]): Int =
+    commit(s, root) { (base, m) =>
+      if (txn.exists(txnCommitted(m.txns, _))) NoOp(base)
+      else Commit(m.files ++ bf.files, Some("append"),
+        appendSchema(s, base, m, df.schema), bf.stats, lens = bf.lens,
+        txn = txn)
+    }
 
   /** Rewrite: commit `df` as v+1 from FRESH files only (a curation
-    * drop, or [[compact]]) — old versions keep reading their own
-    * files. The rewrite REPLACES the rows, so v+1's schema is the new
-    * frame's (a rewrite may narrow — dropping a column is a curation
-    * action too). `dataChange = false` declares the rewrite PURE
-    * LAYOUT — same rows, fresh files (compaction, clustering): the
-    * manifest tags the commit `layout` and incremental consumers
-    * ([[changesBetween]], [[SnapshotTail]]) carry their cursor across
-    * it with an EMPTY delta instead of failing into a full resync —
-    * the Delta `dataChange=false` economics: at 100 TB a routine
-    * compact must not force every downstream consumer to re-read the
-    * corpus. The caller is asserting row preservation; a false claim
-    * makes consumers silently miss the change (exactly Delta's
-    * contract).
+    * drop) — old versions keep reading their own files. The rewrite
+    * REPLACES the rows, so v+1's schema is the new frame's (a rewrite
+    * may narrow — dropping a column is a curation action too) and
+    * incremental consumers resync across it. The frame is the
+    * caller's, computed from whatever version was latest at the call,
+    * so it cannot be recomputed: if another commit lands first, the
+    * rewrite fails with [[ConcurrentRewriteConflict]] instead of
+    * publishing a file set that drops the racer's rows.
     */
-  def rewrite(s: SparkSession, root: String, df: DataFrame,
-              dataChange: Boolean = true): Int =
-    rewriteAt(s, root, latestVersion(s, root), df, dataChange)
-
-  /** [[rewrite]] whose output is declared to have been computed FROM
-    * `base`: if another commit claims a version first, the commit fails
-    * with [[ConcurrentRewriteConflict]] instead of silently publishing
-    * the stale file set (which would drop the racer's rows from the
-    * lineage while a `layout` tag claims row preservation — the exact
-    * lost-update Delta's conflict checker rejects). The layout verbs
-    * ([[compact]]/[[cluster]]/[[clusterZ]]) wrap this in a recompute
-    * loop; the loser's files stay as grace-vacuumed orphans.
-    */
-  def rewriteAt(s: SparkSession, root: String, base: Int, df: DataFrame,
-                dataChange: Boolean = true): Int = {
+  def rewrite(s: SparkSession, root: String, df: DataFrame): Int = {
+    val from = latestVersion(s, root)
     val bf = writeBatchFiles(s, root, df)
-    commitRetry(s, root, schemaFor = _ => Some(df.schema),
-      commitKind = if (dataChange) "rewrite" else "layout",
-      addStats = bf.stats, addLens = bf.lens,
-      expectBase = Some(base))(_ => bf.files)
+    commit(s, root) { (base, _) =>
+      if (base != from) throw new ConcurrentRewriteConflict(root, from, base)
+      Commit(bf.files, Some("rewrite"), Some(df.schema), bf.stats, lens = bf.lens)
+    }
   }
 
-  /** Recompute-on-conflict loop for the pure-layout verbs: build the
-    * re-laid-out frame FROM the current latest, attempt the layout
-    * commit against exactly that base, and on a lost race rebuild from
-    * the new latest — never publish a layout computed from a stale
-    * read (`layoutHook` is the spec's seam for injecting a concurrent
-    * commit into the race window).
+  /** A PURE-LAYOUT commit — same rows, fresh files ([[compact]],
+    * [[cluster]], [[clusterZN]]): `build` re-lays out the base
+    * version's rows and the commit is tagged `layout`, so incremental
+    * consumers ([[changesBetween]], [[SnapshotTail]]) carry their
+    * cursor across it with an EMPTY delta instead of failing into a
+    * full resync (the Delta `dataChange=false` economics: at 100 TB a
+    * routine compact must not force every consumer to re-read the
+    * corpus). Built inside the commit loop, so a lost race rebuilds
+    * from the new latest — never a layout computed from a stale read.
     */
-  private[graft] var layoutHook: () => Unit = () => ()
-  private def layoutRetry(s: SparkSession, root: String)
-                         (build: Int => DataFrame): Int = {
-    var attempts = 0
-    while (true) {
-      val base = latestVersion(s, root)
+  private def relayout(s: SparkSession, root: String)
+                      (build: DataFrame => DataFrame): Int =
+    commit(s, root) { (base, _) =>
       require(base >= 1, s"layout maintenance needs an existing dataset at $root")
-      val df = build(base) // reads are manifest-pinned at plan time
-      layoutHook()
-      try return rewriteAt(s, root, base, df, dataChange = false)
-      catch {
-        case e: ConcurrentRewriteConflict =>
-          attempts += 1
-          if (attempts >= 16) throw e
-      }
+      val df = build(read(s, root, base))
+      val bf = writeBatchFiles(s, root, df)
+      Commit(bf.files, Some("layout"), Some(df.schema), bf.stats, lens = bf.lens)
     }
-    -1 // unreachable
-  }
 
   /** Idempotent append keyed by an EXTERNAL transaction id (a
     * Structured Streaming batchId — the `foreachBatch` exactly-once
     * recipe): a replay of a committed txn is a no-op, so a restarted
     * stream re-delivering its last batch cannot duplicate rows. The
     * txn's data dir is deterministic (`data/txn{id}`), and "committed"
-    * means a LIVE manifest references it — a crash between the data
-    * write and the manifest commit leaves an orphan dir the retry
-    * deletes and rewrites (the manifest rename is the only commit
+    * means the id is tagged in the latest manifest — a crash between
+    * the data write and the manifest commit leaves an orphan dir the
+    * retry deletes and rewrites (the manifest rename is the only commit
     * point, same as every other Snapshots write).
     */
   def appendTxn(s: SparkSession, root: String, txnId: Long,
@@ -1005,28 +988,17 @@ object Snapshots {
     // compressed tags are carried forward on every commit and land
     // atomically WITH the commit, so the probe survives compaction
     // rewriting the data into fresh dirs and expire() dropping the
-    // manifests that referenced them — a path-substring probe did
-    // not). The path probe stays as a fallback for datasets written
-    // before the tag format.
-    val tag = s"/txn$txnId/"
-    val committed = latest >= 1 && f.exists(manifestPath(root, latest)) && (
-      txnCommitted(readTxnRanges(s, root, latest), txnId) ||
-      (1 to latest).exists { v =>
-        f.exists(manifestPath(root, v)) &&
-          readManifest(s, root, v).exists(_.contains(tag))
-      })
-    if (committed) return latest
+    // manifests that referenced them). One manifest resolution per
+    // call, however long the lineage.
+    if (latest >= 1 && txnCommitted(readManifestData(s, root, latest).txns, txnId))
+      return latest
     val sub = new org.apache.hadoop.fs.Path(s"$root/data/txn$txnId")
     if (f.exists(sub)) f.delete(sub, true) // crashed half-write
     df.write.mode("errorifexists").parquet(sub.toString)
     val bf = footerScan(s, f.listStatus(sub).toSeq
       .filter(k => k.isFile && k.getPath.getName.startsWith("part-"))
       .map(_.getPath.toString).sorted)
-    commitRetry(s, root, addTxn = Some(txnId),
-      schemaFor = known => Some(standingSchema(s, root, known)
-        .fold(df.schema)(mergeSchemas(_, df.schema))),
-      addStats = bf.stats, addLens = bf.lens)(
-      known => known ++ bf.files)
+    commitAppend(s, root, df, bf, Some(txnId))
   }
 
   /** Streaming ingest into a versioned dataset: each micro-batch
@@ -1118,65 +1090,45 @@ object Snapshots {
             txn: Option[Long] = None): Int = {
     import org.apache.spark.sql.expressions.Window
     require(keyCols.nonEmpty, "merge needs at least one key column")
-    var attempts = 0
-    while (true) {
-      val base = latestVersion(s, root)
+    commit(s, root) { (base, m) =>
       require(base >= 1, s"merge needs an existing dataset at $root")
-      val m = readManifestData(s, root, base)
       // re-probe on every attempt: a lost race may have been our own
       // concurrent replay committing the same txn id
-      if (txn.exists(txnCommitted(m.txns, _))) return base
-      val standingSc = m.schema.getOrElse(s.read.parquet(m.files: _*).schema)
-      val sc = mergeSchemas(standingSc, batch.schema)
-      val touched = touchedFiles(s, m, standingSc, batch, keyCols)
-      val touchedSet = touched.toSet
-      val survivors = m.files.filterNot(touchedSet)
-      val standingTouched =
-        if (touched.isEmpty)
-          s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            standingSc)
-        else s.read.schema(standingSc).parquet(touched: _*)
-      val w = Window.partitionBy(keyCols.map(col): _*)
-        .orderBy(col(orderCol).desc, col("__src").desc)
-      val merged = standingTouched.withColumn("__src", lit(0))
-        .unionByName(batch.withColumn("__src", lit(1)),
-          allowMissingColumns = true)
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1)
-        .drop("__src", "__rn")
-      val bf = writeBatchFiles(s, root, merged)
-      val mine = bf.files
-      // CHANGE-DATA FILES (the Delta CDF idea): the post-image of every
-      // key the batch touched, derived from the freshly-written merged
-      // files (one bounded scan ⋈ batch keys — never a second corpus
-      // window; `mine` holds only rewritten-touched + batch rows, so
-      // the scan is bounded by the prune), written beside the data
-      // under changes/. Incremental consumers that opted into upsert
-      // semantics read THIS bounded set across the merge instead of
-      // resyncing the corpus.
-      val cdf =
-        if (mine.isEmpty)
-          s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc)
-        else keyedSemiJoin(s.read.schema(sc).parquet(mine: _*), batch, keyCols)
-      val cdfFiles = writeChangeFiles(s, root, cdf)
-      try {
+      if (txn.exists(txnCommitted(m.txns, _))) NoOp(base) else {
+        val standingSc = schemaOf(s, m)
+        val sc = mergeSchemas(standingSc, batch.schema)
+        val touched = touchedFiles(s, m, standingSc, batch, keyCols)
+        val touchedSet = touched.toSet
+        val survivors = m.files.filterNot(touchedSet)
+        val standingTouched = scanOrEmpty(s, standingSc, touched)
+        val w = Window.partitionBy(keyCols.map(col): _*)
+          .orderBy(col(orderCol).desc, col("__src").desc)
+        val merged = standingTouched.withColumn("__src", lit(0))
+          .unionByName(batch.withColumn("__src", lit(1)),
+            allowMissingColumns = true)
+          .withColumn("__rn", row_number().over(w))
+          .filter(col("__rn") === 1)
+          .drop("__src", "__rn")
+        val bf = writeBatchFiles(s, root, merged)
+        val mine = bf.files
+        // CHANGE-DATA FILES (the Delta CDF idea): the post-image of every
+        // key the batch touched, derived from the freshly-written merged
+        // files (one bounded scan ⋈ batch keys — never a second corpus
+        // window; `mine` holds only rewritten-touched + batch rows, so
+        // the scan is bounded by the prune), written beside the data
+        // under changes/. Incremental consumers that opted into upsert
+        // semantics read THIS bounded set across the merge instead of
+        // resyncing the corpus.
+        val cdf =
+          if (mine.isEmpty) emptyFrame(s, sc)
+          else keyedSemiJoin(s.read.schema(sc).parquet(mine: _*), batch, keyCols)
+        val cdfFiles = writeChangeFiles(s, root, cdf)
         // untouched survivors keep their stats AND blooms by path; the
         // rewritten files' blooms drop with the files (live-key filter)
-        writeManifest(s, root, base + 1, (survivors ++ mine).distinct.sorted,
-          txn.fold(m.txns)(mergeTxn(m.txns, _)),
-          Some(sc), Some("merge"), m.stats ++ bf.stats, cdfFiles,
-          blooms = m.blooms, mirror = m.mirror, base = Some((base, m)),
-          lens = m.lens ++ bf.lens)
-        return base + 1
-      } catch {
-        case e: ConcurrentCommitException =>
-          attempts += 1
-          if (attempts >= 16) throw e
-        // the loser's files stay as orphans under the grace window;
-        // the retry re-reads the winner's merged state and recomputes
+        Commit(survivors ++ mine, Some("merge"), Some(sc), bf.stats,
+          lens = bf.lens, cdf = cdfFiles, txn = txn)
       }
     }
-    -1 // unreachable
   }
 
   /** The files of `m` that may hold a row whose key matches some
@@ -1332,41 +1284,26 @@ object Snapshots {
     */
   def delete(s: SparkSession, root: String, preds: Seq[StatsPred]): Int = {
     require(preds.nonEmpty, "delete needs at least one predicate")
-    var attempts = 0
-    while (true) {
-      val base = latestVersion(s, root)
+    commit(s, root) { (base, m) =>
       require(base >= 1, s"delete needs an existing dataset at $root")
-      val m = readManifestData(s, root, base)
       val candidates = filesWhereM(m, preds)
       // stats prove NO file can hold a matching row: the delete is a
       // no-op — return the standing version instead of committing a
       // consumer-visible retraction boundary for zero changed rows
-      if (candidates.isEmpty) return base
-      val survivors = m.files.filterNot(candidates.toSet)
-      val sc = m.schema.getOrElse(s.read.parquet(m.files: _*).schema)
-      val hit = coalesce(preds.map(predColumn).reduce(_ && _), lit(false))
-      val cand = s.read.schema(sc).parquet(candidates: _*)
-      val bfd = writeBatchFiles(s, root, cand.filter(!hit))
-      val fresh = bfd.files
-      val cdfFiles = writeChangeFiles(s, root, cand.filter(hit))
-      try {
-        writeManifest(s, root, base + 1, (survivors ++ fresh).distinct.sorted,
-          m.txns, Some(sc), Some("delete"),
-          m.stats ++ bfd.stats, cdfFiles,
-          blooms = m.blooms, // survivors keep theirs; rewritten files' drop
-          mirror = m.mirror, base = Some((base, m)),
-          lens = m.lens ++ bfd.lens)
-        return base + 1
-      } catch {
-        case e: ConcurrentCommitException =>
-          attempts += 1
-          if (attempts >= 16) throw e
-        // the loser's kept/change files stay as orphans under the
-        // grace window; the retry re-prunes against the new latest
+      if (candidates.isEmpty) NoOp(base) else {
+        val survivors = m.files.filterNot(candidates.toSet)
+        val sc = schemaOf(s, m)
+        val hit = coalesce(preds.map(predColumn).reduce(_ && _), lit(false))
+        val cand = s.read.schema(sc).parquet(candidates: _*)
+        val bfd = writeBatchFiles(s, root, cand.filter(!hit))
+        val cdfFiles = writeChangeFiles(s, root, cand.filter(hit))
+        // survivors keep their blooms; the rewritten files' drop
+        Commit(survivors ++ bfd.files, Some("delete"), Some(sc), bfd.stats,
+          lens = bfd.lens, cdf = cdfFiles)
       }
     }
-    -1 // unreachable
   }
+
 
   /** Stats-pruned row-level UPDATE (copy-on-write) — the remaining
     * everyday lakehouse verb after merge/delete/restore (a relabel, a
@@ -1400,64 +1337,51 @@ object Snapshots {
              set: Map[String, org.apache.spark.sql.Column]): Int = {
     require(preds.nonEmpty, "update needs at least one predicate")
     require(set.nonEmpty, "update needs at least one assignment")
-    var attempts = 0
-    while (true) {
-      val base = latestVersion(s, root)
+    commit(s, root) { (base, m) =>
       require(base >= 1, s"update needs an existing dataset at $root")
-      val m = readManifestData(s, root, base)
-      val sc = m.schema.getOrElse(s.read.parquet(m.files: _*).schema)
+      val sc = schemaOf(s, m)
       val byName = sc.fields.map(f => f.name -> f.dataType).toMap
       set.keys.foreach(c => require(byName.contains(c),
         s"update cannot assign unknown column '$c'"))
       val candidates = filesWhereM(m, preds)
-      if (candidates.isEmpty) return base // provably zero matches
-      val survivors = m.files.filterNot(candidates.toSet)
-      val hit = coalesce(preds.map(predColumn).reduce(_ && _), lit(false))
-      val cand = s.read.schema(sc).parquet(candidates: _*)
-      // flag FIRST: assignments must see the old row, and the change
-      // sets must select on the ORIGINAL match, not the updated values.
-      // ALL assignments evaluate in ONE projection — a sequential
-      // withColumn chain would let an assignment referencing another
-      // SET column see its already-updated value (swap(a, b) would
-      // silently yield b = b), violating SQL UPDATE semantics
-      val flagged = cand.withColumn("__hit", hit)
-      val updated = flagged.select(sc.fieldNames.map { n =>
-        set.get(n) match {
-          case Some(e) =>
-            when(col("__hit"), e.cast(byName(n))).otherwise(col(n)).as(n)
-          case None => col(n)
-        }
-      } :+ col("__hit"): _*)
-      val bfu = writeBatchFiles(s, root,
-        updated.drop("__hit").select(sc.fieldNames.map(col): _*))
-      val preImages = cand.filter(hit)
-      // post-images recompute through the same map-only plan that
-      // produced the fresh files (an update may move rows OFF the
-      // predicate — that is its point — so re-filtering the fresh
-      // files by `hit` would miss them; there is no key to semi-join
-      // on). Deterministic assignments are therefore part of the
-      // contract — a rand() assignment would diverge between the data
-      // files and the change set.
-      val postImages = updated.filter(col("__hit"))
-        .drop("__hit").select(sc.fieldNames.map(col): _*)
-      val cdfdFiles = writeChangeFiles(s, root, preImages)
-      val cdfFiles = writeChangeFiles(s, root, postImages)
-      try {
-        writeManifest(s, root, base + 1,
-          (survivors ++ bfu.files).distinct.sorted,
-          m.txns, Some(sc), Some("update"),
-          m.stats ++ bfu.stats, cdfFiles,
-          blooms = m.blooms, mirror = m.mirror, base = Some((base, m)),
-          lens = m.lens ++ bfu.lens, cdfd = cdfdFiles)
-        return base + 1
-      } catch {
-        case e: ConcurrentCommitException =>
-          attempts += 1
-          if (attempts >= 16) throw e
+      if (candidates.isEmpty) NoOp(base) else { // provably zero matches
+        val survivors = m.files.filterNot(candidates.toSet)
+        val hit = coalesce(preds.map(predColumn).reduce(_ && _), lit(false))
+        val cand = s.read.schema(sc).parquet(candidates: _*)
+        // flag FIRST: assignments must see the old row, and the change
+        // sets must select on the ORIGINAL match, not the updated values.
+        // ALL assignments evaluate in ONE projection — a sequential
+        // withColumn chain would let an assignment referencing another
+        // SET column see its already-updated value (swap(a, b) would
+        // silently yield b = b), violating SQL UPDATE semantics
+        val flagged = cand.withColumn("__hit", hit)
+        val updated = flagged.select(sc.fieldNames.map { n =>
+          set.get(n) match {
+            case Some(e) =>
+              when(col("__hit"), e.cast(byName(n))).otherwise(col(n)).as(n)
+            case None => col(n)
+          }
+        } :+ col("__hit"): _*)
+        val bfu = writeBatchFiles(s, root,
+          updated.drop("__hit").select(sc.fieldNames.map(col): _*))
+        val preImages = cand.filter(hit)
+        // post-images recompute through the same map-only plan that
+        // produced the fresh files (an update may move rows OFF the
+        // predicate — that is its point — so re-filtering the fresh
+        // files by `hit` would miss them; there is no key to semi-join
+        // on). Deterministic assignments are therefore part of the
+        // contract — a rand() assignment would diverge between the data
+        // files and the change set.
+        val postImages = updated.filter(col("__hit"))
+          .drop("__hit").select(sc.fieldNames.map(col): _*)
+        val cdfdFiles = writeChangeFiles(s, root, preImages)
+        val cdfFiles = writeChangeFiles(s, root, postImages)
+        Commit(survivors ++ bfu.files, Some("update"), Some(sc), bfu.stats,
+          lens = bfu.lens, cdf = cdfFiles, cdfd = cdfdFiles)
       }
     }
-    -1 // unreachable
   }
+
 
   /** Compaction: fold the latest version's accumulated small files
     * into `partitions` fresh ones as a new version — pure layout, same
@@ -1469,8 +1393,7 @@ object Snapshots {
     * scan's task count) proportional to DATA size, not commit count.
     */
   def compact(s: SparkSession, root: String, partitions: Int = 1): Int =
-    layoutRetry(s, root)(v =>
-      read(s, root, v).coalesce(math.max(1, partitions)))
+    relayout(s, root)(_.coalesce(math.max(1, partitions)))
 
   /** Re-cluster the latest version's rows by `cols` into range-disjoint
     * files — the OPTIMIZE ZORDER verb for the stats-skipping read path
@@ -1490,9 +1413,8 @@ object Snapshots {
   def cluster(s: SparkSession, root: String, cols: Seq[String],
               partitions: Int = 8): Int = {
     require(cols.nonEmpty, "cluster needs at least one column")
-    layoutRetry(s, root)(v =>
-      read(s, root, v)
-        .repartitionByRange(math.max(1, partitions), cols.map(col): _*))
+    relayout(s, root)(
+      _.repartitionByRange(math.max(1, partitions), cols.map(col): _*))
   }
 
   /** Re-cluster the latest version on the MORTON CURVE of two numeric
@@ -1522,8 +1444,8 @@ object Snapshots {
     */
   def clusterZN(s: SparkSession, root: String, cols: Seq[String],
                 partitions: Int = 16): Int =
-    layoutRetry(s, root)(v =>
-      Layout.withZN(read(s, root, v), cols)
+    relayout(s, root)(df =>
+      Layout.withZN(df, cols)
         .repartitionByRange(math.max(1, partitions), col("_z"))
         .sortWithinPartitions("_z")
         .drop("_z"))
@@ -1544,9 +1466,8 @@ object Snapshots {
     require(v >= 1 && v <= latest, s"cannot restore $root to v$v (latest $latest)")
     if (v == latest) return latest
     val m = readManifestData(s, root, v)
-    commitRetry(s, root, schemaFor = _ => m.schema,
-      commitKind = "rewrite", addStats = m.stats,
-      addBlooms = m.blooms, addLens = m.lens)(_ => m.files)
+    commit(s, root)((_, _) =>
+      Commit(m.files, Some("rewrite"), m.schema, m.stats, m.blooms, m.lens))
   }
 
   /** SHALLOW CLONE (the Delta zero-copy clone): a NEW dataset root
@@ -1711,11 +1632,32 @@ object Snapshots {
     */
   def read(s: SparkSession, root: String, v: Int): DataFrame = {
     val m = readManifestData(s, root, v)
-    m.schema match {
-      case Some(sc) => s.read.schema(sc).parquet(m.files: _*)
-      case None     => s.read.parquet(m.files: _*)
-    }
+    scan(s, m.schema, m.files)
   }
+
+  /** A scan of `files` under a pinned schema, or footer inference for
+    * a legacy (pre-tag) manifest.
+    */
+  private def scan(s: SparkSession,
+      schema: Option[org.apache.spark.sql.types.StructType],
+      files: Seq[String]): DataFrame =
+    schema.fold(s.read.parquet(files: _*))(sc => s.read.schema(sc).parquet(files: _*))
+
+  /** Manifest `m`'s read schema: its pinned tag, or the footers' for a
+    * legacy (pre-tag) manifest.
+    */
+  private def schemaOf(s: SparkSession,
+                       m: Manifest): org.apache.spark.sql.types.StructType =
+    m.schema.getOrElse(s.read.parquet(m.files: _*).schema)
+
+  private def emptyFrame(s: SparkSession,
+                         sc: org.apache.spark.sql.types.StructType): DataFrame =
+    s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc)
+
+  /** A scan of `files` under `sc`; an empty frame of `sc` for none. */
+  private def scanOrEmpty(s: SparkSession,
+      sc: org.apache.spark.sql.types.StructType, files: Seq[String]): DataFrame =
+    if (files.isEmpty) emptyFrame(s, sc) else s.read.schema(sc).parquet(files: _*)
 
   /** Comparison predicates the manifest stats can prune on — a
     * deliberately small, honest surface (the Delta data-skipping
@@ -1766,17 +1708,6 @@ object Snapshots {
     */
   private final case class ColStat(range: Option[(Char, Any, Any)],
                                    nc: Option[Long], rc: Option[Long])
-
-  /** The files of version v that may contain rows satisfying ALL of
-    * `preds`, judged from the manifest's `#stats:` lines alone — zero
-    * footer/data I/O. A file with no stats (or none for a predicate's
-    * column, or a stat kind mismatching the literal) is KEPT: stats
-    * prune, they never decide. Exposed for the spec's dead-file
-    * assertion.
-    */
-  private[sources] def filesWhere(s: SparkSession, root: String, v: Int,
-                                  preds: Seq[StatsPred]): Seq[String] =
-    filesWhereM(readManifestData(s, root, v), preds)
 
   // non-finite floating literals (NaN, ±Inf) are not orderable by
   // the BigDecimal compare — never prune on them (a NaN Eq keeps
@@ -1890,8 +1821,13 @@ object Snapshots {
       }.getOrElse(Map.empty))
   }
 
-  /** [[filesWhere]] over an already-parsed manifest — the hot callers
-    * ([[readWhere]], [[delete]], [[merge]]'s hull) have one in hand,
+  /** The files of manifest `m` that may contain rows satisfying ALL
+    * of `preds`, judged from its `#stats:` and `#bloom:` lines alone —
+    * zero footer/data I/O. A file with no stats (or none for a
+    * predicate's column, or a stat kind mismatching the literal) is
+    * KEPT: stats prune, they never decide. Takes the parsed manifest
+    * because the callers ([[readWhere]], [[delete]], [[merge]]'s hull)
+    * have one in hand,
     * and at 10⁶ files the manifest parse is the metadata bottleneck
     * (one parse per call, never two). Two passes: (1) range/null-count
     * pruning from the driver-resident stats; (2) for the survivors,
@@ -2069,12 +2005,9 @@ object Snapshots {
       s"hashes must be in [1, ${BloomA.length}]")
     require(bitsPerValue >= 1 && maxBits >= BloomBits,
       "need bitsPerValue >= 1 and maxBits >= BloomBits")
-    var attempts = 0
-    while (true) {
-      val base = latestVersion(s, root)
+    commit(s, root) { (base, m) =>
       require(base >= 1, s"analyzeBloom needs an existing dataset at $root")
-      val m = readManifestData(s, root, base)
-      val sc = m.schema.getOrElse(s.read.parquet(m.files: _*).schema)
+      val sc = schemaOf(s, m)
       val byName = sc.fields.map(f => f.name -> f.dataType).toMap
       val usable = cols.filter(c => byName.get(c).exists {
         case org.apache.spark.sql.types.LongType |
@@ -2094,93 +2027,85 @@ object Snapshots {
       // repair path).
       val missing: Seq[String] = m.files.filter(f => usable.exists(c =>
         !m.blooms.get(s"${fileStatKey(f)}:$c").exists(bloomPayloadValid)))
-      if (missing.isEmpty) return base
-      val df = s.read.schema(sc).parquet(missing: _*)
-      val fname = substring_index(input_file_name(), "/", -1)
-      // size each file's bloom from ITS row count (an upper bound on
-      // distinct values): ~bitsPerValue bits per row, clamped to
-      // [BloomBits, maxBits] and word-aligned — the fixed-pool decay
-      // fix (a 4096-bit bloom over a 10⁵-row file is all-ones)
-      def bitsOf(n: Long): Int = {
-        val want = math.min(maxBits.toLong,
-          math.max(BloomBits.toLong, n * bitsPerValue))
-        (((want + 63) / 64) * 64).toInt
-      }
-      val bitsByFile: Map[String, Int] =
-        df.groupBy(fname.as("_fn")).count().collect()
-          .map(r => r.getString(0) -> bitsOf(r.getLong(1))).toMap
-      import s.implicits._
-      val bitsDf = bitsByFile.toSeq.toDF("_fn", "_bits")
-      // distributed word assembly: hash k positions per value, fold
-      // into 64-bit words with bit_or, then one sparse word LIST per
-      // (file, col) — the only driver-sized collect
-      val collected = usable.map { c =>
-        val b = bloomBaseCol(col(c), byName(c))
-        df.filter(col(c).isNotNull)
-          .select(fname.as("_fn"), lit(c).as("_c"),
-            explode(array((0 until hashes).map(i =>
-              (b * lit(BloomA(i)) + lit(BloomB(i))) % lit(BloomP)): _*))
-              .as("_h"))
-      }.reduce(_.unionAll(_))
-        .join(broadcast(bitsDf), "_fn")
-        .select(col("_fn"), col("_c"),
-          (col("_h") % col("_bits")).cast("long").as("_p"))
-        .select(col("_fn"), col("_c"),
-          shiftright(col("_p"), 6).cast("int").as("_w"),
-          expr("shiftleft(CAST(1 AS BIGINT), CAST(_p % 64 AS INT))").as("_v"))
-        .groupBy("_fn", "_c", "_w")
-        .agg(expr("bit_or(_v)").as("_wv"))
-        .groupBy("_fn", "_c")
-        .agg(sort_array(collect_list(struct(col("_w"), col("_wv")))).as("_ws"))
-        .collect()
-      val words = scala.collection.mutable.HashMap
-        .empty[String, Array[Long]] // "file:col" -> bitset words
-      def wordsOf(fileName: String): Array[Long] =
-        new Array[Long](bitsByFile.getOrElse(fileName, BloomBits) / 64)
-      // pre-seed EVERY scanned (file, col) pair with an all-zero
-      // bitset: a file whose column is entirely NULL produces no
-      // hashes, and without a recorded (empty) bloom it would stay
-      // "missing" forever — rescanned and re-committed on every call.
-      // The all-zero bloom is also the CORRECT filter: Eq never
-      // matches a null, so pruning the file on any literal is exact.
-      missing.foreach(f => usable.foreach(c =>
-        words.getOrElseUpdate(s"${fileStatKey(f)}:$c", wordsOf(fileStatKey(f)))))
-      collected.foreach { r =>
-        val fn = r.getString(0)
-        val w = words.getOrElseUpdate(s"$fn:${r.getString(1)}", wordsOf(fn))
-        r.getSeq[org.apache.spark.sql.Row](2).foreach { wr =>
-          w(wr.getInt(0)) |= wr.getLong(1)
+      if (missing.isEmpty) NoOp(base) else {
+        val df = s.read.schema(sc).parquet(missing: _*)
+        val fname = substring_index(input_file_name(), "/", -1)
+        // size each file's bloom from ITS row count (an upper bound on
+        // distinct values): ~bitsPerValue bits per row, clamped to
+        // [BloomBits, maxBits] and word-aligned — the fixed-pool decay
+        // fix (a 4096-bit bloom over a 10⁵-row file is all-ones)
+        def bitsOf(n: Long): Int = {
+          val want = math.min(maxBits.toLong,
+            math.max(BloomBits.toLong, n * bitsPerValue))
+          (((want + 63) / 64) * 64).toInt
         }
-      }
-      // payload records the HASH FAMILY ('l' integral fold vs 's' char
-      // fold) so a cross-type Eq literal never probes the wrong family
-      // and wrongly prunes (SQL would cast-and-match the row)
-      val kindOf = usable.map { c =>
-        c -> (byName(c) match {
-          case org.apache.spark.sql.types.StringType => 's'
-          case _ => 'l'
-        })
-      }.toMap
-      val enc = java.util.Base64.getEncoder
-      val add = words.iterator.map { case (key, w) =>
-        val bb = java.nio.ByteBuffer.allocate(w.length * 8)
-        w.foreach(bb.putLong)
-        val kind = kindOf(key.substring(key.indexOf(':') + 1))
-        key -> s"$hashes,${w.length * 64},$kind,${enc.encodeToString(bb.array)}"
-      }.toMap
-      try {
-        writeManifest(s, root, base + 1, m.files, m.txns, Some(sc),
-          Some("analyze"), m.stats, Seq.empty, m.blooms ++ add,
-          mirror = m.mirror, base = Some((base, m)), lens = m.lens)
-        return base + 1
-      } catch {
-        case e: ConcurrentCommitException =>
-          attempts += 1
-          if (attempts >= 16) throw e
+        val bitsByFile: Map[String, Int] =
+          df.groupBy(fname.as("_fn")).count().collect()
+            .map(r => r.getString(0) -> bitsOf(r.getLong(1))).toMap
+        import s.implicits._
+        val bitsDf = bitsByFile.toSeq.toDF("_fn", "_bits")
+        // distributed word assembly: hash k positions per value, fold
+        // into 64-bit words with bit_or, then one sparse word LIST per
+        // (file, col) — the only driver-sized collect
+        val collected = usable.map { c =>
+          val b = bloomBaseCol(col(c), byName(c))
+          df.filter(col(c).isNotNull)
+            .select(fname.as("_fn"), lit(c).as("_c"),
+              explode(array((0 until hashes).map(i =>
+                (b * lit(BloomA(i)) + lit(BloomB(i))) % lit(BloomP)): _*))
+                .as("_h"))
+        }.reduce(_.unionAll(_))
+          .join(broadcast(bitsDf), "_fn")
+          .select(col("_fn"), col("_c"),
+            (col("_h") % col("_bits")).cast("long").as("_p"))
+          .select(col("_fn"), col("_c"),
+            shiftright(col("_p"), 6).cast("int").as("_w"),
+            expr("shiftleft(CAST(1 AS BIGINT), CAST(_p % 64 AS INT))").as("_v"))
+          .groupBy("_fn", "_c", "_w")
+          .agg(expr("bit_or(_v)").as("_wv"))
+          .groupBy("_fn", "_c")
+          .agg(sort_array(collect_list(struct(col("_w"), col("_wv")))).as("_ws"))
+          .collect()
+        val words = scala.collection.mutable.HashMap
+          .empty[String, Array[Long]] // "file:col" -> bitset words
+        def wordsOf(fileName: String): Array[Long] =
+          new Array[Long](bitsByFile.getOrElse(fileName, BloomBits) / 64)
+        // pre-seed EVERY scanned (file, col) pair with an all-zero
+        // bitset: a file whose column is entirely NULL produces no
+        // hashes, and without a recorded (empty) bloom it would stay
+        // "missing" forever — rescanned and re-committed on every call.
+        // The all-zero bloom is also the CORRECT filter: Eq never
+        // matches a null, so pruning the file on any literal is exact.
+        missing.foreach(f => usable.foreach(c =>
+          words.getOrElseUpdate(s"${fileStatKey(f)}:$c", wordsOf(fileStatKey(f)))))
+        collected.foreach { r =>
+          val fn = r.getString(0)
+          val w = words.getOrElseUpdate(s"$fn:${r.getString(1)}", wordsOf(fn))
+          r.getSeq[org.apache.spark.sql.Row](2).foreach { wr =>
+            w(wr.getInt(0)) |= wr.getLong(1)
+          }
+        }
+        // payload records the HASH FAMILY ('l' integral fold vs 's' char
+        // fold) so a cross-type Eq literal never probes the wrong family
+        // and wrongly prunes (SQL would cast-and-match the row)
+        val kindOf = usable.map { c =>
+          c -> (byName(c) match {
+            case org.apache.spark.sql.types.StringType => 's'
+            case _ => 'l'
+          })
+        }.toMap
+        val enc = java.util.Base64.getEncoder
+        val add = words.iterator.map { case (key, w) =>
+          val bb = java.nio.ByteBuffer.allocate(w.length * 8)
+          w.foreach(bb.putLong)
+          val kind = kindOf(key.substring(key.indexOf(':') + 1))
+          key -> s"$hashes,${w.length * 64},$kind,${enc.encodeToString(bb.array)}"
+        }.toMap
+        Commit(m.files, Some("analyze"), Some(sc), blooms = add)
       }
     }
-    -1 // unreachable
   }
+
 
   /** Does `payload` PROVABLY exclude a value hashing to (kind, base)?
     * Any parse failure, truncated bitset, or hash-family mismatch
@@ -2245,12 +2170,8 @@ object Snapshots {
                 preds: Seq[StatsPred]): DataFrame = {
     val m = readManifestData(s, root, v)
     val files = filesWhereM(m, preds)
-    val sc = m.schema.getOrElse(s.read.parquet(m.files: _*).schema)
-    val base =
-      if (files.isEmpty)
-        s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc)
-      else s.read.schema(sc).parquet(files: _*)
-    preds.foldLeft(base)((df, p) => df.filter(predColumn(p)))
+    val sc = schemaOf(s, m)
+    preds.foldLeft(scanOrEmpty(s, sc, files))((df, p) => df.filter(predColumn(p)))
   }
 
   /** Translate Catalyst pushed-down data filters into the [[StatsPred]]
@@ -2358,7 +2279,7 @@ object Snapshots {
   private[graft] def indexedScan(s: SparkSession, root: String, v: Int)
       : (DataFrame, org.apache.spark.sql.GraftSnapshotFileIndex) = {
     val m = readManifestData(s, root, v)
-    val sc = m.schema.getOrElse(s.read.parquet(m.files: _*).schema)
+    val sc = schemaOf(s, m)
     // the manifest's `#len:` lines let planning construct FileStatus
     // objects with ZERO filesystem calls (mtime/blockSize are synthetic
     // — the scan uses only path + length); files a legacy manifest
@@ -2460,36 +2381,28 @@ object Snapshots {
                      toV: Int, upserts: Boolean = false): DataFrame = {
     require(fromV >= 0 && fromV <= toV, s"need 0 <= fromV <= toV, got $fromV..$toV")
     val toM = readManifestData(s, root, toV)
-    var prev: Set[String] =
-      if (fromV == 0) Set.empty
-      else readManifestData(s, root, fromV).files.toSet
-    val fresh = Seq.newBuilder[String]
-    ((fromV + 1) to toV).foreach { v =>
-      val m = if (v == toV) toM else readManifestData(s, root, v)
-      val cur = m.files.toSet
-      val additive = prev.subsetOf(cur)
-      m.commit.getOrElse(if (additive) "append" else "rewrite") match {
-        case "layout" | "analyze" => () // same rows — empty delta
-        case "append" if additive => fresh ++= m.files.filterNot(prev)
-        case "merge" if upserts => fresh ++= m.cdf
+    val delta = changeFileGroups(s, root, fromV, toV).flatMap { c =>
+      val files = c.groups.flatMap(_.files)
+      val v = c.version
+      c.kind match {
+        case "layout" | "analyze" => Nil // same rows — empty delta
+        case "append" => files
+        case "merge" if upserts => files
         case "merge" =>
           throw new IllegalArgumentException(
             s"versions $fromV..$toV of $root cross a MERGE at v$v — " +
               "its change set is an upsert feed (new versions of " +
               "existing keys); pass upserts = true to consume it keyed, " +
               "or resync with read(toV)")
-        case "delete" if m.cdf.isEmpty =>
-          // a stats false positive rewrote candidate files but deleted
-          // ZERO rows (empty change set) — row-preserving, pass through
-          ()
+        // a stats false positive rewrote candidate files but changed
+        // ZERO rows (empty change set) — row-preserving, pass through
+        case "delete" | "update" if files.isEmpty => Nil
         case "delete" =>
           throw new IllegalArgumentException(
             s"versions $fromV..$toV of $root cross a DELETE at v$v — " +
               "retractions cannot ride a row feed (neither append-only " +
               "nor upsert folds can drop a key); consume the typed " +
               "changeFeed, or resync with read(toV)")
-        case "update" if m.cdf.isEmpty && m.cdfd.isEmpty =>
-          () // stats false positive matched zero rows — pass through
         case "update" =>
           throw new IllegalArgumentException(
             s"versions $fromV..$toV of $root cross an UPDATE at v$v — " +
@@ -2502,18 +2415,91 @@ object Snapshots {
               s"v$v (rows were replaced, not added) — incremental reads " +
               "are only defined over append-only ranges; resync with read(toV)")
       }
+    }.distinct
+    if (delta.isEmpty) emptyFrame(s, schemaOf(s, toM))
+    else scan(s, toM.schema, delta)
+  }
+
+  /** One file group of a change walk: added or change-data files, the
+    * schema pinned for reading them (None: their own footers), their
+    * change type (insert, upsert or delete) and commit version.
+    */
+  private[graft] final case class ChangeFiles(files: Seq[String],
+      schema: Option[org.apache.spark.sql.types.StructType],
+      changeType: String, version: Int)
+
+  /** One commit of a change walk: its kind and its file groups, EMPTY
+    * groups included (a delete whose change set is empty preserved
+    * every row). `append` carries its added files as inserts, `merge`
+    * its post-images as upserts, `delete` its pre-images as deletes,
+    * `update` both (pre-images as deletes, post-images as upserts);
+    * `layout`/`analyze` (same rows) and `rewrite` (rows replaced with
+    * no change record) carry none.
+    */
+  private[graft] final case class CommitChanges(version: Int, kind: String,
+      groups: Seq[ChangeFiles])
+
+  /** THE version walk behind every change read — [[changesBetween]],
+    * [[changeFeed]], [[mirrorSync]] and the DSv2 streaming source
+    * ([[SnapshotStreamSource]], one InputPartition per file): each
+    * commit in (fromV, toV] with its kind and file groups. A commit's
+    * kind is its `#commit:` tag; a legacy untagged commit is classified
+    * by its file set — additive ⇒ append, else rewrite (the pre-tag
+    * semantics) — and so is an `append` that removed files. Never
+    * fails on a kind: each reader decides which kinds it can represent.
+    */
+  private[graft] def changeFileGroups(s: SparkSession, root: String,
+      fromV: Int, toV: Int): Seq[CommitChanges] = {
+    require(fromV >= 0 && fromV <= toV,
+      s"need 0 <= fromV <= toV, got $fromV..$toV")
+    var prev: Set[String] =
+      if (fromV == 0) Set.empty
+      else readManifestData(s, root, fromV).files.toSet
+    ((fromV + 1) to toV).map { v =>
+      val m = readManifestData(s, root, v)
+      val cur = m.files.toSet
+      val kind = m.commit match {
+        case Some("append") | None =>
+          if (prev.subsetOf(cur)) "append" else "rewrite"
+        case Some(k) => k
+      }
+      def group(files: Seq[String], schema: Option[org.apache.spark.sql.types.StructType],
+                changeType: String) = ChangeFiles(files, schema, changeType, v)
+      val groups = kind match {
+        case "append" => Seq(group(m.files.filterNot(prev), m.schema, "insert"))
+        case "merge"  => Seq(group(m.cdf, None, "upsert"))
+        case "delete" => Seq(group(m.cdf, None, "delete"))
+        // the Delta update pair: pre-images retract (covers a
+        // rewritten key), post-images upsert; a same-version tie on
+        // an unchanged key folds upsert-over-delete (consumers break
+        // ties on _change_type desc — 'u' > 'd')
+        case "update" =>
+          Seq(group(m.cdfd, None, "delete"), group(m.cdf, None, "upsert"))
+        case _ => Seq.empty
+      }
       prev = cur
-    }
-    val delta = fresh.result().distinct
-    if (delta.isEmpty)
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        toM.schema.getOrElse(
-          s.read.parquet(toM.files: _*).schema))
-    else toM.schema match {
-      case Some(sc) => s.read.schema(sc).parquet(delta: _*)
-      case None     => s.read.parquet(delta: _*)
+      CommitChanges(v, kind, groups)
     }
   }
+
+  /** The typed feed's non-empty file groups over a walk of
+    * (fromV, toV]: every kind but a data rewrite has a change record,
+    * so only a rewrite fails fast — consumers resync there and
+    * nowhere else.
+    */
+  private[graft] def typedFiles(root: String, fromV: Int, toV: Int,
+      changes: Seq[CommitChanges]): Seq[ChangeFiles] =
+    changes.flatMap { c =>
+      if (!TypedKinds(c.kind))
+        throw new IllegalArgumentException(
+          s"versions $fromV..$toV of $root span a data rewrite at " +
+            s"v${c.version} (rows were replaced with no change record) — " +
+            "resync with read(toV)")
+      c.groups.filter(_.files.nonEmpty)
+    }
+
+  private val TypedKinds =
+    Set("append", "merge", "delete", "update", "layout", "analyze")
 
   /** The TYPED change feed (the Delta CDF read surface, completing
     * [[changesBetween]]): every row change between two versions with
@@ -2539,63 +2525,22 @@ object Snapshots {
     * schema; columns a later widening added surface as null (aligned
     * to `toV`'s schema).
     */
-  /** The typed change feed as FILE GROUPS — (files, pinned schema,
-    * change kind, commit version) per contributing commit in
-    * (fromV, toV] — the shared walk behind [[changeFeed]] and the
-    * DSv2 streaming source ([[SnapshotStreamSource]]), which plans
-    * one InputPartition per file from exactly these groups.
-    */
-  private[graft] def changeFileGroups(s: SparkSession, root: String,
-      fromV: Int, toV: Int)
-      : Seq[(Seq[String], Option[org.apache.spark.sql.types.StructType],
-             String, Int)] = {
-    require(fromV >= 0 && fromV <= toV,
-      s"need 0 <= fromV <= toV, got $fromV..$toV")
-    var prev: Set[String] =
-      if (fromV == 0) Set.empty
-      else readManifestData(s, root, fromV).files.toSet
-    val out = Seq.newBuilder[(Seq[String],
-      Option[org.apache.spark.sql.types.StructType], String, Int)]
-    ((fromV + 1) to toV).foreach { v =>
-      val m = readManifestData(s, root, v)
-      val cur = m.files.toSet
-      val additive = prev.subsetOf(cur)
-      m.commit.getOrElse(if (additive) "append" else "rewrite") match {
-        case "layout" | "analyze" => ()
-        case "append" if additive =>
-          out += ((m.files.filterNot(prev), m.schema, "insert", v))
-        case "merge"  => out += ((m.cdf, None, "upsert", v))
-        case "delete" => out += ((m.cdf, None, "delete", v))
-        case "update" =>
-          // the Delta update pair: pre-images retract (covers a
-          // rewritten key), post-images upsert; a same-version tie on
-          // an unchanged key folds upsert-over-delete (consumers break
-          // ties on _change_type desc — 'u' > 'd')
-          out += ((m.cdfd, None, "delete", v))
-          out += ((m.cdf, None, "upsert", v))
-        case _ =>
-          throw new IllegalArgumentException(
-            s"versions $fromV..$toV of $root span a data rewrite at v$v " +
-              "(rows were replaced with no change record) — resync with " +
-              "read(toV)")
-      }
-      prev = cur
-    }
-    out.result().filter(_._1.nonEmpty)
-  }
-
   def changeFeed(s: SparkSession, root: String, fromV: Int,
-                 toV: Int): DataFrame = {
+                 toV: Int): DataFrame =
+    typedFeed(s, root, toV,
+      typedFiles(root, fromV, toV, changeFileGroups(s, root, fromV, toV)))
+
+  /** [[changeFeed]] over already-walked file groups, aligned to `toV`'s
+    * schema.
+    */
+  private def typedFeed(s: SparkSession, root: String, toV: Int,
+                        groups: Seq[ChangeFiles]): DataFrame = {
     val toM = readManifestData(s, root, toV)
-    val sc = toM.schema.getOrElse(s.read.parquet(toM.files: _*).schema)
+    val sc = schemaOf(s, toM)
     var out: Option[DataFrame] = None
-    changeFileGroups(s, root, fromV, toV).foreach { case (files, vsc, kind, v) =>
-      val base = vsc match {
-        case Some(x) => s.read.schema(x).parquet(files: _*)
-        case None    => s.read.parquet(files: _*)
-      }
-      val tagged = base.withColumn("_change_type", lit(kind))
-        .withColumn("_commit_version", lit(v))
+    groups.foreach { g =>
+      val tagged = scan(s, g.schema, g.files).withColumn("_change_type", lit(g.changeType))
+        .withColumn("_commit_version", lit(g.version))
       out = Some(out.fold(tagged)(
         _.unionByName(tagged, allowMissingColumns = true)))
     }
@@ -2607,7 +2552,7 @@ object Snapshots {
             org.apache.spark.sql.types.StringType) :+
           org.apache.spark.sql.types.StructField("_commit_version",
             org.apache.spark.sql.types.IntegerType))
-      s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], empty)
+      emptyFrame(s, empty)
     }
     // align to toV's schema: a column no delta happened to carry (all
     // its changes predate the widening) still surfaces, as null
@@ -2724,6 +2669,16 @@ object Snapshots {
     }
   }
 
+  /** The mirror's consumed-source-version cursor: the `#mirror:` tag,
+    * falling back to the legacy txn-tag encoding for mirrors written
+    * before the namespace split (safe there: a pre-split mirror root
+    * hosted no other txn producer by the old contract).
+    */
+  private def mirrorCursorOf(m: Manifest): Int =
+    m.mirror.map(_.toInt)
+      .orElse(m.txns.lastOption.map(_._2.toInt))
+      .getOrElse(0)
+
   /** Exactly-once MIRROR maintenance over the typed change feed — the
     * materialized-downstream shape (a serving copy, a feature store, a
     * search-index source table kept in sync by CDC instead of corpus
@@ -2761,141 +2716,90 @@ object Snapshots {
     * construction). The mirror's own history trims with [[expire]]
     * like any dataset.
     */
-  /** The mirror's consumed-source-version cursor: the `#mirror:` tag,
-    * falling back to the legacy txn-tag encoding for mirrors written
-    * before the namespace split (safe there: a pre-split mirror root
-    * hosted no other txn producer by the old contract).
-    */
-  private def mirrorCursorOf(m: Manifest): Int =
-    m.mirror.map(_.toInt)
-      .orElse(m.txns.lastOption.map(_._2.toInt))
-      .getOrElse(0)
-
   def mirrorSync(s: SparkSession, srcRoot: String, dstRoot: String,
                  keyCols: Seq[String]): Int = {
     import org.apache.spark.sql.expressions.Window
     require(keyCols.nonEmpty, "mirrorSync needs key columns")
-    var attempts = 0
-    while (true) {
+    // a lost race means ANOTHER sync (or any commit) advanced the
+    // mirror — our fold read an old dst state and an old cursor, so
+    // the loop RECOMPUTES from the new latest (a blind re-commit would
+    // publish the stale fold as a newer version and skip the winner's
+    // range forever)
+    commit(s, dstRoot) { (dstV, dstM) =>
       val srcV = latestVersion(s, srcRoot)
       require(srcV >= 1, s"mirrorSync needs an existing dataset at $srcRoot")
-      val dstV = latestVersion(s, dstRoot)
-      val dstM = if (dstV == 0) Manifest(Seq.empty, Seq.empty, None)
-                 else readManifestData(s, dstRoot, dstV)
       val cursor = mirrorCursorOf(dstM)
-      if (cursor >= srcV) return dstV // already consumed (replay no-op)
-      // ONE metadata walk classifies the pending range: change-free
-      // (layout/analyze commits, deletes whose change set is empty —
-      // a stats false positive preserved every row — and appends that
-      // added no files: cursor fast-forward, zero data I/O) and
-      // whether it APPLIES DELETES (decides the fold's commit kind
-      // below). The prev-files seed needs the cursor's manifest; if
-      // expire() reclaimed it, classification is impossible — fall
-      // through to the fold path, whose changeFeed raises the explicit
-      // "version N does not exist" error ([[mirrorResync]] recovers)
-      val pending: Option[(Boolean, Boolean)] = // (changeFree, hasDeletes)
-        if (cursor >= 1 && fs(s).exists(manifestPath(srcRoot, cursor))) Some {
-          var prev = readManifestData(s, srcRoot, cursor).files.toSet
-          var free = true
-          var dels = false
-          ((cursor + 1) to srcV).foreach { v =>
-            val mm = readManifestData(s, srcRoot, v)
-            val cur = mm.files.toSet
-            mm.commit match {
-              case Some("layout") | Some("analyze") => ()
-              case Some("delete") =>
-                if (mm.cdf.nonEmpty) { free = false; dels = true }
-              case Some("update") =>
-                // conservative: a key-rewriting update retracts the
-                // old key downstream, so the fold commits honest
-                // `rewrite` (a zero-match update is change-free)
-                if (mm.cdf.nonEmpty || mm.cdfd.nonEmpty) {
-                  free = false; dels = true
-                }
-              case Some("append") | None => if (cur != prev) free = false
-              case _ => free = false // merge/rewrite
-            }
-            prev = cur
+      if (cursor >= srcV) NoOp(dstV) // already consumed (replay no-op)
+      else {
+        // ONE walk of the pending source range (an expired cursor
+        // version fails here with "version N does not exist" —
+        // [[mirrorResync]] recovers; a data rewrite fails fast). A
+        // mirror with no cursor has unknown history, so it never
+        // fast-forwards and folds as an honest rewrite.
+        val changes = changeFileGroups(s, srcRoot, cursor, srcV)
+        val groups = typedFiles(srcRoot, cursor, srcV, changes)
+        // change-free (layout/analyze commits, appends that added no
+        // files, deletes/updates whose change sets are empty — a stats
+        // false positive preserved every row): cursor fast-forward,
+        // zero data I/O
+        val changeFree = cursor >= 1 && groups.isEmpty &&
+          !changes.exists(_.kind == "merge")
+        // a fold that APPLIES DELETES commits `rewrite`: a retraction
+        // has no post-image, so downstream consumers must resync
+        val hasDeletes = cursor == 0 || changes.exists(c =>
+          (c.kind == "delete" || c.kind == "update") &&
+            c.groups.exists(_.files.nonEmpty))
+        if (changeFree)
+          Commit(dstM.files, Some("layout"), dstM.schema, mirror = Some(srcV.toLong))
+        else {
+          val feed = typedFeed(s, srcRoot, srcV, groups)
+          val w = Window.partitionBy(keyCols.map(col): _*)
+            // same-version tiebreak upsert-over-delete ('u' > 'i' > 'd'
+            // lexically, descending): an UPDATE emits its pre-image
+            // (delete) and post-image (upsert) in ONE version — an
+            // unchanged key must fold to the post-image
+            .orderBy(col("_commit_version").desc, col("_change_type").desc)
+          if (dstV == 0) {
+            // bootstrap: the fold is the feed collapsed within itself —
+            // every surviving row is an insert from empty, so the commit
+            // is an honest `append` and the mirror starts out tailable
+            val folded = feed.withColumn("_rn", row_number().over(w))
+              .filter(col("_rn") === 1 && col("_change_type") =!= "delete")
+              .drop("_rn", "_change_type", "_commit_version")
+            val bf = writeBatchFiles(s, dstRoot, folded)
+            Commit(bf.files, Some("append"), Some(folded.schema), bf.stats,
+              lens = bf.lens, mirror = Some(srcV.toLong))
+          } else {
+            // PRUNED incremental fold: only the mirror files holding a
+            // changed key rewrite with the feed; every other mirror file
+            // carries forward by path with its stats and blooms
+            val dstSc = schemaOf(s, dstM)
+            val changeKeys = feed.select(keyCols.map(col): _*)
+            val touched = touchedFiles(s, dstM, dstSc, changeKeys, keyCols)
+            val survivors = dstM.files.filterNot(touched.toSet)
+            val standingTouched = scanOrEmpty(s, dstSc, touched)
+            val all = standingTouched
+              .withColumn("_change_type", lit("insert"))
+              .withColumn("_commit_version", lit(cursor))
+              .unionByName(feed, allowMissingColumns = true)
+            val folded = all.withColumn("_rn", row_number().over(w))
+              .filter(col("_rn") === 1 && col("_change_type") =!= "delete")
+              .drop("_rn", "_change_type", "_commit_version")
+            val bf = writeBatchFiles(s, dstRoot, folded)
+            val mine = bf.files
+            val cdfFiles =
+              if (hasDeletes || mine.isEmpty) Seq.empty
+              else writeChangeFiles(s, dstRoot,
+                keyedSemiJoin(s.read.schema(folded.schema).parquet(mine: _*),
+                  changeKeys, keyCols))
+            Commit(survivors ++ mine,
+              Some(if (hasDeletes) "rewrite" else "merge"),
+              Some(folded.schema), bf.stats, lens = bf.lens, cdf = cdfFiles,
+              mirror = Some(srcV.toLong))
           }
-          (free, dels)
-        } else None
-      val pendingChangeFree = dstV >= 1 && pending.exists(_._1)
-      try {
-        if (pendingChangeFree) {
-          writeManifest(s, dstRoot, dstV + 1, dstM.files,
-            dstM.txns, dstM.schema, Some("layout"),
-            dstM.stats, Seq.empty, dstM.blooms, mirror = Some(srcV.toLong),
-            base = Some((dstV, dstM)), lens = dstM.lens)
-          return dstV + 1
         }
-        val feed = changeFeed(s, srcRoot, cursor, srcV)
-        val w = Window.partitionBy(keyCols.map(col): _*)
-          // same-version tiebreak upsert-over-delete ('u' > 'i' > 'd'
-          // lexically, descending): an UPDATE emits its pre-image
-          // (delete) and post-image (upsert) in ONE version — an
-          // unchanged key must fold to the post-image
-          .orderBy(col("_commit_version").desc, col("_change_type").desc)
-        if (dstV == 0) {
-          // bootstrap: the fold is the feed collapsed within itself —
-          // every surviving row is an insert from empty, so the commit
-          // is an honest `append` and the mirror starts out tailable
-          val folded = feed.withColumn("_rn", row_number().over(w))
-            .filter(col("_rn") === 1 && col("_change_type") =!= "delete")
-            .drop("_rn", "_change_type", "_commit_version")
-          val bf = writeBatchFiles(s, dstRoot, folded)
-          writeManifest(s, dstRoot, 1, bf.files.distinct.sorted,
-            Seq.empty, Some(folded.schema), Some("append"), bf.stats,
-            mirror = Some(srcV.toLong), lens = bf.lens)
-          return 1
-        }
-        // PRUNED incremental fold: only the mirror files holding a
-        // changed key rewrite with the feed; every other mirror file
-        // carries forward by path with its stats and blooms
-        val dstSc = dstM.schema.getOrElse(s.read.parquet(dstM.files: _*).schema)
-        val changeKeys = feed.select(keyCols.map(col): _*)
-        val touched = touchedFiles(s, dstM, dstSc, changeKeys, keyCols)
-        val survivors = dstM.files.filterNot(touched.toSet)
-        val standingTouched =
-          if (touched.isEmpty)
-            s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              dstSc)
-          else s.read.schema(dstSc).parquet(touched: _*)
-        val all = standingTouched
-          .withColumn("_change_type", lit("insert"))
-          .withColumn("_commit_version", lit(cursor))
-          .unionByName(feed, allowMissingColumns = true)
-        val folded = all.withColumn("_rn", row_number().over(w))
-          .filter(col("_rn") === 1 && col("_change_type") =!= "delete")
-          .drop("_rn", "_change_type", "_commit_version")
-        val bf = writeBatchFiles(s, dstRoot, folded)
-        val mine = bf.files
-        val hasDeletes = pending.fold(true)(_._2) // unclassifiable: honest rewrite
-        val cdfFiles =
-          if (hasDeletes || mine.isEmpty) Seq.empty
-          else writeChangeFiles(s, dstRoot,
-            keyedSemiJoin(s.read.schema(folded.schema).parquet(mine: _*),
-              changeKeys, keyCols))
-        writeManifest(s, dstRoot, dstV + 1, (survivors ++ mine).distinct.sorted,
-          dstM.txns, Some(folded.schema),
-          Some(if (hasDeletes) "rewrite" else "merge"),
-          dstM.stats ++ bf.stats, cdfFiles, blooms = dstM.blooms,
-          mirror = Some(srcV.toLong), base = Some((dstV, dstM)),
-          lens = dstM.lens ++ bf.lens)
-        return dstV + 1
-      } catch {
-        // a lost race means ANOTHER sync advanced the mirror — our fold
-        // is stale (it read an old dst state and an old cursor), so
-        // RECOMPUTE from the new latest (the merge() discipline; a
-        // blind re-commit of the written files would publish the stale
-        // fold as a newer version and the merged txn tags would then
-        // skip the winner's range forever). The orphaned files vacuum
-        // under the grace window.
-        case e: ConcurrentCommitException =>
-          attempts += 1
-          if (attempts >= 16) throw e
       }
     }
-    -1 // unreachable
   }
 
   /** Re-anchor (or bootstrap) a mirror from the source's CURRENT
@@ -2910,38 +2814,24 @@ object Snapshots {
     * occur downstream of it).
     */
   def mirrorResync(s: SparkSession, srcRoot: String,
-                   dstRoot: String): Int = {
-    var attempts = 0
-    while (true) {
+                   dstRoot: String): Int =
+    // a lost race: the snapshot AND the cursor we read are stale — the
+    // loop recomputes from the new latest on both sides
+    commit(s, dstRoot) { (dstV, dstM) =>
       val srcV = latestVersion(s, srcRoot)
       require(srcV >= 1, s"mirrorResync needs an existing dataset at $srcRoot")
-      val dstV = latestVersion(s, dstRoot)
-      val dstM = if (dstV == 0) Manifest(Seq.empty, Seq.empty, None)
-                 else readManifestData(s, dstRoot, dstV)
       // a concurrent sync/resync already anchored at or past this
       // source version: done (committing OUR older snapshot on top
       // would silently roll the mirror back — the mirrorSync race
       // discipline applies here too)
-      if (mirrorCursorOf(dstM) >= srcV && dstV >= 1) return dstV
-      val snap = read(s, srcRoot, srcV)
-      val bf = writeBatchFiles(s, dstRoot, snap)
-      try {
-        writeManifest(s, dstRoot, dstV + 1, bf.files.distinct.sorted,
-          dstM.txns, Some(snap.schema),
-          Some("rewrite"), bf.stats, mirror = Some(srcV.toLong),
-          base = if (dstV >= 1) Some((dstV, dstM)) else None,
-          lens = bf.lens)
-        return dstV + 1
-      } catch {
-        // lost race: the snapshot AND the cursor we read are stale —
-        // recompute from the new latest on both sides
-        case e: ConcurrentCommitException =>
-          attempts += 1
-          if (attempts >= 16) throw e
+      if (mirrorCursorOf(dstM) >= srcV && dstV >= 1) NoOp(dstV)
+      else {
+        val snap = read(s, srcRoot, srcV)
+        val bf = writeBatchFiles(s, dstRoot, snap)
+        Commit(bf.files, Some("rewrite"), Some(snap.schema), bf.stats,
+          lens = bf.lens, mirror = Some(srcV.toLong))
       }
     }
-    -1 // unreachable
-  }
 
   // ---- catalog entry ------------------------------------------------------
 

@@ -69,30 +69,39 @@ class StreamingRateAnomaly private (counts: Additive) extends Serializable {
   def current(s: SparkSession): DataFrame = {
     val (hours, dm) =
       this.synchronized {
-        (counts.rows.map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1), droppedMax)
+        (counts.rows.map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toArray,
+          droppedMax)
       }
     // an hour h recomputes a shortened trail iff its window [h−T, h)
     // reaches a dropped hour, i.e. h ≤ droppedMax + T
     val minEmit =
       if (dm == Long.MinValue) Long.MinValue
       else dm + CorpusCuration.AnomalyTrailHours + 1
-    val rows = hours.filter(_._1 >= minEmit).map { case (h, n) =>
-      val trail = hours.filter { case (t, _) =>
-        t >= h - CorpusCuration.AnomalyTrailHours && t < h }
-      val tCnt = trail.size.toLong
+    // one two-pointer pass: hour i's trail is hours(lo until i), lo only
+    // moves forward, and the running Long sums of n and n² stay exact
+    var (lo, tSum, tSq) = (0, 0L, 0L)
+    val rows = hours.indices.flatMap { i =>
+      val (h, n) = hours(i)
+      while (lo < i && hours(lo)._1 < h - CorpusCuration.AnomalyTrailHours) {
+        tSum -= hours(lo)._2
+        tSq -= hours(lo)._2 * hours(lo)._2
+        lo += 1
+      }
+      val tCnt = (i - lo).toLong
       val z: java.lang.Double =
         if (tCnt >= CorpusCuration.AnomalyMinTrail) {
-          val tSum = trail.map(_._2).sum
-          val tSq = trail.map(p => p._2 * p._2).sum
           val mean = tSum.toDouble / tCnt
           val varPop = tSq.toDouble / tCnt - mean * mean
           val raw = (n.toDouble - mean) / math.sqrt(math.max(varPop, 1e-12))
           math.floor(raw * 100.0 + 0.5) / 100.0
         } else null
+      tSum += n
+      tSq += n * n
       val hourStr = java.time.Instant.ofEpochSecond(h * 3600L)
         .atZone(java.time.ZoneOffset.UTC)
         .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss"))
-      Row(hourStr, n, z, z != null && math.abs(z) >= 2.0)
+      if (h < minEmit) None
+      else Some(Row(hourStr, n, z, z != null && math.abs(z) >= 2.0))
     }
     val schema = StructType(Seq(StructField("hour", StringType, false),
       StructField("n", LongType, false), StructField("z", DoubleType),

@@ -518,6 +518,28 @@ class CorpusCurationSpec extends AnyFunSuite {
     // the spike hour's verdict must survive the prune
     assert(pruned("2024-03-03 00:00:00") === want.find(_._1 == "2024-03-03 00:00:00").get)
     assert(tail.nonEmpty)
+    // hours MISSING inside a trail (its 24 h window holds fewer hours
+    // than it spans), uneven counts, a 30 h gap that empties the trail,
+    // and a spike after it
+    val gapHours = (0 until 40).filter(h => h % 5 != 2 && h % 7 != 3) ++
+      (70 until 100).filter(_ % 4 != 1)
+    val gapRows = gapHours.flatMap { h =>
+      val n = if (h == 98) 60 else 3 + (h * 7) % 11
+      (0 until n).map(i => (h * 100L + i, new java.sql.Timestamp(
+        base + h * 3600000L + i * 1000L), 1L, "view", 1.0, "{}"))
+    }
+    val gapDir = java.nio.file.Files.createTempDirectory("graft_sanomgap").toString
+    val gapDf = gapRows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+    gapDf.write.mode("overwrite").parquet(s"$gapDir/events.parquet")
+    val gapTwin = new graft.streaming.StreamingRateAnomaly
+    for (r <- 0 until 2)
+      gapTwin.mergeBatch(gapDf.filter(pmod(col("event_id"), lit(2)) === r))
+    val gapGot = gapTwin.current(spark).collect().map(key).sortBy(_._1).toSeq
+    val gapWant = operators.CorpusCuration.rateAnomaly(spark, gapDir)
+      .collect().map(key).sortBy(_._1).toSeq
+    assert(gapWant.count(_._3.isDefined) > 10 && gapWant.exists(_._4),
+      "the gapped input scores hours and flags its spike")
+    assert(gapGot === gapWant, "a trail with missing hours matches the batch operator")
   }
 
   test("streaming source-sim signatures equal the batch operator's over any split") {

@@ -112,11 +112,16 @@ class DedupSkewSpec extends AnyFunSuite {
       df.select("doc_a", "doc_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     try {
-      val mhPlain = pairSet(Dedup.minhashLsh(spark, dir, hotBucketCap = 1000000L, sampleMod = 1L))
+      val mhPlainDf = Dedup.minhashLsh(spark, dir, hotBucketCap = 1000000L, sampleMod = 1L)
+      val mhPlain = pairSet(mhPlainDf)
       val shPlain = pairSet(Dedup.simhash(spark, dir, hotBucketCap = 1000000L, sampleMod = 1L))
-      // the minhash pair frame is memoized per dir: release before the rerun
-      graft.plans.Memo.release(spark, dir)
-      val mhSalted = pairSet(Dedup.minhashLsh(spark, dir, hotBucketCap = 8L, sampleMod = 1L))
+      val mhSaltedDf = Dedup.minhashLsh(spark, dir, hotBucketCap = 8L, sampleMod = 1L)
+      // the caps key the memoized pair frame: the salted call builds its
+      // own frame instead of being served the plain one
+      assert(!mhSaltedDf.queryExecution.analyzed
+        .sameResult(mhPlainDf.queryExecution.analyzed),
+        "a different cap must not be served the frame built with the first caps")
+      val mhSalted = pairSet(mhSaltedDf)
       val shSalted = pairSet(Dedup.simhash(spark, dir, hotBucketCap = 8L, sampleMod = 1L))
       // the 40 identical docs must all pair up (J = 1, hamming = 0) —
       // proves the hot path produced them, not just the cold one

@@ -437,6 +437,30 @@ class SnapshotsMaintenanceSpec extends AnyFunSuite {
       "the replayed txn must not duplicate its rows")
   }
 
+  test("appendTxn past the manifest memo opens O(1) manifests per batch; a replay stays a no-op") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_snaptxnopen").toString
+    def row(i: Long) = Seq((i, "s")).toDF("doc_id", "source")
+    Snapshots.create(spark, root, row(0L))
+    // more versions than the 64-entry manifest memo holds
+    (1L to 70L).foreach(i => Snapshots.appendTxn(spark, root, i, row(i)))
+    val latest = Snapshots.latestVersion(spark, root)
+    assert(latest === 71)
+    val before = Snapshots.manifestOpens.get()
+    val v = Snapshots.appendTxn(spark, root, 71L, row(71L))
+    val opened = Snapshots.manifestOpens.get() - before
+    assert(v === latest + 1)
+    assert(opened <= 2,
+      s"a new txn resolves the latest manifest only, not the lineage ($opened opens)")
+    val b2 = Snapshots.manifestOpens.get()
+    assert(Snapshots.appendTxn(spark, root, 35L, row(35L)) === v,
+      "a replayed txn claims no version")
+    assert(Snapshots.manifestOpens.get() - b2 <= 2,
+      "a replay probes the latest manifest only")
+    assert(ids(Snapshots.read(spark, root, v)) === (0L to 71L),
+      "every txn landed exactly once")
+  }
+
   test("timestamp travel resolves the version committed at or before the instant") {
     val root = java.nio.file.Files.createTempDirectory("graft_snapts").toString
     val docs = Tables.documents(spark, sf).select("doc_id", "source")
@@ -1361,29 +1385,84 @@ class SnapshotsMaintenanceSpec extends AnyFunSuite {
   }
 
   test("layout maintenance recomputes on a lost race instead of publishing a stale file set") {
-    import org.apache.spark.sql.functions.{col, lit, pmod}
-    val root = java.nio.file.Files.createTempDirectory("graft_snaplrace").toString
+    import org.apache.spark.sql.functions.{col, lit, max => smax, pmod}
+    import Snapshots.StatsPred._
     val docs = Tables.documents(spark, sf).select("doc_id", "source")
+      .withColumn("rev", lit(1L))
     val sliceA = docs.filter(pmod(col("doc_id"), lit(2)) === 0)
     val sliceB = docs.filter(pmod(col("doc_id"), lit(2)) === 1)
-    Snapshots.create(spark, root, sliceA.repartitionByRange(4, col("doc_id")))
-    // inject a concurrent append into the compact's race window: the
-    // stale layout (computed from v1) must NOT be published — the old
-    // commitRetry would have silently dropped sliceB from the lineage
-    // while the layout tag claimed row preservation
-    var fired = false
-    Snapshots.layoutHook = () => if (!fired) {
-      fired = true
-      Snapshots.append(spark, root, sliceB)
+    val cut = docs.agg(smax(col("doc_id"))).head().getLong(0) / 2
+    val upd = sliceA.filter(col("doc_id") < cut)
+      .withColumn("source", lit("upd")).withColumn("rev", lit(2L))
+    def fresh(prefix: String): String = {
+      val root = java.nio.file.Files.createTempDirectory(prefix).toString
+      Snapshots.create(spark, root, sliceA.repartitionByRange(4, col("doc_id")))
+      root
     }
-    try {
-      val v = Snapshots.compact(spark, root, partitions = 2)
-      assert(fired, "the race window hook must have run")
-      assert(ids(Snapshots.read(spark, root, v)) === ids(docs),
-        "the recomputed layout preserves the racing append's rows")
-      assert(Snapshots.changesBetween(spark, root, 2, v).count() === 0,
-        "the final commit is still an honest empty-delta layout")
-    } finally Snapshots.layoutHook = () => ()
+    // inject a concurrent append of sliceB into the verb's race window
+    // (between its attempt and its claim on `root`): the attempt
+    // computed from v1 must NOT be published — a blind retry would drop
+    // sliceB from the lineage — so the verb recomputes from the new
+    // latest and the racing rows survive
+    def raced(name: String, root: String)(verb: => Int): Int = {
+      var fired = false
+      Snapshots.commitHook = () => if (!fired) {
+        fired = true
+        Snapshots.append(spark, root, sliceB)
+      }
+      val v = try verb finally Snapshots.commitHook = () => ()
+      assert(fired, s"$name: the race window hook must have run")
+      v
+    }
+    def upds(df: org.apache.spark.sql.DataFrame) =
+      ids(df.filter(col("source") === "upd"))
+
+    val rc = fresh("graft_snaplrace")
+    val vc = raced("compact", rc)(Snapshots.compact(spark, rc, partitions = 2))
+    assert(ids(Snapshots.read(spark, rc, vc)) === ids(docs),
+      "the recomputed layout preserves the racing append's rows")
+    assert(Snapshots.changesBetween(spark, rc, 2, vc).count() === 0,
+      "the final commit is still an honest empty-delta layout")
+
+    val rm = fresh("graft_snapmrace")
+    val vm = raced("merge", rm)(
+      Snapshots.merge(spark, rm, upd, Seq("doc_id"), "rev"))
+    val merged = Snapshots.read(spark, rm, vm)
+    assert(ids(merged) === ids(docs), "merge: the racing append's rows survive")
+    assert(upds(merged) === ids(upd), "merge: the batch still lands")
+
+    val rd = fresh("graft_snapdrace")
+    val vd = raced("delete", rd)(Snapshots.delete(spark, rd, Seq(Lt("doc_id", cut))))
+    assert(ids(Snapshots.read(spark, rd, vd)) ===
+      ids(docs.filter(col("doc_id") >= cut)),
+      "delete: recomputed on top of the racing append (its rows past the cut survive)")
+
+    val ru = fresh("graft_snapurace")
+    val vu = raced("update", ru)(Snapshots.update(spark, ru,
+      Seq(Lt("doc_id", cut)), Map("source" -> lit("upd"))))
+    val updated = Snapshots.read(spark, ru, vu)
+    assert(ids(updated) === ids(docs), "update: the racing append's rows survive")
+    assert(upds(updated) === ids(docs.filter(col("doc_id") < cut)),
+      "update: recomputed on top of the racing append")
+
+    val rb = fresh("graft_snapbrace")
+    val vb = raced("analyzeBloom", rb)(
+      Snapshots.analyzeBloom(spark, rb, Seq("doc_id")))
+    assert(ids(Snapshots.read(spark, rb, vb)) === ids(docs),
+      "analyzeBloom: the racing append's rows survive")
+    assert(Snapshots.analyzeBloom(spark, rb, Seq("doc_id")) === vb,
+      "analyzeBloom: the recomputed analysis covered the racing files too")
+
+    val src = fresh("graft_snapsrace")
+    val dst = java.nio.file.Files.createTempDirectory("graft_snapmirrace").toString
+    Snapshots.mirrorSync(spark, src, dst, Seq("doc_id"))
+    Snapshots.merge(spark, src, upd, Seq("doc_id"), "rev")
+    val vs = raced("mirrorSync", dst)(
+      Snapshots.mirrorSync(spark, src, dst, Seq("doc_id")))
+    val mirror = Snapshots.read(spark, dst, vs)
+    assert(ids(mirror) === ids(docs),
+      "mirrorSync: the racing append to the mirror survives the fold")
+    assert(upds(mirror) === ids(upd), "mirrorSync: the source merge still lands")
   }
 
   test("clusterZN: a three-dimension Morton layout lets every dimension prune") {
@@ -1422,7 +1501,7 @@ class SnapshotsMaintenanceSpec extends AnyFunSuite {
     // consumer can read the mirror's own feed from version 0
     assert(Snapshots.changesBetween(spark, dst, 0, 1).count() === docs.count())
     // range-cluster the MIRROR (a commit on the mirror root: the
-    // #mirror: cursor must carry through commitRetry) so the fold
+    // #mirror: cursor must carry through the commit loop) so the fold
     // prune has a selective layout to work with
     val cv = Snapshots.cluster(spark, dst, Seq("doc_id"), partitions = 8)
     val preFiles = Snapshots.read(spark, dst, cv).inputFiles.toSet

@@ -5,12 +5,14 @@ Prints what each CHANGES.md entry reports about size:
   - lines under src/main/scala, in total and per package directory;
   - `private[graft] var` / `@volatile` lines (mutable globals);
   - `sys.props` / `sys.env` reads;
-  - distinct `spark.graft.*` configuration keys.
+  - distinct `spark.graft.*` configuration keys;
+  - with --files N, the N largest files under src/main/scala.
 
     python3 tools/size.py                      # this checkout
     python3 tools/size.py --base /tmp/parent   # and the delta against
                                                # an export of the parent
                                                # (git archive <rev> | tar -x -C /tmp/parent)
+    python3 tools/size.py --files 10 --base /tmp/parent
 """
 import argparse
 import os
@@ -26,7 +28,7 @@ def measure(root):
     src = os.path.join(root, "src", "main", "scala")
     if not os.path.isdir(src):
         sys.exit(f"size.py: no src/main/scala under {root}")
-    packages, mutable, sys_reads, keys = {}, 0, 0, set()
+    packages, files_, mutable, sys_reads, keys = {}, {}, 0, 0, set()
     for d, _, files in os.walk(src):
         for f in files:
             if not f.endswith(".scala"):
@@ -35,6 +37,7 @@ def measure(root):
                 text = fh.read()
             pkg = os.path.relpath(d, src)
             packages[pkg] = packages.get(pkg, 0) + text.count("\n")
+            files_[os.path.join(pkg, f)] = text.count("\n")
             for line in text.splitlines():
                 mutable += bool(MUTABLE.search(line))
                 sys_reads += len(SYS_READ.findall(line))
@@ -42,6 +45,7 @@ def measure(root):
     return {
         "lines": sum(packages.values()),
         "packages": packages,
+        "files": files_,
         "mutable": mutable,
         "sys_reads": sys_reads,
         "keys": keys,
@@ -53,6 +57,8 @@ def main():
     ap.add_argument("--base", help="a checkout or export of the parent to diff against")
     ap.add_argument("--root", default=os.path.join(os.path.dirname(__file__), ".."),
                     help="the checkout to measure (default: this repo)")
+    ap.add_argument("--files", type=int, default=0, metavar="N",
+                    help="also print the N largest files under src/main/scala")
     args = ap.parse_args()
     cur = measure(args.root)
     base = measure(args.base) if args.base else None
@@ -69,6 +75,10 @@ def main():
     for pkg in sorted(set(cur["packages"]) | set(base["packages"] if base else ())):
         row("  " + pkg, cur["packages"].get(pkg, 0),
             base and base["packages"].get(pkg, 0))
+    if args.files > 0:
+        print(f"largest {args.files} files")
+        for f in sorted(cur["files"], key=lambda f: (-cur["files"][f], f))[:args.files]:
+            row("  " + f, cur["files"][f], base and base["files"].get(f, 0))
     row("private[graft] var / @volatile lines", cur["mutable"], base and base["mutable"])
     row("sys.props / sys.env reads", cur["sys_reads"], base and base["sys_reads"])
     row("spark.graft.* keys", len(cur["keys"]), base and len(base["keys"]))
