@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions.tokens
 import graft.operators.Retrieval
+import StandingIndex.Tree
 
 /** Persisted BM25 postings index — the standing-search half of
   * [[graft.operators.Retrieval.bm25Rank]] (whose map-only shape is
@@ -16,15 +17,9 @@ import graft.operators.Retrieval
   * intent: alsyefs/notion backend/analyze_pages.py keyword filters as
   * a standing service rather than a rescan).
   *
-  * Layout under the index root:
-  *   postings/   parquet (term, doc_id, tf), written
-  *               `partitionBy("tshard")` with tshard =
-  *               hash(term) mod [[Shards]] — a literal query-term set
-  *               prunes to its shards' FILES at the scan
-  *               (PartitionFilters; at 100 TB the postings table is
-  *               corpus-token-sized and a query must not read it all)
+  * Layout under the index root ([[TextIndex]]):
+  *   postings/   parquet (term, doc_id, tf), `partitionBy("tshard")`
   *   doclens/    parquet (doc_id, dl) — the slim per-doc length table
-  *               (one BIGINT per doc; the avgdl/N statistics scan)
   *
   * Query path (`q_bm25_indexed`): shard-pruned postings restricted to
   * the query terms → per-doc tf pivot (only docs containing ≥ 1 term
@@ -35,96 +30,17 @@ import graft.operators.Retrieval
   * from the raw corpus, so the two entries are cell-equal by
   * construction and SHARE one oracle (the q_bpe_persisted precedent).
   *
-  * Append (the production lifecycle): tokenize ONLY the arriving
-  * batch, append its postings/doclens rows — O(batch), the standing
-  * corpus untouched. Stats are derived at query time from the
-  * artifact, so append + query == full-rebuild query exactly (no
-  * frozen df snapshot to invalidate); spec-asserted.
+  * Build, append, delete, compact and versions are the one
+  * [[StandingIndex]] lifecycle: append tokenizes ONLY the arriving
+  * batch — O(batch), the standing corpus untouched — and append +
+  * query == full-rebuild query exactly; spec-asserted.
   */
-object Bm25Index {
+object Bm25Index extends TextIndex("graft_bm25index") {
 
-  /** Postings shard count: bounds the partition fan-out while letting
-    * a ≤ few-term query prune to ≤ that many shard directories.
-    */
-  val Shards = 32
-
-  private def tshard(term: Column): Column =
-    pmod(xxhash64(term), lit(Shards.toLong)).cast("int")
-
-  def indexRoot(s: SparkSession, dir: String): String =
-    ScopedFixture.root(s, "graft_bm25index", dir)
-
-  /** One-time build: corpus → (term, doc_id, tf) postings (shard-
-    * partitioned) + (doc_id, dl) lengths. Marker-skipped on
-    * re-invocation.
-    */
-  def materialize(s: SparkSession, dir: String): String =
-    materializeWhere(s, dir, lit(true), indexRoot(s, dir))
-
-  private[graft] def materializeWhere(s: SparkSession, dir: String,
-                                      pred: Column, root: String): String = {
-    FixtureCleanup.onExit(root)
-    if (ScopedFixture.isComplete(root)) return root
-    writeBatch(graft.Tables.documents(s, dir).filter(pred), root, "overwrite")
-    ScopedFixture.markComplete(root)
-    root
-  }
-
-  /** Incremental append: index the arriving documents frame only.
-    * Re-appending a previously deleted doc_id resurrects it (FAISS
-    * `remove_ids` + `add` semantics): on overlap with the tombstone
-    * set the index compacts first — physical reclaim, so the old rows
-    * cannot double the new ones — then the batch lands fresh. The
-    * overlap probe is one existence check when no delete has run.
-    */
-  def append(s: SparkSession, root: String, batch: DataFrame): Unit = {
-    // roll forward a crash-interrupted compaction FIRST: an append onto
-    // a mid-swap-crashed tree would recreate it with batch-only rows
-    IndexMaintenance.recoverAll(s, root, Roles.take(2))
-    if (IndexMaintenance.tombstonesOverlap(s, root, "doc_id",
-        batch.select("doc_id")))
-      compact(s, root)
-    writeBatch(batch, root, "append")
-  }
-
-  private def writeBatch(docs: DataFrame, root: String, mode: String): Unit = {
-    val s = docs.sparkSession
-    val toks = docs.select(col("doc_id"), tokens(col("text")).as("t"))
-    val postings = toks
-      .select(col("doc_id"), explode(col("t")).as("term"))
+  /** The postings rows: one per (term, doc) with its frequency. */
+  protected def postings(toks: DataFrame): DataFrame =
+    toks.select(col("doc_id"), explode(col("t")).as("term"))
       .groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
-      .withColumn("tshard", tshard(col("term")))
-    if (docs.isEmpty) {
-      // a partitionBy write of zero rows emits NO part files and the
-      // next postings read dies on schema inference (the PqIndex
-      // empty-compact bug class). An empty APPEND is a plain no-op; an
-      // empty BUILD writes schema-bearing empty files, unpartitioned
-      // (tshard stays a data column — search's isin filter reads it
-      // unchanged, and pruning is moot on an empty index).
-      if (mode == "overwrite") {
-        toks.select(col("doc_id"), size(col("t")).cast("long").as("dl"))
-          .coalesce(1).write.mode(mode).parquet(s"$root/doclens")
-        postings.coalesce(1).write.mode(mode).parquet(s"$root/postings")
-      }
-    } else {
-      // a prior empty build left root-level empty part files — drop
-      // them before the partitioned write (two-depth layouts brick
-      // partition discovery)
-      if (mode == "append")
-        PqIndex.clearUnpartitionedEmpty(s, s"$root/postings")
-      toks.select(col("doc_id"), size(col("t")).cast("long").as("dl"))
-        .write.mode(mode).parquet(s"$root/doclens")
-      postings
-        // cluster by shard before the partitioned write (the PqIndex
-        // rationale: without it every task writes into every shard dir)
-        .repartition(col("tshard"))
-        .write.mode(mode).partitionBy("tshard").parquet(s"$root/postings")
-    }
-    // an append invalidates any cached file listing a prior read left
-    // in the session (the PhraseIndex stale-listing fix, same shape)
-    s.catalog.refreshByPath(s"$root/postings")
-    s.catalog.refreshByPath(s"$root/doclens")
-  }
 
   /** §2 catalog entry (`q_bm25_indexed`): materialize, then rank the
     * standing query FROM the artifact alone — the corpus text is never
@@ -133,64 +49,14 @@ object Bm25Index {
   def bm25Indexed(s: SparkSession, dir: String): DataFrame =
     searchRoot(s, materialize(s, dir))
 
-  /** Tombstone delete — doc takedowns and dedup drops must hit the
-    * standing index too (the [[PqIndex.delete]] shape): O(batch) — ids
-    * append to a `tombstones/` sidecar, no postings file rewritten;
-    * queries anti-join the deduped set (which also keeps the
-    * N/avgdl/df statistics consistent with the live set, because they
-    * derive from the tombstone-filtered frames at query time), and
-    * [[compact]] physically reclaims. Idempotent by anti-join
-    * semantics.
+  /** Rank the standing query against the index AS OF version v (a
+    * [[commitVersion]]): scans plan over exactly v's manifest files
+    * (shard pruning intact via basePath partition discovery), stats
+    * re-derive from v's frames — so `searchAt(v)` == a fresh build
+    * over v's corpus, spec- and oracle-asserted.
     */
-  def delete(s: SparkSession, root: String, docIds: Seq[Long]): Unit =
-    IndexMaintenance.deleteIds(s, root, "doc_id", docIds)
-
-  private def tombstones(s: SparkSession, root: String): Option[DataFrame] =
-    IndexMaintenance.tombstones(s, root)
-
-  /** Physically reclaim tombstoned rows from both trees and clear the
-    * sidecar (shard directories preserved — probe pruning needs them).
-    * Each tree replace is crash-atomic ([[IndexMaintenance.swap]]: a
-    * crash at any point leaves a complete copy recoverable by the read
-    * path — the old delete-then-rename had a window with NO live tree).
-    */
-  def compact(s: SparkSession, root: String): Unit = {
-    IndexMaintenance.compactTree(s, root, "postings", "doc_id", Some("tshard"))
-    IndexMaintenance.compactTree(s, root, "doclens", "doc_id", None)
-    IndexMaintenance.clearTombstoneSidecar(s, root)
-  }
-
-  // ---- versioned reads ----------------------------------------------------
-
-  /** The subtrees a version manifest covers. */
-  private val Roles = Seq("postings", "doclens", "tombstones")
-
-  /** Snapshot the index's current state (postings + doclens +
-    * tombstones) as the next version — a training run pins the version
-    * and [[searchAt]] reproduces its ranking through later appends
-    * and deletes (whose data files are additive) AND through
-    * [[compact]]: a rewrite RETAINS the replaced trees while versions
-    * pin them ([[IndexMaintenance.retire]] — the r12-ADVICE fix: a
-    * re-add-after-delete `append` compacts implicitly, and deleting
-    * the old tree silently broke every pinned `searchAt(v)`). Only an
-    * explicit [[IndexVersions.expire]] bounds time travel.
-    */
-  def commitVersion(s: SparkSession, root: String): Int =
-    IndexVersions.commit(s, root, Roles)
-
-  /** Rank the standing query against the index AS OF version v: scans
-    * plan over exactly v's manifest files (shard pruning intact via
-    * basePath partition discovery), stats re-derive from v's frames —
-    * so `searchAt(v)` == a fresh build over v's corpus, spec- and
-    * oracle-asserted.
-    */
-  def searchAt(s: SparkSession, root: String, v: Int): DataFrame = {
-    val post = IndexVersions.readAt(s, root, v, "postings").getOrElse(
-      throw new IllegalStateException(s"version $v of $root has no postings"))
-    val dl = IndexVersions.readAt(s, root, v, "doclens").getOrElse(
-      throw new IllegalStateException(s"version $v of $root has no doclens"))
-    searchFrames(s, post, dl, IndexVersions.readAt(s, root, v, "tombstones"))
-  }
+  def searchAt(s: SparkSession, root: String, v: Int): DataFrame =
+    search(s, read(s, root, Some(v)))
 
   /** `q_bm25_versioned` (§2): the time-travel ranking — the artifact
     * holds v1 = the doc_id%3≠2 slice and v2 = the full corpus; the
@@ -202,10 +68,10 @@ object Bm25Index {
     val root = ScopedFixture.root(s, "graft_bm25ver", dir)
     FixtureCleanup.onExit(root)
     if (!ScopedFixture.isComplete(root)) {
-      val docs = graft.Tables.documents(s, dir)
-      writeBatch(docs.filter(pmod(col("doc_id"), lit(3)) =!= 2), root, "overwrite")
+      build(s, dir, pmod(col("doc_id"), lit(3)) =!= 2, root)
       commitVersion(s, root) // v1 = the slice
-      append(s, root, docs.filter(pmod(col("doc_id"), lit(3)) === 2))
+      append(s, root, graft.Tables.documents(s, dir)
+        .filter(pmod(col("doc_id"), lit(3)) === 2))
       commitVersion(s, root) // v2 = the full corpus
       ScopedFixture.markComplete(root)
     }
@@ -218,48 +84,22 @@ object Bm25Index {
   /** Rank [[Retrieval.Bm25Terms]] against an arbitrary index root
     * (the spec's handle for base-plus-append vs full-rebuild).
     */
-  private[graft] def searchRoot(s: SparkSession, root: String): DataFrame = {
-    // roll any crash-interrupted compaction swap forward before planning
-    IndexMaintenance.recover(s, s"$root/postings", s"$root/postings_compacting")
-    IndexMaintenance.recover(s, s"$root/doclens", s"$root/doclens_compacting")
-    searchFrames(s,
-      s.read.parquet(s"$root/postings"),
-      s.read.parquet(s"$root/doclens"),
-      tombstones(s, root))
-  }
+  private[graft] def searchRoot(s: SparkSession, root: String): DataFrame =
+    search(s, read(s, root, None))
 
-  private def searchFrames(s: SparkSession, postingsAll: DataFrame,
-                           doclensAll: DataFrame,
-                           tomb: Option[DataFrame]): DataFrame = {
+  private def search(s: SparkSession, f: Frames): DataFrame = {
     val terms = Retrieval.Bm25Terms
-    // shard list computed driver-side from the literal terms → pushed
-    // as an isin partition filter (plan-time file pruning)
-    val shardOf: String => Int = {
-      import s.implicits._
-      val rows = terms.toDF("term").select(col("term"), tshard(col("term")))
-        .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
-      rows
-    }
-    val shards = terms.map(shardOf).distinct
     // tombstones drop AFTER shard pruning (postings) and against the
     // slim lengths table — stats then derive from the LIVE set only
-    def dropT(df: DataFrame): DataFrame = tomb.fold(df)(t =>
-      df.join(t.select("doc_id").distinct(), Seq("doc_id"), "left_anti"))
-    val qp = dropT(postingsAll
-      .filter(col("tshard").isin(shards: _*))
+    val qp = f.live(f("postings")
+      .filter(col("tshard").isin(shardsOf(s, terms): _*))
       .filter(col("term").isin(terms: _*)))
-    val doclens = dropT(doclensAll)
+    val doclens = f.live(f("doclens"))
     // artifact-derived corpus stats: N and avgdl from the slim lengths
     // table, df per term from the pruned postings — all integers (and
     // one integer-ratio double) identical to what bm25Rank aggregates
     // from the raw corpus, collected as bounded metadata
-    val (nDocs, avgdl) = {
-      val r = doclens.agg(count(lit(1)).as("n"),
-        (sum(col("dl")).cast("double") / count(lit(1))).as("a")).head()
-      // empty index: sum(dl) is NULL — the ranking below is empty
-      // anyway, 0.0 just keeps the literal construction total
-      (r.getLong(0), if (r.isNullAt(1)) 0.0 else r.getDouble(1))
-    }
+    val (nDocs, avgdl) = lengthStats(doclens)
     val dfByTerm = qp.groupBy("term").agg(countDistinct(col("doc_id")).as("df"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     import s.implicits._
@@ -273,5 +113,71 @@ object Bm25Index {
       .agg(tfAggs.head, tfAggs.tail: _*)
       .join(doclens, "doc_id")
     Retrieval.scoreAndTop(perDoc, stats)
+  }
+}
+
+/** What the two text indexes ([[Bm25Index]], [[PhraseIndex]]) share:
+  * documents keyed by `doc_id`, a `postings/` tree partitioned by
+  * `tshard` = hash(term) mod [[Shards]] (a literal term set prunes to
+  * its shards' FILES at the scan — at 100 TB the postings table is
+  * corpus-token-sized and a query must not read it all), the slim
+  * `doclens/` (doc_id, dl) table behind N and avgdl, and no sidecar.
+  * Stats derive from the artifact at query time, so append == full
+  * rebuild exactly (no frozen df snapshot to invalidate).
+  */
+abstract class TextIndex(family: String) extends StandingIndex(family, "doc_id") {
+
+  /** Postings shard count: bounds the partition fan-out while letting
+    * a ≤ few-term query prune to ≤ that many shard directories.
+    */
+  val Shards = 32
+
+  type Meta = Unit
+
+  protected val trees = Seq(Tree("postings", Some("tshard")), Tree("doclens"))
+
+  protected def batchKey: Column = col("doc_id")
+
+  protected def buildMeta(s: SparkSession, dir: String): Unit = ()
+
+  protected def metaFrame(s: SparkSession, m: Unit): Option[DataFrame] = None
+
+  protected def decodeMeta(meta: => DataFrame): Unit = ()
+
+  protected def corpus(s: SparkSession, dir: String, pred: Column,
+                       m: Unit): DataFrame =
+    graft.Tables.documents(s, dir).filter(pred)
+
+  /** The postings rows (with a `term` column) of tokenized docs
+    * (doc_id, t).
+    */
+  protected def postings(toks: DataFrame): DataFrame
+
+  protected def frames(batch: DataFrame, m: Unit): Seq[DataFrame] = {
+    val toks = batch.select(col("doc_id"), tokens(col("text")).as("t"))
+    Seq(postings(toks).withColumn("tshard", tshard(col("term"))),
+      toks.select(col("doc_id"), size(col("t")).cast("long").as("dl")))
+  }
+
+  private def tshard(term: Column): Column =
+    pmod(xxhash64(term), lit(Shards.toLong)).cast("int")
+
+  /** The shards of a literal term set, computed driver-side and pushed
+    * as an isin partition filter (plan-time file pruning).
+    */
+  protected def shardsOf(s: SparkSession, terms: Seq[String]): Seq[Int] = {
+    import s.implicits._
+    terms.toDF("term").select(tshard(col("term")))
+      .collect().map(_.getInt(0)).distinct.toSeq
+  }
+
+  /** (N, avgdl) of a live doclens frame, collected as bounded
+    * metadata. An empty index has a NULL sum(dl): its ranking is empty
+    * anyway, and 0.0 keeps the literal construction total.
+    */
+  protected def lengthStats(doclens: DataFrame): (Long, Double) = {
+    val r = doclens.agg(count(lit(1)).as("n"),
+      (sum(col("dl")).cast("double") / count(lit(1))).as("a")).head()
+    (r.getLong(0), if (r.isNullAt(1)) 0.0 else r.getDouble(1))
   }
 }

@@ -2,9 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Crash-atomic maintenance verbs shared by the persisted index
-  * lifecycles ([[Bm25Index]], [[PhraseIndex]], [[PqIndex]],
-  * [[GraphIndex]]).
+/** Crash-atomic tree verbs behind the one standing-index lifecycle
+  * ([[StandingIndex]]; its only caller).
   *
   * The compaction swap follows the Snapshots atomic-commit convention
   * (never delete live data before its replacement is in place): the
@@ -113,11 +112,10 @@ private[graft] object IndexMaintenance {
   def recoverAll(s: SparkSession, root: String, subs: Seq[String]): Unit =
     subs.foreach(sub => recover(s, s"$root/$sub", s"$root/${sub}_compacting"))
 
-  /** Tombstone delete shared by all four index lifecycles: O(batch) —
-    * ids append to the `tombstones/` sidecar under the index's key
-    * column, no data file rewritten; search paths anti-join the live
-    * set and [[compactTree]] physically reclaims. Idempotent by
-    * anti-join semantics.
+  /** Tombstone delete: O(batch) — ids append to the `tombstones/`
+    * sidecar under the index's key column, no data file rewritten;
+    * search paths anti-join the live set and [[compactTree]]
+    * physically reclaims. Idempotent by anti-join semantics.
     */
   def deleteIds(s: SparkSession, root: String, keyCol: String,
                 ids: Seq[Long]): Unit = {
@@ -132,37 +130,67 @@ private[graft] object IndexMaintenance {
     else None
 
   /** Drop tombstoned ids from a frame (applied AFTER shard/cell
-    * pruning by the callers, so the anti-join touches only probed
+    * pruning by the searches, so the anti-join touches only probed
     * partitions; the sidecar side is aggregated to distinct ids —
     * takedown logs repeat).
     */
-  def dropTombstoned(s: SparkSession, root: String, keyCol: String,
+  def dropTombstoned(tomb: Option[DataFrame], keyCol: String,
                      df: DataFrame): DataFrame =
-    tombstones(s, root).fold(df)(t =>
+    tomb.fold(df)(t =>
       df.join(t.select(keyCol).distinct(), Seq(keyCol), "left_anti"))
 
+  /** The one tree write behind every build, append and compaction. A
+    * non-empty frame lands `partitionBy(part)` (clustered by it first,
+    * so each partition dir gets one file per owning task, not one per
+    * writer task) or plain. A zero-row frame emits NO part files under
+    * partitionBy, and the next read dies on schema inference: a build
+    * or compaction writes ONE schema-bearing empty file unpartitioned
+    * (the partition column stays a data column, so every search reads
+    * it unchanged), and an empty append is a no-op. A partitioned
+    * append first drops those root-level empty files — leaf files at
+    * two depths brick partition discovery. Ends by invalidating any
+    * file listing a prior read of `dir` left in the session.
+    */
+  def writeTree(s: SparkSession, dir: String, part: Option[String],
+                df: DataFrame, append: Boolean): Unit = {
+    val mode = if (append) "append" else "overwrite"
+    if (df.isEmpty) {
+      if (!append) df.coalesce(1).write.mode(mode).parquet(dir)
+    } else part match {
+      case Some(pc) =>
+        if (append) clearUnpartitionedEmpty(s, dir)
+        df.repartition(org.apache.spark.sql.functions.col(pc))
+          .write.mode(mode).partitionBy(pc).parquet(dir)
+      case None => df.write.mode(mode).parquet(dir)
+    }
+    s.catalog.refreshByPath(dir)
+  }
+
+  /** Remove the root-level part files of a partitioned tree — only an
+    * empty build or compaction writes them, so they hold zero rows.
+    */
+  private def clearUnpartitionedEmpty(s: SparkSession, dir: String): Unit = {
+    val f = fs(s)
+    if (f.exists(path(dir)))
+      f.listStatus(path(dir))
+        .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
+        .foreach(st => f.delete(st.getPath, false))
+  }
+
   /** Physically reclaim tombstoned rows from one subtree through the
-    * crash-atomic [[swap]]. `partCol` preserves the directory
-    * partitioning (probe pruning needs it); an all-tombstoned result
-    * writes ONE schema-bearing empty part file unpartitioned — a
-    * partitionBy write of zero rows emits NO files and the next read
-    * dies on schema inference (the PqIndex empty-compact bug class;
-    * the partition column stays a data column so every consumer reads
-    * it unchanged).
+    * crash-atomic [[swap]], keeping its partitioning (probe pruning
+    * needs it). An unpartitioned tree collapses to one file — fewer
+    * files is the point of compacting — and an all-tombstoned tree
+    * keeps one schema-bearing empty file ([[writeTree]]).
     */
   def compactTree(s: SparkSession, root: String, sub: String,
                   keyCol: String, partCol: Option[String]): Unit = {
     val cur = s"$root/$sub"
     val tmp = s"$root/${sub}_compacting"
     recover(s, cur, tmp)
-    val live = dropTombstoned(s, root, keyCol, s.read.parquet(cur))
-    partCol match {
-      case Some(pc) if !live.isEmpty =>
-        live.repartition(org.apache.spark.sql.functions.col(pc))
-          .write.mode("overwrite").partitionBy(pc).parquet(tmp)
-      case _ =>
-        live.coalesce(1).write.mode("overwrite").parquet(tmp)
-    }
+    val live = dropTombstoned(tombstones(s, root), keyCol, s.read.parquet(cur))
+    writeTree(s, tmp, partCol,
+      if (partCol.isEmpty) live.coalesce(1) else live, append = false)
     swap(s, cur, tmp)
     s.catalog.refreshByPath(cur)
   }

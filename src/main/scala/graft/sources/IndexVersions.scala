@@ -8,9 +8,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * silently changes the ranking the run's decontamination and
   * retrieval audits were made against. This composes the
   * [[Snapshots]] manifest machinery with the multi-subtree layout the
-  * three standing indexes share ([[Bm25Index]] postings+doclens
-  * +tombstones, [[PhraseIndex]] postings+doclens, [[PqIndex]]
-  * codes+meta+tombstones): one manifest per version, each line
+  * four standing indexes share through [[StandingIndex]]
+  * ([[Bm25Index]] and [[PhraseIndex]] postings+doclens+tombstones,
+  * [[PqIndex]] codes+meta+tombstones, [[GraphIndex]]
+  * postings+meta+tombstones): one manifest per version, each line
   * `role<TAB>file`, committed with the same dot-temp + atomic-rename
   * + optimistic-concurrency write as dataset snapshots.
   *

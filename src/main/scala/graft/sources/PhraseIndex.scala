@@ -1,8 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.TextFunctions.tokens
 import graft.operators.Retrieval
 
 /** Persisted POSITIONAL postings index — the phrase-query half of the
@@ -13,12 +12,11 @@ import graft.operators.Retrieval
   * — it joins the quote's terms' postings on (doc_id, adjacent
   * positions).
   *
-  * Layout under the index root (the [[Bm25Index]] conventions):
+  * Layout under the index root ([[TextIndex]]):
   *   postings/   parquet (term, doc_id, pos) — one row per token
   *               OCCURRENCE (corpus-token-sized; positions are what
-  *               buy adjacency), written `partitionBy("tshard")` so a
-  *               phrase's terms prune to their shards' FILES
-  *   doclens/    parquet (doc_id, dl) — the stats sidecar
+  *               buy adjacency), `partitionBy("tshard")`
+  *   doclens/    parquet (doc_id, dl) — the stats table
   *
   * Query path (`q_phrase_indexed`): shard-pruned postings restricted
   * to the phrase terms → self-join on doc_id with `pos_(k) = pos_0 +
@@ -29,97 +27,21 @@ import graft.operators.Retrieval
   * indexed == map-only [[Retrieval.phraseSearch]] cell-for-cell and
   * the two entries SHARE one oracle (the q_bm25_indexed precedent).
   *
-  * Append rides the same O(batch) economics: tokenize only the
-  * arriving docs, append their occurrence rows; stats re-derive from
-  * the artifact at query time, so append == full rebuild exactly.
+  * Build, append, delete, compact and versions are the one
+  * [[StandingIndex]] lifecycle: append tokenizes only the arriving
+  * docs, and stats re-derive from the artifact at query time, so
+  * append == full rebuild exactly.
   */
-object PhraseIndex {
+object PhraseIndex extends TextIndex("graft_phraseindex") {
 
-  private def tshard(term: Column): Column =
-    pmod(xxhash64(term), lit(Bm25Index.Shards.toLong)).cast("int")
-
-  def indexRoot(s: SparkSession, dir: String): String =
-    ScopedFixture.root(s, "graft_phraseindex", dir)
-
-  def materialize(s: SparkSession, dir: String): String =
-    materializeWhere(s, dir, lit(true), indexRoot(s, dir))
-
-  private[graft] def materializeWhere(s: SparkSession, dir: String,
-                                      pred: Column, root: String): String = {
-    FixtureCleanup.onExit(root)
-    if (ScopedFixture.isComplete(root)) return root
-    writeBatch(graft.Tables.documents(s, dir).filter(pred), root, "overwrite")
-    ScopedFixture.markComplete(root)
-    root
-  }
-
-  /** Incremental append: index the arriving documents frame only.
-    * Re-appending a previously deleted doc_id resurrects it (the FAISS
-    * `remove_ids` + `add` semantics every graft index shares): on
-    * overlap with the tombstone set the index compacts first, so the
-    * batch's fresh rows never coexist with the suppressed old ones.
+  /** The postings rows: one per token OCCURRENCE. Positions are
+    * 1-based — the same index space the map-only scorer's
+    * sequence(1, ...) enumerates and the oracle's
+    * generate_series(1, ...) probes.
     */
-  def append(s: SparkSession, root: String, batch: DataFrame): Unit = {
-    // roll forward a crash-interrupted compaction FIRST (an append onto
-    // a mid-swap-crashed tree would recreate it with batch-only rows)
-    IndexMaintenance.recoverAll(s, root, Seq("postings", "doclens"))
-    if (IndexMaintenance.tombstonesOverlap(s, root, "doc_id",
-        batch.select("doc_id")))
-      compact(s, root)
-    writeBatch(batch, root, "append")
-  }
-
-  /** Tombstone delete (the [[Bm25Index.delete]] shape): O(batch), no
-    * postings rewritten; the query path anti-joins the live set — the
-    * N/avgdl/phrase-df statistics stay consistent because they derive
-    * from the tombstone-filtered frames at query time.
-    */
-  def delete(s: SparkSession, root: String, docIds: Seq[Long]): Unit =
-    IndexMaintenance.deleteIds(s, root, "doc_id", docIds)
-
-  private def tombstones(s: SparkSession, root: String): Option[DataFrame] =
-    IndexMaintenance.tombstones(s, root)
-
-  /** Physically reclaim tombstoned rows from both trees and clear the
-    * sidecar — crash-atomic via [[IndexMaintenance.swap]].
-    */
-  def compact(s: SparkSession, root: String): Unit = {
-    IndexMaintenance.compactTree(s, root, "postings", "doc_id", Some("tshard"))
-    IndexMaintenance.compactTree(s, root, "doclens", "doc_id", None)
-    IndexMaintenance.clearTombstoneSidecar(s, root)
-  }
-
-  private def writeBatch(docs: DataFrame, root: String, mode: String): Unit = {
-    val s = docs.sparkSession
-    val toks = docs.select(col("doc_id"), tokens(col("text")).as("t"))
-    // positions are 1-based — the same index space the map-only
-    // scorer's sequence(1, ...) enumerates and the oracle's
-    // generate_series(1, ...) probes
-    val postings = toks
-      .select(col("doc_id"), posexplode(col("t")).as(Seq("p0", "term")))
+  protected def postings(toks: DataFrame): DataFrame =
+    toks.select(col("doc_id"), posexplode(col("t")).as(Seq("p0", "term")))
       .select(col("term"), col("doc_id"), (col("p0") + 1).cast("long").as("pos"))
-      .withColumn("tshard", tshard(col("term")))
-    if (docs.isEmpty) {
-      if (mode == "overwrite") {
-        toks.select(col("doc_id"), size(col("t")).cast("long").as("dl"))
-          .coalesce(1).write.mode(mode).parquet(s"$root/doclens")
-        postings.coalesce(1).write.mode(mode).parquet(s"$root/postings")
-      }
-    } else {
-      if (mode == "append")
-        PqIndex.clearUnpartitionedEmpty(s, s"$root/postings")
-      toks.select(col("doc_id"), size(col("t")).cast("long").as("dl"))
-        .write.mode(mode).parquet(s"$root/doclens")
-      postings
-        .repartition(col("tshard"))
-        .write.mode(mode).partitionBy("tshard").parquet(s"$root/postings")
-    }
-    // An append invalidates any cached file listing a prior read of the
-    // same root left in the session (observed: FileNotFoundException on
-    // a stale listing, recovered only by Spark's retry re-list).
-    s.catalog.refreshByPath(s"$root/postings")
-    s.catalog.refreshByPath(s"$root/doclens")
-  }
 
   /** §2 catalog entry (`q_phrase_indexed`): materialize, then answer
     * the standing phrase from the artifact alone.
@@ -127,48 +49,23 @@ object PhraseIndex {
   def phraseIndexed(s: SparkSession, dir: String): DataFrame =
     searchRoot(s, materialize(s, dir))
 
-  // ---- versioned reads ----------------------------------------------------
-
-  /** Snapshot the index's current state as the next version. */
-  def commitVersion(s: SparkSession, root: String): Int =
-    IndexVersions.commit(s, root, Seq("postings", "doclens", "tombstones"))
-
   /** The standing phrase ranked against the index AS OF version v —
     * scans plan over exactly v's manifest files (shard pruning via
     * basePath partition discovery), stats re-derive from v's frames.
     */
-  def searchAt(s: SparkSession, root: String, v: Int): DataFrame = {
-    val post = IndexVersions.readAt(s, root, v, "postings").getOrElse(
-      throw new IllegalStateException(s"version $v of $root has no postings"))
-    val dl = IndexVersions.readAt(s, root, v, "doclens").getOrElse(
-      throw new IllegalStateException(s"version $v of $root has no doclens"))
-    searchFrames(s, post, dl, IndexVersions.readAt(s, root, v, "tombstones"))
-  }
+  def searchAt(s: SparkSession, root: String, v: Int): DataFrame =
+    search(s, read(s, root, Some(v)))
 
-  private[graft] def searchRoot(s: SparkSession, root: String): DataFrame = {
-    // roll any crash-interrupted compaction swap forward before planning
-    IndexMaintenance.recover(s, s"$root/postings", s"$root/postings_compacting")
-    IndexMaintenance.recover(s, s"$root/doclens", s"$root/doclens_compacting")
-    searchFrames(s, s.read.parquet(s"$root/postings"),
-      s.read.parquet(s"$root/doclens"), tombstones(s, root))
-  }
+  private[graft] def searchRoot(s: SparkSession, root: String): DataFrame =
+    search(s, read(s, root, None))
 
-  private def searchFrames(s: SparkSession, postingsAll: DataFrame,
-                           doclensAll: DataFrame,
-                           tomb: Option[DataFrame]): DataFrame = {
-    def dropT(df: DataFrame): DataFrame = tomb.fold(df)(t =>
-      df.join(t.select("doc_id").distinct(), Seq("doc_id"), "left_anti"))
-    val doclens = dropT(doclensAll)
+  private def search(s: SparkSession, f: Frames): DataFrame = {
+    val doclens = f.live(f("doclens"))
     val terms = Retrieval.PhraseTerms
-    val shards = {
-      import s.implicits._
-      terms.toDF("term").select(tshard(col("term")))
-        .collect().map(_.getInt(0)).distinct.toSeq
-    }
     // tombstones drop AFTER shard pruning — the anti-join touches only
     // the phrase terms' partitions
-    val post = dropT(postingsAll
-      .filter(col("tshard").isin(shards: _*))
+    val post = f.live(f("postings")
+      .filter(col("tshard").isin(shardsOf(s, terms): _*))
       .filter(col("term").isin(terms: _*)))
     // positional merge: term k's occurrences must sit at pos_0 + k —
     // chained equi-joins on (doc_id, shifted pos), each join consumes
@@ -183,11 +80,7 @@ object PhraseIndex {
     }
     val perMatch = matches.groupBy("doc_id")
       .agg(count(lit(1)).as("tf_phrase"))
-    val (nDocs, avgdl) = {
-      val r = doclens.agg(count(lit(1)).as("n"),
-        (sum(col("dl")).cast("double") / count(lit(1))).as("a")).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0.0 else r.getDouble(1))
-    }
+    val (nDocs, avgdl) = lengthStats(doclens)
     val dfPhrase = perMatch.count()
     import s.implicits._
     val stats = Seq(1).toDF("one").select(

@@ -1,9 +1,10 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
 import graft.plans.{CentroidOps, PqOps}
+import StandingIndex.Tree
 
 /** Persisted IVF-PQ index (the FAISS `write_index`/`read_index` analogue,
   * Spark-native): the one-time encode pass materializes the corpus as an
@@ -27,159 +28,39 @@ import graft.plans.{CentroidOps, PqOps}
   * The probed cell list is computed driver-side from the (bounded) query
   * batch and pushed as an `isin` literal — a JOIN on cell would compute
   * the same rows but could not prune partitions at plan time.
+  *
+  * Build, append, delete, compact and versions are the one
+  * [[StandingIndex]] lifecycle. Append encodes the arriving vectors
+  * with the FROZEN codebook and centroid set read back from the
+  * sidecar — never retrained, so existing codes stay byte-identical
+  * and the appended ones equal what a full re-encode would produce —
+  * into the same cell partitions (O(batch); the daily-batch shape,
+  * the incremental half of the ANN story next to
+  * `q_dedup_incremental`). Each append lands one file per touched
+  * cell; [[compact]] merges them when open/footer cost starts to
+  * dominate, and physically drops tombstoned codes.
   */
-object PqIndex {
+object PqIndex extends StandingIndex("graft_pqindex", "neighbor_id") {
 
-  /** App-id-scoped root (same rationale as Attachments.fixtureRoot:
-    * concurrent sessions must not race on a shared /tmp tree; a real
-    * deployment points this at shared storage).
-    */
-  def indexRoot(s: SparkSession, dir: String): String =
-    ScopedFixture.root(s, "graft_pqindex", dir)
+  /** The frozen sidecar: (PQ codebook, IVF centroid set). */
+  type Meta = (Array[Float], Seq[(Int, Array[Float], Double)])
 
-  /** One-time encode pass: train (memoized), assign cells + encode
-    * map-side in the scan projection, write cell-partitioned codes and
-    * the metadata sidecar. Marker-skipped on re-invocation.
-    */
-  def materialize(s: SparkSession, dir: String): String =
-    materializeWhere(s, dir, lit(true), indexRoot(s, dir))
+  protected val trees = Seq(Tree("codes", Some("cell")))
 
-  /** [[materialize]] with an explicit corpus predicate and root — the
-    * spec's handle for building a base index that a later [[append]]
-    * grows (production never has "the whole corpus" on day one).
-    */
-  private[graft] def materializeWhere(s: SparkSession, dir: String,
-                                      pred: org.apache.spark.sql.Column,
-                                      root: String): String = {
-    FixtureCleanup.onExit(root)
-    if (ScopedFixture.isComplete(root)) return root
-    val cb = Similarity.pqCodebook(s, dir)
-    val cents = Similarity.seededCentroids(s, dir)
-    encodeWith(Similarity.normed(s, dir).filter(pred), cb, cents)
-      // cluster by cell before the partitioned write: without it every
-      // writer task emits a file into every cell directory (tasks ×
-      // cells small files); with it each cell's codes land in one file
-      // per owning task — the layout a probe-pruned read wants
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$root/codes")
+  protected def batchKey: Column = col("vec_id").as("neighbor_id")
+
+  /** Train once (memoized per corpus dir). */
+  protected def buildMeta(s: SparkSession, dir: String): Meta =
+    (Similarity.pqCodebook(s, dir), Similarity.seededCentroids(s, dir))
+
+  protected def metaFrame(s: SparkSession, m: Meta): Option[DataFrame] = {
     import s.implicits._
-    Seq((cb.toSeq, cents.map(_._1), cents.map(_._2.toSeq), cents.map(_._3)))
-      .toDF("cb", "cent_ids", "cent_vecs", "cent_norms")
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
-    ScopedFixture.markComplete(root)
-    root
+    val (cb, cents) = m
+    Some(Seq((cb.toSeq, cents.map(_._1), cents.map(_._2.toSeq), cents.map(_._3)))
+      .toDF("cb", "cent_ids", "cent_vecs", "cent_norms"))
   }
 
-  /** The encode projection shared by [[materializeWhere]] and
-    * [[append]]: given frozen codebook + centroids, identical inputs
-    * produce identical (cell, codes, rnorm) rows — which is exactly why
-    * append + search equals full re-encode search.
-    */
-  private def encodeWith(normed: DataFrame, cb: Array[Float],
-                         cents: Seq[(Int, Array[Float], Double)]): DataFrame =
-    normed
-      .select(col("vec_id").as("neighbor_id"),
-        CentroidOps.cell(col("e"), col("nrm"), cents).as("cell"),
-        PqOps.encode(col("e"), cb, Similarity.PqM, Similarity.PqK, Similarity.PqDsub).as("codes"))
-      .withColumn("rnorm",
-        PqOps.reconNorm(col("codes"), cb, Similarity.PqM, Similarity.PqK, Similarity.PqDsub))
-
-  /** Incremental append — the production index lifecycle (a daily batch
-    * must not re-encode the corpus): encode the arriving vectors with
-    * the FROZEN codebook and centroid set read back from the sidecar —
-    * never retrained, so existing codes stay byte-identical and the
-    * appended ones equal what a full re-encode would produce — and
-    * append them into the same cell partitions (O(batch) work; the
-    * standing corpus is not touched). Pairs with `q_dedup_incremental`
-    * as the incremental half of the ANN story. Each append lands one
-    * file per touched cell; run [[compact]] when accumulated batch
-    * files start to dominate open/footer cost.
-    */
-  def append(s: SparkSession, root: String, batch: DataFrame): Unit = {
-    val (cb, cents) = loadMeta(s, root)
-    // roll forward a crash-interrupted compaction FIRST (an append onto
-    // a mid-swap-crashed tree would recreate it with batch-only rows)
-    IndexMaintenance.recoverAll(s, root, Seq("codes"))
-    // re-appending a deleted id resurrects it (FAISS remove_ids + add):
-    // on tombstone overlap compact first — physical reclaim — so the
-    // fresh encode never coexists with the suppressed old rows
-    if (IndexMaintenance.tombstonesOverlap(s, root, "neighbor_id",
-        batch.select(col("vec_id").as("neighbor_id"))))
-      compact(s, root)
-    // an all-tombstoned compact leaves codes/ as ONE root-level empty
-    // part file (unpartitioned — see compact); a partitioned append on
-    // top would create leaf files at two depths and brick every later
-    // read with 'Conflicting directory structures'. The root files
-    // hold zero rows by construction, so drop them first.
-    clearUnpartitionedEmpty(s, s"$root/codes")
-    encodeWith(batch, cb, cents)
-      .repartition(col("cell"))
-      .write.mode("append").partitionBy("cell").parquet(s"$root/codes")
-  }
-
-  /** Remove root-level part files from a directory that is otherwise
-    * `key=value`-partitioned (the empty-index layout written by
-    * [[compact]] when every row is tombstoned — those files are empty
-    * by construction, so deleting them loses nothing).
-    */
-  private[sources] def clearUnpartitionedEmpty(s: SparkSession, dir: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      s.sparkContext.hadoopConfiguration)
-    val p = new org.apache.hadoop.fs.Path(dir)
-    if (fs.exists(p))
-      fs.listStatus(p)
-        .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
-        .foreach(st => fs.delete(st.getPath, false))
-  }
-
-  /** Tombstone delete — the index lifecycle's third verb (FAISS
-    * `remove_ids`; production indexes take doc takedowns and dedup
-    * drops daily). O(batch): the ids append to a `tombstones/` parquet
-    * sidecar and NO code file is rewritten — search anti-joins the
-    * (deduped) tombstone set after cell pruning, and the next
-    * [[compact]] physically reclaims the rows. Deleting an id not in
-    * the index is a no-op by construction (anti-join semantics), as is
-    * deleting twice.
-    */
-  def delete(s: SparkSession, root: String, ids: Seq[Long]): Unit =
-    IndexMaintenance.deleteIds(s, root, "neighbor_id", ids)
-
-  /** The tombstone sidecar, if any delete has run. */
-  private def tombstones(s: SparkSession, root: String): Option[DataFrame] =
-    IndexMaintenance.tombstones(s, root)
-
-  /** Drop tombstoned ids from an encoded-codes frame. Applied AFTER
-    * cell pruning so the anti-join touches only probed partitions; the
-    * tombstone side is aggregated to distinct ids first (takedown logs
-    * repeat), and AQE picks a broadcast anti-join while the set stays
-    * small — at larger delete fractions the shuffle is O(probed codes),
-    * and [[compact]] is the pressure valve that returns the index to
-    * tombstone-free scans.
-    */
-  private def dropTombstoned(s: SparkSession, root: String,
-                             codes: DataFrame): DataFrame =
-    tombstones(s, root).fold(codes)(t =>
-      codes.join(t.select("neighbor_id").distinct(), Seq("neighbor_id"), "left_anti"))
-
-  /** Re-cluster the codes tree after a run of appends (the Export
-    * .compact idea, kept partition-aware: a flat rewrite would lose the
-    * cell directories and with them the probe-time PartitionFilters
-    * pruning). One exchange on cell, atomic-ish directory swap.
-    * Tombstoned rows are physically dropped in the rewrite and the
-    * sidecar is cleared — after compact the scan carries no anti-join.
-    */
-  def compact(s: SparkSession, root: String): Unit = {
-    IndexMaintenance.compactTree(s, root, "codes", "neighbor_id", Some("cell"))
-    IndexMaintenance.clearTombstoneSidecar(s, root)
-  }
-
-  /** Read the metadata sidecar back: (codebook, centroid set). */
-  private[graft] def loadMeta(s: SparkSession, root: String)
-      : (Array[Float], Seq[(Int, Array[Float], Double)]) =
-    metaFrom(s.read.parquet(s"$root/meta"))
-
-  private def metaFrom(meta: DataFrame)
-      : (Array[Float], Seq[(Int, Array[Float], Double)]) = {
+  protected def decodeMeta(meta: => DataFrame): Meta = {
     val r = meta.head()
     val cb = r.getSeq[Float](0).toArray
     val ids = r.getSeq[Int](1)
@@ -187,6 +68,29 @@ object PqIndex {
     val norms = r.getSeq[Double](3)
     (cb, ids.indices.map(i => (ids(i), vecs(i).toArray, norms(i))))
   }
+
+  protected def corpus(s: SparkSession, dir: String, pred: Column,
+                       m: Meta): DataFrame =
+    Similarity.normed(s, dir).filter(pred)
+
+  /** The encode projection of a normed batch (vec_id, e, nrm): cells
+    * assigned and codes encoded map-side against the frozen codebook
+    * and centroids, so identical inputs produce identical (cell,
+    * codes, rnorm) rows — which is exactly why append + search equals
+    * full re-encode search.
+    */
+  protected def frames(batch: DataFrame, m: Meta): Seq[DataFrame] = {
+    val (cb, cents) = m
+    Seq(batch
+      .select(col("vec_id").as("neighbor_id"),
+        CentroidOps.cell(col("e"), col("nrm"), cents).as("cell"),
+        PqOps.encode(col("e"), cb, Similarity.PqM, Similarity.PqK, Similarity.PqDsub).as("codes"))
+      .withColumn("rnorm",
+        PqOps.reconNorm(col("codes"), cb, Similarity.PqM, Similarity.PqK, Similarity.PqDsub)))
+  }
+
+  /** Read the metadata sidecar back: (codebook, centroid set). */
+  private[graft] def loadMeta(s: SparkSession, root: String): Meta = meta(s, root)
 
   /** §2 catalog entry (`q_ann_pq_indexed`): materialize the index, then
     * answer the standard query batch FROM the persisted artifact —
@@ -199,48 +103,23 @@ object PqIndex {
   def annPqIndexed(s: SparkSession, dir: String): DataFrame =
     searchRoot(s, dir, materialize(s, dir))
 
-  // ---- versioned reads ----------------------------------------------------
-
-  /** Snapshot the index's current state (codes + frozen-codebook
-    * sidecar + tombstones) as the next version; [[searchAt]]
-    * reproduces its ranking through later appends and deletes (both
-    * additive on disk) AND through [[compact]] — a rewrite RETAINS the
-    * replaced tree while versions pin it ([[IndexMaintenance.retire]]),
-    * so only an explicit [[IndexVersions.expire]] bounds time travel.
-    */
-  def commitVersion(s: SparkSession, root: String): Int =
-    IndexVersions.commit(s, root, Seq("codes", "meta", "tombstones"))
-
   /** Search the index AS OF version v: the codebook/centroids come
     * from v's sidecar manifest, the code scan plans over exactly v's
     * files (cell pruning intact via basePath partition discovery), and
     * v's tombstone set applies — so a pinned training run's neighbor
     * sets never move under it.
     */
-  def searchAt(s: SparkSession, dir: String, root: String, v: Int): DataFrame = {
-    val meta = IndexVersions.readAt(s, root, v, "meta").getOrElse(
-      throw new IllegalStateException(s"version $v of $root has no sidecar"))
-    val codes = IndexVersions.readAt(s, root, v, "codes").getOrElse(
-      throw new IllegalStateException(s"version $v of $root has no codes"))
-    searchFrames(s, dir, metaFrom(meta), codes,
-      IndexVersions.readAt(s, root, v, "tombstones"))
-  }
+  def searchAt(s: SparkSession, dir: String, root: String, v: Int): DataFrame =
+    search(s, dir, read(s, root, Some(v)))
 
   /** Search an arbitrary index root (the spec's handle for querying a
     * base-plus-appends index against a full one).
     */
-  private[graft] def searchRoot(s: SparkSession, dir: String, root: String): DataFrame = {
-    // roll any crash-interrupted compaction swap forward before planning
-    IndexMaintenance.recover(s, s"$root/codes", s"$root/codes_compacting")
-    searchFrames(s, dir, loadMeta(s, root),
-      s.read.parquet(s"$root/codes"), tombstones(s, root))
-  }
+  private[graft] def searchRoot(s: SparkSession, dir: String, root: String): DataFrame =
+    search(s, dir, read(s, root, None))
 
-  private def searchFrames(s: SparkSession, dir: String,
-                           meta: (Array[Float], Seq[(Int, Array[Float], Double)]),
-                           codesAll: DataFrame,
-                           tomb: Option[DataFrame]): DataFrame = {
-    val (cb, cents) = meta
+  private def search(s: SparkSession, dir: String, f: Frames): DataFrame = {
+    val (cb, cents) = f.meta
     val probes = math.max(Similarity.IvfNProbe,
       math.ceil(cents.size * Similarity.IvfProbeFraction).toInt)
     val n = Similarity.normed(s, dir)
@@ -256,9 +135,10 @@ object PqIndex {
     val qProbes = s.createDataFrame(
       java.util.Arrays.asList(probeRows: _*), qPlan.schema)
     val probedCells = probeRows.map(_.getAs[Int]("cell")).distinct
-    val pruned = codesAll.filter(col("cell").isin(probedCells.toIndexedSeq: _*))
-    val encoded = tomb.fold(pruned)(t =>
-      pruned.join(t.select("neighbor_id").distinct(), Seq("neighbor_id"), "left_anti"))
+    // tombstones drop AFTER cell pruning: AQE picks a broadcast
+    // anti-join while the set stays small, and compact is the pressure
+    // valve that returns the index to tombstone-free scans
+    val encoded = f.live(f("codes").filter(col("cell").isin(probedCells.toIndexedSeq: _*)))
     Similarity.ivfPqSearch(encoded, qProbes,
       n.select(col("vec_id").as("neighbor_id"), col("e").as("e_c"), col("nrm").as("n_c")), cb)
   }

@@ -973,32 +973,24 @@ object Snapshots {
   /** Idempotent append keyed by an EXTERNAL transaction id (a
     * Structured Streaming batchId — the `foreachBatch` exactly-once
     * recipe): a replay of a committed txn is a no-op, so a restarted
-    * stream re-delivering its last batch cannot duplicate rows. The
-    * txn's data dir is deterministic (`data/txn{id}`), and "committed"
-    * means the id is tagged in the latest manifest — a crash between
-    * the data write and the manifest commit leaves an orphan dir the
-    * retry deletes and rewrites (the manifest rename is the only commit
-    * point, same as every other Snapshots write).
+    * stream re-delivering its last batch cannot duplicate rows.
+    * "Committed" means the id is in the latest manifest's `#txn:`
+    * ranges, and the commit loop re-probes on every attempt, so a
+    * replay racing its in-flight original loses the claim and becomes a
+    * no-op. Each call writes its own unique batch dir, exactly as
+    * [[append]] does — a replay never touches the files an original is
+    * about to publish — and a crashed or losing write is an orphan that
+    * [[expire]] reclaims after its grace window.
     */
   def appendTxn(s: SparkSession, root: String, txnId: Long,
                 df: DataFrame): Int = {
-    val f = fs(s)
     val latest = latestVersion(s, root)
-    // Committed = the txn id is tagged in the LATEST manifest (range-
-    // compressed tags are carried forward on every commit and land
-    // atomically WITH the commit, so the probe survives compaction
-    // rewriting the data into fresh dirs and expire() dropping the
-    // manifests that referenced them). One manifest resolution per
-    // call, however long the lineage.
+    // one manifest resolution per call, however long the lineage: the
+    // range-compressed tags are carried forward on every commit, so
+    // the probe survives compaction and expire
     if (latest >= 1 && txnCommitted(readManifestData(s, root, latest).txns, txnId))
       return latest
-    val sub = new org.apache.hadoop.fs.Path(s"$root/data/txn$txnId")
-    if (f.exists(sub)) f.delete(sub, true) // crashed half-write
-    df.write.mode("errorifexists").parquet(sub.toString)
-    val bf = footerScan(s, f.listStatus(sub).toSeq
-      .filter(k => k.isFile && k.getPath.getName.startsWith("part-"))
-      .map(_.getPath.toString).sorted)
-    commitAppend(s, root, df, bf, Some(txnId))
+    commitAppend(s, root, df, writeBatchFiles(s, root, df), Some(txnId))
   }
 
   /** Streaming ingest into a versioned dataset: each micro-batch

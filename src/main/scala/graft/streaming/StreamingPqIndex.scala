@@ -7,9 +7,9 @@ import graft.plans.CentroidOps
 
 /** Streaming vector indexer — the live twin of the persisted IVF-PQ
   * index (`sources.PqIndex`, SURVEY #130), completing the live-ingest
-  * story for all three standing indexes (vectors here, term
-  * frequencies #189, positions #191): an embedding pipeline indexes
-  * vectors AS THEY ARRIVE. Each micro-batch pays exactly the batch
+  * story for all four standing indexes (vectors here, term
+  * frequencies #189, positions #191, graph postings #204): an
+  * embedding pipeline indexes vectors AS THEY ARRIVE. Each micro-batch pays exactly the batch
   * path's O(batch) `append` — encode against the FROZEN sidecar
   * codebook + centroid set (never retrained mid-stream, the artifact
   * contract that already makes batch append == full re-encode exact),

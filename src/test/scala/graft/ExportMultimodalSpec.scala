@@ -775,7 +775,7 @@ class SnapshotsSpec extends org.scalatest.funsuite.AnyFunSuite {
       .write.mode("overwrite").parquet(s"$root/data/txn9")
     val v3 = Snapshots.appendTxn(spark, root, 9L, docs.filter(pmod(col("doc_id"), lit(3)) === 2))
     assert(ids(Snapshots.read(spark, root, v3)) === ids(docs),
-      "the retry replaces the orphaned half-write, no duplicate rows")
+      "the orphaned half-write never enters the manifest, no duplicate rows")
     // streaming end-to-end with a restart on the same checkpoint
     val sroot = java.nio.file.Files.createTempDirectory("graft_snapstream2").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_snapckpt").toString

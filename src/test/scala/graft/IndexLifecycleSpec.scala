@@ -420,16 +420,19 @@ class SnapshotsMaintenanceSpec extends AnyFunSuite {
     val sliceA = docs.filter(pmod(col("doc_id"), lit(3)) === 0)
     val sliceB = docs.filter(pmod(col("doc_id"), lit(3)) =!= 0)
     Snapshots.create(spark, root, sliceA)
-    Snapshots.appendTxn(spark, root, 7L, sliceB)
+    val v2 = Snapshots.appendTxn(spark, root, 7L, sliceB)
+    val txnFiles = Snapshots.read(spark, root, v2).inputFiles.toSet --
+      Snapshots.read(spark, root, 1).inputFiles
     val want = ids(docs)
     // maintenance: compact rewrites the rows into fresh dirs, expire
-    // drops the manifests that referenced data/txn7 and reclaims it —
-    // the exact sequence that defeated a path-substring probe
+    // drops the manifests that referenced txn 7's files and reclaims
+    // them — the exact sequence that defeated a path-substring probe
     val v3 = Snapshots.compact(spark, root, partitions = 2)
     Thread.sleep(20)
     Snapshots.expire(spark, root, retainMin = v3, orphanGraceMs = 0L)
-    assert(!new java.io.File(s"$root/data/txn7").exists,
-      "precondition: the txn's data dir is physically gone after maintenance")
+    assert(txnFiles.nonEmpty && txnFiles.forall(f =>
+        !new java.io.File(new java.net.URI(f)).exists),
+      "precondition: the txn's data files are physically gone after maintenance")
     // a delayed stream-restart replay of batch 7 must still be a no-op
     val latest = Snapshots.appendTxn(spark, root, 7L, sliceB)
     assert(latest === v3, "the replayed txn must not claim a new version")
@@ -459,6 +462,47 @@ class SnapshotsMaintenanceSpec extends AnyFunSuite {
       "a replay probes the latest manifest only")
     assert(ids(Snapshots.read(spark, root, v)) === (0L to 71L),
       "every txn landed exactly once")
+  }
+
+  test("an appendTxn replay racing its in-flight original commits the batch once, no file lost") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val root = java.nio.file.Files.createTempDirectory("graft_snaptxnrace").toString
+    val docs = Tables.documents(spark, sf).select("doc_id", "source")
+    val sliceA = docs.filter(pmod(col("doc_id"), lit(3)) === 0)
+    val sliceB = docs.filter(pmod(col("doc_id"), lit(3)) =!= 0)
+    Snapshots.create(spark, root, sliceA)
+    val originalAtHook, replayAtHook, originalDone = new CountDownLatch(1)
+    def await(l: CountDownLatch, what: String): Unit =
+      assert(l.await(120, TimeUnit.SECONDS), s"timed out waiting for $what")
+    @volatile var original: Thread = null
+    // the original has written its files and waits between attempt and
+    // claim; the replay then writes its own files and reaches the same
+    // window; the original claims first and the replay loses the race
+    Snapshots.commitHook = () =>
+      if (Thread.currentThread eq original) {
+        originalAtHook.countDown()
+        await(replayAtHook, "the replay")
+      } else {
+        replayAtHook.countDown()
+        await(originalDone, "the original's claim")
+      }
+    def run(f: => Int) = scala.concurrent.Future(f)(scala.concurrent.ExecutionContext.global)
+    try {
+      val first = run { original = Thread.currentThread; Snapshots.appendTxn(spark, root, 7L, sliceB) }
+      await(originalAtHook, "the original")
+      val replay = run(Snapshots.appendTxn(spark, root, 7L, sliceB))
+      val vOriginal = scala.concurrent.Await.result(first, scala.concurrent.duration.Duration(300, "s"))
+      originalDone.countDown()
+      val vReplay = scala.concurrent.Await.result(replay, scala.concurrent.duration.Duration(300, "s"))
+      assert(vOriginal === 2 && vReplay === 2,
+        "the replay loses the claim and becomes a no-op on the original's version")
+    } finally {
+      Snapshots.commitHook = () => ()
+      originalDone.countDown()
+    }
+    assert(Snapshots.latestVersion(spark, root) === 2)
+    assert(ids(Snapshots.read(spark, root, 2)) === ids(docs),
+      "the batch lands exactly once and every file the manifest names exists")
   }
 
   test("timestamp travel resolves the version committed at or before the instant") {

@@ -1364,6 +1364,11 @@ class PlanRegressionSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(PqIndex.searchRoot(spark, sf, base).collect().isEmpty,
       "searching the fully reclaimed index returns zero candidates")
     assert(spark.read.parquet(s"$base/codes").isEmpty)
+    // an empty batch (an empty stream trigger) must not delete the only
+    // schema-bearing file the reclaim left
+    PqIndex.append(spark, base, Similarity.normed(spark, sf).limit(0))
+    assert(PqIndex.searchRoot(spark, sf, base).collect().isEmpty,
+      "an empty append onto the reclaimed-empty index keeps it readable")
     // the reclaimed-empty index must ACCEPT a new partitioned append —
     // the unpartitioned empty marker file is cleared first, or
     // partition discovery dies on conflicting directory depths

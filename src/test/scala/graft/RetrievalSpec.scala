@@ -179,21 +179,39 @@ class RetrievalSpec extends AnyFunSuite {
   }
 
   test("an EMPTY postings build stays readable and grows by append") {
+    import org.apache.spark.sql.{Column, DataFrame, Row}
     import org.apache.spark.sql.functions._
-    import graft.sources.Bm25Index
+    import graft.sources.{Bm25Index, GraphIndex, PhraseIndex, PqIndex}
+    import graft.operators.Similarity
     val sf = SparkTestSession.Sf
-    val empty = java.nio.file.Files.createTempDirectory("graft_bm25empty").toString
-    val full = java.nio.file.Files.createTempDirectory("graft_bm25full2").toString
-    // zero-document build: schema-bearing empty artifact, empty ranking
-    Bm25Index.materializeWhere(spark, sf, lit(false), empty)
-    assert(Bm25Index.searchRoot(spark, empty).collect().isEmpty,
-      "searching the empty index returns an empty ranking, not a schema error")
-    // appending the whole corpus onto the empty build == a full build
-    Bm25Index.append(spark, empty, Tables.documents(spark, sf))
-    Bm25Index.materializeWhere(spark, sf, lit(true), full)
-    assert(Bm25Index.searchRoot(spark, empty).collect().toSeq ===
-      Bm25Index.searchRoot(spark, full).collect().toSeq,
-      "empty build + append == fresh full build")
+    val docs = Tables.documents(spark, sf)
+    val vecs = Similarity.normed(spark, sf)
+    // (name, build, append, search, corpus) for each standing index
+    val indexes: Seq[(String, (Column, String) => String,
+        (String, DataFrame) => Unit, String => Seq[Row], DataFrame)] = Seq(
+      ("bm25", Bm25Index.materializeWhere(spark, sf, _, _), Bm25Index.append(spark, _, _),
+        r => Bm25Index.searchRoot(spark, r).collect().toSeq, docs),
+      ("phrase", PhraseIndex.materializeWhere(spark, sf, _, _), PhraseIndex.append(spark, _, _),
+        r => PhraseIndex.searchRoot(spark, r).collect().toSeq, docs),
+      ("pq", PqIndex.materializeWhere(spark, sf, _, _), PqIndex.append(spark, _, _),
+        r => PqIndex.searchRoot(spark, sf, r).collect().toSeq, vecs),
+      ("graph", GraphIndex.materializeWhere(spark, sf, _, _), GraphIndex.append(spark, _, _),
+        r => GraphIndex.searchRoot(spark, sf, r).collect().toSeq, vecs))
+    for ((name, build, append, search, corpus) <- indexes) {
+      val empty = java.nio.file.Files.createTempDirectory(s"graft_${name}empty").toString
+      val full = java.nio.file.Files.createTempDirectory(s"graft_${name}full2").toString
+      // zero-row build: schema-bearing empty artifact, empty result
+      build(lit(false), empty)
+      assert(search(empty).isEmpty,
+        s"$name: searching the empty index returns nothing, not a schema error")
+      // an empty batch (an empty stream trigger) leaves it readable
+      append(empty, corpus.limit(0))
+      assert(search(empty).isEmpty, s"$name: an empty append keeps the index readable")
+      // appending the whole corpus onto the empty build == a full build
+      append(empty, corpus)
+      build(lit(true), full)
+      assert(search(empty) === search(full), s"$name: empty build + append == fresh full build")
+    }
   }
 
   test("phrase search: counts match a local overlapping-occurrence reference") {
