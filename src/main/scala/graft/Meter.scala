@@ -2,7 +2,8 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerTaskEnd}
 
 /** Executor task metrics summed by a listener, read per measured run
   * (Bench's query loop, `tools.Probe`). Executor CPU time separates a
@@ -14,13 +15,17 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   * to scan size) while ambient machine load only inflates cpu/wall at
   * unchanged bytes (the r10 driver capture's d–f window read 3–7x cpu
   * on UNCHANGED code and was unreproducible idle — these columns make
-  * that diagnosis one diff, not a round).
+  * that diagnosis one diff, not a round). The job count names the
+  * scheduling share of a short run: each job pays the ~0.2 s
+  * scheduling floor whatever its size.
   */
 private[graft] final class Meter(sc: SparkContext) {
   private val cpuNs = new AtomicLong
   private val gcMs = new AtomicLong
   private val readB = new AtomicLong
+  private val jobs = new AtomicLong
   sc.addSparkListener(new SparkListener {
+    override def onJobEnd(j: SparkListenerJobEnd): Unit = { jobs.incrementAndGet(); () }
     override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
       val m = t.taskMetrics
       if (m != null) {
@@ -41,7 +46,7 @@ private[graft] final class Meter(sc: SparkContext) {
     */
   def measure(run: => Unit): Meter.Sample = {
     drain()
-    val (c0, g0, r0) = (cpuNs.get, gcMs.get, readB.get)
+    val (c0, g0, r0, j0) = (cpuNs.get, gcMs.get, readB.get, jobs.get)
     val t0 = System.nanoTime()
     val error =
       try { run; None }
@@ -49,14 +54,14 @@ private[graft] final class Meter(sc: SparkContext) {
     val wall = (System.nanoTime() - t0) / 1e9
     drain()
     Meter.Sample(error, wall, (cpuNs.get - c0) / 1e9, (gcMs.get - g0) / 1e3,
-      readB.get - r0)
+      readB.get - r0, jobs.get - j0)
   }
 }
 
 private[graft] object Meter {
   /** One measured run: its failure if any, wall, executor cpu and gc
-    * seconds, and input bytes read.
+    * seconds, input bytes read, and Spark jobs run.
     */
   final case class Sample(error: Option[Throwable], wallS: Double, cpuS: Double,
-      gcS: Double, readBytes: Long)
+      gcS: Double, readBytes: Long, jobs: Long)
 }

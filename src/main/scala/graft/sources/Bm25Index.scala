@@ -17,9 +17,11 @@ import StandingIndex.Tree
   * intent: alsyefs/notion backend/analyze_pages.py keyword filters as
   * a standing service rather than a rescan).
   *
-  * Layout under the index root ([[TextIndex]]):
-  *   postings/   parquet (term, doc_id, tf), `partitionBy("tshard")`
-  *   doclens/    parquet (doc_id, dl) — the slim per-doc length table
+  * Layout under the index root ([[TextIndex]]), one [[Snapshots]]
+  * table per role:
+  *   postings/   (term, doc_id, tf, tshard), one shard per file
+  *   doclens/    (doc_id, dl) — the slim per-doc length table
+  *   tombstones/ (doc_id) — deleted docs, anti-joined at query time
   *
   * Query path (`q_bm25_indexed`): shard-pruned postings restricted to
   * the query terms → per-doc tf pivot (only docs containing ≥ 1 term
@@ -50,10 +52,10 @@ object Bm25Index extends TextIndex("graft_bm25index") {
     searchRoot(s, materialize(s, dir))
 
   /** Rank the standing query against the index AS OF version v (a
-    * [[commitVersion]]): scans plan over exactly v's manifest files
-    * (shard pruning intact via basePath partition discovery), stats
-    * re-derive from v's frames — so `searchAt(v)` == a fresh build
-    * over v's corpus, spec- and oracle-asserted.
+    * [[commitVersion]]): each role scans at its pinned version (shard
+    * pruning intact through the manifest stats), stats re-derive from
+    * v's frames — so `searchAt(v)` == a fresh build over v's corpus,
+    * spec- and oracle-asserted.
     */
   def searchAt(s: SparkSession, root: String, v: Int): DataFrame =
     search(s, read(s, root, Some(v)))
@@ -117,7 +119,7 @@ object Bm25Index extends TextIndex("graft_bm25index") {
 }
 
 /** What the two text indexes ([[Bm25Index]], [[PhraseIndex]]) share:
-  * documents keyed by `doc_id`, a `postings/` tree partitioned by
+  * documents keyed by `doc_id`, a `postings/` tree sharded by
   * `tshard` = hash(term) mod [[Shards]] (a literal term set prunes to
   * its shards' FILES at the scan — at 100 TB the postings table is
   * corpus-token-sized and a query must not read it all), the slim
@@ -127,14 +129,16 @@ object Bm25Index extends TextIndex("graft_bm25index") {
   */
 abstract class TextIndex(family: String) extends StandingIndex(family, "doc_id") {
 
-  /** Postings shard count: bounds the partition fan-out while letting
-    * a ≤ few-term query prune to ≤ that many shard directories.
+  /** Postings shard count: bounds the files per commit while letting
+    * a ≤ few-term query prune to ≤ that many shard files.
     */
   val Shards = 32
 
   type Meta = Unit
 
-  protected val trees = Seq(Tree("postings", Some("tshard")), Tree("doclens"))
+  protected val trees = Seq(Tree("postings", sharded = true), Tree("doclens"))
+
+  protected def shards(m: Unit): (Int, Column) = (Shards, col("tshard"))
 
   protected def batchKey: Column = col("doc_id")
 
@@ -163,7 +167,7 @@ abstract class TextIndex(family: String) extends StandingIndex(family, "doc_id")
     pmod(xxhash64(term), lit(Shards.toLong)).cast("int")
 
   /** The shards of a literal term set, computed driver-side and pushed
-    * as an isin partition filter (plan-time file pruning).
+    * as an isin filter (plan-time file pruning on the manifest stats).
     */
   protected def shardsOf(s: SparkSession, terms: Seq[String]): Seq[Int] = {
     import s.implicits._

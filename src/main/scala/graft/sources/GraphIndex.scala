@@ -15,25 +15,18 @@ import StandingIndex.Tree
   * is never rejoined (the posting rows carry their vectors — rerank
   * is in-partition).
   *
-  * Layout under the index root:
-  *   postings/   parquet (node, neighbor_id, e_c, n_c), written
-  *               `partitionBy("nshard")` with nshard = node mod
-  *               [[shardsFor]](graph nodes) — a query's beam-routed
-  *               node set prunes to its SHARDS' files at the scan
-  *               (PartitionFilters; `node` itself stays a data column
-  *               for the in-shard filter). Sharding bounds the
-  *               directory fan-out regardless of node count:
-  *               one-dir-per-node measured 20 s of 2000-directory
-  *               write overhead at sf0.1 where the sharded layout
-  *               costs ~1-3 s; the shard count itself scales with the
-  *               graph (see [[shardsFor]]) so a small corpus's tiny
-  *               posting set doesn't pay 256 dir creates, while any
-  *               at-cap graph keeps 256 and a routed query reads
-  *               ≤ probes/shards ≈ 12% of the table
-  *   meta/       1-row parquet sidecar: the NSW routing graph (node
-  *               ids, vectors, norms, adjacency) — bounded metadata,
+  * Layout under the index root, one [[Snapshots]] table per role:
+  *   postings/   (node, neighbor_id, e_c, n_c, nshard) with nshard =
+  *               node mod [[shardsFor]](graph nodes), one shard per
+  *               file — a query's beam-routed node set prunes to its
+  *               SHARDS' files on the manifest stats at plan time
+  *               (`node` itself stays a data column for the in-shard
+  *               filter); an at-cap graph keeps 256 shards, so a
+  *               routed query reads ≤ probes/shards ≈ 12% of the table
+  *   meta/       1-row sidecar: the NSW routing graph (node ids,
+  *               vectors, norms, adjacency) — bounded metadata,
   *               ≤ 2 MB at the 8192-node cap
-  *   tombstones/ optional delete sidecar (neighbor_id)
+  *   tombstones/ (neighbor_id) — deleted vectors
   *
   * Build, append, delete, compact and versions are the one
   * [[StandingIndex]] lifecycle. Append encodes ONLY the arriving batch
@@ -44,28 +37,29 @@ import StandingIndex.Tree
   */
 object GraphIndex extends StandingIndex("graft_graphindex", "neighbor_id") {
 
-  /** Posting shard-count CAP — bounds partition-directory fan-out. */
+  /** Posting shard-count CAP — bounds the files one commit writes. */
   val NodeShards = 256
 
   /** Artifact shard count, derived from the FROZEN routing graph's
-    * node count: ~32 routing nodes per shard dir, floored at 16,
+    * node count: ~32 routing nodes per shard file, floored at 16,
     * capped at [[NodeShards]]. Append-stable and recomputable at read
     * time from the sidecar graph — no extra artifact metadata. Why
-    * adaptive (r17, guide §6 small-files): each shard dir costs
-    * ~10 ms to create+commit on this FS (OPTIMIZATION_r17.md §3: 256
-    * dirs = 3.2-3.7 s vs 64 dirs = 1.3 s for the same sf0.1 posting
-    * set, whose 256-way files are ~20 KB each), while the read-side
-    * pruning benefit scales with the posting BYTES — a small graph's
-    * postings are small, so it takes fewer, larger shards. Any graph
-    * at the 8192-node training cap (every at-scale corpus) keeps the
-    * full 256 — the 100 TB pruning contract is unchanged.
+    * adaptive (guide §6 small-files): every shard is one file per
+    * commit, each with its own write, footer harvest and open at scan
+    * time, while the read-side pruning benefit scales with the posting
+    * BYTES — a small graph's postings are small, so it takes fewer,
+    * larger shards. Any graph at the 8192-node training cap (every
+    * at-scale corpus) keeps the full 256 — the 100 TB pruning contract
+    * is unchanged.
     */
   def shardsFor(nNodes: Int): Int =
     math.min(NodeShards, math.max(16, (nNodes + 31) / 32))
 
   type Meta = GraphAnn.Graph
 
-  protected val trees = Seq(Tree("postings", Some("nshard")))
+  protected val trees = Seq(Tree("postings", sharded = true))
+
+  protected def shards(g: Meta): (Int, Column) = (shardsFor(g.ids.length), col("nshard"))
 
   protected def batchKey: Column = col("vec_id").as("neighbor_id")
 
@@ -153,8 +147,8 @@ object GraphIndex extends StandingIndex("graft_graphindex", "neighbor_id") {
   private def search(s: SparkSession, dir: String, f: Frames): DataFrame = {
     val g = f.meta
     val qProbes = GraphAnn.probeFrame(s, dir, g)
-    // union of every query's routed nodes, pushed as an isin partition
-    // filter — plan-time file pruning over the node directories
+    // union of every query's routed nodes, pushed as isin filters —
+    // plan-time file pruning over the shard files' manifest stats
     val routed = qProbes.select("node").collect().map(_.getInt(0)).distinct
     val nShards = shardsFor(g.ids.length)
     val shards = routed.map(n => math.floorMod(n, nShards)).distinct

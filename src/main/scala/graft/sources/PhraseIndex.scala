@@ -12,11 +12,13 @@ import graft.operators.Retrieval
   * — it joins the quote's terms' postings on (doc_id, adjacent
   * positions).
   *
-  * Layout under the index root ([[TextIndex]]):
-  *   postings/   parquet (term, doc_id, pos) — one row per token
+  * Layout under the index root ([[TextIndex]]), one [[Snapshots]]
+  * table per role:
+  *   postings/   (term, doc_id, pos, tshard) — one row per token
   *               OCCURRENCE (corpus-token-sized; positions are what
-  *               buy adjacency), `partitionBy("tshard")`
-  *   doclens/    parquet (doc_id, dl) — the stats table
+  *               buy adjacency), one shard per file
+  *   doclens/    (doc_id, dl) — the stats table
+  *   tombstones/ (doc_id) — deleted docs, anti-joined at query time
   *
   * Query path (`q_phrase_indexed`): shard-pruned postings restricted
   * to the phrase terms → self-join on doc_id with `pos_(k) = pos_0 +
@@ -50,8 +52,8 @@ object PhraseIndex extends TextIndex("graft_phraseindex") {
     searchRoot(s, materialize(s, dir))
 
   /** The standing phrase ranked against the index AS OF version v —
-    * scans plan over exactly v's manifest files (shard pruning via
-    * basePath partition discovery), stats re-derive from v's frames.
+    * each role scans at its pinned version (shard pruning through the
+    * manifest stats), stats re-derive from v's frames.
     */
   def searchAt(s: SparkSession, root: String, v: Int): DataFrame =
     search(s, read(s, root, Some(v)))
@@ -63,7 +65,7 @@ object PhraseIndex extends TextIndex("graft_phraseindex") {
     val doclens = f.live(f("doclens"))
     val terms = Retrieval.PhraseTerms
     // tombstones drop AFTER shard pruning — the anti-join touches only
-    // the phrase terms' partitions
+    // the phrase terms' shard files
     val post = f.live(f("postings")
       .filter(col("tshard").isin(shardsOf(s, terms): _*))
       .filter(col("term").isin(terms: _*)))

@@ -8,33 +8,34 @@ import StandingIndex.Tree
 
 /** Persisted IVF-PQ index (the FAISS `write_index`/`read_index` analogue,
   * Spark-native): the one-time encode pass materializes the corpus as an
-  * encoded, CELL-PARTITIONED parquet table, and queries run against that
+  * encoded, CELL-CLUSTERED table, and queries run against that
   * artifact alone — the raw vectors are touched only by the bounded
   * exact-rerank join. This operationalizes the claim the in-memory PQ
   * operators document ("in production the encoded table is materialized
   * once"): after `materialize`, a search session never re-trains and
   * never re-encodes.
   *
-  * Layout under the index root:
-  *   codes/          parquet (neighbor_id, codes int[m], rnorm), written
-  *                   `partitionBy("cell")` — one directory per IVF cell,
-  *                   so a probe set prunes to its cells' FILES at the
-  *                   scan (PartitionFilters, no data read outside the
-  *                   probed cells; at 100 TB this is the difference
-  *                   between reading probe-fraction×corpus and corpus)
-  *   meta/           1-row parquet sidecar: PQ codebook + IVF centroid
-  *                   set (bounded metadata, ~40 KB)
+  * Layout under the index root, one [[Snapshots]] table per role:
+  *   codes/          (neighbor_id, cell, codes int[m], rnorm), one IVF
+  *                   cell per file, so a probe set prunes to its cells'
+  *                   FILES on the manifest stats at plan time (no data
+  *                   read outside the probed cells; at 100 TB this is
+  *                   the difference between reading
+  *                   probe-fraction×corpus and corpus)
+  *   meta/           1-row sidecar: PQ codebook + IVF centroid set
+  *                   (bounded metadata, ~40 KB)
+  *   tombstones/     (neighbor_id) — deleted vectors
   *
   * The probed cell list is computed driver-side from the (bounded) query
   * batch and pushed as an `isin` literal — a JOIN on cell would compute
-  * the same rows but could not prune partitions at plan time.
+  * the same rows but could not prune files at plan time.
   *
   * Build, append, delete, compact and versions are the one
   * [[StandingIndex]] lifecycle. Append encodes the arriving vectors
   * with the FROZEN codebook and centroid set read back from the
   * sidecar — never retrained, so existing codes stay byte-identical
   * and the appended ones equal what a full re-encode would produce —
-  * into the same cell partitions (O(batch); the daily-batch shape,
+  * into the same cell shards (O(batch); the daily-batch shape,
   * the incremental half of the ANN story next to
   * `q_dedup_incremental`). Each append lands one file per touched
   * cell; [[compact]] merges them when open/footer cost starts to
@@ -45,7 +46,15 @@ object PqIndex extends StandingIndex("graft_pqindex", "neighbor_id") {
   /** The frozen sidecar: (PQ codebook, IVF centroid set). */
   type Meta = (Array[Float], Seq[(Int, Array[Float], Double)])
 
-  protected val trees = Seq(Tree("codes", Some("cell")))
+  protected val trees = Seq(Tree("codes", sharded = true))
+
+  /** One shard per centroid: a cell's shard id is its centroid's
+    * position in the frozen set.
+    */
+  protected def shards(m: Meta): (Int, Column) = {
+    val ids = m._2.map(_._1)
+    (ids.size, (array_position(typedLit(ids), col("cell")) - 1).cast("int"))
+  }
 
   protected def batchKey: Column = col("vec_id").as("neighbor_id")
 
@@ -103,11 +112,11 @@ object PqIndex extends StandingIndex("graft_pqindex", "neighbor_id") {
   def annPqIndexed(s: SparkSession, dir: String): DataFrame =
     searchRoot(s, dir, materialize(s, dir))
 
-  /** Search the index AS OF version v: the codebook/centroids come
-    * from v's sidecar manifest, the code scan plans over exactly v's
-    * files (cell pruning intact via basePath partition discovery), and
-    * v's tombstone set applies — so a pinned training run's neighbor
-    * sets never move under it.
+  /** Search the index AS OF version v: the code scan plans over
+    * exactly v's pinned files (cell pruning through the manifest
+    * stats) against the build's one sidecar, and v's tombstone set
+    * applies — so a pinned training run's neighbor sets never move
+    * under it.
     */
   def searchAt(s: SparkSession, dir: String, root: String, v: Int): DataFrame =
     search(s, dir, read(s, root, Some(v)))
@@ -125,7 +134,7 @@ object PqIndex extends StandingIndex("graft_pqindex", "neighbor_id") {
     val n = Similarity.normed(s, dir)
     // the query batch is bounded by construction: compute the probe
     // rows ONCE, collect them, and re-plan as a local relation — the
-    // driver both extracts the probed cell set (for partition pruning)
+    // driver both extracts the probed cell set (for file pruning)
     // and feeds the broadcast join from the same collected rows, so the
     // embeddings scan + centroid scoring never runs twice
     val qPlan = n.filter(col("vec_id") < Similarity.NumQueries)

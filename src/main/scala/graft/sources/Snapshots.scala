@@ -407,7 +407,20 @@ object Snapshots {
     // re-created at the same path (a rebuilt fixture, a tool rerun):
     // drop any stale resolution so the next read parses THIS commit
     memoDrop(root, v)
+    // the advisory hint [[latestVersion]] reads: best-effort, so a
+    // failed or torn write costs a later listing, never an answer
+    try {
+      val out = f.create(hintPath(root), true)
+      try out.write(v.toString.getBytes("UTF-8")) finally out.close()
+    } catch { case _: java.io.IOException => () }
   }
+
+  /** The latest-version hint beside the manifests (Iceberg's
+    * `version-hint.text`); its name must not start with `v`, which
+    * [[latestVersion]] and [[versionAsOf]] parse as versions.
+    */
+  private def hintPath(root: String) =
+    new org.apache.hadoop.fs.Path(s"$root/manifests/_latest")
 
   /** Every this-many versions a manifest is written FULL regardless of
     * delta size — the checkpoint cadence bounding chain depth (and the
@@ -470,9 +483,7 @@ object Snapshots {
     // neither works this returns false and expire fails fast unmutated.
     try {
       if ("file" == f.getScheme) {
-        val local = (q: org.apache.hadoop.fs.Path) =>
-          java.nio.file.Paths.get(q.toUri.getPath)
-        java.nio.file.Files.move(local(tmp), local(p),
+        java.nio.file.Files.move(localPath(tmp), localPath(p),
           java.nio.file.StandardCopyOption.REPLACE_EXISTING,
           java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       } else {
@@ -491,6 +502,9 @@ object Snapshots {
   }
 
 
+  private def localPath(q: org.apache.hadoop.fs.Path) =
+    java.nio.file.Paths.get(q.toUri.getPath)
+
   /** Atomically publish the durable temp as v's manifest; false iff a
     * racer already claimed v. `exists(p)` followed by rename is NOT a
     * claim on the local filesystem — RawLocalFileSystem.rename is
@@ -506,10 +520,8 @@ object Snapshots {
                            tmp: org.apache.hadoop.fs.Path,
                            p: org.apache.hadoop.fs.Path): Boolean =
     if ("file" == f.getScheme) {
-      val local = (q: org.apache.hadoop.fs.Path) =>
-        java.nio.file.Paths.get(q.toUri.getPath)
       try {
-        java.nio.file.Files.createLink(local(p), local(tmp))
+        java.nio.file.Files.createLink(localPath(p), localPath(tmp))
         f.delete(tmp, false)
         // The hard link shares the TEMP file's inode, whose mtime is
         // the content-write time — milliseconds (or, after a lost race
@@ -660,8 +672,8 @@ object Snapshots {
   /** (root, version)-keyed memo of RESOLVED manifests. Claimed
     * manifests are immutable (a [[materializeManifest]] replace is
     * content-equivalent by construction), so serving a cached
-    * resolution is always safe; [[dropManifest]] and [[expire]]
-    * invalidate the versions they delete. Access-ordered LRU bounded
+    * resolution is always safe; [[expire]] invalidates the versions
+    * it deletes. Access-ordered LRU bounded
     * by [[ManifestMemoMax]] entries — at 10⁶ files a resolved
     * Manifest is real driver heap, so the memo bounds COUNT, not just
     * staleness. Every external mutation of the map synchronizes on
@@ -748,16 +760,6 @@ object Snapshots {
   private[graft] def readManifest(s: SparkSession, root: String, v: Int): Seq[String] =
     readManifestData(s, root, v).files
 
-  /** Delete one version's manifest if present ([[IndexVersions.expire]]
-    * retires index versions through this; dataset roots go through
-    * [[expire]], which also vacuums data files).
-    */
-  private[sources] def dropManifest(s: SparkSession, root: String, v: Int): Unit = {
-    val p = manifestPath(root, v)
-    if (fs(s).exists(p)) fs(s).delete(p, false)
-    memoDrop(root, v)
-  }
-
   /** Merge one id into a sorted disjoint range set — O(ranges), and
     * ranges stay O(1) for the contiguous batchIds a streaming sink
     * produces.
@@ -793,7 +795,9 @@ object Snapshots {
   /** Widen `known` with any NEW fields the batch carries (appended,
     * nullable — old files read them as null). A same-name field must
     * keep its type: silent coercion across a lineage is how a corpus
-    * quietly corrupts, so a type change is an error, not a merge.
+    * quietly corrupts, so a type change is an error, not a merge. Only
+    * nullability may differ: a frame read back from parquet has every
+    * nested field nullable, a fresh batch need not.
     */
   private[sources] def mergeSchemas(
       known: org.apache.spark.sql.types.StructType,
@@ -802,7 +806,7 @@ object Snapshots {
     val byName = known.fields.map(f => f.name -> f).toMap
     batch.fields.foreach { f =>
       byName.get(f.name).foreach { k =>
-        require(k.dataType == f.dataType,
+        require(org.apache.spark.GraftSparkBridge.sameTypeIgnoringNulls(k.dataType, f.dataType),
           s"schema evolution cannot change column '${f.name}' from " +
             s"${k.dataType.simpleString} to ${f.dataType.simpleString}")
       }
@@ -812,14 +816,43 @@ object Snapshots {
     org.apache.spark.sql.types.StructType(known.fields ++ added)
   }
 
-  /** Highest committed version, 0 if none. */
+  /** Highest committed version, 0 if none: the hinted version if its
+    * manifest exists, probed forward to the first missing successor
+    * (claims are contiguous). The dir is listed only when the hint is
+    * absent, unreadable or names a missing manifest — a racing writer
+    * may leave an older number or a torn file — so a commit, a txn
+    * probe or a tail poll costs O(1) filesystem calls.
+    */
   def latestVersion(s: SparkSession, root: String): Int = {
+    val f = fs(s)
+    val hinted =
+      try {
+        val in = f.open(hintPath(root))
+        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toIntOption
+        finally in.close()
+      } catch { case _: java.io.IOException => None }
+    hinted.filter(h => h >= 1 && f.exists(manifestPath(root, h))) match {
+      case Some(h) => Iterator.from(h).find(v => !f.exists(manifestPath(root, v + 1))).get
+      case None =>
+        manifestListings.incrementAndGet()
+        listedVersions(f, root).map(_._1).foldLeft(0)(math.max)
+    }
+  }
+
+  /** Manifest-dir listings [[latestVersion]] fell back to since JVM
+    * start — the spec's "O(1) listings per commit" counter.
+    */
+  private[graft] val manifestListings = new java.util.concurrent.atomic.AtomicLong
+
+  /** Every manifest under `root`: (version, its file status). */
+  private def listedVersions(f: org.apache.hadoop.fs.FileSystem,
+      root: String): Seq[(Int, org.apache.hadoop.fs.FileStatus)] = {
     val d = new org.apache.hadoop.fs.Path(s"$root/manifests")
-    if (!fs(s).exists(d)) 0
-    else fs(s).listStatus(d).toSeq
-      .map(_.getPath.getName).collect { case n if n.startsWith("v") =>
-        n.stripPrefix("v").stripSuffix(".txt").toInt }
-      .foldLeft(0)(math.max)
+    if (!f.exists(d)) Seq.empty
+    else f.listStatus(d).toSeq.collect {
+      case st if st.isFile && st.getPath.getName.startsWith("v") =>
+        st.getPath.getName.stripPrefix("v").stripSuffix(".txt").toInt -> st
+    }
   }
 
   /** What one commit attempt returns to [[commit]]: either a [[Commit]]
@@ -834,9 +867,7 @@ object Snapshots {
     * the stats/blooms/lens of its new files, its `#commit:` kind,
     * pinned schema and change-data files, an external txn id and a
     * mirror cursor. [[commit]] carries everything else forward from
-    * the base. `delta = false` writes the manifest full — index
-    * manifests, whose [[IndexVersions.expire]] drops old versions
-    * without materializing the one it keeps.
+    * the base.
     */
   private[sources] final case class Commit(files: Seq[String],
       kind: Option[String],
@@ -847,8 +878,7 @@ object Snapshots {
       cdf: Seq[String] = Seq.empty,
       cdfd: Seq[String] = Seq.empty,
       txn: Option[Long] = None,
-      mirror: Option[Long] = None,
-      delta: Boolean = true) extends Attempt
+      mirror: Option[Long] = None) extends Attempt
 
   /** Runs inside [[commit]] between a verb's attempt and its claim —
     * the spec's seam for injecting a concurrent commit into the race
@@ -884,7 +914,7 @@ object Snapshots {
               c.txn.fold(m.txns)(mergeTxn(m.txns, _)), c.schema, c.kind,
               m.stats ++ c.stats, c.cdf, m.blooms ++ c.blooms,
               c.mirror.orElse(m.mirror),
-              if (v >= 1 && c.delta) Some((v, m)) else None,
+              if (v >= 1) Some((v, m)) else None,
               m.lens ++ c.lens, c.cdfd)
             return v + 1
           } catch {
@@ -960,14 +990,16 @@ object Snapshots {
     * routine compact must not force every consumer to re-read the
     * corpus). Built inside the commit loop, so a lost race rebuilds
     * from the new latest — never a layout computed from a stale read.
+    * A standing index's compaction commits kind `rewrite` through it.
     */
-  private def relayout(s: SparkSession, root: String)
-                      (build: DataFrame => DataFrame): Int =
+  private[sources] def relayout(s: SparkSession, root: String,
+                                kind: String = "layout")
+                               (build: DataFrame => DataFrame): Int =
     commit(s, root) { (base, _) =>
       require(base >= 1, s"layout maintenance needs an existing dataset at $root")
       val df = build(read(s, root, base))
       val bf = writeBatchFiles(s, root, df)
-      Commit(bf.files, Some("layout"), Some(df.schema), bf.stats, lens = bf.lens)
+      Commit(bf.files, Some(kind), Some(df.schema), bf.stats, lens = bf.lens)
     }
 
   /** Idempotent append keyed by an EXTERNAL transaction id (a
@@ -1500,7 +1532,8 @@ object Snapshots {
   val DefaultOrphanGraceMs: Long = 4L * 60 * 60 * 1000
 
   /** Expire every version below `retainMin`: delete their manifests,
-    * then vacuum data/. A file is reclaimed iff it is unreachable from
+    * then vacuum data/ and the change files of changes/ by one rule. A
+    * file is reclaimed iff it is unreachable from
     * every LIVE (retained) manifest AND either (a) an EXPIRED manifest
     * referenced it — it was committed, and every version that could
     * read it is gone — or (b) it is an orphan older than
@@ -1538,83 +1571,39 @@ object Snapshots {
     val expiredM = (1 until retainMin).iterator
       .filter(v => f.exists(manifestPath(root, v)))
       .map(v => readManifestData(s, root, v)).toSeq
-    val live: Set[String] = retainedM.flatMap(_.files).toSet
-    val expiredRefs: Set[String] = expiredM.flatMap(_.files).toSet
-    // change-data files follow the same rule as data files: reclaimed
-    // once no live manifest's #cdf:/#cdfd: line references them and an
-    // expired one did (a merge's change set outlives exactly the
-    // versions that could consume it). Parents of reclaimed files are
-    // PROVABLY DEAD dirs — tracked explicitly, because deleting their
-    // files bumps the dir mtime past any cutoff computed this run (the
-    // mtime heuristic alone left empty dirs behind on fast machines).
-    val liveCdf: Set[String] = retainedM.flatMap(m => m.cdf ++ m.cdfd).toSet
-    val deadChangeDirs = scala.collection.mutable.HashSet.empty[String]
-    expiredM.flatMap(m => m.cdf ++ m.cdfd).toSet.diff(liveCdf).foreach { p =>
-      val path = new org.apache.hadoop.fs.Path(p)
-      f.delete(path, false)
-      deadChangeDirs += path.getParent.toString
-    }
     (1 until retainMin).foreach { v =>
       val p = manifestPath(root, v)
       if (f.exists(p)) f.delete(p, false)
       memoDrop(root, v)
     }
     val cutoff = System.currentTimeMillis() - math.max(0L, orphanGraceMs)
-    def reclaim(k: org.apache.hadoop.fs.FileStatus): Boolean = {
-      val path = k.getPath.toString
-      !live.contains(path) &&
-        (expiredRefs.contains(path) || k.getModificationTime < cutoff)
-    }
-    val dataDir = new org.apache.hadoop.fs.Path(s"$root/data")
-    if (f.exists(dataDir)) {
-      f.listStatus(dataDir).foreach { st =>
+    // one vacuum for data/ and changes/ (a merge's change set outlives
+    // exactly the versions that could consume it). A subdir is pruned —
+    // _SUCCESS included — only once no part file survives AND it is
+    // provably dead: its files were just reclaimed from expired
+    // manifests (their delete bumps its mtime past the cutoff), or it
+    // is an aged orphan; a young dir with no data is a write in flight.
+    def sweep(dir: String, live: Set[String], expired: Set[String]): Unit = {
+      val d = new org.apache.hadoop.fs.Path(s"$root/$dir")
+      def part(k: org.apache.hadoop.fs.FileStatus) =
+        k.isFile && k.getPath.getName.startsWith("part-")
+      def reclaim(k: org.apache.hadoop.fs.FileStatus) = part(k) &&
+        !live.contains(k.getPath.toString) &&
+        (expired.contains(k.getPath.toString) || k.getModificationTime < cutoff)
+      if (f.exists(d)) f.listStatus(d).foreach { st =>
         if (st.isDirectory) {
-          val hadExpiredData = f.listStatus(st.getPath).exists(k =>
-            k.isFile && expiredRefs.contains(k.getPath.toString))
-          f.listStatus(st.getPath).foreach { k =>
-            if (k.isFile && k.getPath.getName.startsWith("part-") && reclaim(k))
-              f.delete(k.getPath, false)
-          }
-          val left = f.listStatus(st.getPath)
-          val hasData = left.exists(k =>
-            k.isFile && k.getPath.getName.startsWith("part-"))
-          // prune the dir (committer droppings like _SUCCESS included)
-          // only once no data file survives AND the dir is provably
-          // dead: its data was just reclaimed from expired manifests,
-          // or it is an aged orphan. A young dir with no data yet is an
-          // append mid-write — leave it alone.
-          val dead = hadExpiredData ||
-            (left.forall(k => k.isFile && k.getModificationTime < cutoff) &&
+          val kids = f.listStatus(st.getPath)
+          kids.filter(reclaim).foreach(k => f.delete(k.getPath, false))
+          val dead = kids.exists(k => expired.contains(k.getPath.toString)) ||
+            (kids.forall(k => k.isFile && k.getModificationTime < cutoff) &&
               st.getModificationTime < cutoff)
-          if (!hasData && dead) f.delete(st.getPath, true)
-        } else if (st.isFile && st.getPath.getName.startsWith("part-") &&
-                   reclaim(st)) {
-          // pre-r11 flat-layout files are vacuumed by the same rule
-          f.delete(st.getPath, false)
-        }
+          if (dead && !f.listStatus(st.getPath).exists(part)) f.delete(st.getPath, true)
+        } else if (reclaim(st)) f.delete(st.getPath, false) // pre-r11 flat layout
       }
     }
-    // change-dir sweep: a lost merge race leaves its change subdir as
-    // an orphan (no manifest ever references it) — reclaimed past the
-    // grace window, same as data orphans; subdirs whose files were
-    // just reclaimed from expired manifests prune entirely
-    val changesDir = new org.apache.hadoop.fs.Path(s"$root/changes")
-    if (f.exists(changesDir)) {
-      f.listStatus(changesDir).filter(_.isDirectory).foreach { st =>
-        f.listStatus(st.getPath).foreach { k =>
-          if (k.isFile && k.getPath.getName.startsWith("part-") &&
-              !liveCdf.contains(k.getPath.toString) &&
-              k.getModificationTime < cutoff)
-            f.delete(k.getPath, false)
-        }
-        val left = f.listStatus(st.getPath)
-        val hasData = left.exists(k =>
-          k.isFile && k.getPath.getName.startsWith("part-"))
-        if (!hasData && (deadChangeDirs.contains(st.getPath.toString) ||
-            st.getModificationTime < cutoff))
-          f.delete(st.getPath, true)
-      }
-    }
+    sweep("data", retainedM.flatMap(_.files).toSet, expiredM.flatMap(_.files).toSet)
+    sweep("changes", retainedM.flatMap(m => m.cdf ++ m.cdfd).toSet,
+      expiredM.flatMap(m => m.cdf ++ m.cdfd).toSet)
   }
 
   /** Time-travel read: a scan over exactly version v's files, under
@@ -2322,16 +2311,10 @@ object Snapshots {
     * committed yet. "Reproduce what the tuesday-night run saw" without
     * the run having recorded its version number.
     */
-  def versionAsOf(s: SparkSession, root: String, tsMillis: Long): Int = {
-    val f = fs(s)
-    val d = new org.apache.hadoop.fs.Path(s"$root/manifests")
-    if (!f.exists(d)) 0
-    else f.listStatus(d).toSeq
-      .filter(st => st.isFile && st.getPath.getName.startsWith("v") &&
-        st.getModificationTime <= tsMillis)
-      .map(_.getPath.getName.stripPrefix("v").stripSuffix(".txt").toInt)
-      .foldLeft(0)(math.max)
-  }
+  def versionAsOf(s: SparkSession, root: String, tsMillis: Long): Int =
+    listedVersions(fs(s), root).collect {
+      case (v, st) if st.getModificationTime <= tsMillis => v
+    }.foldLeft(0)(math.max)
 
   /** Time-travel read by timestamp. */
   def readAsOf(s: SparkSession, root: String, tsMillis: Long): DataFrame = {

@@ -2,7 +2,7 @@ package graft.tools
 
 /** Ad-hoc per-query timing probe for optimization work: runs the named
   * catalog queries (or `shared_*` builds) N times each against a dir,
-  * printing wall / executor-cpu / gc per run — the Bench measurement
+  * printing wall / executor-cpu / gc / jobs per run — the Bench measurement
   * loop without the full catalog, for A/B isolation of one entry.
   *
   * Usage: Probe <sfDir> <reps> <name> [<name> ...]
@@ -71,7 +71,7 @@ object Probe {
           }
         }
         m.error.foreach(e => println(s"[probe] $name FAILED: $e"))
-        println(f"[probe] $name rep$i wall=${m.wallS}%.2f cpu=${m.cpuS}%.2f gc=${m.gcS}%.2f")
+        println(f"[probe] $name rep$i wall=${m.wallS}%.2f cpu=${m.cpuS}%.2f gc=${m.gcS}%.2f jobs=${m.jobs}")
       }
     }
     spark.stop()

@@ -19,9 +19,21 @@ class GraphIndexSpec extends AnyFunSuite {
     val direct = graft.operators.GraphAnn.annHnswTopK(spark, sf)
     assert(fromIndex.collect().toSeq === direct.collect().toSeq,
       "the posting artifact reproduces the in-memory rerank cell-for-cell")
-    val p = fromIndex.queryExecution.executedPlan.toString
-    assert(p.contains("PartitionFilters") && p.contains("nshard"),
-      s"routed node shards should prune posting partitions:\n$p")
+    // the routed shards' filter reaches the scan: it plans one file per
+    // routed shard (here the 10 queries' routed nodes hit every shard)
+    val root = GraphIndex.indexRoot(spark, sf)
+    val g = GraphIndex.sidecarGraph(spark, root)
+    val nShards = GraphIndex.shardsFor(g.ids.length)
+    def shardsOf(probes: org.apache.spark.sql.DataFrame) =
+      probes.select("node").collect().map(r => math.floorMod(r.getInt(0), nShards)).distinct
+    val probes = graft.operators.GraphAnn.probeFrame(spark, sf, g)
+    assert(IndexRoles.planned(fromIndex, "postings").map(_._1) ===
+      Seq(shardsOf(probes).length), "the search plans exactly its routed shards' files")
+    // and prunes strictly once the routed set misses a shard: the same
+    // filter shape over the posting tree, one routed shard
+    val one = IndexRoles.plannedForShard(root, "postings", "nshard", shardsOf(probes).head)
+    assert(one.map(_._1) === Seq(1) && one.forall(_._2 > 1),
+      s"one routed shard of $nShards should plan its one posting file: $one")
     val files = fromIndex.inputFiles
     assert(files.nonEmpty && files.forall(_.contains("graft_graphindex")),
       "the query path reads only the posting artifact (vectors ride the postings)")
@@ -58,8 +70,8 @@ class GraphIndexSpec extends AnyFunSuite {
     assert(run(base) === want,
       "tombstones drop every Rep posting copy at search time")
     GraphIndex.compact(spark, base)
-    assert(!new java.io.File(s"$base/tombstones").exists,
-      "compaction clears the tombstone sidecar")
+    assert(IndexRoles.tombstoned(base, "neighbor_id").isEmpty,
+      "compaction clears the tombstones")
     assert(run(base) === want, "search identical after the physical reclaim")
   }
 
@@ -86,10 +98,10 @@ class GraphIndexSpec extends AnyFunSuite {
       GraphIndex.searchRoot(spark, sf, full).collect().toSeq,
       "stream-built index answers the standing query == a batch full build")
     // streamed counters + base-build postings == the artifact's per-shard counts
-    val artifact = spark.read.parquet(s"$root/postings")
+    val artifact = IndexRoles.latest(root, "postings")
       .groupBy("nshard").agg(count(lit(1)).as("cnt")).collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val base = spark.read.parquet(s"$full/postings")
+    val base = IndexRoles.latest(full, "postings")
       .join(slice(0).select(col("vec_id").as("neighbor_id")), "neighbor_id")
       .groupBy("nshard").agg(count(lit(1)).as("cnt")).collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap

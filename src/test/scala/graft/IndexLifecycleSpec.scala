@@ -1,15 +1,17 @@
 package graft
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.{Bm25Index, GraphIndex, IndexMaintenance, PhraseIndex, PqIndex, Snapshots}
+import graft.sources.{Bm25Index, GraphIndex, PhraseIndex, PqIndex, Snapshots}
 import graft.operators.Similarity
 
-/** Round-12 lifecycle hardening:
-  *   - compaction's directory swap is crash-atomic on all four index
-  *     lifecycles (a crash at ANY injected point leaves an index the
-  *     read path can still serve — the old delete-then-rename had a
-  *     window with NO live tree);
+/** Standing-index lifecycle safety. Every role under an index root is
+  * a Snapshots table, so the manifest claim is the only commit point:
+  *   - a compaction crashed at ANY claim (each tree's, then the
+  *     tombstones') leaves an index the read path serves unchanged —
+  *     the ids stay tombstoned until the last claim drops them;
+  *   - a delete that lands while a compaction runs stays deleted;
   *   - re-adding a deleted id resurrects it with no duplicate rows
   *     (FAISS `remove_ids` + `add` semantics: tombstone overlap
   *     triggers a physical compact before the fresh append).
@@ -21,119 +23,126 @@ class IndexLifecycleSpec extends AnyFunSuite {
   private def tmp(prefix: String) =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
-  /** Arm the seam to throw once at `label`, then disarm itself. */
-  private def crashAt(label: String): Unit =
-    IndexMaintenance.crashHook = l =>
-      if (l == label) {
-        IndexMaintenance.crashHook = _ => ()
-        throw new RuntimeException(s"injected crash at $label")
+  /** Arm the commit seam to throw at the k-th claim, then disarm. */
+  private def crashAt(k: Int): Unit = {
+    var n = 0
+    Snapshots.commitHook = () => {
+      n += 1
+      if (n == k) {
+        Snapshots.commitHook = () => ()
+        throw new RuntimeException(s"injected crash at claim $k")
       }
+    }
+  }
+
+  /** For each claim k of a compaction: tombstone fresh `victims`, crash
+    * the compaction at claim k, and check that search serves the same
+    * live set, that a follow-up compact converges to it, and that the
+    * converged compact clears the tombstones.
+    */
+  private def crashEveryClaim(name: String, claims: Int, root: String, key: String,
+                              victims: => Seq[Long], delete: Seq[Long] => Unit,
+                              search: => Seq[Row], compact: => Unit): Unit =
+    for (k <- 1 to claims) {
+      val ids = victims
+      delete(ids)
+      val want = search
+      crashAt(k)
+      try intercept[RuntimeException](compact)
+      finally Snapshots.commitHook = () => ()
+      assert(search === want, s"$name: search must survive a crash at claim $k")
+      compact
+      assert(search === want, s"$name: a follow-up compact converges after claim $k")
+      assert(IndexRoles.tombstoned(root, key).isEmpty,
+        s"$name: the converged compact clears the tombstones")
+    }
 
   private def docsMod(m: Int, r: Int) =
     Tables.documents(spark, sf).filter(pmod(col("doc_id"), lit(m)) === r)
 
-  test("bm25 compaction survives a crash at every swap step") {
-    for (point <- Seq("pre-aside", "mid-swap", "pre-gc")) {
-      val root = tmp("graft_bm25crash")
-      Bm25Index.materializeWhere(spark, sf, lit(true), root)
-      val victims = Bm25Index.searchRoot(spark, root)
-        .collect().map(_.getLong(0)).take(2).toSeq
-      Bm25Index.delete(spark, root, victims)
-      val want = Bm25Index.searchRoot(spark, root).collect().toSeq
-      assert(!want.exists(r => victims.contains(r.getLong(0))))
-      crashAt(point)
-      intercept[RuntimeException] { Bm25Index.compact(spark, root) }
-      IndexMaintenance.crashHook = _ => ()
-      // the read path recovers the interrupted swap and serves the
-      // same live set the pre-crash index served
-      assert(Bm25Index.searchRoot(spark, root).collect().toSeq === want,
-        s"search must survive a crash at $point")
-      // a follow-up compact completes cleanly
-      Bm25Index.compact(spark, root)
-      assert(Bm25Index.searchRoot(spark, root).collect().toSeq === want,
-        s"post-recovery compact must converge after a crash at $point")
-      assert(!new java.io.File(s"$root/tombstones").exists)
-    }
+  test("bm25 compaction survives a crash at every claim") {
+    val root = tmp("graft_bm25crash")
+    Bm25Index.materializeWhere(spark, sf, lit(true), root)
+    def search = Bm25Index.searchRoot(spark, root).collect().toSeq
+    // claims: postings, doclens, tombstones
+    crashEveryClaim("bm25", 3, root, "doc_id", search.map(_.getLong(0)).take(2),
+      Bm25Index.delete(spark, root, _), search, Bm25Index.compact(spark, root))
   }
 
-  test("pq and graph and phrase compaction survive the mid-swap crash window") {
-    // mid-swap is THE data-loss window of the old delete-then-rename:
-    // the current tree is gone, the replacement not yet in place
+  test("pq and graph and phrase compaction survive a crash at every claim") {
     locally {
       val root = tmp("graft_pqcrash")
       PqIndex.materializeWhere(spark, sf, lit(true), root)
-      val victim = PqIndex.searchRoot(spark, sf, root)
-        .collect().map(_.getAs[Long]("neighbor_id")).head
-      PqIndex.delete(spark, root, Seq(victim))
-      val want = PqIndex.searchRoot(spark, sf, root).collect().toSeq
-      crashAt("mid-swap")
-      intercept[RuntimeException] { PqIndex.compact(spark, root) }
-      IndexMaintenance.crashHook = _ => ()
-      assert(PqIndex.searchRoot(spark, sf, root).collect().toSeq === want,
-        "pq search must survive the mid-swap crash")
-      PqIndex.compact(spark, root)
-      assert(PqIndex.searchRoot(spark, sf, root).collect().toSeq === want)
+      def search = PqIndex.searchRoot(spark, sf, root).collect().toSeq
+      crashEveryClaim("pq", 2, root, "neighbor_id",
+        search.map(_.getAs[Long]("neighbor_id")).take(1),
+        PqIndex.delete(spark, root, _), search, PqIndex.compact(spark, root))
     }
     locally {
-      import spark.implicits._
       val root = tmp("graft_gicrash")
       GraphIndex.materializeWhere(spark, sf, lit(true), root)
-      val victim = GraphIndex.searchRoot(spark, sf, root)
-        .collect().map(_.getAs[Long]("neighbor_id")).head
-      GraphIndex.delete(spark, root, Seq(victim))
-      val want = GraphIndex.searchRoot(spark, sf, root).collect().toSeq
-      crashAt("mid-swap")
-      intercept[RuntimeException] { GraphIndex.compact(spark, root) }
-      IndexMaintenance.crashHook = _ => ()
-      assert(GraphIndex.searchRoot(spark, sf, root).collect().toSeq === want,
-        "graph search must survive the mid-swap crash")
-      GraphIndex.compact(spark, root)
-      assert(GraphIndex.searchRoot(spark, sf, root).collect().toSeq === want)
+      def search = GraphIndex.searchRoot(spark, sf, root).collect().toSeq
+      crashEveryClaim("graph", 2, root, "neighbor_id",
+        search.map(_.getAs[Long]("neighbor_id")).take(1),
+        GraphIndex.delete(spark, root, _), search, GraphIndex.compact(spark, root))
     }
     locally {
       val root = tmp("graft_phrcrash")
       PhraseIndex.materializeWhere(spark, sf, lit(true), root)
-      val victim = PhraseIndex.searchRoot(spark, root)
-        .collect().map(_.getLong(0)).head
-      PhraseIndex.delete(spark, root, Seq(victim))
-      val want = PhraseIndex.searchRoot(spark, root).collect().toSeq
-      assert(!want.exists(_.getLong(0) == victim),
-        "the phrase tombstone must drop the doc at query time")
-      crashAt("mid-swap")
-      intercept[RuntimeException] { PhraseIndex.compact(spark, root) }
-      IndexMaintenance.crashHook = _ => ()
-      assert(PhraseIndex.searchRoot(spark, root).collect().toSeq === want,
-        "phrase search must survive the mid-swap crash")
-      PhraseIndex.compact(spark, root)
-      assert(PhraseIndex.searchRoot(spark, root).collect().toSeq === want)
+      def search = PhraseIndex.searchRoot(spark, root).collect().toSeq
+      crashEveryClaim("phrase", 3, root, "doc_id", search.map(_.getLong(0)).take(1),
+        PhraseIndex.delete(spark, root, _), search, PhraseIndex.compact(spark, root))
     }
   }
 
-  test("append after a mid-swap crash first recovers the standing tree") {
-    import spark.implicits._
-    // the hole an append-only recover left open: a mode("append") write
-    // onto a crash-missing tree would silently recreate it with
-    // batch-only rows and the next recover would GC the aside copy
+  test("append after a crashed compaction serves the fresh-build ranking") {
+    // the first post-crash operation is an append, not a read: the
+    // trees the crashed compaction already claimed dropped the victims,
+    // the tombstones still hold them, and the append lands on both
     val root = tmp("graft_bm25crashapp")
     val ref = tmp("graft_bm25crashref")
     Bm25Index.materializeWhere(spark, sf, pmod(col("doc_id"), lit(5)) =!= 0, root)
     val victims = Bm25Index.searchRoot(spark, root)
       .collect().map(_.getLong(0)).take(2).toSeq
     Bm25Index.delete(spark, root, victims)
-    crashAt("mid-swap")
-    intercept[RuntimeException] { Bm25Index.compact(spark, root) }
-    IndexMaintenance.crashHook = _ => ()
-    // the FIRST post-crash operation is an append, not a read
-    Bm25Index.append(spark, root,
-      Tables.documents(spark, sf).filter(pmod(col("doc_id"), lit(5)) === 0))
-    // reference: a fresh build over (full minus victims) — victims were
-    // physically reclaimed by the rolled-forward compact, and the
-    // appended slice joined the standing corpus
+    crashAt(2) // postings claimed, doclens not
+    try intercept[RuntimeException] { Bm25Index.compact(spark, root) }
+    finally Snapshots.commitHook = () => ()
+    Bm25Index.append(spark, root, docsMod(5, 0))
+    // reference: a fresh build over (full minus victims)
     Bm25Index.materializeWhere(spark, sf,
       !col("doc_id").isin(victims: _*), ref)
     assert(Bm25Index.searchRoot(spark, root).collect().toSeq ===
       Bm25Index.searchRoot(spark, ref).collect().toSeq,
-      "append must roll the interrupted swap forward before writing")
+      "an append onto a crashed compaction ranks as the fresh build")
+  }
+
+  test("a delete that lands at any claim of a compaction stays deleted") {
+    // the compaction reads the tombstones once and drops exactly those
+    // ids — from each tree, then from the tombstones through the commit
+    // loop — so a delete committed in between stays in force
+    val root = tmp("graft_bm25race")
+    Bm25Index.materializeWhere(spark, sf, lit(true), root)
+    def ranked = Bm25Index.searchRoot(spark, root).collect().map(_.getLong(0)).toSeq
+    for (k <- 1 to 3) {
+      val r = ranked
+      Bm25Index.delete(spark, root, Seq(r.head))
+      val late = r(1)
+      var n = 0
+      Snapshots.commitHook = () => {
+        n += 1
+        if (n == k) {
+          Snapshots.commitHook = () => ()
+          Bm25Index.delete(spark, root, Seq(late))
+        }
+      }
+      try Bm25Index.compact(spark, root)
+      finally Snapshots.commitHook = () => ()
+      assert(n >= k, s"the compaction must reach claim $k")
+      assert(!ranked.contains(late), s"the id deleted at claim $k must stay deleted")
+      assert(IndexRoles.tombstoned(root, "doc_id") === Seq(late),
+        "the compaction drops exactly the ids it reclaimed from the tombstones")
+    }
   }
 
   test("delete then re-append resurrects the id with no duplicates — all four indexes") {
@@ -462,6 +471,42 @@ class SnapshotsMaintenanceSpec extends AnyFunSuite {
       "a replay probes the latest manifest only")
     assert(ids(Snapshots.read(spark, root, v)) === (0L to 71L),
       "every txn landed exactly once")
+  }
+
+  test("latestVersion lists the manifests O(1) times per commit: a hint plus forward probes") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_snaphint").toString
+    def row(i: Long) = Seq((i, "s")).toDF("doc_id", "source")
+    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val hint = new org.apache.hadoop.fs.Path(s"$root/manifests/_latest")
+    def setHint(text: String): Unit = {
+      val out = fs.create(hint, true)
+      try out.write(text.getBytes("UTF-8")) finally out.close()
+    }
+    def listings(f: => Any): Long = {
+      val before = Snapshots.manifestListings.get()
+      f
+      Snapshots.manifestListings.get() - before
+    }
+    Snapshots.create(spark, root, row(0L))
+    // every commit attempt, txn probe and latest read rides the hint
+    assert(listings((1L to 70L).foreach(i => Snapshots.appendTxn(spark, root, i, row(i)))) === 0,
+      "70 commits over a growing lineage list the manifests dir zero times")
+    assert(Snapshots.latestVersion(spark, root) === 71)
+    // an older hint (a racing writer's) costs forward probes only
+    setHint("3")
+    assert(listings(assert(Snapshots.latestVersion(spark, root) === 71)) === 0)
+    // an absent, unreadable or too-new hint falls back to one listing
+    for (bad <- Seq(None, Some("garbage"), Some("99"))) {
+      bad.fold(fs.delete(hint, false))(t => { setHint(t); true })
+      assert(listings(assert(Snapshots.latestVersion(spark, root) === 71)) === 1,
+        s"hint $bad: one listing, the right answer")
+    }
+    // a commit on the bad hint lists once per latest read before its
+    // claim, and the claim rewrites the hint
+    assert(listings(Snapshots.appendTxn(spark, root, 71L, row(71L))) <= 2)
+    assert(listings(assert(Snapshots.latestVersion(spark, root) === 72)) === 0)
+    assert(ids(Snapshots.read(spark, root, 72)) === (0L to 71L))
   }
 
   test("an appendTxn replay racing its in-flight original commits the batch once, no file lost") {

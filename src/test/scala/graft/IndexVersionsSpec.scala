@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.{Bm25Index, IndexVersions, PhraseIndex, PqIndex}
+import graft.sources.{Bm25Index, IndexVersions, PhraseIndex, PqIndex, Snapshots}
 import graft.operators.Similarity
 
 /** Versioned index reads (SURVEY §2 #198): an index is an artifact
@@ -48,21 +48,18 @@ class IndexVersionsSpec extends AnyFunSuite {
       "v3 == the live tombstoned view")
     assert(!Bm25Index.searchAt(spark, root, v3).collect()
       .exists(_.getLong(0) == victim), "the delete is visible at v3")
-    // artifact-served, version-scoped: the pinned scan reads only v1's
-    // manifest files
+    // artifact-served, version-scoped: the pinned scan reads only the
+    // files of the role versions v1 pins
+    val pins = IndexVersions.pins(spark, root, v1)
     val used = Bm25Index.searchAt(spark, root, v1).inputFiles.map(norm).toSet
-    val manifest = (IndexVersions.filesAt(spark, root, v1, "postings") ++
-      IndexVersions.filesAt(spark, root, v1, "doclens")).map(norm).toSet
+    val manifest = Seq("postings", "doclens").flatMap(r =>
+      Snapshots.readManifest(spark, s"$root/$r", pins(r))).map(norm).toSet
     assert(used.nonEmpty && used.subsetOf(manifest),
       "the pinned query must plan over v1's manifest files alone")
-    // shard pruning survives the explicit file list: basePath keeps
-    // tshard a partition column, so the term filter still plans as
-    // PartitionFilters (inputFiles reports the PRE-pruning index, so
-    // the proof lives in the executed plan, as in the live-index spec)
-    val plan = Bm25Index.searchAt(spark, root, v1)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("tshard"),
-      s"query terms should prune the pinned version's postings shards:\n$plan")
+    // shard pruning survives the pin: the term filter's shard set
+    // prunes the pinned postings version's files on its manifest stats
+    assert(IndexRoles.prunes(Bm25Index.searchAt(spark, root, v1), "postings"),
+      "query terms should prune the pinned version's postings shards")
   }
 
   test("phrase: searchAt(v) == a fresh build of v's corpus state") {
@@ -93,14 +90,12 @@ class IndexVersionsSpec extends AnyFunSuite {
       "v3 == the live tombstoned view")
   }
 
-  test("bm25: pinned versions survive compact (and re-add-after-delete appends); expire bounds them") {
-    // The r12-ADVICE medium: append() implicitly compacts when the
-    // batch overlaps tombstones, and compact's swap used to DELETE the
-    // old tree files that earlier version manifests reference —
-    // silently breaking searchAt(v) for every pinned version. The fix
-    // retains replaced trees under _retained/ while versions pin them;
-    // this spec drives the exact breaking sequence and then proves
-    // expire() is the only thing that bounds the pins.
+  test("bm25: pinned versions survive compact; expire reclaims the replaced files") {
+    // append() implicitly compacts when the batch overlaps tombstones,
+    // rewriting postings+doclens and the tombstones. Each role is a
+    // Snapshots table, so the compaction commits NEW role versions and
+    // the files earlier index versions pin stay readable; expire() is
+    // the only thing that reclaims them.
     val root = tmp("graft_bm25ret")
     val docs = Tables.documents(spark, sf)
     Bm25Index.materializeWhere(spark, sf, pmod(col("doc_id"), lit(3)) =!= 2, root)
@@ -111,35 +106,33 @@ class IndexVersionsSpec extends AnyFunSuite {
     val v2 = Bm25Index.commitVersion(spark, root)
     val wantV2 = Bm25Index.searchAt(spark, root, v2).collect().toSeq
     assert(!wantV2.exists(_.getLong(0) == victim), "fixture: delete visible at v2")
+    def files(v: Int) = {
+      val pins = IndexVersions.pins(spark, root, v)
+      pins.toSeq.flatMap { case (r, pv) => Snapshots.readManifest(spark, s"$root/$r", pv) }.toSet
+    }
+    val pinnedBefore = files(v1) ++ files(v2)
     // re-add the victim: overlaps the tombstone set -> append compacts
-    // implicitly, physically rewriting postings+doclens and clearing
-    // the tombstone sidecar
     Bm25Index.append(spark, root, docs.filter(col("doc_id") === victim))
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    assert(fs.exists(new org.apache.hadoop.fs.Path(s"$root/_retained")),
-      "the implicit compact must RETAIN the replaced trees while versions pin them")
     // the pins: v1's ranking (pre-delete) and v2's (post-delete) both
-    // reproduce exactly, served partly from retained generations
+    // reproduce exactly from the role versions they pin
     assert(Bm25Index.searchAt(spark, root, v1).collect().toSeq === wantV1,
       "v1's pinned ranking must survive the implicit compact")
     assert(Bm25Index.searchAt(spark, root, v2).collect().toSeq === wantV2,
-      "v2 must still see its tombstoned view (retained tombstone files)")
+      "v2 must still see its tombstoned view")
     // the live view sees the victim resurrected (FAISS remove+add)
     val v3 = Bm25Index.commitVersion(spark, root)
     val live = Bm25Index.searchRoot(spark, root).collect().toSeq
     assert(Bm25Index.searchAt(spark, root, v3).collect().toSeq === live)
-    // expire everything below v3: v1/v2 fail fast, their retained
-    // generations are reclaimed, v3 (pure live tree) is untouched
+    val replaced = pinnedBefore -- files(v3)
+    assert(replaced.nonEmpty, "fixture: the compaction replaced pinned files")
+    // expire everything below v3: v1/v2 fail fast, the files only they
+    // read are reclaimed, v3 is untouched
     IndexVersions.expire(spark, root, retainMin = v3)
     intercept[IllegalArgumentException] {
       Bm25Index.searchAt(spark, root, v1)
     }
-    val gensLeft =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(s"$root/_retained"))) 0
-      else fs.listStatus(new org.apache.hadoop.fs.Path(s"$root/_retained")).length
-    assert(gensLeft === 0,
-      s"expire must reclaim unreferenced retained generations, $gensLeft left")
+    val left = replaced.filter(f => new java.io.File(new java.net.URI(f)).exists)
+    assert(left.isEmpty, s"expire must reclaim the replaced files, ${left.size} left")
     assert(Bm25Index.searchAt(spark, root, v3).collect().toSeq === live,
       "the surviving version is untouched by expire")
   }

@@ -1210,13 +1210,21 @@ class PlanRegressionSpec extends org.scalatest.funsuite.AnyFunSuite {
     val fromIndex = graft.sources.PqIndex.annPqIndexed(spark, sf)
     val inMemory = Similarity.annIvfPqTopK(spark, sf)
     assert(fromIndex.collect().toSeq === inMemory.collect().toSeq)
-    // the codes scan must carry the probe set as PartitionFilters (file
-    // pruning at plan time), not re-read the whole encoded corpus
-    val scans = fromIndex.queryExecution.executedPlan.collectLeaves()
-      .map(_.toString).filter(_.contains("codes"))
-    assert(scans.exists(_.contains("PartitionFilters: [cell#")) ||
-      scans.exists(s => s.contains("PartitionFilters") && s.contains("cell")),
-      s"probe set should prune index partitions:\n${scans.mkString("\n")}")
+    // the probe set reaches the codes scan at plan time: it plans one
+    // file per probed cell (here the 10 queries' probes hit every cell)
+    val root = graft.sources.PqIndex.indexRoot(spark, sf)
+    val cents = graft.sources.PqIndex.loadMeta(spark, root)._2
+    val probes = math.max(Similarity.IvfNProbe,
+      math.ceil(cents.size * Similarity.IvfProbeFraction).toInt)
+    val probed = Similarity.normed(spark, sf).filter(col("vec_id") < Similarity.NumQueries)
+      .select(explode(graft.plans.CentroidOps.nearest(col("e"), col("nrm"), cents, probes)))
+      .distinct().count()
+    assert(IndexRoles.planned(fromIndex, "codes").map(_._1.toLong) === Seq(probed),
+      "the search plans exactly its probed cells' files")
+    // and prunes strictly once a cell is not probed
+    val one = IndexRoles.plannedForShard(root, "codes", "cell", cents.head._1)
+    assert(one.map(_._1) === Seq(1) && one.forall(_._2 > 1),
+      s"one probed cell should plan its one codes file: $one")
   }
 
   test("bucketed fact join: zero exchanges, one file per bucket, results == plain join") {
@@ -1276,10 +1284,10 @@ class PlanRegressionSpec extends org.scalatest.funsuite.AnyFunSuite {
       PqIndex.searchRoot(spark, sf, full).collect().toSeq,
       "stream-built index answers the standing query == a batch full build")
     // streamed counters + base-build cells == the artifact's per-cell counts
-    val artifact = spark.read.parquet(s"$root/codes")
+    val artifact = IndexRoles.latest(root, "codes")
       .groupBy("cell").agg(count(lit(1)).as("cnt")).collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val base = spark.read.parquet(s"$full/codes")
+    val base = IndexRoles.latest(full, "codes")
       .join(slice(0).select(col("vec_id").as("neighbor_id")), "neighbor_id")
       .groupBy("cell").agg(count(lit(1)).as("cnt")).collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -1305,17 +1313,18 @@ class PlanRegressionSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(run(base) === wantFull,
       "append + search == full re-encode search (frozen codebook)")
     // compaction merges the append's per-cell files without changing
-    // results or losing the cell directories that probe pruning needs
-    def cellFiles(root: String) = {
-      val d = new java.io.File(s"$root/codes")
-      d.listFiles().filter(_.getName.startsWith("cell=")).map(c =>
-        c.listFiles().count(_.getName.endsWith(".parquet"))).sum
-    }
+    // results or losing the one-cell-per-file layout probe pruning needs
+    def cellFiles(root: String) =
+      IndexRoles.latest(root, "codes").inputFiles.length
     val before = cellFiles(base)
     PqIndex.compact(spark, base)
     assert(cellFiles(base) < before,
       s"compaction should shrink the file count (was $before)")
     assert(run(base) === wantFull, "search identical after compaction")
+    val one = IndexRoles.plannedForShard(base, "codes", "cell",
+      PqIndex.loadMeta(spark, base)._2.head._1)
+    assert(one.map(_._1) === Seq(1) && one.forall(_._2 > 1),
+      s"the compacted codes keep one cell per file: $one")
   }
 
   test("PQ index delete tombstones at search time; compact physically reclaims") {
@@ -1338,11 +1347,11 @@ class PlanRegressionSpec extends org.scalatest.funsuite.AnyFunSuite {
     // deleting again (and ids already gone) is a no-op — anti-join
     PqIndex.delete(spark, base, delIds.take(3))
     assert(run(base) === want, "re-delete is idempotent")
-    // compact physically drops tombstoned codes and clears the sidecar
+    // compact physically drops tombstoned codes and clears the tombstones
     PqIndex.compact(spark, base)
-    assert(!new java.io.File(s"$base/tombstones").exists,
-      "compaction clears the tombstone sidecar")
-    val live = spark.read.parquet(s"$base/codes")
+    assert(IndexRoles.tombstoned(base, "neighbor_id").isEmpty,
+      "compaction clears the tombstones")
+    val live = IndexRoles.latest(base, "codes")
       .select("neighbor_id").as[Long].collect().toSet
     assert(delIds.forall(id => !live.contains(id)),
       "compaction physically drops tombstoned codes")
@@ -1357,21 +1366,19 @@ class PlanRegressionSpec extends org.scalatest.funsuite.AnyFunSuite {
     val allIds = Similarity.normed(spark, sf)
       .select("vec_id").as[Long].collect().toSeq
     PqIndex.delete(spark, base, allIds)
-    // compact of an all-tombstoned index used to write a part-less
-    // codes/ directory, and the next read died on 'Unable to infer
-    // schema'; now it writes one schema-bearing empty part file
+    // compact of an all-tombstoned index commits a codes version with
+    // no files; its manifest pins the schema, so reads stay planned
     PqIndex.compact(spark, base)
     assert(PqIndex.searchRoot(spark, sf, base).collect().isEmpty,
       "searching the fully reclaimed index returns zero candidates")
-    assert(spark.read.parquet(s"$base/codes").isEmpty)
-    // an empty batch (an empty stream trigger) must not delete the only
-    // schema-bearing file the reclaim left
+    assert(IndexRoles.latest(base, "codes").isEmpty)
+    // an empty batch (an empty stream trigger) and a compact of the
+    // empty index keep it readable
     PqIndex.append(spark, base, Similarity.normed(spark, sf).limit(0))
+    PqIndex.compact(spark, base)
     assert(PqIndex.searchRoot(spark, sf, base).collect().isEmpty,
-      "an empty append onto the reclaimed-empty index keeps it readable")
-    // the reclaimed-empty index must ACCEPT a new partitioned append —
-    // the unpartitioned empty marker file is cleared first, or
-    // partition discovery dies on conflicting directory depths
+      "an empty append and compact on the reclaimed-empty index keep it readable")
+    // the reclaimed-empty index accepts a new sharded append
     val refill = Similarity.normed(spark, sf)
       .filter(pmod(col("vec_id"), lit(7)) === 0)
     PqIndex.append(spark, base, refill)

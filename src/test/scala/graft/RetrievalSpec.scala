@@ -119,14 +119,13 @@ class RetrievalSpec extends AnyFunSuite {
     val direct = Retrieval.bm25Rank(spark, sf)
     assert(fromIndex.collect().toSeq === direct.collect().toSeq,
       "indexed ranking must be cell-equal to the corpus rescan")
-    // the postings scan must carry the query-term shard set as
-    // PartitionFilters — a ranked lookup reads its shards' files, not
-    // the whole corpus-token-sized postings table (the AQE wrapper
+    // the query-term shard set prunes the postings scan's files at
+    // plan time — a ranked lookup reads its shards' files, not the
+    // whole corpus-token-sized postings table (the AQE wrapper
     // truncates location paths in toString, so path checks go through
     // inputFiles)
-    val p = fromIndex.queryExecution.executedPlan.toString
-    assert(p.contains("PartitionFilters") && p.contains("tshard"),
-      s"query terms should prune postings shards:\n$p")
+    assert(IndexRoles.prunes(fromIndex, "postings"),
+      "query terms should prune postings shard files")
     // and the corpus text is never re-read on the query path
     val files = fromIndex.inputFiles
     assert(files.exists(_.contains("postings")) && files.exists(_.contains("doclens")),
@@ -170,9 +169,9 @@ class RetrievalSpec extends AnyFunSuite {
     Bm25Index.delete(spark, base, delIds.take(3)) // idempotent re-delete
     assert(run(base) === want)
     Bm25Index.compact(spark, base)
-    assert(!new java.io.File(s"$base/tombstones").exists,
-      "compaction clears the tombstone sidecar")
-    assert(spark.read.parquet(s"$base/doclens")
+    assert(IndexRoles.tombstoned(base, "doc_id").isEmpty,
+      "compaction clears the tombstones")
+    assert(IndexRoles.latest(base, "doclens")
       .filter(col("doc_id").isin(delIds.take(20): _*)).count() === 0L,
       "compaction physically drops tombstoned doclens")
     assert(run(base) === want, "query identical after the reclaim")
@@ -288,10 +287,10 @@ class RetrievalSpec extends AnyFunSuite {
       "stream-built positional index answers the phrase == a batch full build")
     // counters == artifact-derived stats (the double-indexed-batch guard)
     val (n, avgdl, occ) = resumed.currentStats
-    val dl = spark.read.parquet(s"$root/doclens")
+    val dl = IndexRoles.latest(root, "doclens")
       .agg(count(lit(1)), sum(col("dl"))).head()
     assert(n === dl.getLong(0) && avgdl === dl.getLong(1).toDouble / dl.getLong(0))
-    val wantOcc = spark.read.parquet(s"$root/postings")
+    val wantOcc = IndexRoles.latest(root, "postings")
       .filter(col("term").isin(graft.operators.Retrieval.PhraseTerms: _*))
       .groupBy("term").agg(count(lit(1)).as("c")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -326,12 +325,12 @@ class RetrievalSpec extends AnyFunSuite {
     // live counters == the stats the query path re-derives from the
     // artifact (guards double-indexing a batch, which search can't see)
     val (n, avgdl, df) = resumed.currentStats
-    val dl = spark.read.parquet(s"$root/doclens")
+    val dl = IndexRoles.latest(root, "doclens")
       .agg(count(lit(1)), sum(col("dl"))).head()
     assert(n === dl.getLong(0), "doc counter == artifact doc count")
     assert(avgdl === dl.getLong(1).toDouble / dl.getLong(0),
       "avgdl derives from the same integer sums")
-    val wantDf = spark.read.parquet(s"$root/postings")
+    val wantDf = IndexRoles.latest(root, "postings")
       .filter(col("term").isin(graft.operators.Retrieval.Bm25Terms: _*))
       .groupBy("term").agg(countDistinct(col("doc_id")).as("df"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
