@@ -33,18 +33,26 @@ object IndexVersions {
       line.substring(0, i) -> line.substring(i + 1).toInt
     }.toMap
 
-  /** Expire index versions below `retainMin`, then each role below the
-    * oldest version a surviving index version pins — reclaiming the
-    * files that only expired versions read ([[Snapshots.expire]]'s
-    * vacuum, orphan grace included).
+  /** Expire index versions below `retainMin`, then [[vacuum]] the
+    * roles they pinned.
     */
-  def expire(s: SparkSession, root: String, retainMin: Int,
-             orphanGraceMs: Long = Snapshots.DefaultOrphanGraceMs): Unit = {
-    Snapshots.expire(s, root, retainMin, orphanGraceMs)
-    (retainMin to Snapshots.latestVersion(s, root))
-      .flatMap(pins(s, root, _)).groupBy(_._1)
-      .foreach { case (role, vs) =>
-        Snapshots.expire(s, s"$root/$role", vs.map(_._2).min, orphanGraceMs)
-      }
+  def expire(s: SparkSession, root: String, retainMin: Int): Unit = {
+    Snapshots.expire(s, root, retainMin)
+    vacuum(s, root, pins(s, root, Snapshots.latestVersion(s, root)).keys.toSeq)
+  }
+
+  /** Expire each role below the oldest version a surviving index
+    * version pins (below its latest when none does), so the files only
+    * superseded, unpinned role versions read — a compaction's
+    * tombstoned rows among them — leave the disk
+    * ([[Snapshots.expire]]'s vacuum, orphan grace included).
+    */
+  def vacuum(s: SparkSession, root: String, roles: Seq[String]): Unit = {
+    val oldest = Snapshots.versions(s, root).flatMap(pins(s, root, _))
+      .groupMapReduce(_._1)(_._2)(math.min)
+    roles.foreach { r =>
+      val latest = Snapshots.latestVersion(s, s"$root/$r")
+      if (latest >= 1) Snapshots.expire(s, s"$root/$r", oldest.getOrElse(r, latest))
+    }
   }
 }

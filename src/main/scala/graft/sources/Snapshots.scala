@@ -796,8 +796,9 @@ object Snapshots {
     * nullable — old files read them as null). A same-name field must
     * keep its type: silent coercion across a lineage is how a corpus
     * quietly corrupts, so a type change is an error, not a merge. Only
-    * nullability may differ: a frame read back from parquet has every
-    * nested field nullable, a fresh batch need not.
+    * compatible nullability may differ: a batch may be stricter than
+    * the pin (a relayout pins a read-back frame's nullable elements, a
+    * fresh batch need not be), never looser.
     */
   private[sources] def mergeSchemas(
       known: org.apache.spark.sql.types.StructType,
@@ -806,7 +807,7 @@ object Snapshots {
     val byName = known.fields.map(f => f.name -> f).toMap
     batch.fields.foreach { f =>
       byName.get(f.name).foreach { k =>
-        require(org.apache.spark.GraftSparkBridge.sameTypeIgnoringNulls(k.dataType, f.dataType),
+        require(org.apache.spark.sql.GraftColumnBridge.fitsType(f.dataType, k.dataType),
           s"schema evolution cannot change column '${f.name}' from " +
             s"${k.dataType.simpleString} to ${f.dataType.simpleString}")
       }
@@ -843,6 +844,10 @@ object Snapshots {
     * start — the spec's "O(1) listings per commit" counter.
     */
   private[graft] val manifestListings = new java.util.concurrent.atomic.AtomicLong
+
+  /** Every version whose manifest is still on disk, ascending. */
+  private[sources] def versions(s: SparkSession, root: String): Seq[Int] =
+    listedVersions(fs(s), root).map(_._1).sorted
 
   /** Every manifest under `root`: (version, its file status). */
   private def listedVersions(f: org.apache.hadoop.fs.FileSystem,
@@ -951,15 +956,17 @@ object Snapshots {
     * latest — its file set is valid on any base, so a lost race only
     * re-reads the base (a metadata-only retry). A `txn` already in the
     * base's ranges is a no-op: a lost race may have been our own
-    * concurrent replay.
+    * concurrent replay. So is an empty batch that neither records a
+    * txn nor widens the schema (an idle stream trigger).
     */
   private def commitAppend(s: SparkSession, root: String, df: DataFrame,
                            bf: BatchFiles, txn: Option[Long]): Int =
     commit(s, root) { (base, m) =>
-      if (txn.exists(txnCommitted(m.txns, _))) NoOp(base)
-      else Commit(m.files ++ bf.files, Some("append"),
-        appendSchema(s, base, m, df.schema), bf.stats, lens = bf.lens,
-        txn = txn)
+      lazy val schema = appendSchema(s, base, m, df.schema)
+      if (txn.exists(txnCommitted(m.txns, _)) ||
+          (base >= 1 && bf.files.isEmpty && txn.isEmpty && schema == m.schema)) NoOp(base)
+      else Commit(m.files ++ bf.files, Some("append"), schema, bf.stats,
+        lens = bf.lens, txn = txn)
     }
 
   /** Rewrite: commit `df` as v+1 from FRESH files only (a curation

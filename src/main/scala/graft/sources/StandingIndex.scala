@@ -166,10 +166,12 @@ abstract class StandingIndex(family: String, key: String) {
 
   /** Physically reclaim the tombstoned rows: each tree commits without
     * them (a sharded tree keeps its one-shard-per-file layout, the
-    * others collapse to one file), then — last — exactly those ids
-    * leave `tombstones/`. Every claim recomputes on a lost race, and a
-    * crash between claims leaves the ids tombstoned, so reads never
-    * change; an id deleted while the compact runs stays deleted.
+    * others collapse to one file), then exactly those ids leave
+    * `tombstones/`, and — last — every role is vacuumed below the
+    * oldest version an index version pins ([[IndexVersions.vacuum]]).
+    * Every claim recomputes on a lost race, and a crash between claims
+    * leaves the ids tombstoned, so reads never change; an id deleted
+    * while the compact runs stays deleted.
     */
   def compact(s: SparkSession, root: String): Unit = {
     val gone = tombstones(s, root)
@@ -181,14 +183,17 @@ abstract class StandingIndex(family: String, key: String) {
       }
     }
     gone.foreach(g => Snapshots.relayout(s, s"$root/tombstones", "rewrite")(dropKeys(_, g)))
+    IndexVersions.vacuum(s, root, roles)
   }
+
+  private def roles: Seq[String] = trees.map(_.name) ++ Seq("meta", "tombstones")
 
   /** Pin every role's latest version as the index's next version:
     * reads as of it survive later appends, deletes and compacts, until
     * [[IndexVersions.expire]].
     */
   def commitVersion(s: SparkSession, root: String): Int =
-    IndexVersions.commit(s, root, trees.map(_.name) ++ Seq("meta", "tombstones"))
+    IndexVersions.commit(s, root, roles)
 
   /** Read the index live (`v = None`: each role's latest version) or as
     * of index version `v` (each role at its pinned version). Trees scan

@@ -41,9 +41,4 @@ object GraftSparkBridge {
 
   def confOf(ser: AnyRef): org.apache.hadoop.conf.Configuration =
     ser.asInstanceOf[org.apache.spark.util.SerializableConfiguration].value
-
-  /** Equal types up to the nullability of fields, elements and values. */
-  def sameTypeIgnoringNulls(a: org.apache.spark.sql.types.DataType,
-                            b: org.apache.spark.sql.types.DataType): Boolean =
-    org.apache.spark.sql.types.DataType.equalsIgnoreNullability(a, b)
 }

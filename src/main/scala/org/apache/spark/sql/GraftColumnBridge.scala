@@ -19,4 +19,9 @@ object GraftColumnBridge {
   def analyzedPlan(df: Dataset[Row]): LogicalPlan = df.queryExecution.analyzed
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+  /** `from` equals `to` up to nullability, and is null-free wherever
+    * `to` is (fields, elements, values): its rows fit under `to`.
+    */
+  def fitsType(from: types.DataType, to: types.DataType): Boolean =
+    types.DataType.equalsIgnoreCompatibleNullability(from, to)
 }

@@ -690,6 +690,17 @@ class SnapshotsMaintenanceSpec extends AnyFunSuite {
       Snapshots.append(spark, root,
         sliceA.withColumn("quality", lit("high")))
     }
+    // nullability may only tighten: null-free array elements append
+    // under a nullable-element pin, nullable ones never under a
+    // null-free pin (the pin would claim them non-null)
+    val strict = sliceA.select(col("doc_id"), array(lit(1L)).as("xs"))
+    val loose = sliceA.select(col("doc_id"), array(lit(null).cast("long")).as("xs"))
+    val strictRoot = java.nio.file.Files.createTempDirectory("graft_snapnn").toString
+    Snapshots.create(spark, strictRoot, strict)
+    intercept[IllegalArgumentException] { Snapshots.append(spark, strictRoot, loose) }
+    val looseRoot = java.nio.file.Files.createTempDirectory("graft_snapnull").toString
+    Snapshots.create(spark, looseRoot, loose)
+    assert(Snapshots.append(spark, looseRoot, strict) === 2)
   }
 
   test("contiguous txn ids range-compress to one manifest tag line") {

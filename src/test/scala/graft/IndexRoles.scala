@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, GraftSnapshotFileIndex}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import graft.sources.Snapshots
+import scala.jdk.CollectionConverters._
 
 /** Spec helpers over a standing index's roles — each a [[Snapshots]]
   * table under the index root.
@@ -19,6 +20,16 @@ object IndexRoles {
   /** The ids in force in `tombstones/`, sorted. */
   def tombstoned(root: String, key: String): Seq[Long] =
     latest(root, "tombstones").select(key).collect().map(_.getLong(0)).sorted.toSeq
+
+  /** Every part file under `role`'s `data/` dir — what the disk
+    * holds, whichever versions reference it.
+    */
+  def partFiles(root: String, role: String): Seq[String] = {
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$root/$role/data"))
+    try walk.iterator().asScala.map(_.toString)
+      .filter(p => p.split('/').last.startsWith("part-")).toSeq
+    finally walk.close()
+  }
 
   /** Run `df`, then report (files planned, files held) of every
     * snapshot scan over `role` in it — the scan's file index records

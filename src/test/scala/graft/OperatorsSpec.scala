@@ -1351,10 +1351,12 @@ class PlanRegressionSpec extends org.scalatest.funsuite.AnyFunSuite {
     PqIndex.compact(spark, base)
     assert(IndexRoles.tombstoned(base, "neighbor_id").isEmpty,
       "compaction clears the tombstones")
-    val live = IndexRoles.latest(base, "codes")
+    // every codes file on disk, not just the latest version's: no index
+    // version pins the replaced ones, so compact vacuums them
+    val onDisk = spark.read.parquet(IndexRoles.partFiles(base, "codes"): _*)
       .select("neighbor_id").as[Long].collect().toSet
-    assert(delIds.forall(id => !live.contains(id)),
-      "compaction physically drops tombstoned codes")
+    assert(delIds.forall(id => !onDisk.contains(id)),
+      "compaction physically drops tombstoned codes from disk")
     assert(run(base) === want, "search identical after the reclaim")
   }
 
@@ -1372,9 +1374,12 @@ class PlanRegressionSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(PqIndex.searchRoot(spark, sf, base).collect().isEmpty,
       "searching the fully reclaimed index returns zero candidates")
     assert(IndexRoles.latest(base, "codes").isEmpty)
-    // an empty batch (an empty stream trigger) and a compact of the
-    // empty index keep it readable
+    // an empty batch (an empty stream trigger) commits nothing, and it
+    // and a compact of the empty index keep it readable
+    val codesV = graft.sources.Snapshots.latestVersion(spark, s"$base/codes")
     PqIndex.append(spark, base, Similarity.normed(spark, sf).limit(0))
+    assert(graft.sources.Snapshots.latestVersion(spark, s"$base/codes") === codesV,
+      "an empty append claims no codes version")
     PqIndex.compact(spark, base)
     assert(PqIndex.searchRoot(spark, sf, base).collect().isEmpty,
       "an empty append and compact on the reclaimed-empty index keep it readable")
