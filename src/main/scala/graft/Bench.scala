@@ -2,120 +2,6 @@ package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
 
-  /** Short keys for the stdout JSON line. The driver tail-captures
-    * ~2000 chars and parses the LAST line; at 88 queries the full
-    * `q_*` names measured 1903 chars — five more queries would
-    * overflow the window and kill bench visibility (memory: rounds
-    * 1–4 recorded `parsed:null`). Keys are 2 chars where the prefix is
-    * unambiguous, 3 on collision. At 139 queries even the 2-char map
-    * overflowed (1538 chars worst-case), so the line now carries only
-    * the [[LineTopK]] slowest queries plus every failure (negative
-    * value = the alarm) and an "nq" count; the COMPLETE per-query
-    * wall+cpu map with full names goes to the [[detailFile]]. The
-    * budget is now catalog-size-INDEPENDENT — BenchLineSpec pins
-    * uniqueness and the worst-case length.
-    */
-  private[graft] val ShortKey = Map(
-    "q1_pricing_summary" -> "q1", "q3_top_revenue" -> "q3",
-    "q5_region_volume" -> "q5", "q_active_projects" -> "ap",
-    "q_ann_brute_topk" -> "ab", "q_ann_ivf2_topk" -> "ai",
-    "q_ann_ivf_topk" -> "aiv", "q_ann_ivfpq_topk" -> "aip",
-    "q_ann_lsh_topk" -> "al", "q_ann_pq_indexed" -> "api", "q_ann_advisor" -> "aad",
-    "q_ann_advisor_filtered" -> "adf",
-    "q_ann_pq_topk" -> "apq", "q_ann_opq_topk" -> "ao", "q_ann_sq_topk" -> "asq",
-    "q_ann_bq_topk" -> "abq", "q_ann_hnsw_topk" -> "ahn",
-    "q_ann_hnsw_indexed" -> "ahx",
-    "q_anti_join" -> "an",
-    "q_approx_stats" -> "apx", "q_argmax" -> "am",
-    "q_asof_join" -> "as", "q_attachment_text" -> "at",
-    "q_backlog_rank" -> "bk", "q_block_tree" -> "bt",
-    "q_bloom_prefilter" -> "bl", "q_bpe_encode" -> "bp",
-    "q_bpe_fertility" -> "bpf", "q_bpe_merges" -> "bpm",
-    "q_bpe_vocab" -> "bpv", "q_chunk_docs" -> "ch",
-    "q_clean_pipeline" -> "cl", "q_clean_text" -> "clt",
-    "q_contamination" -> "ct", "q_contamination_score" -> "cts",
-    "q_cooccur" -> "co", "q_corpus_pipeline" -> "cor",
-    "q_cube" -> "cu", "q_data_split" -> "ds",
-    "q_date_funcs" -> "dt", "q_dedup_clusters" -> "dc",
-    "q_dedup_containment" -> "dct", "q_dedup_embedding" -> "de",
-    "q_dedup_exact" -> "dex", "q_dedup_incremental" -> "di",
-    "q_dedup_keep_last" -> "dk", "q_dedup_minhash" -> "dm",
-    "q_dedup_ngram_jaccard" -> "dn", "q_dedup_semantic" -> "dse",
-    "q_dedup_simhash" -> "dsh", "q_dedup_span" -> "dsn",
-    "q_doc_fingerprint" -> "fg", "q_domain_mix" -> "dmx",
-    "q_domain_mix_alpha" -> "dma", "q_domain_mix_up" -> "dmu",
-    "q_embed_drift" -> "em", "q_epoch_shuffle" -> "ep",
-    "q_event_window_agg" -> "ev", "q_filter_tags" -> "ft",
-    "q_funnel" -> "fu", "q_gopher_filter" -> "go",
-    "q_heavy_hitters" -> "hh", "q_hierarchy_rollup" -> "hi",
-    "q_interval_join" -> "it", "q_json_normalize" -> "jn",
-    "q_json_props" -> "jp", "q_keyed_sample" -> "ks",
-    "q_kl_drift" -> "kl", "q_lang_id" -> "ln",
-    "q_lang_mismatch" -> "lm", "q_length_stats" -> "ls",
-    "q_lm_score" -> "lms", "q_markdown_runs" -> "md",
-    "q_moving_avg" -> "ma", "q_multimodal_meta" -> "mm",
-    "q_nb_train" -> "nbt", "q_nb_score" -> "nbs",
-    "q_nb_eval" -> "nbe", "q_nb_auc" -> "nba",
-    "q_dsir_weights" -> "dw", "q_dsir_select" -> "dws",
-    "q_filter_cascade" -> "fc", "q_char_entropy" -> "ce",
-    "q_pipeline_yield" -> "py", "q_blocklist_filter" -> "bf",
-    "q_skew_report" -> "sk", "q_corpus_card" -> "cc",
-    "q_event_transitions" -> "etr", "q_zipf_fit" -> "zf",
-    "q_bigram_entropy" -> "bge", "q_bpe_persisted" -> "bpp",
-    "q_bm25_rank" -> "bm", "q_bm25_indexed" -> "bmx", "q_hybrid_rrf" -> "rrf",
-    "q_bm25_versioned" -> "bmv",
-    "q_mmr_rerank" -> "mmr",
-    "q_phrase_search" -> "ph", "q_phrase_indexed" -> "phx",
-    "q_bucketed_join" -> "bj", "q_snapshot_read" -> "snp",
-    "q_snapshot_changes" -> "snc", "q_snapshot_merge" -> "snm",
-    "q_snapshot_read_pruned" -> "snq", "q_snapshot_merge_changes" -> "snx",
-    "q_snapshot_scan_pruned" -> "sni",
-    "q_snapshot_delete" -> "snd", "q_snapshot_change_feed" -> "snf",
-    "q_snapshot_update" -> "snu",
-    "q_snapshot_bloom_lookup" -> "snb", "q_snapshot_zorder" -> "snz",
-    "q_snapshot_drift" -> "snv",
-    "q_knn_label_acc" -> "kla", "q_dup_matrix" -> "dxm",
-    "q_event_paths" -> "epa", "q_shard_balance" -> "shb",
-    "q_weighted_sample" -> "ws", "q_cluster_reps" -> "crp",
-    "q_length_histogram" -> "lh", "q_unigram_vocab" -> "uv",
-    "q_unigram_encode" -> "ue", "q_unigram_refit" -> "ur",
-    "q_ngram_freq" -> "ng", "q_normalize_status" -> "ns",
-    "q_novelty" -> "no", "q_oldest_pending" -> "ol",
-    "q_overdue" -> "ov", "q_pack_efficiency" -> "pke", "q_pack_sequences" -> "pc",
-    "q_paged_ingest" -> "pg", "q_parent_join" -> "pj",
-    "q_period_report" -> "pr", "q_pii_scrub" -> "pi",
-    "q_pivot" -> "pv", "q_ppl_buckets" -> "pp",
-    "q_priority_dist" -> "pd", "q_project_flags" -> "pf",
-    "q_quality_calibration" -> "qc", "q_quality_sample" -> "qs",
-    "q_quality_score" -> "qsc", "q_rate_anomaly" -> "rt",
-    "q_repetition" -> "re", "q_report_doc" -> "rd",
-    "q_report_goals" -> "rg", "q_retention" -> "rtn",
-    "q_rollup" -> "rl", "q_running_total" -> "rto",
-    "q_scd2" -> "sc", "q_schema_health" -> "sch",
-    "q_semi_join" -> "se", "q_session_window" -> "ss",
-    "q_sessionize" -> "ssz", "q_set_ops" -> "so",
-    "q_source_overlap" -> "sov", "q_source_rank" -> "srk", "q_source_sim" -> "ssm",
-    "q_span_scrub" -> "ssc", "q_status_dist" -> "st",
-    "q_status_summary" -> "sts", "q_stratified_sample" -> "str",
-    "q_string_funcs" -> "stf", "q_term_search" -> "ts",
-    "q_tfidf_top_terms" -> "tf", "q_token_budget" -> "tb",
-    "q_token_count" -> "to", "q_topk_per_key" -> "tp",
-    "q_uncategorized" -> "un", "q_value_deciles" -> "dec",
-    "q_vocab_coverage" -> "vcv", "q_vocab_topk" -> "vc", "q_weekly_focus" -> "wk",
-    "q_weekly_velocity" -> "wkv", "q_weighted_mean" -> "wm",
-    "q_wow_change" -> "wo",
-    "q_topic_clusters" -> "tcl", "q_prototype_prune" -> "ppr",
-    "q_cluster_mix" -> "cmx", "q_ann_filtered_topk" -> "af",
-    "q_ann_ivf_filtered_topk" -> "aif", "q_hard_negatives" -> "hng",
-    "q_hard_negatives_ivf" -> "hni", "q_recall_report" -> "rcr",
-    "q_image_sim" -> "ims", "q_audio_sim" -> "aus", "q_entity_resolve" -> "ent",
-    "q_entity_resolve_incr" -> "eni", "q_entity_clusters" -> "enc",
-    "shared_bpe_learner" -> "Sbp", "shared_bpe_encode" -> "Sbe",
-    "shared_curation_frames" -> "Scf",
-    "shared_dedup_pairs" -> "Sdp", "shared_nb_model" -> "Snb",
-    "shared_report_frames" -> "Srf", "shared_text_pipeline" -> "Stp",
-    "shared_unigram_model" -> "Sug")
-
   /** Session-persisted shared frames, materialized BEFORE the query
     * loop as `shared_*` pseudo-entries. Without this, the build cost
     * lands on whichever consumer runs first — r8 measured
@@ -123,26 +9,27 @@ object Bench {
     * dedup pair pipeline that three other queries then rode, and the
     * HashMap iteration order silently reassigned that cost between
     * rounds. With the builds attributed here and the catalog iterated
-    * SORTED, per-query numbers compare round-over-round.
+    * SORTED, per-query numbers compare round-over-round. `short` keys
+    * a build on the stdout line, as `SparkEntry.Entry.short` keys an
+    * entry.
     */
-  private[graft] val SharedBuilds: Seq[(String, (SparkSession, String) => Unit)] = Seq(
-    "shared_bpe_learner" -> ((s, d) => graft.operators.Bpe.warmLearnedCache(s, d)),
-    "shared_bpe_encode" -> ((s, d) => graft.operators.Bpe.warmEncodeCache(s, d)),
-    "shared_curation_frames" -> ((s, d) => graft.operators.CorpusCuration.warmCurationCache(s, d)),
-    "shared_dedup_pairs" -> ((s, d) => graft.operators.Dedup.warmSharedCaches(s, d)),
-    "shared_nb_model" -> ((s, d) => graft.operators.Classifier.warmModelCache(s, d)),
-    "shared_report_frames" -> ((s, d) => graft.operators.ReportDoc.warmReportCache(s, d)),
-    "shared_text_pipeline" -> ((s, d) => graft.operators.TextAnalysis.warmPipelineCache(s, d)),
-    "shared_unigram_model" -> ((s, d) => graft.operators.Unigram.warmModelCache(s, d)))
+  private[graft] final case class Shared(key: String, short: String,
+                                         build: (SparkSession, String) => Unit)
+  private[graft] val SharedBuilds: Seq[Shared] = Seq(
+    Shared("shared_bpe_learner", "Sbp", graft.operators.Bpe.warmLearnedCache _),
+    Shared("shared_bpe_encode", "Sbe", graft.operators.Bpe.warmEncodeCache _),
+    Shared("shared_curation_frames", "Scf", graft.operators.CorpusCuration.warmCurationCache _),
+    Shared("shared_dedup_pairs", "Sdp", graft.operators.Dedup.warmSharedCaches _),
+    Shared("shared_nb_model", "Snb", graft.operators.Classifier.warmModelCache _),
+    Shared("shared_report_frames", "Srf", graft.operators.ReportDoc.warmReportCache _),
+    Shared("shared_text_pipeline", "Stp", graft.operators.TextAnalysis.warmPipelineCache _),
+    Shared("shared_unigram_model", "Sug", graft.operators.Unigram.warmModelCache _))
 
   /** Per-(sf, cpus) detail file, e.g. `bench_detail_sf0.1_c8.json`:
     * a capture never overwrites another scale's or core count's.
     */
   private[graft] def detailFile(sfName: String, cpus: Int): java.nio.file.Path =
     java.nio.file.Paths.get(s"bench_detail_${sfName}_c$cpus.json")
-
-  private[graft] def shortKey(name: String): String =
-    ShortKey.getOrElse(name, name.stripPrefix("q_"))
 
   /** Slowest-queries count carried on the stdout line (the heads anyone
     * reads first; the full map is in the detail file).
@@ -259,15 +146,14 @@ object Bench {
     // shared builds first (attributed pseudo-entries), then the catalog
     // in SORTED name order — deterministic attribution round-over-round
     // (HashMap order reassigned shared costs between rounds otherwise).
-    val sharedResults = SharedBuilds.map { case (name, warmFn) =>
-      measure(name)(warmFn(spark, sfDir))
-    }
-    val queryResults = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      measure(name)(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
+    val sharedResults = SharedBuilds.map(b => measure(b.key)(b.build(spark, sfDir)))
+    val entries = SparkEntry.catalog.sortBy(_.key)
+    val queryResults = entries.map { e =>
+      measure(e.key)(e.run(spark, sfDir).write.format("noop").mode("overwrite").save())
     }
     val results = sharedResults ++ queryResults
     // The one-line JSON must fit the driver's 2000-char tail-capture
-    // window even as the catalog grows: short keys (ShortKey above),
+    // window even as the catalog grows: short keys (`Entry.short`),
     // per-query times at 1 dp with trailing zeros trimmed, total at
     // 2 dp. Aggregate cpu seconds + load averages ride the line as the
     // contention indicators; the per-query cpu detail (with FULL query
@@ -287,7 +173,8 @@ object Bench {
     val fails = results.filter(_._2 < 0)
     val lineEntries = fails.take(LineFailCap) ++
       results.filter(_._2 >= 0).sortBy(-_._2).take(LineTopK)
-    val qs = lineEntries.map { case (k, v, _, _, _) => s"\"" + shortKey(k) + "\":" + fmt(1)(v) }
+    val short = (SharedBuilds.map(b => b.key -> b.short) ++ entries.map(e => e.key -> e.short)).toMap
+    val qs = lineEntries.map { case (k, v, _, _, _) => s"\"" + short(k) + "\":" + fmt(1)(v) }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(r => math.abs(r._2)).sum else 0.0
     val cpuTotal = results.map(_._3).sum

@@ -3,358 +3,78 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators.{AnnAdvisor, Clustering, CorpusCuration, Dedup, ExtendedAnalytics, GraphAnn, Retrieval, Similarity, TaskAnalytics, TextAnalysis}
 
-/** Driver contract — see /root/repo/SURVEY.md §2 (inventory) and §7 (plan).
+/** Driver contract — see SURVEY.md §2 (inventory) and §7 (plan).
   *
-  * Every implemented operator has a `queries` entry; SQL-expressible ones
-  * also have a DuckDB oracle in `oracleSql` with IDENTICAL output column
-  * names (the driver sorts columns by name before hashing values).
+  * [[catalog]] declares every entry once: its key, its bench short key,
+  * its run and what checks its rows. `queries` and `oracleSql` are
+  * views of it.
   */
 object SparkEntry {
+  type Run = (SparkSession, String) => DataFrame
+
+  /** What checks an entry's rows. */
+  sealed trait Check
+  /** A DuckDB query the driver hash-compares against the entry's rows,
+    * with IDENTICAL output column names (the driver sorts columns by
+    * name before hashing values). The text is built on first read:
+    * generating all of them takes ~0.5 s, which a run that only reads
+    * `queries` never pays.
+    */
+  final class Oracle(text: => String) extends Check { lazy val sql: String = text }
+  object Oracle { def apply(sql: => String): Oracle = new Oracle(sql) }
+  /** An approximate entry with no oracle: `gate` names its
+    * `RecallReport.GateThresholds` row, which `q_recall_report` holds
+    * to its threshold.
+    */
+  final case class Gated(gate: String) extends Check
+
+  /** One catalog entry; `short` keys it on Bench's stdout line, which
+    * the driver reads from a ~2000-char tail (BenchLineSpec pins the
+    * worst case).
+    */
+  final case class Entry(key: String, short: String, run: Run, check: Check)
+  object Entry {
+    def apply(key: String, run: Run, check: Check): Entry =
+      Entry(key, key.stripPrefix("q_"), run, check)
+  }
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     TaskAnalytics.q1PricingSummary(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // §2.1 reference-derived relational operators
-    "q_normalize_status" -> TaskAnalytics.normalizeStatus _,
-    "q_dedup_keep_last"  -> TaskAnalytics.dedupKeepLast _,
-    "q_filter_tags"      -> TaskAnalytics.filterTags _,
-    "q_status_summary"   -> TaskAnalytics.statusSummary _,
-    "q_status_dist"      -> TaskAnalytics.statusDist _,
-    "q_priority_dist"    -> TaskAnalytics.priorityDist _,
-    "q_overdue"          -> TaskAnalytics.overdue _,
-    "q_oldest_pending"   -> TaskAnalytics.oldestPending _,
-    "q_backlog_rank"     -> TaskAnalytics.backlogRank _,
-    "q_weekly_velocity"  -> TaskAnalytics.weeklyVelocity _,
-    "q_period_report"    -> TaskAnalytics.periodReport _,
-    "q_parent_join"      -> TaskAnalytics.parentJoin _,
-    "q_hierarchy_rollup" -> TaskAnalytics.hierarchyRollup _,
-    "q_project_flags"    -> TaskAnalytics.projectFlags _,
-    "q_clean_text"       -> TaskAnalytics.cleanTruncate _,
-    "q_uncategorized"    -> TaskAnalytics.uncategorized _,
-    "q_markdown_runs"    -> TaskAnalytics.markdownRuns _,
-    "q_active_projects"  -> TaskAnalytics.activeProjects _,
-    // §2.2 headline analytics
-    "q1_pricing_summary" -> TaskAnalytics.q1PricingSummary _,
-    "q3_top_revenue"     -> TaskAnalytics.q3TopRevenue _,
-    "q5_region_volume"   -> TaskAnalytics.q5RegionVolume _,
-    // §2.3 events (batch variants)
-    "q_sessionize"       -> TaskAnalytics.sessionize _,
-    "q_session_window"   -> TaskAnalytics.sessionWindow _,
-    "q_event_window_agg" -> TaskAnalytics.eventWindowAgg _,
-    "q_json_props"       -> TaskAnalytics.jsonProps _,
-    "q_json_normalize"   -> TaskAnalytics.jsonNormalize _,
-    // §2.4 deduplication
-    "q_dedup_exact"         -> Dedup.exact _,
-    "q_dedup_ngram_jaccard" -> Dedup.ngramJaccard _,
-    "q_dedup_minhash"       -> ((s, d) => Dedup.minhashLsh(s, d)),
-    // near-dup pairs rolled up to the (source, source) matrix
-    "q_dup_matrix"          -> Dedup.dupMatrix _,
-    "q_dedup_simhash"       -> ((s, d) => Dedup.simhash(s, d)),
-    "q_dedup_embedding"     -> Similarity.embeddingDup _,
-    "q_dedup_containment"   -> Dedup.containment _,
-    "q_dedup_incremental"   -> Dedup.incremental _,
-    // span-level (substring) dedup: maximal duplicated token spans
-    "q_dedup_span"          -> ((s, d) => Dedup.spanDedup(s, d)),
-    // the cleaning ACTION: cut the located spans out of the stream
-    "q_span_scrub"          -> ((s, d) => Dedup.spanScrub(s, d)),
-    // SemDeDup: cluster-restricted embedding near-dup prune
-    "q_dedup_semantic"      -> Similarity.semanticDedup _,
-    // cluster health card: size / cohesion / label purity per cell
-    "q_topic_clusters"      -> Clustering.topicClusters _,
-    // SSL-prototypes pruning: drop the most-prototypical quarter per cell
-    "q_prototype_prune"     -> Clustering.prototypePrune _,
-    // diversity rebalancing: cap every cell at the uniform share
-    "q_cluster_mix"         -> Clustering.clusterMix _,
-    // §2.5 similarity search
-    "q_ann_brute_topk" -> Similarity.annBruteTopK _,
-    // embedding-quality audit: 1-NN leave-one-out label accuracy
-    "q_knn_label_acc"  -> Similarity.knnLabelAcc _,
-    // attribute-filtered search (WHERE label = …): brute + IVF paths
-    "q_ann_filtered_topk"     -> Similarity.annFilteredTopK _,
-    "q_ann_ivf_filtered_topk" -> Similarity.annIvfFilteredTopK _,
-    // contrastive hard-negative mining: nearest cross-label neighbors
-    "q_hard_negatives"        -> Similarity.hardNegatives _,
-    // the IVF-probed scale path of the same mining (rows-only; recall
-    // vs the brute oracle is driver-gated via q_recall_report)
-    "q_hard_negatives_ivf"    -> Similarity.hardNegativesIvf _,
-    // SQ8 scalar quantization: the first accelerated path with a FULL
-    // oracle — the integer fixed-point surrogate makes the candidate
-    // cut engine-reproducible, so this one is hash-gated cell-exact
-    "q_ann_sq_topk"    -> Similarity.annSqTopK _,
-    // sign-bit binary quantization: the second full-oracle accelerated
-    // path — Hamming surrogate is xor+popcount integers in both
-    // engines, and with no trained parameters the oracle holds at any
-    // corpus size
-    "q_ann_bq_topk"    -> Similarity.annBqTopK _,
-    "q_ann_lsh_topk"   -> Similarity.annLshTopK _,
-    "q_ann_ivf_topk"   -> Similarity.annIvfTopK _,
-    "q_ann_ivf2_topk"  -> Similarity.annIvfLearnedTopK _,
-    "q_ann_pq_topk"    -> Similarity.annPqTopK _,
-    "q_ann_opq_topk"   -> Similarity.annOpqTopK _,
-    "q_ann_ivfpq_topk" -> Similarity.annIvfPqTopK _,
-    // persisted-index twin: same ranking from the materialized
-    // cell-partitioned artifact (sources.PqIndex; rows-only like the
-    // other ANN entries — equality with q_ann_ivfpq_topk is spec'd)
-    "q_ann_pq_indexed" -> sources.PqIndex.annPqIndexed _,
-    // graph-based ANN (the SPANN/DiskANN split): driver-local NSW
-    // beam routing over the bounded node set + distributed
-    // bucket-pruned exact rerank; gated via ann_hnsw_recall5
-    "q_ann_hnsw_topk"  -> GraphAnn.annHnswTopK _,
-    // persisted-artifact twin: same neighbors from the node-partitioned
-    // SPANN posting table + graph sidecar (sources.GraphIndex)
-    "q_ann_hnsw_indexed" -> sources.GraphIndex.annHnswIndexed _,
-    // full-oracle since r11: the participation ratio is computed via
-    // trace identities (tr(C)²/(tr(C²)·d) — no eigenvalues), so the
-    // whole decision pipeline is sequential-fold-reproducible in SQL
-    "q_ann_advisor"    -> AnnAdvisor.advisorVerdict _,
-    // third advisor axis: per-label filter selectivity → pre-filter
-    // brute vs post-filtered IVF with a scaled probe budget
-    "q_ann_advisor_filtered" -> AnnAdvisor.advisorFilteredVerdict _,
-    // driver-checked quality gate for every approximate entry above:
-    // recall@5 vs the exact in-catalog baselines + sketch error bounds,
-    // emitted as thresholded verdict rows against a generated VALUES
-    // oracle — a recall/bound regression now hash-fails the round
-    "q_recall_report"  -> operators.RecallReport.report _,
-    // §2.6 text analysis
-    "q_token_count"     -> TextAnalysis.tokenCount _,
-    "q_quality_score"   -> TextAnalysis.quality _,
-    // quality-weighted (importance) sampling: keep-prob == score
-    "q_quality_sample"  -> ((s, d) => TextAnalysis.qualitySample(s, d)),
-    "q_lang_id"         -> TextAnalysis.languageId _,
-    "q_doc_fingerprint" -> TextAnalysis.fingerprint _,
-    "q_pii_scrub"       -> TextAnalysis.piiScrub _,
-    "q_contamination"   -> TextAnalysis.contamination _,
-    "q_contamination_score" -> ((s, d) => TextAnalysis.contaminationScore(s, d)),
-    "q_tfidf_top_terms" -> TextAnalysis.tfidfTopTerms _,
-    "q_lm_score"        -> TextAnalysis.lmScore _,
-    "q_gopher_filter"   -> ((s, d) => TextAnalysis.gopherFilter(s, d)),
-    // compressibility gate: per-doc character Shannon entropy
-    "q_char_entropy"    -> ((s, d) => TextAnalysis.charEntropy(s, d)),
-    // per-stage corpus yield report over the cleaning gates
-    "q_pipeline_yield"  -> TextAnalysis.pipelineYield _,
-    // bad-word density gate (C4 blocklist family)
-    "q_blocklist_filter" -> ((s, d) => TextAnalysis.blocklistFilter(s, d)),
-    "q_repetition"      -> ((s, d) => TextAnalysis.repetition(s, d)),
-    "q_chunk_docs"      -> ((s, d) => TextAnalysis.chunkDocs(s, d)),
-    "q_cooccur"         -> TextAnalysis.cooccur _,
-    "q_dedup_clusters"  -> TextAnalysis.dedupClusters _,
-    // the clustering ACTION: keep the best member per near-dup cluster
-    "q_cluster_reps"    -> TextAnalysis.clusterReps _,
-    "q_clean_pipeline"  -> TextAnalysis.cleanPipeline _,
-    // the full corpus→training-sequences path as one composed query
-    "q_corpus_pipeline" -> ((s, d) => TextAnalysis.corpusPipeline(s, d)),
-    // §2.6b corpus curation (round 7): data selection / mixture monitors
-    "q_token_budget"   -> ((s, d) => CorpusCuration.tokenBudget(s, d)),
-    "q_ppl_buckets"    -> ((s, d) => CorpusCuration.pplBuckets(s, d)),
-    "q_source_sim"     -> CorpusCuration.sourceSim _,
-    "q_source_overlap" -> CorpusCuration.sourceOverlap _,
-    // weighted PageRank over the content-sharing source graph (edges =
-    // cross-source shared-shingle counts; 8 unrolled power iterations)
-    "q_source_rank"    -> ((s, d) => CorpusCuration.sourceRank(s, d)),
-    "q_kl_drift"       -> CorpusCuration.klDrift _,
-    "q_epoch_shuffle"  -> ((s, d) => CorpusCuration.epochShuffle(s, d)),
-    "q_quality_calibration" -> CorpusCuration.qualityCalibration _,
-    "q_novelty"       -> ((s, d) => CorpusCuration.novelty(s, d)),
-    "q_lang_mismatch" -> CorpusCuration.langMismatch _,
-    // per-source dataset datasheet (docs/dups/tokens/quality/lang mix)
-    "q_corpus_card"   -> CorpusCuration.corpusCard _,
-    "q_term_search"   -> ((s, d) => CorpusCuration.termSearch(s, d)),
-    // BM25 ranked search beside the boolean term search
-    "q_bm25_rank"     -> ((s, d) => Retrieval.bm25Rank(s, d)),
-    // standing-search twin: same ranking served from the persisted
-    // shard-partitioned postings index (sources.Bm25Index) — shares
-    // bm25Rank's oracle, the q_bpe_persisted artifact-identity pattern
-    "q_bm25_indexed"  -> sources.Bm25Index.bm25Indexed _,
-    // time-travel index read: ranks AT pinned v1 (the %3≠2 slice)
-    // while the v2 append exists — oracle recomputes v1's slice
-    "q_bm25_versioned" -> sources.Bm25Index.bm25Versioned _,
-    // hybrid retrieval: integer-division reciprocal-rank fusion of the
-    // BM25 and dense-cosine lists (full oracle — both lists are)
-    "q_hybrid_rrf"    -> ((s, d) => Retrieval.hybridRrf(s, d)),
-    // MMR diversified rerank of the dense retrieval list (full oracle:
-    // the greedy rounds unroll as generated CTEs)
-    "q_mmr_rerank"    -> ((s, d) => Retrieval.mmrRerank(s, d)),
-    // exact-phrase ranked search (decontamination quote-lookup), and
-    // its positional-postings standing twin — cell-equal, one oracle
-    "q_phrase_search"  -> ((s, d) => Retrieval.phraseSearch(s, d)),
-    "q_phrase_indexed" -> sources.PhraseIndex.phraseIndexed _,
-    // exchange-free co-located fact join from the bucketed layout
-    "q_bucketed_join"  -> sources.Bucketed.bucketedJoin _,
-    // time-travel read of a pinned snapshot version while a later
-    // append exists (manifest-versioned dataset)
-    "q_snapshot_read"  -> sources.Snapshots.snapshotRead _,
-    // append-only CDC over the same fixture: the 1→2 delta reads only
-    // v2's new files (zero I/O against the standing corpus)
-    "q_snapshot_changes" -> sources.Snapshots.snapshotChanges _,
-    // versioned keyed MERGE (keep-last upsert committed as a rewrite):
-    // updates replace, inserts land, untouched rows carry forward —
-    // the oracle recomputes the merged state closed-form
-    "q_snapshot_merge" -> sources.Snapshots.snapshotMerge _,
-    // the merge CHANGE FEED (Delta CDF): the upsert delta across the
-    // merge reads only the bounded changes/ files, never the corpus
-    "q_snapshot_merge_changes" -> sources.Snapshots.snapshotMergeChanges _,
-    // manifest-stats data skipping: the predicate prunes files at the
-    // MANIFEST (zero footer I/O) and the oracle recomputes from the
-    // predicate alone — skipping changes I/O, never results
-    "q_snapshot_read_pruned" -> sources.Snapshots.snapshotReadPruned _,
-    // planner-integrated skipping: the SAME predicate as an ordinary
-    // DataFrame filter over a custom FileIndex — Catalyst's pushed
-    // data filters reach the manifest stats prune, no StatsPred needed
-    "q_snapshot_scan_pruned" -> sources.Snapshots.snapshotScanPruned _,
-    // stats-pruned row-level DELETE (copy-on-write rewrites only the
-    // stat-overlapping files) read back post-delete
-    "q_snapshot_delete" -> sources.Snapshots.snapshotDelete _,
-    // stats-pruned row-level UPDATE (copy-on-write with the Delta
-    // pre+post change pair) read back post-update
-    "q_snapshot_update" -> sources.Snapshots.snapshotUpdate _,
-    // typed change feed: insert/delete rows attributed to their commits
-    "q_snapshot_change_feed" -> sources.Snapshots.snapshotChangeFeed _,
-    // per-file bloom membership skipping for point lookups on a
-    // layout-uncorrelated column (min/max stats cannot prune those)
-    "q_snapshot_bloom_lookup" -> sources.Snapshots.snapshotBloomLookup _,
-    // Morton z-order layout: the SECOND z dimension pruned via
-    // readWhere over a clusterZ'd artifact
-    "q_snapshot_zorder" -> sources.Snapshots.snapshotZorder _,
-    // cross-version corpus drift: per version slice, unigram KL to the
-    // union mixture (the JS decomposition) — the curation monitor
-    // composed onto the versioned layer
-    "q_snapshot_drift" -> sources.Snapshots.snapshotDrift _,
-    "q_rate_anomaly"  -> CorpusCuration.rateAnomaly _,
-    "q_embed_drift"   -> CorpusCuration.embedDrift _,
-    "q_pack_efficiency" -> CorpusCuration.packEfficiency _,
-    "q_vocab_coverage"  -> CorpusCuration.vocabCoverage _,
-    // distributional-health monitors beside q_kl_drift: rank-frequency
-    // slope (marginals) and conditional next-token entropy (transitions)
-    "q_zipf_fit"        -> CorpusCuration.zipfFit _,
-    "q_bigram_entropy"  -> CorpusCuration.bigramEntropy _,
-    // Efraimidis-Spirakis exact-size quality-weighted sample
-    "q_weighted_sample" -> CorpusCuration.weightedSample _,
-    // §2.6c learned data-selection filters (round 8): NB curated-text
-    // classifier (train/score/holdout-eval) + DSIR importance weights —
-    // full DuckDB oracles down to the training computation itself
-    "q_nb_train"      -> ((s, d) => operators.Classifier.nbTrain(s, d)),
-    "q_nb_score"      -> ((s, d) => operators.Classifier.nbScore(s, d)),
-    "q_nb_eval"       -> operators.Classifier.nbEval _,
-    // threshold-free ranking quality: binned ROC-AUC on the holdout
-    "q_nb_auc"        -> operators.Classifier.nbAuc _,
-    "q_dsir_weights"  -> ((s, d) => operators.Classifier.dsirWeights(s, d)),
-    "q_dsir_select"   -> ((s, d) => operators.Classifier.dsirSelect(s, d)),
-    // the cascade idiom: map-side heuristic gate prunes the stream
-    // BEFORE the learned model's token join sees it
-    "q_filter_cascade" -> ((s, d) => operators.Classifier.filterCascade(s, d)),
-    // §2.7 multimodal metadata
-    "q_multimodal_meta" -> TextAnalysis.multimodalMeta _,
-    // multimodal → embedding bridge: REAL ImageIO decode feeds a
-    // pixel-statistic embedding; near-dup IMAGE pairs, full oracle
-    // (closed-form generator recompute — the shard_balance contract)
-    "q_image_sim"       -> sources.ImageSim.imageSim _,
-    // the audio mirror: REAL javax.sound sample decode feeds the
-    // envelope+crossings embedding; near-dup CLIP pairs, full oracle
-    "q_audio_sim"       -> sources.AudioSim.audioSim _,
-    // record linkage: blocked fuzzy join over planted dirty records —
-    // blocking equi-join + levenshtein verify, full oracle
-    "q_entity_resolve"  -> operators.EntityResolve.entityResolve _,
-    // incremental twin: the arriving batch broadcasts into the blocked
-    // standing store — O(batch x avg-block) work, never O(store^2)
-    "q_entity_resolve_incr" -> operators.EntityResolve.entityResolveIncremental _,
-    // canonicalization: verified pairs -> connected components -> one
-    // golden record per entity cluster (longest name, min-id tiebreak)
-    "q_entity_clusters" -> operators.EntityResolve.entityClusters _,
-    // §2.1b extended composed analytics
-    "q_anti_join"         -> ExtendedAnalytics.customersWithoutOrders _,
-    "q_semi_join"         -> ExtendedAnalytics.activeCustomers _,
-    "q_rollup"            -> ExtendedAnalytics.rollupStatusPriority _,
-    "q_pivot"             -> ExtendedAnalytics.pivotStatusPriority _,
-    "q_stratified_sample" -> ExtendedAnalytics.stratifiedSample _,
-    "q_data_split"        -> ((s, d) => ExtendedAnalytics.dataSplit(s, d)),
-    "q_keyed_sample"      -> ExtendedAnalytics.keyedSample _,
-    // pretraining-mixture resampling: map-side hash filter against
-    // broadcast per-lang thresholds from one aggregate scan
-    "q_domain_mix"        -> ExtendedAnalytics.domainMix _,
-    "q_domain_mix_up"     -> ExtendedAnalytics.domainMixUpsample _,
-    "q_domain_mix_alpha"  -> ExtendedAnalytics.domainMixAlpha _,
-    // GPT-style concat-and-chunk packing via two-phase prefix sum
-    "q_pack_sequences"    -> ((s, d) => ExtendedAnalytics.packSequences(s, d)),
-    // distributed BPE vocabulary learning (operators.Bpe)
-    "q_bpe_merges"        -> operators.Bpe.bpeMerges _,
-    "q_bpe_vocab"         -> operators.Bpe.bpeVocab _,
-    // unigram-LM tokenizer (SentencePiece family): vocab, Viterbi
-    // encode, E-step piece counts
-    "q_unigram_vocab"     -> operators.Unigram.unigramVocab _,
-    "q_unigram_encode"    -> ((s, d) => operators.Unigram.unigramEncode(s, d)),
-    "q_unigram_refit"     -> operators.Unigram.unigramRefit _,
-    "q_bpe_encode"        -> ((s, d) => operators.Bpe.bpeEncode(s, d)),
-    // persisted-tokenizer round trip: save, reload, encode — the
-    // artifact contract is output identity with q_bpe_encode, so the
-    // two queries share one oracle
-    "q_bpe_persisted"     -> sources.TokenizerArtifact.encodePersisted _,
-    // sharded-export audit: the query reads the written artifact, the
-    // oracle recomputes the portable-hash assignment from the corpus
-    "q_shard_balance"     -> sources.Export.shardBalance _,
-    "q_bpe_fertility"     -> operators.Bpe.bpeFertility _,
-    // bloom runtime-filter pruning (plans.BloomMightContain)
-    "q_bloom_prefilter"   -> operators.BloomPrune.prefilterRevenue _,
-    // attachment-content extraction (sources.Attachments: binaryFile
-    // tree round-trip — download stage + readable-content query)
-    "q_attachment_text"   -> sources.Attachments.attachmentText _,
-    // block-tree + comments normalization (operators.BlockTree:
-    // recursive page tree → ordered markdown lines, json_extract oracle)
-    "q_block_tree"        -> operators.BlockTree.blockTree _,
-    // report-document assembly (operators.ReportDoc: the reference's
-    // PDF-report sections/grouping/numbering as position-ordered lines)
-    "q_report_doc"        -> operators.ReportDoc.reportDoc _,
-    // paginated-API ingest (sources.PagedTasks: DataSource V2 over
-    // response-envelope pages — parallel cursor chain, 429 retry,
-    // pruned parse, keep-last merge)
-    "q_paged_ingest"      -> sources.PagedTasks.pagedIngest _,
-    "q_vocab_topk"        -> ExtendedAnalytics.vocabTopK _,
-    "q_ngram_freq"        -> ExtendedAnalytics.ngramFreqTopK _,
-    "q_running_total"     -> ExtendedAnalytics.runningTotal _,
-    "q_wow_change"        -> ExtendedAnalytics.weekOverWeek _,
-    "q_length_stats"      -> ExtendedAnalytics.lengthStats _,
-    // custom whole-operator (plans.AsOfJoin: LogicalPlan+Strategy+Exec)
-    "q_asof_join"         -> ExtendedAnalytics.purchasesWithLastError _,
-    // bucketized range join (no nested loop: (user, ts-bucket) equi-join
-    // with the probe exploded to its 2 covering buckets)
-    "q_interval_join"     -> ExtendedAnalytics.errorContext _,
-    // SCD2 versioned-dimension build (keep-last dedup is the SCD1 half)
-    "q_scd2"              -> ExtendedAnalytics.scd2Intervals _,
-    // product-analytics staples over the event log
-    "q_funnel"            -> ExtendedAnalytics.funnel _,
-    "q_retention"         -> ExtendedAnalytics.retention _,
-    "q_weekly_focus"      -> TaskAnalytics.weeklyFocus _,
-    // sketches: both PORTABLE since r13 — q_approx_stats rides a KMV
-    // bottom-k distinct sketch + integer-grid histogram median and
-    // q_heavy_hitters a Count-Min sketch, each rebuilt bit-identically
-    // by its DuckDB oracle (full hash gates; the relerr recall gates
-    // additionally bound the estimates against exact answers)
-    "q_approx_stats"      -> ExtendedAnalytics.approxStats _,
-    "q_heavy_hitters"     -> operators.Sketches.heavyHitters _,
-    "q_schema_health"     -> ExtendedAnalytics.schemaHealth _,
-    // join-key skew diagnostic over the events fact
-    "q_skew_report"       -> ExtendedAnalytics.skewReport _,
-    // first-order Markov transition matrix over event types
-    "q_event_transitions" -> ExtendedAnalytics.eventTransitions _,
-    // top 3-step event-type paths (the multi-step habits a first-order
-    // transition matrix flattens)
-    "q_event_paths"       -> ExtendedAnalytics.eventPaths _,
-    // log2-bucketed doc-length profile
-    "q_length_histogram"  -> ExtendedAnalytics.lengthHistogram _,
-    "q_report_goals"      -> ExtendedAnalytics.reportGoals _,
-    "q_moving_avg"        -> ExtendedAnalytics.movingAvg _,
-    "q_value_deciles"     -> ExtendedAnalytics.valueDeciles _,
-    // custom bounded-heap operator (plans.TopKPerKey)
-    "q_topk_per_key"      -> ExtendedAnalytics.topOrdersPerCustomer _,
-    "q_cube"              -> ExtendedAnalytics.cubeStatusPriority _,
-    "q_argmax"            -> ExtendedAnalytics.argmaxOrder _,
-    "q_string_funcs"      -> ExtendedAnalytics.stringFuncs _,
-    "q_date_funcs"        -> ExtendedAnalytics.dateFuncs _,
-    "q_set_ops"           -> ExtendedAnalytics.setOps _,
-    // typed Aggregator (functions.WeightedMean)
-    "q_weighted_mean"     -> ExtendedAnalytics.weightedMeanPrice _,
-  )
+  def queries: Map[String, Run] = catalog.map(e => e.key -> e.run).toMap
+
+  def oracleSql: Map[String, String] =
+    catalog.collect { case Entry(k, _, _, o: Oracle) => k -> o.sql }.toMap
+
+  /** Sort-free twin of every catalog query (`plans.Unordered` strips
+    * the outermost presentation ORDER BY): the form a pipeline composes
+    * when the next stage is a write/join/agg and the global range
+    * exchange would be pure waste. Result SET identical to the ordered
+    * form by construction; UnorderedFormSpec asserts the corpus-scale
+    * entries carry no global Sort at all.
+    */
+  def unordered: Map[String, Run] =
+    queries.map { case (k, f) =>
+      k -> ((s: SparkSession, d: String) => graft.plans.Unordered.form(f(s, d)))
+    }
+
+  /** `entries`, once no key and no short key is declared twice (the
+    * shared builds' included) and every `Gated` names a
+    * `RecallReport.GateThresholds` row; throws otherwise.
+    */
+  private[graft] def checked(entries: Seq[Entry], shared: Seq[Bench.Shared]): Seq[Entry] = {
+    def once(what: String, names: Seq[String]): Unit = {
+      val twice = names.diff(names.distinct).distinct
+      require(twice.isEmpty, s"catalog declares a $what twice: ${twice.mkString(", ")}")
+    }
+    once("key", entries.map(_.key) ++ shared.map(_.key))
+    once("short key", entries.map(_.short) ++ shared.map(_.short))
+    val gates = operators.RecallReport.GateThresholds.map(_._1).toSet
+    val unknown = entries.collect { case Entry(k, _, _, Gated(g)) if !gates(g) => s"$k -> $g" }
+    require(unknown.isEmpty, s"no RecallReport.GateThresholds row for: ${unknown.mkString(", ")}")
+    entries
+  }
 
   /** Shared DuckDB fragments — single source for the standalone
     * quality/lang/PII oracles and the composed cleaning-pipeline oracle
@@ -473,20 +193,12 @@ object SparkEntry {
              'https?://[^\s]+', '<URL>', 'g'),
            '[0-9]{6,}', '<NUM>', 'g')""".replace("COLREF", c)
 
-  /** Sort-free twin of every catalog query (`plans.Unordered` strips
-    * the outermost presentation ORDER BY): the form a pipeline composes
-    * when the next stage is a write/join/agg and the global range
-    * exchange would be pure waste. Result SET identical to the ordered
-    * form by construction; UnorderedFormSpec asserts the corpus-scale
-    * entries carry no global Sort at all.
+  /** Every catalog entry, each declared once. Lazy: the oracles read
+    * the shared fragments above, and building the list checks it.
     */
-  def unordered: Map[String, (SparkSession, String) => DataFrame] =
-    queries.map { case (k, f) =>
-      k -> ((s: SparkSession, d: String) => graft.plans.Unordered.form(f(s, d)))
-    }
-
-  def oracleSql: Map[String, String] = Map(
-    "q_normalize_status" ->
+  lazy val catalog: Seq[Entry] = checked(Seq(
+    // §2.1 reference-derived relational operators
+    Entry("q_normalize_status", "ns", TaskAnalytics.normalizeStatus _, Oracle(
       """SELECT o_orderkey,
          CASE o_orderstatus WHEN 'O' THEN 'open' WHEN 'F' THEN 'finished'
               WHEN 'P' THEN 'pending' ELSE 'unknown' END AS status,
@@ -494,48 +206,48 @@ object SparkEntry {
               WHEN '3-MEDIUM' THEN 2 WHEN '4-NOT SPECIFIED' THEN 3
               WHEN '5-LOW' THEN 4 ELSE 5 END AS prio_score,
          strftime(o_orderdate, '%Y-%m-%d') AS order_date
-         FROM orders ORDER BY o_orderkey""",
-    "q_dedup_keep_last" ->
+         FROM orders ORDER BY o_orderkey""")),
+    Entry("q_dedup_keep_last", "dk", TaskAnalytics.dedupKeepLast _, Oracle(
       """SELECT user_id, event_type, event_id, round(value, 2) AS value
          FROM events
          QUALIFY row_number() OVER (PARTITION BY user_id, event_type
                                     ORDER BY ts DESC, event_id DESC) = 1
-         ORDER BY user_id, event_type""",
-    "q_filter_tags" ->
+         ORDER BY user_id, event_type""")),
+    Entry("q_filter_tags", "ft", TaskAnalytics.filterTags _, Oracle(
       """SELECT doc_id, lang, source FROM documents
          WHERE list_has_any(string_split(text, ' '),
                             ['spark', 'shuffle', 'partition'])
-         ORDER BY doc_id""",
-    "q_status_summary" ->
+         ORDER BY doc_id""")),
+    Entry("q_status_summary", "sts", TaskAnalytics.statusSummary _, Oracle(
       """SELECT count(*) AS total,
          count(*) FILTER (WHERE o_orderstatus = 'F') AS finished,
          count(*) FILTER (WHERE o_orderstatus = 'O') AS open,
          count(*) FILTER (WHERE o_orderstatus = 'P') AS pending
-         FROM orders""",
-    "q_status_dist" ->
+         FROM orders""")),
+    Entry("q_status_dist", "st", TaskAnalytics.statusDist _, Oracle(
       """SELECT CASE o_orderstatus WHEN 'O' THEN 'open' WHEN 'F' THEN 'finished'
               WHEN 'P' THEN 'pending' ELSE 'unknown' END AS status,
          count(*) AS n
-         FROM orders GROUP BY 1 ORDER BY status""",
-    "q_priority_dist" ->
+         FROM orders GROUP BY 1 ORDER BY status""")),
+    Entry("q_priority_dist", "pd", TaskAnalytics.priorityDist _, Oracle(
       """SELECT o_orderpriority AS priority,
          CASE o_orderpriority WHEN '1-URGENT' THEN 0 WHEN '2-HIGH' THEN 1
               WHEN '3-MEDIUM' THEN 2 WHEN '4-NOT SPECIFIED' THEN 3
               WHEN '5-LOW' THEN 4 ELSE 5 END AS prio_score,
          count(*) AS n, round(sum(o_totalprice), 2) AS total_price
-         FROM orders GROUP BY 1, 2 ORDER BY prio_score""",
-    "q_overdue" ->
+         FROM orders GROUP BY 1, 2 ORDER BY prio_score""")),
+    Entry("q_overdue", "ov", TaskAnalytics.overdue _, Oracle(
       """SELECT o_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS order_date,
          o_orderpriority AS priority, round(o_totalprice, 2) AS total_price
          FROM orders
          WHERE o_orderstatus = 'O' AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
-         ORDER BY order_date, o_orderkey""",
-    "q_oldest_pending" ->
+         ORDER BY order_date, o_orderkey""")),
+    Entry("q_oldest_pending", "ol", TaskAnalytics.oldestPending _, Oracle(
       """SELECT o_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS order_date,
          o_orderpriority AS priority
          FROM orders WHERE o_orderstatus = 'O'
-         ORDER BY order_date, o_orderkey LIMIT 5""",
-    "q_backlog_rank" ->
+         ORDER BY order_date, o_orderkey LIMIT 5""")),
+    Entry("q_backlog_rank", "bk", TaskAnalytics.backlogRank _, Oracle(
       """SELECT o_orderkey,
          CASE o_orderpriority WHEN '1-URGENT' THEN 0 WHEN '2-HIGH' THEN 1
               WHEN '3-MEDIUM' THEN 2 WHEN '4-NOT SPECIFIED' THEN 3
@@ -543,41 +255,41 @@ object SparkEntry {
          strftime(o_orderdate, '%Y-%m-%d') AS order_date,
          round(o_totalprice, 2) AS total_price
          FROM orders WHERE o_orderstatus = 'O'
-         ORDER BY prio_score, order_date, o_orderkey LIMIT 15""",
-    "q_weekly_velocity" ->
+         ORDER BY prio_score, order_date, o_orderkey LIMIT 15""")),
+    Entry("q_weekly_velocity", "wkv", TaskAnalytics.weeklyVelocity _, Oracle(
       """SELECT strftime(date_trunc('week', o_orderdate), '%Y-%m-%d') AS week,
          count(*) AS n_completed
          FROM orders WHERE o_orderstatus = 'F'
-         GROUP BY 1 ORDER BY week""",
-    "q_period_report" ->
+         GROUP BY 1 ORDER BY week""")),
+    Entry("q_period_report", "pr", TaskAnalytics.periodReport _, Oracle(
       """SELECT o_orderpriority AS priority, count(*) AS n,
          round(sum(o_totalprice), 2) AS total_price
          FROM orders
          WHERE o_orderstatus = 'F'
            AND o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
            AND o_orderdate <= TIMESTAMP '1997-06-30 00:00:00'
-         GROUP BY 1 ORDER BY priority""",
-    "q_parent_join" ->
+         GROUP BY 1 ORDER BY priority""")),
+    Entry("q_parent_join", "pj", TaskAnalytics.parentJoin _, Oracle(
       """SELECT c_custkey, c_name, count(*) AS n_orders,
          round(sum(o_totalprice), 2) AS total_price
          FROM orders JOIN customer ON o_custkey = c_custkey
-         GROUP BY 1, 2 ORDER BY c_custkey""",
-    "q_hierarchy_rollup" ->
+         GROUP BY 1, 2 ORDER BY c_custkey""")),
+    Entry("q_hierarchy_rollup", "hi", TaskAnalytics.hierarchyRollup _, Oracle(
       """SELECT r_name, n_name, count(DISTINCT c_custkey) AS n_customers,
          count(*) AS n_orders, round(sum(o_totalprice), 2) AS total_price
          FROM orders
          JOIN customer ON o_custkey = c_custkey
          JOIN nation ON c_nationkey = n_nationkey
          JOIN region ON n_regionkey = r_regionkey
-         GROUP BY 1, 2 ORDER BY r_name, n_name""",
-    "q_project_flags" ->
+         GROUP BY 1, 2 ORDER BY r_name, n_name""")),
+    Entry("q_project_flags", "pf", TaskAnalytics.projectFlags _, Oracle(
       """SELECT c_custkey, c_name, coalesce(n_orders, 0) AS n_orders,
          coalesce(n_orders, 0) >= 12 AS is_project
          FROM customer LEFT JOIN
            (SELECT o_custkey, count(*) AS n_orders FROM orders GROUP BY 1) t
            ON c_custkey = o_custkey
-         ORDER BY c_custkey""",
-    "q_clean_text" ->
+         ORDER BY c_custkey""")),
+    Entry("q_clean_text", "clt", TaskAnalytics.cleanTruncate _, Oracle(
       """SELECT doc_id,
          CASE WHEN length(t) > 60 THEN left(t, 57) || '...' ELSE t END AS clean_text
          FROM (SELECT doc_id,
@@ -585,11 +297,34 @@ object SparkEntry {
                  '’', ''''), '‘', ''''), '“', '"'), '”', '"'),
                  '–', '-'), '—', '-'), '…', '...') AS t
                FROM documents)
-         ORDER BY doc_id""",
-    "q_uncategorized" ->
+         ORDER BY doc_id""")),
+    Entry("q_uncategorized", "un", TaskAnalytics.uncategorized _, Oracle(
       """SELECT o_orderkey, o_orderstatus AS status FROM orders
-         WHERE o_orderstatus NOT IN ('O', 'F') ORDER BY o_orderkey""",
-    "q1_pricing_summary" ->
+         WHERE o_orderstatus NOT IN ('O', 'F') ORDER BY o_orderkey""")),
+    Entry("q_markdown_runs", "md", TaskAnalytics.markdownRuns _, Oracle(
+      """WITH md AS (
+           SELECT doc_id,
+             array_to_string(list_transform(regexp_extract_all(lower(text), '[a-z0-9]+')[1:5],
+               (x, i) -> CASE WHEN i % 2 = 0 THEN '**' || x || '**' ELSE x END), ' ') AS md
+           FROM documents),
+         segs AS (SELECT doc_id, string_split(md, '**') AS segs FROM md)
+         SELECT doc_id, CAST(gs - 1 AS INTEGER) AS run_idx, segs[gs] AS run_text,
+           (gs - 1) % 2 = 1 AS is_bold
+         FROM segs, unnest(generate_series(1, len(segs))) AS g(gs)
+         WHERE segs[gs] <> ''
+         ORDER BY doc_id, run_idx""")),
+    Entry("q_active_projects", "ap", TaskAnalytics.activeProjects _, Oracle(
+      """SELECT c_custkey, c_name, n_orders, n_open, open_prios
+         FROM customer JOIN (
+           SELECT o_custkey, count(*) AS n_orders,
+             count(*) FILTER (WHERE o_orderstatus = 'O') AS n_open,
+             array_to_string(list_sort(list(DISTINCT o_orderpriority)
+               FILTER (WHERE o_orderstatus = 'O')), ',') AS open_prios
+           FROM orders GROUP BY 1) t ON c_custkey = o_custkey
+         WHERE n_orders >= 12 AND n_open > 0
+         ORDER BY c_custkey""")),
+    // §2.2 headline analytics
+    Entry("q1_pricing_summary", "q1", TaskAnalytics.q1PricingSummary _, Oracle(
       """SELECT l_returnflag, l_linestatus,
          round(sum(l_quantity), 2) AS sum_qty,
          round(sum(l_extendedprice), 2) AS sum_base_price,
@@ -600,8 +335,8 @@ object SparkEntry {
          round(avg(l_discount), 4) AS avg_disc,
          count(*) AS count_order
          FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-         GROUP BY 1, 2 ORDER BY l_returnflag, l_linestatus""",
-    "q3_top_revenue" ->
+         GROUP BY 1, 2 ORDER BY l_returnflag, l_linestatus""")),
+    Entry("q3_top_revenue", "q3", TaskAnalytics.q3TopRevenue _, Oracle(
       """SELECT l_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS order_date,
          o_orderpriority,
          round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
@@ -611,8 +346,8 @@ object SparkEntry {
          WHERE c_mktsegment = 'BUILDING'
            AND o_orderdate < TIMESTAMP '1997-06-01 00:00:00'
            AND l_shipdate > TIMESTAMP '1997-06-01 00:00:00'
-         GROUP BY 1, 2, 3 ORDER BY revenue DESC, l_orderkey LIMIT 10""",
-    "q5_region_volume" ->
+         GROUP BY 1, 2, 3 ORDER BY revenue DESC, l_orderkey LIMIT 10""")),
+    Entry("q5_region_volume", "q5", TaskAnalytics.q5RegionVolume _, Oracle(
       """SELECT r_name, n_name,
          round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
          FROM lineitem
@@ -621,8 +356,9 @@ object SparkEntry {
          JOIN nation ON c_nationkey = n_nationkey
          JOIN region ON n_regionkey = r_regionkey
          WHERE year(o_orderdate) = 1997
-         GROUP BY 1, 2 ORDER BY r_name, n_name""",
-    "q_sessionize" ->
+         GROUP BY 1, 2 ORDER BY r_name, n_name""")),
+    // §2.3 events (batch variants)
+    Entry("q_sessionize", "ssz", TaskAnalytics.sessionize _, Oracle(
       """WITH flagged AS (
            SELECT user_id, event_id, ts, value,
              CASE WHEN lag(ts) OVER w IS NULL
@@ -638,8 +374,8 @@ object SparkEntry {
          SELECT user_id, session_id, count(*) AS n_events,
            strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
            round(sum(value), 2) AS value_sum
-         FROM sess GROUP BY 1, 2 ORDER BY user_id, session_id""",
-    "q_session_window" ->
+         FROM sess GROUP BY 1, 2 ORDER BY user_id, session_id""")),
+    Entry("q_session_window", "ss", TaskAnalytics.sessionWindow _, Oracle(
       """WITH flagged AS (
            SELECT user_id, event_id, ts, value,
              CASE WHEN lag(ts) OVER w IS NULL
@@ -656,40 +392,18 @@ object SparkEntry {
            strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
            count(*) AS n_events, round(sum(value), 2) AS value_sum
          FROM sess GROUP BY user_id, session_id
-         ORDER BY user_id, session_start""",
-    "q_event_window_agg" ->
+         ORDER BY user_id, session_start""")),
+    Entry("q_event_window_agg", "ev", TaskAnalytics.eventWindowAgg _, Oracle(
       """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
          event_type, count(*) AS n, round(sum(value), 2) AS value_sum
-         FROM events GROUP BY 1, 2 ORDER BY hour, event_type""",
-    "q_json_props" ->
+         FROM events GROUP BY 1, 2 ORDER BY hour, event_type""")),
+    Entry("q_json_props", "jp", TaskAnalytics.jsonProps _, Oracle(
       """SELECT event_type, count(*) AS n,
          CAST(sum(k) AS BIGINT) AS k_sum, min(k) AS k_min, max(k) AS k_max
          FROM (SELECT event_type,
                CAST(json_extract_string(props, '$.k') AS BIGINT) AS k FROM events)
-         GROUP BY 1 ORDER BY event_type""",
-    "q_markdown_runs" ->
-      """WITH md AS (
-           SELECT doc_id,
-             array_to_string(list_transform(regexp_extract_all(lower(text), '[a-z0-9]+')[1:5],
-               (x, i) -> CASE WHEN i % 2 = 0 THEN '**' || x || '**' ELSE x END), ' ') AS md
-           FROM documents),
-         segs AS (SELECT doc_id, string_split(md, '**') AS segs FROM md)
-         SELECT doc_id, CAST(gs - 1 AS INTEGER) AS run_idx, segs[gs] AS run_text,
-           (gs - 1) % 2 = 1 AS is_bold
-         FROM segs, unnest(generate_series(1, len(segs))) AS g(gs)
-         WHERE segs[gs] <> ''
-         ORDER BY doc_id, run_idx""",
-    "q_active_projects" ->
-      """SELECT c_custkey, c_name, n_orders, n_open, open_prios
-         FROM customer JOIN (
-           SELECT o_custkey, count(*) AS n_orders,
-             count(*) FILTER (WHERE o_orderstatus = 'O') AS n_open,
-             array_to_string(list_sort(list(DISTINCT o_orderpriority)
-               FILTER (WHERE o_orderstatus = 'O')), ',') AS open_prios
-           FROM orders GROUP BY 1) t ON c_custkey = o_custkey
-         WHERE n_orders >= 12 AND n_open > 0
-         ORDER BY c_custkey""",
-    "q_json_normalize" ->
+         GROUP BY 1 ORDER BY event_type""")),
+    Entry("q_json_normalize", "jn", TaskAnalytics.jsonNormalize _, Oracle(
       """WITH toks AS (
            SELECT doc_id, lang, regexp_extract_all(lower(text), '[a-z0-9]+') AS t
            FROM documents),
@@ -713,225 +427,165 @@ object SparkEntry {
                   THEN '**' || json_extract_string(j, '$.properties.Name.title[1].plain_text') || '**'
                   ELSE coalesce(json_extract_string(j, '$.properties.Name.title[1].plain_text'), '') END
              || coalesce(json_extract_string(j, '$.properties.Name.title[2].plain_text'), '') AS title_md
-         FROM page ORDER BY doc_id""",
-    "q_dedup_exact" ->
+         FROM page ORDER BY doc_id""")),
+    // §2.4 deduplication
+    Entry("q_dedup_exact", "dex", Dedup.exact _, Oracle(
       """SELECT md5(text) AS content_md5, count(*) AS n_docs, min(doc_id) AS rep_id
-         FROM documents GROUP BY 1 ORDER BY content_md5""",
-    "q_dedup_ngram_jaccard" -> Dedup.sqlNgramJaccard,
-    "q_dedup_minhash"       -> Dedup.sqlMinhashLsh,
-    "q_dup_matrix"          -> Dedup.sqlDupMatrix,
-    "q_dedup_simhash"       -> Dedup.sqlSimhash,
-    "q_dedup_embedding"     -> Similarity.sqlEmbeddingDup,
-    "q_dedup_containment"   -> Dedup.sqlContainment,
-    "q_dedup_incremental"   -> Dedup.sqlIncremental,
-    "q_dedup_span"          -> Dedup.sqlSpanDedup,
-    "q_span_scrub"          -> Dedup.sqlSpanScrub,
-    "q_dedup_semantic"      -> Similarity.sqlSemanticDedup,
-    "q_topic_clusters"      -> Clustering.sqlTopicClusters,
-    "q_prototype_prune"     -> Clustering.sqlPrototypePrune,
-    "q_cluster_mix"         -> Clustering.sqlClusterMix,
-    "q_ann_brute_topk"      -> Similarity.sqlAnnBruteTopK,
-    "q_ann_sq_topk"         -> Similarity.sqlAnnSqTopK,
-    "q_ann_bq_topk"         -> Similarity.sqlAnnBqTopK,
-    "q_ann_filtered_topk"   -> Similarity.sqlAnnFilteredTopK,
-    "q_hard_negatives"      -> Similarity.sqlHardNegatives,
-    "q_knn_label_acc"       -> Similarity.sqlKnnLabelAcc,
-    "q_recall_report"       -> operators.RecallReport.oracleSql,
-    "q_heavy_hitters"       -> operators.Sketches.heavyHittersOracleSql,
-    "q_approx_stats"        -> ExtendedAnalytics.approxStatsOracleSql,
-    "q_ann_advisor"          -> AnnAdvisor.sqlAdvisor,
-    "q_ann_advisor_filtered" -> AnnAdvisor.sqlAdvisorFiltered,
-    "q_keyed_sample" ->
-      s"""WITH h AS (
-           SELECT lang, doc_id,
-             (doc_id * ${operators.ExtendedAnalytics.KeyedSampleA}) % ${functions.TextFunctions.HashP} AS hkey
-           FROM documents)
-         SELECT lang, doc_id, hkey FROM h
-         QUALIFY row_number() OVER (PARTITION BY lang ORDER BY hkey, doc_id)
-           <= ${operators.ExtendedAnalytics.KeyedSampleK}
-         ORDER BY lang, hkey, doc_id""",
-    "q_bloom_prefilter" ->
-      s"""SELECT o_orderpriority, count(*) AS n_items,
-         round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         WHERE o_orderstatus = 'F'
-           AND o_orderdate >= TIMESTAMP '${operators.BloomPrune.CutoffDate} 00:00:00'
-         GROUP BY o_orderpriority ORDER BY o_orderpriority""",
-    "q_attachment_text" -> sources.Attachments.oracleSql,
-    "q_gopher_filter" -> TextAnalysis.gopherOracleSql,
-    "q_funnel" ->
-      """WITH e AS (
-         |  SELECT user_id, event_type,
-         |         epoch_us(CAST(ts AS TIMESTAMP)) AS us
-         |  FROM events
-         |), s1 AS (
-         |  SELECT user_id, min(us) AS t FROM e
-         |  WHERE event_type = 'signup' GROUP BY user_id
-         |), s2 AS (
-         |  SELECT e.user_id, min(us) AS t FROM e JOIN s1 USING (user_id)
-         |  WHERE event_type = 'click' AND us > s1.t GROUP BY e.user_id
-         |), s3 AS (
-         |  SELECT e.user_id, min(us) AS t FROM e JOIN s2 USING (user_id)
-         |  WHERE event_type = 'purchase' AND us > s2.t GROUP BY e.user_id
-         |)
-         |SELECT 1 AS stage_no, 'signup' AS stage,
-         |       (SELECT count(*) FROM s1) AS users
-         |UNION ALL SELECT 2, 'click', (SELECT count(*) FROM s2)
-         |UNION ALL SELECT 3, 'purchase', (SELECT count(*) FROM s3)
-         |ORDER BY stage_no""".stripMargin,
-    "q_retention" ->
-      """WITH e AS (
-         |  SELECT DISTINCT user_id,
-         |         CAST(date_trunc('week', CAST(ts AS TIMESTAMP)) AS DATE) AS week
-         |  FROM events
-         |), c AS (
-         |  SELECT user_id, min(week) AS cohort_week FROM e GROUP BY user_id
-         |)
-         |SELECT strftime(cohort_week, '%Y-%m-%d') AS cohort_week,
-         |  CAST(date_diff('day', cohort_week, week) // 7 AS INTEGER) AS week_offset,
-         |  count(DISTINCT e.user_id) AS users
-         |FROM e JOIN c USING (user_id)
-         |GROUP BY c.cohort_week, week_offset
-         |ORDER BY cohort_week, week_offset""".stripMargin,
-    "q_scd2" ->
-      """SELECT user_id,
-         |  CAST(row_number() OVER w AS INTEGER) AS version,
-         |  event_type AS state,
-         |  strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d %H:%M:%S.%f') AS valid_from,
-         |  strftime(CAST(lead(ts, 1) OVER w AS TIMESTAMP), '%Y-%m-%d %H:%M:%S.%f') AS valid_to
-         |FROM events
-         |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-         |ORDER BY user_id, version""".stripMargin,
-    "q_interval_join" ->
-      s"""WITH e AS (
-         |  SELECT event_id, user_id, event_type, value,
-         |         epoch_us(CAST(ts AS TIMESTAMP)) AS us
-         |  FROM events)
-         |SELECT a.event_id, a.user_id,
-         |  count(b.us) AS n_prior,
-         |  round(coalesce(sum(b.value), 0), 2) AS prior_value
-         |FROM (SELECT * FROM e WHERE event_type = 'error') a
-         |LEFT JOIN e b ON b.user_id = a.user_id
-         |  AND b.us >= a.us - ${operators.ExtendedAnalytics.IntervalUs}
-         |  AND b.us < a.us
-         |GROUP BY a.event_id, a.user_id
-         |ORDER BY a.event_id""".stripMargin,
-    "q_repetition" -> TextAnalysis.repetitionOracleSql,
-    "q_chunk_docs" -> TextAnalysis.chunkDocsOracleSql,
-    "q_bpe_merges" -> operators.Bpe.bpeOracleSql,
-    "q_bpe_vocab" -> operators.Bpe.bpeVocabOracleSql,
-    "q_unigram_vocab" -> operators.Unigram.unigramVocabOracleSql,
-    "q_unigram_encode" -> operators.Unigram.unigramEncodeOracleSql,
-    "q_unigram_refit" -> operators.Unigram.unigramRefitOracleSql,
-    "q_bpe_encode" -> operators.Bpe.bpeEncodeOracleSql,
-    "q_bpe_persisted" -> operators.Bpe.bpeEncodeOracleSql,
-    "q_shard_balance" -> sources.Export.shardBalanceOracleSql,
-    "q_bpe_fertility" -> operators.Bpe.bpeFertilityOracleSql,
-    "q_cooccur" -> TextAnalysis.cooccurOracleSql,
-    "q_block_tree" -> operators.BlockTree.oracleSql,
-    "q_report_doc" -> operators.ReportDoc.oracleSql,
-    "q_paged_ingest" -> sources.PagedTasks.oracleSql,
-    "q_lm_score" ->
+         FROM documents GROUP BY 1 ORDER BY content_md5""")),
+    Entry("q_dedup_ngram_jaccard", "dn", Dedup.ngramJaccard _, Oracle(Dedup.sqlNgramJaccard)),
+    Entry("q_dedup_minhash", "dm", ((s, d) => Dedup.minhashLsh(s, d)), Oracle(Dedup.sqlMinhashLsh)),
+    // near-dup pairs rolled up to the (source, source) matrix
+    Entry("q_dup_matrix", "dxm", Dedup.dupMatrix _, Oracle(Dedup.sqlDupMatrix)),
+    Entry("q_dedup_simhash", "dsh", ((s, d) => Dedup.simhash(s, d)), Oracle(Dedup.sqlSimhash)),
+    Entry("q_dedup_embedding", "de", Similarity.embeddingDup _, Oracle(Similarity.sqlEmbeddingDup)),
+    Entry("q_dedup_containment", "dct", Dedup.containment _, Oracle(Dedup.sqlContainment)),
+    Entry("q_dedup_incremental", "di", Dedup.incremental _, Oracle(Dedup.sqlIncremental)),
+    // span-level (substring) dedup: maximal duplicated token spans
+    Entry("q_dedup_span", "dsn", ((s, d) => Dedup.spanDedup(s, d)), Oracle(Dedup.sqlSpanDedup)),
+    // the cleaning ACTION: cut the located spans out of the stream
+    Entry("q_span_scrub", "ssc", ((s, d) => Dedup.spanScrub(s, d)), Oracle(Dedup.sqlSpanScrub)),
+    // SemDeDup: cluster-restricted embedding near-dup prune
+    Entry("q_dedup_semantic", "dse", Similarity.semanticDedup _,
+      Oracle(Similarity.sqlSemanticDedup)),
+    // cluster health card: size / cohesion / label purity per cell
+    Entry("q_topic_clusters", "tcl", Clustering.topicClusters _,
+      Oracle(Clustering.sqlTopicClusters)),
+    // SSL-prototypes pruning: drop the most-prototypical quarter per cell
+    Entry("q_prototype_prune", "ppr", Clustering.prototypePrune _,
+      Oracle(Clustering.sqlPrototypePrune)),
+    // diversity rebalancing: cap every cell at the uniform share
+    Entry("q_cluster_mix", "cmx", Clustering.clusterMix _, Oracle(Clustering.sqlClusterMix)),
+    // §2.5 similarity search
+    Entry("q_ann_brute_topk", "ab", Similarity.annBruteTopK _, Oracle(Similarity.sqlAnnBruteTopK)),
+    // embedding-quality audit: 1-NN leave-one-out label accuracy
+    Entry("q_knn_label_acc", "kla", Similarity.knnLabelAcc _, Oracle(Similarity.sqlKnnLabelAcc)),
+    // attribute-filtered search (WHERE label = …): brute + IVF paths
+    Entry("q_ann_filtered_topk", "af", Similarity.annFilteredTopK _,
+      Oracle(Similarity.sqlAnnFilteredTopK)),
+    Entry("q_ann_ivf_filtered_topk", "aif", Similarity.annIvfFilteredTopK _,
+      Gated("ann_ivf_filtered_recall5")),
+    // contrastive hard-negative mining: nearest cross-label neighbors
+    Entry("q_hard_negatives", "hng", Similarity.hardNegatives _,
+      Oracle(Similarity.sqlHardNegatives)),
+    // the IVF-probed scale path of the same mining
+    Entry("q_hard_negatives_ivf", "hni", Similarity.hardNegativesIvf _,
+      Gated("hard_negatives_ivf_recall5")),
+    // SQ8 scalar quantization: the first accelerated path with a FULL
+    // oracle — the integer fixed-point surrogate makes the candidate
+    // cut engine-reproducible, so this one is hash-gated cell-exact
+    Entry("q_ann_sq_topk", "asq", Similarity.annSqTopK _, Oracle(Similarity.sqlAnnSqTopK)),
+    // sign-bit binary quantization: the second full-oracle accelerated
+    // path — Hamming surrogate is xor+popcount integers in both
+    // engines, and with no trained parameters the oracle holds at any
+    // corpus size
+    Entry("q_ann_bq_topk", "abq", Similarity.annBqTopK _, Oracle(Similarity.sqlAnnBqTopK)),
+    Entry("q_ann_lsh_topk", "al", Similarity.annLshTopK _, Gated("ann_lsh_recall5")),
+    Entry("q_ann_ivf_topk", "aiv", Similarity.annIvfTopK _, Gated("ann_ivf_recall5")),
+    Entry("q_ann_ivf2_topk", "ai", Similarity.annIvfLearnedTopK _, Gated("ann_ivf2_recall5")),
+    Entry("q_ann_pq_topk", "apq", Similarity.annPqTopK _, Gated("ann_pq_recall5")),
+    Entry("q_ann_opq_topk", "ao", Similarity.annOpqTopK _, Gated("ann_opq_recall5")),
+    Entry("q_ann_ivfpq_topk", "aip", Similarity.annIvfPqTopK _, Gated("ann_ivfpq_recall5")),
+    // persisted-index twin: same ranking from the materialized
+    // cell-partitioned artifact (sources.PqIndex; equality with
+    // q_ann_ivfpq_topk is spec'd)
+    Entry("q_ann_pq_indexed", "api", sources.PqIndex.annPqIndexed _,
+      Gated("ann_pq_indexed_recall5")),
+    // graph-based ANN (the SPANN/DiskANN split): driver-local NSW
+    // beam routing over the bounded node set + distributed
+    // bucket-pruned exact rerank
+    Entry("q_ann_hnsw_topk", "ahn", GraphAnn.annHnswTopK _, Gated("ann_hnsw_recall5")),
+    // persisted-artifact twin: same neighbors from the node-partitioned
+    // SPANN posting table + graph sidecar (sources.GraphIndex)
+    Entry("q_ann_hnsw_indexed", "ahx", sources.GraphIndex.annHnswIndexed _,
+      Gated("ann_hnsw_indexed_recall5")),
+    // full-oracle since r11: the participation ratio is computed via
+    // trace identities (tr(C)²/(tr(C²)·d) — no eigenvalues), so the
+    // whole decision pipeline is sequential-fold-reproducible in SQL
+    Entry("q_ann_advisor", "aad", AnnAdvisor.advisorVerdict _, Oracle(AnnAdvisor.sqlAdvisor)),
+    // third advisor axis: per-label filter selectivity → pre-filter
+    // brute vs post-filtered IVF with a scaled probe budget
+    Entry("q_ann_advisor_filtered", "adf", AnnAdvisor.advisorFilteredVerdict _,
+      Oracle(AnnAdvisor.sqlAdvisorFiltered)),
+    // driver-checked quality gate for every approximate entry above:
+    // recall@5 vs the exact in-catalog baselines + sketch error bounds,
+    // emitted as thresholded verdict rows against a generated VALUES
+    // oracle — a recall/bound regression now hash-fails the round
+    Entry("q_recall_report", "rcr", operators.RecallReport.report _,
+      Oracle(operators.RecallReport.oracleSql)),
+    // §2.6 text analysis
+    Entry("q_token_count", "to", TextAnalysis.tokenCount _, Oracle(
+      """SELECT doc_id,
+         CAST(len(string_split_regex(text, '\s+')) AS INTEGER) AS ws_tokens,
+         CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]|[^a-z0-9\s]')) AS INTEGER) AS bpe_tokens
+         FROM documents ORDER BY doc_id""")),
+    Entry("q_quality_score", "qsc", TextAnalysis.quality _, Oracle(
+      s"""WITH $sqlQualityCtes
+         SELECT doc_id, quality FROM qq ORDER BY doc_id""")),
+    // quality-weighted (importance) sampling: keep-prob == score
+    Entry("q_quality_sample", "qs", ((s, d) => TextAnalysis.qualitySample(s, d)), Oracle(
+      s"""WITH $sqlQualityCtes
+         SELECT doc_id, quality FROM qq
+         WHERE (doc_id * ${operators.TextAnalysis.QualitySampleA}) % 2147483648 % 10000
+           < CAST(floor(quality * 10000.0 + 0.5) AS BIGINT)
+         ORDER BY doc_id""")),
+    Entry("q_lang_id", "ln", TextAnalysis.languageId _, Oracle(
+      s"""WITH $sqlLangCtes
+         SELECT doc_id, declared_lang, pred_lang FROM lp ORDER BY doc_id""")),
+    Entry("q_doc_fingerprint", "fg", TextAnalysis.fingerprint _, Oracle(
+      s"""SELECT doc_id, ${functions.TextFunctions.docFingerprintSql} AS fp
+         FROM documents ORDER BY doc_id""")),
+    Entry("q_pii_scrub", "pi", TextAnalysis.piiScrub _, Oracle(
+      s"""SELECT doc_id, ${sqlPii("text")} AS scrubbed
+         FROM documents ORDER BY doc_id""")),
+    Entry("q_contamination", "ct", TextAnalysis.contamination _, Oracle(
+      """WITH toks AS (
+           SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t
+           FROM documents),
+         sh AS (
+           SELECT doc_id, list_reduce(list_prepend(CAST(0 AS BIGINT),
+             list_transform(string_split(g, ''), c -> CAST(ascii(c) AS BIGINT))),
+             (a, c) -> (a * 31 + c) % 1000000007) AS h
+           FROM (SELECT doc_id, unnest(list_distinct(list_transform(
+                   generate_series(1, len(t) - 4),
+                   i -> array_to_string(t[i:i + 4], ' ')))) AS g
+                 FROM toks WHERE len(t) >= 5)),
+         ev AS (SELECT DISTINCT h FROM sh WHERE doc_id < 5)
+         SELECT DISTINCT doc_id FROM sh
+         WHERE doc_id >= 5 AND h IN (SELECT h FROM ev)
+         ORDER BY doc_id""")),
+    Entry("q_contamination_score", "cts", ((s, d) => TextAnalysis.contaminationScore(s, d)),
+      Oracle(TextAnalysis.contaminationScoreOracleSql)),
+    Entry("q_tfidf_top_terms", "tf", TextAnalysis.tfidfTopTerms _, Oracle(
+      """WITH tf AS (
+           SELECT doc_id, token, count(*) AS tf FROM (
+             SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS token
+             FROM documents)
+           GROUP BY 1, 2),
+         df AS (SELECT token, count(*) AS df FROM tf GROUP BY 1),
+         n AS (SELECT count(*) AS n FROM documents),
+         scored AS (
+           SELECT doc_id, token,
+             round(tf * ln(CAST(n.n AS DOUBLE) / df.df), 4) AS score
+           FROM tf JOIN df USING (token) CROSS JOIN n),
+         ranked AS (
+           SELECT doc_id, token, score,
+             CAST(row_number() OVER (PARTITION BY doc_id
+               ORDER BY score DESC, token) AS INTEGER) AS rank
+           FROM scored)
+         SELECT doc_id, rank, token, score FROM ranked
+         WHERE rank <= 3 ORDER BY doc_id, rank""")),
+    Entry("q_lm_score", "lms", TextAnalysis.lmScore _, Oracle(
       s"""WITH $sqlLmCtes
-         |SELECT doc_id, n_pairs, lm_score FROM lm ORDER BY doc_id""".stripMargin,
-    // CCNet head/middle/tail perplexity terciles per language
-    "q_ppl_buckets" ->
-      s"""WITH $sqlLmCtes,
-         |ld AS (SELECT l.doc_id, d.lang, l.lm_score
-         |       FROM lm l JOIN documents d USING (doc_id)),
-         |thr AS (SELECT lang,
-         |          floor(list_extract(quantile_cont(lm_score,
-         |            [CAST(1 AS DOUBLE)/3, CAST(2 AS DOUBLE)/3]), 1)
-         |            * 10000.0 + 0.5) / 10000.0 AS t1,
-         |          floor(list_extract(quantile_cont(lm_score,
-         |            [CAST(1 AS DOUBLE)/3, CAST(2 AS DOUBLE)/3]), 2)
-         |            * 10000.0 + 0.5) / 10000.0 AS t2
-         |        FROM ld GROUP BY lang)
-         |SELECT doc_id, lang, lm_score,
-         |  CASE WHEN lm_score <= t1 THEN 'head'
-         |       WHEN lm_score <= t2 THEN 'middle' ELSE 'tail' END AS bucket
-         |FROM ld JOIN thr USING (lang) ORDER BY doc_id""".stripMargin,
-    // greedy best-quality-first selection under a corpus token budget
-    "q_token_budget" ->
-      s"""WITH $sqlQualityCtes,
-         |tb AS (SELECT q.doc_id, q.quality, CAST(s.nwords AS BIGINT) AS ntok
-         |       FROM qq q JOIN qs s USING (doc_id)),
-         |tc AS (SELECT doc_id, quality, ntok,
-         |         CAST(sum(ntok) OVER (ORDER BY quality DESC, doc_id) AS BIGINT)
-         |           AS cum_tokens
-         |       FROM tb),
-         |bg AS (SELECT CAST(sum(ntok) AS BIGINT) // ${CorpusCuration.TokenBudgetDen}
-         |         AS budget FROM tb)
-         |SELECT doc_id, quality, ntok, cum_tokens FROM tc, bg
-         |WHERE cum_tokens <= budget
-         |ORDER BY quality DESC, doc_id""".stripMargin,
-    // quality-decile vs mean LM score: composes the shared LM + quality
-    // CTE families (names are disjoint: d2..lm vs qt/qs/qq)
-    "q_quality_calibration" ->
-      s"""WITH $sqlLmCtes, $sqlQualityCtes
-         |SELECT CAST(floor(q.quality * 10.0) AS BIGINT) AS qbucket,
-         |  CAST(count(*) AS BIGINT) AS n_docs,
-         |  floor(CAST(sum(CAST(l.lm_score AS DECIMAL(38,18))) AS DOUBLE)
-         |        / count(*) * 1e6 + 0.5) / 1e6 AS mean_lm
-         |FROM lm l JOIN qq q USING (doc_id)
-         |GROUP BY 1 ORDER BY qbucket""".stripMargin,
-    "q_source_sim"     -> CorpusCuration.sourceSimOracleSql,
-    "q_source_overlap" -> CorpusCuration.sourceOverlapOracleSql,
-    "q_source_rank"    -> CorpusCuration.sourceRankOracleSql,
-    "q_kl_drift"       -> CorpusCuration.klDriftOracleSql,
-    "q_corpus_card"    -> CorpusCuration.corpusCardOracleSql,
-    "q_novelty"        -> CorpusCuration.noveltyOracleSql,
-    "q_term_search"    -> CorpusCuration.termSearchOracleSql,
-    "q_bm25_rank"      -> Retrieval.bm25RankOracleSql,
-    "q_bm25_indexed"   -> Retrieval.bm25RankOracleSql,
-    "q_bm25_versioned" -> sources.Bm25Index.bm25VersionedOracleSql,
-    "q_hybrid_rrf"     -> Retrieval.hybridRrfOracleSql,
-    "q_mmr_rerank"     -> Retrieval.mmrRerankOracleSql,
-    "q_phrase_search"  -> Retrieval.phraseSearchOracleSql,
-    "q_phrase_indexed" -> Retrieval.phraseSearchOracleSql,
-    "q_bucketed_join"  -> sources.Bucketed.bucketedJoinOracleSql,
-    "q_snapshot_read"  -> sources.Snapshots.snapshotReadOracleSql,
-    "q_snapshot_merge" -> sources.Snapshots.snapshotMergeOracleSql,
-    "q_snapshot_merge_changes" -> sources.Snapshots.snapshotMergeChangesOracleSql,
-    "q_snapshot_read_pruned" -> sources.Snapshots.snapshotReadPrunedOracleSql,
-    "q_snapshot_scan_pruned" -> sources.Snapshots.snapshotScanPrunedOracleSql,
-    "q_snapshot_delete" -> sources.Snapshots.snapshotDeleteOracleSql,
-    "q_snapshot_update" -> sources.Snapshots.snapshotUpdateOracleSql,
-    "q_snapshot_change_feed" -> sources.Snapshots.snapshotChangeFeedOracleSql,
-    "q_snapshot_bloom_lookup" -> sources.Snapshots.snapshotBloomLookupOracleSql,
-    "q_snapshot_zorder" -> sources.Snapshots.snapshotZorderOracleSql,
-    "q_snapshot_drift" -> sources.Snapshots.snapshotDriftOracleSql,
-    "q_rate_anomaly"   -> CorpusCuration.rateAnomalyOracleSql,
-    "q_embed_drift"    -> CorpusCuration.embedDriftOracleSql,
-    "q_pack_efficiency" -> CorpusCuration.packEfficiencyOracleSql,
-    "q_vocab_coverage"  -> CorpusCuration.vocabCoverageOracleSql,
-    "q_zipf_fit"        -> CorpusCuration.zipfFitOracleSql,
-    "q_bigram_entropy"  -> CorpusCuration.bigramEntropyOracleSql,
-    "q_weighted_sample" ->
-      s"""WITH $sqlQualityCtes,
-         |k AS (
-         |  SELECT doc_id, quality,
-         |    CAST(floor(ln(CAST(doc_id % ${CorpusCuration.WSampleP}
-         |        * ${CorpusCuration.WSampleA} % ${CorpusCuration.WSampleP}
-         |        + 1 AS DOUBLE) / ${CorpusCuration.WSampleP})
-         |      / greatest(quality, ${CorpusCuration.WSampleMinW}) * 1e6)
-         |      AS BIGINT) AS key_micro
-         |  FROM qq)
-         |SELECT CAST(row_number() OVER (ORDER BY key_micro DESC, doc_id)
-         |    AS INTEGER) AS rank, doc_id, quality, key_micro
-         |FROM k ORDER BY key_micro DESC, doc_id
-         |LIMIT ${CorpusCuration.WSampleK}""".stripMargin,
-    "q_nb_train"        -> operators.Classifier.nbTrainOracleSql,
-    "q_nb_score"        -> operators.Classifier.nbScoreOracleSql,
-    "q_nb_eval"         -> operators.Classifier.nbEvalOracleSql,
-    "q_nb_auc"          -> operators.Classifier.nbAucOracleSql,
-    "q_dsir_weights"    -> operators.Classifier.dsirWeightsOracleSql,
-    "q_dsir_select"     -> operators.Classifier.dsirSelectOracleSql,
-    "q_char_entropy"    -> TextAnalysis.charEntropyOracleSql,
-    "q_blocklist_filter" -> TextAnalysis.blocklistFilterOracleSql,
+         |SELECT doc_id, n_pairs, lm_score FROM lm ORDER BY doc_id""".stripMargin)),
+    Entry("q_gopher_filter", "go", ((s, d) => TextAnalysis.gopherFilter(s, d)),
+      Oracle(TextAnalysis.gopherOracleSql)),
+    // compressibility gate: per-doc character Shannon entropy
+    Entry("q_char_entropy", "ce", ((s, d) => TextAnalysis.charEntropy(s, d)),
+      Oracle(TextAnalysis.charEntropyOracleSql)),
+    // per-stage corpus yield report over the cleaning gates
     // yield-report oracle: same gate fragments as q_clean_pipeline,
     // reduced to cumulative stage counts
-    "q_pipeline_yield" ->
+    Entry("q_pipeline_yield", "py", TextAnalysis.pipelineYield _, Oracle(
       s"""WITH $sqlQualityCtes,
          $sqlLangCtes,
          g AS (
@@ -955,54 +609,40 @@ object SparkEntry {
          SELECT stage_no, stage, n_in, n_out, n_in - n_out AS rejected,
            floor(CAST(n_in - n_out AS DOUBLE) / greatest(n_in, 1) * 1e4 + 0.5) / 1e4
              AS reject_rate
-         FROM st ORDER BY stage_no""",
-    // cascade oracle: the quality CTEs compose with the NB CTEs (CTE
-    // names disjoint); the model is trained on the UNGATED fold — the
-    // cascade gates scoring, not training
-    "q_filter_cascade" ->
-      s"""WITH $sqlQualityCtes,
-         |${operators.Classifier.nbSqlCtes}
-         |SELECT b.doc_id, qq.quality,
-         |  floor(CAST(coalesce(h.sx, 0) + p.p6 AS DOUBLE) / 1e6 * 1e4 + 0.5) / 1e4
-         |    AS nb_score,
-         |  CASE WHEN coalesce(h.sx, 0) + p.p6 > 0 THEN 1 ELSE 0 END AS pred_cur
-         |FROM base b JOIN qq USING (doc_id) LEFT JOIN hit h USING (doc_id), pri p
-         |WHERE qq.quality >= ${operators.Classifier.CascadeQualityMin}
-         |ORDER BY doc_id""".stripMargin,
-    // per-source declared-vs-predicted language audit (shared lang CTEs)
-    "q_lang_mismatch" ->
-      s"""WITH $sqlLangCtes
-         |SELECT source, n_docs, n_confident, n_mismatch,
-         |  floor(CAST(n_mismatch AS DOUBLE) / greatest(n_confident, 1)
-         |        * 10000.0 + 0.5) / 10000.0 AS mismatch_rate
-         |FROM (
-         |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-         |    CAST(sum(CASE WHEN pred_lang != 'unknown' THEN 1 ELSE 0 END)
-         |         AS BIGINT) AS n_confident,
-         |    CAST(sum(CASE WHEN pred_lang != 'unknown'
-         |                   AND pred_lang != declared_lang THEN 1 ELSE 0 END)
-         |         AS BIGINT) AS n_mismatch
-         |  FROM lp GROUP BY source)
-         |ORDER BY source""".stripMargin,
-    "q_epoch_shuffle"  -> CorpusCuration.epochShuffleOracleSql,
-    "q_token_count" ->
-      """SELECT doc_id,
-         CAST(len(string_split_regex(text, '\s+')) AS INTEGER) AS ws_tokens,
-         CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]|[^a-z0-9\s]')) AS INTEGER) AS bpe_tokens
-         FROM documents ORDER BY doc_id""",
-    "q_quality_score" ->
-      s"""WITH $sqlQualityCtes
-         SELECT doc_id, quality FROM qq ORDER BY doc_id""",
-    "q_quality_sample" ->
-      s"""WITH $sqlQualityCtes
-         SELECT doc_id, quality FROM qq
-         WHERE (doc_id * ${operators.TextAnalysis.QualitySampleA}) % 2147483648 % 10000
-           < CAST(floor(quality * 10000.0 + 0.5) AS BIGINT)
-         ORDER BY doc_id""",
-    "q_lang_id" ->
-      s"""WITH $sqlLangCtes
-         SELECT doc_id, declared_lang, pred_lang FROM lp ORDER BY doc_id""",
-    "q_clean_pipeline" ->
+         FROM st ORDER BY stage_no""")),
+    // bad-word density gate (C4 blocklist family)
+    Entry("q_blocklist_filter", "bf", ((s, d) => TextAnalysis.blocklistFilter(s, d)),
+      Oracle(TextAnalysis.blocklistFilterOracleSql)),
+    Entry("q_repetition", "re", ((s, d) => TextAnalysis.repetition(s, d)),
+      Oracle(TextAnalysis.repetitionOracleSql)),
+    Entry("q_chunk_docs", "ch", ((s, d) => TextAnalysis.chunkDocs(s, d)),
+      Oracle(TextAnalysis.chunkDocsOracleSql)),
+    Entry("q_cooccur", "co", TextAnalysis.cooccur _, Oracle(TextAnalysis.cooccurOracleSql)),
+    Entry("q_dedup_clusters", "dc", TextAnalysis.dedupClusters _, Oracle(
+      s"""WITH RECURSIVE $sqlClusterCtes
+         SELECT s AS doc_id, least(s, min(d)) AS cluster_id
+         FROM reach GROUP BY s ORDER BY doc_id""")),
+    // the clustering ACTION: keep the best member per near-dup cluster
+    Entry("q_cluster_reps", "crp", TextAnalysis.clusterReps _, Oracle(
+      s"""WITH RECURSIVE $sqlClusterCtes,
+         cl AS (SELECT s AS doc_id, least(s, min(d)) AS cluster_id
+                FROM reach GROUP BY s),
+         $sqlQualityCtes,
+         j AS (
+           SELECT cl.cluster_id, cl.doc_id,
+             CAST(floor(qq.quality * 1e4 + 0.5) AS BIGINT) AS qint
+           FROM cl JOIN qq USING (doc_id)),
+         r AS (
+           SELECT cluster_id, doc_id, qint,
+             row_number() OVER (PARTITION BY cluster_id
+               ORDER BY qint DESC, doc_id) AS rn,
+             count(*) OVER (PARTITION BY cluster_id) AS nm
+           FROM j)
+         SELECT cluster_id, CAST(nm AS BIGINT) AS n_members,
+           doc_id AS rep_doc_id, CAST(qint AS DOUBLE) / 1e4 AS rep_quality,
+           CAST(nm - 1 AS BIGINT) AS n_dropped
+         FROM r WHERE rn = 1 ORDER BY cluster_id""")),
+    Entry("q_clean_pipeline", "cl", TextAnalysis.cleanPipeline _, Oracle(
       s"""WITH $sqlQualityCtes,
          $sqlLangCtes,
          gated AS (
@@ -1017,8 +657,9 @@ object SparkEntry {
              row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
            FROM gated)
          SELECT doc_id, pred_lang, quality, ${sqlPii("text")} AS scrubbed
-         FROM dd WHERE rn = 1 ORDER BY doc_id""",
-    "q_corpus_pipeline" ->
+         FROM dd WHERE rn = 1 ORDER BY doc_id""")),
+    // the full corpus→training-sequences path as one composed query
+    Entry("q_corpus_pipeline", "cor", ((s, d) => TextAnalysis.corpusPipeline(s, d)), Oracle(
       s"""WITH $sqlQualityCtes,
          $sqlLangCtes,
          gated AS (
@@ -1049,59 +690,351 @@ object SparkEntry {
            CAST(greatest(0, sq * ${operators.ExtendedAnalytics.PackSeqLen} - gstart) AS INTEGER) AS tok_from,
            CAST(least(ntok, (sq + 1) * ${operators.ExtendedAnalytics.PackSeqLen} - gstart) AS INTEGER) AS tok_to
          FROM px, unnest(generate_series(first_seq, last_seq)) AS u(sq)
-         ORDER BY doc_id, seq_id""",
-    "q_doc_fingerprint" ->
-      s"""SELECT doc_id, ${functions.TextFunctions.docFingerprintSql} AS fp
-         FROM documents ORDER BY doc_id""",
-    "q_image_sim" -> sources.ImageSim.oracleSql,
-    "q_audio_sim" -> sources.AudioSim.oracleSql,
-    "q_entity_resolve" -> operators.EntityResolve.oracleSql,
-    "q_entity_resolve_incr" -> operators.EntityResolve.incrOracleSql,
-    "q_entity_clusters" -> operators.EntityResolve.clustersOracleSql,
-    "q_snapshot_changes" -> sources.Snapshots.snapshotChangesOracleSql,
-    "q_multimodal_meta" ->
+         ORDER BY doc_id, seq_id""")),
+    // §2.6b corpus curation (round 7): data selection / mixture monitors
+    // greedy best-quality-first selection under a corpus token budget
+    Entry("q_token_budget", "tb", ((s, d) => CorpusCuration.tokenBudget(s, d)), Oracle(
+      s"""WITH $sqlQualityCtes,
+         |tb AS (SELECT q.doc_id, q.quality, CAST(s.nwords AS BIGINT) AS ntok
+         |       FROM qq q JOIN qs s USING (doc_id)),
+         |tc AS (SELECT doc_id, quality, ntok,
+         |         CAST(sum(ntok) OVER (ORDER BY quality DESC, doc_id) AS BIGINT)
+         |           AS cum_tokens
+         |       FROM tb),
+         |bg AS (SELECT CAST(sum(ntok) AS BIGINT) // ${CorpusCuration.TokenBudgetDen}
+         |         AS budget FROM tb)
+         |SELECT doc_id, quality, ntok, cum_tokens FROM tc, bg
+         |WHERE cum_tokens <= budget
+         |ORDER BY quality DESC, doc_id""".stripMargin)),
+    // CCNet head/middle/tail perplexity terciles per language
+    Entry("q_ppl_buckets", "pp", ((s, d) => CorpusCuration.pplBuckets(s, d)), Oracle(
+      s"""WITH $sqlLmCtes,
+         |ld AS (SELECT l.doc_id, d.lang, l.lm_score
+         |       FROM lm l JOIN documents d USING (doc_id)),
+         |thr AS (SELECT lang,
+         |          floor(list_extract(quantile_cont(lm_score,
+         |            [CAST(1 AS DOUBLE)/3, CAST(2 AS DOUBLE)/3]), 1)
+         |            * 10000.0 + 0.5) / 10000.0 AS t1,
+         |          floor(list_extract(quantile_cont(lm_score,
+         |            [CAST(1 AS DOUBLE)/3, CAST(2 AS DOUBLE)/3]), 2)
+         |            * 10000.0 + 0.5) / 10000.0 AS t2
+         |        FROM ld GROUP BY lang)
+         |SELECT doc_id, lang, lm_score,
+         |  CASE WHEN lm_score <= t1 THEN 'head'
+         |       WHEN lm_score <= t2 THEN 'middle' ELSE 'tail' END AS bucket
+         |FROM ld JOIN thr USING (lang) ORDER BY doc_id""".stripMargin)),
+    Entry("q_source_sim", "ssm", CorpusCuration.sourceSim _,
+      Oracle(CorpusCuration.sourceSimOracleSql)),
+    Entry("q_source_overlap", "sov", CorpusCuration.sourceOverlap _,
+      Oracle(CorpusCuration.sourceOverlapOracleSql)),
+    // weighted PageRank over the content-sharing source graph (edges =
+    // cross-source shared-shingle counts; 8 unrolled power iterations)
+    Entry("q_source_rank", "srk", ((s, d) => CorpusCuration.sourceRank(s, d)),
+      Oracle(CorpusCuration.sourceRankOracleSql)),
+    Entry("q_kl_drift", "kl", CorpusCuration.klDrift _, Oracle(CorpusCuration.klDriftOracleSql)),
+    Entry("q_epoch_shuffle", "ep", ((s, d) => CorpusCuration.epochShuffle(s, d)),
+      Oracle(CorpusCuration.epochShuffleOracleSql)),
+    // quality-decile vs mean LM score: composes the shared LM + quality
+    // CTE families (names are disjoint: d2..lm vs qt/qs/qq)
+    Entry("q_quality_calibration", "qc", CorpusCuration.qualityCalibration _, Oracle(
+      s"""WITH $sqlLmCtes, $sqlQualityCtes
+         |SELECT CAST(floor(q.quality * 10.0) AS BIGINT) AS qbucket,
+         |  CAST(count(*) AS BIGINT) AS n_docs,
+         |  floor(CAST(sum(CAST(l.lm_score AS DECIMAL(38,18))) AS DOUBLE)
+         |        / count(*) * 1e6 + 0.5) / 1e6 AS mean_lm
+         |FROM lm l JOIN qq q USING (doc_id)
+         |GROUP BY 1 ORDER BY qbucket""".stripMargin)),
+    Entry("q_novelty", "no", ((s, d) => CorpusCuration.novelty(s, d)),
+      Oracle(CorpusCuration.noveltyOracleSql)),
+    // per-source declared-vs-predicted language audit (shared lang CTEs)
+    Entry("q_lang_mismatch", "lm", CorpusCuration.langMismatch _, Oracle(
+      s"""WITH $sqlLangCtes
+         |SELECT source, n_docs, n_confident, n_mismatch,
+         |  floor(CAST(n_mismatch AS DOUBLE) / greatest(n_confident, 1)
+         |        * 10000.0 + 0.5) / 10000.0 AS mismatch_rate
+         |FROM (
+         |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+         |    CAST(sum(CASE WHEN pred_lang != 'unknown' THEN 1 ELSE 0 END)
+         |         AS BIGINT) AS n_confident,
+         |    CAST(sum(CASE WHEN pred_lang != 'unknown'
+         |                   AND pred_lang != declared_lang THEN 1 ELSE 0 END)
+         |         AS BIGINT) AS n_mismatch
+         |  FROM lp GROUP BY source)
+         |ORDER BY source""".stripMargin)),
+    // per-source dataset datasheet (docs/dups/tokens/quality/lang mix)
+    Entry("q_corpus_card", "cc", CorpusCuration.corpusCard _,
+      Oracle(CorpusCuration.corpusCardOracleSql)),
+    Entry("q_term_search", "ts", ((s, d) => CorpusCuration.termSearch(s, d)),
+      Oracle(CorpusCuration.termSearchOracleSql)),
+    // BM25 ranked search beside the boolean term search
+    Entry("q_bm25_rank", "bm", ((s, d) => Retrieval.bm25Rank(s, d)),
+      Oracle(Retrieval.bm25RankOracleSql)),
+    // standing-search twin: same ranking served from the persisted
+    // shard-partitioned postings index (sources.Bm25Index) — shares
+    // bm25Rank's oracle, the q_bpe_persisted artifact-identity pattern
+    Entry("q_bm25_indexed", "bmx", sources.Bm25Index.bm25Indexed _,
+      Oracle(Retrieval.bm25RankOracleSql)),
+    // time-travel index read: ranks AT pinned v1 (the %3≠2 slice)
+    // while the v2 append exists — oracle recomputes v1's slice
+    Entry("q_bm25_versioned", "bmv", sources.Bm25Index.bm25Versioned _,
+      Oracle(sources.Bm25Index.bm25VersionedOracleSql)),
+    // hybrid retrieval: integer-division reciprocal-rank fusion of the
+    // BM25 and dense-cosine lists (full oracle — both lists are)
+    Entry("q_hybrid_rrf", "rrf", ((s, d) => Retrieval.hybridRrf(s, d)),
+      Oracle(Retrieval.hybridRrfOracleSql)),
+    // MMR diversified rerank of the dense retrieval list (full oracle:
+    // the greedy rounds unroll as generated CTEs)
+    Entry("q_mmr_rerank", "mmr", ((s, d) => Retrieval.mmrRerank(s, d)),
+      Oracle(Retrieval.mmrRerankOracleSql)),
+    // exact-phrase ranked search (decontamination quote-lookup), and
+    // its positional-postings standing twin — cell-equal, one oracle
+    Entry("q_phrase_search", "ph", ((s, d) => Retrieval.phraseSearch(s, d)),
+      Oracle(Retrieval.phraseSearchOracleSql)),
+    Entry("q_phrase_indexed", "phx", sources.PhraseIndex.phraseIndexed _,
+      Oracle(Retrieval.phraseSearchOracleSql)),
+    // exchange-free co-located fact join from the bucketed layout
+    Entry("q_bucketed_join", "bj", sources.Bucketed.bucketedJoin _,
+      Oracle(sources.Bucketed.bucketedJoinOracleSql)),
+    // time-travel read of a pinned snapshot version while a later
+    // append exists (manifest-versioned dataset)
+    Entry("q_snapshot_read", "snp", sources.Snapshots.snapshotRead _,
+      Oracle(sources.Snapshots.snapshotReadOracleSql)),
+    // append-only CDC over the same fixture: the 1→2 delta reads only
+    // v2's new files (zero I/O against the standing corpus)
+    Entry("q_snapshot_changes", "snc", sources.Snapshots.snapshotChanges _,
+      Oracle(sources.Snapshots.snapshotChangesOracleSql)),
+    // versioned keyed MERGE (keep-last upsert committed as a rewrite):
+    // updates replace, inserts land, untouched rows carry forward —
+    // the oracle recomputes the merged state closed-form
+    Entry("q_snapshot_merge", "snm", sources.Snapshots.snapshotMerge _,
+      Oracle(sources.Snapshots.snapshotMergeOracleSql)),
+    // the merge CHANGE FEED (Delta CDF): the upsert delta across the
+    // merge reads only the bounded changes/ files, never the corpus
+    Entry("q_snapshot_merge_changes", "snx", sources.Snapshots.snapshotMergeChanges _,
+      Oracle(sources.Snapshots.snapshotMergeChangesOracleSql)),
+    // manifest-stats data skipping: the predicate prunes files at the
+    // MANIFEST (zero footer I/O) and the oracle recomputes from the
+    // predicate alone — skipping changes I/O, never results
+    Entry("q_snapshot_read_pruned", "snq", sources.Snapshots.snapshotReadPruned _,
+      Oracle(sources.Snapshots.snapshotReadPrunedOracleSql)),
+    // planner-integrated skipping: the SAME predicate as an ordinary
+    // DataFrame filter over a custom FileIndex — Catalyst's pushed
+    // data filters reach the manifest stats prune, no StatsPred needed
+    Entry("q_snapshot_scan_pruned", "sni", sources.Snapshots.snapshotScanPruned _,
+      Oracle(sources.Snapshots.snapshotScanPrunedOracleSql)),
+    // stats-pruned row-level DELETE (copy-on-write rewrites only the
+    // stat-overlapping files) read back post-delete
+    Entry("q_snapshot_delete", "snd", sources.Snapshots.snapshotDelete _,
+      Oracle(sources.Snapshots.snapshotDeleteOracleSql)),
+    // stats-pruned row-level UPDATE (copy-on-write with the Delta
+    // pre+post change pair) read back post-update
+    Entry("q_snapshot_update", "snu", sources.Snapshots.snapshotUpdate _,
+      Oracle(sources.Snapshots.snapshotUpdateOracleSql)),
+    // typed change feed: insert/delete rows attributed to their commits
+    Entry("q_snapshot_change_feed", "snf", sources.Snapshots.snapshotChangeFeed _,
+      Oracle(sources.Snapshots.snapshotChangeFeedOracleSql)),
+    // per-file bloom membership skipping for point lookups on a
+    // layout-uncorrelated column (min/max stats cannot prune those)
+    Entry("q_snapshot_bloom_lookup", "snb", sources.Snapshots.snapshotBloomLookup _,
+      Oracle(sources.Snapshots.snapshotBloomLookupOracleSql)),
+    // Morton z-order layout: the SECOND z dimension pruned via
+    // readWhere over a clusterZ'd artifact
+    Entry("q_snapshot_zorder", "snz", sources.Snapshots.snapshotZorder _,
+      Oracle(sources.Snapshots.snapshotZorderOracleSql)),
+    // cross-version corpus drift: per version slice, unigram KL to the
+    // union mixture (the JS decomposition) — the curation monitor
+    // composed onto the versioned layer
+    Entry("q_snapshot_drift", "snv", sources.Snapshots.snapshotDrift _,
+      Oracle(sources.Snapshots.snapshotDriftOracleSql)),
+    Entry("q_rate_anomaly", "rt", CorpusCuration.rateAnomaly _,
+      Oracle(CorpusCuration.rateAnomalyOracleSql)),
+    Entry("q_embed_drift", "em", CorpusCuration.embedDrift _,
+      Oracle(CorpusCuration.embedDriftOracleSql)),
+    Entry("q_pack_efficiency", "pke", CorpusCuration.packEfficiency _,
+      Oracle(CorpusCuration.packEfficiencyOracleSql)),
+    Entry("q_vocab_coverage", "vcv", CorpusCuration.vocabCoverage _,
+      Oracle(CorpusCuration.vocabCoverageOracleSql)),
+    // distributional-health monitors beside q_kl_drift: rank-frequency
+    // slope (marginals) and conditional next-token entropy (transitions)
+    Entry("q_zipf_fit", "zf", CorpusCuration.zipfFit _, Oracle(CorpusCuration.zipfFitOracleSql)),
+    Entry("q_bigram_entropy", "bge", CorpusCuration.bigramEntropy _,
+      Oracle(CorpusCuration.bigramEntropyOracleSql)),
+    // Efraimidis-Spirakis exact-size quality-weighted sample
+    Entry("q_weighted_sample", "ws", CorpusCuration.weightedSample _, Oracle(
+      s"""WITH $sqlQualityCtes,
+         |k AS (
+         |  SELECT doc_id, quality,
+         |    CAST(floor(ln(CAST(doc_id % ${CorpusCuration.WSampleP}
+         |        * ${CorpusCuration.WSampleA} % ${CorpusCuration.WSampleP}
+         |        + 1 AS DOUBLE) / ${CorpusCuration.WSampleP})
+         |      / greatest(quality, ${CorpusCuration.WSampleMinW}) * 1e6)
+         |      AS BIGINT) AS key_micro
+         |  FROM qq)
+         |SELECT CAST(row_number() OVER (ORDER BY key_micro DESC, doc_id)
+         |    AS INTEGER) AS rank, doc_id, quality, key_micro
+         |FROM k ORDER BY key_micro DESC, doc_id
+         |LIMIT ${CorpusCuration.WSampleK}""".stripMargin)),
+    // §2.6c learned data-selection filters (round 8): NB curated-text
+    // classifier (train/score/holdout-eval) + DSIR importance weights —
+    // full DuckDB oracles down to the training computation itself
+    Entry("q_nb_train", "nbt", ((s, d) => operators.Classifier.nbTrain(s, d)),
+      Oracle(operators.Classifier.nbTrainOracleSql)),
+    Entry("q_nb_score", "nbs", ((s, d) => operators.Classifier.nbScore(s, d)),
+      Oracle(operators.Classifier.nbScoreOracleSql)),
+    Entry("q_nb_eval", "nbe", operators.Classifier.nbEval _,
+      Oracle(operators.Classifier.nbEvalOracleSql)),
+    // threshold-free ranking quality: binned ROC-AUC on the holdout
+    Entry("q_nb_auc", "nba", operators.Classifier.nbAuc _,
+      Oracle(operators.Classifier.nbAucOracleSql)),
+    Entry("q_dsir_weights", "dw", ((s, d) => operators.Classifier.dsirWeights(s, d)),
+      Oracle(operators.Classifier.dsirWeightsOracleSql)),
+    Entry("q_dsir_select", "dws", ((s, d) => operators.Classifier.dsirSelect(s, d)),
+      Oracle(operators.Classifier.dsirSelectOracleSql)),
+    // the cascade idiom: map-side heuristic gate prunes the stream
+    // BEFORE the learned model's token join sees it
+    // cascade oracle: the quality CTEs compose with the NB CTEs (CTE
+    // names disjoint); the model is trained on the UNGATED fold — the
+    // cascade gates scoring, not training
+    Entry("q_filter_cascade", "fc", ((s, d) => operators.Classifier.filterCascade(s, d)), Oracle(
+      s"""WITH $sqlQualityCtes,
+         |${operators.Classifier.nbSqlCtes}
+         |SELECT b.doc_id, qq.quality,
+         |  floor(CAST(coalesce(h.sx, 0) + p.p6 AS DOUBLE) / 1e6 * 1e4 + 0.5) / 1e4
+         |    AS nb_score,
+         |  CASE WHEN coalesce(h.sx, 0) + p.p6 > 0 THEN 1 ELSE 0 END AS pred_cur
+         |FROM base b JOIN qq USING (doc_id) LEFT JOIN hit h USING (doc_id), pri p
+         |WHERE qq.quality >= ${operators.Classifier.CascadeQualityMin}
+         |ORDER BY doc_id""".stripMargin)),
+    // §2.7 multimodal metadata
+    Entry("q_multimodal_meta", "mm", TextAnalysis.multimodalMeta _, Oracle(
       """SELECT doc_id, CAST(strlen(text) AS INTEGER) AS n_bytes,
          md5(text) AS content_md5, left(text, 16) AS prefix16
-         FROM documents ORDER BY doc_id""",
-    "q_anti_join" ->
+         FROM documents ORDER BY doc_id""")),
+    // multimodal → embedding bridge: REAL ImageIO decode feeds a
+    // pixel-statistic embedding; near-dup IMAGE pairs, full oracle
+    // (closed-form generator recompute — the shard_balance contract)
+    Entry("q_image_sim", "ims", sources.ImageSim.imageSim _, Oracle(sources.ImageSim.oracleSql)),
+    // the audio mirror: REAL javax.sound sample decode feeds the
+    // envelope+crossings embedding; near-dup CLIP pairs, full oracle
+    Entry("q_audio_sim", "aus", sources.AudioSim.audioSim _, Oracle(sources.AudioSim.oracleSql)),
+    // record linkage: blocked fuzzy join over planted dirty records —
+    // blocking equi-join + levenshtein verify, full oracle
+    Entry("q_entity_resolve", "ent", operators.EntityResolve.entityResolve _,
+      Oracle(operators.EntityResolve.oracleSql)),
+    // incremental twin: the arriving batch broadcasts into the blocked
+    // standing store — O(batch x avg-block) work, never O(store^2)
+    Entry("q_entity_resolve_incr", "eni", operators.EntityResolve.entityResolveIncremental _,
+      Oracle(operators.EntityResolve.incrOracleSql)),
+    // canonicalization: verified pairs -> connected components -> one
+    // golden record per entity cluster (longest name, min-id tiebreak)
+    Entry("q_entity_clusters", "enc", operators.EntityResolve.entityClusters _,
+      Oracle(operators.EntityResolve.clustersOracleSql)),
+    // §2.1b extended composed analytics
+    Entry("q_anti_join", "an", ExtendedAnalytics.customersWithoutOrders _, Oracle(
       """SELECT c_custkey, c_name, c_mktsegment FROM customer
          WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-         ORDER BY c_custkey""",
-    "q_semi_join" ->
+         ORDER BY c_custkey""")),
+    Entry("q_semi_join", "se", ExtendedAnalytics.activeCustomers _, Oracle(
       """SELECT c_custkey, c_name FROM customer
          WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
                        AND o_orderdate >= TIMESTAMP '1997-01-01 00:00:00')
-         ORDER BY c_custkey""",
-    "q_rollup" ->
+         ORDER BY c_custkey""")),
+    Entry("q_rollup", "rl", ExtendedAnalytics.rollupStatusPriority _, Oracle(
       """SELECT coalesce(o_orderstatus, 'ALL') AS status,
          coalesce(o_orderpriority, 'ALL') AS priority,
          count(*) AS n, round(sum(o_totalprice), 2) AS total_price
          FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
-         ORDER BY status, priority""",
-    "q_pivot" ->
+         ORDER BY status, priority""")),
+    Entry("q_pivot", "pv", ExtendedAnalytics.pivotStatusPriority _, Oracle(
       """SELECT o_orderpriority AS priority,
          count(*) FILTER (WHERE o_orderstatus = 'O') AS n_open,
          count(*) FILTER (WHERE o_orderstatus = 'F') AS n_finished,
          count(*) FILTER (WHERE o_orderstatus = 'P') AS n_pending
-         FROM orders GROUP BY 1 ORDER BY priority""",
-    "q_stratified_sample" ->
+         FROM orders GROUP BY 1 ORDER BY priority""")),
+    Entry("q_stratified_sample", "str", ExtendedAnalytics.stratifiedSample _, Oracle(
       """SELECT doc_id, lang, source FROM documents
          WHERE ((doc_id * 2654435761) % 2147483648) % 100 <
            CASE lang WHEN 'en' THEN 30 WHEN 'de' THEN 80 WHEN 'es' THEN 80
                      WHEN 'fr' THEN 80 WHEN 'zh' THEN 50 ELSE 0 END
-         ORDER BY doc_id""",
-    "q_data_split" -> ExtendedAnalytics.dataSplitOracleSql,
-    "q_domain_mix" -> ExtendedAnalytics.domainMixOracleSql,
-    "q_domain_mix_up" -> ExtendedAnalytics.domainMixUpsampleOracleSql,
-    "q_domain_mix_alpha" -> ExtendedAnalytics.domainMixAlphaOracleSql,
-    "q_pack_sequences" -> ExtendedAnalytics.packSequencesOracleSql,
-    "q_vocab_topk" ->
+         ORDER BY doc_id""")),
+    Entry("q_data_split", "ds", ((s, d) => ExtendedAnalytics.dataSplit(s, d)),
+      Oracle(ExtendedAnalytics.dataSplitOracleSql)),
+    Entry("q_keyed_sample", "ks", ExtendedAnalytics.keyedSample _, Oracle(
+      s"""WITH h AS (
+           SELECT lang, doc_id,
+             (doc_id * ${operators.ExtendedAnalytics.KeyedSampleA}) % ${functions.TextFunctions.HashP} AS hkey
+           FROM documents)
+         SELECT lang, doc_id, hkey FROM h
+         QUALIFY row_number() OVER (PARTITION BY lang ORDER BY hkey, doc_id)
+           <= ${operators.ExtendedAnalytics.KeyedSampleK}
+         ORDER BY lang, hkey, doc_id""")),
+    // pretraining-mixture resampling: map-side hash filter against
+    // broadcast per-lang thresholds from one aggregate scan
+    Entry("q_domain_mix", "dmx", ExtendedAnalytics.domainMix _,
+      Oracle(ExtendedAnalytics.domainMixOracleSql)),
+    Entry("q_domain_mix_up", "dmu", ExtendedAnalytics.domainMixUpsample _,
+      Oracle(ExtendedAnalytics.domainMixUpsampleOracleSql)),
+    Entry("q_domain_mix_alpha", "dma", ExtendedAnalytics.domainMixAlpha _,
+      Oracle(ExtendedAnalytics.domainMixAlphaOracleSql)),
+    // GPT-style concat-and-chunk packing via two-phase prefix sum
+    Entry("q_pack_sequences", "pc", ((s, d) => ExtendedAnalytics.packSequences(s, d)),
+      Oracle(ExtendedAnalytics.packSequencesOracleSql)),
+    // distributed BPE vocabulary learning (operators.Bpe)
+    Entry("q_bpe_merges", "bpm", operators.Bpe.bpeMerges _, Oracle(operators.Bpe.bpeOracleSql)),
+    Entry("q_bpe_vocab", "bpv", operators.Bpe.bpeVocab _, Oracle(operators.Bpe.bpeVocabOracleSql)),
+    // unigram-LM tokenizer (SentencePiece family): vocab, Viterbi
+    // encode, E-step piece counts
+    Entry("q_unigram_vocab", "uv", operators.Unigram.unigramVocab _,
+      Oracle(operators.Unigram.unigramVocabOracleSql)),
+    Entry("q_unigram_encode", "ue", ((s, d) => operators.Unigram.unigramEncode(s, d)),
+      Oracle(operators.Unigram.unigramEncodeOracleSql)),
+    Entry("q_unigram_refit", "ur", operators.Unigram.unigramRefit _,
+      Oracle(operators.Unigram.unigramRefitOracleSql)),
+    Entry("q_bpe_encode", "bp", ((s, d) => operators.Bpe.bpeEncode(s, d)),
+      Oracle(operators.Bpe.bpeEncodeOracleSql)),
+    // persisted-tokenizer round trip: save, reload, encode — the
+    // artifact contract is output identity with q_bpe_encode, so the
+    // two queries share one oracle
+    Entry("q_bpe_persisted", "bpp", sources.TokenizerArtifact.encodePersisted _,
+      Oracle(operators.Bpe.bpeEncodeOracleSql)),
+    // sharded-export audit: the query reads the written artifact, the
+    // oracle recomputes the portable-hash assignment from the corpus
+    Entry("q_shard_balance", "shb", sources.Export.shardBalance _,
+      Oracle(sources.Export.shardBalanceOracleSql)),
+    Entry("q_bpe_fertility", "bpf", operators.Bpe.bpeFertility _,
+      Oracle(operators.Bpe.bpeFertilityOracleSql)),
+    // bloom runtime-filter pruning (plans.BloomMightContain)
+    Entry("q_bloom_prefilter", "bl", operators.BloomPrune.prefilterRevenue _, Oracle(
+      s"""SELECT o_orderpriority, count(*) AS n_items,
+         round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+         WHERE o_orderstatus = 'F'
+           AND o_orderdate >= TIMESTAMP '${operators.BloomPrune.CutoffDate} 00:00:00'
+         GROUP BY o_orderpriority ORDER BY o_orderpriority""")),
+    // attachment-content extraction (sources.Attachments: binaryFile
+    // tree round-trip — download stage + readable-content query)
+    Entry("q_attachment_text", "at", sources.Attachments.attachmentText _,
+      Oracle(sources.Attachments.oracleSql)),
+    // block-tree + comments normalization (operators.BlockTree:
+    // recursive page tree → ordered markdown lines, json_extract oracle)
+    Entry("q_block_tree", "bt", operators.BlockTree.blockTree _,
+      Oracle(operators.BlockTree.oracleSql)),
+    // report-document assembly (operators.ReportDoc: the reference's
+    // PDF-report sections/grouping/numbering as position-ordered lines)
+    Entry("q_report_doc", "rd", operators.ReportDoc.reportDoc _,
+      Oracle(operators.ReportDoc.oracleSql)),
+    // paginated-API ingest (sources.PagedTasks: DataSource V2 over
+    // response-envelope pages — parallel cursor chain, 429 retry,
+    // pruned parse, keep-last merge)
+    Entry("q_paged_ingest", "pg", sources.PagedTasks.pagedIngest _,
+      Oracle(sources.PagedTasks.oracleSql)),
+    Entry("q_vocab_topk", "vc", ExtendedAnalytics.vocabTopK _, Oracle(
       """SELECT token, count(*) AS df FROM (
            SELECT doc_id, unnest(list_distinct(
              regexp_extract_all(lower(text), '[a-z0-9]+'))) AS token
            FROM documents)
-         GROUP BY token ORDER BY df DESC, token LIMIT 20""",
-    "q_ngram_freq" ->
+         GROUP BY token ORDER BY df DESC, token LIMIT 20""")),
+    Entry("q_ngram_freq", "ng", ExtendedAnalytics.ngramFreqTopK _, Oracle(
       """SELECT ngram, count(*) AS df FROM (
            SELECT doc_id, unnest(sh) AS ngram FROM (
              SELECT doc_id, list_distinct(list_transform(
@@ -1111,29 +1044,30 @@ object SparkEntry {
                    regexp_extract_all(lower(text), '[a-z0-9]+') AS t
                    FROM documents)
              WHERE len(t) >= 3))
-         GROUP BY ngram ORDER BY df DESC, ngram LIMIT 20""",
-    "q_running_total" ->
+         GROUP BY ngram ORDER BY df DESC, ngram LIMIT 20""")),
+    Entry("q_running_total", "rto", ExtendedAnalytics.runningTotal _, Oracle(
       """SELECT o_custkey, o_orderkey,
          strftime(o_orderdate, '%Y-%m-%d') AS order_date,
          round(sum(o_totalprice) OVER (PARTITION BY o_custkey
            ORDER BY o_orderdate, o_orderkey ROWS UNBOUNDED PRECEDING), 2)
            AS running_total
-         FROM orders ORDER BY o_custkey, o_orderkey""",
-    "q_wow_change" ->
+         FROM orders ORDER BY o_custkey, o_orderkey""")),
+    Entry("q_wow_change", "wo", ExtendedAnalytics.weekOverWeek _, Oracle(
       """WITH weekly AS (
            SELECT strftime(date_trunc('week', o_orderdate), '%Y-%m-%d') AS week,
              count(*) AS n
            FROM orders WHERE o_orderstatus = 'F' GROUP BY 1)
          SELECT week, n,
            coalesce(n - lag(n, 1) OVER (ORDER BY week), 0) AS wow_change
-         FROM weekly ORDER BY week""",
-    "q_length_stats" ->
+         FROM weekly ORDER BY week""")),
+    Entry("q_length_stats", "ls", ExtendedAnalytics.lengthStats _, Oracle(
       """SELECT lang, count(*) AS n, min(n_chars) AS min_chars,
          max(n_chars) AS max_chars,
          round(avg(n_chars), 4) AS avg_chars,
          round(quantile_cont(n_chars, 0.5), 4) AS median_chars
-         FROM documents GROUP BY 1 ORDER BY lang""",
-    "q_asof_join" ->
+         FROM documents GROUP BY 1 ORDER BY lang""")),
+    // custom whole-operator (plans.AsOfJoin: LogicalPlan+Strategy+Exec)
+    Entry("q_asof_join", "as", ExtendedAnalytics.purchasesWithLastError _, Oracle(
       """SELECT p.event_id AS purchase_id, p.user_id,
          strftime(p.ts, '%Y-%m-%d %H:%M:%S') AS purchase_ts,
          e.event_id AS error_id, strftime(e.ts, '%Y-%m-%d %H:%M:%S') AS error_ts
@@ -1146,8 +1080,69 @@ object SparkEntry {
            SELECT user_id, ts, max(event_id) AS event_id
            FROM events WHERE event_type = 'error' GROUP BY user_id, ts) e
            ON p.user_id = e.user_id AND p.ts >= e.ts
-         ORDER BY purchase_id""",
-    "q_weekly_focus" ->
+         ORDER BY purchase_id""")),
+    // bucketized range join (no nested loop: (user, ts-bucket) equi-join
+    // with the probe exploded to its 2 covering buckets)
+    Entry("q_interval_join", "it", ExtendedAnalytics.errorContext _, Oracle(
+      s"""WITH e AS (
+         |  SELECT event_id, user_id, event_type, value,
+         |         epoch_us(CAST(ts AS TIMESTAMP)) AS us
+         |  FROM events)
+         |SELECT a.event_id, a.user_id,
+         |  count(b.us) AS n_prior,
+         |  round(coalesce(sum(b.value), 0), 2) AS prior_value
+         |FROM (SELECT * FROM e WHERE event_type = 'error') a
+         |LEFT JOIN e b ON b.user_id = a.user_id
+         |  AND b.us >= a.us - ${operators.ExtendedAnalytics.IntervalUs}
+         |  AND b.us < a.us
+         |GROUP BY a.event_id, a.user_id
+         |ORDER BY a.event_id""".stripMargin)),
+    // SCD2 versioned-dimension build (keep-last dedup is the SCD1 half)
+    Entry("q_scd2", "sc", ExtendedAnalytics.scd2Intervals _, Oracle(
+      """SELECT user_id,
+         |  CAST(row_number() OVER w AS INTEGER) AS version,
+         |  event_type AS state,
+         |  strftime(CAST(ts AS TIMESTAMP), '%Y-%m-%d %H:%M:%S.%f') AS valid_from,
+         |  strftime(CAST(lead(ts, 1) OVER w AS TIMESTAMP), '%Y-%m-%d %H:%M:%S.%f') AS valid_to
+         |FROM events
+         |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
+         |ORDER BY user_id, version""".stripMargin)),
+    // product-analytics staples over the event log
+    Entry("q_funnel", "fu", ExtendedAnalytics.funnel _, Oracle(
+      """WITH e AS (
+         |  SELECT user_id, event_type,
+         |         epoch_us(CAST(ts AS TIMESTAMP)) AS us
+         |  FROM events
+         |), s1 AS (
+         |  SELECT user_id, min(us) AS t FROM e
+         |  WHERE event_type = 'signup' GROUP BY user_id
+         |), s2 AS (
+         |  SELECT e.user_id, min(us) AS t FROM e JOIN s1 USING (user_id)
+         |  WHERE event_type = 'click' AND us > s1.t GROUP BY e.user_id
+         |), s3 AS (
+         |  SELECT e.user_id, min(us) AS t FROM e JOIN s2 USING (user_id)
+         |  WHERE event_type = 'purchase' AND us > s2.t GROUP BY e.user_id
+         |)
+         |SELECT 1 AS stage_no, 'signup' AS stage,
+         |       (SELECT count(*) FROM s1) AS users
+         |UNION ALL SELECT 2, 'click', (SELECT count(*) FROM s2)
+         |UNION ALL SELECT 3, 'purchase', (SELECT count(*) FROM s3)
+         |ORDER BY stage_no""".stripMargin)),
+    Entry("q_retention", "rtn", ExtendedAnalytics.retention _, Oracle(
+      """WITH e AS (
+         |  SELECT DISTINCT user_id,
+         |         CAST(date_trunc('week', CAST(ts AS TIMESTAMP)) AS DATE) AS week
+         |  FROM events
+         |), c AS (
+         |  SELECT user_id, min(week) AS cohort_week FROM e GROUP BY user_id
+         |)
+         |SELECT strftime(cohort_week, '%Y-%m-%d') AS cohort_week,
+         |  CAST(date_diff('day', cohort_week, week) // 7 AS INTEGER) AS week_offset,
+         |  count(DISTINCT e.user_id) AS users
+         |FROM e JOIN c USING (user_id)
+         |GROUP BY c.cohort_week, week_offset
+         |ORDER BY cohort_week, week_offset""".stripMargin)),
+    Entry("q_weekly_focus", "wk", TaskAnalytics.weeklyFocus _, Oracle(
       """WITH open_orders AS (
            SELECT o_orderkey,
              CASE WHEN o_orderdate < TIMESTAMP '1998-01-01 00:00:00' THEN '1_IMMEDIATE'
@@ -1163,12 +1158,17 @@ object SparkEntry {
              ORDER BY prio_score, order_date, o_orderkey) AS INTEGER) AS rank
            FROM open_orders)
          SELECT section, rank, o_orderkey, prio_score, order_date
-         FROM ranked WHERE rank <= 15 ORDER BY section, rank""",
-    "q_skew_report" -> ExtendedAnalytics.skewReportOracleSql,
-    "q_event_transitions" -> ExtendedAnalytics.eventTransitionsOracleSql,
-    "q_event_paths" -> ExtendedAnalytics.eventPathsOracleSql,
-    "q_length_histogram" -> ExtendedAnalytics.lengthHistogramOracleSql,
-    "q_schema_health" ->
+         FROM ranked WHERE rank <= 15 ORDER BY section, rank""")),
+    // sketches: both PORTABLE since r13 — q_approx_stats rides a KMV
+    // bottom-k distinct sketch + integer-grid histogram median and
+    // q_heavy_hitters a Count-Min sketch, each rebuilt bit-identically
+    // by its DuckDB oracle (full hash gates; the relerr recall gates
+    // additionally bound the estimates against exact answers)
+    Entry("q_approx_stats", "apx", ExtendedAnalytics.approxStats _,
+      Oracle(ExtendedAnalytics.approxStatsOracleSql)),
+    Entry("q_heavy_hitters", "hh", operators.Sketches.heavyHitters _,
+      Oracle(operators.Sketches.heavyHittersOracleSql)),
+    Entry("q_schema_health", "sch", ExtendedAnalytics.schemaHealth _, Oracle(
       """SELECT 'o_orderkey' AS col_name, TRUE AS present,
              count(*) FILTER (WHERE o_orderkey IS NULL) AS n_nulls,
              count(DISTINCT o_orderkey) AS n_distinct FROM orders
@@ -1186,8 +1186,21 @@ object SparkEntry {
              count(DISTINCT o_totalprice) FROM orders
          UNION ALL
          SELECT 'o_comment_missing', FALSE, 0, 0
-         ORDER BY col_name""",
-    "q_report_goals" ->
+         ORDER BY col_name""")),
+    // join-key skew diagnostic over the events fact
+    Entry("q_skew_report", "sk", ExtendedAnalytics.skewReport _,
+      Oracle(ExtendedAnalytics.skewReportOracleSql)),
+    // first-order Markov transition matrix over event types
+    Entry("q_event_transitions", "etr", ExtendedAnalytics.eventTransitions _,
+      Oracle(ExtendedAnalytics.eventTransitionsOracleSql)),
+    // top 3-step event-type paths (the multi-step habits a first-order
+    // transition matrix flattens)
+    Entry("q_event_paths", "epa", ExtendedAnalytics.eventPaths _,
+      Oracle(ExtendedAnalytics.eventPathsOracleSql)),
+    // log2-bucketed doc-length profile
+    Entry("q_length_histogram", "lh", ExtendedAnalytics.lengthHistogram _,
+      Oracle(ExtendedAnalytics.lengthHistogramOracleSql)),
+    Entry("q_report_goals", "rg", ExtendedAnalytics.reportGoals _, Oracle(
       """SELECT o_orderkey,
          CASE o_orderpriority WHEN '1-URGENT' THEN 0 WHEN '2-HIGH' THEN 1
               WHEN '3-MEDIUM' THEN 2 WHEN '4-NOT SPECIFIED' THEN 3
@@ -1200,16 +1213,16 @@ object SparkEntry {
                 OR CASE o_orderpriority WHEN '1-URGENT' THEN 0 WHEN '2-HIGH' THEN 1
                        WHEN '3-MEDIUM' THEN 2 WHEN '4-NOT SPECIFIED' THEN 3
                        WHEN '5-LOW' THEN 4 ELSE 5 END <= 1)
-         ORDER BY o_orderkey""",
-    "q_moving_avg" ->
+         ORDER BY o_orderkey""")),
+    Entry("q_moving_avg", "ma", ExtendedAnalytics.movingAvg _, Oracle(
       """WITH daily AS (
            SELECT date_diff('day', TIMESTAMP '1995-01-01 00:00:00', o_orderdate) AS day_no,
              strftime(o_orderdate, '%Y-%m-%d') AS day, count(*) AS n
            FROM orders WHERE o_orderstatus = 'F' GROUP BY 1, 2)
          SELECT day, n,
            round(avg(n) OVER (ORDER BY day_no RANGE BETWEEN 6 PRECEDING AND CURRENT ROW), 4) AS ma7
-         FROM daily ORDER BY day""",
-    "q_value_deciles" ->
+         FROM daily ORDER BY day""")),
+    Entry("q_value_deciles", "dec", ExtendedAnalytics.valueDeciles _, Oracle(
       ("""WITH b AS (
            SELECT """ + (1 to 9).map(i =>
              s"floor(quantile_cont(o_totalprice, 0.$i) * 100 + 0.5) / 100 AS b$i")
@@ -1223,34 +1236,35 @@ object SparkEntry {
          SELECT decile, count(*) AS n,
            round(min(o_totalprice), 2) AS min_price,
            round(max(o_totalprice), 2) AS max_price
-         FROM t GROUP BY 1 ORDER BY decile"""),
-    "q_topk_per_key" ->
+         FROM t GROUP BY 1 ORDER BY decile"""))),
+    // custom bounded-heap operator (plans.TopKPerKey)
+    Entry("q_topk_per_key", "tp", ExtendedAnalytics.topOrdersPerCustomer _, Oracle(
       """SELECT o_custkey, o_orderkey, round(o_totalprice, 2) AS total_price
          FROM orders
          QUALIFY row_number() OVER (PARTITION BY o_custkey
            ORDER BY o_totalprice DESC, o_orderkey) <= 3
-         ORDER BY o_custkey, o_orderkey""",
-    "q_cube" ->
+         ORDER BY o_custkey, o_orderkey""")),
+    Entry("q_cube", "cu", ExtendedAnalytics.cubeStatusPriority _, Oracle(
       """SELECT coalesce(o_orderstatus, 'ALL') AS status,
          coalesce(o_orderpriority, 'ALL') AS priority, count(*) AS n
          FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
-         ORDER BY status, priority""",
-    "q_argmax" ->
+         ORDER BY status, priority""")),
+    Entry("q_argmax", "am", ExtendedAnalytics.argmaxOrder _, Oracle(
       """SELECT o_custkey,
          max_by(o_orderkey,
            lpad(CAST(CAST(round(o_totalprice * 100) AS BIGINT) AS VARCHAR), 15, '0')
              || lpad(CAST(o_orderkey AS VARCHAR), 15, '0'))
            AS best_orderkey,
          round(max(o_totalprice), 2) AS best_price
-         FROM orders GROUP BY 1 ORDER BY o_custkey""",
-    "q_string_funcs" ->
+         FROM orders GROUP BY 1 ORDER BY o_custkey""")),
+    Entry("q_string_funcs", "stf", ExtendedAnalytics.stringFuncs _, Oracle(
       """SELECT doc_id,
          CAST(levenshtein(left(text, 15), 'spark shuffle') AS INTEGER) AS lev,
          reverse(left(text, 8)) AS rev8,
          lpad(CAST(doc_id AS VARCHAR), 6, '0') AS padded,
          upper(left(text, 10)) AS up10
-         FROM documents ORDER BY doc_id""",
-    "q_date_funcs" ->
+         FROM documents ORDER BY doc_id""")),
+    Entry("q_date_funcs", "dt", ExtendedAnalytics.dateFuncs _, Oracle(
       """SELECT o_orderkey,
          CAST(year(o_orderdate) AS INTEGER) AS y,
          CAST(quarter(o_orderdate) AS INTEGER) AS q,
@@ -1261,8 +1275,8 @@ object SparkEntry {
          CAST(weekofyear(o_orderdate) AS INTEGER) AS woy,
          strftime(o_orderdate + INTERVAL 30 DAY, '%Y-%m-%d') AS plus30,
          strftime(last_day(o_orderdate), '%Y-%m-%d') AS month_end
-         FROM orders ORDER BY o_orderkey""",
-    "q_set_ops" ->
+         FROM orders ORDER BY o_orderkey""")),
+    Entry("q_set_ops", "so", ExtendedAnalytics.setOps _, Oracle(
       """WITH a AS (SELECT DISTINCT o_custkey FROM orders
                     WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
                       AND o_orderdate < TIMESTAMP '1997-01-01 00:00:00'),
@@ -1271,72 +1285,11 @@ object SparkEntry {
                       AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00')
          SELECT (SELECT count(*) FROM (SELECT * FROM a EXCEPT SELECT * FROM b)) AS only_1996,
                 (SELECT count(*) FROM (SELECT * FROM b EXCEPT SELECT * FROM a)) AS only_1997,
-                (SELECT count(*) FROM (SELECT * FROM a INTERSECT SELECT * FROM b)) AS both_years""",
-    "q_pii_scrub" ->
-      s"""SELECT doc_id, ${sqlPii("text")} AS scrubbed
-         FROM documents ORDER BY doc_id""",
-    "q_contamination" ->
-      """WITH toks AS (
-           SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS t
-           FROM documents),
-         sh AS (
-           SELECT doc_id, list_reduce(list_prepend(CAST(0 AS BIGINT),
-             list_transform(string_split(g, ''), c -> CAST(ascii(c) AS BIGINT))),
-             (a, c) -> (a * 31 + c) % 1000000007) AS h
-           FROM (SELECT doc_id, unnest(list_distinct(list_transform(
-                   generate_series(1, len(t) - 4),
-                   i -> array_to_string(t[i:i + 4], ' ')))) AS g
-                 FROM toks WHERE len(t) >= 5)),
-         ev AS (SELECT DISTINCT h FROM sh WHERE doc_id < 5)
-         SELECT DISTINCT doc_id FROM sh
-         WHERE doc_id >= 5 AND h IN (SELECT h FROM ev)
-         ORDER BY doc_id""",
-    "q_contamination_score" -> TextAnalysis.contaminationScoreOracleSql,
-    "q_tfidf_top_terms" ->
-      """WITH tf AS (
-           SELECT doc_id, token, count(*) AS tf FROM (
-             SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS token
-             FROM documents)
-           GROUP BY 1, 2),
-         df AS (SELECT token, count(*) AS df FROM tf GROUP BY 1),
-         n AS (SELECT count(*) AS n FROM documents),
-         scored AS (
-           SELECT doc_id, token,
-             round(tf * ln(CAST(n.n AS DOUBLE) / df.df), 4) AS score
-           FROM tf JOIN df USING (token) CROSS JOIN n),
-         ranked AS (
-           SELECT doc_id, token, score,
-             CAST(row_number() OVER (PARTITION BY doc_id
-               ORDER BY score DESC, token) AS INTEGER) AS rank
-           FROM scored)
-         SELECT doc_id, rank, token, score FROM ranked
-         WHERE rank <= 3 ORDER BY doc_id, rank""",
-    "q_dedup_clusters" ->
-      s"""WITH RECURSIVE $sqlClusterCtes
-         SELECT s AS doc_id, least(s, min(d)) AS cluster_id
-         FROM reach GROUP BY s ORDER BY doc_id""",
-    "q_cluster_reps" ->
-      s"""WITH RECURSIVE $sqlClusterCtes,
-         cl AS (SELECT s AS doc_id, least(s, min(d)) AS cluster_id
-                FROM reach GROUP BY s),
-         $sqlQualityCtes,
-         j AS (
-           SELECT cl.cluster_id, cl.doc_id,
-             CAST(floor(qq.quality * 1e4 + 0.5) AS BIGINT) AS qint
-           FROM cl JOIN qq USING (doc_id)),
-         r AS (
-           SELECT cluster_id, doc_id, qint,
-             row_number() OVER (PARTITION BY cluster_id
-               ORDER BY qint DESC, doc_id) AS rn,
-             count(*) OVER (PARTITION BY cluster_id) AS nm
-           FROM j)
-         SELECT cluster_id, CAST(nm AS BIGINT) AS n_members,
-           doc_id AS rep_doc_id, CAST(qint AS DOUBLE) / 1e4 AS rep_quality,
-           CAST(nm - 1 AS BIGINT) AS n_dropped
-         FROM r WHERE rn = 1 ORDER BY cluster_id""",
-    "q_weighted_mean" ->
+                (SELECT count(*) FROM (SELECT * FROM a INTERSECT SELECT * FROM b)) AS both_years""")),
+    // typed Aggregator (functions.WeightedMean)
+    Entry("q_weighted_mean", "wm", ExtendedAnalytics.weightedMeanPrice _, Oracle(
       """SELECT l_returnflag,
          round(sum(l_extendedprice * l_quantity) / sum(l_quantity), 4) AS wmean
-         FROM lineitem GROUP BY 1 ORDER BY l_returnflag""",
-  )
+         FROM lineitem GROUP BY 1 ORDER BY l_returnflag""")),
+  ), Bench.SharedBuilds)
 }

@@ -1,7 +1,7 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare.
+/** Driver-run correctness dump: each catalog entry's result → parquet,
+  * in key order, plus oracle_sql.json, for the driver's DuckDB compare.
   *
   * Optional 3rd+ args select a query subset (dev use: targeted sf1
   * re-checks without the ~20-min full sweep); the driver's 2-arg
@@ -11,8 +11,6 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet
-    val spark = Session(Session.Cpus)
-    new java.io.File(outDir).mkdirs()
     // a typo'd subset name must not silently verify nothing — fail the
     // run, don't just warn (a fully typo'd subset would otherwise dump
     // nothing, write an empty oracle_sql.json, and exit 0)
@@ -20,15 +18,16 @@ object Verify {
     if (unknown.nonEmpty) {
       System.err.println(
         s"[verify] unknown queries in subset: ${unknown.mkString(", ")}")
-      spark.stop()
       sys.exit(1)
     }
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (only.isEmpty || only(name))
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    val entries = SparkEntry.catalog.filter(e => only.isEmpty || only(e.key)).sortBy(_.key)
+    val spark = Session(Session.Cpus)
+    new java.io.File(outDir).mkdirs()
+    entries.foreach { e =>
+      try e.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${e.key}")
+      catch { case x: Throwable =>
+        System.err.println(s"[verify] ${e.key} failed: ${x.getMessage}")
       }
     }
     graft.plans.Memo.release(spark, sfDir)
@@ -48,9 +47,9 @@ object Verify {
     // every oracle_sql.json entry, so unselected entries (with no
     // parquet dump beside them) would FAIL the very gate the subset
     // flow feeds
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.isEmpty || only(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = entries.collect { case SparkEntry.Entry(k, _, _, o: SparkEntry.Oracle) =>
+      s"${q(k)}: ${q(o.sql)}"
+    }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -21,8 +21,12 @@ import StandingIndex.Tree
   *               file — a query's beam-routed node set prunes to its
   *               SHARDS' files on the manifest stats at plan time
   *               (`node` itself stays a data column for the in-shard
-  *               filter); an at-cap graph keeps 256 shards, so a
-  *               routed query reads ≤ probes/shards ≈ 12% of the table
+  *               filter); an at-cap graph keeps 256 shards, so ONE
+  *               routed query reads ≤ probes/shards ≈ 12% of the
+  *               table. A batch reads the union of its queries'
+  *               shards: the catalog's 10-query batch routes to every
+  *               shard at the shipped SFs, so that entry scans the
+  *               whole table there
   *   meta/       1-row sidecar: the NSW routing graph (node ids,
   *               vectors, norms, adjacency) — bounded metadata,
   *               ≤ 2 MB at the 8192-node cap

@@ -21,7 +21,10 @@ import StandingIndex.Tree
   *                   FILES on the manifest stats at plan time (no data
   *                   read outside the probed cells; at 100 TB this is
   *                   the difference between reading
-  *                   probe-fraction×corpus and corpus)
+  *                   probe-fraction×corpus and corpus); a batch
+  *                   reads the union of its queries' cells, and the
+  *                   catalog's 10-query batch probes every cell at
+  *                   the shipped SFs
   *   meta/           1-row sidecar: PQ codebook + IVF centroid set
   *                   (bounded metadata, ~40 KB)
   *   tombstones/     (neighbor_id) — deleted vectors

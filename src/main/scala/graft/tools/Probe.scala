@@ -12,15 +12,23 @@ object Probe {
     val dir = args(0)
     val reps = args(1).toInt
     val names = args.drop(2).toSeq
+    val catalog = graft.SparkEntry.queries
+    val shared = graft.Bench.SharedBuilds.map(b => b.key -> b.build).toMap
+    // a typo'd name fails the run before the session starts, not
+    // partway through it
+    val unknown = names.filterNot(n => catalog.contains(n) || shared.contains(n))
+    if (unknown.nonEmpty) {
+      System.err.println(s"[probe] unknown names: ${unknown.mkString(", ")}")
+      sys.exit(1)
+    }
     val spark = graft.Session(graft.Session.Cpus)
     val meter = new graft.Meter(spark.sparkContext)
-    val shared = graft.Bench.SharedBuilds.toMap
     // PROBE_CODEGEN=<dir>: dump each query's whole-stage generated
     // code to <dir>/<name>.codegen.txt instead of timing it.
     sys.env.get("PROBE_CODEGEN").foreach { outDir =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
       names.foreach { name =>
-        val df = graft.SparkEntry.queries(name)(spark, dir)
+        val df = catalog(name)(spark, dir)
         val code = org.apache.spark.sql.execution.debug.codegenString(
           df.queryExecution.executedPlan)
         java.nio.file.Files.write(
@@ -35,7 +43,7 @@ object Probe {
     sys.env.get("PROBE_EXPLAIN").foreach { outDir =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
       names.foreach { name =>
-        val df = graft.SparkEntry.queries(name)(spark, dir)
+        val df = catalog(name)(spark, dir)
         java.nio.file.Files.write(
           java.nio.file.Paths.get(outDir, s"$name.txt"),
           df.queryExecution.explainString(
@@ -57,7 +65,7 @@ object Probe {
             case Some(fn) => fn(spark, dir)
             case None if split =>
               val tc0 = System.nanoTime()
-              val df = graft.SparkEntry.queries(name)(spark, dir)
+              val df = catalog(name)(spark, dir)
               val tc1 = System.nanoTime()
               df.queryExecution.executedPlan
               val tc2 = System.nanoTime()
@@ -66,7 +74,7 @@ object Probe {
               println(f"[split] $name rep$i construct=${(tc1 - tc0) / 1e9}%.3f " +
                 f"plan=${(tc2 - tc1) / 1e9}%.3f exec=${(tc3 - tc2) / 1e9}%.3f")
             case None =>
-              graft.SparkEntry.queries(name)(spark, dir)
+              catalog(name)(spark, dir)
                 .write.format("noop").mode("overwrite").save()
           }
         }

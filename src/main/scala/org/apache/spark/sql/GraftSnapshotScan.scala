@@ -52,13 +52,15 @@ object GraftSnapshotScan {
   /** A DataFrame over `index`'s parquet files under `schema`, planned
     * through the standard file-source path (vectorized parquet reads,
     * whole-stage codegen) with the index's manifest prune in the loop.
+    * Every field reads nullable, as `spark.read` plans a file relation,
+    * so this read and `Snapshots.read` of one version agree.
     */
   def dataFrame(spark: SparkSession, index: FileIndex,
                 schema: StructType): DataFrame = {
     val relation = HadoopFsRelation(
       location = index,
       partitionSchema = StructType(Nil),
-      dataSchema = schema,
+      dataSchema = schema.asNullable,
       bucketSpec = None,
       fileFormat = new ParquetFileFormat,
       options = Map.empty)(spark)

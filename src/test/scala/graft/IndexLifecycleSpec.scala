@@ -703,6 +703,18 @@ class SnapshotsMaintenanceSpec extends AnyFunSuite {
     assert(Snapshots.append(spark, looseRoot, strict) === 2)
   }
 
+  test("read and readIndexed of one version agree on nullability, after create and after compact") {
+    import org.apache.spark.sql.types.{ArrayType, IntegerType}
+    val root = java.nio.file.Files.createTempDirectory("graft_snapnullread").toString
+    val frame = Tables.documents(spark, sf).select(col("doc_id"), array(lit(1), lit(2)).as("xs"))
+    val xs = frame.schema("xs")
+    assert(!xs.nullable && xs.dataType === ArrayType(IntegerType, containsNull = false))
+    val v1 = Snapshots.create(spark, root, frame)
+    assert(Snapshots.read(spark, root, v1).schema === Snapshots.readIndexed(spark, root, v1).schema)
+    val v2 = Snapshots.compact(spark, root)
+    assert(Snapshots.read(spark, root, v2).schema === Snapshots.readIndexed(spark, root, v2).schema)
+  }
+
   test("contiguous txn ids range-compress to one manifest tag line") {
     val root = java.nio.file.Files.createTempDirectory("graft_snaptxn3").toString
     val docs = Tables.documents(spark, sf).select("doc_id", "source").limit(3)

@@ -916,6 +916,8 @@ class PlanRegressionSpec extends org.scalatest.funsuite.AnyFunSuite {
       "q_cluster_mix",
       // source-catalog (dim-sized) signature self-join on an inequality
       "q_source_sim")
+    val stale = allowedBnlj.filterNot(SparkEntry.queries.contains)
+    assert(stale.isEmpty, s"stale catalog keys in allowedBnlj: $stale")
     for ((q, _) <- SparkEntry.queries) {
       val p = plan(q)
       assert(!p.contains("CartesianProduct"), s"$q has a cartesian product")
@@ -924,25 +926,30 @@ class PlanRegressionSpec extends org.scalatest.funsuite.AnyFunSuite {
     }
   }
 
-  test("queries/oracleSql source literals define each key exactly once") {
-    // Map(...) construction silently keeps only the LAST duplicate key —
-    // an edit to the shadowed literal would no-op (happened in round 1
-    // with q_session_window), so check the SOURCE text, not the Map
-    val src = scala.io.Source.fromFile("src/main/scala/graft/SparkEntry.scala", "UTF-8")
-    val text = try src.mkString finally src.close()
-    val qStart = text.indexOf("def queries")
-    val oStart = text.indexOf("def oracleSql")
-    val keyRe = """"(q[0-9]*_?[a-z0-9_]+)"\s*->""".r
-    def keysIn(s: String) = keyRe.findAllMatchIn(s).map(_.group(1)).toSeq
-    val qKeys = keysIn(text.substring(qStart, oStart))
-    val oKeys = keysIn(text.substring(oStart))
-    assert(qKeys.size === qKeys.distinct.size,
-      s"duplicate queries keys: ${qKeys.diff(qKeys.distinct).distinct}")
-    assert(oKeys.size === oKeys.distinct.size,
-      s"duplicate oracleSql keys: ${oKeys.diff(oKeys.distinct).distinct}")
-    assert(qKeys.toSet === SparkEntry.queries.keySet)
-    assert(oKeys.toSet === SparkEntry.oracleSql.keySet)
-    assert(oKeys.toSet.subsetOf(qKeys.toSet), "every oracle needs a query")
+  test("the catalog check rejects a key or short key declared twice and an unknown gate") {
+    import SparkEntry.{Entry, Gated, Oracle, checked}
+    val run: SparkEntry.Run = (_, _) => null
+    val a = Entry("q_a", run, Oracle("SELECT 1"))
+    val b = Entry("q_b", run, Gated("ann_lsh_recall5"))
+    val shared = Bench.Shared("shared_x", "Sx", (_, _) => ())
+    assert(checked(Seq(a, b), Seq(shared)) === Seq(a, b))
+    def rejects(entries: Seq[Entry], why: String) = {
+      val e = intercept[IllegalArgumentException](checked(entries, Seq(shared)))
+      assert(e.getMessage.contains(why), e.getMessage)
+    }
+    rejects(Seq(a, b, a.copy(check = Gated("ann_ivf_recall5"))), "q_a")
+    rejects(Seq(a, Entry("shared_x", "xx", run, Oracle("SELECT 1"))), "shared_x")
+    rejects(Seq(a, b.copy(short = "a")), "short key twice: a")
+    rejects(Seq(a, Entry("q_c", "Sx", run, Oracle("SELECT 1"))), "short key twice: Sx")
+    rejects(Seq(a, b.copy(check = Gated("ann_nope_recall5"))), "q_b -> ann_nope_recall5")
+  }
+
+  test("the live catalog holds 186 entries: 175 with an oracle, 11 gated") {
+    val checks = SparkEntry.catalog.map(_.check)
+    assert(checks.size === 186)
+    assert(checks.count(_.isInstanceOf[SparkEntry.Oracle]) === 175)
+    assert(checks.count(_.isInstanceOf[SparkEntry.Gated]) === 11)
+    assert(SparkEntry.oracleSql.size === 175 && SparkEntry.queries.size === 186)
   }
 
   test("report doc has no unpartitioned window and no fact-scale low-cardinality window") {
@@ -1497,18 +1504,16 @@ class PlanRegressionSpec extends org.scalatest.funsuite.AnyFunSuite {
 
 /** The bench stdout line must survive the driver's ~2000-char
   * tail-capture window (rounds 1–4 lost bench visibility to exactly
-  * this). Pins the ShortKey map's integrity and a worst-case length
+  * this). Pins the short keys' uniqueness and a worst-case length
   * bound with ≥25% headroom.
   */
 class BenchLineSpec extends org.scalatest.funsuite.AnyFunSuite {
+  private val shorts =
+    SparkEntry.catalog.map(_.short) ++ Bench.SharedBuilds.map(_.short)
 
-  test("short keys are unique, non-stale, and cover every query") {
-    val live = SparkEntry.queries.keySet ++ Bench.SharedBuilds.map(_._1)
-    val stale = Bench.ShortKey.keySet -- live
-    assert(stale.isEmpty, s"ShortKey maps entries that no longer exist: $stale")
-    val emitted = live.toSeq.map(Bench.shortKey)
-    assert(emitted.size === emitted.distinct.size,
-      s"short-key collision: ${emitted.diff(emitted.distinct).distinct}")
+  test("short keys are unique across the catalog and the shared builds") {
+    assert(shorts.size === shorts.distinct.size,
+      s"short-key collision: ${shorts.diff(shorts.distinct).distinct}")
   }
 
   test("worst-case bench line stays under 1500 chars (driver window is ~2000)") {
@@ -1516,10 +1521,10 @@ class BenchLineSpec extends org.scalatest.funsuite.AnyFunSuite {
     // LineFailCap failures; the TRUE worst case — the whole catalog
     // failing (bad testdata dir) — is therefore LineFailCap failure
     // entries ("-9.9", 5 chars each) + LineTopK successes at "99.9",
-    // catalog-size-independent by construction
-    val widest = (SparkEntry.queries.keySet.toSeq ++ Bench.SharedBuilds.map(_._1))
-      .sorted.take(Bench.LineTopK + Bench.LineFailCap)
-    val qs = widest.map(k => "\"" + Bench.shortKey(k) + "\":-9.9")
+    // under the longest short keys; catalog-size-independent by
+    // construction
+    val widest = shorts.sortBy(-_.length).take(Bench.LineTopK + Bench.LineFailCap)
+    val qs = widest.map(k => "\"" + k + "\":-9.9")
       .mkString("{", ",", "}")
     val line = s"""{"metric":"total","value":99999.99,"unit":"sec","queries":$qs,""" +
       s""""nq":${SparkEntry.queries.size},"nfail":${SparkEntry.queries.size},""" +
