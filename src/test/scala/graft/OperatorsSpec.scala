@@ -926,7 +926,7 @@ class PlanRegressionSpec extends org.scalatest.funsuite.AnyFunSuite {
     }
   }
 
-  test("the catalog check rejects a key or short key declared twice and an unknown gate") {
+  test("the catalog check rejects duplicate keys or short keys and unknown gates") {
     import SparkEntry.{Entry, Gated, Oracle, checked}
     val run: SparkEntry.Run = (_, _) => null
     val a = Entry("q_a", run, Oracle("SELECT 1"))
