@@ -38,8 +38,6 @@ object TextFunctions {
       lit(0L),
       (acc, c) => (acc * lit(31L) + ascii(c)) % lit(HashP))
 
-  def tokenHash(token: Column): Column = charFoldHash(token)
-
   /** Distinct word n-gram shingles over the canonical token stream;
     * empty array when fewer than n tokens.
     */

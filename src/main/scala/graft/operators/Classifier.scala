@@ -509,11 +509,6 @@ object Classifier {
   // q_dsir_select — the resampling step
   // ---------------------------------------------------------------------
 
-  /** Keep fraction: docs at or above the median length-normalized
-    * importance weight survive.
-    */
-  val DsirSelectQuantile = 0.5
-
   /** DSIR selection (`q_dsir_select`): resample the corpus toward the
     * target distribution by keeping every document whose
     * length-normalized importance weight clears the corpus median —

@@ -44,12 +44,4 @@ object Skew {
         saltedL(leftKey) === saltedR(rightKey) && saltedL("_salt") === saltedR("_salt"))
       .drop("_salt")
   }
-
-  /** Top-frequency keys — the skew detector that decides whether the
-    * salted paths are worth it (run on a sample at scale).
-    */
-  def keyHistogram(df: DataFrame, keyCol: String, topK: Int = 20): DataFrame =
-    df.groupBy(keyCol).agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col(keyCol))
-      .limit(topK)
 }

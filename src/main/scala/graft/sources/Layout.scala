@@ -68,16 +68,6 @@ object Layout {
       least(floor((c.cast("double") - lo.cast("double")) / span * n), lit(n)).cast("long"))
   }
 
-  /** `df` with a `_z` Morton-key column on (colA, colB) — the shared
-    * front half of [[writeZOrdered]] and `Snapshots.clusterZ`.
-    * Dimension ranges come from ONE min/max aggregate cross-joined in
-    * as a broadcast scalar row — no driver action, no second scan
-    * thanks to exchange reuse.
-    */
-  private[sources] def withZ(df: DataFrame, colA: String,
-                             colB: String): DataFrame =
-    withZN(df, Seq(colA, colB))
-
   /** `df` with a `_z` Morton-key column over `cols` (N ≥ 1 dims, each
     * bucketed to [[bitsFor]]`(N)` bits against its min/max) — the
     * shared front half of [[writeZOrdered]] and `Snapshots.clusterZ`.
@@ -164,7 +154,7 @@ object Layout {
   /** Write `df` z-ordered on (colA, colB) into `files` parquet files. */
   def writeZOrdered(df: DataFrame, outDir: String,
                     colA: String, colB: String, files: Int): Unit =
-    withZ(df, colA, colB)
+    withZN(df, Seq(colA, colB))
       .repartitionByRange(files, col("_z"))
       .sortWithinPartitions("_z")
       .drop("_z")

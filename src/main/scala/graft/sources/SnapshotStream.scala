@@ -1,8 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftSnapshotScan, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -35,15 +34,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * The read schema pins at stream start (the stream-source contract):
   * files written before a later widening surface the missing columns
   * as null; columns added after the stream started don't surface
-  * until restart. Primitive columns (integral, floating, string,
-  * boolean, timestamp-micros, date), ARRAYs (standard 3-level LIST
-  * encoding) and STRUCTs (nested fields resolved by name,
-  * absent-as-null) are supported — r16 added the nested types so a
-  * documents-shaped table (embedding arrays, typed metadata structs)
-  * can stream its change feed; maps/decimals remain batch-only. A
-  * physical-type mismatch against the pinned stream schema upcasts
-  * the safe widenings (int32→long, float→double) and otherwise fails
-  * with a clear column+types message rather than a cryptic task error.
+  * until restart. Each file reads through Spark's own parquet reader
+  * ([[GraftSnapshotScan.parquetReaderFactory]]) under that schema, so
+  * every type a batch read supports streams — nested arrays, structs,
+  * maps and decimals included; int32/float files widen to long/double,
+  * and any other type mismatch fails the task (the default vectorized
+  * reader names the column: `PARQUET_COLUMN_DATA_TYPE_MISMATCH`).
   */
 object SnapshotStream {
 
@@ -53,12 +49,14 @@ object SnapshotStream {
   def streamSchema(s: SparkSession, root: String): StructType = {
     val v = Snapshots.latestVersion(s, root)
     require(v >= 1, s"snapshot stream needs an existing dataset at $root")
-    val m = Snapshots.readManifestData(s, root, v)
-    val sc = m.schema.getOrElse(s.read.parquet(m.files: _*).schema)
-    StructType(sc.fields :+
-      StructField("_change_type", StringType, nullable = false) :+
-      StructField("_commit_version", IntegerType, nullable = false))
+    StructType(Snapshots.schemaOf(root, v, Snapshots.readManifestData(s, root, v))
+      .fields ++ ChangeColumns.fields)
   }
+
+  /** The two change-feed columns, each file's partition values. */
+  val ChangeColumns: StructType = StructType(Seq(
+    StructField("_change_type", StringType, nullable = false),
+    StructField("_commit_version", IntegerType, nullable = false)))
 
   /** readStream entry — the spec surface. */
   def readStream(s: SparkSession, root: String)
@@ -172,187 +170,17 @@ class SnapshotMicroBatchStream(root: String, tableSchema: StructType,
     val to = end.asInstanceOf[SnapshotOffset].v
     Snapshots.typedFiles(root, from, to,
         Snapshots.changeFileGroups(spark, root, from, to)).flatMap { g =>
-      // per-version pinned schemas need no shipping: the reader
-      // resolves the STREAM schema's fields against each file's own
-      // footer by name (absent column = null), which is exactly the
-      // batch path's metadata-only evolution (primitives + nested, r16)
-      g.files.map(f => SnapshotChangePartition(f, g.changeType, g.version))
+      // metadata only: `#len:` lines, one listing per change subdir
+      val lens = Snapshots.readManifestData(spark, root, g.version).lens
+      val values = InternalRow(UTF8String.fromString(g.changeType), g.version)
+      Snapshots.fileStatuses(spark, root, g.files, lens).map(_ -> values)
+    }.zipWithIndex.map { case ((st, values), i) =>
+      GraftSnapshotScan.filePartition(i, st, values)
     }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new SnapshotChangeReaderFactory(tableSchema,
-      org.apache.spark.GraftSparkBridge.serializableConf(
-        spark.sparkContext.hadoopConfiguration))
-}
-
-final case class SnapshotChangePartition(path: String, kind: String,
-    version: Int) extends InputPartition
-
-class SnapshotChangeReaderFactory(tableSchema: StructType,
-    serConf: AnyRef with java.io.Serializable)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new SnapshotChangeReader(
-      partition.asInstanceOf[SnapshotChangePartition], tableSchema,
-      org.apache.spark.GraftSparkBridge.confOf(serConf))
-}
-
-/** Reads ONE change-feed parquet file executor-side through the
-  * parquet example Group API, converting columns to the stream schema
-  * by NAME (a column the file predates reads as null — metadata-only
-  * schema evolution, matching the batch read). Primitives are
-  * physical-type-checked (safe widenings upcast); arrays and structs
-  * convert recursively (r16).
-  */
-class SnapshotChangeReader(p: SnapshotChangePartition,
-    tableSchema: StructType,
-    conf: org.apache.hadoop.conf.Configuration)
-    extends PartitionReader[InternalRow] {
-  import org.apache.parquet.example.data.Group
-  import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-  import org.apache.parquet.io.ColumnIOFactory
-
-  private val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-    org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(p.path), conf))
-  private val fileSchema = reader.getFooter.getFileMetaData.getSchema
-  private val columnIO = new ColumnIOFactory().getColumnIO(fileSchema)
-  private val dataFields = tableSchema.fields
-    .filterNot(f => f.name == "_change_type" || f.name == "_commit_version")
-  private val present: Map[String, Int] = dataFields.iterator
-    .map(_.name).filter(fileSchema.containsField)
-    .map(n => n -> fileSchema.getFieldIndex(n)).toMap
-
-  private var recordReader: org.apache.parquet.io.RecordReader[Group] = _
-  private var rowsLeftInGroup = 0L
-  private var row: InternalRow = _
-
-  override def next(): Boolean = {
-    while (rowsLeftInGroup == 0L) {
-      val pages = reader.readNextRowGroup()
-      if (pages == null) return false
-      rowsLeftInGroup = pages.getRowCount
-      recordReader = columnIO.getRecordReader(
-        pages, new GroupRecordConverter(fileSchema))
-    }
-    val g = recordReader.read()
-    rowsLeftInGroup -= 1
-    row = convert(g)
-    true
-  }
-
-  override def get(): InternalRow = row
-  override def close(): Unit = reader.close()
-
-  private def convert(g: Group): InternalRow = {
-    val out = new Array[Any](tableSchema.length)
-    var i = 0
-    tableSchema.fields.foreach { f =>
-      out(i) = f.name match {
-        case "_change_type"    => UTF8String.fromString(p.kind)
-        case "_commit_version" => p.version
-        case n =>
-          present.get(n) match {
-            case Some(idx) if g.getFieldRepetitionCount(idx) > 0 =>
-              value(g, idx, f.dataType, n)
-            case _ => null // absent column or null value
-          }
-      }
-      i += 1
-    }
-    new GenericInternalRow(out)
-  }
-
-  /** One field's Catalyst value, recursively: primitives check the
-    * file's PHYSICAL type and upcast the safe widenings (int32→long,
-    * float→double — a file written before a type widening must not hit
-    * a cryptic executor ClassCastException, r16 ADVICE); arrays expect
-    * Spark's standard 3-level LIST encoding; structs resolve nested
-    * fields by NAME with absent-as-null, the same metadata-only
-    * evolution as top level (r16 — nested types were batch-only
-    * before).
-    */
-  private def value(g: Group, idx: Int, dt: DataType, name: String): Any = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    dt match {
-      case st: StructType =>
-        val sg = g.getGroup(idx, 0)
-        val nested = sg.getType
-        val out = new Array[Any](st.length)
-        var j = 0
-        st.fields.foreach { nf =>
-          out(j) =
-            if (!nested.containsField(nf.name)) null
-            else {
-              val ni = nested.getFieldIndex(nf.name)
-              if (sg.getFieldRepetitionCount(ni) > 0)
-                value(sg, ni, nf.dataType, s"$name.${nf.name}")
-              else null
-            }
-          j += 1
-        }
-        new GenericInternalRow(out)
-      case ArrayType(et, _) =>
-        // 3-level LIST: optional group <name> (LIST) {
-        //   repeated group list { <element> } }
-        val lg = g.getGroup(idx, 0)
-        require(lg.getType.getFieldCount == 1 &&
-          !lg.getType.getType(0).isPrimitive,
-          s"snapshot stream: column '$name' is not standard 3-level " +
-            s"LIST-encoded parquet (${lg.getType})")
-        val n = lg.getFieldRepetitionCount(0)
-        val arr = new Array[Any](n)
-        var k = 0
-        while (k < n) {
-          val eg = lg.getGroup(0, k)
-          arr(k) =
-            if (eg.getFieldRepetitionCount(0) > 0)
-              value(eg, 0, et, s"$name[]")
-            else null
-          k += 1
-        }
-        new org.apache.spark.sql.catalyst.util.GenericArrayData(arr)
-      case _ =>
-        val pt = g.getType.getType(idx)
-        require(pt.isPrimitive,
-          s"snapshot stream: column '$name' expects ${dt.simpleString} " +
-            s"but the file holds a group ($pt)")
-        val phys = pt.asPrimitiveType().getPrimitiveTypeName
-        def mismatch(): Nothing = throw new IllegalArgumentException(
-          s"snapshot stream: column '$name' expects ${dt.simpleString} " +
-            s"but the file's physical type is $phys")
-        dt match {
-          case LongType | TimestampType => phys match {
-            case INT64 => g.getLong(idx, 0)
-            case INT32 => g.getInteger(idx, 0).toLong // pre-widening file
-            case _     => mismatch()
-          }
-          case IntegerType | DateType => phys match {
-            case INT32 => g.getInteger(idx, 0)
-            case _     => mismatch()
-          }
-          case DoubleType => phys match {
-            case DOUBLE => g.getDouble(idx, 0)
-            case FLOAT  => g.getFloat(idx, 0).toDouble // pre-widening file
-            case _      => mismatch()
-          }
-          case FloatType => phys match {
-            case FLOAT => g.getFloat(idx, 0)
-            case _     => mismatch()
-          }
-          case BooleanType => phys match {
-            case BOOLEAN => g.getBoolean(idx, 0)
-            case _       => mismatch()
-          }
-          case StringType => phys match {
-            case BINARY => UTF8String.fromString(g.getString(idx, 0))
-            case _      => mismatch()
-          }
-          case other => throw new IllegalArgumentException(
-            s"snapshot stream cannot read column '$name' of type " +
-              s"${other.simpleString}")
-        }
-    }
-  }
+    GraftSnapshotScan.parquetReaderFactory(spark,
+      StructType(tableSchema.fields.dropRight(SnapshotStream.ChangeColumns.length)),
+      SnapshotStream.ChangeColumns)
 }

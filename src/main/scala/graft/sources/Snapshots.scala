@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.Tables
 import graft.plans.Memo
 
@@ -51,7 +52,10 @@ object Snapshots {
     * read path plan with ZERO filesystem calls).
     */
   private[sources] final case class BatchFiles(files: Seq[String],
-      stats: Map[String, String], lens: Map[String, Long])
+      stats: Map[String, String], lens: Map[String, Long]) {
+    /** These files as a manifest to plan a [[relation]] over. */
+    def manifest: Manifest = Manifest(files, Nil, None, stats = stats, lens = lens)
+  }
 
   /** Write one commit's rows into its own transaction subdirectory and
     * return its live files WITH their stats. The file set is a
@@ -59,36 +63,18 @@ object Snapshots {
     * listing (which two racing appends would both scan, each claiming
     * the other's files); ONE footer pass total ([[footerScan]]) drops
     * zero-row parts and harvests min/max stats from the same open.
+    * Data files land under `data/b…`; a commit's change-data files
+    * under `changes/c…` (`dir = "changes/c"`).
     */
   private def writeBatchFiles(s: SparkSession, root: String,
-                              df: DataFrame): BatchFiles = {
-    val sub = s"$root/data/b${java.util.UUID.randomUUID().toString.take(12)}"
+                              df: DataFrame, dir: String = "data/b"): BatchFiles = {
+    val sub = s"$root/$dir${java.util.UUID.randomUUID().toString.take(12)}"
     df.write.mode("errorifexists").parquet(sub)
     footerScan(s, fs(s).listStatus(new org.apache.hadoop.fs.Path(sub)).toSeq
       .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
       .map(_.getPath.toString)
       .sorted)
   }
-
-  /** Drop ZERO-ROW part files before they enter a manifest: an empty
-    * parquet file contributes no rows but also records NO footer
-    * stats, so it can never be pruned — one empty boundary part from a
-    * delete's rewrite would otherwise pin every later stats/no-op
-    * decision conservative forever (and an empty change file would
-    * make an actually-empty delete change set look non-empty to the
-    * CDC pass-through rule). One footer open per file; an unreadable
-    * footer KEEPS the file (never drop data on a metadata error).
-    */
-  private def nonEmptyParts(s: SparkSession, files: Seq[String]): Seq[String] =
-    files.filter { file =>
-      try {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(file),
-          s.sparkContext.hadoopConfiguration)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount > 0 finally r.close()
-      } catch { case _: Exception => true } // unreadable: keep (never drop data)
-    }
 
   /** A racing commit already claimed this version number: the caller
     * lost the optimistic-concurrency race and should re-read the
@@ -170,8 +156,10 @@ object Snapshots {
         val len = in.getLength // the SAME open serves the #len: line
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
         try {
-          // zero-row parts drop here (see [[nonEmptyParts]]) — the
-          // SAME footer open harvests the stats, one pass per file
+          // zero-row parts drop here: an empty file records NO footer
+          // stats, so it could never be pruned (and an empty change
+          // file would make an empty delete's change set look
+          // non-empty) — the SAME footer open harvests the stats
           if (r.getRecordCount == 0) (file, false, None, len)
           else {
           // merge row-group chunk stats per top-level column; a chunk
@@ -550,8 +538,8 @@ object Snapshots {
   }
 
   /** One parsed manifest: file list + carried metadata. `commit` is
-    * this version's commit kind (append/rewrite/layout), None for
-    * legacy manifests written before the tag; `stats` maps part-file
+    * this version's commit kind (append/rewrite/layout), None — like
+    * `schema` — only in IndexVersions' root manifests; `stats` maps part-file
     * NAME → raw per-column min/max json (parsed lazily at prune time);
     * `blooms` maps "fileName:col" → its `#bloom:` payload. `cdfd`
     * carries an update's change-data PRE-IMAGE files (`#cdfd:` — the
@@ -616,8 +604,8 @@ object Snapshots {
       case l if l.startsWith("#commit:") =>
         commit = Some(l.stripPrefix("#commit:"))
       case l if l.startsWith("#mirror:") =>
-        // malformed cursor fails fast too: the legacy-txn fallback it
-        // would silently degrade to can be a FOREIGN txn id
+        // malformed cursor fails fast too: read as absent, it would
+        // silently restart the mirror from source version 0
         mirror = Some(l.stripPrefix("#mirror:").toLongOption.getOrElse(
           throw new IllegalStateException(
             s"corrupt manifest v$v at $root: unparseable '$l'")))
@@ -777,20 +765,12 @@ object Snapshots {
   private def txnCommitted(ranges: Seq[(Long, Long)], id: Long): Boolean =
     ranges.exists { case (a, b) => id >= a && id <= b }
 
-  /** The schema an append commits on `base`: its standing schema
-    * widened by the batch's new columns ([[mergeSchemas]]). The
-    * standing schema is the pinned tag when present; for a LEGACY
-    * (pre-tag) lineage, the footer-inferred schema of the base's files
-    * — adopting the batch's schema alone there would silently DROP
-    * every standing column from all later reads (and bypass the
-    * type-change guard).
+  /** The schema an append commits on `base`: its pinned schema
+    * widened by the batch's new columns ([[mergeSchemas]]).
     */
-  private def appendSchema(s: SparkSession, base: Int, m: Manifest,
-      batch: org.apache.spark.sql.types.StructType)
-      : Option[org.apache.spark.sql.types.StructType] =
-    Some(m.schema.orElse(
-        if (base == 0) None else Some(s.read.parquet(m.files: _*).schema))
-      .fold(batch)(mergeSchemas(_, batch)))
+  private def appendSchema(root: String, base: Int, m: Manifest,
+                           batch: StructType): StructType =
+    if (base == 0) batch else mergeSchemas(schemaOf(root, base, m), batch)
 
   /** Widen `known` with any NEW fields the batch carries (appended,
     * nullable — old files read them as null). A same-name field must
@@ -962,7 +942,7 @@ object Snapshots {
   private def commitAppend(s: SparkSession, root: String, df: DataFrame,
                            bf: BatchFiles, txn: Option[Long]): Int =
     commit(s, root) { (base, m) =>
-      lazy val schema = appendSchema(s, base, m, df.schema)
+      lazy val schema = Some(appendSchema(root, base, m, df.schema))
       if (txn.exists(txnCommitted(m.txns, _)) ||
           (base >= 1 && bf.files.isEmpty && txn.isEmpty && schema == m.schema)) NoOp(base)
       else Commit(m.files ++ bf.files, Some("append"), schema, bf.stats,
@@ -1126,12 +1106,11 @@ object Snapshots {
       // re-probe on every attempt: a lost race may have been our own
       // concurrent replay committing the same txn id
       if (txn.exists(txnCommitted(m.txns, _))) NoOp(base) else {
-        val standingSc = schemaOf(s, m)
+        val standingSc = schemaOf(root, base, m)
         val sc = mergeSchemas(standingSc, batch.schema)
-        val touched = touchedFiles(s, m, standingSc, batch, keyCols)
-        val touchedSet = touched.toSet
-        val survivors = m.files.filterNot(touchedSet)
-        val standingTouched = scanOrEmpty(s, standingSc, touched)
+        val touched = touchedFiles(s, root, m, standingSc, batch, keyCols)
+        val survivors = m.files.filterNot(touched.toSet)
+        val standingTouched = relation(s, root, m.copy(files = touched), standingSc)
         val w = Window.partitionBy(keyCols.map(col): _*)
           .orderBy(col(orderCol).desc, col("__src").desc)
         val merged = standingTouched.withColumn("__src", lit(0))
@@ -1141,7 +1120,6 @@ object Snapshots {
           .filter(col("__rn") === 1)
           .drop("__src", "__rn")
         val bf = writeBatchFiles(s, root, merged)
-        val mine = bf.files
         // CHANGE-DATA FILES (the Delta CDF idea): the post-image of every
         // key the batch touched, derived from the freshly-written merged
         // files (one bounded scan ⋈ batch keys — never a second corpus
@@ -1150,13 +1128,11 @@ object Snapshots {
         // under changes/. Incremental consumers that opted into upsert
         // semantics read THIS bounded set across the merge instead of
         // resyncing the corpus.
-        val cdf =
-          if (mine.isEmpty) emptyFrame(s, sc)
-          else keyedSemiJoin(s.read.schema(sc).parquet(mine: _*), batch, keyCols)
-        val cdfFiles = writeChangeFiles(s, root, cdf)
+        val cdf = keyedSemiJoin(relation(s, root, bf.manifest, sc), batch, keyCols)
+        val cdfFiles = writeBatchFiles(s, root, cdf, "changes/c").files
         // untouched survivors keep their stats AND blooms by path; the
         // rewritten files' blooms drop with the files (live-key filter)
-        Commit(survivors ++ mine, Some("merge"), Some(sc), bf.stats,
+        Commit(survivors ++ bf.files, Some("merge"), Some(sc), bf.stats,
           lens = bf.lens, cdf = cdfFiles, txn = txn)
       }
     }
@@ -1175,8 +1151,8 @@ object Snapshots {
     * hull still carry by path. A file without usable stats is
     * conservatively a candidate — pruning changes I/O, never results.
     */
-  private def touchedFiles(s: SparkSession, m: Manifest,
-      standingSc: org.apache.spark.sql.types.StructType,
+  private def touchedFiles(s: SparkSession, root: String, m: Manifest,
+      standingSc: StructType,
       batch: DataFrame, keyCols: Seq[String]): Seq[String] = {
     if (m.files.isEmpty) return Seq.empty
     // a key column ABSENT from the standing schema (a widening merge
@@ -1224,7 +1200,7 @@ object Snapshots {
       else if (hull.isEmpty) m.files // only unorderable bounds: no prune
       else filesWhereM(m, hull)
     if (candidates.isEmpty) return Seq.empty
-    val scan = s.read.schema(standingSc).parquet(candidates: _*)
+    val scan = relation(s, root, m.copy(files = candidates), standingSc)
       .select(keyCols.map(col) :+ input_file_name().as("__file"): _*)
     // input_file_name's URI normalization differs from the manifest's
     // Path.toString — match on the globally-unique part NAME, never
@@ -1247,20 +1223,6 @@ object Snapshots {
       (d, k) => d.withColumnRenamed(k, s"__bk_$k"))
     val cond = keyCols.map(k => left(k) <=> keys(s"__bk_$k")).reduce(_ && _)
     left.join(keys, cond, "leftsemi")
-  }
-
-  /** One merge's change set, in its own subdirectory under changes/
-    * (the writeBatchFiles discipline: a commit's change files are a
-    * property of its own write).
-    */
-  private def writeChangeFiles(s: SparkSession, root: String,
-                               df: DataFrame): Seq[String] = {
-    val sub = s"$root/changes/c${java.util.UUID.randomUUID().toString.take(12)}"
-    df.write.mode("errorifexists").parquet(sub)
-    nonEmptyParts(s, fs(s).listStatus(new org.apache.hadoop.fs.Path(sub)).toSeq
-      .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
-      .map(_.getPath.toString)
-      .sorted)
   }
 
   /** Streaming UPSERT ingest into a versioned dataset — the exactly-
@@ -1323,11 +1285,11 @@ object Snapshots {
       // consumer-visible retraction boundary for zero changed rows
       if (candidates.isEmpty) NoOp(base) else {
         val survivors = m.files.filterNot(candidates.toSet)
-        val sc = schemaOf(s, m)
+        val sc = schemaOf(root, base, m)
         val hit = coalesce(preds.map(predColumn).reduce(_ && _), lit(false))
-        val cand = s.read.schema(sc).parquet(candidates: _*)
+        val cand = relation(s, root, m.copy(files = candidates), sc)
         val bfd = writeBatchFiles(s, root, cand.filter(!hit))
-        val cdfFiles = writeChangeFiles(s, root, cand.filter(hit))
+        val cdfFiles = writeBatchFiles(s, root, cand.filter(hit), "changes/c").files
         // survivors keep their blooms; the rewritten files' drop
         Commit(survivors ++ bfd.files, Some("delete"), Some(sc), bfd.stats,
           lens = bfd.lens, cdf = cdfFiles)
@@ -1370,7 +1332,7 @@ object Snapshots {
     require(set.nonEmpty, "update needs at least one assignment")
     commit(s, root) { (base, m) =>
       require(base >= 1, s"update needs an existing dataset at $root")
-      val sc = schemaOf(s, m)
+      val sc = schemaOf(root, base, m)
       val byName = sc.fields.map(f => f.name -> f.dataType).toMap
       set.keys.foreach(c => require(byName.contains(c),
         s"update cannot assign unknown column '$c'"))
@@ -1378,7 +1340,7 @@ object Snapshots {
       if (candidates.isEmpty) NoOp(base) else { // provably zero matches
         val survivors = m.files.filterNot(candidates.toSet)
         val hit = coalesce(preds.map(predColumn).reduce(_ && _), lit(false))
-        val cand = s.read.schema(sc).parquet(candidates: _*)
+        val cand = relation(s, root, m.copy(files = candidates), sc)
         // flag FIRST: assignments must see the old row, and the change
         // sets must select on the ORIGINAL match, not the updated values.
         // ALL assignments evaluate in ONE projection — a sequential
@@ -1405,8 +1367,8 @@ object Snapshots {
         // files and the change set.
         val postImages = updated.filter(col("__hit"))
           .drop("__hit").select(sc.fieldNames.map(col): _*)
-        val cdfdFiles = writeChangeFiles(s, root, preImages)
-        val cdfFiles = writeChangeFiles(s, root, postImages)
+        val cdfdFiles = writeBatchFiles(s, root, preImages, "changes/c").files
+        val cdfFiles = writeBatchFiles(s, root, postImages, "changes/c").files
         Commit(survivors ++ bfu.files, Some("update"), Some(sc), bfu.stats,
           lens = bfu.lens, cdf = cdfFiles, cdfd = cdfdFiles)
       }
@@ -1615,42 +1577,87 @@ object Snapshots {
 
   /** Time-travel read: a scan over exactly version v's files, under
     * v's PINNED schema (metadata-only schema evolution: files written
-    * before a column existed read it as null; no footer merging). A
-    * pre-schema-tag manifest falls back to footer inference.
+    * before a column existed read it as null; no footer merging).
+    * PLANNER-INTEGRATED pruning: an ORDINARY `.filter(...)` on the
+    * read reaches the manifest's stats/bloom prune at plan time —
+    * Catalyst pushes the data filters to the scan, the custom FileIndex
+    * hands them to [[filesWhereM]], and only the surviving files are
+    * planned. No [[StatsPred]] surface needed; unsupported predicate
+    * shapes simply don't prune. Same correctness contract as
+    * [[readWhere]]: the scan re-applies every filter.
+    *
+    * Metadata-column caveat: the scan plans FileStatus objects from
+    * manifest `#len:` lines with SYNTHETIC mtime 0 / blockSize, so
+    * `_metadata.file_modification_time` over this read reports the
+    * epoch, not the real mtime (path/name/size are real). Use
+    * [[versionAsOf]]/manifest mtimes for commit-time reasoning.
     */
   def read(s: SparkSession, root: String, v: Int): DataFrame = {
     val m = readManifestData(s, root, v)
-    scan(s, m.schema, m.files)
+    relation(s, root, m, schemaOf(root, v, m))
   }
 
-  /** A scan of `files` under a pinned schema, or footer inference for
-    * a legacy (pre-tag) manifest.
+  /** THE relation over snapshot files — every scan of this layer plans
+    * through it: `m.files` under `schema`, through the standard
+    * file-source path ([[org.apache.spark.sql.GraftSnapshotScan]]:
+    * vectorized parquet, whole-stage codegen) with `m`'s stats/bloom
+    * prune in the loop. Callers narrow `m.files` to what they scan (a
+    * prune's candidates, a commit's change files, a write's fresh
+    * files); over zero files the relation is empty.
     */
-  private def scan(s: SparkSession,
-      schema: Option[org.apache.spark.sql.types.StructType],
-      files: Seq[String]): DataFrame =
-    schema.fold(s.read.parquet(files: _*))(sc => s.read.schema(sc).parquet(files: _*))
+  private def relation(s: SparkSession, root: String, m: Manifest,
+                       schema: StructType): DataFrame =
+    org.apache.spark.sql.GraftSnapshotScan.dataFrame(s,
+      new org.apache.spark.sql.GraftSnapshotFileIndex(
+        fileStatuses(s, root, m.files, m.lens),
+        exprs => filesWhereM(m, translateFilters(exprs))),
+      schema)
 
-  /** Manifest `m`'s read schema: its pinned tag, or the footers' for a
-    * legacy (pre-tag) manifest.
+  /** FileStatus objects for `files`: built from their `#len:` lengths
+    * with ZERO filesystem calls (mtime/blockSize are synthetic — the
+    * scan uses only path + length); files without a `#len:` line
+    * (change files) cost ONE listStatus per subdir (one per commit),
+    * never a getFileStatus RPC per file. FAILS FAST on a referenced
+    * file the listing lost (a vacuumed pinned version, a manual
+    * delete): silently planning fewer files would return silently
+    * missing rows.
     */
-  private def schemaOf(s: SparkSession,
-                       m: Manifest): org.apache.spark.sql.types.StructType =
-    m.schema.getOrElse(s.read.parquet(m.files: _*).schema)
+  private[sources] def fileStatuses(s: SparkSession, root: String,
+      files: Seq[String], lens: Map[String, Long])
+      : Seq[org.apache.hadoop.fs.FileStatus] = {
+    val (known, unknown) = files.partition(p => lens.contains(fileStatKey(p)))
+    val fromLens = known.map(p => new org.apache.hadoop.fs.FileStatus(
+      lens(fileStatKey(p)), false, 1, 128L * 1024 * 1024, 0L,
+      new org.apache.hadoop.fs.Path(p)))
+    val wanted = unknown.toSet
+    val listed = unknown.map(new org.apache.hadoop.fs.Path(_)).groupBy(_.getParent)
+      .keys.toSeq.flatMap(dir => fs(s).listStatus(dir)
+        .filter(st => st.isFile && wanted.contains(st.getPath.toString)))
+    if (listed.size != unknown.size) {
+      val found = listed.map(_.getPath.toString).toSet
+      throw new java.io.FileNotFoundException(
+        s"$root references missing file(s): " +
+          unknown.filterNot(found).take(3).mkString(", "))
+    }
+    fromLens ++ listed
+  }
 
-  private def emptyFrame(s: SparkSession,
-                         sc: org.apache.spark.sql.types.StructType): DataFrame =
-    s.createDataFrame(s.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc)
+  /** Version v's pinned read schema, from manifest `m`. Every data
+    * commit tags `#schema:` and `#commit:`; a data manifest missing
+    * either fails fast, naming the version (IndexVersions' root
+    * manifests carry neither, and are never read as data).
+    */
+  private[sources] def schemaOf(root: String, v: Int, m: Manifest): StructType =
+    m.schema.filter(_ => m.commit.isDefined).getOrElse(throw untagged(root, v))
 
-  /** A scan of `files` under `sc`; an empty frame of `sc` for none. */
-  private def scanOrEmpty(s: SparkSession,
-      sc: org.apache.spark.sql.types.StructType, files: Seq[String]): DataFrame =
-    if (files.isEmpty) emptyFrame(s, sc) else s.read.schema(sc).parquet(files: _*)
+  private def untagged(root: String, v: Int) = new IllegalStateException(
+    s"unsupported manifest v$v at $root: a data manifest needs #schema: and #commit: tags")
 
   /** Comparison predicates the manifest stats can prune on — a
     * deliberately small, honest surface (the Delta data-skipping
     * shape): conjunctions of per-column comparisons against literals.
-    * Anything richer goes through `read(v).filter(...)` unpruned.
+    * Anything richer goes through `read(v).filter(...)`, which prunes
+    * the shapes [[translateFilters]] covers at plan time.
     */
   sealed trait StatsPred { def col: String }
   object StatsPred {
@@ -1995,7 +2002,7 @@ object Snapshots {
       "need bitsPerValue >= 1 and maxBits >= BloomBits")
     commit(s, root) { (base, m) =>
       require(base >= 1, s"analyzeBloom needs an existing dataset at $root")
-      val sc = schemaOf(s, m)
+      val sc = schemaOf(root, base, m)
       val byName = sc.fields.map(f => f.name -> f.dataType).toMap
       val usable = cols.filter(c => byName.get(c).exists {
         case org.apache.spark.sql.types.LongType |
@@ -2016,7 +2023,7 @@ object Snapshots {
       val missing: Seq[String] = m.files.filter(f => usable.exists(c =>
         !m.blooms.get(s"${fileStatKey(f)}:$c").exists(bloomPayloadValid)))
       if (missing.isEmpty) NoOp(base) else {
-        val df = s.read.schema(sc).parquet(missing: _*)
+        val df = relation(s, root, m.copy(files = missing), sc)
         val fname = substring_index(input_file_name(), "/", -1)
         // size each file's bloom from ITS row count (an upper bound on
         // distinct values): ~bitsPerValue bits per row, clamped to
@@ -2157,9 +2164,8 @@ object Snapshots {
   def readWhere(s: SparkSession, root: String, v: Int,
                 preds: Seq[StatsPred]): DataFrame = {
     val m = readManifestData(s, root, v)
-    val files = filesWhereM(m, preds)
-    val sc = schemaOf(s, m)
-    preds.foldLeft(scanOrEmpty(s, sc, files))((df, p) => df.filter(predColumn(p)))
+    preds.foldLeft(relation(s, root, m.copy(files = filesWhereM(m, preds)),
+      schemaOf(root, v, m)))((df, p) => df.filter(predColumn(p)))
   }
 
   /** Translate Catalyst pushed-down data filters into the [[StatsPred]]
@@ -2243,70 +2249,6 @@ object Snapshots {
     exprs.flatMap(walk)
   }
 
-  /** PLANNER-INTEGRATED pruned read (the r13 verdict's "missing" item
-    * 3): a DataFrame over version v whose ORDINARY `.filter(...)`
-    * predicates reach the manifest's stats/bloom prune at plan time —
-    * Catalyst pushes the data filters to the scan, the custom
-    * FileIndex hands them to [[filesWhereM]], and only the surviving
-    * files are planned. No [[StatsPred]] surface needed; unsupported
-    * predicate shapes simply don't prune. Same correctness contract as
-    * [[readWhere]]: the scan re-applies every filter.
-    *
-    * Metadata-column caveat: the scan plans FileStatus objects from
-    * manifest `#len:` lines with SYNTHETIC mtime 0 / blockSize, so
-    * `_metadata.file_modification_time` over this read reports the
-    * epoch, not the real mtime (path/name/size are real). Use
-    * [[versionAsOf]]/manifest mtimes for commit-time reasoning.
-    */
-  def readIndexed(s: SparkSession, root: String, v: Int): DataFrame =
-    indexedScan(s, root, v)._1
-
-  /** [[readIndexed]] plus its FileIndex — the spec asserts pruning on
-    * `lastPlanned` (executed-plan leaf strings truncate under AQE).
-    */
-  private[graft] def indexedScan(s: SparkSession, root: String, v: Int)
-      : (DataFrame, org.apache.spark.sql.GraftSnapshotFileIndex) = {
-    val m = readManifestData(s, root, v)
-    val sc = schemaOf(s, m)
-    // the manifest's `#len:` lines let planning construct FileStatus
-    // objects with ZERO filesystem calls (mtime/blockSize are synthetic
-    // — the scan uses only path + length); files a legacy manifest
-    // recorded no length for fall back to ONE listStatus per
-    // transaction subdir (dirs ≈ commits, bounded by compaction),
-    // never a getFileStatus RPC per file
-    val (known, unknown) = m.files.partition(p =>
-      m.lens.contains(fileStatKey(p)))
-    val fromLens = known.map(p => new org.apache.hadoop.fs.FileStatus(
-      m.lens(fileStatKey(p)), false, 1, 128L * 1024 * 1024, 0L,
-      new org.apache.hadoop.fs.Path(p)))
-    val listed =
-      if (unknown.isEmpty) Seq.empty
-      else {
-        val f = fs(s)
-        val wanted = unknown.toSet
-        unknown.map(new org.apache.hadoop.fs.Path(_))
-          .groupBy(_.getParent).toSeq
-          .flatMap { case (dir, _) =>
-            f.listStatus(dir).filter(st =>
-              st.isFile && wanted.contains(st.getPath.toString))
-          }
-      }
-    // FAIL FAST on a manifest-referenced file the listing lost (a
-    // vacuumed pinned version, a manual delete): silently planning
-    // fewer files would return silently missing rows
-    if (listed.size != unknown.size) {
-      val found = listed.map(_.getPath.toString).toSet
-      val miss = unknown.filterNot(found)
-      throw new java.io.FileNotFoundException(
-        s"version $v of $root references missing data file(s): " +
-          miss.take(3).mkString(", "))
-    }
-    val idx = new org.apache.spark.sql.GraftSnapshotFileIndex(
-      fromLens ++ listed,
-      exprs => filesWhereM(m, translateFilters(exprs)))
-    (org.apache.spark.sql.GraftSnapshotScan.dataFrame(s, idx, sc), idx)
-  }
-
   /** The latest version committed at or before `tsMillis` (the Delta
     * `timestampAsOf` analogue): versions resolve by their manifest's
     * publish time. On file:// the claim is a hard link sharing the
@@ -2351,9 +2293,7 @@ object Snapshots {
     * duplicate keys downstream. Across a data REWRITE (curation drop)
     * file identity no longer means row identity and there is no
     * change set, so the call always fails fast — consumers resync
-    * from a full read there. A legacy commit with no `#commit:` tag
-    * is classified by its file set: additive ⇒ append, else rewrite
-    * (the pre-tag semantics).
+    * from a full read there.
     *
     * The scan applies `toV`'s pinned schema: files appended before a
     * later widening read the new columns as null, matching what a full
@@ -2398,16 +2338,14 @@ object Snapshots {
               "are only defined over append-only ranges; resync with read(toV)")
       }
     }.distinct
-    if (delta.isEmpty) emptyFrame(s, schemaOf(s, toM))
-    else scan(s, toM.schema, delta)
+    relation(s, root, toM.copy(files = delta), schemaOf(root, toV, toM))
   }
 
-  /** One file group of a change walk: added or change-data files, the
-    * schema pinned for reading them (None: their own footers), their
-    * change type (insert, upsert or delete) and commit version.
+  /** One file group of a change walk: added or change-data files,
+    * their change type (insert, upsert or delete) and commit version
+    * (whose pinned schema reads them).
     */
   private[graft] final case class ChangeFiles(files: Seq[String],
-      schema: Option[org.apache.spark.sql.types.StructType],
       changeType: String, version: Int)
 
   /** One commit of a change walk: its kind and its file groups, EMPTY
@@ -2425,10 +2363,9 @@ object Snapshots {
     * [[changeFeed]], [[mirrorSync]] and the DSv2 streaming source
     * ([[SnapshotStreamSource]], one InputPartition per file): each
     * commit in (fromV, toV] with its kind and file groups. A commit's
-    * kind is its `#commit:` tag; a legacy untagged commit is classified
-    * by its file set — additive ⇒ append, else rewrite (the pre-tag
-    * semantics) — and so is an `append` that removed files. Never
-    * fails on a kind: each reader decides which kinds it can represent.
+    * kind is its `#commit:` tag (an untagged manifest fails fast); an
+    * `append` that removed files counts as a rewrite. Never fails on a
+    * kind: each reader decides which kinds it can represent.
     */
   private[graft] def changeFileGroups(s: SparkSession, root: String,
       fromV: Int, toV: Int): Seq[CommitChanges] = {
@@ -2441,22 +2378,20 @@ object Snapshots {
       val m = readManifestData(s, root, v)
       val cur = m.files.toSet
       val kind = m.commit match {
-        case Some("append") | None =>
-          if (prev.subsetOf(cur)) "append" else "rewrite"
+        case Some("append") if !prev.subsetOf(cur) => "rewrite"
         case Some(k) => k
+        case None => throw untagged(root, v)
       }
-      def group(files: Seq[String], schema: Option[org.apache.spark.sql.types.StructType],
-                changeType: String) = ChangeFiles(files, schema, changeType, v)
+      def group(files: Seq[String], changeType: String) = ChangeFiles(files, changeType, v)
       val groups = kind match {
-        case "append" => Seq(group(m.files.filterNot(prev), m.schema, "insert"))
-        case "merge"  => Seq(group(m.cdf, None, "upsert"))
-        case "delete" => Seq(group(m.cdf, None, "delete"))
+        case "append" => Seq(group(m.files.filterNot(prev), "insert"))
+        case "merge"  => Seq(group(m.cdf, "upsert"))
+        case "delete" => Seq(group(m.cdf, "delete"))
         // the Delta update pair: pre-images retract (covers a
         // rewritten key), post-images upsert; a same-version tie on
         // an unchanged key folds upsert-over-delete (consumers break
         // ties on _change_type desc — 'u' > 'd')
-        case "update" =>
-          Seq(group(m.cdfd, None, "delete"), group(m.cdf, None, "upsert"))
+        case "update" => Seq(group(m.cdfd, "delete"), group(m.cdf, "upsert"))
         case _ => Seq.empty
       }
       prev = cur
@@ -2517,25 +2452,16 @@ object Snapshots {
     */
   private def typedFeed(s: SparkSession, root: String, toV: Int,
                         groups: Seq[ChangeFiles]): DataFrame = {
-    val toM = readManifestData(s, root, toV)
-    val sc = schemaOf(s, toM)
-    var out: Option[DataFrame] = None
-    groups.foreach { g =>
-      val tagged = scan(s, g.schema, g.files).withColumn("_change_type", lit(g.changeType))
-        .withColumn("_commit_version", lit(g.version))
-      out = Some(out.fold(tagged)(
-        _.unionByName(tagged, allowMissingColumns = true)))
-    }
-    val cols = sc.fields.toSeq
-    val feed = out.getOrElse {
-      val empty = org.apache.spark.sql.types.StructType(
-        sc.fields :+
-          org.apache.spark.sql.types.StructField("_change_type",
-            org.apache.spark.sql.types.StringType) :+
-          org.apache.spark.sql.types.StructField("_commit_version",
-            org.apache.spark.sql.types.IntegerType))
-      emptyFrame(s, empty)
-    }
+    val cols = schemaOf(root, toV, readManifestData(s, root, toV)).fields.toSeq
+    // each group reads under ITS version's pinned schema; no changes at
+    // all is a zero-file (empty) group under toV's
+    val feed = (if (groups.isEmpty) Seq(ChangeFiles(Nil, "insert", toV)) else groups)
+      .map { g =>
+        val m = readManifestData(s, root, g.version)
+        relation(s, root, m.copy(files = g.files), schemaOf(root, g.version, m))
+          .withColumn("_change_type", lit(g.changeType))
+          .withColumn("_commit_version", lit(g.version))
+      }.reduce(_.unionByName(_, allowMissingColumns = true))
     // align to toV's schema: a column no delta happened to carry (all
     // its changes predate the widening) still surfaces, as null
     val withAll = cols.foldLeft(feed)((d, f) =>
@@ -2651,15 +2577,11 @@ object Snapshots {
     }
   }
 
-  /** The mirror's consumed-source-version cursor: the `#mirror:` tag,
-    * falling back to the legacy txn-tag encoding for mirrors written
-    * before the namespace split (safe there: a pre-split mirror root
-    * hosted no other txn producer by the old contract).
+  /** The mirror's consumed-source-version cursor: its `#mirror:` tag,
+    * 0 before the first sync — never a `#txn:` id, which belongs to
+    * the root's txn producers.
     */
-  private def mirrorCursorOf(m: Manifest): Int =
-    m.mirror.map(_.toInt)
-      .orElse(m.txns.lastOption.map(_._2.toInt))
-      .getOrElse(0)
+  private def mirrorCursorOf(m: Manifest): Int = m.mirror.fold(0)(_.toInt)
 
   /** Exactly-once MIRROR maintenance over the typed change feed — the
     * materialized-downstream shape (a serving copy, a feature store, a
@@ -2755,11 +2677,11 @@ object Snapshots {
             // PRUNED incremental fold: only the mirror files holding a
             // changed key rewrite with the feed; every other mirror file
             // carries forward by path with its stats and blooms
-            val dstSc = schemaOf(s, dstM)
+            val dstSc = schemaOf(dstRoot, dstV, dstM)
             val changeKeys = feed.select(keyCols.map(col): _*)
-            val touched = touchedFiles(s, dstM, dstSc, changeKeys, keyCols)
+            val touched = touchedFiles(s, dstRoot, dstM, dstSc, changeKeys, keyCols)
             val survivors = dstM.files.filterNot(touched.toSet)
-            val standingTouched = scanOrEmpty(s, dstSc, touched)
+            val standingTouched = relation(s, dstRoot, dstM.copy(files = touched), dstSc)
             val all = standingTouched
               .withColumn("_change_type", lit("insert"))
               .withColumn("_commit_version", lit(cursor))
@@ -2768,13 +2690,12 @@ object Snapshots {
               .filter(col("_rn") === 1 && col("_change_type") =!= "delete")
               .drop("_rn", "_change_type", "_commit_version")
             val bf = writeBatchFiles(s, dstRoot, folded)
-            val mine = bf.files
             val cdfFiles =
-              if (hasDeletes || mine.isEmpty) Seq.empty
-              else writeChangeFiles(s, dstRoot,
-                keyedSemiJoin(s.read.schema(folded.schema).parquet(mine: _*),
-                  changeKeys, keyCols))
-            Commit(survivors ++ mine,
+              if (hasDeletes || bf.files.isEmpty) Seq.empty
+              else writeBatchFiles(s, dstRoot, keyedSemiJoin(
+                relation(s, dstRoot, bf.manifest, folded.schema), changeKeys, keyCols),
+                "changes/c").files
+            Commit(survivors ++ bf.files,
               Some(if (hasDeletes) "rewrite" else "merge"),
               Some(folded.schema), bf.stats, lens = bf.lens, cdf = cdfFiles,
               mirror = Some(srcV.toLong))
@@ -2948,7 +2869,7 @@ object Snapshots {
   /** `q_snapshot_scan_pruned`: PLANNER-INTEGRATED data skipping
     * through the driver's hash gate — the same range-clustered fixture
     * and predicate as [[snapshotReadPruned]], but expressed as an
-    * ORDINARY DataFrame `.filter` over [[readIndexed]]: Catalyst
+    * ORDINARY DataFrame `.filter` over [[read]]: Catalyst
     * pushes the comparison to the scan, the custom FileIndex hands it
     * to the manifest stats prune (spec: `lastPlanned` shrinks to the
     * surviving files), and the DuckDB oracle recomputes from the
@@ -2958,7 +2879,7 @@ object Snapshots {
     snapshotReadPruned(s, dir) // fixture builds eagerly inside (marker-skipped)
     val root = ScopedFixture.root(s, "graft_snapstats", dir)
     perSourceTokenTotals(
-      readIndexed(s, root, latestVersion(s, root))
+      read(s, root, latestVersion(s, root))
         .filter(col("doc_id") >= pruneCut(s, dir)))
   }
 

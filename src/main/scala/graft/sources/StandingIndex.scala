@@ -116,7 +116,7 @@ abstract class StandingIndex(family: String, key: String) {
 
   /** A sharded tree's rows laid out one shard per file (no sampling
     * pass): each file's `#stats:` name one shard, so a search's shard
-    * filter prunes files at plan time ([[Snapshots.readIndexed]]).
+    * filter prunes files at plan time ([[Snapshots.read]]).
     */
   private def layout(t: StandingIndex.Tree, m: Meta, df: DataFrame): DataFrame =
     if (!t.sharded) df else shards(m) match { case (n, id) => df.repartitionById(n, id) }
@@ -135,7 +135,7 @@ abstract class StandingIndex(family: String, key: String) {
     val t = s"$root/tombstones"
     val at = if (v < 0) Snapshots.latestVersion(s, t) else v
     if (at == 0 || Snapshots.readManifest(s, t, at).isEmpty) None
-    else Some(Snapshots.readIndexed(s, t, at))
+    else Some(Snapshots.read(s, t, at))
   }
 
   /** Incremental append: index the arriving batch only, against the
@@ -197,7 +197,7 @@ abstract class StandingIndex(family: String, key: String) {
 
   /** Read the index live (`v = None`: each role's latest version) or as
     * of index version `v` (each role at its pinned version). Trees scan
-    * through [[Snapshots.readIndexed]], so shard/cell filters prune
+    * through [[Snapshots.read]], so shard/cell filters prune
     * files at plan time; a missing tree fails fast.
     */
   protected def read(s: SparkSession, root: String, v: Option[Int]): Frames = {
@@ -208,7 +208,7 @@ abstract class StandingIndex(family: String, key: String) {
     def tree(name: String): DataFrame = pin(name) match {
       case 0 => throw new IllegalStateException(
         s"$root has no $name" + v.fold("")(ver => s" at version $ver"))
-      case pv => Snapshots.readIndexed(s, s"$root/$name", pv)
+      case pv => Snapshots.read(s, s"$root/$name", pv)
     }
     new Frames(meta(s, root), trees.map(t => t.name -> tree(t.name)).toMap,
       tombstones(s, root, pin("tombstones")))

@@ -23,22 +23,9 @@ object GraftSparkBridge {
       items: Seq[String], parallelism: Int)(
       f: (org.apache.hadoop.conf.Configuration, Iterator[String]) => Iterator[T])
       : Array[T] = {
-    val ser = serializableConf(conf)
+    val ser = new org.apache.spark.util.SerializableConfiguration(conf)
     sc.parallelize(items, math.max(1, parallelism))
-      .mapPartitions(it => f(confOf(ser), it))
+      .mapPartitions(it => f(ser.value, it))
       .collect()
   }
-
-  /** A serializable wrapper around the driver's Hadoop configuration
-    * for DSv2 reader factories (`SerializableConfiguration` is
-    * `private[spark]`): the snapshot change-stream reader must open
-    * parquet with the SESSION's conf (s3a credentials, fs overrides),
-    * not an empty default.
-    */
-  def serializableConf(conf: org.apache.hadoop.conf.Configuration)
-      : java.io.Serializable with AnyRef =
-    new org.apache.spark.util.SerializableConfiguration(conf)
-
-  def confOf(ser: AnyRef): org.apache.hadoop.conf.Configuration =
-    ser.asInstanceOf[org.apache.spark.util.SerializableConfiguration].value
 }

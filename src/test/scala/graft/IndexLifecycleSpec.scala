@@ -703,16 +703,23 @@ class SnapshotsMaintenanceSpec extends AnyFunSuite {
     assert(Snapshots.append(spark, looseRoot, strict) === 2)
   }
 
-  test("read and readIndexed of one version agree on nullability, after create and after compact") {
-    import org.apache.spark.sql.types.{ArrayType, IntegerType}
+  test("read pins one all-nullable schema after create, compact and append") {
+    import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
     val root = java.nio.file.Files.createTempDirectory("graft_snapnullread").toString
     val frame = Tables.documents(spark, sf).select(col("doc_id"), array(lit(1), lit(2)).as("xs"))
     val xs = frame.schema("xs")
     assert(!xs.nullable && xs.dataType === ArrayType(IntegerType, containsNull = false))
+    // every field reads nullable, as a file relation plans it, whatever
+    // the written frame declared
+    val nullable = StructType(Seq(StructField("doc_id", LongType),
+      StructField("xs", ArrayType(IntegerType, containsNull = true))))
     val v1 = Snapshots.create(spark, root, frame)
-    assert(Snapshots.read(spark, root, v1).schema === Snapshots.readIndexed(spark, root, v1).schema)
+    assert(Snapshots.read(spark, root, v1).schema === nullable)
     val v2 = Snapshots.compact(spark, root)
-    assert(Snapshots.read(spark, root, v2).schema === Snapshots.readIndexed(spark, root, v2).schema)
+    assert(Snapshots.read(spark, root, v2).schema === nullable)
+    // a batch stricter than the pin appends, and the pin stays
+    val v3 = Snapshots.append(spark, root, frame)
+    assert(Snapshots.read(spark, root, v3).schema === nullable)
   }
 
   test("contiguous txn ids range-compress to one manifest tag line") {
@@ -1300,12 +1307,12 @@ class SnapshotsMaintenanceSpec extends AnyFunSuite {
     val cut = mx * 3 / 4
     // a PLAIN .filter — no StatsPred surface — must plan only the
     // stat-surviving files (same set the explicit readWhere plans)
-    val (df, idx) = Snapshots.indexedScan(spark, root, v)
+    val df = Snapshots.read(spark, root, v)
+    val idx = IndexRoles.fileIndex(df)
     val got = df.filter(col("doc_id") >= cut)
     assert(ids(got) === ids(docs.filter(col("doc_id") >= cut)),
       "planner pruning must never change results")
-    // compare by globally-unique part NAME: inputFiles normalizes to
-    // file:/// while manifests carry Path.toString's file:/ form
+    // compare by globally-unique part NAME, whatever the path's URI form
     def names(xs: Iterable[String]) =
       xs.map(p => p.substring(p.lastIndexOf('/') + 1)).toSet
     val want = Snapshots.readWhere(spark, root, v,
@@ -1334,7 +1341,8 @@ class SnapshotsMaintenanceSpec extends AnyFunSuite {
     val v2 = Snapshots.latestVersion(spark, root2)
     val target = withFp.filter(col("doc_id") === mx / 2)
       .select("fp").head().getLong(0)
-    val (df2, idx2) = Snapshots.indexedScan(spark, root2, v2)
+    val df2 = Snapshots.read(spark, root2, v2)
+    val idx2 = IndexRoles.fileIndex(df2)
     val hit = df2.filter(col("fp") === target)
     assert(hit.count() >= 1)
     assert(idx2.lastPlanned.size < full,
@@ -1357,7 +1365,8 @@ class SnapshotsMaintenanceSpec extends AnyFunSuite {
     val lo = cutRow.getTimestamp(0).getTime
     val hi = cutRow.getTimestamp(1).getTime
     val cut = new java.sql.Timestamp(lo + (hi - lo) * 3 / 4)
-    val (df, idx) = Snapshots.indexedScan(spark, root, v)
+    val df = Snapshots.read(spark, root, v)
+    val idx = IndexRoles.fileIndex(df)
     val got = df.filter(col("ts") >= lit(cut))
     assert(got.count() === ev.filter(col("ts") >= lit(cut)).count(),
       "timestamp pruning must never change results")
@@ -1380,7 +1389,8 @@ class SnapshotsMaintenanceSpec extends AnyFunSuite {
     assert(explicit.inputFiles.length < full2,
       s"the IN hull prunes interior files " +
         s"(${explicit.inputFiles.length} of $full2)")
-    val (df2, idx2) = Snapshots.indexedScan(spark, root2, v2)
+    val df2 = Snapshots.read(spark, root2, v2)
+    val idx2 = IndexRoles.fileIndex(df2)
     val planned = df2.filter(col("doc_id").isin(keys: _*))
     assert(ids(planned) === ids(explicit))
     assert(idx2.lastPlanned.size === explicit.inputFiles.length,
@@ -1646,5 +1656,17 @@ class SnapshotsMaintenanceSpec extends AnyFunSuite {
     assert(Snapshots.read(spark, dst, dv2)
       .filter(col("doc_id") === mx + 5000L).count() === 1,
       "the sync after a foreign txn id still delivers the source append")
+    // a txn producer committing to an existing mirror root BEFORE its
+    // first sync must not become the cursor either (a txn id at or past
+    // the source's latest version no-opped the sync; a smaller one
+    // skipped versions): the first sync folds from source version 0
+    val dst2 = java.nio.file.Files.createTempDirectory("graft_mirpdst2").toString
+    Snapshots.create(spark, dst2, docs.limit(0))
+    Snapshots.appendTxn(spark, dst2, 100L, docs.limit(0))
+    val dv3 = Snapshots.mirrorSync(spark, src, dst2, Seq("doc_id"))
+    val srcNow = Snapshots.read(spark, src, Snapshots.latestVersion(spark, src))
+    val mirror2 = Snapshots.read(spark, dst2, dv3)
+    assert(srcNow.exceptAll(mirror2).isEmpty && mirror2.exceptAll(srcNow).isEmpty,
+      "the first sync onto a txn-tagged root delivers every source row")
   }
 }

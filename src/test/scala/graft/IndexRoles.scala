@@ -14,7 +14,7 @@ object IndexRoles {
   /** A role's rows at its latest version. */
   def latest(root: String, role: String): DataFrame = {
     val r = s"$root/$role"
-    Snapshots.readIndexed(spark, r, Snapshots.latestVersion(spark, r))
+    Snapshots.read(spark, r, Snapshots.latestVersion(spark, r))
   }
 
   /** The ids in force in `tombstones/`, sorted. */
@@ -38,15 +38,24 @@ object IndexRoles {
     */
   def planned(df: DataFrame, role: String): Seq[(Int, Int)] = {
     df.collect()
+    fileIndexes(df).collect {
+      case g if g.inputFiles.exists(_.contains(s"/$role/")) =>
+        (g.lastPlanned.size, g.inputFiles.length)
+    }.distinct
+  }
+
+  /** The file index of every snapshot scan in `df`'s plan. */
+  def fileIndexes(df: DataFrame): Seq[GraftSnapshotFileIndex] =
     df.queryExecution.optimizedPlan.collectLeaves().collect {
       case l: LogicalRelation => l.relation
     }.collect {
       case h: HadoopFsRelation => h.location
     }.collect {
-      case g: GraftSnapshotFileIndex if g.inputFiles.exists(_.contains(s"/$role/")) =>
-        (g.lastPlanned.size, g.inputFiles.length)
-    }.distinct
-  }
+      case g: GraftSnapshotFileIndex => g
+    }
+
+  /** The file index of a one-scan snapshot read. */
+  def fileIndex(df: DataFrame): GraftSnapshotFileIndex = fileIndexes(df).head
 
   /** Files planned over `role`'s latest version filtered to ONE shard
     * value — a one-shard-per-file layout plans exactly one.

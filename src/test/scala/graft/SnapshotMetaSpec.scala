@@ -14,7 +14,8 @@ import graft.sources.Snapshots
   *   - new prune shapes: Or, IsNull/IsNotNull (footer null counts),
   *     and LIKE-prefix string ranges, planner-integrated;
   *   - forward-compat `#` lines survive a checkpoint rewrite, and the
-  *     retired columnar lines (`#cpq:`/`#bloomq:`) fail fast.
+  *     retired columnar lines (`#cpq:`/`#bloomq:`) and data manifests
+  *     missing `#schema:` or `#commit:` fail fast.
   */
 class SnapshotMetaSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -134,7 +135,8 @@ class SnapshotMetaSpec extends AnyFunSuite {
     val v = Snapshots.latestVersion(spark, root)
     val full = Snapshots.read(spark, root, v).inputFiles.length
     assert(full === 8)
-    val (scan, idx) = Snapshots.indexedScan(spark, root, v)
+    val scan = Snapshots.read(spark, root, v)
+    val idx = IndexRoles.fileIndex(scan)
     def planned(q: org.apache.spark.sql.DataFrame): Int = {
       q.collect(); idx.lastPlanned.size
     }
@@ -348,7 +350,8 @@ class SnapshotMetaSpec extends AnyFunSuite {
     val root = tmp("graft_snapstream_nested")
     val ckpt = tmp("graft_snapstream_nested_ck")
     // documents-shaped rows: an embedding array (with null elements and
-    // a null array) and a typed metadata struct (with a null struct)
+    // a null array), a typed metadata struct (with a null struct), a
+    // DECIMAL amount and a string→bigint MAP (with a null map)
     def mk(from: Long, to: Long) = spark.range(from, to).select(
       col("id").as("doc_id"),
       when(col("id") % 7 === 0, lit(null))
@@ -357,7 +360,11 @@ class SnapshotMetaSpec extends AnyFunSuite {
         .as("emb"),
       when(col("id") % 11 === 0, lit(null))
         .otherwise(struct(concat(lit("n"), col("id")).as("name"),
-          (col("id") % 5).cast("int").as("grp"))).as("meta"))
+          (col("id") % 5).cast("int").as("grp"))).as("meta"),
+      (col("id") * 1.25).cast("decimal(12,2)").as("amt"),
+      when(col("id") % 13 === 0, lit(null))
+        .otherwise(map(lit("n"), col("id"), lit("sq"), col("id") * col("id")))
+        .as("attrs"))
     Snapshots.create(spark, root, mk(0, 40).repartition(2))
     Snapshots.append(spark, root, mk(40, 80).repartition(2))
     def flat(df: DataFrame) = df.select(col("doc_id"),
@@ -365,66 +372,72 @@ class SnapshotMetaSpec extends AnyFunSuite {
           e => coalesce(e.cast("string"), lit("∅")))).as("emb_s"),
         col("emb").isNull.as("emb_null"),
         col("meta.name"), col("meta.grp"),
+        col("amt").cast("string"), to_json(col("attrs")),
         col("_change_type"), col("_commit_version"))
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getBoolean(2),
-        Option(r.getString(3)), Option(r.get(4)), r.getString(5), r.getInt(6)))
-      .toSeq.sortBy(t => (t._1, t._6))
-    val got = new java.util.concurrent.ConcurrentLinkedQueue[
-      (Long, String, Boolean, Option[String], Option[Any], String, Int)]()
+      .collect().map(_.toSeq).toSeq
+      .sortBy(t => (t.head.asInstanceOf[Long], t(7).toString))
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Any]]()
     def startQ() = graft.sources.SnapshotStream.readStream(spark, root)
       .writeStream.option("checkpointLocation", ckpt)
       .foreachBatch { (b: DataFrame, _: Long) =>
         flat(b).foreach(got.add); ()
       }.start()
     import scala.jdk.CollectionConverters._
+    def gotSorted = got.asScala.toSeq.sortBy(t => (t.head.asInstanceOf[Long], t(7).toString))
     val q1 = startQ(); q1.processAllAvailable(); q1.stop()
-    assert(got.asScala.toSeq.sortBy(t => (t._1, t._6)) ===
-      flat(Snapshots.changeFeed(spark, root, 0, 2)),
-      "nested columns must stream exactly as the batch feed reads them")
-    // restart across a delete: pre-images carry the nested columns too
+    assert(gotSorted === flat(Snapshots.changeFeed(spark, root, 0, 2)),
+      "nested, decimal and map columns must stream exactly as the batch feed reads them")
+    // restart across a delete: pre-images carry every column too
     got.clear()
     Snapshots.delete(spark, root, Seq(Snapshots.StatsPred.Lt("doc_id", 5L)))
     val q2 = startQ(); q2.processAllAvailable(); q2.stop()
-    assert(got.asScala.toSeq.sortBy(t => (t._1, t._6)) ===
-      flat(Snapshots.changeFeed(spark, root, 2, 3)),
-      "restart delivers exactly the delete's nested pre-images")
+    assert(gotSorted === flat(Snapshots.changeFeed(spark, root, 2, 3)),
+      "restart delivers exactly the delete's pre-images")
   }
 
   test("stream reader: int32/float files upcast under a widened schema; a real mismatch names the column") {
     import org.apache.spark.sql.types._
-    import graft.sources.{SnapshotChangePartition, SnapshotChangeReader}
+    import org.apache.spark.sql.GraftSnapshotScan
+    import org.apache.spark.sql.catalyst.InternalRow
     val dir = tmp("graft_stream_widen")
     spark.range(0, 10).select(col("id").cast("int").as("k"),
         (col("id") * 0.5).cast("float").as("v"))
       .coalesce(1).write.mode("overwrite").parquet(dir)
     val file = new java.io.File(dir).listFiles()
       .find(f => f.getName.endsWith(".parquet")).get.getAbsolutePath
-    val conf = spark.sparkContext.hadoopConfiguration
-    // stream schema WIDENED after the file was written: k long, v double
-    val widened = StructType(Seq(StructField("k", LongType),
-      StructField("v", DoubleType),
-      StructField("_change_type", StringType),
-      StructField("_commit_version", IntegerType)))
-    val r = new SnapshotChangeReader(
-      SnapshotChangePartition(file, "insert", 3), widened, conf)
-    val rows = Iterator.continually(r)
-      .takeWhile(_.next()).map(_.get().copy()).toSeq
-    r.close()
-    assert(rows.map(_.getLong(0)).sorted === (0L until 10L),
-      "int32 column must upcast to the widened long schema")
-    assert(rows.map(_.getDouble(1)).sorted === (0 until 10).map(_ * 0.5),
-      "float column must upcast to the widened double schema")
-    // a genuine mismatch (string over int32) fails fast, naming the column
-    val bad = StructType(Seq(StructField("k", StringType),
-      StructField("_change_type", StringType),
-      StructField("_commit_version", IntegerType)))
-    val r2 = new SnapshotChangeReader(
-      SnapshotChangePartition(file, "insert", 3), bad, conf)
-    val e = intercept[IllegalArgumentException] { r2.next(); r2.get() }
-    r2.close()
-    assert(e.getMessage.contains("'k'") && e.getMessage.contains("INT32"),
-      s"mismatch must name column and physical type: ${e.getMessage}")
+    val path = new org.apache.hadoop.fs.Path(file)
+    val part = GraftSnapshotScan.filePartition(0,
+      path.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(path),
+      InternalRow(org.apache.spark.unsafe.types.UTF8String.fromString("insert"), 3))
+    // the stream's reader, under a data schema and the change columns
+    def rows(data: StructType): Seq[InternalRow] = {
+      val r = GraftSnapshotScan.parquetReaderFactory(spark, data,
+        graft.sources.SnapshotStream.ChangeColumns).createReader(part)
+      try Iterator.continually(r).takeWhile(_.next()).map(_.get().copy()).toSeq
+      finally r.close()
+    }
+    Seq("true", "false").foreach { vectorized =>
+      spark.conf.set("spark.sql.parquet.enableVectorizedReader", vectorized)
+      try {
+        // stream schema WIDENED after the file was written: k long, v double
+        val widened = rows(StructType(Seq(StructField("k", LongType),
+          StructField("v", DoubleType))))
+        assert(widened.map(_.getLong(0)).sorted === (0L until 10L),
+          s"int32 column must upcast to the widened long schema (vectorized=$vectorized)")
+        assert(widened.map(_.getDouble(1)).sorted === (0 until 10).map(_ * 0.5),
+          s"float column must upcast to the widened double schema (vectorized=$vectorized)")
+        // a genuine mismatch (string over int32) fails fast: the
+        // vectorized reader (the default) names the column, the row
+        // reader the file
+        val e = intercept[org.apache.spark.SparkException](
+          rows(StructType(Seq(StructField("k", StringType)))))
+        val want =
+          if (vectorized == "true") Seq("PARQUET_COLUMN_DATA_TYPE_MISMATCH", "[k]")
+          else Seq("FAILED_READ_FILE", path.getName)
+        assert(want.forall(e.getMessage.contains),
+          s"mismatch must fail naming ${want.last} (vectorized=$vectorized): ${e.getMessage}")
+      } finally spark.conf.unset("spark.sql.parquet.enableVectorizedReader")
+    }
   }
 
   test("string z-dim past the rank cap falls back to the prefix fold: no dictionary sort, rows exact, still prunes") {
@@ -542,19 +555,25 @@ class SnapshotMetaSpec extends AnyFunSuite {
     assert(Snapshots.read(spark, root, 2).count() === 3)
     // the retired columnar checkpoint lines are NOT forward-compat: a
     // version carrying one fails fast, naming root and version, instead
-    // of resolving with no files. Fresh roots: the manifest memo serves
-    // versions this JVM already resolved, so the line must land in a
-    // version never read
-    Seq("#cpq:cp1-0a1b2c3d", "#bloomq:bl1-0a1b2c3d").foreach { line =>
+    // of resolving with no files — and so does a data manifest missing
+    // its #schema: or #commit: tag (every writer tags both). Fresh
+    // roots: the manifest memo serves versions this JVM already
+    // resolved, so the edit must land in a version never read
+    def plus(line: String): String => String = _ + s"\n$line"
+    def without(tag: String): String => String =
+      _.linesIterator.filterNot(_.startsWith(tag)).mkString("\n")
+    Seq("#cpq:" -> plus("#cpq:cp1-0a1b2c3d"),
+      "#bloomq:" -> plus("#bloomq:bl1-0a1b2c3d"),
+      "no #schema:" -> without("#schema:"),
+      "no #commit:" -> without("#commit:")).foreach { case (what, edit) =>
       val r = tmp("graft_snapcol")
       Snapshots.create(spark, r, Seq((1L, "a")).toDF("doc_id", "src"))
       val p1 = java.nio.file.Paths.get(s"$r/manifests/v1.txt")
       java.nio.file.Files.write(p1,
-        (new String(java.nio.file.Files.readAllBytes(p1), "UTF-8") +
-          s"\n$line").getBytes("UTF-8"))
+        edit(new String(java.nio.file.Files.readAllBytes(p1), "UTF-8")).getBytes("UTF-8"))
       val e = intercept[IllegalStateException](Snapshots.read(spark, r, 1))
       assert(e.getMessage.contains(s"v1 at $r"),
-        s"$line must fail naming the version: ${e.getMessage}")
+        s"$what must fail naming the version: ${e.getMessage}")
     }
   }
 }

@@ -20,6 +20,10 @@ the base's IQR/median exceeds the bound (the runs spread too widely to
 tell) unless every change run beats every base run. It refuses to report,
 and stops, if any run was incorrect or had failed ops. It only reads
 run.py's output.
+
+With --traced it instead runs `graftbench/run.py --trace 1` once per side
+for each workload (seed: the first of --seeds) and prints every per-layer
+metric of BENCHMARK.json side by side: base, change and their difference.
 """
 import argparse
 import json
@@ -35,10 +39,10 @@ def seeds(spec):
     return list(range(int(lo), int(hi or lo) + 1))
 
 
-def run(checkout, workload, seed, seconds):
+def run(checkout, workload, seed, seconds, trace=0):
     p = subprocess.run([sys.executable, os.path.join(checkout, "graftbench", "run.py"),
                         "--workload", workload, "--seed", str(seed),
-                        "--seconds", str(seconds), "--trace", "0"],
+                        "--seconds", str(seconds), "--trace", str(trace)],
                        cwd=checkout, capture_output=True, text=True)
     if p.returncode != 0:
         sys.stderr.write(p.stderr[-3000:])
@@ -64,14 +68,36 @@ def verdict(base, change, bound, lower):
     return "WORSE" if worse > bound * abs(mb) else "ok"
 
 
-def report(workload, runs, bench, sides, seed_spec):
-    """Print one workload's table; exit if any of its runs was bad."""
+def refuse_bad(workload, runs):
+    """Exit if any of the runs was incorrect or had failed ops."""
     bad = [r for r in runs if not r["summary"]["correct"] or r["summary"]["failed"]]
     if bad:
         for r in bad:
             print(f"{workload} seed {r['seed']} {r['side']}: "
                   f"correct={r['summary']['correct']} failed={r['summary']['failed']}")
         sys.exit("refusing to report: a run was incorrect or had failed ops")
+
+
+def report_traced(workload, runs, bench):
+    """Print one workload's per-layer metrics, base beside change."""
+    refuse_bad(workload, runs)
+    got = {r["side"]: r["summary"]["metrics"] for r in runs}
+
+    def cell(v, spec="12.4f"):
+        return f"{'-':>12s}" if v is None else format(v, spec)
+
+    print(f"{workload}: traced, seed {runs[0]['seed']}")
+    print(f"{'metric':22s} {'base':>12s} {'change':>12s} {'delta':>12s}  unit")
+    for m in bench["per_layer"]:
+        b, c = (got[side].get(m["name"], {}).get("value") for side in ("base", "change"))
+        delta = None if b is None or c is None else c - b
+        print(f"{m['name']:22s} {cell(b)} {cell(c)} {cell(delta, '+12.4f')}  {m['unit']}",
+              flush=True)
+
+
+def report(workload, runs, bench, sides, seed_spec):
+    """Print one workload's table; exit if any of its runs was bad."""
+    refuse_bad(workload, runs)
 
     pairs = len(runs) // 2
     print(f"{workload}: {pairs} pairs, seeds {seed_spec}")
@@ -105,17 +131,22 @@ def main():
                     help="one workload, or a comma-separated list run in turn")
     ap.add_argument("--seeds", required=True, help="e.g. 11-20")
     ap.add_argument("--out", required=True, help="JSON file for every run's summary line")
+    ap.add_argument("--traced", action="store_true",
+                    help="one --trace 1 run per side per workload; print the per-layer metrics")
     a = ap.parse_args()
     bench = json.load(open(os.path.join(a.base, "BENCHMARK.json")))
     sides = {"base": os.path.abspath(a.base), "change": os.path.abspath(a.change)}
     runs = []
     for workload in a.workload.split(","):
         mine = []
-        for i, seed in enumerate(seeds(a.seeds)):
-            order = ["base", "change"] if i % 2 == 0 else ["change", "base"]
+        plan = [(seeds(a.seeds)[0], ["base", "change"])] if a.traced else \
+            [(seed, ["base", "change"] if i % 2 == 0 else ["change", "base"])
+             for i, seed in enumerate(seeds(a.seeds))]
+        for seed, order in plan:
             for side in order:
                 t = time.time()
-                summary = run(sides[side], workload, seed, bench["run_seconds"])
+                summary = run(sides[side], workload, seed, bench["run_seconds"],
+                              trace=int(a.traced))
                 mine.append({"workload": workload, "seed": seed, "side": side,
                              "first": side == order[0], "summary": summary})
                 with open(a.out, "w") as fh:
@@ -123,7 +154,10 @@ def main():
                 print(f"{workload} seed {seed} {side}: correct={summary['correct']} "
                       f"failed={summary['failed']} wall={time.time() - t:.1f}s", flush=True)
         runs += mine
-        report(workload, mine, bench, sides, a.seeds)
+        if a.traced:
+            report_traced(workload, mine, bench)
+        else:
+            report(workload, mine, bench, sides, a.seeds)
 
 
 if __name__ == "__main__":
