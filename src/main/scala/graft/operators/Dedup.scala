@@ -114,8 +114,8 @@ object Dedup {
     */
   private[graft] def ngramPairs(s: SparkSession, dir: String): DataFrame =
     graft.plans.Memo.shared(s, dir, "dedup.ngramPairs") {
-      verifyByCooccurrence(shingled(s, dir), candidatesFromCooc = true, JaccardT,
-        ordered = false, coocPre = coocCached(s, dir))
+      verifyByCooccurrence(shingled(s, dir), JaccardT, ordered = false,
+        coocPre = coocCached(s, dir))
     }
 
   /** Stop-shingle cap: a shingle present in more than this many
@@ -131,27 +131,27 @@ object Dedup {
     */
   val MaxShingleDf = 1000L
 
-  /** |A ∩ B| for pairs as a count over the exploded (doc, shingle) join —
-    * no pair-array materialization, pure shuffle/agg (the shape that
-    * survives 100 TB). Pairs sharing zero shingles have J = 0 and can
-    * never clear a positive threshold, so the inner join is lossless.
-    * Hot shingles (df > maxDf) are anti-joined away first — the hot set
-    * is tiny (it's the tail above the cap), so AQE broadcasts it and
-    * the filter rides the explode.
+  /** The stop-shingle set: hashes in more than `maxDf` of `docs`' sets.
+    * It is the tail above the cap — tiny, so AQE broadcasts it and an
+    * anti-join against it rides the explode it filters.
     */
-  /** Exploded (doc_id, shingle-hash) postings with stop-shingles above
-    * `maxDf` anti-joined away (the hot set is tiny, AQE broadcasts it).
-    */
-  private def cappedPostings(docs: DataFrame, maxDf: Long): DataFrame = {
-    val exAll = docs.select(col("doc_id"), explode(col("sh")).as("h"))
-    val hot = exAll.groupBy("h").agg(count(lit(1)).as("df"))
+  private def hotShingles(docs: DataFrame, maxDf: Long): DataFrame =
+    docs.select(explode(col("sh")).as("h"))
+      .groupBy("h").agg(count(lit(1)).as("df"))
       .filter(col("df") > maxDf).select("h")
-    exAll.join(hot, Seq("h"), "left_anti")
-  }
+
+  /** Exploded (doc_id, shingle-hash) postings without the
+    * [[hotShingles]].
+    */
+  private def cappedPostings(docs: DataFrame, maxDf: Long): DataFrame =
+    docs.select(col("doc_id"), explode(col("sh")).as("h"))
+      .join(hotShingles(docs, maxDf), Seq("h"), "left_anti")
 
   /** (doc_a, doc_b, inter) for every unordered pair sharing ≥1 uncapped
-    * shingle — intersection counting as a shuffle/agg over the postings
-    * equi-join, no pair-array materialization.
+    * shingle — |A ∩ B| as a count over the capped postings equi-join, no
+    * pair-array materialization, pure shuffle/agg (the shape that
+    * survives 100 TB). Pairs sharing zero shingles have J = 0 and can
+    * never clear a positive threshold, so the inner join is lossless.
     */
   private def coocPairs(docs: DataFrame, maxDf: Long): DataFrame = {
     // Pin the postings exchange to the configured shuffle parallelism
@@ -173,33 +173,68 @@ object Dedup {
   }
 
   /** Session-persisted co-occurrence frame at the standard cap — the
-    * Θ(candidates) postings self-join is computed by THREE pair
-    * consumers (ngram verify, minhash verify, containment); one
-    * materialization serves them all. Candidate-pair-sized (bounded by
-    * Σ df² over capped shingles — the stop-shingle cap is what makes
-    * this a persistable size at all).
+    * all-pairs postings self-join, computed once for its two all-pairs
+    * consumers (the n-gram verify and containment). Candidate-pair-sized
+    * (bounded by Σ df² over capped shingles — the stop-shingle cap is
+    * what makes this a persistable size at all). The LSH paths never
+    * read it: they verify their candidates in place
+    * ([[verifyCandidates]]).
     */
   private def coocCached(s: SparkSession, dir: String): DataFrame =
     graft.plans.Memo.shared(s, dir, "dedup.cooc") {
       coocPairs(shingled(s, dir), MaxShingleDf)
     }
 
-  private[graft] def verifyByCooccurrence(docs: DataFrame, candidatesFromCooc: Boolean,
-                                   threshold: Double,
-                                   cand: DataFrame = null,
-                                   maxDf: Long = MaxShingleDf,
-                                   ordered: Boolean = true,
-                                   coocPre: DataFrame = null): DataFrame = {
-    val cooc = if (coocPre != null) coocPre else coocPairs(docs, maxDf)
-    val verified = if (candidatesFromCooc) cooc else cooc.join(cand, Seq("doc_a", "doc_b"))
+  /** (doc_a, doc_b, …) pairs with each side's full set size as
+    * sz_a / sz_b (sizes count capped shingles too, as in the oracle).
+    */
+  private def withSizes(docs: DataFrame, pairs: DataFrame): DataFrame = {
     val sizes = docs.select(col("doc_id"), size(col("sh")).as("sz"))
-    val out = verified
+    pairs
       .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sz_a")), "doc_a")
       .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("sz_b")), "doc_b")
+  }
+
+  /** The shared verify tail: (doc_a, doc_b, inter) → the pairs at
+    * Jaccard ≥ `threshold` against `docs`' set sizes, with the rounded
+    * Jaccard.
+    */
+  private def jaccardAtLeast(docs: DataFrame, pairs: DataFrame, threshold: Double): DataFrame =
+    withSizes(docs, pairs)
       .withColumn("jaccard", round(jaccard(col("inter"), col("sz_a"), col("sz_b")), 4))
       .filter(jaccard(col("inter"), col("sz_a"), col("sz_b")) >= threshold)
       .select("doc_a", "doc_b", "jaccard")
+
+  /** Every pair sharing ≥1 shingle below `maxDf`, verified at
+    * `threshold` from the co-occurrence counts (`coocPre` when given,
+    * else built here).
+    */
+  private[graft] def verifyByCooccurrence(docs: DataFrame, threshold: Double,
+                                          maxDf: Long = MaxShingleDf,
+                                          ordered: Boolean = true,
+                                          coocPre: DataFrame = null): DataFrame = {
+    val cooc = if (coocPre != null) coocPre else coocPairs(docs, maxDf)
+    val out = jaccardAtLeast(docs, cooc, threshold)
     if (ordered) out.orderBy("doc_a", "doc_b") else out
+  }
+
+  /** Verify candidate pairs in place (filter-and-refine): each pair of
+    * the distinct (doc_a, doc_b) frame `cand` fetches its two shingle
+    * sets (two doc_id equi-joins) and counts
+    * |capped(sh_a) ∩ capped(sh_b)| — the explode of `array_intersect`
+    * minus the [[hotShingles]] — so the work is O(candidates), never the
+    * all-pairs co-occurrence frame. The count equals the co-occurrence
+    * join's `inter` for the same pair, and a candidate sharing no
+    * uncapped shingle drops (as it does from that inner join).
+    */
+  private[graft] def verifyCandidates(docs: DataFrame, cand: DataFrame, threshold: Double,
+                                      maxDf: Long = MaxShingleDf): DataFrame = {
+    val side = (p: String) => docs.select(col("doc_id").as(s"doc_$p"), col("sh").as(s"sh_$p"))
+    val inter = cand.join(side("a"), "doc_a").join(side("b"), "doc_b")
+      .select(col("doc_a"), col("doc_b"), explode(array_intersect(col("sh_a"), col("sh_b"))).as("h"))
+      .join(hotShingles(docs, maxDf), Seq("h"), "left_anti")
+      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("inter"))
+    jaccardAtLeast(docs, inter, threshold)
   }
 
   /** §2.4 #26 — MinHash+LSH near-dup: k minhashes → b bands → band-bucket
@@ -359,7 +394,9 @@ object Dedup {
     minhashPairs(s, dir, hotBucketCap, sampleMod).orderBy("doc_a", "doc_b")
 
   /** Session-persisted verified minhash pair frame (unordered): the
-    * band join + co-occurrence verify is shuffled work that must not
+    * band join + candidate verify ([[verifyCandidates]]: each candidate's
+    * capped intersection from its own two shingle sets, never the
+    * all-pairs co-occurrence frame) is shuffled work that must not
     * re-run across the queries that consume the pair list
     * (`q_dedup_minhash`, `q_dup_matrix` — measured 18 CPU-s of
     * re-verification without the persist). The frame is SPARSE (near-
@@ -376,8 +413,7 @@ object Dedup {
       // salt triangle for hot keys live in [[saltedBandSelfJoin]]
       val cand = saltedBandSelfJoin(s, bandedSigs(docs), "key", None, hotBucketCap, sampleMod)
         .distinct()
-      verifyByCooccurrence(docs, candidatesFromCooc = false, MinhashJaccardT, cand,
-        ordered = false, coocPre = coocCached(s, dir))
+      verifyCandidates(docs, cand, MinhashJaccardT)
     }
 
   /** Cross-source duplication matrix (`q_dup_matrix`): the verified
@@ -390,7 +426,7 @@ object Dedup {
     *
     * Shape: the pair list rides the session-persisted shingle cache
     * (the q_dedup_minhash machinery end-to-end — band join, capped
-    * co-occurrence verify); attributing sources is two doc_id
+    * candidate verify); attributing sources is two doc_id
     * equi-joins of the SPARSE pair frame against the column-pruned
     * documents scan, left to AQE (pair volume grows with the corpus
     * dup rate — force-broadcast is unbounded; the tf⋈df precedent),
@@ -418,13 +454,8 @@ object Dedup {
     * per pair, then BOTH orientations emitted and thresholded (a pair
     * can qualify in one direction only).
     */
-  def containment(s: SparkSession, dir: String): DataFrame = {
-    val docs = shingled(s, dir)
-    val sizes = docs.select(col("doc_id"), size(col("sh")).as("sz"))
-    val withSizes = coocCached(s, dir)
-      .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sz_a")), "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("sz_b")), "doc_b")
-    withSizes
+  def containment(s: SparkSession, dir: String): DataFrame =
+    withSizes(shingled(s, dir), coocCached(s, dir))
       .select(explode(array(
         struct(col("doc_a").as("doc_inner"), col("doc_b").as("doc_outer"),
           (col("inter").cast("double") / col("sz_a")).as("c")),
@@ -436,7 +467,6 @@ object Dedup {
       .withColumn("containment", round(col("c"), 4))
       .select("doc_inner", "doc_outer", "containment")
       .orderBy("doc_inner", "doc_outer")
-  }
 
   /** Batch side of the incremental dedup split: doc_id ≡ 0 (mod 10)
     * stands in for "the arriving batch"; the rest is the standing
@@ -456,35 +486,26 @@ object Dedup {
     * candidate join is banded-batch ⋈ banded-corpus, never
     * corpus ⋈ corpus, so daily cost is O(batch × collision rate)
     * regardless of how large the standing corpus has grown. Verification
-    * is the same capped co-occurrence count restricted to batch-side ⋈
-    * corpus-side postings.
+    * is the minhash candidate verify ([[verifyCandidates]]) on the
+    * (doc_new, doc_corpus) candidates alone — O(batch × collision rate)
+    * too, no batch×corpus postings join.
     */
   def incremental(s: SparkSession, dir: String): DataFrame = {
     val docs = shingled(s, dir)
     val isBatch = (c: Column) => pmod(c, lit(IncrementalBatchMod)) === 0
     val nPart = s.sessionState.conf.numShufflePartitions
-    // pinned exchanges (see coocPairs): both fan-out joins read one
-    // explicit-N shuffle each; the batch/corpus filters preserve the
-    // partitioning, so each join is co-partitioned with no extra
+    // pinned exchange (see coocPairs): the band fan-out join reads one
+    // explicit-N shuffle; the batch/corpus filters preserve the
+    // partitioning, so the join is co-partitioned with no extra
     // exchange and AQE cannot coalesce the fan-out to one task
     val banded = bandedSigs(docs).repartition(nPart, col("band_id"), col("key"))
     val cand = banded.filter(isBatch(col("doc_id"))).as("x")
       .join(banded.filter(!isBatch(col("doc_id"))).as("y"),
         col("x.band_id") === col("y.band_id") && col("x.key") === col("y.key"))
-      .select(col("x.doc_id").as("doc_new"), col("y.doc_id").as("doc_corpus"))
+      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct()
-    val ex = cappedPostings(docs, MaxShingleDf).repartition(nPart, col("h"))
-    val cooc = ex.filter(isBatch(col("doc_id"))).select(col("doc_id").as("doc_new"), col("h"))
-      .join(ex.filter(!isBatch(col("doc_id")))
-        .select(col("doc_id").as("doc_corpus"), col("h")), "h")
-      .groupBy("doc_new", "doc_corpus").agg(count(lit(1)).as("inter"))
-    val sizes = docs.select(col("doc_id"), size(col("sh")).as("sz"))
-    cooc.join(cand, Seq("doc_new", "doc_corpus"))
-      .join(sizes.select(col("doc_id").as("doc_new"), col("sz").as("sz_n")), "doc_new")
-      .join(sizes.select(col("doc_id").as("doc_corpus"), col("sz").as("sz_c")), "doc_corpus")
-      .withColumn("jaccard", round(jaccard(col("inter"), col("sz_n"), col("sz_c")), 4))
-      .filter(jaccard(col("inter"), col("sz_n"), col("sz_c")) >= MinhashJaccardT)
-      .select("doc_new", "doc_corpus", "jaccard")
+    verifyCandidates(docs, cand, MinhashJaccardT)
+      .select(col("doc_a").as("doc_new"), col("doc_b").as("doc_corpus"), col("jaccard"))
       .orderBy("doc_new", "doc_corpus")
   }
 
@@ -641,8 +662,8 @@ object Dedup {
        |  SELECT doc_id, list_distinct(list_transform(shs, s -> ${sqlCharFold("s")})) AS sh
        |  FROM sgl WHERE len(shs) > 0)""".stripMargin
 
-  /** Shared capped-explode CTEs (mirrors verifyByCooccurrence's
-    * stop-shingle filter: capped shingles leave candidate generation and
+  /** Shared capped-explode CTEs (mirrors the Spark paths' stop-shingle
+    * filter, [[hotShingles]]: capped shingles leave candidate generation and
     * intersection evidence; set SIZES stay full).
     */
   private val sqlCappedEx: String =

@@ -21,8 +21,12 @@ case class NearDupPair(doc_a: Long, doc_b: Long, jaccard: Double)
   * first — near-dups usually arrive near each other in crawl order),
   * so total state ≈ buckets × M × shingle-set size regardless of stream
   * length. The batch twin (operators.Dedup.minhashLsh) is the
-  * exact-verified reference; the stream trades the eviction horizon for
-  * unboundedness.
+  * exact-verified reference up to its stop-shingle cap: the stream counts
+  * every shared shingle, while the batch drops shingles in more than
+  * `Dedup.MaxShingleDf` documents from the intersection, so the two agree
+  * only where no candidate pair shares such a shingle (true at every
+  * shipped SF, whose max df is 25). The stream also trades the eviction
+  * horizon for unboundedness.
   */
 object StreamingDedup {
 

@@ -106,14 +106,51 @@ class OperatorsSpec extends AnyFunSuite {
       (3L, Seq(99L, 20L, 21L)),
       (4L, Seq(99L, 30L, 31L)),
       (5L, Seq(99L, 40L, 41L))).toDF("doc_id", "sh")
-    val capped = Dedup.verifyByCooccurrence(docs, candidatesFromCooc = true,
-      threshold = 0.0, maxDf = 2)
+    val capped = Dedup.verifyByCooccurrence(docs, threshold = 0.0, maxDf = 2)
     val pairs = capped.select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(pairs === Set((1L, 2L)), s"only the true near-dup pair should survive, got $pairs")
     // with the cap disabled the boilerplate shingle manufactures all 10 pairs
-    val uncapped = Dedup.verifyByCooccurrence(docs, candidatesFromCooc = true,
-      threshold = 0.0, maxDf = 1000000)
+    val uncapped = Dedup.verifyByCooccurrence(docs, threshold = 0.0, maxDf = 1000000)
     assert(uncapped.count() === 10)
+  }
+
+  test("candidate verify applies the stop-shingle cap like the cooc verify") {
+    import spark.implicits._
+    // shingle 99 is in docs 1-4 (df 4 > cap 2). Candidates: (1,2) a true
+    // near-dup that also shares 99 (3 of 7 without it, 4 of 6 with it);
+    // (3,4) shares ONLY 99; (3,5) shares nothing (an LSH false positive)
+    val docs = Seq(
+      (1L, Seq(99L, 10L, 11L, 12L, 13L)),
+      (2L, Seq(99L, 10L, 11L, 12L, 14L)),
+      (3L, Seq(99L, 20L, 21L)),
+      (4L, Seq(99L, 30L, 31L)),
+      (5L, Seq(50L, 51L))).toDF("doc_id", "sh")
+    val cand = Seq((1L, 2L), (3L, 4L), (3L, 5L)).toDF("doc_a", "doc_b")
+    val rows = (df: org.apache.spark.sql.DataFrame) =>
+      df.select("doc_a", "doc_b", "jaccard").as[(Long, Long, Double)].collect().toSet
+    val got = rows(Dedup.verifyCandidates(docs, cand, threshold = 0.0, maxDf = 2))
+    // the co-occurrence counts at the same cap, joined to the same candidates
+    val viaCooc = rows(Dedup.verifyByCooccurrence(docs, threshold = 0.0, maxDf = 2)
+      .join(cand, Seq("doc_a", "doc_b"), "left_semi"))
+    assert(got === viaCooc)
+    assert(got === Set((1L, 2L, 0.4286)), s"only the true near-dup pair should survive, got $got")
+  }
+
+  test("minhash and incremental dedup never build the co-occurrence frame") {
+    import graft.plans.Memo
+    val dir = java.nio.file.Files.createTempDirectory("graft_mhcooc").toString
+    java.nio.file.Files.copy(java.nio.file.Paths.get(sf, "documents.parquet"),
+      java.nio.file.Paths.get(dir, "documents.parquet"))
+    try {
+      assert(Dedup.minhashLsh(spark, dir).collect().nonEmpty)
+      assert(Dedup.incremental(spark, dir).collect().nonEmpty)
+      assert(Memo.heldNames(spark, dir).contains("dedup.shingled"))
+      assert(!Memo.heldNames(spark, dir).contains("dedup.cooc"),
+        s"an LSH path built the co-occurrence frame: ${Memo.heldNames(spark, dir)}")
+      // positive control: the exhaustive n-gram verify does build it
+      Dedup.ngramJaccard(spark, dir).collect()
+      assert(Memo.heldNames(spark, dir).contains("dedup.cooc"))
+    } finally Memo.release(spark, dir)
   }
 
   test("json normalization handles short/empty documents and missing paths") {

@@ -17,9 +17,12 @@ interquartile range), and the no-regression verdict against the metric's
 `bound`: `ok` when the change's median is no worse than the base median by
 more than the bound (relative), `WORSE` when it is, and `unresolved` when
 the base's IQR/median exceeds the bound (the runs spread too widely to
-tell) unless every change run beats every base run. It refuses to report,
-and stops, if any run was incorrect or had failed ops. It only reads
-run.py's output.
+tell) unless every change run beats every base run. Below the table it
+prints, with no verdict, both medians of the detail metrics that split or
+add to the end-to-end ones (live_heap_peak_mb and native_peak_mb, the two
+parts of peak_mem_mb; write_p50_s where the workload writes), read from
+each run's `{"detail": ...}` line. It refuses to report, and stops, if
+any run was incorrect or had failed ops. It only reads run.py's output.
 
 With --traced it instead runs `graftbench/run.py --trace 1` once per side
 for each workload (seed: the first of --seeds) and prints every per-layer
@@ -47,7 +50,13 @@ def run(checkout, workload, seed, seconds, trace=0):
     if p.returncode != 0:
         sys.stderr.write(p.stderr[-3000:])
         sys.exit(f"{checkout} seed {seed}: exit {p.returncode}")
-    return json.loads(p.stdout.strip().splitlines()[-1])
+    lines = [json.loads(x) for x in p.stdout.strip().splitlines() if x.startswith("{")]
+    detail = next((x["detail"] for x in lines if "detail" in x), {})
+    return lines[-1], detail
+
+
+# detail metrics printed below each workload's table (where a run reports them)
+DETAIL = ("live_heap_peak_mb", "native_peak_mb", "write_p50_s")
 
 
 def quartiles(xs):
@@ -121,6 +130,15 @@ def report(workload, runs, bench, sides, seed_spec):
         print(f"{name:12s} {cell['base']:>34s} {cell['change']:>34s} {delta:+7.1%} "
               f"{wins:>2d}/{pairs:<3d}  {'holds' if holds else 'no':5s}  {rule} "
               f"(±{m['bound']:.0%})", flush=True)
+    for name in DETAIL:
+        val = {side: [r["detail"].get("end_to_end", {}).get(name, {}).get("value")
+                      for r in runs if r["side"] == side] for side in sides}
+        if any(v is None for xs in val.values() for v in xs):
+            continue
+        med = {side: statistics.median(xs) for side, xs in val.items()}
+        delta = (med["change"] - med["base"]) / med["base"] if med["base"] else 0.0
+        print(f"{name:18s} base {med['base']:.4f}  change {med['change']:.4f}  {delta:+7.1%}  "
+              f"(detail, medians only)", flush=True)
 
 
 def main():
@@ -145,10 +163,11 @@ def main():
         for seed, order in plan:
             for side in order:
                 t = time.time()
-                summary = run(sides[side], workload, seed, bench["run_seconds"],
-                              trace=int(a.traced))
+                summary, detail = run(sides[side], workload, seed, bench["run_seconds"],
+                                      trace=int(a.traced))
                 mine.append({"workload": workload, "seed": seed, "side": side,
-                             "first": side == order[0], "summary": summary})
+                             "first": side == order[0], "summary": summary,
+                             "detail": detail})
                 with open(a.out, "w") as fh:
                     json.dump(runs + mine, fh, indent=1)
                 print(f"{workload} seed {seed} {side}: correct={summary['correct']} "
