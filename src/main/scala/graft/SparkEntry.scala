@@ -441,9 +441,9 @@ object SparkEntry {
     Entry("q_dedup_containment", "dct", Dedup.containment _, Oracle(Dedup.sqlContainment)),
     Entry("q_dedup_incremental", "di", Dedup.incremental _, Oracle(Dedup.sqlIncremental)),
     // span-level (substring) dedup: maximal duplicated token spans
-    Entry("q_dedup_span", "dsn", ((s, d) => Dedup.spanDedup(s, d)), Oracle(Dedup.sqlSpanDedup)),
+    Entry("q_dedup_span", "dsn", Dedup.spanDedup _, Oracle(Dedup.sqlSpanDedup)),
     // the cleaning ACTION: cut the located spans out of the stream
-    Entry("q_span_scrub", "ssc", ((s, d) => Dedup.spanScrub(s, d)), Oracle(Dedup.sqlSpanScrub)),
+    Entry("q_span_scrub", "ssc", Dedup.spanScrub _, Oracle(Dedup.sqlSpanScrub)),
     // SemDeDup: cluster-restricted embedding near-dup prune
     Entry("q_dedup_semantic", "dse", Similarity.semanticDedup _,
       Oracle(Similarity.sqlSemanticDedup)),
@@ -522,7 +522,7 @@ object SparkEntry {
       s"""WITH $sqlQualityCtes
          SELECT doc_id, quality FROM qq ORDER BY doc_id""")),
     // quality-weighted (importance) sampling: keep-prob == score
-    Entry("q_quality_sample", "qs", ((s, d) => TextAnalysis.qualitySample(s, d)), Oracle(
+    Entry("q_quality_sample", "qs", TextAnalysis.qualitySample _, Oracle(
       s"""WITH $sqlQualityCtes
          SELECT doc_id, quality FROM qq
          WHERE (doc_id * ${operators.TextAnalysis.QualitySampleA}) % 2147483648 % 10000
@@ -577,10 +577,10 @@ object SparkEntry {
     Entry("q_lm_score", "lms", TextAnalysis.lmScore _, Oracle(
       s"""WITH $sqlLmCtes
          |SELECT doc_id, n_pairs, lm_score FROM lm ORDER BY doc_id""".stripMargin)),
-    Entry("q_gopher_filter", "go", ((s, d) => TextAnalysis.gopherFilter(s, d)),
+    Entry("q_gopher_filter", "go", TextAnalysis.gopherFilter _,
       Oracle(TextAnalysis.gopherOracleSql)),
     // compressibility gate: per-doc character Shannon entropy
-    Entry("q_char_entropy", "ce", ((s, d) => TextAnalysis.charEntropy(s, d)),
+    Entry("q_char_entropy", "ce", TextAnalysis.charEntropy _,
       Oracle(TextAnalysis.charEntropyOracleSql)),
     // per-stage corpus yield report over the cleaning gates
     // yield-report oracle: same gate fragments as q_clean_pipeline,
@@ -611,11 +611,11 @@ object SparkEntry {
              AS reject_rate
          FROM st ORDER BY stage_no""")),
     // bad-word density gate (C4 blocklist family)
-    Entry("q_blocklist_filter", "bf", ((s, d) => TextAnalysis.blocklistFilter(s, d)),
+    Entry("q_blocklist_filter", "bf", TextAnalysis.blocklistFilter _,
       Oracle(TextAnalysis.blocklistFilterOracleSql)),
-    Entry("q_repetition", "re", ((s, d) => TextAnalysis.repetition(s, d)),
+    Entry("q_repetition", "re", TextAnalysis.repetition _,
       Oracle(TextAnalysis.repetitionOracleSql)),
-    Entry("q_chunk_docs", "ch", ((s, d) => TextAnalysis.chunkDocs(s, d)),
+    Entry("q_chunk_docs", "ch", TextAnalysis.chunkDocs _,
       Oracle(TextAnalysis.chunkDocsOracleSql)),
     Entry("q_cooccur", "co", TextAnalysis.cooccur _, Oracle(TextAnalysis.cooccurOracleSql)),
     Entry("q_dedup_clusters", "dc", TextAnalysis.dedupClusters _, Oracle(
@@ -659,7 +659,7 @@ object SparkEntry {
          SELECT doc_id, pred_lang, quality, ${sqlPii("text")} AS scrubbed
          FROM dd WHERE rn = 1 ORDER BY doc_id""")),
     // the full corpus→training-sequences path as one composed query
-    Entry("q_corpus_pipeline", "cor", ((s, d) => TextAnalysis.corpusPipeline(s, d)), Oracle(
+    Entry("q_corpus_pipeline", "cor", TextAnalysis.corpusPipeline _, Oracle(
       s"""WITH $sqlQualityCtes,
          $sqlLangCtes,
          gated AS (
@@ -693,7 +693,7 @@ object SparkEntry {
          ORDER BY doc_id, seq_id""")),
     // §2.6b corpus curation (round 7): data selection / mixture monitors
     // greedy best-quality-first selection under a corpus token budget
-    Entry("q_token_budget", "tb", ((s, d) => CorpusCuration.tokenBudget(s, d)), Oracle(
+    Entry("q_token_budget", "tb", CorpusCuration.tokenBudget _, Oracle(
       s"""WITH $sqlQualityCtes,
          |tb AS (SELECT q.doc_id, q.quality, CAST(s.nwords AS BIGINT) AS ntok
          |       FROM qq q JOIN qs s USING (doc_id)),
@@ -707,7 +707,7 @@ object SparkEntry {
          |WHERE cum_tokens <= budget
          |ORDER BY quality DESC, doc_id""".stripMargin)),
     // CCNet head/middle/tail perplexity terciles per language
-    Entry("q_ppl_buckets", "pp", ((s, d) => CorpusCuration.pplBuckets(s, d)), Oracle(
+    Entry("q_ppl_buckets", "pp", CorpusCuration.pplBuckets _, Oracle(
       s"""WITH $sqlLmCtes,
          |ld AS (SELECT l.doc_id, d.lang, l.lm_score
          |       FROM lm l JOIN documents d USING (doc_id)),
@@ -732,7 +732,7 @@ object SparkEntry {
     Entry("q_source_rank", "srk", ((s, d) => CorpusCuration.sourceRank(s, d)),
       Oracle(CorpusCuration.sourceRankOracleSql)),
     Entry("q_kl_drift", "kl", CorpusCuration.klDrift _, Oracle(CorpusCuration.klDriftOracleSql)),
-    Entry("q_epoch_shuffle", "ep", ((s, d) => CorpusCuration.epochShuffle(s, d)),
+    Entry("q_epoch_shuffle", "ep", CorpusCuration.epochShuffle _,
       Oracle(CorpusCuration.epochShuffleOracleSql)),
     // quality-decile vs mean LM score: composes the shared LM + quality
     // CTE families (names are disjoint: d2..lm vs qt/qs/qq)
@@ -744,7 +744,7 @@ object SparkEntry {
          |        / count(*) * 1e6 + 0.5) / 1e6 AS mean_lm
          |FROM lm l JOIN qq q USING (doc_id)
          |GROUP BY 1 ORDER BY qbucket""".stripMargin)),
-    Entry("q_novelty", "no", ((s, d) => CorpusCuration.novelty(s, d)),
+    Entry("q_novelty", "no", CorpusCuration.novelty _,
       Oracle(CorpusCuration.noveltyOracleSql)),
     // per-source declared-vs-predicted language audit (shared lang CTEs)
     Entry("q_lang_mismatch", "lm", CorpusCuration.langMismatch _, Oracle(
@@ -764,7 +764,7 @@ object SparkEntry {
     // per-source dataset datasheet (docs/dups/tokens/quality/lang mix)
     Entry("q_corpus_card", "cc", CorpusCuration.corpusCard _,
       Oracle(CorpusCuration.corpusCardOracleSql)),
-    Entry("q_term_search", "ts", ((s, d) => CorpusCuration.termSearch(s, d)),
+    Entry("q_term_search", "ts", CorpusCuration.termSearch _,
       Oracle(CorpusCuration.termSearchOracleSql)),
     // BM25 ranked search beside the boolean term search
     Entry("q_bm25_rank", "bm", ((s, d) => Retrieval.bm25Rank(s, d)),
@@ -877,25 +877,25 @@ object SparkEntry {
     // §2.6c learned data-selection filters (round 8): NB curated-text
     // classifier (train/score/holdout-eval) + DSIR importance weights —
     // full DuckDB oracles down to the training computation itself
-    Entry("q_nb_train", "nbt", ((s, d) => operators.Classifier.nbTrain(s, d)),
+    Entry("q_nb_train", "nbt", operators.Classifier.nbTrain _,
       Oracle(operators.Classifier.nbTrainOracleSql)),
-    Entry("q_nb_score", "nbs", ((s, d) => operators.Classifier.nbScore(s, d)),
+    Entry("q_nb_score", "nbs", operators.Classifier.nbScore _,
       Oracle(operators.Classifier.nbScoreOracleSql)),
     Entry("q_nb_eval", "nbe", operators.Classifier.nbEval _,
       Oracle(operators.Classifier.nbEvalOracleSql)),
     // threshold-free ranking quality: binned ROC-AUC on the holdout
     Entry("q_nb_auc", "nba", operators.Classifier.nbAuc _,
       Oracle(operators.Classifier.nbAucOracleSql)),
-    Entry("q_dsir_weights", "dw", ((s, d) => operators.Classifier.dsirWeights(s, d)),
+    Entry("q_dsir_weights", "dw", operators.Classifier.dsirWeights _,
       Oracle(operators.Classifier.dsirWeightsOracleSql)),
-    Entry("q_dsir_select", "dws", ((s, d) => operators.Classifier.dsirSelect(s, d)),
+    Entry("q_dsir_select", "dws", operators.Classifier.dsirSelect _,
       Oracle(operators.Classifier.dsirSelectOracleSql)),
     // the cascade idiom: map-side heuristic gate prunes the stream
     // BEFORE the learned model's token join sees it
     // cascade oracle: the quality CTEs compose with the NB CTEs (CTE
     // names disjoint); the model is trained on the UNGATED fold — the
     // cascade gates scoring, not training
-    Entry("q_filter_cascade", "fc", ((s, d) => operators.Classifier.filterCascade(s, d)), Oracle(
+    Entry("q_filter_cascade", "fc", operators.Classifier.filterCascade _, Oracle(
       s"""WITH $sqlQualityCtes,
          |${operators.Classifier.nbSqlCtes}
          |SELECT b.doc_id, qq.quality,
@@ -957,7 +957,7 @@ object SparkEntry {
            CASE lang WHEN 'en' THEN 30 WHEN 'de' THEN 80 WHEN 'es' THEN 80
                      WHEN 'fr' THEN 80 WHEN 'zh' THEN 50 ELSE 0 END
          ORDER BY doc_id""")),
-    Entry("q_data_split", "ds", ((s, d) => ExtendedAnalytics.dataSplit(s, d)),
+    Entry("q_data_split", "ds", ExtendedAnalytics.dataSplit _,
       Oracle(ExtendedAnalytics.dataSplitOracleSql)),
     Entry("q_keyed_sample", "ks", ExtendedAnalytics.keyedSample _, Oracle(
       s"""WITH h AS (
@@ -977,7 +977,7 @@ object SparkEntry {
     Entry("q_domain_mix_alpha", "dma", ExtendedAnalytics.domainMixAlpha _,
       Oracle(ExtendedAnalytics.domainMixAlphaOracleSql)),
     // GPT-style concat-and-chunk packing via two-phase prefix sum
-    Entry("q_pack_sequences", "pc", ((s, d) => ExtendedAnalytics.packSequences(s, d)),
+    Entry("q_pack_sequences", "pc", ExtendedAnalytics.packSequences _,
       Oracle(ExtendedAnalytics.packSequencesOracleSql)),
     // distributed BPE vocabulary learning (operators.Bpe)
     Entry("q_bpe_merges", "bpm", operators.Bpe.bpeMerges _, Oracle(operators.Bpe.bpeOracleSql)),
@@ -986,11 +986,11 @@ object SparkEntry {
     // encode, E-step piece counts
     Entry("q_unigram_vocab", "uv", operators.Unigram.unigramVocab _,
       Oracle(operators.Unigram.unigramVocabOracleSql)),
-    Entry("q_unigram_encode", "ue", ((s, d) => operators.Unigram.unigramEncode(s, d)),
+    Entry("q_unigram_encode", "ue", operators.Unigram.unigramEncode _,
       Oracle(operators.Unigram.unigramEncodeOracleSql)),
     Entry("q_unigram_refit", "ur", operators.Unigram.unigramRefit _,
       Oracle(operators.Unigram.unigramRefitOracleSql)),
-    Entry("q_bpe_encode", "bp", ((s, d) => operators.Bpe.bpeEncode(s, d)),
+    Entry("q_bpe_encode", "bp", operators.Bpe.bpeEncode _,
       Oracle(operators.Bpe.bpeEncodeOracleSql)),
     // persisted-tokenizer round trip: save, reload, encode — the
     // artifact contract is output identity with q_bpe_encode, so the

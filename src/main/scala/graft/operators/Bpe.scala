@@ -255,14 +255,9 @@ object Bpe {
     * expression overhead. Distributed shape: the learner's word-count
     * shuffle, then a MAP-ONLY encode pass over the documents scan
     * (the merge list is driver state, [[BpeRounds]] rows).
-    *
-    * `ordered` as in `TextAnalysis.gopherFilter`: the terminal sort
-    * is the oracle-determinism contract, not a plan requirement.
     */
-  def bpeEncode(s: SparkSession, dir: String, ordered: Boolean = true): DataFrame = {
-    val out = encodeFrame(s, dir).drop("lang")
-    if (ordered) out.orderBy("doc_id") else out
-  }
+  def bpeEncode(s: SparkSession, dir: String): DataFrame =
+    encodeFrame(s, dir).drop("lang").orderBy("doc_id")
 
   /** Per-doc encode columns with the declared language carried (free —
     * rides the same scan); shared by [[bpeEncode]] and [[bpeFertility]].

@@ -192,10 +192,8 @@ object Classifier {
     * `ln p(t|curated) − ln p(t|web)` (nats, 6 dp). Vocabulary-sized
     * output (corpus-scale: take the unordered form).
     */
-  def nbTrain(s: SparkSession, dir: String, ordered: Boolean = true): DataFrame = {
-    val out = modelTable(nbCounts(s, dir))
-    if (ordered) out.orderBy("t") else out
-  }
+  def nbTrain(s: SparkSession, dir: String): DataFrame =
+    modelTable(nbCounts(s, dir)).orderBy("t")
 
   /** The `q_nb_train` columns from a (t, c_cur, c_web) counts frame. */
   private[graft] def modelTable(counts: DataFrame): DataFrame = {
@@ -227,10 +225,8 @@ object Classifier {
     * trained on). `pred_cur` compares the exact micro-nat integer sum
     * against 0 — the decision can never flip on a rounding boundary.
     */
-  def nbScore(s: SparkSession, dir: String, ordered: Boolean = true): DataFrame = {
-    val out = scoredFrame(s, dir)
-    if (ordered) out.orderBy("doc_id") else out
-  }
+  def nbScore(s: SparkSession, dir: String): DataFrame =
+    scoredFrame(s, dir).orderBy("doc_id")
 
   /** Session-persisted per-doc score frame — q_nb_score, q_nb_eval and
     * q_nb_auc all reduce over it (the AUC alone takes two actions:
@@ -256,7 +252,7 @@ object Classifier {
     * persisted counts; output is class-cardinality (≤2 rows).
     */
   def nbEval(s: SparkSession, dir: String): DataFrame =
-    nbScore(s, dir, ordered = false)
+    scoredFrame(s, dir)
       .filter(col("fold") === "holdout")
       .groupBy("is_cur")
       .agg(count(lit(1)).as("n_docs"),
@@ -296,7 +292,7 @@ object Classifier {
     */
   def nbAuc(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val hold = nbScore(s, dir, ordered = false)
+    val hold = scoredFrame(s, dir)
       .filter(col("fold") === "holdout")
       .select(col("is_cur"), col("nb_score"))
     val mm = hold.agg(min("nb_score").as("lo"), max("nb_score").as("hi")).head()
@@ -379,7 +375,7 @@ object Classifier {
     * filter under the explode). Output: surviving docs with both
     * signals, so downstream selection can weigh them jointly.
     */
-  def filterCascade(s: SparkSession, dir: String, ordered: Boolean = true): DataFrame = {
+  def filterCascade(s: SparkSession, dir: String): DataFrame = {
     val (tc, tw, v) = nbTotals(s, dir)
     val model = modelFromCounts(nbCounts(s, dir), tc, tw, v)
     val priorU = nbPriorU(s, dir)
@@ -392,12 +388,12 @@ object Classifier {
       .groupBy("doc_id")
       .agg(sum(col("llr_u")).as("sx"))
     val totalU = coalesce(col("sx"), lit(0L)) + lit(priorU)
-    val out = base.select(col("doc_id"), col("quality"))
+    base.select(col("doc_id"), col("quality"))
       .join(hits, Seq("doc_id"), "left")
       .select(col("doc_id"), col("quality"),
         score4(totalU).as("nb_score"),
         when(totalU > 0L, 1).otherwise(0).as("pred_cur"))
-    if (ordered) out.orderBy("doc_id") else out
+      .orderBy("doc_id")
   }
 
   // ---------------------------------------------------------------------
@@ -500,10 +496,8 @@ object Classifier {
       dsirScoreFrame(s, docs, dsirTrainCounts(docs).toSeq)
     }
 
-  def dsirWeights(s: SparkSession, dir: String, ordered: Boolean = true): DataFrame = {
-    val out = dsirFrame(s, dir)
-    if (ordered) out.orderBy("doc_id") else out
-  }
+  def dsirWeights(s: SparkSession, dir: String): DataFrame =
+    dsirFrame(s, dir).orderBy("doc_id")
 
   // ---------------------------------------------------------------------
   // q_dsir_select — the resampling step
@@ -524,7 +518,7 @@ object Classifier {
     * 4-dp grid so both engines' interpolation agrees (the ppl_buckets
     * boundary lesson).
     */
-  def dsirSelect(s: SparkSession, dir: String, ordered: Boolean = true): DataFrame = {
+  def dsirSelect(s: SparkSession, dir: String): DataFrame = {
     val w = dsirFrame(s, dir)
     val thr = w.agg(
       expr(s"percentile(logw_per_feat, cast(1 as double)/2)")).head().getDouble(0)
@@ -537,9 +531,9 @@ object Classifier {
     // lesson, applied at the source). Selected set unchanged: values
     // on the 1e-4 grid compare identically against k/1e4 and (2k)/2e4.
     val tSnap = math.floor(thr * (Dp4 * 2) + 0.5) / (Dp4 * 2)
-    val out = w.filter(col("logw_per_feat") >= lit(tSnap))
+    w.filter(col("logw_per_feat") >= lit(tSnap))
       .select(col("doc_id"), col("n_feat"), col("dsir_logw"), col("logw_per_feat"))
-    if (ordered) out.orderBy("doc_id") else out
+      .orderBy("doc_id")
   }
 
   // ---------------------------------------------------------------------

@@ -55,12 +55,7 @@ object CorpusCuration {
     * bucket-totals collect. No unpartitioned window anywhere; one
     * key-partitioned shuffle + the totals agg.
     */
-  /** `ordered=true` appends the parity-harness sort (the verification
-    * contract, not a plan requirement — README "Determinism vs scale");
-    * the selected set is ~half the corpus, so production callers take
-    * the unsorted form.
-    */
-  def tokenBudget(s: SparkSession, dir: String, ordered: Boolean = true): DataFrame = {
+  def tokenBudget(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.documentsSpread(s, dir)
       .select(col("doc_id"),
         qualityScore(col("text")).as("quality"),
@@ -77,11 +72,11 @@ object CorpusCuration {
     val budget = totals.map(_._2).sum / TokenBudgetDen
     import s.implicits._
     val offDf = totals.map(_._1).zip(running).toSeq.toDF("qb", "boff")
-    val out = local.join(broadcast(offDf), "qb")
+    local.join(broadcast(offDf), "qb")
       .withColumn("cum_tokens", col("boff") + col("lend"))
       .filter(col("cum_tokens") <= lit(budget))
       .select(col("doc_id"), col("quality"), col("ntok"), col("cum_tokens"))
-    if (ordered) out.orderBy(col("quality").desc, col("doc_id")) else out
+      .orderBy(col("quality").desc, col("doc_id"))
   }
 
   // ---------------------------------------------------------------------
@@ -109,7 +104,7 @@ object CorpusCuration {
     * strictly between two distinct quantized values, so the `<=`
     * comparisons agree even under last-ulp drift.
     */
-  def pplBuckets(s: SparkSession, dir: String, ordered: Boolean = true): DataFrame = {
+  def pplBuckets(s: SparkSession, dir: String): DataFrame = {
     val lm = TextAnalysis.lmScoreFrame(s, dir)
     val thr = lm.groupBy("lang")
       // CAST(1 AS DOUBLE)/3 in BOTH engines: a bare 1.0/3 literal is
@@ -126,13 +121,13 @@ object CorpusCuration {
       .select(col("lang"),
         (floor(element_at(col("t"), 1) * 1e4 + lit(0.5)) / 1e4).as("t1"),
         (floor(element_at(col("t"), 2) * 1e4 + lit(0.5)) / 1e4).as("t2"))
-    val out = lm.join(broadcast(thr), "lang")
+    lm.join(broadcast(thr), "lang")
       .withColumn("bucket",
         when(col("lm_score") <= col("t1"), lit("head"))
           .when(col("lm_score") <= col("t2"), lit("middle"))
           .otherwise(lit("tail")))
       .select(col("doc_id"), col("lang"), col("lm_score"), col("bucket"))
-    if (ordered) out.orderBy("doc_id") else out
+      .orderBy("doc_id")
   }
 
   // ---------------------------------------------------------------------
@@ -491,15 +486,15 @@ object CorpusCuration {
     * built, because the catalog's one-off semantics don't amortize an
     * index.
     */
-  def termSearch(s: SparkSession, dir: String, ordered: Boolean = true): DataFrame = {
+  def termSearch(s: SparkSession, dir: String): DataFrame = {
     val toks = tokens(col("text"))
     val counts = SearchTerms.zipWithIndex.map { case (t, i) =>
       size(filter(toks, x => x === lit(t))).cast("long").as(s"n_${t}")
     }
-    val out = Tables.documentsSpread(s, dir)
+    Tables.documentsSpread(s, dir)
       .select(col("doc_id") +: counts: _*)
       .filter(SearchTerms.map(t => col(s"n_${t}") > 0).reduce(_ && _))
-    if (ordered) out.orderBy("doc_id") else out
+      .orderBy("doc_id")
   }
 
   def termSearchOracleSql: String = {
@@ -636,18 +631,18 @@ object CorpusCuration {
     * corpus-gram-sized frame (the opposite call from the kl_drift
     * aggregate, which is post-shuffle and small).
     */
-  def novelty(s: SparkSession, dir: String, ordered: Boolean = true): DataFrame = {
+  def novelty(s: SparkSession, dir: String): DataFrame = {
     def grams = Tables.documentsSpread(s, dir)
       .select(col("doc_id"),
         explode(shingleHashes(col("text"), NoveltyShingleN)).as("h"))
     val first = grams.groupBy("h").agg(min("doc_id").as("first_id"))
-    val out = grams.join(first, "h")
+    grams.join(first, "h")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_grams"),
         sum(when(col("first_id") < col("doc_id"), 1L).otherwise(0L)).as("n_seen"))
       .select(col("doc_id"), col("n_grams"), col("n_seen"),
         r4c(lit(1.0) - col("n_seen").cast("double") / col("n_grams")).as("novelty"))
-    if (ordered) out.orderBy("doc_id") else out
+      .orderBy("doc_id")
   }
 
   def noveltyOracleSql: String = {
@@ -1152,7 +1147,7 @@ object CorpusCuration {
     * broadcast offsets from an (epoch, range)-count collect (≤ 3·1024
     * rows of driver metadata). No unpartitioned window.
     */
-  def epochShuffle(s: SparkSession, dir: String, ordered: Boolean = true): DataFrame = {
+  def epochShuffle(s: SparkSession, dir: String): DataFrame = {
     val bw = (HashP + EpochRankBuckets - 1) / EpochRankBuckets // ceil → ids < HashP
     // epoch fan-out as ONE scan + posexplode (a per-epoch union would
     // read the corpus once per epoch per pass)
@@ -1175,9 +1170,9 @@ object CorpusCuration {
     }
     import s.implicits._
     val offDf = offs.toDF("epoch", "rng", "off")
-    val out = local.join(broadcast(offDf), Seq("epoch", "rng"))
+    local.join(broadcast(offDf), Seq("epoch", "rng"))
       .select(col("epoch"), (col("off") + col("rn")).as("pos"), col("doc_id"))
-    if (ordered) out.orderBy("epoch", "pos") else out
+      .orderBy("epoch", "pos")
   }
 
   def epochShuffleOracleSql: String = {

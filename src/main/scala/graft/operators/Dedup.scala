@@ -114,8 +114,7 @@ object Dedup {
     */
   private[graft] def ngramPairs(s: SparkSession, dir: String): DataFrame =
     graft.plans.Memo.shared(s, dir, "dedup.ngramPairs") {
-      verifyByCooccurrence(shingled(s, dir), JaccardT, ordered = false,
-        coocPre = coocCached(s, dir))
+      jaccardAtLeast(shingled(s, dir), coocCached(s, dir), JaccardT)
     }
 
   /** Stop-shingle cap: a shingle present in more than this many
@@ -206,17 +205,11 @@ object Dedup {
       .select("doc_a", "doc_b", "jaccard")
 
   /** Every pair sharing ≥1 shingle below `maxDf`, verified at
-    * `threshold` from the co-occurrence counts (`coocPre` when given,
-    * else built here).
+    * `threshold` from the co-occurrence counts.
     */
   private[graft] def verifyByCooccurrence(docs: DataFrame, threshold: Double,
-                                          maxDf: Long = MaxShingleDf,
-                                          ordered: Boolean = true,
-                                          coocPre: DataFrame = null): DataFrame = {
-    val cooc = if (coocPre != null) coocPre else coocPairs(docs, maxDf)
-    val out = jaccardAtLeast(docs, cooc, threshold)
-    if (ordered) out.orderBy("doc_a", "doc_b") else out
-  }
+                                          maxDf: Long = MaxShingleDf): DataFrame =
+    jaccardAtLeast(docs, coocPairs(docs, maxDf), threshold).orderBy("doc_a", "doc_b")
 
   /** Verify candidate pairs in place (filter-and-refine): each pair of
     * the distinct (doc_a, doc_b) frame `cand` fetches its two shingle
@@ -581,7 +574,11 @@ object Dedup {
     * storage pressure. (SpanSkewSpec plants the hot gram and pins the
     * skew-free counts exchange + splittable join shape.)
     */
-  def spanDedup(s: SparkSession, dir: String, ordered: Boolean = true): DataFrame = {
+  def spanDedup(s: SparkSession, dir: String): DataFrame =
+    spans(s, dir).orderBy("doc_id", "span_start")
+
+  /** The [[spanDedup]] spans, unsorted — what [[spanScrub]] cuts. */
+  private def spans(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val pos = Tables.documentsSpread(s, dir)
       .select(col("doc_id"),
@@ -591,10 +588,7 @@ object Dedup {
       .filter(col("cnt") >= SpanMinCount).select("h")
     val hits = pos.join(dup, Seq("h"), "left_semi").select("doc_id", "pos")
     val w = Window.partitionBy("doc_id").orderBy("pos")
-    // `ordered` as in TextAnalysis.gopherFilter: the terminal sort is
-    // the oracle-parity contract, not a semantic requirement — a
-    // corpus-sized span list should not pay a global range exchange
-    val out = hits
+    hits
       .withColumn("prev_end",
         max(col("pos") + lit(SpanGramN)).over(w.rowsBetween(Window.unboundedPreceding, -1)))
       .withColumn("brk",
@@ -605,7 +599,6 @@ object Dedup {
         (max("pos") + lit(SpanGramN)).cast("int").as("span_end"),
         count(lit(1)).as("dup_grams"))
       .select("doc_id", "span_start", "span_end", "dup_grams")
-    if (ordered) out.orderBy("doc_id", "span_start") else out
   }
 
   /** Span-level SCRUB (`q_span_scrub`): [[spanDedup]] locates the
@@ -622,20 +615,20 @@ object Dedup {
     * cut itself is a map-side indexed `filter` HOF against the
     * per-doc span list — no second corpus shuffle.
     */
-  def spanScrub(s: SparkSession, dir: String, ordered: Boolean = true): DataFrame = {
-    val spans = spanDedup(s, dir, ordered = false)
+  def spanScrub(s: SparkSession, dir: String): DataFrame = {
+    val perDoc = spans(s, dir)
       .groupBy("doc_id")
       .agg(collect_list(struct(col("span_start"), col("span_end"))).as("spans"))
     val toks = tokens(col("text"))
     val kept = filter(toks, (_, i) =>
       !exists(col("spans"), sp => i >= sp("span_start") && i < sp("span_end")))
-    val out = Tables.documentsSpread(s, dir)
-      .join(spans, Seq("doc_id"))
+    Tables.documentsSpread(s, dir)
+      .join(perDoc, Seq("doc_id"))
       .select(col("doc_id"),
         size(toks).cast("long").as("n_tokens"),
         size(kept).cast("long").as("n_kept"),
         array_join(kept, " ").as("scrubbed"))
-    if (ordered) out.orderBy("doc_id") else out
+      .orderBy("doc_id")
   }
 
   // ---- oracle SQL generation (same constants as above) ------------------

@@ -102,18 +102,15 @@ object ExtendedAnalytics {
     * corpus growth: a document's split never changes when other
     * documents arrive, which row-position or RNG-draw splits cannot
     * guarantee. Scale shape: pure MAP-SIDE projection, no shuffle.
-    *
-    * `ordered` as in `TextAnalysis.gopherFilter`: the terminal sort is
-    * the oracle-determinism contract, not a plan requirement.
     */
-  def dataSplit(s: SparkSession, dir: String, ordered: Boolean = true): DataFrame = {
+  def dataSplit(s: SparkSession, dir: String): DataFrame = {
     val bucket = pmod(col("doc_id") * lit(SplitHashA), lit(2147483648L)) % 1000
-    val out = Tables.documentsSpread(s, dir)
+    Tables.documentsSpread(s, dir)
       .select(col("doc_id"), col("lang"),
         when(bucket < SplitTrainPermille, "train")
           .when(bucket < SplitValPermille, "val")
           .otherwise("test").as("split"))
-    if (ordered) out.orderBy("doc_id") else out
+      .orderBy("doc_id")
   }
 
   def dataSplitOracleSql: String =
@@ -340,20 +337,17 @@ object ExtendedAnalytics {
     * O(buckets) driver state, two passes over the input (totals, then
     * the windowed chunk map).
     */
-  def packSequences(s: SparkSession, dir: String, ordered: Boolean = true): DataFrame =
+  def packSequences(s: SparkSession, dir: String): DataFrame =
     packOn(s,
       Tables.documentsSpread(s, dir)
-        .select(col("doc_id"), size(tokens(col("text"))).cast("long").as("ntok")),
-      ordered)
+        .select(col("doc_id"), size(tokens(col("text"))).cast("long").as("ntok")))
+      .orderBy("doc_id", "seq_id")
 
-  /** Packing core over any (doc_id, ntok) frame — the composed corpus
-    * pipeline packs its SURVIVORS through the same machinery.
+  /** Packing core over any (doc_id, ntok) frame, unsorted — the
+    * composed corpus pipeline packs its SURVIVORS through the same
+    * machinery.
     */
-  private[graft] def packOnForTest(s: SparkSession, d0: DataFrame): DataFrame =
-    packOn(s, d0, ordered = true)
-
-  private[operators] def packOn(s: SparkSession, d0: DataFrame,
-                                ordered: Boolean): DataFrame = {
+  private[graft] def packOn(s: SparkSession, d0: DataFrame): DataFrame = {
     val d = d0.filter(col("ntok") > 0)
       .withColumn("bucket", expr(s"doc_id div $PackBucketWidth"))
     val w = Window.partitionBy("bucket").orderBy("doc_id")
@@ -368,7 +362,7 @@ object ExtendedAnalytics {
     val offs = totals.map(_._1).zip(running).toSeq
     import s.implicits._
     val offDf = offs.toDF("bucket", "boff")
-    val chunks = local.join(broadcast(offDf), "bucket")
+    local.join(broadcast(offDf), "bucket")
       .withColumn("gstart", col("boff") + col("lend") - col("ntok"))
       .withColumn("first_seq", expr(s"gstart div $PackSeqLen"))
       .withColumn("last_seq", expr(s"(gstart + ntok - 1) div $PackSeqLen"))
@@ -381,8 +375,6 @@ object ExtendedAnalytics {
           .cast("int").as("tok_from"),
         least(col("ntok"), (col("seq_id") + 1) * lit(PackSeqLen) - col("gstart"))
           .cast("int").as("tok_to"))
-    // terminal sort = parity contract only (corpus-sized chunk map)
-    if (ordered) chunks.orderBy("doc_id", "seq_id") else chunks
   }
 
   def packSequencesOracleSql: String =

@@ -46,11 +46,8 @@ object TextAnalysis {
     * reproducible under any partitioning, no RNG. Map-only plan: the
     * gate rides the scan; the only exchange is the parity sort.
     */
-  def qualitySample(s: SparkSession, dir: String, ordered: Boolean = true): DataFrame = {
-    val out = qualitySampleColumns(Tables.documentsSpread(s, dir))
-    // terminal sort = parity contract only (corpus-sized sample)
-    if (ordered) out.orderBy("doc_id") else out
-  }
+  def qualitySample(s: SparkSession, dir: String): DataFrame =
+    qualitySampleColumns(Tables.documentsSpread(s, dir)).orderBy("doc_id")
 
   /** Frame-level form of the quality-sample gate (stateless map —
     * applies unchanged to a streaming source, like gopherColumns).
@@ -129,8 +126,8 @@ object TextAnalysis {
     * and packing adds its bucket-cumsum exchange + bounded offset
     * broadcast (ExtendedAnalytics.packOn).
     */
-  def corpusPipeline(s: SparkSession, dir: String, ordered: Boolean = true): DataFrame =
-    ExtendedAnalytics.packOn(s, survivorCounts(s, dir), ordered)
+  def corpusPipeline(s: SparkSession, dir: String): DataFrame =
+    ExtendedAnalytics.packOn(s, survivorCounts(s, dir)).orderBy("doc_id", "seq_id")
 
   /** Gated + deduped survivor token counts, persisted: packOn executes
     * its input twice (totals pass + chunk-map pass), and the gates +
@@ -444,17 +441,8 @@ object TextAnalysis {
     * array (higher-order `aggregate`/`filter`, all codegen) — map-only,
     * rides a single scan, embarrassingly parallel at 100 TB.
     */
-  /** `ordered=true` (the default) appends the deterministic terminal
-    * sort the oracle-parity harness hashes against. It is the
-    * VERIFICATION contract, not a plan requirement — at production
-    * scale pass `ordered=false`: a corpus-sized gate output has no
-    * business paying a global range-exchange + sort for row order no
-    * downstream consumer needs (see README "Determinism vs scale").
-    */
-  def gopherFilter(s: SparkSession, dir: String, ordered: Boolean = true): DataFrame = {
-    val out = gopherColumns(Tables.documentsSpread(s, dir))
-    if (ordered) out.orderBy("doc_id") else out
-  }
+  def gopherFilter(s: SparkSession, dir: String): DataFrame =
+    gopherColumns(Tables.documentsSpread(s, dir)).orderBy("doc_id")
 
   /** The gate over any (doc_id, text) frame — map-only column
     * arithmetic, so it applies unchanged to a STREAMING documents
@@ -536,10 +524,7 @@ object TextAnalysis {
     * per-doc quadratic work; at 100 TB the shuffle carries one row per
     * distinct (doc, gram), already combiner-reduced.
     */
-  /** `ordered` as in [[gopherFilter]]: the terminal sort is the oracle
-    * contract; corpus-scale callers take the unsorted frame.
-    */
-  def repetition(s: SparkSession, dir: String, ordered: Boolean = true): DataFrame = {
+  def repetition(s: SparkSession, dir: String): DataFrame = {
     def gramStructs(nGram: Int) =
       transform(sequence(lit(1), size(col("ts")) - (nGram - 1)),
         i => struct(lit(nGram).as("n"),
@@ -552,7 +537,7 @@ object TextAnalysis {
       .select(col("doc_id"), col("g.n").as("n"), col("g.gram").as("gram"))
     val counted = grams.groupBy("doc_id", "n", "gram")
       .agg(count(lit(1)).as("cnt"))
-    val out = counted.groupBy("doc_id")
+    counted.groupBy("doc_id")
       .agg(
         sum(when(col("n") === 2, col("cnt"))).as("n2"),
         max(when(col("n") === 2, col("cnt"))).as("_m2"),
@@ -561,7 +546,7 @@ object TextAnalysis {
       .select(col("doc_id"), col("n2"),
         r4(col("_m2").cast("double") / col("n2")).as("top2_frac"),
         r4(lit(1.0) - col("_d5").cast("double") / col("_t5")).as("dup5_frac"))
-    if (ordered) out.orderBy("doc_id") else out
+      .orderBy("doc_id")
   }
 
   /** DuckDB oracle for [[repetition]] — same gram derivation (DuckDB
@@ -617,14 +602,13 @@ object TextAnalysis {
     * (codegen'd one-pass byte fold), the window explode and per-window
     * fold are pure array ops on that hash array — map-only, no shuffle,
     * no re-tokenization per chunk; output is ~n/stride rows per doc.
-    * The terminal sort is the oracle contract (see [[gopherFilter]]).
     */
-  def chunkDocs(s: SparkSession, dir: String, ordered: Boolean = true): DataFrame = {
+  def chunkDocs(s: SparkSession, dir: String): DataFrame = {
     val th = Tables.documentsSpread(s, dir)
       .select(col("doc_id"), tokenHashes(col("text")).as("th"))
       .withColumn("ntok", size(col("th")))
       .filter(col("ntok") > 0)
-    val out = th
+    th
       .select(col("doc_id"), col("th"), col("ntok"),
         posexplode(sequence(lit(0), col("ntok") - 1, lit(ChunkStride)))
           .as(Seq("chunk_idx", "start")))
@@ -635,7 +619,7 @@ object TextAnalysis {
         least(col("start") + ChunkLen, col("ntok")).cast("int").as("tok_to"),
         aggregate(slice(col("th"), col("start") + 1, lit(ChunkLen)), lit(0L),
           (a, h) => (a * lit(131L) + h) % lit(HashP)).as("chunk_hash"))
-    if (ordered) out.orderBy("doc_id", "chunk_idx") else out
+      .orderBy("doc_id", "chunk_idx")
   }
 
   /** DuckDB oracle for [[chunkDocs]] — same start series, inclusive
@@ -799,7 +783,7 @@ object TextAnalysis {
     * The flag compares the ROUNDED entropy against the threshold, so
     * both engines decide on the same grid value.
     */
-  def charEntropy(s: SparkSession, dir: String, ordered: Boolean = true): DataFrame = {
+  def charEntropy(s: SparkSession, dir: String): DataFrame = {
     val cc = Tables.documentsSpread(s, dir)
       .filter(length(col("text")) > 0)
       .select(col("doc_id"), explode(split(col("text"), "")).as("c"))
@@ -812,7 +796,7 @@ object TextAnalysis {
       .agg(sum((-(p * log(p))).cast("decimal(38,18)")).as("hx"))
       .select(col("doc_id"),
         (floor(col("hx").cast("double") * 1e4 + lit(0.5)) / 1e4).as("entropy"))
-    val out = Tables.documentsSpread(s, dir).select(col("doc_id"))
+    Tables.documentsSpread(s, dir).select(col("doc_id"))
       .join(nn.join(ent, "doc_id"), Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_chars"), lit(0L)).as("n_chars"),
@@ -820,7 +804,7 @@ object TextAnalysis {
         coalesce(col("entropy"), lit(0.0)).as("entropy"),
         when(coalesce(col("entropy"), lit(0.0)) < lit(EntropyLowNats), 1).otherwise(0)
           .as("low_entropy"))
-    if (ordered) out.orderBy("doc_id") else out
+      .orderBy("doc_id")
   }
 
   def charEntropyOracleSql: String =
@@ -874,9 +858,9 @@ object TextAnalysis {
     * ROUNDED density against the threshold so both engines decide on
     * the same grid value.
     */
-  def blocklistFilter(s: SparkSession, dir: String, ordered: Boolean = true): DataFrame = {
+  def blocklistFilter(s: SparkSession, dir: String): DataFrame = {
     val terms = lit(BlocklistTerms.toArray)
-    val out = Tables.documentsSpread(s, dir)
+    Tables.documentsSpread(s, dir)
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .select(col("doc_id"),
         size(col("toks")).cast("long").as("n_tokens"),
@@ -888,7 +872,7 @@ object TextAnalysis {
           * 1e4 + lit(0.5)) / 1e4)
       .withColumn("blocked",
         when(col("hit_rate") >= lit(BlocklistMaxRate), 1).otherwise(0))
-    if (ordered) out.orderBy("doc_id") else out
+      .orderBy("doc_id")
   }
 
   def blocklistFilterOracleSql: String = {

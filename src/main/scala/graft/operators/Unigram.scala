@@ -152,7 +152,7 @@ object Unigram {
   /** Per-document encode stats under the unigram model: word count,
     * Viterbi piece count, fertility (pieces per word, 4-dp grid).
     */
-  def unigramEncode(s: SparkSession, dir: String, ordered: Boolean = true): DataFrame = {
+  def unigramEncode(s: SparkSession, dir: String): DataFrame = {
     val (_, seg) = model(s, dir)
     val perWord = seg.select(col("w"),
       when(size(col("pieces")) > 0, size(col("pieces")).cast("long"))
@@ -163,7 +163,7 @@ object Unigram {
       .join(broadcast(perWord), "w")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_words"), sum("np").as("n_pieces"))
-    val out = Tables.documentsSpread(s, dir).select(col("doc_id"))
+    Tables.documentsSpread(s, dir).select(col("doc_id"))
       .join(dw, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_words"), lit(0L)).as("n_words"),
@@ -171,7 +171,7 @@ object Unigram {
       .withColumn("fertility",
         floor(col("n_pieces").cast("double") / greatest(col("n_words"), lit(1L))
           * 1e4 + lit(0.5)) / 1e4)
-    if (ordered) out.orderBy("doc_id") else out
+      .orderBy("doc_id")
   }
 
   /** Viterbi piece counts over the corpus — the EM E-step statistic

@@ -3,16 +3,15 @@ package graft.plans
 import org.apache.spark.sql.{DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Sort}
 
-/** The catalog-wide `ordered = false` escape hatch.
+/** The one sort-free path for a catalog operator.
   *
   * Every catalog query ends with a deterministic presentation ORDER BY
   * so the oracle can hash it cell-for-cell — but for a corpus-sized
   * result that final sort is a global range exchange a consumer
   * usually does not need (the next stage is a partitioned write, a
   * join, or an aggregation, none of which care about row order).
-  * Several operators grew hand-written `ordered = false` parameters;
-  * this utility is the uniform path for the REST of the catalog: strip
-  * the outermost global Sort from the analyzed plan, leaving the
+  * Operators take no flag to skip it; a caller composing one strips
+  * the outermost global Sort from the analyzed plan here, leaving the
   * result SET identical (a presentation sort only permutes rows).
   *
   * Only the presentation sort is touched: the walk descends through

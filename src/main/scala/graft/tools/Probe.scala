@@ -5,15 +5,20 @@ package graft.tools
   * printing wall / executor-cpu / gc / jobs per run — the Bench measurement
   * loop without the full catalog, for A/B isolation of one entry.
   *
-  * Usage: Probe <sfDir> <reps> <name> [<name> ...]
+  * Usage: Probe <sfDir> <reps> <name> [<name> ...]; the name `all`
+  * stands for every catalog entry.
   */
 object Probe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val reps = args(1).toInt
-    val names = args.drop(2).toSeq
+    val names = args.drop(2).toSeq.flatMap { n =>
+      if (n == "all") graft.SparkEntry.catalog.map(_.key) else Seq(n)
+    }
     val catalog = graft.SparkEntry.queries
     val shared = graft.Bench.SharedBuilds.map(b => b.key -> b.build).toMap
+    val codegenDir = sys.env.get("PROBE_CODEGEN")
+    val explainDir = sys.env.get("PROBE_EXPLAIN")
     // a typo'd name fails the run before the session starts, not
     // partway through it
     val unknown = names.filterNot(n => catalog.contains(n) || shared.contains(n))
@@ -21,11 +26,18 @@ object Probe {
       System.err.println(s"[probe] unknown names: ${unknown.mkString(", ")}")
       sys.exit(1)
     }
+    // the dump modes plan catalog entries; a shared build has no plan
+    val builds = names.filter(shared.contains)
+    if ((codegenDir.nonEmpty || explainDir.nonEmpty) && builds.nonEmpty) {
+      System.err.println(
+        s"[probe] PROBE_EXPLAIN/PROBE_CODEGEN take catalog entries only: ${builds.mkString(", ")}")
+      sys.exit(1)
+    }
     val spark = graft.Session(graft.Session.Cpus)
     val meter = new graft.Meter(spark.sparkContext)
     // PROBE_CODEGEN=<dir>: dump each query's whole-stage generated
     // code to <dir>/<name>.codegen.txt instead of timing it.
-    sys.env.get("PROBE_CODEGEN").foreach { outDir =>
+    codegenDir.foreach { outDir =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
       names.foreach { name =>
         val df = catalog(name)(spark, dir)
@@ -40,7 +52,7 @@ object Probe {
     }
     // PROBE_EXPLAIN=<dir>: write each query's formatted plan to
     // <dir>/<name>.txt instead of timing it.
-    sys.env.get("PROBE_EXPLAIN").foreach { outDir =>
+    explainDir.foreach { outDir =>
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
       names.foreach { name =>
         val df = catalog(name)(spark, dir)

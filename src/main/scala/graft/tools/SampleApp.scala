@@ -3,6 +3,7 @@ package graft.tools
 import graft.Tables
 import graft.multimodal.Multimodal
 import graft.operators.TaskAnalytics
+import graft.plans.Unordered
 import graft.sources.Export
 import graft.streaming.EventStreams
 
@@ -120,9 +121,9 @@ object SampleApp {
 
     // round-5 surface: report-document assembly, paged-API ingest (DSv2)
     // learned data-selection: classifier gate + importance resampling
-    val nbKept = graft.operators.Classifier.nbScore(spark, sf, ordered = false)
+    val nbKept = Unordered.form(graft.operators.Classifier.nbScore(spark, sf))
       .filter(org.apache.spark.sql.functions.col("pred_cur") === 1).count()
-    val dsirKept = graft.operators.Classifier.dsirSelect(spark, sf, ordered = false).count()
+    val dsirKept = Unordered.form(graft.operators.Classifier.dsirSelect(spark, sf)).count()
     println(s"[sample] nb-gate kept=$nbKept dsir-resample kept=$dsirKept")
     graft.plans.Memo.release(spark, sf)
     println(s"[sample] report lines=${graft.operators.ReportDoc.reportDoc(spark, sf).count()}")

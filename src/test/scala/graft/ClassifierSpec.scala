@@ -262,7 +262,7 @@ class ClassifierSpec extends AnyFunSuite {
     assert(got === expect, "cascade output == gate ∘ score")
     // plan shape: the quality filter sits below the token explode, so
     // the model join's probe stream is already pruned
-    val plan = Classifier.filterCascade(spark, dir, ordered = false)
+    val plan = graft.plans.Unordered.form(Classifier.filterCascade(spark, dir))
       .queryExecution.optimizedPlan.toString
     val genIdx = plan.indexOf("Generate explode")
     val filtIdx = plan.indexOf("Filter", genIdx)
@@ -273,7 +273,7 @@ class ClassifierSpec extends AnyFunSuite {
 
   test("dsir scoring joins a broadcast-bounded feature table") {
     val (dir, _) = fixture
-    val plan = Classifier.dsirWeights(spark, dir, ordered = false)
+    val plan = graft.plans.Unordered.form(Classifier.dsirWeights(spark, dir))
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"),
       s"feature table should broadcast (bounded by DsirBuckets):\n$plan")

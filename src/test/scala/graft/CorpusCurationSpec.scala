@@ -451,7 +451,7 @@ class CorpusCurationSpec extends AnyFunSuite {
     // unordered form adds no KEYED exchange (map-only gate riding the
     // scan; the shipped single-row-group corpus triggers the r16
     // round-robin narrow-layout spread, which is not a key shuffle)
-    val p = CorpusCuration.termSearch(spark, SparkTestSession.Sf, ordered = false)
+    val p = graft.plans.Unordered.form(CorpusCuration.termSearch(spark, SparkTestSession.Sf))
       .queryExecution.executedPlan.toString
     assert(!p.contains("Exchange hashpartitioning") &&
       !p.contains("Exchange rangepartitioning"),

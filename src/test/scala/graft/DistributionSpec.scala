@@ -273,7 +273,7 @@ class DistributionSpec extends AnyFunSuite {
     assert(sep.getDouble(2) === 1.0, s"separable vocab ranks perfectly: $sep")
 
     // corpus: recompute the binned statistic locally from the score frame
-    val hold = operators.Classifier.nbScore(spark, sf, ordered = false)
+    val hold = graft.plans.Unordered.form(operators.Classifier.nbScore(spark, sf))
       .filter(col("fold") === "holdout").select("is_cur", "nb_score").collect()
       .map(r => (r.getInt(0) == 1, r.getDouble(1)))
     val (lo, hi) = (hold.map(_._2).min, hold.map(_._2).max)

@@ -457,6 +457,38 @@ class SkewRecallSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(Memo.heldNames(spark, dirB).isEmpty)
   }
 
+  test("Memo.shared under two concurrent misses holds and persists one frame") {
+    import graft.plans.Memo
+    import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val dir = "memo-spec-race"
+    val builds = new java.util.concurrent.atomic.AtomicInteger
+    // both misses are inside build before either registers
+    val bothBuilding = new CountDownLatch(2)
+    def race() = Memo.shared(spark, dir, "race") {
+      builds.incrementAndGet()
+      bothBuilding.countDown()
+      assert(bothBuilding.await(60, TimeUnit.SECONDS), "the second miss never reached build")
+      spark.range(40).toDF("id").select(col("id") * 5 as "memo_race")
+    }
+    val pool = Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    try {
+      val Seq(a, b) = Seq.fill(2)(Future(race())).map(Await.result(_, 120.seconds))
+      assert(builds.get === 2, "both threads must have missed")
+      assert(a eq b, "both misses must return the one registered frame")
+      assert(Memo.heldNames(spark, dir) === Seq("race"))
+      assert(a.count() === 40L)
+      val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(added.size === 1, s"one persisted RDD, not $added")
+    } finally {
+      pool.shutdown()
+      Memo.release(spark, dir)
+    }
+  }
+
   test("Lloyd training sample is deterministic, bounded, and identity below the cap") {
     import spark.implicits._
     // below the cap: the sample IS the input (shipped-SF recall untouched)
@@ -1691,37 +1723,37 @@ class UnorderedFormSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   test("gopher filter exposes a sort-free corpus-scale form") {
     check(operators.TextAnalysis.gopherFilter(spark, sf),
-      operators.TextAnalysis.gopherFilter(spark, sf, ordered = false))
+      graft.plans.Unordered.form(operators.TextAnalysis.gopherFilter(spark, sf)))
   }
 
   test("repetition exposes a sort-free corpus-scale form") {
     check(operators.TextAnalysis.repetition(spark, sf),
-      operators.TextAnalysis.repetition(spark, sf, ordered = false))
+      graft.plans.Unordered.form(operators.TextAnalysis.repetition(spark, sf)))
   }
 
   test("span dedup exposes a sort-free corpus-scale form") {
     check(operators.Dedup.spanDedup(spark, sf),
-      operators.Dedup.spanDedup(spark, sf, ordered = false))
+      graft.plans.Unordered.form(operators.Dedup.spanDedup(spark, sf)))
   }
 
   test("sequence packing exposes a sort-free corpus-scale form") {
     check(operators.ExtendedAnalytics.packSequences(spark, sf),
-      operators.ExtendedAnalytics.packSequences(spark, sf, ordered = false))
+      graft.plans.Unordered.form(operators.ExtendedAnalytics.packSequences(spark, sf)))
   }
 
   test("quality sampling exposes a sort-free corpus-scale form") {
     check(operators.TextAnalysis.qualitySample(spark, sf),
-      operators.TextAnalysis.qualitySample(spark, sf, ordered = false))
+      graft.plans.Unordered.form(operators.TextAnalysis.qualitySample(spark, sf)))
   }
 
   test("bpe encode exposes a sort-free corpus-scale form") {
     check(operators.Bpe.bpeEncode(spark, sf),
-      operators.Bpe.bpeEncode(spark, sf, ordered = false))
+      graft.plans.Unordered.form(operators.Bpe.bpeEncode(spark, sf)))
   }
 
   test("corpus pipeline exposes a sort-free corpus-scale form") {
     check(operators.TextAnalysis.corpusPipeline(spark, sf),
-      operators.TextAnalysis.corpusPipeline(spark, sf, ordered = false))
+      graft.plans.Unordered.form(operators.TextAnalysis.corpusPipeline(spark, sf)))
   }
 
   /** Every query whose output grows linearly with the corpus (measured
@@ -1773,12 +1805,22 @@ class UnorderedFormSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(un.collect().toSeq === ordered.collect().toSeq)
   }
 
+  /** The entries whose operators end in their presentation sort and
+    * reach the sort-free form only through `Unordered.form`.
+    */
+  val SortFreeOperatorQueries: Seq[String] = Seq(
+    "q_quality_sample", "q_corpus_pipeline", "q_gopher_filter", "q_repetition",
+    "q_chunk_docs", "q_char_entropy", "q_blocklist_filter", "q_token_budget",
+    "q_ppl_buckets", "q_term_search", "q_novelty", "q_epoch_shuffle",
+    "q_nb_train", "q_nb_score", "q_filter_cascade", "q_dsir_weights",
+    "q_dsir_select", "q_dedup_span", "q_span_scrub", "q_data_split",
+    "q_pack_sequences", "q_bpe_encode", "q_unigram_encode")
+
   test("unordered forms return the identical result set (spot check)") {
-    for (q <- Seq("q_sessionize", "q_report_goals", "q_epoch_shuffle")) {
-      val a = SparkEntry.queries(q)(spark, sf).collect().map(_.toString).sorted
-      val b = SparkEntry.unordered(q)(spark, sf).collect().map(_.toString).sorted
-      assert(a.toSeq === b.toSeq, s"$q: unordered form changed the result set")
-    }
+    for (q <- Seq("q_sessionize", "q_report_goals") ++ SortFreeOperatorQueries)
+      withClue(s"$q: ") {
+        check(SparkEntry.queries(q)(spark, sf), SparkEntry.unordered(q)(spark, sf))
+      }
   }
 }
 
@@ -2073,7 +2115,7 @@ class PackSpec extends org.scalatest.funsuite.AnyFunSuite {
     val survivors = operators.TextAnalysis.cleanPipeline(spark, sf)
       .select(col("doc_id"),
         size(graft.functions.TextFunctions.tokens(col("scrubbed"))).cast("long").as("ntok"))
-    val twoStep = operators.ExtendedAnalytics.packOnForTest(spark, survivors)
+    val twoStep = operators.ExtendedAnalytics.packOn(spark, survivors)
       .collect().map(_.toString).sorted
     assert(composed.nonEmpty)
     assert(composed === twoStep, "composition diverged from two-step run")
@@ -2263,7 +2305,7 @@ class ChunkCoocSpec extends org.scalatest.funsuite.AnyFunSuite {
   }
 
   test("chunking is map-only: the unordered form plans zero exchanges") {
-    val p = operators.TextAnalysis.chunkDocs(spark, sf, ordered = false)
+    val p = graft.plans.Unordered.form(operators.TextAnalysis.chunkDocs(spark, sf))
       .queryExecution.executedPlan.toString
     // the shipped single-row-group corpus triggers the conditional
     // narrow-layout spread (round-robin, r16); map-only = no KEYED
@@ -2523,7 +2565,7 @@ class DataSplitSpec extends org.scalatest.funsuite.AnyFunSuite {
         else if (b < operators.ExtendedAnalytics.SplitValPermille) "val" else "test"
       assert(sp === want)
     }
-    val p = operators.ExtendedAnalytics.dataSplit(spark, sf, ordered = false)
+    val p = graft.plans.Unordered.form(operators.ExtendedAnalytics.dataSplit(spark, sf))
       .queryExecution.executedPlan.toString
     // narrow-layout spread (round-robin) is the only tolerated exchange
     // on the shipped single-row-group corpus (r16)

@@ -5,6 +5,8 @@ Prints what each CHANGES.md entry reports about size:
   - lines under src/main/scala, in total and per package directory;
   - `private[graft] var` / `@volatile` lines (mutable globals);
   - `sys.props` / `sys.env` reads;
+  - Boolean parameters with a default (`: Boolean = true|false`), the
+    count of independently settable on/off options;
   - distinct `spark.graft.*` configuration keys;
   - with --files N, the N largest files under src/main/scala.
 
@@ -21,6 +23,7 @@ import sys
 
 MUTABLE = re.compile(r"private\[graft\] var|@volatile")
 SYS_READ = re.compile(r"\bsys\.(props|env)\b")
+BOOL_DEFAULT = re.compile(r":\s*Boolean\s*=\s*(?:true|false)\b")
 CONF_KEY = re.compile(r"spark\.graft\.[A-Za-z0-9_.]*[A-Za-z0-9_]")
 
 
@@ -28,7 +31,7 @@ def measure(root):
     src = os.path.join(root, "src", "main", "scala")
     if not os.path.isdir(src):
         sys.exit(f"size.py: no src/main/scala under {root}")
-    packages, files_, mutable, sys_reads, keys = {}, {}, 0, 0, set()
+    packages, files_, mutable, sys_reads, bool_defaults, keys = {}, {}, 0, 0, 0, set()
     for d, _, files in os.walk(src):
         for f in files:
             if not f.endswith(".scala"):
@@ -41,6 +44,7 @@ def measure(root):
             for line in text.splitlines():
                 mutable += bool(MUTABLE.search(line))
                 sys_reads += len(SYS_READ.findall(line))
+                bool_defaults += len(BOOL_DEFAULT.findall(line))
             keys.update(CONF_KEY.findall(text))
     return {
         "lines": sum(packages.values()),
@@ -48,6 +52,7 @@ def measure(root):
         "files": files_,
         "mutable": mutable,
         "sys_reads": sys_reads,
+        "bool_defaults": bool_defaults,
         "keys": keys,
     }
 
@@ -81,6 +86,8 @@ def main():
             row("  " + f, cur["files"][f], base and base["files"].get(f, 0))
     row("private[graft] var / @volatile lines", cur["mutable"], base and base["mutable"])
     row("sys.props / sys.env reads", cur["sys_reads"], base and base["sys_reads"])
+    row("Boolean parameters with a default", cur["bool_defaults"],
+        base and base["bool_defaults"])
     row("spark.graft.* keys", len(cur["keys"]), base and len(base["keys"]))
     for k in sorted(cur["keys"] - (base["keys"] if base else set())):
         print(f"  + {k}")
